@@ -40,8 +40,11 @@ def canonicalize(text: str) -> tuple[str, bool]:
     text = unicodedata.normalize("NFC", text)
     text = text.replace("\r\n", "\n").replace("\r", "\n")
     text = text.replace("\t", " ")
-    text = _RE_SPACES.sub(" ", text)
-    text = _RE_TRAIL.sub("\n", text)
+    # cheap-first: each pattern needs its two-char seed to match at all
+    if "  " in text:
+        text = _RE_SPACES.sub(" ", text)
+    if " \n" in text:
+        text = _RE_TRAIL.sub("\n", text)
     return text, truncated
 
 

@@ -12,12 +12,25 @@ Stage order (mirrors the reference lifecycle, SURVEY.md §3.1):
   (G7-G10) -> whole-turn fallback (G14) -> Otsu scoring (G15/G19) ->
   label/rescue/gate (G20-G22) -> pad (G13) -> merge (G12) ->
   ordered emit (G23-G25); per-turn failure isolation (G26).
+
+`extract_frame` / `extract_results` run the batched twin of that
+pipeline (`_extract_batch_results`), result-identical to `extract_turn`
+per row.  Its stage A canonicalizes and segments each turn, then computes
+the block features of runs of whole turns (at most _CHUNK_CHARS
+characters) from per-character class arrays and prefix sums over their
+joined text.  A turn goes back to the per-block `_block_features` when a
+block slice would cut a tag or an anchor, or when it is longer than that
+bound.  Stage B runs the numeric stages once over the flat block arrays
+of the batch; stage C pads, merges and emits per turn.
+`extract_turn` itself stays scalar: the serving path calls it, and it is
+the differential oracle for the batched path.
 """
 
 from __future__ import annotations
 
 import re
 import warnings
+from itertools import chain
 from typing import Any
 
 import numpy as np
@@ -44,8 +57,6 @@ from ocr_spark.extract.threshold import (
 # Per-process compiled state (G27: the model-singleton pattern,
 # predict.py:7,16-29 — read-only, loaded once per executor worker).
 _RE_ANCHOR = re.compile(r"<a\b[^>]*>(.*?)</a>", re.IGNORECASE | re.DOTALL)
-_RE_NONSPACE = re.compile(r"\S")
-_RE_ALNUM = re.compile(r"[0-9A-Za-z]")
 # Run-collapsed complements for COUNTING: len(x) after removing \s runs ==
 # number of \S chars (exact complement, same regex unicode semantics), one
 # sub call instead of a findall materializing a list of 1-char matches.
@@ -89,6 +100,7 @@ def _count_nonspace(s: str) -> int:
 def _count_alnum(s: str) -> int:
     return len(_RE_NON_ALNUM_RUNS.sub("", s))
 
+
 # Output schema shared by oracle, batch job, and streaming sink.
 OUTPUT_SCHEMA_DDL = (
     "conv_id string, turn_idx int, extracted_text string, "
@@ -102,7 +114,8 @@ STATUS_ERROR = "error"
 
 
 def _block_features(canon: str, blocks: list[Block]) -> dict[str, np.ndarray]:
-    """Vectorized-across-blocks feature extraction (G18).
+    """Per-block feature extraction (G18), on each block's own slice.
+    The definition the batched `_batched_block_features` must equal.
 
     density      = alnum chars / raw block length (the 'ink' fraction)
     link_density = anchor inner-text chars / visible non-space chars (G9)
@@ -137,6 +150,179 @@ def _block_features(canon: str, blocks: list[Block]) -> dict[str, np.ndarray]:
         "vis_chars": vis_chars,
         "pos_frac": pos_frac,
     }
+
+
+# Batched stage A works on runs of whole turns of at most this many
+# characters; its per-run arrays take a few bytes per character.  A turn
+# longer than this takes the per-block path on its own.
+_CHUNK_CHARS = 1 << 18
+
+# Character classes by code point.  str.isspace() is the predicate behind
+# both `\s` in a str pattern and str.split(); it is false above U+3000, so
+# higher code points are clipped onto the (false) U+3001 entry.
+_CLASS_TOP = 0x3001
+_WS_TABLE = np.fromiter(
+    map(str.isspace, map(chr, range(_CLASS_TOP + 1))), bool, _CLASS_TOP + 1
+)
+_ALNUM_TABLE = np.zeros(_CLASS_TOP + 1, dtype=bool)
+_ALNUM_TABLE[48:58] = _ALNUM_TABLE[65:91] = _ALNUM_TABLE[97:123] = True  # 0-9A-Za-z
+
+
+def _char_classes(cp: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(whitespace, ASCII alnum) masks of an array of code points."""
+    if cp.dtype != np.uint8:
+        cp = np.minimum(cp, _CLASS_TOP)
+    return _WS_TABLE[cp], _ALNUM_TABLE[cp]
+
+
+def _prefix(mask: np.ndarray) -> np.ndarray:
+    """out[i] = mask[:i].sum(), for i in 0..len(mask)."""
+    out = np.zeros(len(mask) + 1, dtype=np.int32)
+    np.cumsum(mask, dtype=np.int32, out=out[1:])
+    return out
+
+
+def _tag_mask(cp: np.ndarray, bounds: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Where `strip_tags` would remove characters, run on each turn of the
+    joined text (turn t is cp[bounds[t]:bounds[t+1]]).
+
+    Returns (tag, cut): tag[i] is True inside a match; cut[i] (i up to
+    len(cp)) is True when a match starts before i and ends at or after i,
+    so a slice starting or ending at i would cut that match.  A match is
+    a '<' up to the next '>' of its turn; the '<'s before one '>' form a
+    single match, which opens at the first of them.
+    """
+    n = len(cp)
+    lt = np.flatnonzero(cp == 60)
+    if not len(lt):
+        return np.zeros(n, dtype=bool), np.zeros(n + 1, dtype=bool)
+    gt = np.flatnonzero(cp == 62)
+    k = np.searchsorted(gt, lt)
+    close = np.append(gt, n)[k]
+    valid = close < bounds[np.searchsorted(bounds, lt, side="right")]
+    opens = valid.copy()
+    opens[1:] &= ~(valid[:-1] & (k[1:] == k[:-1]))
+    lo, hi = lt[opens], close[opens]
+    edge = np.zeros(n + 1, dtype=np.int8)
+    edge[lo] = 1
+    edge[hi + 1] -= 1
+    tag = np.cumsum(edge[:n], dtype=np.int8).view(bool)
+    cut = np.append(tag, False)
+    cut[lo] = False
+    return tag, cut
+
+
+def _batched_block_features(
+    canons: list[str], blocks_l: list[list[Block]]
+) -> tuple[dict[str, np.ndarray], np.ndarray]:
+    """`_block_features` of several turns from one pass over their joined
+    text.  Returns the features of all blocks, concatenated in turn order,
+    and the mask of turns that were routed to the per-block path.
+
+    The per-character classes (whitespace, ASCII alnum, inside a tag) come
+    from lookup tables and the '<'/'>' positions; int32 prefix sums over
+    them give each block's visible non-space chars, alnum chars and words
+    (whitespace -> non-whitespace edges of the visible stream) as
+    differences of two sums.  Anchors are found once per turn that
+    contains '<a' or '<A' and assigned to blocks by their start offset.
+
+    `_block_features` strips tags and finds anchors within each block's
+    slice (and strips tags within each anchor's inner text), so those
+    agree with the whole-turn ones unless a slice cuts a match.  A turn
+    takes the per-block path when a tag crosses one of its block edges,
+    an anchor overlaps a block edge, or a tag crosses an anchor's inner
+    edge.
+    """
+    n_turns = len(canons)
+    text = "".join(canons)
+    if text.isascii():
+        cp = np.frombuffer(text.encode("ascii"), dtype=np.uint8)
+    else:
+        # surrogatepass: a lone surrogate (possible in a pandas input) is
+        # one code point like any other
+        cp = np.frombuffer(text.encode("utf-32-le", "surrogatepass"), np.uint32)
+    lens = np.fromiter(map(len, canons), np.int64, n_turns)
+    bounds = np.zeros(n_turns + 1, dtype=np.int64)
+    np.cumsum(lens, out=bounds[1:])
+    counts = np.fromiter(map(len, blocks_l), np.int64, n_turns)
+    nb = int(counts.sum())
+    flat = np.fromiter(
+        chain.from_iterable(chain.from_iterable(blocks_l)), np.int64, 4 * nb
+    ).reshape(nb, 4)
+    turn_of = np.repeat(np.arange(n_turns), counts)
+    bs = flat[:, 0] + bounds[turn_of]
+    be = flat[:, 1] + bounds[turn_of]
+
+    ws, alnum = _char_classes(cp)
+    tag, cut = _tag_mask(cp, bounds)
+    vis = ~tag
+    c_vis = _prefix(vis)
+    c_nw = _prefix(vis & ~ws)
+    c_al = _prefix(vis & alnum)
+    # words: the visible stream with tags squeezed out, where a word
+    # starts at every non-space char after a space (or at the stream head)
+    ws_v = ws[vis]
+    word = ~ws_v
+    word[1:] &= ws_v[:-1]
+    mid_word = np.append(~ws_v & ~word, False)  # non-space after non-space
+    c_word = _prefix(word)
+
+    routed = np.zeros(n_turns, dtype=bool)
+    routed[turn_of[cut[bs] | cut[be]]] = True
+
+    link = np.zeros(nb, dtype=np.int64)
+    found = []
+    for t, c in enumerate(canons):
+        if "<a" in c or "<A" in c:
+            o = int(bounds[t])
+            for m in _RE_ANCHOR.finditer(c):
+                found += (o + m.start(), o + m.end(), o + m.start(1), o + m.end(1))
+    if found and nb:
+        a_lo, a_hi, i_lo, i_hi = np.array(found, dtype=np.int64).reshape(-1, 4).T
+        k = np.searchsorted(bs, a_lo, side="right") - 1
+        kc = np.maximum(k, 0)
+        inside = (k >= 0) & (a_hi <= be[kc])
+        nxt = np.minimum(k + 1, nb - 1)
+        crossing = ~inside & (
+            ((k >= 0) & (be[kc] > a_lo)) | ((k + 1 < nb) & (bs[nxt] < a_hi))
+        )
+        crossing |= cut[i_lo] | cut[i_hi]
+        routed[np.searchsorted(bounds, a_lo[crossing], side="right") - 1] = True
+        link = np.bincount(
+            kc[inside], weights=(c_nw[i_hi] - c_nw[i_lo])[inside], minlength=nb
+        ).astype(np.int64)
+
+    nvis = (c_nw[be] - c_nw[bs]).astype(np.int64)
+    v_lo, v_hi = c_vis[bs], c_vis[be]
+    # a block's first visible char starts a word whatever precedes it
+    words = c_word[v_hi] - c_word[v_lo] + (mid_word[v_lo] & (v_hi > v_lo))
+    feats = {
+        "density": (c_al[be] - c_al[bs]) / np.maximum(be - bs, 1),
+        "link_density": link / np.maximum(nvis, 1),
+        "words": words.astype(np.int64),
+        "vis_chars": nvis,
+        "pos_frac": flat[:, 0] / np.maximum(lens, 1)[turn_of],
+    }
+    first = np.zeros(n_turns + 1, dtype=np.int64)
+    np.cumsum(counts, out=first[1:])
+    for t in np.flatnonzero(routed):
+        exact = _block_features(canons[t], blocks_l[t])
+        for name, col in feats.items():
+            col[first[t] : first[t + 1]] = exact[name]
+    return feats, routed
+
+
+def _chunks(sizes: list[int]):
+    """(lo, hi) runs of consecutive turns of at most _CHUNK_CHARS chars in
+    total; a longer turn is a run of its own."""
+    lo, total = 0, 0
+    for hi, size in enumerate(sizes):
+        if hi > lo and total + size > _CHUNK_CHARS:
+            yield lo, hi
+            lo, total = hi, 0
+        total += size
+    if lo < len(sizes):
+        yield lo, len(sizes)
 
 
 def extract_turn(text: Any) -> dict[str, Any]:
@@ -237,13 +423,19 @@ def _envelope(
 
 
 def _extract_batch_results(texts: list) -> list[dict[str, Any]]:
-    """Cross-turn batched pipeline: per-turn regex stages stay rowwise,
-    the numeric stages (quantize, adaptive threshold, Otsu, scoring,
-    gating) run ONCE over the flat block arrays of the whole batch.
-    Result-identical to [extract_turn(t) for t in texts] — guaranteed by
-    shared elementwise ops + batch twins proven bit-identical to the
-    scalar path (tests/test_batch_parity.py); each row's result depends
-    only on its own blocks (row-purity: no batch-size effects).
+    """Cross-turn batched pipeline.  Result-identical to
+    [extract_turn(t) for t in texts] (tests/test_batch_parity.py); each
+    row's result depends only on its own blocks (row-purity: no
+    batch-size effects).
+
+    Stage A: canonicalize and segment run per turn; block features run
+    per run of whole turns of at most _CHUNK_CHARS characters, from
+    per-character class arrays (_batched_block_features).  A turn whose
+    blocks cut a tag or an anchor, or that is longer than the bound,
+    takes the per-block `_block_features` path instead.
+    Stage B: the numeric stages (quantize, adaptive threshold, Otsu,
+    scoring, gating) run once over the flat block arrays of the batch.
+    Stage C: fallback, pad, merge and emit run per turn.
     """
     from ocr_spark.extract.classify import content_scores_batch
     from ocr_spark.extract.threshold import (
@@ -256,8 +448,7 @@ def _extract_batch_results(texts: list) -> list[dict[str, Any]]:
     canons: list = [None] * n
     blocks_l: list = [None] * n
 
-    # --- stage A (rowwise): canonicalize -> segment -> block features ----
-    dens_parts, link_parts, words_parts, vis_parts, pos_parts = [], [], [], [], []
+    # --- stage A: canonicalize -> segment per turn ------------------------
     lengths = np.zeros(n, dtype=np.int64)
     for i, text in enumerate(texts):
         if text is None or not isinstance(text, str):
@@ -269,35 +460,37 @@ def _extract_batch_results(texts: list) -> list[dict[str, Any]]:
                 results[i] = _envelope("", [], 0, STATUS_EMPTY)
                 continue
             blocks = segment(canon)
-            feats = _block_features(canon, blocks)
         except Exception:
             results[i] = _envelope("", [], 0, STATUS_ERROR)
             continue
         canons[i] = canon
         blocks_l[i] = blocks
         lengths[i] = len(blocks)
-        dens_parts.append(feats["density"])
-        link_parts.append(feats["link_density"])
-        words_parts.append(feats["words"])
-        vis_parts.append(feats["vis_chars"])
-        pos_parts.append(feats["pos_frac"])
 
     active = [i for i in range(n) if results[i] is None]
     if not active:
         return results
+
+    # --- stage A: block features per run of whole turns -------------------
+    parts = []
+    for lo, hi in _chunks([len(canons[i]) for i in active]):
+        run = active[lo:hi]
+        if len(canons[run[0]]) > _CHUNK_CHARS:
+            parts.append(_block_features(canons[run[0]], blocks_l[run[0]]))
+        else:
+            parts.append(_batched_block_features(
+                [canons[i] for i in run], [blocks_l[i] for i in run]
+            )[0])
+    feats = {name: np.concatenate([p[name] for p in parts]) for name in parts[0]}
 
     # --- stage B (batched over all blocks of all active turns) -----------
     active_lengths = lengths[active]
     starts = np.zeros(len(active), dtype=np.int64)
     np.cumsum(active_lengths[:-1], out=starts[1:])
     turn_ids = np.repeat(np.arange(len(active)), active_lengths)
-    density = np.concatenate(dens_parts) if dens_parts else np.zeros(0)
-    link = np.concatenate(link_parts) if link_parts else np.zeros(0)
-    words = np.concatenate(words_parts) if words_parts else np.zeros(0, dtype=np.int64)
-    vis = np.concatenate(vis_parts) if vis_parts else np.zeros(0, dtype=np.int64)
-    pos = np.concatenate(pos_parts) if pos_parts else np.zeros(0)
+    link = feats["link_density"]
 
-    q_all = quantize(density)
+    q_all = quantize(feats["density"])
     cand = adaptive_candidates_batch(q_all, starts, active_lengths)
     # G5 gap closing is a per-turn sequential scan over a tiny bool run
     for a, (s, ln) in enumerate(zip(starts, active_lengths)):
@@ -305,10 +498,10 @@ def _extract_batch_results(texts: list) -> list[dict[str, Any]]:
             cand[s : s + ln] = close_gaps(cand[s : s + ln])
     keep = (
         cand
-        & (vis >= MIN_BLOCK_CHARS)
-        & ~((pos > FOOTER_FRAC) & (words < FOOTER_MAX_WORDS))
+        & (feats["vis_chars"] >= MIN_BLOCK_CHARS)
+        & ~((feats["pos_frac"] > FOOTER_FRAC) & (feats["words"] < FOOTER_MAX_WORDS))
         & (link <= LINK_DENSITY_MAX)
-        & (words >= MIN_WORDS)
+        & (feats["words"] >= MIN_WORDS)
     )
     otsu_t = otsu_split_batch(q_all, turn_ids, starts, active_lengths, len(active))
     surv_flat = np.nonzero(keep)[0]
@@ -357,22 +550,25 @@ def _extract_batch_results(texts: list) -> list[dict[str, Any]]:
     return results
 
 
+def extract_results(texts: list) -> list[dict[str, Any]]:
+    """extract_turn's result for every text, from the batched pipeline
+    (_extract_batch_results).  If that fails as a whole it degrades to the
+    scalar per-turn loop, preserving G26 per-turn failure isolation."""
+    try:
+        return _extract_batch_results(texts)
+    except Exception as exc:
+        note_batch_fallback(exc)
+        return [extract_turn(t) for t in texts]
+
+
 def extract_frame(pdf: pd.DataFrame) -> pd.DataFrame:
     """Run the pipeline over a batch of turns.
 
     Input columns: conv_id, turn_idx, text (extra columns ignored).
     Output columns: OUTPUT_SCHEMA_DDL.  This one function is both the
     single-process oracle and the body of the mapInPandas operator.
-    The numeric stages are batched across turns (_extract_batch_results);
-    if the batched path ever fails as a whole it degrades to the scalar
-    per-turn loop, preserving G26 per-turn failure isolation.
     """
-    texts = pdf["text"].tolist()
-    try:
-        results = _extract_batch_results(texts)
-    except Exception as exc:
-        note_batch_fallback(exc)
-        results = [extract_turn(t) for t in texts]
+    results = extract_results(pdf["text"].tolist())
     return pd.DataFrame(
         {
             "conv_id": pdf["conv_id"].astype(str).values,

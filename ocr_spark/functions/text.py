@@ -48,37 +48,17 @@ def extract_text(text: pd.Series) -> pd.Series:
     SELECT extract_text(text) — returns extracted_text only (G24).
     Runs the cross-turn batched pipeline per Arrow batch (result-identical
     to per-row extract_turn; tests/test_batch_parity.py)."""
-    from ocr_spark.extract.extractor import (
-        _extract_batch_results,
-        extract_turn,
-        note_batch_fallback,
-    )
+    from ocr_spark.extract.extractor import extract_results
 
-    texts = text.tolist()
-    try:
-        res = _extract_batch_results(texts)
-    except Exception as exc:
-        # G26: same degrade-to-rowwise guarantee as extract_frame
-        note_batch_fallback(exc)
-        res = [extract_turn(t) for t in texts]
-    return pd.Series([r["extracted_text"] for r in res])
+    return pd.Series([r["extracted_text"] for r in extract_results(text.tolist())])
 
 
 @F.pandas_udf(IntegerType())
 def extracted_block_count(text: pd.Series) -> pd.Series:
     """Number of accepted spans per payload (A5 analogue)."""
-    from ocr_spark.extract.extractor import (
-        _extract_batch_results,
-        extract_turn,
-        note_batch_fallback,
-    )
+    from ocr_spark.extract.extractor import extract_results
 
-    texts = text.tolist()
-    try:
-        res = _extract_batch_results(texts)
-    except Exception as exc:
-        note_batch_fallback(exc)
-        res = [extract_turn(t) for t in texts]
+    res = extract_results(text.tolist())
     return pd.Series([r["n_blocks_kept"] for r in res]).astype("int32")
 
 

@@ -49,6 +49,10 @@ from typing import Any
 
 from ocr_spark.extract.extractor import extract_turn
 
+# The reference's Flask MAX_CONTENT_LENGTH (main.py:6): larger bodies are
+# refused before any of them is read.
+MAX_BODY_BYTES = 16 * 1024 * 1024
+
 
 def serve_one(text: Any) -> dict:
     """Extract one payload; never raises (G26 per-request isolation)."""
@@ -82,6 +86,14 @@ def make_http_server(port: int = 0, host: str = "127.0.0.1"):
                 return
             try:
                 n = int(self.headers.get("Content-Length", "0"))
+                if n > MAX_BODY_BYTES:
+                    # the unread body makes the connection unusable
+                    self.close_connection = True
+                    self._reply({
+                        "success": False,
+                        "error": f"payload exceeds {MAX_BODY_BYTES} bytes",
+                    })
+                    return
                 body = self.rfile.read(n)
                 payload = body.decode("utf-8", errors="replace")
             except Exception as exc:  # request-level isolation (G26)

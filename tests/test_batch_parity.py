@@ -4,13 +4,24 @@ extract_frame must be RESULT-IDENTICAL to the scalar per-turn path
 their scalar counterparts.  This is the guard that lets the hot path be
 batched without risking the byte-exactness invariant."""
 
+import re
+
 import numpy as np
 import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from fixtures.gen import gen_transcripts
-from ocr_spark.extract.extractor import extract_frame, extract_turn
+from ocr_spark.extract.canon import canonicalize
+from ocr_spark.extract.extractor import (
+    _CHUNK_CHARS,
+    _batched_block_features,
+    _block_features,
+    _char_classes,
+    extract_frame,
+    extract_turn,
+)
+from ocr_spark.extract.segment import segment
 from ocr_spark.extract.threshold import (
     adaptive_candidates,
     adaptive_candidates_batch,
@@ -19,6 +30,7 @@ from ocr_spark.extract.threshold import (
     otsu_split,
     otsu_split_batch,
 )
+from perfbench.inputs import derive_turns, gen_documents
 
 
 def _assert_frame_matches_scalar(texts):
@@ -40,6 +52,17 @@ def test_parity_on_fixture_corpus():
     _assert_frame_matches_scalar(pdf["text"].tolist())
 
 
+# One payload per reason a turn leaves the batched block features for the
+# per-block path: a tag across a block edge, an anchor across a block
+# edge, a tag across an anchor's inner edge.
+_ROUTED = [
+    "Some words before <span\n\nclass=x>and words after the tag here",
+    "<b title='<p>'>bold words split by a block tag</b> and more words",
+    "<a href='u'>link words in one block\n\nmore link words</a> tail words",
+    "<A HREF='u'>inner text with x < y comparison</A> and some tail words",
+]
+
+
 def test_parity_on_torture_payloads():
     texts = [
         None,
@@ -56,13 +79,69 @@ def test_parity_on_torture_payloads():
         "text with \x00 control \x1f bytes and words in it here",
         "☃ unicode ❄ content with enough words to pass the gates ☃ ❄ yes",
         '{"status": "ok", "result": "tool payload with many words inside"}',
-    ]
+        "word " * (_CHUNK_CHARS // 5 + 10),  # over the chunk bound
+    ] + _ROUTED
     _assert_frame_matches_scalar(texts)
+
+
+def _batched_features_match(texts):
+    """Batched block features == per-block _block_features, block for
+    block, over the canonical turns of `texts`; returns the routed mask."""
+    canons = [c for c, _ in map(canonicalize, texts) if c.strip()]
+    if not canons:
+        return np.zeros(0, dtype=bool)
+    blocks_l = [segment(c) for c in canons]
+    got, routed = _batched_block_features(canons, blocks_l)
+    for name, col in got.items():
+        want = np.concatenate(
+            [_block_features(c, b)[name] for c, b in zip(canons, blocks_l)]
+        )
+        assert col.dtype == want.dtype, name
+        assert np.array_equal(col, want), name
+    return routed
+
+
+def test_batched_features_on_corpora():
+    _batched_features_match(gen_transcripts(n_convs=120)["text"].tolist())
+    _batched_features_match(
+        derive_turns(gen_documents(60, seed=3), 8)["text"].tolist()
+    )
+
+
+def test_batched_features_route_cut_matches():
+    for text in _ROUTED:
+        assert _batched_features_match([text]).tolist() == [True], text
+    # next to unrouted turns, in one joined run
+    mixed = ["plain words here", *_ROUTED, "<p>x y</p> \u00a0 é \ud800 words"]
+    routed = _batched_features_match(mixed)
+    assert routed.tolist() == [False] + [True] * len(_ROUTED) + [False]
+
+
+def test_char_classes_match_python():
+    """The class tables agree with str.isspace(), the regex `\\s` and
+    str.split() (the predicates _block_features counts with) and with
+    [0-9A-Za-z] on every code point.  Only 'a' and 'A' match a
+    case-insensitive 'a', so the '<a'/'<A' test before the anchor regex
+    skips no anchor."""
+    ws, alnum = _char_classes(np.arange(0x110000, dtype=np.uint32))
+    chars = [chr(c) for c in range(0x110000)]
+    assert ws.tolist() == [ch.isspace() for ch in chars]
+    assert ws.tolist() == [re.match(r"\s", ch) is not None for ch in chars]
+    assert ws.tolist() == [len(f"x{ch}x".split()) == 2 for ch in chars]
+    assert np.flatnonzero(alnum).tolist() == [
+        c for c, ch in enumerate(chars) if re.match(r"[0-9A-Za-z]", ch)
+    ]
+    assert [c for c, ch in enumerate(chars) if re.match(r"(?i)a", ch)] == [65, 97]
+    ascii_ws, ascii_alnum = _char_classes(np.arange(128, dtype=np.uint8))
+    assert ascii_ws.tolist() == ws[:128].tolist()
+    assert ascii_alnum.tolist() == alnum[:128].tolist()
 
 
 _TOKENS = st.sampled_from(
     list("abc <>/ap.\n\t0123456789")
     + ["<p>", "</p>", "\n\n", "<a href='u'>", "</a>", "word ", "    "]
+    + ["<A HREF='u'>", "</A>", "<abbr>", "<span\n\nclass=x>"]
+    + ["\u00a0", "\u2028", "\x1c", "é"]
 )
 
 
@@ -76,6 +155,7 @@ _TOKENS = st.sampled_from(
 )
 def test_parity_hypothesis(texts):
     _assert_frame_matches_scalar(texts)
+    _batched_features_match(texts)
 
 
 # moving_average delegates to moving_average_batch, so scalar-vs-batch is

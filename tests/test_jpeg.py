@@ -373,15 +373,18 @@ def test_reference_progressive_images_interop():
 
     from ocr_spark.functions.jpeg import decode_baseline
 
-    b = open("/root/reference/test_image2.jpg", "rb").read()
+    ref_dir = os.path.dirname(REF_JPEG)
+    progressive = os.path.join(ref_dir, "test_image2.jpg")
+    if not os.path.exists(progressive):
+        pytest.skip("reference image not present")
+    b = open(progressive, "rb").read()
     assert b[2:4] != b"\xff\xc0"  # really not baseline
     arr = decode_baseline(b).astype(np.int64)
     assert arr.shape == (2560, 1440, 3)
     assert [int(arr[:, :, c].sum()) for c in range(3)] == [
         428279233, 406894227, 402871374]
     assert arr[1280, 720].tolist() == [150, 143, 139]
-    if os.environ.get("OCR_SPARK_SLOW") == "1":
-        arr2 = decode_baseline(
-            open("/root/reference/testimage.jpg", "rb").read()
-        )
+    second = os.path.join(ref_dir, "testimage.jpg")
+    if os.environ.get("OCR_SPARK_SLOW") == "1" and os.path.exists(second):
+        arr2 = decode_baseline(open(second, "rb").read())
         assert arr2.shape == (2560, 1440, 3)

@@ -97,3 +97,38 @@ def test_serve_http_endpoint():
     finally:
         srv.shutdown()
         srv.server_close()
+
+
+def test_serve_http_rejects_oversized_body():
+    """A Content-Length above the reference's 16 MB upload cap gets the
+    JSON failure envelope without the body being read; the server keeps
+    serving."""
+    import http.client
+    import threading
+
+    from ocr_spark.serve import MAX_BODY_BYTES, make_http_server
+
+    srv = make_http_server(0)
+    port = srv.server_address[1]
+    t = threading.Thread(target=srv.serve_forever, daemon=True)
+    t.start()
+    try:
+        conn = http.client.HTTPConnection("127.0.0.1", port, timeout=10)
+        conn.putrequest("POST", "/api/extract")
+        conn.putheader("Content-Length", str(MAX_BODY_BYTES + 1))
+        conn.endheaders()  # no body sent: the reply must not wait for it
+        resp = conn.getresponse()
+        assert resp.status == 200
+        got = json.loads(resp.read())
+        conn.close()
+        assert got["success"] is False
+        assert str(MAX_BODY_BYTES) in got["error"]
+
+        conn = http.client.HTTPConnection("127.0.0.1", port, timeout=10)
+        conn.request("POST", "/api/extract", body=b"Some words. " * 8)
+        ok = json.loads(conn.getresponse().read())
+        conn.close()
+        assert ok["success"] is True
+    finally:
+        srv.shutdown()
+        srv.server_close()
