@@ -4664,17 +4664,26 @@ def _q_range_join(spark, sf_dir):
     )
 
 
+def _decode_query(tier: str) -> Callable[[SparkSession, str], DataFrame]:
+    """Driver query running one multimodal.DECODE_TIERS tier over the
+    documents' doc_ids (the fixture per doc is a closed form of doc_id,
+    so each tier's oracle recomputes its columns in SQL)."""
+
+    def query(spark: SparkSession, sf_dir: str) -> DataFrame:
+        from ocr_spark.functions.multimodal import decode_tier
+
+        return decode_tier(_docs_wide(spark, sf_dir), tier)
+
+    return query
+
+
 # REAL image decode (P13 hardening): per doc, a deterministic 24-bit BMP
 # is synthesized (width/height/fill are closed forms of doc_id) and then
 # decoded by the pure-NumPy BMP decoder inside mapInPandas; the query
 # emits MEASURED geometry and pixel sums.  The DuckDB oracle computes the
 # same values from the closed forms — any header/stride/padding/channel
 # bug in the decoder breaks the hash match.
-def _q_image_decode(spark, sf_dir):
-    from ocr_spark.functions.multimodal import decode_images_real
-
-    d = _docs_wide(spark, sf_dir).select("doc_id")
-    return decode_images_real(d)
+_q_image_decode = _decode_query("bmp")
 
 
 # REAL compressed-codec decode (the round-2 "documented seam", now
@@ -4684,11 +4693,7 @@ def _q_image_decode(spark, sf_dir):
 # PNG decoder (stdlib inflate + unfiltering) inside mapInPandas.  The
 # DuckDB oracle computes the decoded geometry and pixel sum from the
 # closed forms — any chunk/inflate/unfilter bug breaks the hash match.
-def _q_png_decode(spark, sf_dir):
-    from ocr_spark.functions.multimodal import decode_pngs_real
-
-    d = _docs_wide(spark, sf_dir).select("doc_id")
-    return decode_pngs_real(d)
+_q_png_decode = _decode_query("png")
 
 
 # REAL GIF decode (P13 LZW tier): per doc a 64-color gradient frame is
@@ -4702,11 +4707,7 @@ def _q_png_decode(spark, sf_dir):
 # bug cannot hash-match.  Reference parity: the reference accepts GIF
 # uploads through PIL (handwriting/api.py:20); this is that codec
 # surface rebuilt with zero codec libraries.
-def _q_gif_decode(spark, sf_dir):
-    from ocr_spark.functions.multimodal import decode_gifs_real
-
-    d = _docs_wide(spark, sf_dir).select("doc_id")
-    return decode_gifs_real(d)
+_q_gif_decode = _decode_query("gif")
 
 
 # REAL TIFF decode (P13 tag-directory tier): per doc a channel-varying
@@ -4717,11 +4718,7 @@ def _q_gif_decode(spark, sf_dir):
 # by ocr_spark/functions/tiff.py.  Lossless, so the oracle recomputes
 # geometry + plain + position-weighted sums from the closed form via a
 # bounded range join; pos_sum is strip-order- and predictor-sensitive.
-def _q_tiff_decode(spark, sf_dir):
-    from ocr_spark.functions.multimodal import decode_tiffs_real
-
-    d = _docs_wide(spark, sf_dir).select("doc_id")
-    return decode_tiffs_real(d)
+_q_tiff_decode = _decode_query("tiff")
 
 
 # REAL baseline-JPEG decode (closing the verdict's last codec gap: the
@@ -4736,11 +4733,7 @@ def _q_tiff_decode(spark, sf_dir):
 # from closed forms — any marker/Huffman/zigzag/IDCT bug breaks the
 # hash match.  Real-world interop (the reference image itself) is
 # pinned by tests/test_jpeg.py.
-def _q_jpeg_decode(spark, sf_dir):
-    from ocr_spark.functions.multimodal import decode_jpegs_real
-
-    d = _docs_wide(spark, sf_dir).select("doc_id")
-    return decode_jpegs_real(d)
+_q_jpeg_decode = _decode_query("jpeg")
 
 
 # REAL PROGRESSIVE-JPEG decode (round 4 — closes the SOF2 seam, the
@@ -4754,11 +4747,7 @@ def _q_jpeg_decode(spark, sf_dir):
 # closed forms; any scan-script/EOB-run/refinement bug breaks the hash.
 # Coefficient-exact round-trips incl. deep SA chains are pinned by
 # tests/test_jpeg.py.
-def _q_jpeg_progressive(spark, sf_dir):
-    from ocr_spark.functions.multimodal import decode_progressive_jpegs_real
-
-    d = _docs_wide(spark, sf_dir).select("doc_id")
-    return decode_progressive_jpegs_real(d)
+_q_jpeg_progressive = _decode_query("jpeg_progressive")
 
 
 # REAL audio decode (WAV/PCM16 — the one audio container parseable with
@@ -4767,11 +4756,7 @@ def _q_jpeg_progressive(spark, sf_dir):
 # inside mapInPandas; the oracle recomputes stream geometry and the
 # exact amplitude stats from the integer closed form via a range join.
 # Compressed audio (mp3/ogg/flac) stays the honest codec seam.
-def _q_wav_decode(spark, sf_dir):
-    from ocr_spark.functions.multimodal import decode_wavs_real
-
-    d = _docs_wide(spark, sf_dir).select("doc_id")
-    return decode_wavs_real(d)
+_q_wav_decode = _decode_query("wav")
 
 
 # REAL G.711 mu-law/A-law decode (round 4 — narrows the compressed-
@@ -4782,11 +4767,7 @@ def _q_wav_decode(spark, sf_dir):
 # makes companding lossless, so the oracle recomputes the decoded
 # values from the closed segment/mantissa form — any LUT, sign, or
 # segment-search bug breaks the hash.  mp3/ogg stay the honest seam.
-def _q_g711_decode(spark, sf_dir):
-    from ocr_spark.functions.multimodal import decode_g711_wavs_real
-
-    d = _docs_wide(spark, sf_dir).select("doc_id")
-    return decode_g711_wavs_real(d)
+_q_g711_decode = _decode_query("g711")
 
 
 # REAL IMA-ADPCM decode (round 4): per doc, a multi-block 4-bit
@@ -4798,11 +4779,7 @@ def _q_g711_decode(spark, sf_dir):
 # recomputes each sample as base + running delta sum (a window over a
 # lateral range join) — any nibble-packing, header, or step-update bug
 # breaks the hash.
-def _q_adpcm_decode(spark, sf_dir):
-    from ocr_spark.functions.multimodal import decode_adpcm_wavs_real
-
-    d = _docs_wide(spark, sf_dir).select("doc_id")
-    return decode_adpcm_wavs_real(d)
+_q_adpcm_decode = _decode_query("adpcm")
 
 
 # REAL mp3 (MPEG-1 Layer III) bitstream decode (round 5 — the verdict's
@@ -4820,11 +4797,7 @@ def _q_adpcm_decode(spark, sf_dir):
 # synthesis D-window are the documented seams (mp3.py docstring) —
 # unverifiable numeric spec tables are a worse lie than an honest
 # NotImplementedError.
-def _q_mp3_decode(spark, sf_dir):
-    from ocr_spark.functions.multimodal import decode_mp3s_real
-
-    d = _docs_wide(spark, sf_dir).select("doc_id")
-    return decode_mp3s_real(d)
+_q_mp3_decode = _decode_query("mp3")
 
 
 # REAL Ogg container decode (round 5 — the perceptual-audio seam is now
@@ -4843,11 +4816,7 @@ def _q_mp3_decode(spark, sf_dir):
 # 100-TB ingest CAN split ogg payloads at page boundaries — the exact
 # mirror of mp3's bit-reservoir non-splittability documented in
 # q_mp3_decode; the pair pins both answers an ingest planner needs.
-def _q_ogg_decode(spark, sf_dir):
-    from ocr_spark.functions.multimodal import decode_oggs_real
-
-    d = _docs_wide(spark, sf_dir).select("doc_id")
-    return decode_oggs_real(d)
+_q_ogg_decode = _decode_query("ogg")
 
 
 # REAL video decode (MJPEG AVI — frames are baseline JPEGs inside a
@@ -4857,11 +4826,7 @@ def _q_ogg_decode(spark, sf_dir):
 # mapInPandas; the oracle recomputes frame count, geometry, and the
 # total pixel sum over (tiles x frames) from closed forms.  Inter-coded
 # video (h264/vp9) stays the honest codec seam.
-def _q_mjpeg_frames(spark, sf_dir):
-    from ocr_spark.functions.multimodal import decode_videos_real
-
-    d = _docs_wide(spark, sf_dir).select("doc_id")
-    return decode_videos_real(d)
+_q_mjpeg_frames = _decode_query("avi")
 
 
 # PRODUCTION-contract decode over a mixed, partially-POISONED binary
@@ -4874,16 +4839,18 @@ def _q_mjpeg_frames(spark, sf_dir):
 # breaks the hash.  This is the error-envelope contract a 1000-executor
 # ingestion job needs: one bad payload never fails a task.
 def _q_binary_decode_envelope(spark, sf_dir):
-    from ocr_spark.functions.multimodal import (
-        decode_binary_images,
-        synthesize_mixed_payloads,
-    )
+    import pandas as pd
+
+    from ocr_spark.functions.multimodal import decode_binary_images, mixed_fixture
 
     d = _docs_wide(spark, sf_dir).select("doc_id")
 
     def gen(it):
         for pdf in it:
-            yield synthesize_mixed_payloads(pdf)
+            yield pd.DataFrame({
+                "doc_id": pdf["doc_id"].astype("int64"),
+                "payload": [mixed_fixture(int(x)) for x in pdf["doc_id"]],
+            })
 
     withp = d.mapInPandas(gen, schema="doc_id bigint, payload binary")
     return decode_binary_images(withp).select(

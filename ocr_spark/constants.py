@@ -112,12 +112,6 @@ INDENT_TOL = 2
 # Must be >> the UDF-stage partition count (2x cores) so hashing buckets
 # into partitions balances; also the resume unit — finer = cheaper re-runs.
 DEFAULT_N_BUCKETS = 256
-# A bucket is "hot" if its row count > HOT_FACTOR * mean bucket count.
-# (Diagnostic-only since round 2: the hot path uses static slice salting
-# below, which needs no pre-scan of the input.)
-HOT_FACTOR = 4.0
-# Salt fan-out for hot buckets (legacy detect-based salting only).
-K_SALT = 8
 # Static skew split: salt = turn_idx div SALT_SLICE_TURNS.  A conversation
 # shorter than this (the overwhelming majority) gets the single salt 0 and
 # stays whole within its bucket; a mega-conversation is split into slices

@@ -33,12 +33,13 @@ codec library:
 
 Design notes for the 100 TB setting: a JPEG payload decodes
 independently of every other payload, so the distributed shape is the
-same narrow mapInPandas op as BMP/PNG (multimodal.decode_jpegs_real) —
-per-partition Python cost, zero shuffle.  Inside one payload the
-entropy scan is inherently sequential (DC prediction + variable-length
-codes), so the per-block Huffman loop is Python while everything after
-it (dequantize, inverse zigzag, IDCT, level shift, color transform) is
-vectorized over ALL blocks at once with einsum/NumPy.
+same narrow mapInPandas op as BMP/PNG (the "jpeg" tier of
+multimodal.decode_tier) — per-partition Python cost, zero shuffle.
+Inside one payload the entropy scan is inherently sequential (DC
+prediction + variable-length codes), so the per-block Huffman loop is
+Python while everything after it (dequantize, inverse zigzag, IDCT,
+level shift, color transform) is vectorized over ALL blocks at once
+with einsum/NumPy.
 
 Spec references (public): ITU-T T.81 — canonical Huffman code
 generation Annex C, entropy decode F.2.2, zigzag Figure 5, example

@@ -4,27 +4,46 @@ Media payloads are opaque `binary` columns with typed metadata, processed
 with Arrow-vectorized `mapInPandas` — the same distribution pattern as
 the text extractor (ocr_spark/operators/extract_op.py).
 
-Decode tiers (the sandbox has no PIL/librosa/pyav):
-  - REAL decode for uncompressed raster formats, implemented here in
-    pure NumPy: 24-bit BMP (BITMAPINFOHEADER, bottom-up or top-down,
-    4-byte row padding) and binary PPM (P6).  `decode_media_real` routes
-    by magic bytes and returns an (H, W, 3) uint8 array — exercised
-    end-to-end by the oracle-checked q_image_decode query.
-  - STUBBED decode for compressed codecs (png/jpeg/audio/video):
-    `decode_media_real` raises NotImplementedError at the single marked
-    seam where PIL/librosa/pyav would plug in; `decode_media_features`
-    provides deterministic byte-level features for those payloads so the
-    distributed plumbing stays real and tested (tests/test_multimodal.py).
+Decode (the sandbox has no PIL/librosa/pyav, so every codec is pure
+NumPy/stdlib):
+  - `decode_media_real` routes a payload by magic bytes to a real
+    decoder: BMP, PPM, PNG, GIF, TIFF, baseline and progressive JPEG,
+    RIFF/WAVE (PCM16, G.711, IMA-ADPCM) and MJPEG AVI.  Perceptual
+    audio spectra and inter-coded video stay the marked seam
+    (NotImplementedError).
+  - `DECODE_TIERS` pairs one closed-form per-doc fixture with one
+    measure per codec family; `decode_tier` runs any tier as a narrow
+    mapInPandas op, and each driver query checks it against a SQL oracle.
+  - `decode_binary_images` is the production error envelope over a real
+    binary column; `decode_media_features` provides deterministic
+    byte-level features for the plumbing query.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+
+from ocr_spark.functions.audio import (
+    g711_decode,
+    g711_encode,
+    ima_adpcm_decode_block,
+    ima_adpcm_encode_block,
+)
+from ocr_spark.functions.gif import decode_gif, encode_gif
+from ocr_spark.functions.jpeg import (
+    decode_baseline,
+    encode_baseline,
+    encode_progressive,
+)
+from ocr_spark.functions.mp3 import decode_mp3, encode_mp3_silence
+from ocr_spark.functions.ogg import decode_ogg_stream, encode_ogg_vorbis_fixture
+from ocr_spark.functions.tiff import decode_tiff, encode_tiff
 
 MEDIA_SCHEMA_DDL = (
     "doc_id bigint, media_type string, n_bytes int, magic string, "
@@ -330,8 +349,6 @@ def encode_wav_g711(samples: np.ndarray, sample_rate: int, law: str) -> bytes:
     """Encode an (n, ch) int16 array as a G.711-companded RIFF/WAVE
     file (fmt 7 = mu-law, fmt 6 = A-law) — the fixture twin for the
     compressed-audio decode path."""
-    from ocr_spark.functions.audio import g711_encode
-
     assert samples.dtype == np.int16 and samples.ndim == 2
     n, ch = samples.shape
     codes = g711_encode(samples.reshape(-1), law)
@@ -348,8 +365,6 @@ def encode_wav_adpcm(samples: np.ndarray, sample_rate: int,
     samples_per_block = 1 + 8k; each block carries its own
     predictor/index header and is independently decodable — the
     intra-payload parallel unit."""
-    from ocr_spark.functions.audio import ima_adpcm_encode_block
-
     assert samples.dtype == np.int16 and samples.ndim == 2
     n, ch = samples.shape
     if n % samples_per_block != 0:
@@ -402,8 +417,6 @@ def _decode_wav(b: bytes) -> tuple[np.ndarray, int]:
         ).reshape(-1, n_channels)
         return samples, sample_rate
     if fmt_code in (6, 7) and bits == 8:
-        from ocr_spark.functions.audio import g711_decode
-
         law = "ulaw" if fmt_code == 7 else "alaw"
         codes = np.frombuffer(
             data, dtype=np.uint8,
@@ -411,8 +424,6 @@ def _decode_wav(b: bytes) -> tuple[np.ndarray, int]:
         )
         return g711_decode(codes, law).reshape(-1, n_channels), sample_rate
     if fmt_code == 0x11 and bits == 4:
-        from ocr_spark.functions.audio import ima_adpcm_decode_block
-
         if block_align <= 4 * n_channels:
             raise ValueError("ADPCM block_align too small for header")
         chunks = [
@@ -445,16 +456,10 @@ def decode_media_real(payload: bytes, media_type: str) -> np.ndarray:
         if payload[:8] == _PNG_MAGIC:
             return _decode_png(payload)
         if payload[:4] == b"GIF8":
-            from ocr_spark.functions.gif import decode_gif
-
             return decode_gif(payload)
         if payload[:4] == b"II*\x00":
-            from ocr_spark.functions.tiff import decode_tiff
-
             return decode_tiff(payload)
         if payload[:3] == b"\xff\xd8\xff":
-            from ocr_spark.functions.jpeg import decode_baseline
-
             arr = decode_baseline(payload)
             if arr.ndim == 2:           # grayscale -> (H, W, 3) contract
                 arr = np.repeat(arr[:, :, None], 3, axis=2)
@@ -515,345 +520,6 @@ def _checksum(b: bytes) -> int:
     arr = np.frombuffer(b, dtype=np.uint8).astype(np.int64)
     # positional rolling checksum, exact in int64 for payloads << 2^44
     return int((arr * (np.arange(len(arr)) % 1009 + 1)).sum())
-
-
-IMAGE_DECODE_SCHEMA_DDL = (
-    "doc_id bigint, width bigint, height bigint, n_px bigint, px_sum bigint"
-)
-
-
-def synthesize_bmp_payloads(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Deterministic BMP fixture per doc_id: width = 8 + doc_id % 16,
-    height = 4 + doc_id % 8, uniform gray fill = doc_id % 256.  Closed
-    form by construction, so a SQL oracle can verify the decoded
-    geometry AND the full pixel payload (px_sum)."""
-    payloads = []
-    for doc_id in pdf["doc_id"]:
-        w = 8 + int(doc_id) % 16
-        h = 4 + int(doc_id) % 8
-        fill = int(doc_id) % 256
-        arr = np.full((h, w, 3), fill, dtype=np.uint8)
-        payloads.append(encode_bmp(arr))
-    return pd.DataFrame({"doc_id": pdf["doc_id"].astype("int64"),
-                         "payload": payloads})
-
-
-def decode_images_real(df: DataFrame) -> DataFrame:
-    """Distributed REAL image decode: mapInPandas over (doc_id) rows —
-    synthesize the BMP payload, then decode it with the pure-NumPy BMP
-    decoder and emit measured geometry + pixel sum.  Narrow op; the
-    encode half stands in for a binary scan column at production scale.
-    """
-    pruned = df.select("doc_id")
-
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            withp = synthesize_bmp_payloads(pdf)
-            rows = {k: [] for k in
-                    ("doc_id", "width", "height", "n_px", "px_sum")}
-            for doc_id, payload in zip(withp["doc_id"], withp["payload"]):
-                arr = decode_media_real(payload, "image")
-                h, w, _ = arr.shape
-                rows["doc_id"].append(int(doc_id))
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["n_px"].append(w * h)
-                rows["px_sum"].append(int(arr.astype(np.int64).sum()))
-            yield pd.DataFrame(rows).astype("int64")
-
-    return pruned.mapInPandas(gen, schema=IMAGE_DECODE_SCHEMA_DDL)
-
-
-def synthesize_png_payloads(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Deterministic PNG fixture per doc_id: width = 8 + doc_id % 16,
-    height = 4 + doc_id % 8, per-channel pixel value = (doc_id % 200) + x
-    (a horizontal gradient — base + x <= 221, no uint8 wrap), row filter
-    type cycling 0..4 so every unfilter path runs.  px_sum has the
-    closed form 3 * h * (w*base + w*(w-1)/2) a SQL oracle can verify."""
-    payloads = []
-    for doc_id in pdf["doc_id"]:
-        w = 8 + int(doc_id) % 16
-        h = 4 + int(doc_id) % 8
-        base = int(doc_id) % 200
-        row = (base + np.arange(w, dtype=np.int64)) % 256
-        arr = np.repeat(row[None, :, None], h, axis=0).repeat(3, axis=2)
-        payloads.append(encode_png(arr.astype(np.uint8), filters="cycle"))
-    return pd.DataFrame({"doc_id": pdf["doc_id"].astype("int64"),
-                         "payload": payloads})
-
-
-def decode_pngs_real(df: DataFrame) -> DataFrame:
-    """Distributed REAL PNG decode (the compressed-codec twin of
-    decode_images_real): synthesize the gradient PNG per doc_id inside
-    mapInPandas, decode it with the pure-NumPy PNG decoder, emit
-    measured geometry + pixel sum.  Narrow op."""
-    pruned = df.select("doc_id")
-
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            withp = synthesize_png_payloads(pdf)
-            rows = {k: [] for k in
-                    ("doc_id", "width", "height", "n_px", "px_sum")}
-            for doc_id, payload in zip(withp["doc_id"], withp["payload"]):
-                arr = decode_media_real(payload, "image")
-                h, w, _ = arr.shape
-                rows["doc_id"].append(int(doc_id))
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["n_px"].append(w * h)
-                rows["px_sum"].append(int(arr.astype(np.int64).sum()))
-            yield pd.DataFrame(rows).astype("int64")
-
-    return pruned.mapInPandas(gen, schema=IMAGE_DECODE_SCHEMA_DDL)
-
-
-GIF_DECODE_SCHEMA_DDL = (
-    "doc_id bigint, width bigint, height bigint, n_px bigint, "
-    "px_sum bigint, pos_sum bigint"
-)
-
-_GIF_PALETTE = None
-
-
-def _gif_palette() -> np.ndarray:
-    global _GIF_PALETTE
-    if _GIF_PALETTE is None:
-        _GIF_PALETTE = (
-            np.arange(64, dtype=np.uint8)[:, None].repeat(3, 1) * 4
-        )
-    return _GIF_PALETTE
-
-
-def synthesize_gif_payloads(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Deterministic GIF fixture per doc_id: w = 8 + doc_id % 16,
-    h = 4 + doc_id % 8, 64-entry grayscale palette (4i,4i,4i), pixel
-    index (base + x + 7*y) % 64 with base = doc_id % 64 — the 7*y term
-    makes rows DIFFER so the position-weighted sum catches interlace
-    reordering bugs.  Odd doc_ids are written INTERLACED; doc_id % 3
-    == 0 uses a 128-entry dictionary cap so the LZW clear-code reset
-    path runs on a third of the corpus."""
-    payloads = []
-    from ocr_spark.functions.gif import encode_gif
-
-    pal = _gif_palette()
-    for doc_id in pdf["doc_id"]:
-        d = int(doc_id)
-        w = 8 + d % 16
-        h = 4 + d % 8
-        base = d % 64
-        idx = ((base + np.arange(w)[None, :] + 7 * np.arange(h)[:, None])
-               % 64).astype(np.uint8)
-        payloads.append(
-            encode_gif(idx, pal, interlace=bool(d % 2),
-                       dict_cap=128 if d % 3 == 0 else 4096)
-        )
-    return pd.DataFrame({"doc_id": pdf["doc_id"].astype("int64"),
-                         "payload": payloads})
-
-
-def decode_gifs_real(df: DataFrame) -> DataFrame:
-    """Distributed REAL GIF decode (LZW + interlace twin of
-    decode_pngs_real): synthesize the gradient GIF per doc_id inside
-    mapInPandas, decode via the pure-Python LZW codec, emit measured
-    geometry + plain and position-weighted pixel sums (the weighted sum
-    is row-order-sensitive, so a deinterlace bug cannot hash-match).
-    Narrow op."""
-    pruned = df.select("doc_id")
-
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            withp = synthesize_gif_payloads(pdf)
-            rows = {k: [] for k in
-                    ("doc_id", "width", "height", "n_px", "px_sum",
-                     "pos_sum")}
-            for doc_id, payload in zip(withp["doc_id"], withp["payload"]):
-                arr = decode_media_real(payload, "image")
-                h, w, _ = arr.shape
-                weights = np.arange(h * w, dtype=np.int64).reshape(h, w)
-                px = arr.astype(np.int64)
-                rows["doc_id"].append(int(doc_id))
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["n_px"].append(w * h)
-                rows["px_sum"].append(int(px.sum()))
-                rows["pos_sum"].append(int((px.sum(axis=2) * weights).sum()))
-            yield pd.DataFrame(rows).astype("int64")
-
-    return pruned.mapInPandas(gen, schema=GIF_DECODE_SCHEMA_DDL)
-
-
-def synthesize_tiff_payloads(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Deterministic TIFF fixture per doc_id: w = 8 + doc_id % 16,
-    h = 4 + doc_id % 8, channel value (base + x + 7*y + 50*c) % 256 —
-    row- AND channel-varying so the position-weighted oracle catches
-    strip-assembly and predictor bugs.  Compression cycles by doc_id:
-    %3==0 uncompressed, %3==1 PackBits, %3==2 LZW; LZW rows with
-    doc_id %6==5 additionally use the horizontal-differencing
-    predictor.  Strip height 4 forces multi-strip assembly."""
-    from ocr_spark.functions.tiff import encode_tiff
-
-    payloads = []
-    for doc_id in pdf["doc_id"]:
-        d = int(doc_id)
-        w = 8 + d % 16
-        h = 4 + d % 8
-        base = d % 200
-        x = np.arange(w)[None, :, None]
-        y = np.arange(h)[:, None, None]
-        c = np.arange(3)[None, None, :]
-        arr = ((base + x + 7 * y + 50 * c) % 256).astype(np.uint8)
-        comp = {0: 1, 1: 32773, 2: 5}[d % 3]
-        pred = 2 if (comp == 5 and d % 6 == 5) else 1
-        payloads.append(
-            encode_tiff(arr, compression=comp, predictor=pred,
-                        rows_per_strip=4)
-        )
-    return pd.DataFrame({"doc_id": pdf["doc_id"].astype("int64"),
-                         "payload": payloads})
-
-
-def decode_tiffs_real(df: DataFrame) -> DataFrame:
-    """Distributed REAL TIFF decode: synthesize the per-doc TIFF inside
-    mapInPandas (uncompressed / PackBits / TIFF-LZW with early change /
-    LZW+predictor-2), decode via the pure-NumPy codec, emit measured
-    geometry plus plain and position-weighted pixel sums.  Narrow op."""
-    pruned = df.select("doc_id")
-
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            withp = synthesize_tiff_payloads(pdf)
-            rows = {k: [] for k in
-                    ("doc_id", "width", "height", "n_px", "px_sum",
-                     "pos_sum")}
-            for doc_id, payload in zip(withp["doc_id"], withp["payload"]):
-                arr = decode_media_real(payload, "image")
-                h, w, _ = arr.shape
-                weights = np.arange(h * w, dtype=np.int64).reshape(h, w)
-                px = arr.astype(np.int64)
-                rows["doc_id"].append(int(doc_id))
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["n_px"].append(w * h)
-                rows["px_sum"].append(int(px.sum()))
-                rows["pos_sum"].append(int((px.sum(axis=2) * weights).sum()))
-            yield pd.DataFrame(rows).astype("int64")
-
-    return pruned.mapInPandas(gen, schema=GIF_DECODE_SCHEMA_DDL)
-
-
-def synthesize_jpeg_payloads(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Deterministic baseline-JPEG fixture per doc_id: a grid of flat
-    8x8 tiles, TX = 1 + doc_id % 3 tiles across, TY = 1 + doc_id % 2
-    down, tile (bx, by) value = base + 5*bx + 11*by with
-    base = doc_id % 151 (max 171, no uint8 wrap).  With all-ones quant
-    tables a flat block round-trips EXACTLY through FDCT->quantize->
-    Huffman->dequantize->IDCT (the DC coefficient 8*(v-128) is integral
-    and every AC is 0), so px_sum has the closed form
-    3 * 64 * sum(tiles) a SQL oracle can verify — while the stream
-    itself is a genuine Huffman-coded JPEG exercising DC prediction
-    across blocks, EOB, byte stuffing, and marker parsing."""
-    from ocr_spark.functions.jpeg import encode_baseline
-
-    payloads = []
-    for doc_id in pdf["doc_id"]:
-        tx = 1 + int(doc_id) % 3
-        ty = 1 + int(doc_id) % 2
-        base = int(doc_id) % 151
-        bx = np.arange(tx, dtype=np.int64)
-        by = np.arange(ty, dtype=np.int64)
-        tiles = base + 5 * bx[None, :] + 11 * by[:, None]
-        arr = np.kron(tiles, np.ones((8, 8), dtype=np.int64)).astype(np.uint8)
-        payloads.append(encode_baseline(arr))
-    return pd.DataFrame({"doc_id": pdf["doc_id"].astype("int64"),
-                         "payload": payloads})
-
-
-def decode_jpegs_real(df: DataFrame) -> DataFrame:
-    """Distributed REAL baseline-JPEG decode (the lossy-codec twin of
-    decode_pngs_real): synthesize the flat-tile JPEG per doc_id inside
-    mapInPandas, decode it with the pure-NumPy baseline decoder, emit
-    measured geometry + pixel sum (gray replicated to 3 channels by the
-    decode_media_real contract).  Narrow op."""
-    pruned = df.select("doc_id")
-
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            withp = synthesize_jpeg_payloads(pdf)
-            rows = {k: [] for k in
-                    ("doc_id", "width", "height", "n_px", "px_sum")}
-            for doc_id, payload in zip(withp["doc_id"], withp["payload"]):
-                arr = decode_media_real(payload, "image")
-                h, w, _ = arr.shape
-                rows["doc_id"].append(int(doc_id))
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["n_px"].append(w * h)
-                rows["px_sum"].append(int(arr.astype(np.int64).sum()))
-            yield pd.DataFrame(rows).astype("int64")
-
-    return pruned.mapInPandas(gen, schema=IMAGE_DECODE_SCHEMA_DDL)
-
-
-def synthesize_progressive_jpeg_payloads(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Deterministic PROGRESSIVE (SOF2) JPEG fixture per doc_id, with a
-    closed-form pixel payload that is exact through the multi-scan
-    pipeline.  Tile grid: TX = 1 + doc_id % 4 across, TY = 1 + doc_id % 3
-    down; tile (bx, by) carries flat value v = base + 5*bx + 11*by
-    (base = 20 + doc_id % 170) PLUS amp * pattern where
-    pattern = [1,-1,-1,1,1,-1,-1,1] along columns (amp = 1 + doc_id % 17).
-    The pattern is the sign layout of the (u=0, v=4) DCT basis, whose
-    rows/columns all have |A| = sqrt(2)/4, so the FDCT of one tile is
-    EXACTLY two integer coefficients — DC = 8*(v-128) and AC 8*amp at
-    zigzag position 14 — making the successive-approximation +
-    spectral-selection round-trip lossless and px_sum independent of
-    amp (the pattern sums to zero per row):
-    px_sum = 3 * 64 * sum(tiles).  Unlike the flat-tile baseline
-    fixture, every payload exercises nonzero-AC band scans, EOB runs,
-    and both refinement scan kinds."""
-    from ocr_spark.functions.jpeg import encode_progressive
-
-    pattern = np.array([1, -1, -1, 1, 1, -1, -1, 1], dtype=np.int64)
-    payloads = []
-    for doc_id in pdf["doc_id"]:
-        tx = 1 + int(doc_id) % 4
-        ty = 1 + int(doc_id) % 3
-        base = 20 + int(doc_id) % 170
-        amp = 1 + int(doc_id) % 17
-        bx = np.arange(tx, dtype=np.int64)
-        by = np.arange(ty, dtype=np.int64)
-        tiles = base + 5 * bx[None, :] + 11 * by[:, None]
-        arr = np.kron(tiles, np.ones((8, 8), dtype=np.int64))
-        arr = arr + amp * np.tile(pattern, tx)[None, :]
-        payloads.append(encode_progressive(arr.astype(np.uint8)))
-    return pd.DataFrame({"doc_id": pdf["doc_id"].astype("int64"),
-                         "payload": payloads})
-
-
-def decode_progressive_jpegs_real(df: DataFrame) -> DataFrame:
-    """Distributed REAL progressive-JPEG decode (the SOF2 twin of
-    decode_jpegs_real): synthesize the checker-basis progressive JPEG
-    per doc_id inside mapInPandas, decode its DC/AC/refinement scans
-    with the pure-NumPy decoder, emit measured geometry + pixel sum.
-    Narrow op, zero shuffle."""
-    pruned = df.select("doc_id")
-
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            withp = synthesize_progressive_jpeg_payloads(pdf)
-            rows = {k: [] for k in
-                    ("doc_id", "width", "height", "n_px", "px_sum")}
-            for doc_id, payload in zip(withp["doc_id"], withp["payload"]):
-                arr = decode_media_real(payload, "image")
-                h, w, _ = arr.shape
-                rows["doc_id"].append(int(doc_id))
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["n_px"].append(w * h)
-                rows["px_sum"].append(int(arr.astype(np.int64).sum()))
-            yield pd.DataFrame(rows).astype("int64")
-
-    return pruned.mapInPandas(gen, schema=IMAGE_DECODE_SCHEMA_DDL)
-
 
 def _avi_chunk(tag: bytes, body: bytes) -> bytes:
     return tag + len(body).to_bytes(4, "little") + body + (b"\x00" * (len(body) & 1))
@@ -922,8 +588,6 @@ def _decode_mjpeg_avi(b: bytes) -> np.ndarray:
     (n_frames, H, W, 3) uint8.  Non-MJPEG streams inside an AVI fall
     through to the JPEG decoder's own errors; other containers are the
     codec seam."""
-    from ocr_spark.functions.jpeg import decode_baseline
-
     if b[:4] != b"RIFF" or b[8:12] != b"AVI ":
         raise ValueError("not a RIFF/AVI payload")
 
@@ -951,65 +615,6 @@ def _decode_mjpeg_avi(b: bytes) -> np.ndarray:
     return np.stack(frames)
 
 
-AUDIO_DECODE_SCHEMA_DDL = (
-    "doc_id bigint, n_samples bigint, sample_rate bigint, "
-    "n_channels bigint, amp_sum bigint, amp_max bigint"
-)
-
-
-def synthesize_wav_payloads(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Deterministic PCM16 WAV fixture per doc_id: n = 400 + doc_id %
-    100 samples, ch = 1 + doc_id % 2 channels, sample_rate = 8000 +
-    (doc_id % 5) * 1000, channel-c sample value
-    s(t, c) = ((doc_id*13 + 7*t + 31*c) % 201) - 100.  Integer
-    arithmetic end to end, so sum(|s|) and max(|s|) have exact SQL twins
-    (a lateral range join in the oracle)."""
-    payloads = []
-    for doc_id in pdf["doc_id"]:
-        d = int(doc_id)
-        n = 400 + d % 100
-        ch = 1 + d % 2
-        rate = 8000 + (d % 5) * 1000
-        t = np.arange(n, dtype=np.int64)[:, None]
-        c = np.arange(ch, dtype=np.int64)[None, :]
-        s = ((d * 13 + 7 * t + 31 * c) % 201) - 100
-        payloads.append(encode_wav(s.astype(np.int16), rate))
-    return pd.DataFrame({"doc_id": pdf["doc_id"].astype("int64"),
-                         "payload": payloads})
-
-
-def decode_wavs_real(df: DataFrame) -> DataFrame:
-    """Distributed REAL audio decode: synthesize the PCM16 WAV per
-    doc_id inside mapInPandas, decode it with the pure-NumPy RIFF
-    parser, emit measured stream geometry + amplitude stats.  Narrow
-    op, same distribution contract as the image decoders."""
-    pruned = df.select("doc_id")
-
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            withp = synthesize_wav_payloads(pdf)
-            rows = {k: [] for k in ("doc_id", "n_samples", "sample_rate",
-                                    "n_channels", "amp_sum", "amp_max")}
-            for doc_id, payload in zip(withp["doc_id"], withp["payload"]):
-                samples, rate = _decode_wav(payload)
-                a = np.abs(samples.astype(np.int64))
-                rows["doc_id"].append(int(doc_id))
-                rows["n_samples"].append(samples.shape[0])
-                rows["sample_rate"].append(rate)
-                rows["n_channels"].append(samples.shape[1])
-                rows["amp_sum"].append(int(a.sum()))
-                rows["amp_max"].append(int(a.max()))
-            yield pd.DataFrame(rows).astype("int64")
-
-    return pruned.mapInPandas(gen, schema=AUDIO_DECODE_SCHEMA_DDL)
-
-
-G711_DECODE_SCHEMA_DDL = (
-    "doc_id bigint, fmt_code bigint, n_samples bigint, sample_rate bigint, "
-    "n_channels bigint, val_sum bigint, amp_sum bigint, amp_max bigint"
-)
-
-
 def _wav_fmt_code(b: bytes) -> int:
     """Measured codec tag from the payload's own fmt chunk."""
     pos = 12
@@ -1022,153 +627,38 @@ def _wav_fmt_code(b: bytes) -> int:
     raise ValueError("WAV missing fmt chunk")
 
 
-def synthesize_g711_payloads(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Deterministic G.711 WAV fixture per doc_id (even doc_id mu-law
-    fmt 7, odd A-law fmt 6; mono 8 kHz; n = 300 + doc_id % 50).  Every
-    sample value is an EXACT G.711 codeword — the decode-table image at
-    mantissa m = (13*doc_id + 7t) % 16, segment e = (5*doc_id + 3t) % 8,
-    sign (doc_id + t) % 2 — so companding round-trips losslessly and the
-    decoded stream has a closed-form SQL twin (ulaw value
-    ((8m+132)<<e)-132; alaw 16m+8 at e=0 else (16m+264)<<(e-1))."""
-    payloads = []
-    for doc_id in pdf["doc_id"]:
-        d = int(doc_id)
-        n = 300 + d % 50
-        t = np.arange(n, dtype=np.int64)
-        m = (13 * d + 7 * t) % 16
-        e = (5 * d + 3 * t) % 8
-        sgn = np.where((d + t) % 2 == 0, 1, -1)
-        if d % 2 == 0:
-            law = "ulaw"
-            val = ((m * 8 + 132) << e) - 132
-        else:
-            law = "alaw"
-            val = np.where(e == 0, m * 16 + 8,
-                           (m * 16 + 264) << np.maximum(e - 1, 0))
-        s = (sgn * val).astype(np.int16).reshape(-1, 1)
-        payloads.append(encode_wav_g711(s, 8000, law))
-    return pd.DataFrame({"doc_id": pdf["doc_id"].astype("int64"),
-                         "payload": payloads})
+# ---------------------------------------------------------------------------
+# Decode tiers: one closed-form fixture per doc_id, one measure per codec
+# family, and one mapInPandas operator (`decode_tier`) that runs any pair.
+# Each fixture is constructed so a SQL oracle can recompute the measured
+# columns from doc_id alone; the fixture encode stands in for a binary
+# scan column at production scale.
+# ---------------------------------------------------------------------------
 
+IMAGE_DECODE_SCHEMA_DDL = (
+    "doc_id bigint, width bigint, height bigint, n_px bigint, px_sum bigint"
+)
 
-def synthesize_adpcm_payloads(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Deterministic IMA-ADPCM WAV fixture per doc_id: ch = 1 +
-    doc_id % 2 channels, 1 + doc_id % 3 blocks of 65 samples at
-    11025 Hz.  Channel-c starts at ((29*doc_id + 41c) % 201) - 100 and
-    steps by a delta drawn from {-4,-3,-1,0,1,3,4} via
-    (13*doc_id + 7t + 31c) % 7 — exactly the magnitudes representable
-    at step-table index 0 (step=7: 0/1/3/4 plus sign), whose codes all
-    carry index delta -1 (clamped at 0), so the adaptive predictor
-    tracks the waveform EXACTLY and the decode has a closed-form SQL
-    twin (base + running delta sum)."""
-    payloads = []
-    deltas = np.array([-4, -3, -1, 0, 1, 3, 4], dtype=np.int64)
-    for doc_id in pdf["doc_id"]:
-        d = int(doc_id)
-        ch = 1 + d % 2
-        n = 65 * (1 + d % 3)
-        t = np.arange(n, dtype=np.int64)[:, None]
-        c = np.arange(ch, dtype=np.int64)[None, :]
-        dl = deltas[(13 * d + 7 * t + 31 * c) % 7]
-        dl[0, :] = 0                    # t=0 is the base sample
-        base = ((29 * d + 41 * c) % 201) - 100
-        s = (base + dl.cumsum(axis=0)).astype(np.int16)
-        payloads.append(encode_wav_adpcm(s, 11025, 65))
-    return pd.DataFrame({"doc_id": pdf["doc_id"].astype("int64"),
-                         "payload": payloads})
+GIF_DECODE_SCHEMA_DDL = (
+    "doc_id bigint, width bigint, height bigint, n_px bigint, "
+    "px_sum bigint, pos_sum bigint"
+)
 
+AUDIO_DECODE_SCHEMA_DDL = (
+    "doc_id bigint, n_samples bigint, sample_rate bigint, "
+    "n_channels bigint, amp_sum bigint, amp_max bigint"
+)
 
-def _decode_audio_batch(withp: pd.DataFrame) -> pd.DataFrame:
-    rows = {k: [] for k in ("doc_id", "fmt_code", "n_samples", "sample_rate",
-                            "n_channels", "val_sum", "amp_sum", "amp_max")}
-    for doc_id, payload in zip(withp["doc_id"], withp["payload"]):
-        samples, rate = _decode_wav(payload)
-        s64 = samples.astype(np.int64)
-        rows["doc_id"].append(int(doc_id))
-        rows["fmt_code"].append(_wav_fmt_code(payload))
-        rows["n_samples"].append(samples.shape[0])
-        rows["sample_rate"].append(rate)
-        rows["n_channels"].append(samples.shape[1])
-        rows["val_sum"].append(int(s64.sum()))
-        rows["amp_sum"].append(int(np.abs(s64).sum()))
-        rows["amp_max"].append(int(np.abs(s64).max()))
-    return pd.DataFrame(rows).astype("int64")
-
-
-def decode_g711_wavs_real(df: DataFrame) -> DataFrame:
-    """Distributed REAL G.711 decode (mu-law + A-law WAV): synthesize
-    the companded payload per doc_id inside mapInPandas, decode through
-    the full RIFF walk + 256-entry expansion LUTs, emit measured
-    geometry + signed/absolute amplitude stats (val_sum catches sign
-    bugs the abs stats would mask)."""
-    pruned = df.select("doc_id")
-
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield _decode_audio_batch(synthesize_g711_payloads(pdf))
-
-    return pruned.mapInPandas(gen, schema=G711_DECODE_SCHEMA_DDL)
-
-
-def decode_adpcm_wavs_real(df: DataFrame) -> DataFrame:
-    """Distributed REAL IMA-ADPCM decode: synthesize the block-coded
-    payload per doc_id inside mapInPandas, decode the sequential
-    adaptive predictor per independently-headered block, emit measured
-    geometry + amplitude stats."""
-    pruned = df.select("doc_id")
-
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield _decode_audio_batch(synthesize_adpcm_payloads(pdf))
-
-    return pruned.mapInPandas(gen, schema=G711_DECODE_SCHEMA_DDL)
-
+G711_DECODE_SCHEMA_DDL = (
+    "doc_id bigint, fmt_code bigint, n_samples bigint, sample_rate bigint, "
+    "n_channels bigint, val_sum bigint, amp_sum bigint, amp_max bigint"
+)
 
 MP3_DECODE_SCHEMA_DDL = (
     "doc_id bigint, n_frames bigint, sample_rate bigint, "
     "bitrate_kbps_sum bigint, n_samples bigint, crc_frames bigint, "
     "resv_sum bigint, scf_sum bigint, pcm_abs_q bigint"
 )
-
-
-def decode_mp3s_real(df: DataFrame) -> DataFrame:
-    """Distributed REAL MPEG-1 Layer III bitstream decode (round 5,
-    narrowing the perceptual-audio seam): synthesize the framed mp3 per
-    doc_id inside mapInPandas (ocr_spark/functions/mp3.py — silent
-    long-block granules, VBR frame sizes, CRC-protected side info on
-    even docs, a REAL bit-reservoir layout), then walk/validate/decode
-    it: sync + header fields, CRC-16 check, side info, reservoir
-    reconstruction, fixed-width scalefactor fields, part2_3_length
-    bit-exact accounting, requantize -> alias-reduce -> IMDCT ->
-    overlap-add -> matrixing on the (exactly-zero) spectrum.  Emits
-    measured geometry + scalefactor/reservoir sums + quantized PCM
-    energy (exactly 0 for the silent fixtures — computed, not assumed).
-    Spectral Huffman tables and the synthesis D-window remain the
-    documented seams (mp3.py module docstring)."""
-    pruned = df.select("doc_id")
-
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ocr_spark.functions.mp3 import decode_mp3, encode_mp3_silence
-
-        for pdf in it:
-            rows = {k: [] for k in (
-                "doc_id", "n_frames", "sample_rate", "bitrate_kbps_sum",
-                "n_samples", "crc_frames", "resv_sum", "scf_sum",
-                "pcm_abs_q",
-            )}
-            for doc_id in pdf["doc_id"]:
-                r = decode_mp3(encode_mp3_silence(int(doc_id)))
-                rows["doc_id"].append(int(doc_id))
-                for k in ("n_frames", "sample_rate", "bitrate_kbps_sum",
-                          "n_samples", "crc_frames", "resv_sum", "scf_sum"):
-                    rows[k].append(int(r[k]))
-                rows["pcm_abs_q"].append(
-                    int(round(float(np.abs(r["pcm"]).sum()) * 1e6))
-                )
-            yield pd.DataFrame(rows).astype("int64")
-
-    return pruned.mapInPandas(gen, schema=MP3_DECODE_SCHEMA_DDL)
-
 
 OGG_DECODE_SCHEMA_DDL = (
     "doc_id bigint, n_pages bigint, n_packets bigint, "
@@ -1178,49 +668,171 @@ OGG_DECODE_SCHEMA_DDL = (
     "n_audio_packets bigint, audio_bytes_sum bigint, granule_last bigint"
 )
 
-
-def decode_oggs_real(df: DataFrame) -> DataFrame:
-    """Distributed REAL Ogg container decode (round 5, narrowing the
-    remaining perceptual-audio seam to Vorbis spectral tables):
-    synthesize the Vorbis-framed ogg stream per doc_id inside
-    mapInPandas (ocr_spark/functions/ogg.py — cross-page packets forced
-    by a small lacing cap), then walk it for real: per-page RFC 3533
-    CRC-32 validation, sequence-continuity and continuation-flag
-    handshakes, lacing-value packet reassembly (255 runs, 0-lacing
-    terminators, page-spanning packets), Vorbis ident + comment header
-    parse, and byte-exact opaque accounting of the seam packets.  The
-    Vorbis codebook/floor/residue path is the documented seam
-    (ogg.py:decode_vorbis_audio)."""
-    pruned = df.select("doc_id")
-
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ocr_spark.functions.ogg import (
-            decode_ogg_stream, encode_ogg_vorbis_fixture)
-
-        cols = ("n_pages", "n_packets", "spanning_packets", "serial",
-                "channels", "sample_rate", "bitrate_nominal",
-                "vendor_len", "n_comments", "comment_bytes",
-                "setup_bytes", "n_audio_packets", "audio_bytes_sum",
-                "granule_last")
-        for pdf in it:
-            rows = {k: [] for k in ("doc_id",) + cols}
-            for doc_id in pdf["doc_id"]:
-                r = decode_ogg_stream(encode_ogg_vorbis_fixture(int(doc_id)))
-                rows["doc_id"].append(int(doc_id))
-                for k in cols:
-                    rows[k].append(int(r[k]))
-            yield pd.DataFrame(rows).astype("int64")
-
-    return pruned.mapInPandas(gen, schema=OGG_DECODE_SCHEMA_DDL)
-
-
 VIDEO_DECODE_SCHEMA_DDL = (
     "doc_id bigint, n_frames bigint, width bigint, height bigint, "
     "px_sum_all bigint"
 )
 
 
-def synthesize_avi_payloads(pdf: pd.DataFrame) -> pd.DataFrame:
+def _columns(schema: str) -> list[str]:
+    return [field.split()[0] for field in schema.split(",")]
+
+
+def _flat_tiles(tx: int, ty: int, base: int) -> np.ndarray:
+    """(8*ty, 8*tx) int64 grid of flat 8x8 tiles, tile (bx, by) value
+    base + 5*bx + 11*by — the exactly-round-tripping JPEG fixture body."""
+    bx = np.arange(tx, dtype=np.int64)
+    by = np.arange(ty, dtype=np.int64)
+    tiles = base + 5 * bx[None, :] + 11 * by[:, None]
+    return np.kron(tiles, np.ones((8, 8), dtype=np.int64))
+
+
+def bmp_fixture(d: int) -> bytes:
+    """Deterministic BMP fixture per doc_id: width = 8 + doc_id % 16,
+    height = 4 + doc_id % 8, uniform gray fill = doc_id % 256.  Closed
+    form by construction, so a SQL oracle can verify the decoded
+    geometry AND the full pixel payload (px_sum)."""
+    return encode_bmp(np.full((4 + d % 8, 8 + d % 16, 3), d % 256, dtype=np.uint8))
+
+
+def png_fixture(d: int) -> bytes:
+    """Deterministic PNG fixture per doc_id: width = 8 + doc_id % 16,
+    height = 4 + doc_id % 8, per-channel pixel value = (doc_id % 200) + x
+    (a horizontal gradient — base + x <= 221, no uint8 wrap), row filter
+    type cycling 0..4 so every unfilter path runs.  px_sum has the
+    closed form 3 * h * (w*base + w*(w-1)/2) a SQL oracle can verify."""
+    w, h, base = 8 + d % 16, 4 + d % 8, d % 200
+    row = (base + np.arange(w, dtype=np.int64)) % 256
+    arr = np.repeat(row[None, :, None], h, axis=0).repeat(3, axis=2)
+    return encode_png(arr.astype(np.uint8), filters="cycle")
+
+
+def gif_fixture(d: int) -> bytes:
+    """Deterministic GIF fixture per doc_id: w = 8 + doc_id % 16,
+    h = 4 + doc_id % 8, 64-entry grayscale palette (4i,4i,4i), pixel
+    index (base + x + 7*y) % 64 with base = doc_id % 64 — the 7*y term
+    makes rows DIFFER so the position-weighted sum catches interlace
+    reordering bugs.  Odd doc_ids are written INTERLACED; doc_id % 3
+    == 0 uses a 128-entry dictionary cap so the LZW clear-code reset
+    path runs on a third of the corpus."""
+    w, h, base = 8 + d % 16, 4 + d % 8, d % 64
+    idx = ((base + np.arange(w)[None, :] + 7 * np.arange(h)[:, None])
+           % 64).astype(np.uint8)
+    pal = np.arange(64, dtype=np.uint8)[:, None].repeat(3, 1) * 4
+    return encode_gif(idx, pal, interlace=bool(d % 2),
+                      dict_cap=128 if d % 3 == 0 else 4096)
+
+
+def tiff_fixture(d: int) -> bytes:
+    """Deterministic TIFF fixture per doc_id: w = 8 + doc_id % 16,
+    h = 4 + doc_id % 8, channel value (base + x + 7*y + 50*c) % 256 —
+    row- AND channel-varying so the position-weighted oracle catches
+    strip-assembly and predictor bugs.  Compression cycles by doc_id:
+    %3==0 uncompressed, %3==1 PackBits, %3==2 LZW; LZW rows with
+    doc_id %6==5 additionally use the horizontal-differencing
+    predictor.  Strip height 4 forces multi-strip assembly."""
+    w, h, base = 8 + d % 16, 4 + d % 8, d % 200
+    x = np.arange(w)[None, :, None]
+    y = np.arange(h)[:, None, None]
+    c = np.arange(3)[None, None, :]
+    arr = ((base + x + 7 * y + 50 * c) % 256).astype(np.uint8)
+    comp = {0: 1, 1: 32773, 2: 5}[d % 3]
+    pred = 2 if (comp == 5 and d % 6 == 5) else 1
+    return encode_tiff(arr, compression=comp, predictor=pred, rows_per_strip=4)
+
+
+def jpeg_fixture(d: int) -> bytes:
+    """Deterministic baseline-JPEG fixture per doc_id: a grid of flat
+    8x8 tiles, TX = 1 + doc_id % 3 tiles across, TY = 1 + doc_id % 2
+    down, tile (bx, by) value = base + 5*bx + 11*by with
+    base = doc_id % 151 (max 171, no uint8 wrap).  With all-ones quant
+    tables a flat block round-trips EXACTLY through FDCT->quantize->
+    Huffman->dequantize->IDCT (the DC coefficient 8*(v-128) is integral
+    and every AC is 0), so px_sum has the closed form
+    3 * 64 * sum(tiles) a SQL oracle can verify — while the stream
+    itself is a genuine Huffman-coded JPEG exercising DC prediction
+    across blocks, EOB, byte stuffing, and marker parsing."""
+    return encode_baseline(_flat_tiles(1 + d % 3, 1 + d % 2, d % 151).astype(np.uint8))
+
+
+def progressive_jpeg_fixture(d: int) -> bytes:
+    """Deterministic PROGRESSIVE (SOF2) JPEG fixture per doc_id, with a
+    closed-form pixel payload that is exact through the multi-scan
+    pipeline.  Tile grid: TX = 1 + doc_id % 4 across, TY = 1 + doc_id % 3
+    down; tile (bx, by) carries flat value v = base + 5*bx + 11*by
+    (base = 20 + doc_id % 170) PLUS amp * pattern where
+    pattern = [1,-1,-1,1,1,-1,-1,1] along columns (amp = 1 + doc_id % 17).
+    The pattern is the sign layout of the (u=0, v=4) DCT basis, whose
+    rows/columns all have |A| = sqrt(2)/4, so the FDCT of one tile is
+    EXACTLY two integer coefficients — DC = 8*(v-128) and AC 8*amp at
+    zigzag position 14 — making the successive-approximation +
+    spectral-selection round-trip lossless and px_sum independent of
+    amp (the pattern sums to zero per row):
+    px_sum = 3 * 64 * sum(tiles).  Unlike the flat-tile baseline
+    fixture, every payload exercises nonzero-AC band scans, EOB runs,
+    and both refinement scan kinds."""
+    tx = 1 + d % 4
+    pattern = np.array([1, -1, -1, 1, 1, -1, -1, 1], dtype=np.int64)
+    arr = _flat_tiles(tx, 1 + d % 3, 20 + d % 170)
+    arr = arr + (1 + d % 17) * np.tile(pattern, tx)[None, :]
+    return encode_progressive(arr.astype(np.uint8))
+
+
+def wav_fixture(d: int) -> bytes:
+    """Deterministic PCM16 WAV fixture per doc_id: n = 400 + doc_id %
+    100 samples, ch = 1 + doc_id % 2 channels, sample_rate = 8000 +
+    (doc_id % 5) * 1000, channel-c sample value
+    s(t, c) = ((doc_id*13 + 7*t + 31*c) % 201) - 100.  Integer
+    arithmetic end to end, so sum(|s|) and max(|s|) have exact SQL twins
+    (a lateral range join in the oracle)."""
+    t = np.arange(400 + d % 100, dtype=np.int64)[:, None]
+    c = np.arange(1 + d % 2, dtype=np.int64)[None, :]
+    s = ((d * 13 + 7 * t + 31 * c) % 201) - 100
+    return encode_wav(s.astype(np.int16), 8000 + (d % 5) * 1000)
+
+
+def g711_fixture(d: int) -> bytes:
+    """Deterministic G.711 WAV fixture per doc_id (even doc_id mu-law
+    fmt 7, odd A-law fmt 6; mono 8 kHz; n = 300 + doc_id % 50).  Every
+    sample value is an EXACT G.711 codeword — the decode-table image at
+    mantissa m = (13*doc_id + 7t) % 16, segment e = (5*doc_id + 3t) % 8,
+    sign (doc_id + t) % 2 — so companding round-trips losslessly and the
+    decoded stream has a closed-form SQL twin (ulaw value
+    ((8m+132)<<e)-132; alaw 16m+8 at e=0 else (16m+264)<<(e-1))."""
+    t = np.arange(300 + d % 50, dtype=np.int64)
+    m = (13 * d + 7 * t) % 16
+    e = (5 * d + 3 * t) % 8
+    sgn = np.where((d + t) % 2 == 0, 1, -1)
+    if d % 2 == 0:
+        law = "ulaw"
+        val = ((m * 8 + 132) << e) - 132
+    else:
+        law = "alaw"
+        val = np.where(e == 0, m * 16 + 8,
+                       (m * 16 + 264) << np.maximum(e - 1, 0))
+    return encode_wav_g711((sgn * val).astype(np.int16).reshape(-1, 1), 8000, law)
+
+
+def adpcm_fixture(d: int) -> bytes:
+    """Deterministic IMA-ADPCM WAV fixture per doc_id: ch = 1 +
+    doc_id % 2 channels, 1 + doc_id % 3 blocks of 65 samples at
+    11025 Hz.  Channel-c starts at ((29*doc_id + 41c) % 201) - 100 and
+    steps by a delta drawn from {-4,-3,-1,0,1,3,4} via
+    (13*doc_id + 7t + 31c) % 7 — exactly the magnitudes representable
+    at step-table index 0 (step=7: 0/1/3/4 plus sign), whose codes all
+    carry index delta -1 (clamped at 0), so the adaptive predictor
+    tracks the waveform EXACTLY and the decode has a closed-form SQL
+    twin (base + running delta sum)."""
+    deltas = np.array([-4, -3, -1, 0, 1, 3, 4], dtype=np.int64)
+    t = np.arange(65 * (1 + d % 3), dtype=np.int64)[:, None]
+    c = np.arange(1 + d % 2, dtype=np.int64)[None, :]
+    dl = deltas[(13 * d + 7 * t + 31 * c) % 7]
+    dl[0, :] = 0                        # t=0 is the base sample
+    base = ((29 * d + 41 * c) % 201) - 100
+    return encode_wav_adpcm((base + dl.cumsum(axis=0)).astype(np.int16), 11025, 65)
+
+
+def avi_fixture(d: int) -> bytes:
     """Deterministic MJPEG-AVI fixture per doc_id: F = 1 + doc_id % 4
     flat-tile JPEG frames (same tile grid as the JPEG fixture but
     base = doc_id % 100 and frame f shifts every tile by 17*f; max
@@ -1228,52 +840,13 @@ def synthesize_avi_payloads(pdf: pd.DataFrame) -> pd.DataFrame:
     container with hdrl/movi/idx1.  Each frame round-trips exactly
     (flat blocks + unit quant tables), so the total pixel sum has a
     closed form over (tiles x frames) a SQL oracle can verify."""
-    from ocr_spark.functions.jpeg import encode_baseline
-
-    payloads = []
-    for doc_id in pdf["doc_id"]:
-        d = int(doc_id)
-        tx, ty = 1 + d % 3, 1 + d % 2
-        base = d % 100
-        nf = 1 + d % 4
-        frames = []
-        for f in range(nf):
-            bx = np.arange(tx, dtype=np.int64)
-            by = np.arange(ty, dtype=np.int64)
-            tiles = base + 5 * bx[None, :] + 11 * by[:, None] + 17 * f
-            arr = np.kron(tiles, np.ones((8, 8), dtype=np.int64)).astype(np.uint8)
-            frames.append(encode_baseline(arr))
-        payloads.append(encode_mjpeg_avi(frames, fps=10, w=8 * tx, h=8 * ty))
-    return pd.DataFrame({"doc_id": pdf["doc_id"].astype("int64"),
-                         "payload": payloads})
+    tx, ty = 1 + d % 3, 1 + d % 2
+    frames = [encode_baseline(_flat_tiles(tx, ty, d % 100 + 17 * f).astype(np.uint8))
+              for f in range(1 + d % 4)]
+    return encode_mjpeg_avi(frames, fps=10, w=8 * tx, h=8 * ty)
 
 
-def decode_videos_real(df: DataFrame) -> DataFrame:
-    """Distributed REAL video decode (MJPEG AVI): synthesize the
-    container per doc_id inside mapInPandas, walk the RIFF tree and
-    decode every frame with the pure-NumPy baseline JPEG decoder, emit
-    frame count + geometry + total pixel sum.  Narrow op."""
-    pruned = df.select("doc_id")
-
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            withp = synthesize_avi_payloads(pdf)
-            rows = {k: [] for k in ("doc_id", "n_frames", "width",
-                                    "height", "px_sum_all")}
-            for doc_id, payload in zip(withp["doc_id"], withp["payload"]):
-                vid = decode_media_real(payload, "video")
-                nf, h, w, _ = vid.shape
-                rows["doc_id"].append(int(doc_id))
-                rows["n_frames"].append(nf)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["px_sum_all"].append(int(vid.astype(np.int64).sum()))
-            yield pd.DataFrame(rows).astype("int64")
-
-    return pruned.mapInPandas(gen, schema=VIDEO_DECODE_SCHEMA_DDL)
-
-
-def synthesize_mixed_payloads(pdf: pd.DataFrame) -> pd.DataFrame:
+def mixed_fixture(d: int) -> bytes:
     """Mixed-format, partially-POISONED payload fixture: per doc_id the
     format cycles BMP / PNG / JPEG (each with the same closed-form
     geometry as its dedicated fixture), and every doc_id % 10 == 7
@@ -1284,33 +857,113 @@ def synthesize_mixed_payloads(pdf: pd.DataFrame) -> pd.DataFrame:
     closed-form oracle is unchanged while the envelope also covers
     multi-scan streams — including truncated-progressive poison
     (doc_id % 30 == 17)."""
-    from ocr_spark.functions.jpeg import encode_baseline, encode_progressive
+    if d % 3 == 0:
+        p = bmp_fixture(d)
+    elif d % 3 == 1:
+        p = png_fixture(d)
+    elif d % 6 == 5:
+        tiles = _flat_tiles(1 + d % 3, 1 + d % 2, d % 151)
+        p = encode_progressive(tiles.astype(np.uint8))
+    else:
+        p = jpeg_fixture(d)
+    return p[:25] if d % 10 == 7 else p
 
-    payloads = []
-    for doc_id in pdf["doc_id"]:
-        d = int(doc_id)
-        kind = d % 3
-        if kind == 0:
-            w, h, fill = 8 + d % 16, 4 + d % 8, d % 256
-            arr = np.full((h, w, 3), fill, dtype=np.uint8)
-            p = encode_bmp(arr)
-        elif kind == 1:
-            w, h, base = 8 + d % 16, 4 + d % 8, d % 200
-            row = (base + np.arange(w, dtype=np.int64)) % 256
-            arr = np.repeat(row[None, :, None], h, axis=0).repeat(3, axis=2)
-            p = encode_png(arr.astype(np.uint8), filters="cycle")
-        else:
-            tx, ty, base = 1 + d % 3, 1 + d % 2, d % 151
-            bx = np.arange(tx, dtype=np.int64)
-            by = np.arange(ty, dtype=np.int64)
-            tiles = base + 5 * bx[None, :] + 11 * by[:, None]
-            arr = np.kron(tiles, np.ones((8, 8), dtype=np.int64)).astype(np.uint8)
-            p = encode_progressive(arr) if d % 6 == 5 else encode_baseline(arr)
-        if d % 10 == 7:
-            p = p[:25]
-        payloads.append(p)
-    return pd.DataFrame({"doc_id": pdf["doc_id"].astype("int64"),
-                         "payload": payloads})
+
+def _image_measure(b: bytes) -> tuple:
+    """(width, height, n_px, px_sum) of a decoded raster image."""
+    arr = decode_media_real(b, "image")
+    h, w = arr.shape[:2]
+    return w, h, w * h, int(arr.astype(np.int64).sum())
+
+
+def _image_pos_measure(b: bytes) -> tuple:
+    """The image measure plus pos_sum, the pixel sum weighted by raster
+    position — row-order-sensitive, so a deinterlace or strip-assembly
+    bug cannot hash-match."""
+    arr = decode_media_real(b, "image")
+    h, w = arr.shape[:2]
+    px = arr.astype(np.int64)
+    weights = np.arange(h * w, dtype=np.int64).reshape(h, w)
+    return w, h, w * h, int(px.sum()), int((px.sum(axis=2) * weights).sum())
+
+
+def _wav_measure(b: bytes) -> tuple:
+    """(n_samples, sample_rate, n_channels, amp_sum, amp_max)."""
+    samples, rate = _decode_wav(b)
+    a = np.abs(samples.astype(np.int64))
+    return samples.shape[0], rate, samples.shape[1], int(a.sum()), int(a.max())
+
+
+def _wav_codec_measure(b: bytes) -> tuple:
+    """The WAV measure plus the payload's own fmt code and the signed
+    sample sum val_sum (it catches sign bugs the abs stats would mask)."""
+    samples, rate = _decode_wav(b)
+    s64 = samples.astype(np.int64)
+    return (_wav_fmt_code(b), samples.shape[0], rate, samples.shape[1],
+            int(s64.sum()), int(np.abs(s64).sum()), int(np.abs(s64).max()))
+
+
+def _mp3_measure(b: bytes) -> tuple:
+    """Frame geometry, scalefactor/reservoir sums and the quantized PCM
+    energy pcm_abs_q (exactly 0 for the silent fixtures — computed from
+    the decoded PCM, not assumed)."""
+    r = decode_mp3(b)
+    return (*(int(r[k]) for k in _columns(MP3_DECODE_SCHEMA_DDL)[1:-1]),
+            int(round(float(np.abs(r["pcm"]).sum()) * 1e6)))
+
+
+def _ogg_measure(b: bytes) -> tuple:
+    """Page/packet counters and Vorbis header fields of an ogg stream."""
+    r = decode_ogg_stream(b)
+    return tuple(int(r[k]) for k in _columns(OGG_DECODE_SCHEMA_DDL)[1:])
+
+
+def _video_measure(b: bytes) -> tuple:
+    """(n_frames, width, height, px_sum_all) of a decoded video."""
+    vid = decode_media_real(b, "video")
+    nf, h, w, _ = vid.shape
+    return nf, w, h, int(vid.astype(np.int64).sum())
+
+
+class DecodeTier(NamedTuple):
+    fixture: Callable[[int], bytes]
+    measure: Callable[[bytes], tuple]
+    schema: str
+
+
+# Tier name -> closed-form fixture, measure, output schema.  mp3 and ogg
+# fixtures live next to their codecs (functions/mp3.py, functions/ogg.py).
+DECODE_TIERS: dict[str, DecodeTier] = {
+    "bmp": DecodeTier(bmp_fixture, _image_measure, IMAGE_DECODE_SCHEMA_DDL),
+    "png": DecodeTier(png_fixture, _image_measure, IMAGE_DECODE_SCHEMA_DDL),
+    "gif": DecodeTier(gif_fixture, _image_pos_measure, GIF_DECODE_SCHEMA_DDL),
+    "tiff": DecodeTier(tiff_fixture, _image_pos_measure, GIF_DECODE_SCHEMA_DDL),
+    "jpeg": DecodeTier(jpeg_fixture, _image_measure, IMAGE_DECODE_SCHEMA_DDL),
+    "jpeg_progressive": DecodeTier(
+        progressive_jpeg_fixture, _image_measure, IMAGE_DECODE_SCHEMA_DDL),
+    "wav": DecodeTier(wav_fixture, _wav_measure, AUDIO_DECODE_SCHEMA_DDL),
+    "g711": DecodeTier(g711_fixture, _wav_codec_measure, G711_DECODE_SCHEMA_DDL),
+    "adpcm": DecodeTier(adpcm_fixture, _wav_codec_measure, G711_DECODE_SCHEMA_DDL),
+    "mp3": DecodeTier(encode_mp3_silence, _mp3_measure, MP3_DECODE_SCHEMA_DDL),
+    "ogg": DecodeTier(encode_ogg_vorbis_fixture, _ogg_measure, OGG_DECODE_SCHEMA_DDL),
+    "avi": DecodeTier(avi_fixture, _video_measure, VIDEO_DECODE_SCHEMA_DDL),
+}
+
+
+def decode_tier(df: DataFrame, tier: str) -> DataFrame:
+    """Distributed REAL decode of one DECODE_TIERS tier: mapInPandas over
+    (doc_id) rows — synthesize each doc's fixture, decode it with the
+    pure-NumPy codec, and emit the tier's measured columns as bigint.
+    Narrow op, zero shuffle."""
+    fixture, measure, schema = DECODE_TIERS[tier]
+    cols = _columns(schema)
+
+    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            rows = [(d, *measure(fixture(d))) for d in map(int, pdf["doc_id"])]
+            yield pd.DataFrame(rows, columns=cols).astype("int64")
+
+    return df.select("doc_id").mapInPandas(gen, schema=schema)
 
 
 BINARY_DECODE_SCHEMA_DDL = (
@@ -1328,34 +981,25 @@ def decode_binary_images(df: DataFrame) -> DataFrame:
     status column; decoder exception classes are pinned to
     ValueError/NotImplementedError by the mutation fuzz in
     tests/test_jpeg.py).  Narrow op, zero shuffle."""
-    pruned = df.select("doc_id", "payload")
+    cols = _columns(BINARY_DECODE_SCHEMA_DDL)
+    ints = [c for c in cols if c not in ("status", "err")]
 
     def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            rows = {k: [] for k in ("doc_id", "status", "err", "width",
-                                    "height", "n_px", "px_sum")}
+            rows = []
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                rows["doc_id"].append(int(doc_id))
                 try:
-                    arr = decode_media_real(bytes(payload), "image")
-                    h, w = arr.shape[:2]
-                    rows["status"].append("ok")
-                    rows["err"].append(None)
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["n_px"].append(w * h)
-                    rows["px_sum"].append(int(arr.astype(np.int64).sum()))
+                    rows.append((doc_id, "ok", None,
+                                 *_image_measure(bytes(payload))))
                 except (ValueError, NotImplementedError) as ex:
-                    rows["status"].append("error")
-                    rows["err"].append(f"{type(ex).__name__}: {ex}"[:200])
-                    for k in ("width", "height", "n_px", "px_sum"):
-                        rows[k].append(0)
-            out = pd.DataFrame(rows)
-            for k in ("doc_id", "width", "height", "n_px", "px_sum"):
-                out[k] = out[k].astype("int64")
+                    err = f"{type(ex).__name__}: {ex}"[:200]
+                    rows.append((doc_id, "error", err, 0, 0, 0, 0))
+            out = pd.DataFrame(rows, columns=cols)
+            out[ints] = out[ints].astype("int64")
             yield out
 
-    return pruned.mapInPandas(gen, schema=BINARY_DECODE_SCHEMA_DDL)
+    return df.select("doc_id", "payload").mapInPandas(
+        gen, schema=BINARY_DECODE_SCHEMA_DDL)
 
 
 def decode_media_features(df: DataFrame) -> DataFrame:

@@ -197,6 +197,8 @@ def read_packets(data: bytes):
                 raise OggError("first page missing BOS flag")
         elif pg["serial"] != serial:
             raise OggError("multiplexed streams not supported")
+        elif pg["flags"] & 0x02:
+            raise OggError("BOS flag on a page after the first")
         if pg["seq"] != expect_seq:
             raise OggError(f"page sequence gap: {expect_seq} -> {pg['seq']}")
         expect_seq += 1

@@ -14,8 +14,7 @@ Scale design (10^12-turn framing, BASELINE.json north_rule):
     mega-conversations split into bounded slices.  No pre-scan of the
     input — the job reads it exactly once.  Safe because the hot path is
     a pure per-turn map (no per-conversation aggregation), SURVEY.md
-    §4.3.  The legacy detect-and-salt path (detect_hot_buckets +
-    with_salt) remains for diagnostics, with optional sampling;
+    §4.3;
   - everything before/after the single repartition is narrow; AQE
     handles post-shuffle coalescing.
 """
@@ -25,12 +24,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from ocr_spark.constants import (
-    DEFAULT_N_BUCKETS,
-    HOT_FACTOR,
-    K_SALT,
-    SALT_SLICE_TURNS,
-)
+from ocr_spark.constants import DEFAULT_N_BUCKETS, SALT_SLICE_TURNS
 from ocr_spark.operators.extract_op import extract_turns
 from ocr_spark.plans.lineage import completed_buckets, lineage_from_output
 
@@ -48,48 +42,6 @@ def _udf_stage_partitions(df: DataFrame) -> int:
 def with_bucket(df: DataFrame, n_buckets: int = DEFAULT_N_BUCKETS) -> DataFrame:
     return df.withColumn(
         "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets))
-    )
-
-
-def detect_hot_buckets(
-    df: DataFrame, sample_fraction: float | None = None
-) -> list[int]:
-    """DIAGNOSTIC-ONLY skew probe: buckets with > HOT_FACTOR * mean rows.
-
-    Not on the job's hot path (plan_extract/run_extract use zero-prescan
-    slice salting) because even though it collects at most n_buckets tiny
-    rows, it costs one extra scan + shuffle of the input before the real
-    job starts — at 100 TB that doubles input I/O.  For ad-hoc skew
-    triage on large inputs pass `sample_fraction` (e.g. 0.001): relative
-    bucket weights survive sampling, so the HOT_FACTOR ratio test is
-    unchanged while the shuffled volume shrinks 1000x.
-    """
-    if sample_fraction is not None:
-        df = df.sample(fraction=sample_fraction, seed=7)
-    counts = df.groupBy("bucket").count().collect()
-    if not counts:
-        return []
-    mean = sum(r["count"] for r in counts) / len(counts)
-    return [r["bucket"] for r in counts if r["count"] > HOT_FACTOR * mean]
-
-
-def with_salt(df: DataFrame, hot: list[int], k_salt: int = K_SALT) -> DataFrame:
-    """Legacy detect-based salting (diagnostic companion to
-    detect_hot_buckets): salt = pmod(xxhash64(conv_id, turn_idx), K) for
-    hot buckets only.  The hot path uses with_slice_salt instead.
-
-    Cold buckets get salt 0 so their conversations stay whole; hot
-    buckets trade within-partition conversation completeness for balance
-    (re-established at read time by the ordering window).
-    """
-    if not hot:
-        return df.withColumn("salt", F.lit(0))
-    return df.withColumn(
-        "salt",
-        F.when(
-            F.col("bucket").isin([int(b) for b in hot]),
-            F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(k_salt)),
-        ).otherwise(F.lit(0)),
     )
 
 

@@ -21,6 +21,7 @@ identical idempotence contract and is fully tested.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql.streaming import StreamingQuery
 
 ICEBERG_PREFIX = "iceberg:"
 
@@ -52,6 +53,26 @@ def write_lineage(df: DataFrame, dest: str) -> None:
         df.writeTo(dest[len(ICEBERG_PREFIX):]).append()
         return
     df.write.mode("append").parquet(dest)
+
+
+def start_parquet_sink(
+    df: DataFrame,
+    output_path: str,
+    checkpoint_path: str,
+    available_now: bool,
+) -> StreamingQuery:
+    """Start an append-mode parquet sink for a streaming frame.  Spark's
+    checkpoint makes it exactly-once across restarts; `available_now`
+    drains the input present at start and stops."""
+    writer = (
+        df.writeStream.format("parquet")
+        .option("path", output_path)
+        .option("checkpointLocation", checkpoint_path)
+        .outputMode("append")
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def read_output(spark, dest: str) -> DataFrame:

@@ -4,7 +4,8 @@ The batch north rule is resume-from-checkpoint batch (SURVEY.md §2.11),
 but the same per-turn operator runs unchanged as a continuous pipeline:
 `readStream` over an arriving-files transcripts directory →
 `extract_turns` (stateless mapInPandas — the whole G1-G26 pipeline) →
-`writeStream` parquet sink with Spark's own checkpointing.
+the parquet sink (`sinks.writers.start_parquet_sink`) with Spark's own
+checkpointing.
 
 Design notes (scale):
   - The extractor is a pure per-row map, so the streaming query is
@@ -25,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ocr_spark.operators.extract_op import extract_turns
+from ocr_spark.sinks.writers import start_parquet_sink
 from ocr_spark.sources.transcripts import TRANSCRIPTS_SCHEMA
 
 
@@ -77,15 +79,7 @@ def run_turn_rate_stream(
             "n_turns",
         )
     )
-    writer = (
-        agg.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_parquet_sink(agg, output_path, checkpoint_path, available_now)
 
 
 def run_extract_stream(
@@ -99,15 +93,7 @@ def run_extract_stream(
     """Start the streaming extraction query (returns the live query)."""
     turns = stream_transcripts(spark, input_path, max_files_per_trigger)
     extracted = extract_turns(turns)
-    writer = (
-        extracted.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_parquet_sink(extracted, output_path, checkpoint_path, available_now)
 
 
 def run_enrich_stream(
@@ -129,15 +115,7 @@ def run_enrich_stream(
     ingest contract never drops data because a dim row is late)."""
     turns = stream_transcripts(spark, input_path, max_files_per_trigger)
     enriched = turns.join(dim_df, "conv_id", "left")
-    writer = (
-        enriched.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_parquet_sink(enriched, output_path, checkpoint_path, available_now)
 
 
 def run_dedup_stream(
@@ -176,15 +154,7 @@ def run_dedup_stream(
         .dropDuplicatesWithinWatermark(["text_md5"])
         .drop("text_md5")
     )
-    writer = (
-        deduped.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_parquet_sink(deduped, output_path, checkpoint_path, available_now)
 
 
 DECON_GRAM_WORDS = 13
@@ -265,15 +235,7 @@ def run_decontam_stream(
         )
         .withColumn("contaminated", F.col("n_hits") > 0)
     )
-    writer = (
-        flagged.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_parquet_sink(flagged, output_path, checkpoint_path, available_now)
 
 
 def run_quality_gate_stream(
@@ -353,15 +315,7 @@ def run_quality_gate_stream(
         (pass_wc & pass_mwl & pass_sym & pass_bul & pass_ell & pass_alpha)
         .alias("pass_all"),
     )
-    writer = (
-        gated.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_parquet_sink(gated, output_path, checkpoint_path, available_now)
 
 
 DSIR_BUCKETS = 256
@@ -472,12 +426,4 @@ def run_importance_stream(
     scored = keyed.withColumn(
         "kept", gate < F.least(F.col("avg_ppm"), F.lit(1000000))
     )
-    writer = (
-        scored.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_parquet_sink(scored, output_path, checkpoint_path, available_now)

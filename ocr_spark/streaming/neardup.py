@@ -41,6 +41,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ocr_spark.sinks.writers import start_parquet_sink
+
 # cross-engine MinHash constants — MUST mirror __spark_entry__ (cited
 # there; duplicated because ocr_spark.zip ships without the repo root)
 _M31 = 2_147_483_647
@@ -191,12 +193,4 @@ def run_minhash_neardup_stream(
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-    writer = (
-        pairs.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_parquet_sink(pairs, output_path, checkpoint_path, available_now)

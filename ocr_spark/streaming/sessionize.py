@@ -28,6 +28,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ocr_spark.sinks.writers import start_parquet_sink
 from ocr_spark.streaming.extract_stream import stream_transcripts
 
 SESSION_SCHEMA = (
@@ -99,12 +100,4 @@ def run_sessionize_stream(
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-    writer = (
-        sessions.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_parquet_sink(sessions, output_path, checkpoint_path, available_now)

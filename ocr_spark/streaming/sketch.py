@@ -30,6 +30,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
+from ocr_spark.sinks.writers import start_parquet_sink
+
 HLL_M = 64                              # registers (p = 6)
 HLL_S = 1 << 30                         # fixed-point scale for Z
 _ALPHA_NUM, _ALPHA_DEN = 709, 1000      # alpha_64 = 0.709
@@ -123,15 +125,7 @@ def run_hll_register_stream(
         )
     )
 
-    writer = (
-        regs.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_parquet_sink(regs, output_path, checkpoint_path, available_now)
 
 
 # ---------------------------------------------------------------------------
@@ -217,12 +211,4 @@ def run_countmin_cell_stream(
         )
     )
 
-    writer = (
-        cells.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_parquet_sink(cells, output_path, checkpoint_path, available_now)

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ocr_spark.sinks.writers import start_parquet_sink
 from ocr_spark.streaming.extract_stream import stream_transcripts
 
 SUMMARY_SCHEMA = (
@@ -88,12 +89,4 @@ def run_conversation_assembly_stream(
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-    writer = (
-        summaries.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_parquet_sink(summaries, output_path, checkpoint_path, available_now)

@@ -24,10 +24,10 @@ from ocr_spark.functions.audio import (
 )
 from ocr_spark.functions.multimodal import (
     _decode_wav,
+    adpcm_fixture,
     encode_wav_adpcm,
     encode_wav_g711,
-    synthesize_adpcm_payloads,
-    synthesize_g711_payloads,
+    g711_fixture,
 )
 
 EXACT_DELTAS = np.array([-4, -3, -1, 0, 1, 3, 4], dtype=np.int64)
@@ -140,12 +140,8 @@ def test_audio_poison_fuzz_exception_envelope():
     payload either decodes or raises exactly (ValueError,
     NotImplementedError) — the P26 poison contract extended to the
     audio tier."""
-    import pandas as pd
-
-    base = pd.DataFrame({"doc_id": [3, 4]})
-    payloads = list(synthesize_g711_payloads(base)["payload"]) + list(
-        synthesize_adpcm_payloads(base)["payload"]
-    )
+    payloads = [g711_fixture(3), g711_fixture(4),
+                adpcm_fixture(3), adpcm_fixture(4)]
     rng = np.random.default_rng(13)
     trials = 0
     for payload in payloads:
@@ -173,11 +169,8 @@ def test_g711_fixture_matches_closed_form():
     """The synthesized fixture really is codeword-exact: decoding the
     payload reproduces the closed-form sample values the SQL oracle
     computes."""
-    import pandas as pd
-
     for d in (6, 7):                    # one alaw doc, one ulaw doc
-        pdf = synthesize_g711_payloads(pd.DataFrame({"doc_id": [d]}))
-        dec, rate = _decode_wav(pdf["payload"][0])
+        dec, rate = _decode_wav(g711_fixture(d))
         n = 300 + d % 50
         t = np.arange(n, dtype=np.int64)
         m = (13 * d + 7 * t) % 16

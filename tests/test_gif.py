@@ -12,10 +12,7 @@ from ocr_spark.functions.gif import (
     lzw_decode,
     lzw_encode,
 )
-from ocr_spark.functions.multimodal import (
-    decode_media_real,
-    synthesize_gif_payloads,
-)
+from ocr_spark.functions.multimodal import decode_media_real, gif_fixture
 
 _PAL64 = np.arange(64, dtype=np.uint8)[:, None].repeat(3, 1) * 4
 _PAL256 = np.arange(256, dtype=np.uint8)[:, None].repeat(3, 1)
@@ -73,14 +70,9 @@ def test_lzw_width_ladder_end_boundary():
 
 
 def test_synthesized_fixture_matches_closed_form():
-    import pandas as pd
-
-    pdf = pd.DataFrame({"doc_id": list(range(24))})
-    withp = synthesize_gif_payloads(pdf)
-    for doc_id, payload in zip(withp["doc_id"], withp["payload"]):
-        d = int(doc_id)
+    for d in range(24):
         w, h, base = 8 + d % 16, 4 + d % 8, d % 64
-        arr = decode_media_real(bytes(payload), "image")
+        arr = decode_media_real(gif_fixture(d), "image")
         assert arr.shape == (h, w, 3)
         want = 4 * ((base + np.arange(w)[None, :] + 7 * np.arange(h)[:, None])
                     % 64)

@@ -1,9 +1,11 @@
 """Multimodal binary-column plumbing (ocr_spark/functions/multimodal.py).
 
-Real decode (pure-NumPy BMP/PPM/PNG — PNG via stdlib zlib inflate +
-NumPy unfiltering) is pinned by round-trip tests; the remaining codec
-seam (jpeg/audio/video) stays an explicit NotImplementedError.  The rest
-pins the Spark plumbing: schema, Arrow binary transport, batch shapes,
+Real decode (pure-NumPy BMP/PPM/PNG/WAV/MJPEG-AVI here; JPEG, GIF, TIFF,
+G.711/ADPCM, mp3 and ogg in their own test files) is pinned by
+round-trip tests; perceptual audio and inter-coded video stay an
+explicit NotImplementedError.  Every DECODE_TIERS entry runs through
+`decode_tier` on Spark against its in-process measure.  The rest pins
+the Spark plumbing: schema, Arrow binary transport, batch shapes,
 determinism, magic sniffing, and empty-payload handling.
 """
 
@@ -12,16 +14,16 @@ import pandas as pd
 import pytest
 
 from ocr_spark.functions.multimodal import (
+    DECODE_TIERS,
     _decode_batch,
     _decode_png,
-    decode_images_real,
+    bmp_fixture,
     decode_media_features,
     decode_media_real,
-    decode_pngs_real,
+    decode_tier,
     encode_bmp,
     encode_png,
-    synthesize_bmp_payloads,
-    synthesize_png_payloads,
+    png_fixture,
     with_binary_payload,
 )
 
@@ -143,10 +145,8 @@ def test_png_rejects_unsupported_shapes():
 
 
 def test_synthesized_png_closed_form():
-    pdf = pd.DataFrame({"doc_id": [0, 7, 137, 4321]})
-    withp = synthesize_png_payloads(pdf)
-    for doc_id, payload in zip(withp.doc_id, withp.payload):
-        arr = decode_media_real(payload, "image")
+    for doc_id in [0, 7, 137, 4321]:
+        arr = decode_media_real(png_fixture(doc_id), "image")
         w, h, base = 8 + doc_id % 16, 4 + doc_id % 8, doc_id % 200
         assert arr.shape == (h, w, 3)
         assert int(arr.astype(np.int64).sum()) == 3 * h * (
@@ -156,7 +156,7 @@ def test_synthesized_png_closed_form():
 
 def test_spark_png_decode_real(spark):
     df = spark.createDataFrame(pd.DataFrame({"doc_id": range(30)}))
-    rows = {r.doc_id: r for r in decode_pngs_real(df).collect()}
+    rows = {r.doc_id: r for r in decode_tier(df, "png").collect()}
     assert len(rows) == 30
     for i in range(30):
         w, h, base = 8 + i % 16, 4 + i % 8, i % 200
@@ -192,17 +192,15 @@ def test_ppm_roundtrip():
 
 
 def test_synthesized_bmp_closed_form():
-    pdf = pd.DataFrame({"doc_id": [0, 7, 300]})
-    withp = synthesize_bmp_payloads(pdf)
-    for doc_id, payload in zip(withp.doc_id, withp.payload):
-        arr = decode_media_real(payload, "image")
+    for doc_id in [0, 7, 300]:
+        arr = decode_media_real(bmp_fixture(doc_id), "image")
         assert arr.shape == (4 + doc_id % 8, 8 + doc_id % 16, 3)
         assert (arr == doc_id % 256).all()
 
 
 def test_spark_image_decode_real(spark):
     df = spark.createDataFrame(pd.DataFrame({"doc_id": range(40)}))
-    rows = {r.doc_id: r for r in decode_images_real(df).collect()}
+    rows = {r.doc_id: r for r in decode_tier(df, "bmp").collect()}
     assert len(rows) == 40
     for i in range(40):
         w, h = 8 + i % 16, 4 + i % 8
@@ -259,3 +257,15 @@ def test_spark_multimodal_roundtrip(spark):
     assert sorted(r.checksum for r in feats2.collect()) == sorted(
         r.checksum for r in rows
     )
+
+
+def test_spark_decode_tier_matches_in_process(spark):
+    """Every DECODE_TIERS entry, run through the one mapInPandas
+    operator, emits exactly (doc_id, *measure(fixture(doc_id))) in its
+    schema's column order."""
+    ids = list(range(20)) + [137, 300, 4321, 99999]
+    df = spark.createDataFrame(pd.DataFrame({"doc_id": ids}))
+    for name, (fixture, measure, _) in DECODE_TIERS.items():
+        got = sorted(tuple(r) for r in decode_tier(df, name).collect())
+        want = sorted((d, *measure(fixture(d))) for d in ids)
+        assert got == want, name

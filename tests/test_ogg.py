@@ -135,6 +135,17 @@ def test_continuation_flag_handshake_enforced():
         read_packets(p0 + p1)
 
 
+def test_bos_flag_after_first_page_rejected():
+    # BOS marks only a stream's first page; a repeat on page 2 is malformed
+    p0 = _emit_page(0x02, 0, 4, 0, [3], b"abc")
+    p1 = _emit_page(0x02 | 0x04, 0, 4, 1, [4], b"defg")
+    with pytest.raises(OggError, match="BOS"):
+        read_packets(p0 + p1)
+    # the same stream without the repeated BOS decodes
+    ok = p0 + _emit_page(0x04, 0, 4, 1, [4], b"defg")
+    assert read_packets(ok)[0] == [b"abc", b"defg"]
+
+
 def test_vorbis_header_parsers():
     pkts, _ = read_packets(encode_ogg_vorbis_fixture(17))
     ident = parse_vorbis_ident(pkts[0])

@@ -15,12 +15,10 @@ import pytest
 from fixtures.gen import gen_transcripts
 from ocr_spark.extract import extract_frame
 from ocr_spark.plans.extract_job import (
-    detect_hot_buckets,
     plan_extract,
     run_extract,
     stable_order,
     with_bucket,
-    with_salt,
     with_slice_salt,
 )
 from ocr_spark.sources.transcripts import transcripts_from_pandas
@@ -86,20 +84,6 @@ def test_parity_with_forced_salting(spark):
         )
     )
     _assert_parity(result, _oracle(pdf))
-
-
-def test_detect_hot_buckets_diagnostic(spark):
-    """The legacy detect+salt probe (off the hot path) still works, with
-    and without sampling."""
-    pdf = gen_transcripts(n_convs=6, seed=3, hot_conv_turns=2000)
-    sdf = with_bucket(transcripts_from_pandas(spark, pdf), 8)
-    hot = detect_hot_buckets(sdf)
-    assert hot, "fixture must produce a hot bucket"
-    # 50% sample keeps the relative bucket weights -> same hot set
-    hot_sampled = detect_hot_buckets(sdf, sample_fraction=0.5)
-    assert set(hot_sampled) == set(hot)
-    salted = with_salt(sdf, hot)
-    assert salted.select("salt").distinct().count() > 1
 
 
 def test_plan_extract_no_prescan(spark, fixture_pdf, tmp_path):

@@ -6,10 +6,7 @@ poison-envelope contract."""
 import numpy as np
 import pytest
 
-from ocr_spark.functions.multimodal import (
-    decode_media_real,
-    synthesize_tiff_payloads,
-)
+from ocr_spark.functions.multimodal import decode_media_real, tiff_fixture
 from ocr_spark.functions.tiff import (
     decode_tiff,
     encode_tiff,
@@ -62,14 +59,9 @@ def test_predictor_differs_on_wire_but_not_decoded():
 
 
 def test_synthesized_fixture_matches_closed_form():
-    import pandas as pd
-
-    pdf = pd.DataFrame({"doc_id": list(range(18))})
-    withp = synthesize_tiff_payloads(pdf)
-    for doc_id, payload in zip(withp["doc_id"], withp["payload"]):
-        d = int(doc_id)
+    for d in range(18):
         w, h, base = 8 + d % 16, 4 + d % 8, d % 200
-        arr = decode_media_real(bytes(payload), "image")
+        arr = decode_media_real(tiff_fixture(d), "image")
         assert arr.shape == (h, w, 3)
         x = np.arange(w)[None, :, None]
         y = np.arange(h)[:, None, None]
