@@ -4875,13 +4875,18 @@ def _q_binary_decode_envelope(spark, sf_dir):
 # never stream length; the drain is one availableNow micro-batch here
 # but the operator is the production continuous path.
 def _q_stream_dedup_drain(spark, sf_dir):
+    import atexit
     import shutil
 
     from ocr_spark.streaming.extract_stream import run_dedup_stream
 
+    # Keyed by pid too: two processes draining the same corpus must not
+    # share (and rmtree) one stream checkpoint.  The returned frame reads
+    # the drained output lazily, so it is removed at exit, not here.
     tag = os.path.basename(sf_dir.rstrip("/"))
-    root = f"/tmp/ocr_spark_q_stream_drain_{tag}"
+    root = f"/tmp/ocr_spark_q_stream_drain_{tag}_{os.getpid()}"
     shutil.rmtree(root, ignore_errors=True)
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
     inp, outp, ckpt = f"{root}/in", f"{root}/out", f"{root}/ckpt"
     base = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("string").alias("conv_id"),

@@ -2,9 +2,9 @@
 
   read -> bucket = pmod(xxhash64(conv_id), B) -> resume anti-join ->
   slice salting -> repartition(bucket, salt)  [the ONE wide op] ->
-  mapInPandas(extract_turns) -> sortWithinPartitions(conv_id, turn_idx)
+  sortWithinPartitions(conv_id, turn_idx) -> mapInPandas(extract_turns)
   -> write parquet partitioned by bucket (dynamic overwrite = idempotent
-  per-bucket re-runs) + lineage rows.
+  per-bucket re-runs) + lineage rows counted inside that same pass.
 
 Scale design (10^12-turn framing, BASELINE.json north_rule):
   - bucketing by hashed conv_id keeps conversations together for
@@ -16,7 +16,9 @@ Scale design (10^12-turn framing, BASELINE.json north_rule):
     a pure per-turn map (no per-conversation aggregation), SURVEY.md
     §4.3;
   - everything before/after the single repartition is narrow; AQE
-    handles post-shuffle coalescing.
+    handles post-shuffle coalescing;
+  - lineage is counted by the UDF into an accumulator while it extracts,
+    so the written output is never read back.
 """
 
 from __future__ import annotations
@@ -26,7 +28,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from ocr_spark.constants import DEFAULT_N_BUCKETS, SALT_SLICE_TURNS
 from ocr_spark.operators.extract_op import extract_turns
-from ocr_spark.plans.lineage import completed_buckets, lineage_from_output
+from ocr_spark.plans.lineage import (
+    completed_buckets,
+    lineage_counts,
+    lineage_from_counts,
+)
 
 
 def _udf_stage_partitions(df: DataFrame) -> int:
@@ -128,7 +134,11 @@ def run_extract(
     num_partitions: int | None = None,
     slice_turns: int = SALT_SLICE_TURNS,
 ) -> dict:
-    """Execute the full job with resume + lineage.  Returns counters."""
+    """Execute the full job with resume + lineage.  Returns counters.
+
+    Two Spark jobs run the extraction and its write (the shuffle, then
+    the UDF + write stage), one more appends the lineage rows.
+    """
     df = with_bucket(df, n_buckets)
     skipped = 0
     if resume:
@@ -138,28 +148,25 @@ def run_extract(
             # resume anti-join (K3): pending = input \ completed buckets
             df = df.join(F.broadcast(done), "bucket", "left_anti")
 
+    # The UDF counts lineage as it extracts.  It runs in the write job's
+    # result stage (below the one Exchange), where Spark applies each
+    # partition's accumulator update exactly once (PLANS.md invariant 6).
+    counts = lineage_counts(spark.sparkContext, n_buckets)
     shuffled = _salted_shuffle(df, salt_hot, slice_turns, num_partitions)
-    out = extract_turns(shuffled).withColumn(
-        "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets))
-    )
+    out = extract_turns(shuffled, counts)
 
     # Idempotent per-bucket writes: dynamic partition overwrite replaces
     # exactly the buckets this run produced (SURVEY §4.3 resume row).
     # Destination routing (iceberg: prefix vs parquet path) lives in
     # sinks/writers.py; both honor the same overwrite contract.
-    from ocr_spark.sinks.writers import read_output, write_extracted, write_lineage
+    from ocr_spark.sinks.writers import write_extracted, write_lineage
 
     write_extracted(out, output_path)
 
-    # Lineage from the written data (single extra columnar scan; the
-    # extraction itself is not recomputed).
-    written = read_output(spark, output_path)
-    if skipped or resume:
-        done = completed_buckets(spark, lineage_path, run_id)
-        if done is not None:
-            written = written.join(F.broadcast(done), "bucket", "left_anti")
-    lin = lineage_from_output(written, run_id)
-    write_lineage(lin, lineage_path)
+    # Lineage for exactly this run's buckets, from the counts above: the
+    # output path is not read back, so earlier runs' buckets there are
+    # never counted.  Raises before appending if rows_in != rows_out.
+    write_lineage(lineage_from_counts(spark, counts.value, run_id), lineage_path)
 
     stats = {
         "buckets_skipped": skipped,

@@ -6,12 +6,20 @@ train_mnist.py:129-132) into the thing a 10^12-turn batch job actually
 needs: a small table recording which (run_id, bucket) units completed,
 with row/block counters, so a re-run resumes from checkpoint via a
 LEFT ANTI join (SURVEY.md §2.7, §7.2 M3).
+
+The counters are collected inside the extraction pass itself: one
+accumulator per run holds an n_buckets x len(COUNTERS) matrix that every
+extraction batch adds to, and `run_extract` turns it into lineage rows.
 """
 
 from __future__ import annotations
 
+from datetime import datetime, timezone
+
+import numpy as np
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
+from pyspark import Accumulator, AccumulatorParam, SparkContext
 from pyspark.sql import DataFrame, SparkSession
 
 LINEAGE_SCHEMA = T.StructType(
@@ -31,12 +39,59 @@ LINEAGE_SCHEMA = T.StructType(
 )
 
 
-def lineage_from_output(out: DataFrame, run_id: str) -> DataFrame:
-    """Aggregate per-bucket counters from the extraction output.
+# Columns of the accumulator matrix: rows_in ... n_error.
+COUNTERS = tuple(LINEAGE_SCHEMA.names[2:9])
 
-    One output row exists per input row (G26 guarantees error isolation,
-    never row loss), so rows_in == rows_out by construction and the
-    counters double as an input audit.
+
+class _MatrixSum(AccumulatorParam):
+    """Element-wise sum of int64 counter matrices.  A batch may send only
+    the rows up to its largest bucket."""
+
+    def zero(self, value: np.ndarray) -> np.ndarray:
+        return np.zeros_like(value)
+
+    def addInPlace(self, value1: np.ndarray, value2: np.ndarray) -> np.ndarray:
+        value1[: len(value2)] += value2
+        return value1
+
+
+def lineage_counts(sc: SparkContext, n_buckets: int) -> Accumulator:
+    """A fresh n_buckets x len(COUNTERS) accumulator for one run."""
+    return sc.accumulator(
+        np.zeros((n_buckets, len(COUNTERS)), np.int64), _MatrixSum()
+    )
+
+
+def lineage_from_counts(
+    spark: SparkSession, counts: np.ndarray, run_id: str
+) -> DataFrame:
+    """One lineage row per bucket that had input rows in this run.
+
+    Raises RuntimeError when a bucket's rows_in (counted on the UDF's
+    input rows) differs from its rows_out (counted on its output frame):
+    G26 promises one output row per input row, never row loss.
+    """
+    rows_in, rows_out = counts[:, 0], counts[:, 1]
+    bad = np.flatnonzero(rows_in != rows_out)
+    if len(bad):
+        raise RuntimeError(
+            f"lineage: rows_in != rows_out in buckets {bad[:10].tolist()}"
+        )
+    finished = datetime.now(timezone.utc)
+    rows = [
+        (run_id, int(b), *map(int, counts[b]), finished, "done")
+        for b in np.flatnonzero(rows_in)
+    ]
+    return spark.createDataFrame(rows, LINEAGE_SCHEMA)
+
+
+def lineage_from_output(out: DataFrame, run_id: str) -> DataFrame:
+    """Aggregate per-bucket counters from a written extraction output.
+
+    The output cannot show the input rows, so rows_in is a copy of
+    rows_out here.  `run_extract` does not use this: it counts both
+    independently in the extraction pass (`lineage_from_counts`).  This
+    scan is the reference those counts are tested against.
     """
     return out.groupBy("bucket").agg(
         F.count(F.lit(1)).alias("rows_out"),

@@ -5,9 +5,13 @@
   - parity is partitioning-invariant (forced salting, few/many
     partitions);
   - resume: second run with lineage present skips completed buckets;
-  - idempotence: re-running a bucket leaves output unchanged.
+  - idempotence: re-running a bucket leaves output unchanged;
+  - lineage: the counts taken inside the extraction pass equal a scan of
+    the written output, cover only the run's own buckets, and cost no
+    extra Spark job.
 """
 
+import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 import pytest
@@ -21,6 +25,13 @@ from ocr_spark.plans.extract_job import (
     with_bucket,
     with_slice_salt,
 )
+from ocr_spark.plans.lineage import (
+    COUNTERS,
+    lineage_from_counts,
+    lineage_from_output,
+    read_lineage,
+)
+from ocr_spark.sinks.writers import read_output
 from ocr_spark.sources.transcripts import transcripts_from_pandas
 
 
@@ -32,6 +43,19 @@ def _oracle(pdf: pd.DataFrame) -> pd.DataFrame:
 def _spark_result(sdf) -> pd.DataFrame:
     pdf = sdf.drop("bucket").toPandas()
     return pdf.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
+
+
+def _lineage(spark, lin_p, run_id) -> pd.DataFrame:
+    # finished_ts is dropped: test_resume_partial plants a pandas-written
+    # lineage file whose nanosecond timestamps Spark cannot read
+    lin = read_lineage(spark, lin_p).filter(F.col("run_id") == run_id)
+    pdf = lin.drop("finished_ts").toPandas()
+    return pdf.sort_values("bucket").reset_index(drop=True)
+
+
+def _bucket_sizes(spark, sdf, n_buckets) -> dict[int, int]:
+    rows = with_bucket(sdf, n_buckets).groupBy("bucket").count().collect()
+    return {r["bucket"]: r["count"] for r in rows}
 
 
 def _assert_parity(spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame):
@@ -164,6 +188,80 @@ def test_resume_partial(spark, fixture_pdf, tmp_path):
     # full output still complete + correct after the partial rerun
     final = spark.read.parquet(out_p)
     assert final.count() == len(fixture_pdf)
+    # the rerun's new lineage rows name exactly the rerun buckets, and
+    # count all of those buckets' input rows
+    rerun = sorted(set(buckets) - set(half))
+    new = _lineage(spark, lin2, "r2")
+    new = new[~new["bucket"].isin(half)]
+    assert list(new["bucket"]) == rerun
+    sizes = _bucket_sizes(spark, sdf, 8)
+    assert new["rows_out"].sum() == sum(sizes[b] for b in rerun)
+    assert list(new["rows_in"]) == list(new["rows_out"])
+
+
+def test_lineage_counts_match_output_scan(spark, fixture_pdf, tmp_path):
+    """Differential: the lineage counted inside the extraction pass equals
+    lineage_from_output over the written output, bucket for bucket, with
+    planted error (None) and empty (whitespace-only) payloads."""
+    pdf = fixture_pdf.copy()
+    pdf.loc[pdf.index[::97], "text"] = None
+    pdf.loc[pdf.index[5::89], "text"] = " \n\t  \n"
+    sdf = transcripts_from_pandas(spark, pdf)
+    out_p, lin_p = str(tmp_path / "out"), str(tmp_path / "lineage")
+    run_extract(spark, sdf, out_p, lin_p, run_id="d", n_buckets=16)
+
+    got = _lineage(spark, lin_p, "d")
+    want = lineage_from_output(read_output(spark, out_p), "d").toPandas()
+    want = want.sort_values("bucket").reset_index(drop=True)
+    cols = ["run_id", "bucket", *COUNTERS, "status"]
+    pd.testing.assert_frame_equal(got[cols], want[cols], check_dtype=False)
+    assert got["n_error"].sum() > 0 and got["n_empty"].sum() > 0
+    assert got["rows_in"].sum() == len(pdf)
+
+
+def test_lineage_counts_only_this_run(spark, fixture_pdf, tmp_path):
+    """A second run_id written into an existing output path gets lineage
+    for its own rows and buckets only, not the earlier run's."""
+    out_p, lin_p = str(tmp_path / "out"), str(tmp_path / "lineage")
+    run_extract(
+        spark, transcripts_from_pandas(spark, fixture_pdf), out_p, lin_p,
+        run_id="r1", n_buckets=16,
+    )
+    convs = sorted(fixture_pdf["conv_id"].unique())[:5]
+    subset = fixture_pdf[fixture_pdf["conv_id"].isin(convs)]
+    sub_sdf = transcripts_from_pandas(spark, subset)
+    run_extract(spark, sub_sdf, out_p, lin_p, run_id="r2", n_buckets=16)
+
+    lin = _lineage(spark, lin_p, "r2")
+    assert lin["rows_out"].sum() == len(subset)
+    assert set(lin["bucket"]) == set(_bucket_sizes(spark, sub_sdf, 16))
+
+
+def test_lineage_rows_in_mismatch_raises(spark):
+    """rows_in and rows_out are counted on different sides of the UDF; a
+    bucket where they differ fails the run instead of writing lineage."""
+    counts = np.zeros((4, len(COUNTERS)), np.int64)
+    counts[1, :2] = [5, 5]
+    assert lineage_from_counts(spark, counts, "ok").count() == 1
+    counts[2, :2] = [3, 2]
+    with pytest.raises(RuntimeError, match=r"buckets \[2\]"):
+        lineage_from_counts(spark, counts, "bad")
+
+
+def test_run_extract_job_count(spark, fixture_pdf, tmp_path):
+    """run_extract runs the shuffle, the UDF + write stage and the lineage
+    append: 3 Spark jobs, with no read-back of the written output."""
+    sdf = transcripts_from_pandas(spark, fixture_pdf)
+    out_p, lin_p = str(tmp_path / "out"), str(tmp_path / "lineage")
+    sc = spark.sparkContext
+    sc.setJobGroup("run-extract-jobs", "count run_extract jobs")
+    try:
+        run_extract(spark, sdf, out_p, lin_p, run_id="j")
+        jobs = sc.statusTracker().getJobIdsForGroup("run-extract-jobs")
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(jobs) <= 3, jobs
+    assert _lineage(spark, lin_p, "j")["rows_in"].sum() == len(fixture_pdf)
 
 
 def test_no_per_row_python_udf():
