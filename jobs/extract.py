@@ -28,7 +28,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--lineage", required=True)
     p.add_argument("--run-id", required=True)
     p.add_argument("--buckets", type=int, default=None)
-    p.add_argument("--no-salt", action="store_true")
     p.add_argument("--resume", action="store_true")
     p.add_argument("--master", default=None)
     p.add_argument("--num-partitions", type=int, default=None)
@@ -59,7 +58,6 @@ def main(argv: list[str] | None = None) -> int:
         lineage_path=args.lineage,
         run_id=args.run_id,
         n_buckets=args.buckets or DEFAULT_N_BUCKETS,
-        salt_hot=not args.no_salt,
         resume=args.resume,
         num_partitions=args.num_partitions,
     )

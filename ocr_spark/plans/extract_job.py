@@ -108,7 +108,6 @@ def _salted_shuffle(
 def plan_extract(
     df: DataFrame,
     n_buckets: int = DEFAULT_N_BUCKETS,
-    salt_hot: bool = True,
     num_partitions: int | None = None,
     slice_turns: int = SALT_SLICE_TURNS,
 ) -> DataFrame:
@@ -116,7 +115,7 @@ def plan_extract(
     bucket -> slice salt -> repartition -> mapInPandas -> per-partition
     sort.  The input is scanned exactly once when the plan executes."""
     b = with_bucket(df, n_buckets)
-    out = extract_turns(_salted_shuffle(b, salt_hot, slice_turns, num_partitions))
+    out = extract_turns(_salted_shuffle(b, True, slice_turns, num_partitions))
     return out.withColumn(
         "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets))
     )
@@ -129,7 +128,6 @@ def run_extract(
     lineage_path: str,
     run_id: str,
     n_buckets: int = DEFAULT_N_BUCKETS,
-    salt_hot: bool = True,
     resume: bool = False,
     num_partitions: int | None = None,
     slice_turns: int = SALT_SLICE_TURNS,
@@ -152,7 +150,7 @@ def run_extract(
     # result stage (below the one Exchange), where Spark applies each
     # partition's accumulator update exactly once (PLANS.md invariant 6).
     counts = lineage_counts(spark.sparkContext, n_buckets)
-    shuffled = _salted_shuffle(df, salt_hot, slice_turns, num_partitions)
+    shuffled = _salted_shuffle(df, True, slice_turns, num_partitions)
     out = extract_turns(shuffled, counts)
 
     # Idempotent per-bucket writes: dynamic partition overwrite replaces
@@ -168,8 +166,4 @@ def run_extract(
     # never counted.  Raises before appending if rows_in != rows_out.
     write_lineage(lineage_from_counts(spark, counts.value, run_id), lineage_path)
 
-    stats = {
-        "buckets_skipped": skipped,
-        "slice_turns": slice_turns if salt_hot else None,
-    }
-    return stats
+    return {"buckets_skipped": skipped, "slice_turns": slice_turns}
