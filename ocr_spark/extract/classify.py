@@ -24,51 +24,25 @@ from ocr_spark.constants import (
     W_DENSITY,
     W_LINK,
 )
-from ocr_spark.extract.threshold import otsu_threshold
 
 
 def content_scores(
-    q: np.ndarray, link_density: np.ndarray, otsu_t: int | None = None
+    q: np.ndarray, link_density: np.ndarray, otsu_t: int | np.ndarray
 ) -> np.ndarray:
     """G15+G18+G19: content score per block, float64 in [0,1].
 
-    d_score: 1.0 above the Otsu split, else a sub-0.5 fraction of how
-    close the block sits to the split (feature scaling to [0,1], G18).
+    `otsu_t` is the Otsu split of the block's turn: one int for every
+    block, or one per block (the batched kernel scores the blocks of many
+    turns at once).  d_score: 1.0 above the split, else a sub-0.5
+    fraction of how close the block sits to it (feature scaling to [0,1],
+    G18).  A split of -1 means no usable split (unimodal or degenerate
+    histogram) and scores as a split at 0: everything is foreground
+    EXCEPT zero-density blocks (no alphanumeric signal at all, q is
+    clipped to 0..255), which get 0.0 and can never be content.
     link penalty: linear up to LINK_DENSITY_MAX then saturated.
     """
-    if len(q) == 0:
-        return np.zeros(0, dtype=np.float64)
-    if otsu_t is None:
-        otsu_t = otsu_threshold(q)
-    qf = q.astype(np.float64)
-    if otsu_t < 0:
-        # no usable split (unimodal/degenerate histogram): everything is
-        # foreground — EXCEPT zero-density blocks (no alphanumeric signal
-        # at all), which can never be content
-        d_score = np.where(q > 0, 1.0, 0.0)
-    else:
-        d_score = np.where(q > otsu_t, 1.0, 0.5 * qf / (otsu_t + 1.0))
-    link_pen = np.minimum(link_density / LINK_DENSITY_MAX, 1.0)
-    score = W_DENSITY * d_score + W_LINK * (1.0 - link_pen)
-    return np.clip(score, 0.0, 1.0)
-
-
-def content_scores_batch(
-    q: np.ndarray, link_density: np.ndarray, otsu_t: np.ndarray
-) -> np.ndarray:
-    """Elementwise twin of content_scores with a PER-BLOCK otsu threshold
-    array (each block carries its turn's split) — bit-identical ops, so
-    flat cross-turn batching gives the same floats as per-turn calls."""
-    if len(q) == 0:
-        return np.zeros(0, dtype=np.float64)
-    qf = q.astype(np.float64)
-    tf = otsu_t.astype(np.float64)
-    safe_denom = np.where(otsu_t < 0, 1.0, tf + 1.0)
-    d_score = np.where(
-        otsu_t < 0,
-        np.where(q > 0, 1.0, 0.0),
-        np.where(q > otsu_t, 1.0, 0.5 * qf / safe_denom),
-    )
+    t = np.maximum(otsu_t, 0)
+    d_score = np.where(q > t, 1.0, 0.5 * q / (t + 1.0))
     link_pen = np.minimum(link_density / LINK_DENSITY_MAX, 1.0)
     score = W_DENSITY * d_score + W_LINK * (1.0 - link_pen)
     return np.clip(score, 0.0, 1.0)

@@ -1,10 +1,4 @@
-"""The per-turn extraction pipeline (G1-G26) and its batch driver.
-
-`extract_turn` is a pure function of one payload — the generalization of
-`predict_from_pil_image` (/root/reference/handwriting/predict.py:212-299).
-`extract_frame` runs it over a pandas batch; the single-process oracle and
-the distributed mapInPandas operator both call `extract_frame`, so
-"per-turn text equality under stable turn ordering" holds by construction.
+"""The per-turn extraction pipeline (G1-G26) and its two entry points.
 
 Stage order (mirrors the reference lifecycle, SURVEY.md §3.1):
   canonicalize (G1/G17) -> segment (G6/G11) -> densities (G18) ->
@@ -13,17 +7,23 @@ Stage order (mirrors the reference lifecycle, SURVEY.md §3.1):
   label/rescue/gate (G20-G22) -> pad (G13) -> merge (G12) ->
   ordered emit (G23-G25); per-turn failure isolation (G26).
 
-`extract_frame` / `extract_results` run the batched twin of that
-pipeline (`_extract_batch_results`), result-identical to `extract_turn`
-per row.  Its stage A canonicalizes and segments each turn, then computes
-the block features of runs of whole turns (at most _CHUNK_CHARS
-characters) from per-character class arrays and prefix sums over their
-joined text.  A turn goes back to the per-block `_block_features` when a
-block slice would cut a tag or an anchor, or when it is longer than that
-bound.  Stage B runs the numeric stages once over the flat block arrays
-of the batch; stage C pads, merges and emits per turn.
-`extract_turn` itself stays scalar: the serving path calls it, and it is
-the differential oracle for the batched path.
+Every step but the numeric ones is one helper that both entry points call:
+`_prelude` (non-string -> error, blank -> empty, canonicalize, segment),
+`_gates` (G7-G10), `_whole_turn` (G14), `content_scores` + `accept`, and
+`_emit` (pad, merge, emit).
+  - `extract_turn` (one payload, pure: the generalization of
+    `predict_from_pil_image`, predict.py:212-299) serves `serve_one`.  Its
+    numeric stage runs per turn (`_block_features`, `adaptive_candidates`,
+    `otsu_split`): serving a one-turn batch through `extract_results`
+    raised `serve_http` latency_p50_ms by 13%.
+  - `extract_frame` / `extract_results` run `_extract_batch_results`, the
+    body of both the single-process oracle and the mapInPandas operator,
+    so "per-turn text equality under stable turn ordering" holds by
+    construction.  Its numeric stages run once over the flat block arrays
+    of the whole batch.
+tests/test_batch_parity.py compares the two paths row for row, so what
+it still checks is that numeric fork; the shared helpers are pinned by
+literal outputs (tests/test_golden.py, tests/test_extractor.py).
 """
 
 from __future__ import annotations
@@ -46,11 +46,13 @@ from ocr_spark.constants import (
 from ocr_spark.extract.canon import canonicalize, strip_tags
 from ocr_spark.extract.classify import accept, content_scores
 from ocr_spark.extract.merge import merge_spans, pad_span
-from ocr_spark.extract.segment import Block, segment
+from ocr_spark.extract.segment import Block, segment, strip_bounds
 from ocr_spark.extract.threshold import (
     adaptive_candidates,
+    adaptive_candidates_batch,
     close_gaps,
     otsu_split,
+    otsu_split_batch,
     quantize,
 )
 
@@ -325,39 +327,41 @@ def _chunks(sizes: list[int]):
         yield lo, len(sizes)
 
 
-def extract_turn(text: Any) -> dict[str, Any]:
-    """Extract main content from one turn payload.  Pure; never raises.
-
-    Returns dict(extracted_text, spans, n_blocks_in, n_blocks_kept,
-    status).  spans = list of {start, end, score, position} with 1-indexed
-    positions (G23) over the canonical text; extracted_text is the
-    ordered '\n'-join of span slices (G24).
-    """
-    if text is None or not isinstance(text, str):
-        return _envelope("", [], 0, STATUS_ERROR)
-    try:
-        return _extract_turn_inner(text)
-    except Exception:
-        # G26: per-turn failure isolation (predict.py:298-299).
-        return _envelope("", [], 0, STATUS_ERROR)
+def _envelope(
+    extracted: str, spans: list, n_in: int, status: str
+) -> dict[str, Any]:
+    return {
+        "extracted_text": extracted,
+        "spans": spans,
+        "n_blocks_in": n_in,
+        "n_blocks_kept": len(spans),
+        "status": status,
+    }
 
 
-def _extract_turn_inner(text: str) -> dict[str, Any]:
+def _error() -> dict[str, Any]:
+    return _envelope("", [], 0, STATUS_ERROR)
+
+
+def _prelude(text: Any) -> tuple[str, list[Block]] | dict[str, Any]:
+    """Canonicalize (G1/G17) and segment (G6/G11) one payload.  Returns
+    (canon, blocks), or the turn's final envelope when there is nothing
+    to segment: error for a non-string, empty for a blank canonical text.
+    Raises whatever canonicalize and segment raise (the caller isolates
+    per turn, G26)."""
+    if not isinstance(text, str):
+        return _error()
     canon, _truncated = canonicalize(text)
     if not canon.strip():
         return _envelope("", [], 0, STATUS_EMPTY)
+    return canon, segment(canon)
 
-    blocks = segment(canon)
-    n_in = len(blocks)
-    feats = _block_features(canon, blocks)
-    q_all = quantize(feats["density"])
 
-    # G3/G4/G5: adaptive candidate mask + gap closing over the series.
-    cand = close_gaps(adaptive_candidates(q_all))
-
-    # G7-G10 geometric gates (cheap-first ordering kept from the
-    # reference, predict.py:70-87 — Catalyst can't reorder inside a UDF).
-    keep = (
+def _gates(cand: np.ndarray, feats: dict[str, np.ndarray]) -> np.ndarray:
+    """G7-G10 geometric gates over the G3-G5 candidate mask (cheap-first
+    ordering kept from the reference, predict.py:70-87 — Catalyst can't
+    reorder inside a UDF)."""
+    return (
         cand
         & (feats["vis_chars"] >= MIN_BLOCK_CHARS)
         & ~((feats["pos_frac"] > FOOTER_FRAC) & (feats["words"] < FOOTER_MAX_WORDS))
@@ -365,37 +369,18 @@ def _extract_turn_inner(text: str) -> dict[str, Any]:
         & (feats["words"] >= MIN_WORDS)
     )
 
-    surv_idx = np.nonzero(keep)[0]
-    if len(surv_idx) == 0:
-        # G14: whole-turn fallback — segmentation never returns "nothing".
-        lo, hi = 0, len(canon)
-        while lo < hi and canon[lo].isspace():
-            lo += 1
-        while hi > lo and canon[hi - 1].isspace():
-            hi -= 1
-        blocks = [Block(lo, hi, 0, len(canon))]
-        feats = _block_features(canon, blocks)
-        q_all = quantize(feats["density"])
-        surv_idx = np.array([0])
 
-    # G15/G19-G22: score all surviving blocks as one matrix op (the Otsu
-    # histogram is computed over ALL blocks of the turn for stability).
-    otsu_t = otsu_split(q_all)
-    scores = content_scores(
-        q_all[surv_idx], feats["link_density"][surv_idx], otsu_t=otsu_t
-    )
-    accepted, prob = accept(scores)
-
-    # G13 pad within raw bounds, then G12 whitespace-gap merge.
+def _emit(
+    canon: str, picks: list[tuple[Block, float]], n_in: int
+) -> dict[str, Any]:
+    """G13 pad each accepted (block, prob) within its raw bounds, G12
+    merge across whitespace gaps, then the ordered emit (G23-G25)."""
     padded: list[tuple[int, int, float]] = []
-    for k in np.nonzero(accepted)[0]:
-        b = blocks[int(surv_idx[k])]
+    for b, p in picks:
         lo, hi = pad_span(canon, b.start, b.end, b.raw_start, b.raw_end)
         if lo < hi:
-            padded.append((lo, hi, float(prob[k])))
+            padded.append((lo, hi, p))
     merged = merge_spans(canon, padded)
-
-    # G23/G24/G25: ordered emit.
     spans = [
         {
             "start": int(s),
@@ -410,62 +395,86 @@ def _extract_turn_inner(text: str) -> dict[str, Any]:
     return _envelope(extracted, spans, n_in, status)
 
 
-def _envelope(
-    extracted: str, spans: list, n_in: int, status: str
-) -> dict[str, Any]:
-    return {
-        "extracted_text": extracted,
-        "spans": spans,
-        "n_blocks_in": n_in,
-        "n_blocks_kept": len(spans),
-        "status": status,
-    }
+def _whole_turn(canon: str, n_in: int) -> dict[str, Any]:
+    """G14 whole-turn fallback for a turn whose gates dropped every block
+    (segmentation never returns "nothing"): score the whole stripped turn
+    as one block.  One value has no Otsu split (otsu_split of it is
+    always -1), so it scores against -1.  n_in stays the turn's own block
+    count."""
+    lo, hi = strip_bounds(canon, 0, len(canon))
+    block = Block(lo, hi, 0, len(canon))
+    feats = _block_features(canon, [block])
+    scores = content_scores(quantize(feats["density"]), feats["link_density"], -1)
+    accepted, prob = accept(scores)
+    return _emit(canon, [(block, float(prob[0]))] if accepted[0] else [], n_in)
+
+
+def extract_turn(text: Any) -> dict[str, Any]:
+    """Extract main content from one turn payload.  Pure; never raises.
+
+    Returns dict(extracted_text, spans, n_blocks_in, n_blocks_kept,
+    status).  spans = list of {start, end, score, position} with 1-indexed
+    positions (G23) over the canonical text; extracted_text is the
+    ordered '\n'-join of span slices (G24).
+    """
+    try:
+        pre = _prelude(text)
+        if isinstance(pre, dict):
+            return pre
+        canon, blocks = pre
+        feats = _block_features(canon, blocks)
+        q_all = quantize(feats["density"])
+        # G3/G4/G5: adaptive candidate mask + gap closing over the series.
+        keep = _gates(close_gaps(adaptive_candidates(q_all)), feats)
+        surv = np.flatnonzero(keep)
+        if not len(surv):
+            return _whole_turn(canon, len(blocks))
+        # G15/G19-G22: score all surviving blocks as one matrix op (the
+        # Otsu histogram is computed over ALL blocks of the turn for
+        # stability).
+        scores = content_scores(
+            q_all[surv], feats["link_density"][surv], otsu_split(q_all)
+        )
+        accepted, prob = accept(scores)
+        picks = [(blocks[surv[k]], float(prob[k])) for k in np.flatnonzero(accepted)]
+        return _emit(canon, picks, len(blocks))
+    except Exception:
+        # G26: per-turn failure isolation (predict.py:298-299).
+        return _error()
 
 
 def _extract_batch_results(texts: list) -> list[dict[str, Any]]:
     """Cross-turn batched pipeline.  Result-identical to
     [extract_turn(t) for t in texts] (tests/test_batch_parity.py); each
     row's result depends only on its own blocks (row-purity: no
-    batch-size effects).
+    batch-size effects).  Every step but the numeric one is the helper
+    extract_turn calls.
 
-    Stage A: canonicalize and segment run per turn; block features run
-    per run of whole turns of at most _CHUNK_CHARS characters, from
-    per-character class arrays (_batched_block_features).  A turn whose
-    blocks cut a tag or an anchor, or that is longer than the bound,
-    takes the per-block `_block_features` path instead.
-    Stage B: the numeric stages (quantize, adaptive threshold, Otsu,
-    scoring, gating) run once over the flat block arrays of the batch.
-    Stage C: fallback, pad, merge and emit run per turn.
+    Stage A: `_prelude` per turn; block features per run of whole turns
+    of at most _CHUNK_CHARS characters, from per-character class arrays
+    (_batched_block_features).  A turn whose blocks cut a tag or an
+    anchor, or that is longer than the bound, takes the per-block
+    `_block_features` path instead.
+    Stage B: the numeric stages (quantize, adaptive threshold, gates,
+    Otsu, scoring) run once over the flat block arrays of the batch.
+    Stage C: `_emit` per turn, or `_whole_turn` (G14) for a turn that
+    lost every block.
     """
-    from ocr_spark.extract.classify import content_scores_batch
-    from ocr_spark.extract.threshold import (
-        adaptive_candidates_batch,
-        otsu_split_batch,
-    )
-
     n = len(texts)
     results: list = [None] * n
     canons: list = [None] * n
     blocks_l: list = [None] * n
 
     # --- stage A: canonicalize -> segment per turn ------------------------
-    lengths = np.zeros(n, dtype=np.int64)
     for i, text in enumerate(texts):
-        if text is None or not isinstance(text, str):
-            results[i] = _envelope("", [], 0, STATUS_ERROR)
-            continue
         try:
-            canon, _trunc = canonicalize(text)
-            if not canon.strip():
-                results[i] = _envelope("", [], 0, STATUS_EMPTY)
-                continue
-            blocks = segment(canon)
+            pre = _prelude(text)
         except Exception:
-            results[i] = _envelope("", [], 0, STATUS_ERROR)
-            continue
-        canons[i] = canon
-        blocks_l[i] = blocks
-        lengths[i] = len(blocks)
+            pre = _error()
+        if isinstance(pre, dict):
+            results[i] = pre
+        else:
+            canons[i], blocks_l[i] = pre
 
     active = [i for i in range(n) if results[i] is None]
     if not active:
@@ -484,69 +493,48 @@ def _extract_batch_results(texts: list) -> list[dict[str, Any]]:
     feats = {name: np.concatenate([p[name] for p in parts]) for name in parts[0]}
 
     # --- stage B (batched over all blocks of all active turns) -----------
-    active_lengths = lengths[active]
+    active_lengths = np.fromiter(
+        (len(blocks_l[i]) for i in active), np.int64, len(active)
+    )
     starts = np.zeros(len(active), dtype=np.int64)
     np.cumsum(active_lengths[:-1], out=starts[1:])
     turn_ids = np.repeat(np.arange(len(active)), active_lengths)
-    link = feats["link_density"]
 
     q_all = quantize(feats["density"])
     cand = adaptive_candidates_batch(q_all, starts, active_lengths)
     # G5 gap closing is a per-turn sequential scan over a tiny bool run
-    for a, (s, ln) in enumerate(zip(starts, active_lengths)):
+    for s, ln in zip(starts, active_lengths):
         if ln:
             cand[s : s + ln] = close_gaps(cand[s : s + ln])
-    keep = (
-        cand
-        & (feats["vis_chars"] >= MIN_BLOCK_CHARS)
-        & ~((feats["pos_frac"] > FOOTER_FRAC) & (feats["words"] < FOOTER_MAX_WORDS))
-        & (link <= LINK_DENSITY_MAX)
-        & (feats["words"] >= MIN_WORDS)
-    )
+    keep = _gates(cand, feats)
     otsu_t = otsu_split_batch(q_all, turn_ids, starts, active_lengths, len(active))
     surv_flat = np.nonzero(keep)[0]
-    scores = content_scores_batch(
-        q_all[surv_flat], link[surv_flat], otsu_t[turn_ids[surv_flat]]
+    surv_turn = turn_ids[surv_flat]
+    scores = content_scores(
+        q_all[surv_flat], feats["link_density"][surv_flat], otsu_t[surv_turn]
     )
     accepted, prob = accept(scores)
-    surv_turn = turn_ids[surv_flat]
+    accepted_l = accepted.tolist()
+    prob_l = prob.tolist()
+    block_l = (surv_flat - starts[surv_turn]).tolist()
 
-    # --- stage C (rowwise): fallback / pad / merge / emit ----------------
-    surv_bounds = np.searchsorted(surv_turn, np.arange(len(active) + 1))
+    # --- stage C (rowwise): pad / merge / emit, or the G14 fallback -------
+    surv_bounds = np.searchsorted(surv_turn, np.arange(len(active) + 1)).tolist()
     for a, i in enumerate(active):
+        canon, blocks = canons[i], blocks_l[i]
+        lo_k, hi_k = surv_bounds[a], surv_bounds[a + 1]
         try:
-            lo_k, hi_k = surv_bounds[a], surv_bounds[a + 1]
             if lo_k == hi_k:
-                # G14 whole-turn fallback: rare path, re-run the scalar
-                # pipeline (pure function -> identical result)
-                results[i] = _extract_turn_inner(texts[i])
-                continue
-            canon = canons[i]
-            blocks = blocks_l[i]
-            base = starts[a]
-            padded: list[tuple[int, int, float]] = []
-            for k in range(lo_k, hi_k):
-                if not accepted[k]:
-                    continue
-                b = blocks[int(surv_flat[k] - base)]
-                plo, phi = pad_span(canon, b.start, b.end, b.raw_start, b.raw_end)
-                if plo < phi:
-                    padded.append((plo, phi, float(prob[k])))
-            merged = merge_spans(canon, padded)
-            spans = [
-                {
-                    "start": int(s),
-                    "end": int(e),
-                    "score": float(np.float32(p)),
-                    "position": idx + 1,
-                }
-                for idx, (s, e, p) in enumerate(merged)
-            ]
-            extracted = "\n".join(canon[s:e] for s, e, _ in merged)
-            status = STATUS_OK if spans else STATUS_EMPTY
-            results[i] = _envelope(extracted, spans, len(blocks), status)
+                results[i] = _whole_turn(canon, len(blocks))
+            else:
+                picks = [
+                    (blocks[block_l[k]], prob_l[k])
+                    for k in range(lo_k, hi_k)
+                    if accepted_l[k]
+                ]
+                results[i] = _emit(canon, picks, len(blocks))
         except Exception:
-            results[i] = _envelope("", [], 0, STATUS_ERROR)
+            results[i] = _error()
     return results
 
 

@@ -10,6 +10,7 @@ sorted order — the text analogue of horizontal+vertical overlap).
 from __future__ import annotations
 
 from ocr_spark.constants import PAD_FRAC, PAD_MIN
+from ocr_spark.extract.segment import strip_bounds
 
 
 def pad_span(
@@ -24,11 +25,7 @@ def pad_span(
     pad = max(int(PAD_FRAC * (end - start)), PAD_MIN)
     lo = max(start - pad, raw_start, 0)
     hi = min(end + pad, raw_end, len(canon))
-    while lo < hi and canon[lo].isspace():
-        lo += 1
-    while hi > lo and canon[hi - 1].isspace():
-        hi -= 1
-    return lo, hi
+    return strip_bounds(canon, lo, hi)
 
 
 def merge_spans(

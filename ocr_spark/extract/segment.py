@@ -35,8 +35,9 @@ _RE_DELIM = re.compile(
 )
 
 
-def _strip_bounds(canon: str, lo: int, hi: int) -> tuple[int, int]:
-    """Shrink [lo, hi) to non-whitespace boundaries."""
+def strip_bounds(canon: str, lo: int, hi: int) -> tuple[int, int]:
+    """Shrink [lo, hi) to non-whitespace boundaries (segment strip, G13
+    pad re-snap and the G14 whole-turn block all snap this one way)."""
     while lo < hi and canon[lo].isspace():
         lo += 1
     while hi > lo and canon[hi - 1].isspace():
@@ -100,7 +101,7 @@ def segment(canon: str) -> list[Block]:
     # 2. layout re-segmentation + strip
     blocks: list[Block] = []
     for lo, hi in raw:
-        slo, shi = _strip_bounds(canon, lo, hi)
+        slo, shi = strip_bounds(canon, lo, hi)
         if slo >= shi:
             continue
         n_lines = canon.count("\n", slo, shi) + 1
@@ -108,7 +109,7 @@ def segment(canon: str) -> list[Block]:
             # cluster on RAW bounds: the first line's leading indent is
             # layout signal and stripping would erase it
             for rlo, rhi in _layout_runs(canon, lo, hi):
-                blo, bhi = _strip_bounds(canon, rlo, rhi)
+                blo, bhi = strip_bounds(canon, rlo, rhi)
                 if blo < bhi:
                     blocks.append(Block(blo, bhi, rlo, rhi))
         else:

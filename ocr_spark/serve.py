@@ -86,12 +86,14 @@ def make_http_server(port: int = 0, host: str = "127.0.0.1"):
                 return
             try:
                 n = int(self.headers.get("Content-Length", "0"))
-                if n > MAX_BODY_BYTES:
-                    # the unread body makes the connection unusable
+                if not 0 <= n <= MAX_BODY_BYTES:
+                    # refused unread (a negative length would read to EOF,
+                    # past the cap); the unread body makes the connection
+                    # unusable
                     self.close_connection = True
                     self._reply({
                         "success": False,
-                        "error": f"payload exceeds {MAX_BODY_BYTES} bytes",
+                        "error": f"Content-Length must be 0..{MAX_BODY_BYTES} bytes",
                     })
                     return
                 body = self.rfile.read(n)

@@ -1,4 +1,5 @@
-"""G19-G22 scoring/gating unit tests — boundary comparators pinned
+"""G19-G22 scoring/gating unit tests — one `content_scores` for a
+turn-wide split and per-block splits alike; boundary comparators pinned
 (SURVEY.md §7.4: the reference mixes >= and >; every gate's comparator is
 asserted here at its boundary value)."""
 
@@ -32,6 +33,27 @@ def test_scores_link_penalty_saturates():
 def test_scores_no_split_all_foreground():
     s = content_scores(np.array([5]), np.array([0.0]), otsu_t=-1)
     assert s[0] == 1.0
+
+
+def test_scores_no_split_zero_density_is_not_foreground():
+    # q is clipped to 0..255, so with no split only q == 0 stays out
+    s = content_scores(np.array([0, 1]), np.array([0.0, 0.0]), otsu_t=-1)
+    assert s[0] == 0.4 and s[1] == 1.0
+
+
+def test_scores_per_block_thresholds_match_broadcast():
+    # the batched kernel passes one split per block (its turn's); each
+    # block scores as if its turn were scored alone
+    rng = np.random.default_rng(0)
+    q = rng.integers(0, 256, 400)
+    link = rng.random(400)
+    t = rng.choice([-1, 0, 3, 100, 254], 400)
+    got = content_scores(q, link, t)
+    for split in np.unique(t):
+        at = t == split
+        want = content_scores(q[at], link[at], int(split))
+        assert np.array_equal(got[at], want), split
+    assert content_scores(q[:0], link[:0], t[:0]).dtype == np.float64
 
 
 def test_gate_boundary_inclusive():

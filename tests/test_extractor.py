@@ -139,3 +139,63 @@ def test_zero_density_payload_not_content():
     for t in ["\x00\x01\x02", "<" * 500, "!!! ??? ... ---"]:
         r = extract_turn(t)
         assert r["status"] == "empty", (t[:20], r)
+
+
+def _one_span(text, end, score, n_in=1):
+    return {
+        "extracted_text": text,
+        "spans": [{"start": 0, "end": end, "score": score, "position": 1}],
+        "n_blocks_in": n_in,
+        "n_blocks_kept": 1,
+        "status": "ok",
+    }
+
+
+def _no_span(n_in):
+    return {
+        "extracted_text": "",
+        "spans": [],
+        "n_blocks_in": n_in,
+        "n_blocks_kept": 0,
+        "status": "empty",
+    }
+
+
+# Payloads whose gates drop every block, so they take the G14 whole-turn
+# fallback, with their envelopes written out literally (extract_turn
+# and extract_frame share the fallback, so comparing the two cannot see
+# a change in it).  They cover no block at all, accepted and rejected whole turns, a
+# link-penalized score and a turn of two blocks.
+_G14 = [
+    ("<p></p><div></div>", _no_span(0)),
+    ("a" * 50, _one_span("a" * 50, 50, 1.0)),
+    ('<nav><a href="/x">' + "nav link " * 30 + "</a></nav>", _no_span(1)),
+    ("<a href='x'>" + "y" * 30, _one_span("<a href='x'>" + "y" * 30, 42, 1.0)),
+    ("x" * 5000, _one_span("x" * 5000, 5000, 1.0)),
+    ("\x01\x02 < < <", _no_span(1)),
+    (
+        "word <a href='u'>link</a>alongword",
+        _one_span("word <a href='u'>link</a>alongword", 34, 0.8117647171020508),
+    ),
+    ("<p>ab</p><p>cd</p>", _one_span("<p>ab</p><p>cd</p>", 18, 1.0, n_in=2)),
+]
+
+
+def test_whole_turn_fallback_literal():
+    for text, want in _G14:
+        assert extract_turn(text) == want, text[:40]
+    # the same payloads inside one batch, between ordinary turns
+    texts = [NAV + CONTENT + FOOTER, None]
+    for text, _ in _G14:
+        texts += [text, CONTENT]
+    out = extract_frame(
+        pd.DataFrame({"conv_id": "c", "turn_idx": range(len(texts)), "text": texts})
+    )
+    assert list(out["status"][:2]) == ["ok", "error"]
+    for k, (text, want) in enumerate(_G14):
+        row = out.iloc[2 + 2 * k]
+        got = {name: row[name] for name in want}
+        got["n_blocks_in"] = int(got["n_blocks_in"])
+        got["n_blocks_kept"] = int(got["n_blocks_kept"])
+        assert got == want, text[:40]
+        assert out.iloc[3 + 2 * k]["status"] == "ok"

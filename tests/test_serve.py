@@ -132,3 +132,37 @@ def test_serve_http_rejects_oversized_body():
     finally:
         srv.shutdown()
         srv.server_close()
+
+
+def test_serve_http_rejects_negative_content_length():
+    """A negative Content-Length gets the same JSON failure envelope as an
+    oversized one: reading it would take the body up to EOF, past the
+    16 MB cap.  The client half-closes after its headers, so a server
+    that reads to EOF answers with a success envelope instead."""
+    import socket
+    import threading
+
+    from ocr_spark.serve import MAX_BODY_BYTES, make_http_server
+
+    srv = make_http_server(0)
+    port = srv.server_address[1]
+    t = threading.Thread(target=srv.serve_forever, daemon=True)
+    t.start()
+    try:
+        with socket.create_connection(("127.0.0.1", port), timeout=10) as s:
+            s.sendall(
+                b"POST /api/extract HTTP/1.1\r\nHost: localhost\r\n"
+                b"Content-Length: -1\r\n\r\n"
+            )
+            s.shutdown(socket.SHUT_WR)
+            chunks = []
+            while chunk := s.recv(65536):
+                chunks.append(chunk)
+        head, _, body = b"".join(chunks).partition(b"\r\n\r\n")
+        assert head.split()[1] == b"200"
+        got = json.loads(body)
+        assert got["success"] is False
+        assert str(MAX_BODY_BYTES) in got["error"]
+    finally:
+        srv.shutdown()
+        srv.server_close()
