@@ -27,6 +27,44 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+# The text builders and the sketch/near-dup/decontamination/DSIR
+# constants are defined once under ocr_spark/ and shared with the
+# streaming twins; the oracle SQL below spells its side out on its own.
+from ocr_spark.functions.text import (  # noqa: E402
+    gram_fingerprints,
+    letter_words,
+    lower_words,
+    md5_long,
+    word3_shingles,
+    word_bigrams,
+    word_rows,
+)
+from ocr_spark.streaming.extract_stream import (  # noqa: E402
+    DECON_GRAM_WORDS as _DECON_GRAM,
+    DSIR_BUCKETS as _DSIR_BUCKETS,
+    dsir_bucket,
+    gopher_features,
+    gopher_passes,
+    with_dsir_keep,
+)
+from ocr_spark.streaming.neardup import (  # noqa: E402
+    M31 as _M31,
+    MINHASH_A as _MINHASH_A,
+    MINHASH_B as _MINHASH_B,
+    minhash,
+    minhash_bands,
+    shingle_fp,
+)
+from ocr_spark.streaming.sketch import (  # noqa: E402
+    CM_COLS as _CM_COLS,
+    CM_ROWS as _CM_ROWS,
+    HLL_M as _HLL_M,
+    HLL_S as _HLL_S,
+    cm_cells,
+    hll_fold,
+    hll_registers,
+)
+
 # ---------------------------------------------------------------------------
 # shared helpers
 # ---------------------------------------------------------------------------
@@ -39,14 +77,10 @@ _LANG_MARKERS = {
     "de": "der|die|und|das",
 }
 
-# Cross-engine deterministic hashing: fp(s) = int64 of the first 15 hex
-# chars of md5(s) (60 bits, identical in Spark `conv(substr(md5(x),1,15),
-# 16,10)` and DuckDB `('0x'||substr(md5(x),1,15))::BIGINT`), reduced mod
-# the Mersenne prime M31 so the K affine MinHash functions
-# h_k = (A_k*fp + B_k) % M31 stay well inside int64.
-_M31 = 2_147_483_647
-_MINHASH_A = [2, 3, 5, 7, 11, 13, 17, 19]
-_MINHASH_B = [1, 2, 3, 4, 5, 6, 7, 8]
+# Cross-engine deterministic hashing: md5_long(s) = int64 of the first 15
+# hex chars of md5(s) (60 bits, identical in Spark `conv(substr(md5(x),1,
+# 15),16,10)` and DuckDB `('0x'||substr(md5(x),1,15))::BIGINT`); MinHash
+# reduces it mod the Mersenne prime M31 (ocr_spark/streaming/neardup.py).
 
 # --- corpus-size-driven bucket parameters (scale rules) --------------------
 # Sign-LSH: bucket count must grow with the corpus or intra-bucket exact
@@ -475,21 +509,9 @@ def _shingle_fps(alld: DataFrame) -> DataFrame:
     distinct word-3-gram shingle.  The split array is materialized once
     per row (inlining split() into the lambda is O(words^2))."""
     words = alld.select("doc_id", F.split("text", " ").alias("w"))
-    shingles = F.expr(
-        "array_distinct(transform(sequence(1, greatest(size(w) - 2, 0)),"
-        " i -> concat_ws(' ', element_at(w, i),"
-        " element_at(w, i+1), element_at(w, i+2))))"
-    )
-    return (
-        words.select("doc_id", F.explode(shingles).alias("sh_str"))
-        .select(
-            "doc_id",
-            (
-                F.conv(F.substring(F.md5("sh_str"), 1, 15), 16, 10).cast("long")
-                % F.lit(_M31)
-            ).alias("fp"),
-        )
-    )
+    return words.select(
+        "doc_id", F.explode(word3_shingles("w")).alias("sh_str")
+    ).select("doc_id", shingle_fp(F.col("sh_str")).alias("fp"))
 
 # DuckDB twins of the helpers above (composed into oracle SQL below).
 _SQL_ALLD = """
@@ -566,20 +588,9 @@ def _shingle_fps64(alld: DataFrame) -> DataFrame:
     wide features; MinHash keeps the M31-reduced variant for affine-hash
     headroom)."""
     words = alld.select("doc_id", F.split("text", " ").alias("w"))
-    shingles = F.expr(
-        "array_distinct(transform(sequence(1, greatest(size(w) - 2, 0)),"
-        " i -> concat_ws(' ', element_at(w, i),"
-        " element_at(w, i+1), element_at(w, i+2))))"
-    )
-    return (
-        words.select("doc_id", F.explode(shingles).alias("sh_str"))
-        .select(
-            "doc_id",
-            F.conv(F.substring(F.md5("sh_str"), 1, 15), 16, 10)
-            .cast("long")
-            .alias("fp"),
-        )
-    )
+    return words.select(
+        "doc_id", F.explode(word3_shingles("w")).alias("sh_str")
+    ).select("doc_id", md5_long("sh_str").alias("fp"))
 
 
 _SQL_SHINGLE_FPS64 = _SQL_ALLD + """,
@@ -836,15 +847,11 @@ def _q_lang_id(spark, sf_dir):
 def _q_quality_score(spark, sf_dir):
     d = _docs_wide(spark, sf_dir)
     lower = F.lower(F.col("text"))
-    canon = F.trim(F.regexp_replace(lower, r"[ \t\r\n]+", " "))
     # two-step projection: each regex/split runs once per row, the score
     # expression below reads plain columns
     d = d.select(
         "doc_id",
-        F.when(F.length(canon) == 0, F.lit(0))
-        .otherwise(F.size(F.split(canon, " ")))
-        .cast("double")
-        .alias("_words"),
+        F.size(lower_words(lower)).cast("double").alias("_words"),
         F.size(
             F.regexp_extract_all(lower, F.lit(rf"\b({_STOPWORDS})\b"), F.lit(0))
         )
@@ -901,10 +908,7 @@ def _q_scrub_pii(spark, sf_dir):
 # training-data pipeline needs for auditable subsets.
 def _q_hash_sample(spark, sf_dir):
     d = _docs(spark, sf_dir)
-    bkt = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10)
-        .cast("long") % F.lit(100)
-    )
+    bkt = md5_long(F.col("doc_id").cast("string")) % F.lit(100)
     return d.groupBy("lang").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.count(F.when(bkt < 10, 1)).cast("long").alias("n_sampled"),
@@ -920,11 +924,7 @@ def _q_hash_sample(spark, sf_dir):
 # (vocab << corpus) and the join partitions by word.
 def _q_tfidf_top_terms(spark, sf_dir):
     d = _docs_wide(spark, sf_dir)
-    canon = F.lower(F.trim(F.regexp_replace(F.col("text"), r"[^A-Za-z ]", " ")))
-    words = d.select(
-        "doc_id",
-        F.explode(F.split(F.trim(F.regexp_replace(canon, r" +", " ")), " ")).alias("w"),
-    ).filter(F.length("w") >= 4)
+    words = word_rows(d, "doc_id", min_len=4)
     tf = words.groupBy("doc_id", "w").agg(F.count(F.lit(1)).alias("tf"))
     df_ = words.groupBy("w").agg(F.countDistinct("doc_id").alias("df"))
     scored = tf.join(df_, "w").select(
@@ -958,17 +958,7 @@ def _q_tfidf_top_terms(spark, sf_dir):
 # total words; past that the products move to decimal (P55 note).
 def _q_bm25_topk(spark, sf_dir):
     d = _docs_wide(spark, sf_dir)
-    canon = F.lower(F.trim(F.regexp_replace(F.col("text"), r"[^A-Za-z ]", " ")))
-    words = (
-        d.select(
-            "doc_id",
-            F.explode(
-                F.split(F.trim(F.regexp_replace(canon, r" +", " ")), " ")
-            ).alias("w"),
-        )
-        .filter(F.length("w") > 0)
-        .localCheckpoint(eager=False)
-    )
+    words = word_rows(d, "doc_id").localCheckpoint(eager=False)
     dl = words.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("dl")
     )
@@ -1038,17 +1028,7 @@ _INDEX_SALT = 64
 
 def _q_inverted_index(spark, sf_dir):
     d = _docs_wide(spark, sf_dir)
-    canon = F.lower(F.trim(F.regexp_replace(F.col("text"), r"[^A-Za-z ]", " ")))
-    pairs = (
-        d.select(
-            "doc_id",
-            F.explode(
-                F.split(F.trim(F.regexp_replace(canon, r" +", " ")), " ")
-            ).alias("w"),
-        )
-        .filter(F.length("w") > 0)
-        .distinct()
-    )
+    pairs = word_rows(d, "doc_id").distinct()
     salted = pairs.withColumn(
         "salt", (F.col("doc_id") % _INDEX_SALT).cast("int")
     )
@@ -1118,20 +1098,14 @@ def _q_pmi_bigrams(spark, sf_dir):
         )
         .otherwise(F.col("text")),
     )
-    canon = F.lower(F.trim(F.regexp_replace(F.col("text"), r"[^A-Za-z ]", " ")))
-    docs = d.select(
-        F.split(F.trim(F.regexp_replace(canon, r" +", " ")), " ").alias("ws")
-    ).localCheckpoint(eager=False)
+    docs = d.select(letter_words().alias("ws")).localCheckpoint(eager=False)
     uni = (
         docs.select(F.explode("ws").alias("w"))
         .filter(F.length("w") > 0)
         .groupBy("w")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
     )
-    bigrams = F.expr(
-        "transform(sequence(1, greatest(size(ws) - 1, 0)),"
-        " i -> concat(element_at(ws, i), ' ', element_at(ws, i+1)))"
-    )
+    bigrams = word_bigrams("ws")
     bcnt = (
         docs.select(F.explode(bigrams).alias("bg"))
         .groupBy("bg")
@@ -1184,14 +1158,12 @@ def _q_para_dedup(spark, sf_dir):
         )
         .otherwise(F.col("text")),
     )
-    canon = F.lower(F.trim(F.regexp_replace(F.col("text"), r"[^A-Za-z ]", " ")))
-    ws = F.split(F.trim(F.regexp_replace(canon, r" +", " ")), " ")
     chunks = F.expr(
         f"transform(sequence(1, (size(ws) + {_PARA_WORDS - 1}) div {_PARA_WORDS}),"
         f" i -> array_join(slice(ws, (i-1) * {_PARA_WORDS} + 1, {_PARA_WORDS}), ' '))"
     )
     paras = (
-        d.select("doc_id", ws.alias("ws"))
+        d.select("doc_id", letter_words().alias("ws"))
         .select("doc_id", F.posexplode(chunks).alias("pos", "para"))
         .localCheckpoint(eager=False)
     )
@@ -1233,11 +1205,9 @@ def _q_para_dedup(spark, sf_dir):
 # stats on the same doc_id partitioning, then one co-partitioned join.
 def _q_repetition_quality(spark, sf_dir):
     d = _docs_wide(spark, sf_dir)
-    canon = F.lower(F.trim(F.regexp_replace(F.col("text"), r"[^A-Za-z ]", " ")))
-    docs = d.select(
-        "doc_id",
-        F.split(F.trim(F.regexp_replace(canon, r" +", " ")), " ").alias("ws"),
-    ).localCheckpoint(eager=False)
+    docs = d.select("doc_id", letter_words().alias("ws")).localCheckpoint(
+        eager=False
+    )
     wstats = (
         docs.select("doc_id", F.explode("ws").alias("w"))
         .filter(F.length("w") > 0)
@@ -1250,10 +1220,7 @@ def _q_repetition_quality(spark, sf_dir):
             F.max("c").cast("long").alias("top_cnt"),
         )
     )
-    bigrams = F.expr(
-        "transform(sequence(1, greatest(size(ws) - 1, 0)),"
-        " i -> concat(element_at(ws, i), ' ', element_at(ws, i+1)))"
-    )
+    bigrams = word_bigrams("ws")
     bstats = (
         docs.select("doc_id", F.explode(bigrams).alias("bg"))
         .groupBy("doc_id", "bg")
@@ -1623,27 +1590,18 @@ _KMV_M = 1 << 40
 
 def _q_kmv_sketch(spark, sf_dir):
     d = _docs_wide(spark, sf_dir)
-    canon = F.lower(F.trim(F.regexp_replace(F.col("text"), r"[^A-Za-z ]", " ")))
     # element = word BIGRAM: the synthetic corpus has a ~30-word unigram
     # vocabulary per language (too small for K=64 sketches to mean
     # anything); bigrams give ~900 distinct elements per set
-    bigrams = F.expr(
-        "transform(sequence(1, greatest(size(ws) - 1, 0)),"
-        " i -> concat(element_at(ws, i), ' ', element_at(ws, i + 1)))"
-    )
+    bigrams = word_bigrams("ws")
     words = (
         d.filter(F.col("lang").isin("en", "fr"))
-        .select(
-            "lang",
-            F.split(F.trim(F.regexp_replace(canon, r" +", " ")), " ").alias("ws"),
-        )
+        .select("lang", letter_words().alias("ws"))
         .select("lang", F.explode(bigrams).alias("w"))
         .distinct()
         .localCheckpoint(eager=False)
     )
-    h = F.conv(
-        F.substring(F.md5(F.concat(F.lit("kmv:"), F.col("w"))), 1, 10), 16, 10
-    ).cast("long")
+    h = md5_long(F.concat(F.lit("kmv:"), F.col("w")), 10)
     hashes = words.select("lang", h.alias("h")).distinct()
     wk = Window.partitionBy("lang").orderBy("h")
     sk = (
@@ -1845,14 +1803,8 @@ def _q_bloom_join(spark, sf_dir):
     ).localCheckpoint(eager=False)
 
     def pos(r, col):
-        return (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit(f"bj{r}:"), col.cast("string"))),
-                    1, 15,
-                ),
-                16, 10,
-            ).cast("long") % F.lit(_BJ_BITS)
+        return md5_long(F.concat(F.lit(f"bj{r}:"), col.cast("string"))) % F.lit(
+            _BJ_BITS
         )
 
     def posarr(col):
@@ -1924,10 +1876,7 @@ _PRIO_K = 20
 
 def _q_priority_sample(spark, sf_dir):
     d = _docs(spark, sf_dir).select("doc_id", "n_chars")
-    u = F.conv(
-        F.substring(F.md5(F.concat(F.lit("pri:"), F.col("doc_id"))), 1, 10),
-        16, 10,
-    ).cast("long")
+    u = md5_long(F.concat(F.lit("pri:"), F.col("doc_id")), 10)
     pri = F.greatest(
         F.expr("u * 1000000 div greatest(n_chars, 1)"), F.lit(1)
     )
@@ -2121,19 +2070,12 @@ def _q_span_dedup(spark, sf_dir):
         )
         .otherwise(F.col("text")),
     )
-    canon = F.lower(F.trim(F.regexp_replace(F.col("text"), r"[^A-Za-z ]", " ")))
-    words = d.select(
-        "doc_id",
-        F.split(F.trim(F.regexp_replace(canon, r" +", " ")), " ").alias("ws"),
-    ).localCheckpoint(eager=False)
-    grams = (
-        f"if(size(ws) >= {_SPAN_GRAM},"
-        f" transform(sequence(1, size(ws) - {_SPAN_GRAM - 1}),"
-        f" i -> substring(md5(array_join(slice(ws, i, {_SPAN_GRAM}), ' ')),"
-        f" 1, 16)), array())"
+    words = d.select("doc_id", letter_words().alias("ws")).localCheckpoint(
+        eager=False
     )
     g = words.select(
-        "doc_id", F.posexplode(F.expr(grams)).alias("pos0", "gh")
+        "doc_id",
+        F.posexplode(gram_fingerprints("ws", _SPAN_GRAM)).alias("pos0", "gh"),
     ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "gh")
     repeated = (
         g.groupBy("gh")
@@ -2430,10 +2372,7 @@ def _q_target_mix_sample(spark, sf_dir):
         )
         .select("lang", "n_avail", "cap", "rate_ppm")
     )
-    bkt = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10)
-        .cast("long") % F.lit(1000000)
-    )
+    bkt = md5_long(F.col("doc_id").cast("string")) % F.lit(1000000)
     kept = bkt < F.col("rate_ppm")
     return (
         d.join(F.broadcast(rates), "lang")
@@ -2460,20 +2399,16 @@ def _q_target_mix_sample(spark, sf_dir):
 # table is _DSIR_BUCKETS rows (broadcast), the word table is scanned
 # once for stats and once for scoring (materialized in between), the
 # doc aggregate is a hash agg on doc_id — everything linear at 100 TB.
-_DSIR_BUCKETS = 256
+# The word bucket and the keep gate are shared with the streaming twin
+# (ocr_spark/streaming/extract_stream.py).
 
 
 def _q_importance_resample(spark, sf_dir):
     d = _docs(spark, sf_dir)
-    canon = F.trim(F.regexp_replace(F.lower(F.col("text")), r"[ \t\r\n]+", " "))
     w = d.select(
         "doc_id",
         (F.col("lang") == "en").alias("is_t"),
-        F.split(canon, " ").alias("ws"),
-    )
-    bkt = (
-        F.conv(F.substring(F.md5("wd"), 1, 15), 16, 10).cast("long")
-        % F.lit(_DSIR_BUCKETS)
+        lower_words("text").alias("ws"),
     )
     # (doc_id, is_t, b) materialized ONCE — the stats aggregate and the
     # scoring join both read it; without the checkpoint the split+md5
@@ -2481,7 +2416,7 @@ def _q_importance_resample(spark, sf_dir):
     wb = (
         w.select("doc_id", "is_t", F.explode("ws").alias("wd"))
         .filter(F.col("wd") != "")
-        .select("doc_id", "is_t", bkt.alias("b"))
+        .select("doc_id", "is_t", dsir_bucket(F.col("wd")).alias("b"))
         .localCheckpoint(eager=False)
     )
     stats = wb.groupBy("b").agg(
@@ -2510,26 +2445,12 @@ def _q_importance_resample(spark, sf_dir):
             F.sum("ratio_ppm").cast("long").alias("score_fp"),
         )
     )
-    doc_bkt = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10)
-        .cast("long") % F.lit(1000000)
+    scored = d.select("doc_id").join(perdoc, "doc_id", "left").select(
+        "doc_id",
+        F.coalesce("n_words", F.lit(0)).alias("n_words"),
+        F.coalesce("score_fp", F.lit(0)).alias("score_fp"),
     )
-    return (
-        d.select("doc_id")
-        .join(perdoc, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("n_words", F.lit(0)).alias("n_words"),
-            F.coalesce("score_fp", F.lit(0)).alias("score_fp"),
-        )
-        .withColumn(
-            "avg_ppm",
-            F.expr(
-                "case when n_words > 0 then score_fp div n_words else 0 end"
-            ),
-        )
-        .withColumn("kept", doc_bkt < F.least(F.col("avg_ppm"), F.lit(1000000)))
-    )
+    return with_dsir_keep(scored, F.col("doc_id").cast("string"))
 
 
 # C4 filters (P53): the line-and-page rule set from the C4 corpus
@@ -2550,13 +2471,7 @@ _C4_LINE_WORDS = 12
 
 def _q_c4_filters(spark, sf_dir):
     d = _docs(spark, sf_dir)
-    canon = F.trim(F.regexp_replace(F.lower(F.col("text")), r"[ \t\r\n]+", " "))
-    d = d.select(
-        "doc_id",
-        F.when(F.length(canon) == 0, F.expr("array()"))
-        .otherwise(F.split(canon, " "))
-        .alias("ws"),
-    )
+    d = d.select("doc_id", lower_words("text").alias("ws"))
     n_lines0 = f"greatest((size(ws) + {_C4_LINE_WORDS - 1}) div {_C4_LINE_WORDS}, 1)"
     base_lines = F.expr(
         f"transform(sequence(1, {n_lines0}),"
@@ -2704,61 +2619,13 @@ def _q_gopher_rules(spark, sf_dir):
             F.lit("".join(f"\n* bullet {i}" for i in range(10))),
         ).otherwise(F.lit("")),
     )
-    d = d.select("doc_id", page.alias("page"))
-    canon = F.trim(F.regexp_replace(F.lower(F.col("page")), r"[ \t\r\n]+", " "))
-    d = d.select(
-        "doc_id",
-        "page",
-        F.when(F.length(canon) == 0, F.expr("array()"))
-        .otherwise(F.split(canon, " "))
-        .alias("ws"),
-        F.split("page", "\n").alias("lines"),
+    d = gopher_features(
+        d.select("doc_id", page.alias("page")), "doc_id", stops=_GOPHER_STOPS
     )
-    d = d.select(
-        "doc_id",
-        F.size("ws").cast("long").alias("n_words"),
-        F.expr("aggregate(ws, 0L, (a, w) -> a + length(w))").alias("tot_chars"),
-        F.expr("size(filter(ws, w -> w rlike '[a-z]'))").cast("long")
-        .alias("alpha_words"),
-        F.expr(
-            f"size(array_intersect(array_distinct(ws), array{_GOPHER_STOPS}))"
-        ).cast("long").alias("n_req_stops"),
-        (
-            F.length("page") - F.length(F.regexp_replace("page", r"#", ""))
-            + F.floor(
-                (F.length("page")
-                 - F.length(F.expr("replace(page, '...', '')"))) / F.lit(3)
-            )
-        ).cast("long").alias("n_symbols"),
-        F.size("lines").cast("long").alias("n_lines"),
-        F.expr("size(filter(lines, l -> startswith(ltrim(l), '* ')))")
-        .cast("long").alias("bullet_lines"),
-        F.expr("size(filter(lines, l -> endswith(rtrim(l), '...')))")
-        .cast("long").alias("ellipsis_lines"),
-    )
-    pass_wc = (F.col("n_words") >= 50) & (F.col("n_words") <= 100000)
-    pass_mwl = (F.col("tot_chars") >= 3 * F.col("n_words")) & (
-        F.col("tot_chars") <= 10 * F.col("n_words")
-    ) & (F.col("n_words") > 0)
-    pass_sym = F.col("n_symbols") * 10 < F.col("n_words")
-    pass_bul = F.col("bullet_lines") * 10 < F.col("n_lines") * 9
-    pass_ell = F.col("ellipsis_lines") * 10 < F.col("n_lines") * 3
-    pass_alpha = F.col("alpha_words") * 10 >= F.col("n_words") * 8
-    pass_stop = F.col("n_req_stops") >= 2
     return d.select(
         "doc_id", "n_words", "tot_chars", "n_symbols",
         "bullet_lines", "ellipsis_lines",
-        pass_wc.alias("pass_word_count"),
-        pass_mwl.alias("pass_mean_wlen"),
-        pass_sym.alias("pass_symbol_ratio"),
-        pass_bul.alias("pass_bullet"),
-        pass_ell.alias("pass_ellipsis"),
-        pass_alpha.alias("pass_alpha"),
-        pass_stop.alias("pass_stopwords"),
-        (
-            pass_wc & pass_mwl & pass_sym & pass_bul & pass_ell
-            & pass_alpha & pass_stop
-        ).alias("pass_all"),
+        *gopher_passes(50, pass_stopwords=F.col("n_req_stops") >= 2),
     )
 
 
@@ -2776,13 +2643,7 @@ _CHUNK_STRIDE = 48
 
 def _q_chunk_windows(spark, sf_dir):
     d = _docs(spark, sf_dir)
-    canon = F.trim(F.regexp_replace(F.lower(F.col("text")), r"[ \t\r\n]+", " "))
-    w = d.select(
-        "doc_id",
-        F.when(F.length(canon) == 0, F.expr("array()"))
-        .otherwise(F.split(canon, " "))
-        .alias("ws"),
-    )
+    w = d.select("doc_id", lower_words("text").alias("ws"))
     starts = F.expr(
         f"sequence(1, greatest(size(ws), 1), {_CHUNK_STRIDE})"
     )
@@ -2816,10 +2677,7 @@ _PACK_SHARDS = 32
 
 def _q_pack_sequences(spark, sf_dir):
     d = _docs(spark, sf_dir)
-    canon = F.trim(F.regexp_replace(F.lower(F.col("text")), r"[ \t\r\n]+", " "))
-    n_words = F.when(F.length(canon) == 0, F.lit(0)).otherwise(
-        F.size(F.split(canon, " "))
-    ).cast("long")
+    n_words = F.size(lower_words("text")).cast("long")
     w = d.select(
         "doc_id", "lang",
         (F.col("doc_id") % _PACK_SHARDS).cast("long").alias("shard"),
@@ -2856,7 +2714,6 @@ def _q_pack_sequences(spark, sf_dir):
 # keys, ~10x less shuffle/broadcast payload than raw 13-word strings)
 # probed map-side — no shuffle of corpus grams at all; explode_outer
 # keeps sub-13-word docs in the report with n_grams = 0.
-_DECON_GRAM = 13
 _DECON_BENCH_MOD = 97
 _DECON_PLANT_MOD = 13
 _DECON_PLANT_RES = 5
@@ -2864,20 +2721,10 @@ _DECON_PLANT_RES = 5
 
 def _q_decontaminate(spark, sf_dir):
     d = _docs_wide(spark, sf_dir)
-    canon = F.lower(F.trim(F.regexp_replace(F.col("text"), r"[^A-Za-z ]", " ")))
-    w = d.select(
-        "doc_id",
-        F.split(F.trim(F.regexp_replace(canon, r" +", " ")), " ").alias("ws"),
-    )
-    grams = (
-        f"if(size(ws) >= {_DECON_GRAM},"
-        f" transform(sequence(1, size(ws) - {_DECON_GRAM - 1}),"
-        f" i -> substring(md5(array_join(slice(ws, i, {_DECON_GRAM}), ' ')),"
-        f" 1, 16)), array())"
-    )
+    w = d.select("doc_id", letter_words().alias("ws"))
     bench = w.filter(F.col("doc_id") % _DECON_BENCH_MOD == 0)
     bench_grams = (
-        bench.select(F.explode(F.expr(grams)).alias("gh"))
+        bench.select(F.explode(gram_fingerprints("ws", _DECON_GRAM)).alias("gh"))
         .distinct()
         .withColumn("hit", F.lit(1))
     )
@@ -2903,7 +2750,10 @@ def _q_decontaminate(spark, sf_dir):
         )
     )
     return (
-        corpus.select("doc_id", F.explode_outer(F.expr(grams)).alias("gh"))
+        corpus.select(
+            "doc_id",
+            F.explode_outer(gram_fingerprints("ws", _DECON_GRAM)).alias("gh"),
+        )
         .join(F.broadcast(bench_grams), "gh", "left")
         .groupBy("doc_id")
         .agg(
@@ -2939,16 +2789,11 @@ def _q_ngram_jaccard(spark, sf_dir):
     # transform lambda would re-split the text for every shingle element
     # (O(words^2) splits per doc — measured 10x slowdown)
     words = alld.select("doc_id", F.split("text", " ").alias("w"))
-    shingles = F.expr(
-        "array_distinct(transform(sequence(1, greatest(size(w) - 2, 0)),"
-        " i -> concat_ws(' ', element_at(w, i),"
-        " element_at(w, i+1), element_at(w, i+2))))"
-    )
     # join on a 64-bit shingle hash, not the shingle string: ~10x less
     # shuffle payload and long-key hash join.  xxhash64 collisions across
     # ~N*100 distinct shingles are negligible (<<1e-9 at any tested sf)
     # and would only perturb one pair's `shared` count by 1.
-    s = words.select("doc_id", F.explode(shingles).alias("sh_str")).select(
+    s = words.select("doc_id", F.explode(word3_shingles("w")).alias("sh_str")).select(
         "doc_id", F.xxhash64("sh_str").alias("sh")
     )
     n = s.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
@@ -3022,30 +2867,17 @@ def _q_minhash_lsh(spark, sf_dir):
     # subtree (the count previously came from a separate groupBy)
     sig = s.groupBy("doc_id").agg(
         *[
-            F.min(
-                (F.lit(_MINHASH_A[k]) * F.col("fp") + F.lit(_MINHASH_B[k]))
-                % F.lit(_M31)
-            ).alias(f"mh{k}")
+            F.min(minhash(k, F.col("fp"))).alias(f"mh{k}")
             for k in range(8)
         ],
         F.count(F.lit(1)).alias("n_sh"),
     ).localCheckpoint(eager=False)      # tiny; self-joined via bands
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(j).alias("band"),
-                F.col(f"mh{2 * j}").alias("mh0"),
-                F.col(f"mh{2 * j + 1}").alias("mh1"),
-            )
-            for j in range(4)
-        ]
-    )
     # n_sh RIDES THROUGH the band rows and the candidate join, so the
     # exact-verify stage needs no join back to the signature table
     # (which would re-run its aggregation twice — self-join aliases get
     # no exchange reuse)
     bands = sig.select(
-        "doc_id", "n_sh", F.explode(band_structs).alias("b")
+        "doc_id", "n_sh", F.explode(minhash_bands()).alias("b")
     ).select("doc_id", "n_sh", "b.band", "b.mh0", "b.mh1")
     ba = bands.alias("ba")
     bb = bands.alias("bb")
@@ -3252,13 +3084,9 @@ def _q_cluster_keeper(spark, sf_dir):
     lab = labels.select("doc_id", F.col("lab").alias("component_id"))
     alld = _docs_with_planted_dups(spark, sf_dir)
     lower = F.lower(F.col("text"))
-    canon = F.trim(F.regexp_replace(lower, r"[ \t\r\n]+", " "))
     q = alld.select(
         "doc_id",
-        F.when(F.length(canon) == 0, F.lit(0))
-        .otherwise(F.size(F.split(canon, " ")))
-        .cast("double")
-        .alias("_w"),
+        F.size(lower_words(lower)).cast("double").alias("_w"),
         F.size(
             F.regexp_extract_all(lower, F.lit(rf"\b({_STOPWORDS})\b"), F.lit(0))
         )
@@ -3301,36 +3129,20 @@ def _q_cluster_keeper(spark, sf_dir):
 # or federated frequency estimator needs at 100 TB (estimate(word) =
 # min over rows of its 4 cells; overestimates only, never under).
 # Hashing is the cross-engine md5 fingerprint with per-row salts, so
-# both engines build the identical sketch.
-_CM_ROWS = 4
-_CM_COLS = 256
+# both engines build the identical sketch (`cm_cells`, shared with the
+# streaming twin in ocr_spark/streaming/sketch.py).
 
 
 def _q_countmin_sketch(spark, sf_dir):
     d = _docs_wide(spark, sf_dir)
-    canon = F.lower(F.trim(F.regexp_replace(F.col("text"), r"[^A-Za-z ]", " ")))
-    words = d.select(
-        F.explode(
-            F.split(F.trim(F.regexp_replace(canon, r" +", " ")), " ")
-        ).alias("w")
-    ).filter(F.length("w") > 0)
     # ONE pass over the words subtree: each word explodes into its
     # _CM_ROWS (row_id, col_id) cells in place.  The previous 4-way
     # unionByName re-ran the canonicalize-regex + explode once per sketch
     # row (4x corpus scan at 100 TB — the branches differed only in the
     # salt literal, so no exchange reuse applied).
-    cell = lambda r: (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit(f"cm{r}:"), F.col("w"))), 1, 15),
-            16, 10,
-        ).cast("long") % F.lit(_CM_COLS)
-    )
-    cells = F.array(*[
-        F.struct(F.lit(r).cast("long").alias("row_id"), cell(r).alias("col_id"))
-        for r in range(_CM_ROWS)
-    ])
     return (
-        words.select(F.explode(cells).alias("c"))
+        word_rows(d)
+        .select(F.explode(cm_cells(F.col("w"))).alias("c"))
         .select("c.row_id", "c.col_id")
         .groupBy("row_id", "col_id")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
@@ -3353,26 +3165,8 @@ _CM_PHI_MILLE = 5  # phi = 0.5% of all word occurrences
 
 def _q_cm_heavy_hitters(spark, sf_dir):
     d = _docs_wide(spark, sf_dir)
-    canon = F.lower(F.trim(F.regexp_replace(F.col("text"), r"[^A-Za-z ]", " ")))
-    words = (
-        d.select(
-            F.explode(
-                F.split(F.trim(F.regexp_replace(canon, r" +", " ")), " ")
-            ).alias("w")
-        )
-        .filter(F.length("w") > 0)
-        .localCheckpoint(eager=False)
-    )
-    cell = lambda r: (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit(f"cm{r}:"), F.col("w"))), 1, 15),
-            16, 10,
-        ).cast("long") % F.lit(_CM_COLS)
-    )
-    cells = F.array(*[
-        F.struct(F.lit(r).cast("long").alias("row_id"), cell(r).alias("col_id"))
-        for r in range(_CM_ROWS)
-    ])
+    words = word_rows(d).localCheckpoint(eager=False)
+    cells = cm_cells(F.col("w"))
     sketch = (
         words.select(F.explode(cells).alias("c"))
         .select("c.row_id", "c.col_id")
@@ -3427,12 +3221,7 @@ def _q_bloom_filter(spark, sf_dir):
     ).localCheckpoint(eager=False)      # build AND probe: one corpus scan
 
     def pos(r, col):
-        return (
-            F.conv(
-                F.substring(F.md5(F.concat(F.lit(f"bf{r}:"), col)), 1, 15),
-                16, 10,
-            ).cast("long") % F.lit(_BF_BITS)
-        )
+        return md5_long(F.concat(F.lit(f"bf{r}:"), col)) % F.lit(_BF_BITS)
 
     def posarr(col):
         return F.array(*[pos(r, col) for r in range(_BF_K)])
@@ -3473,64 +3262,30 @@ def _q_bloom_filter(spark, sf_dir):
 # stream-mergeable like Count-Min/Bloom/quantile-histogram.  All
 # arithmetic is integer (rho via the bin() string length both engines
 # share; Z and the alpha*m^2/Z estimate in 2^30 fixed point), so the
-# estimate matches DuckDB bit-for-bit — no float libm divergence.
-_HLL_M = 64                             # registers (p = 6)
-_HLL_S = 1 << 30                        # fixed-point scale for Z
+# estimate matches DuckDB bit-for-bit — no float libm divergence.  The
+# register builders and the fold are shared with the streaming twin
+# (ocr_spark/streaming/sketch.py).
 
 
 def _q_hll_distinct(spark, sf_dir):
     d = _docs_wide(spark, sf_dir)
-    canon = F.lower(F.trim(F.regexp_replace(F.col("text"), r"[^A-Za-z ]", " ")))
     words = (
-        d.select(
-            "lang",
-            F.explode(
-                F.split(F.trim(F.regexp_replace(canon, r" +", " ")), " ")
-            ).alias("w"),
-        )
-        .filter(F.length("w") >= 4)
+        word_rows(d, "lang", min_len=4)
         .distinct()
         .localCheckpoint(eager=False)   # feeds sketch AND exact sides
-    )
-    h = F.conv(
-        F.substring(F.md5(F.concat(F.lit("hll:"), F.col("w"))), 1, 15), 16, 10
-    ).cast("long")
-    hw = words.select("lang", h.alias("h")).select(
-        "lang",
-        (F.col("h") % _HLL_M).alias("j"),
-        F.expr(f"h div {_HLL_M}").alias("h2"),   # 54 remaining hash bits
-    )
-    # rho = leading-zero count + 1 within the 54-bit tail; bitlen via
-    # the binary-string length (exact integer path in both engines)
-    rho = F.when(F.col("h2") == 0, F.lit(55)).otherwise(
-        F.lit(55) - F.length(F.expr("bin(h2)"))
-    )
-    regs = (
-        hw.select("lang", "j", rho.alias("m"))
-        .groupBy("lang", "j")
-        .agg(F.max("m").alias("m"))
-    )
-    per_lang = regs.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_set"),
-        F.sum(F.expr(f"shiftright({_HLL_S}, m)")).alias("z_set"),
     )
     exact = words.groupBy("lang").agg(
         F.count(F.lit(1)).cast("long").alias("exact_distinct")
     )
-    z = F.col("z_set") + (F.lit(_HLL_M) - F.col("n_set")) * F.lit(_HLL_S)
-    est = F.expr(
-        f"(709 * {_HLL_M} * {_HLL_M} * cast({_HLL_S} as bigint))"
-        f" div (1000 * z_fp)"
-    )
     return (
-        per_lang.withColumn("z_fp", z.cast("long"))
+        hll_fold(hll_registers(words, "lang"), "lang")
         .join(F.broadcast(exact), "lang")
         .select(
             "lang",
             F.col("n_set").cast("long").alias("n_set"),
             (F.lit(_HLL_M) - F.col("n_set")).cast("long").alias("v_zero"),
             "z_fp",
-            est.cast("long").alias("est_distinct"),
+            "est_distinct",
             "exact_distinct",
         )
     )
@@ -4354,10 +4109,7 @@ def _q_funnel(spark, sf_dir):
 # just how many.
 def _q_stratified_sample(spark, sf_dir):
     d = _docs(spark, sf_dir)
-    bkt = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10)
-        .cast("long") % F.lit(100)
-    )
+    bkt = md5_long(F.col("doc_id").cast("string")) % F.lit(100)
     rate = F.when(F.col("lang") == "en", F.lit(5)).otherwise(F.lit(20))
     kept = bkt < rate
     return d.groupBy("lang").agg(

@@ -10,7 +10,9 @@ Every constant cites the reference computation it generalizes
 
 # --- payload guards ------------------------------------------------------
 # G/F2: reference caps uploads at 16 MB (main.py:6 MAX_CONTENT_LENGTH).
-# Oversize turn payloads are truncated (chars) and flagged, never dropped.
+# Oversize turn payloads are truncated (chars), never dropped.  canonicalize
+# reports the truncation, but no output column carries it yet (counting
+# it belongs to the run report, ROADMAP item 3).
 MAX_TURN_CHARS = 16 * 1024 * 1024
 
 # --- segmentation-level density thresholding -----------------------------

@@ -1,8 +1,8 @@
-"""G1/G2/G17: payload canonicalization + polarity detection.
+"""G1/G17: payload canonicalization.
 
-Generalizes the reference's channel collapse + polarity normalization
-(/root/reference/handwriting/predict.py:44,48-49) and canonical fixed-form
-normalization (predict.py:190-207): the turn payload is normalized to one
+Generalizes the reference's channel collapse (predict.py:44) and
+canonical fixed-form normalization (predict.py:190-207): the turn
+payload is normalized to one
 canonical character stream that every later stage (offsets, spans,
 extracted_text) indexes into.
 """
@@ -46,20 +46,6 @@ def canonicalize(text: str) -> tuple[str, bool]:
     if " \n" in text:
         text = _RE_TRAIL.sub("\n", text)
     return text, truncated
-
-
-def tag_char_fraction(canon: str) -> float:
-    """G2 polarity predicate: fraction of characters inside <...> markup.
-
-    Mirrors the mean<127 auto-invert (predict.py:48-49): decides whether
-    the payload is markup-dominant (markup is 'background', visible text
-    is the signal) — recorded as a feature, the pipeline itself is
-    polarity-stable because density is always measured on visible text.
-    """
-    if not canon:
-        return 0.0
-    tag_chars = sum(m.end() - m.start() for m in _RE_TAG.finditer(canon))
-    return tag_chars / len(canon)
 
 
 def strip_tags(s: str) -> str:

@@ -27,6 +27,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from ocr_spark.functions.text import word3_shingles
+
 __all__ = ["shingle_table", "prefix_jaccard_pairs"]
 
 
@@ -36,13 +38,8 @@ def shingle_table(docs: DataFrame) -> DataFrame:
     document frequencies, the prefixes, and the verify sets — Spark's
     exchange reuse does not fire across self-join aliases."""
     words = docs.select("doc_id", F.split("text", " ").alias("w"))
-    shingles = F.expr(
-        "array_distinct(transform(sequence(1, greatest(size(w) - 2, 0)),"
-        " i -> concat_ws(' ', element_at(w, i),"
-        " element_at(w, i+1), element_at(w, i+2))))"
-    )
     return (
-        words.select("doc_id", F.explode(shingles).alias("sh_str"))
+        words.select("doc_id", F.explode(word3_shingles("w")).alias("sh_str"))
         .select("doc_id", F.xxhash64("sh_str").alias("sh"))
         .localCheckpoint(eager=False)
     )

@@ -39,6 +39,31 @@ def read_transcripts(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(TRANSCRIPTS_SCHEMA).parquet(path)
 
 
+# The documents stream the sketch and near-dup twins read (the sandbox
+# stand-in for a crawl feed): a text corpus with event times.
+DOCS_STREAM_SCHEMA = "doc_id long, lang string, text string, ts timestamp"
+
+
+def read_stream(
+    spark: SparkSession,
+    path: str,
+    schema: T.StructType | str = TRANSCRIPTS_SCHEMA,
+    max_files_per_trigger: int | None = None,
+) -> DataFrame:
+    """S1's streaming twin: a file-arrival stream of parquet under
+    `schema` (streaming sources need a declared schema, no inference).
+    Every streaming entry point reads through here, so a bad
+    `max_files_per_trigger` raises before any query starts."""
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger is not None:
+        if max_files_per_trigger <= 0:
+            raise ValueError(
+                f"max_files_per_trigger must be positive, got {max_files_per_trigger}"
+            )
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.parquet(path)
+
+
 def transcripts_from_pandas(spark: SparkSession, pdf) -> DataFrame:
     """Fixture ingestion (S4): Arrow-path createDataFrame, fixed schema."""
     return spark.createDataFrame(pdf, schema=TRANSCRIPTS_SCHEMA)

@@ -8,7 +8,6 @@ from ocr_spark.streaming.extract_stream import (  # noqa: F401
     run_importance_stream,
     run_quality_gate_stream,
     run_turn_rate_stream,
-    stream_transcripts,
 )
 from ocr_spark.streaming.funnel import (  # noqa: F401
     run_funnel_stream,

@@ -22,27 +22,22 @@ Design notes (scale):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from functools import reduce
+from operator import and_
+
+import pyspark.sql.functions as F
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
+from ocr_spark.functions.text import (
+    gram_fingerprints,
+    letter_words,
+    lower_words,
+    md5_long,
+)
 from ocr_spark.operators.extract_op import extract_turns
 from ocr_spark.sinks.writers import start_parquet_sink
-from ocr_spark.sources.transcripts import TRANSCRIPTS_SCHEMA
-
-
-def stream_transcripts(
-    spark: SparkSession, input_path: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    """S1 streaming twin: a file-arrival stream of transcript parquet.
-    Schema must be declared for streaming sources (no inference)."""
-    reader = spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-    if max_files_per_trigger is not None:
-        if max_files_per_trigger <= 0:
-            raise ValueError(
-                f"max_files_per_trigger must be positive, got {max_files_per_trigger}"
-            )
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(input_path)
+from ocr_spark.sources.transcripts import TRANSCRIPTS_SCHEMA, read_stream
 
 
 def run_turn_rate_stream(
@@ -65,9 +60,7 @@ def run_turn_rate_stream(
     turn rates feed capacity planning for the 10^12-turn pipeline); state
     is bounded by watermark horizon, not stream length.
     """
-    import pyspark.sql.functions as F
-
-    turns = stream_transcripts(spark, input_path, max_files_per_trigger)
+    turns = read_stream(spark, input_path, TRANSCRIPTS_SCHEMA, max_files_per_trigger)
     agg = (
         turns.withWatermark("ts", watermark)
         .groupBy(F.window("ts", window).alias("win"), "role")
@@ -91,7 +84,7 @@ def run_extract_stream(
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Start the streaming extraction query (returns the live query)."""
-    turns = stream_transcripts(spark, input_path, max_files_per_trigger)
+    turns = read_stream(spark, input_path, TRANSCRIPTS_SCHEMA, max_files_per_trigger)
     extracted = extract_turns(turns)
     return start_parquet_sink(extracted, output_path, checkpoint_path, available_now)
 
@@ -113,7 +106,7 @@ def run_enrich_stream(
     so at 10^12 turns this stays a per-batch map-side hash join.  Left
     join: an unmatched turn passes through with NULL enrichment (the
     ingest contract never drops data because a dim row is late)."""
-    turns = stream_transcripts(spark, input_path, max_files_per_trigger)
+    turns = read_stream(spark, input_path, TRANSCRIPTS_SCHEMA, max_files_per_trigger)
     enriched = turns.join(dim_df, "conv_id", "left")
     return start_parquet_sink(enriched, output_path, checkpoint_path, available_now)
 
@@ -142,9 +135,7 @@ def run_dedup_stream(
     is not a repeated payload): they get a per-row key and always pass
     through.  Empty-string payloads DO dedup against each other.
     """
-    import pyspark.sql.functions as F
-
-    turns = stream_transcripts(spark, input_path, max_files_per_trigger)
+    turns = read_stream(spark, input_path, TRANSCRIPTS_SCHEMA, max_files_per_trigger)
     dedup_key = F.when(
         F.col("text").isNotNull(), F.md5("text")
     ).otherwise(F.concat_ws("#", F.lit("null"), "conv_id", "turn_idx"))
@@ -205,17 +196,7 @@ def run_decontam_stream(
     batch P36 counts occurrences; a turn is contaminated under either
     definition iff n_hits > 0, which is the gate that matters).
     """
-    import pyspark.sql.functions as F
-
-    turns = stream_transcripts(spark, input_path, max_files_per_trigger)
-    canon = F.lower(F.trim(F.regexp_replace(F.col("text"), r"[^A-Za-z ]", " ")))
-    ws = F.split(F.trim(F.regexp_replace(canon, r" +", " ")), " ")
-    grams = F.expr(
-        f"if(size(ws) >= {gram},"
-        f" transform(sequence(1, size(ws) - {gram - 1}),"
-        f" i -> substring(md5(array_join(slice(ws, i, {gram}), ' ')), 1, 16)),"
-        f" array())"
-    )
+    turns = read_stream(spark, input_path, TRANSCRIPTS_SCHEMA, max_files_per_trigger)
     # empty-set cast keeps array_intersect type-resolved when the
     # benchmark list is empty (array() alone is array<void>)
     bench = (
@@ -224,8 +205,8 @@ def run_decontam_stream(
         else F.array().cast("array<string>")
     )
     flagged = (
-        turns.withColumn("ws", ws)
-        .withColumn("g", grams)
+        turns.withColumn("ws", letter_words())
+        .withColumn("g", gram_fingerprints("ws", gram))
         .select(
             "conv_id",
             "turn_idx",
@@ -236,6 +217,71 @@ def run_decontam_stream(
         .withColumn("contaminated", F.col("n_hits") > 0)
     )
     return start_parquet_sink(flagged, output_path, checkpoint_path, available_now)
+
+
+def gopher_features(
+    df: DataFrame, *keys: str, stops: str | None = None
+) -> DataFrame:
+    """(keys..., page) -> (keys..., n_words, tot_chars, alpha_words,
+    n_symbols, n_lines, bullet_lines, ellipsis_lines): the per-text
+    counts the Gopher rules gate on, all integers.  With `stops` (a SQL
+    tuple literal of words) also n_req_stops, how many of them occur."""
+    d = df.select(
+        *keys,
+        "page",
+        lower_words(F.col("page")).alias("ws"),
+        F.split("page", "\n").alias("lines"),
+    )
+    req_stops = (
+        [
+            F.expr(f"size(array_intersect(array_distinct(ws), array{stops}))")
+            .cast("long").alias("n_req_stops")
+        ]
+        if stops is not None
+        else []
+    )
+    return d.select(
+        *keys,
+        F.size("ws").cast("long").alias("n_words"),
+        F.expr("aggregate(ws, 0L, (a, w) -> a + length(w))").alias("tot_chars"),
+        F.expr("size(filter(ws, w -> w rlike '[a-z]'))").cast("long")
+        .alias("alpha_words"),
+        *req_stops,
+        (
+            F.length("page") - F.length(F.regexp_replace("page", r"#", ""))
+            + F.floor(
+                (F.length("page")
+                 - F.length(F.expr("replace(page, '...', '')"))) / F.lit(3)
+            )
+        ).cast("long").alias("n_symbols"),
+        F.size("lines").cast("long").alias("n_lines"),
+        F.expr("size(filter(lines, l -> startswith(ltrim(l), '* ')))")
+        .cast("long").alias("bullet_lines"),
+        F.expr("size(filter(lines, l -> endswith(rtrim(l), '...')))")
+        .cast("long").alias("ellipsis_lines"),
+    )
+
+
+def gopher_passes(min_words: int, **extra: Column) -> list[Column]:
+    """The six Gopher pass predicates over `gopher_features` columns,
+    then any `extra` ones, then their conjunction pass_all.  Integer
+    cross-multiplied (symbols*10 < words encodes ratio < 0.1), so no
+    division can diverge between engines."""
+    n = F.col("n_words")
+    preds = {
+        "pass_word_count": (n >= min_words) & (n <= 100000),
+        "pass_mean_wlen": (F.col("tot_chars") >= 3 * n)
+        & (F.col("tot_chars") <= 10 * n)
+        & (n > 0),
+        "pass_symbol_ratio": F.col("n_symbols") * 10 < n,
+        "pass_bullet": F.col("bullet_lines") * 10 < F.col("n_lines") * 9,
+        "pass_ellipsis": F.col("ellipsis_lines") * 10 < F.col("n_lines") * 3,
+        "pass_alpha": F.col("alpha_words") * 10 >= n * 8,
+        **extra,
+    }
+    return [c.alias(k) for k, c in preds.items()] + [
+        reduce(and_, preds.values()).alias("pass_all")
+    ]
 
 
 def run_quality_gate_stream(
@@ -251,74 +297,45 @@ def run_quality_gate_stream(
     MassiveText heuristic rules applied per turn DURING ingest, so junk
     payloads are flagged before they ever reach the training sink.
 
-    Same integer-arithmetic predicates as the batch q_gopher_rules
-    (symbols*10 < words encodes ratio < 0.1 — no float division), minus
-    the required-stopword test: turn-level payloads are routinely a few
-    words long, where a stopword test is noise; the batch rule applies
-    it at document level after conversation assembly.  The word floor
-    defaults to 5 (turns are shorter than documents).  Pure stateless
-    per-row map: no state store, no watermark, exactly-once via the
-    file sink's transaction log.
+    The batch q_gopher_rules' own features and predicates
+    (`gopher_features`, `gopher_passes`), minus the required-stopword
+    test: turn-level payloads are routinely a few words long, where a
+    stopword test is noise; the batch rule applies it at document level
+    after conversation assembly.  The word floor defaults to 5 (turns
+    are shorter than documents).  Pure stateless per-row map: no state
+    store, no watermark, exactly-once via the file sink's transaction
+    log.
     """
-    import pyspark.sql.functions as F
-
-    turns = stream_transcripts(spark, input_path, max_files_per_trigger)
-    canon = F.trim(
-        F.regexp_replace(F.lower(F.coalesce(F.col("text"), F.lit(""))),
-                         r"[ \t\r\n]+", " ")
-    )
-    t = turns.select(
-        "conv_id", "turn_idx", "ts",
-        F.when(F.length(canon) == 0, F.expr("array()"))
-        .otherwise(F.split(canon, " "))
-        .alias("ws"),
-        F.split(F.coalesce(F.col("text"), F.lit("")), "\n").alias("lines"),
-        F.coalesce(F.col("text"), F.lit("")).alias("page"),
-    )
-    t = t.select(
-        "conv_id", "turn_idx", "ts",
-        F.size("ws").cast("long").alias("n_words"),
-        F.expr("aggregate(ws, 0L, (a, w) -> a + length(w))").alias("tot_chars"),
-        F.expr("size(filter(ws, w -> w rlike '[a-z]'))").cast("long")
-        .alias("alpha_words"),
-        (
-            F.length("page") - F.length(F.regexp_replace("page", r"#", ""))
-            + F.floor(
-                (F.length("page")
-                 - F.length(F.expr("replace(page, '...', '')"))) / F.lit(3)
-            )
-        ).cast("long").alias("n_symbols"),
-        F.size("lines").cast("long").alias("n_lines"),
-        F.expr("size(filter(lines, l -> startswith(ltrim(l), '* ')))")
-        .cast("long").alias("bullet_lines"),
-        F.expr("size(filter(lines, l -> endswith(rtrim(l), '...')))")
-        .cast("long").alias("ellipsis_lines"),
-    )
-    pass_wc = (F.col("n_words") >= min_words) & (F.col("n_words") <= 100000)
-    pass_mwl = (
-        (F.col("tot_chars") >= 3 * F.col("n_words"))
-        & (F.col("tot_chars") <= 10 * F.col("n_words"))
-        & (F.col("n_words") > 0)
-    )
-    pass_sym = F.col("n_symbols") * 10 < F.col("n_words")
-    pass_bul = F.col("bullet_lines") * 10 < F.col("n_lines") * 9
-    pass_ell = F.col("ellipsis_lines") * 10 < F.col("n_lines") * 3
-    pass_alpha = F.col("alpha_words") * 10 >= F.col("n_words") * 8
-    gated = t.select(
-        "conv_id", "turn_idx", "ts", "n_words",
-        pass_wc.alias("pass_word_count"),
-        pass_mwl.alias("pass_mean_wlen"),
-        pass_sym.alias("pass_symbol_ratio"),
-        pass_bul.alias("pass_bullet"),
-        pass_ell.alias("pass_ellipsis"),
-        pass_alpha.alias("pass_alpha"),
-        (pass_wc & pass_mwl & pass_sym & pass_bul & pass_ell & pass_alpha)
-        .alias("pass_all"),
+    turns = read_stream(spark, input_path, TRANSCRIPTS_SCHEMA, max_files_per_trigger)
+    keys = ("conv_id", "turn_idx", "ts")
+    pages = turns.select(*keys, F.coalesce(F.col("text"), F.lit("")).alias("page"))
+    gated = gopher_features(pages, *keys).select(
+        *keys, "n_words", *gopher_passes(min_words)
     )
     return start_parquet_sink(gated, output_path, checkpoint_path, available_now)
 
 
 DSIR_BUCKETS = 256
+
+
+def dsir_bucket(w: Column, buckets: int = DSIR_BUCKETS) -> Column:
+    """The hashed-unigram bucket of word `w` (`bucket` in
+    dsir_ratio_table)."""
+    return md5_long(w) % F.lit(buckets)
+
+
+def with_dsir_keep(scored: DataFrame, key: Column) -> DataFrame:
+    """(..., n_words, score_fp) -> + avg_ppm, the integer mean per-word
+    ratio, + kept: the row's md5 bucket of `key` (in ppm) under the
+    capped average ratio — reproducible across engines, runs and
+    restarts."""
+    return scored.withColumn(
+        "avg_ppm",
+        F.expr("case when n_words > 0 then score_fp div n_words else 0 end"),
+    ).withColumn(
+        "kept",
+        md5_long(key) % F.lit(1000000) < F.least(F.col("avg_ppm"), F.lit(1000000)),
+    )
 
 
 def dsir_ratio_table(
@@ -383,47 +400,27 @@ def run_importance_stream(
     (conv_id, turn_idx) so a turn's verdict is reproducible across
     restarts and reprocessing.
     """
-    import pyspark.sql.functions as F
-
     if len(ratio_ppm) == 0:
         raise ValueError("ratio_ppm table must be non-empty")
     buckets = len(ratio_ppm)
     rat = F.array(*[F.lit(int(r)) for r in ratio_ppm])
-    turns = stream_transcripts(spark, input_path, max_files_per_trigger)
-    canon = F.trim(
-        F.regexp_replace(F.lower(F.coalesce(F.col("text"), F.lit(""))),
-                         r"[ \t\r\n]+", " ")
-    )
+    turns = read_stream(spark, input_path, TRANSCRIPTS_SCHEMA, max_files_per_trigger)
     t = turns.select(
         "conv_id", "turn_idx", "ts",
-        F.when(F.length(canon) == 0, F.expr("array()"))
-        .otherwise(F.split(canon, " "))
+        F.filter(lower_words(F.coalesce(F.col("text"), F.lit(""))), lambda w: w != "")
         .alias("ws"),
     ).withColumn("rat", rat)
-    score = F.expr(
-        "aggregate(filter(ws, w -> w != ''),"
-        " 0L,"
-        f" (a, w) -> a + element_at(rat, cast(cast(conv(substring(md5(w), 1, 15), 16, 10) as bigint) % {buckets} + 1 as int)))"
+    score = F.aggregate(
+        "ws",
+        F.lit(0).cast("long"),
+        lambda a, w: a + F.element_at("rat", (dsir_bucket(w, buckets) + 1).cast("int")),
     )
-    n_words = F.expr("size(filter(ws, w -> w != ''))").cast("long")
     keyed = t.select(
         "conv_id", "turn_idx", "ts",
-        n_words.alias("n_words"),
+        F.size("ws").cast("long").alias("n_words"),
         score.alias("score_fp"),
-    ).withColumn(
-        "avg_ppm",
-        F.expr("case when n_words > 0 then score_fp div n_words else 0 end"),
     )
-    gate = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat_ws(":", "conv_id", F.col("turn_idx").cast("string"))),
-                1, 15,
-            ),
-            16, 10,
-        ).cast("long") % F.lit(1000000)
-    )
-    scored = keyed.withColumn(
-        "kept", gate < F.least(F.col("avg_ppm"), F.lit(1000000))
+    scored = with_dsir_keep(
+        keyed, F.concat_ws(":", "conv_id", F.col("turn_idx").cast("string"))
     )
     return start_parquet_sink(scored, output_path, checkpoint_path, available_now)

@@ -25,6 +25,7 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ocr_spark.sinks.writers import start_parquet_sink
+from ocr_spark.sources.transcripts import read_stream
 
 EVENTS_STREAM_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string"
@@ -98,10 +99,8 @@ def run_funnel_stream(
     available_now: bool = False,
     watermark: str = "30 minutes",
 ) -> StreamingQuery:
-    events = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-        .parquet(input_path)
-        .withWatermark("ts", watermark)
+    events = read_stream(spark, input_path, EVENTS_STREAM_SCHEMA).withWatermark(
+        "ts", watermark
     )
     stages: DataFrame = events.groupBy("user_id").applyInPandasWithState(
         _funnel,

@@ -3,9 +3,10 @@ MinHash+LSH pipeline (P3, `__spark_entry__._q_minhash_lsh`).
 
 Stage map (batch -> stream):
   - shingle fingerprints + K=8 affine min-hash signature + 4x2 banding:
-    identical STATELESS expressions (array functions instead of the
-    batch explode+groupBy — same values per doc, no shuffle needed
-    before the stateful stage);
+    the batch query's own builders (`shingle_fp`, `minhash`,
+    `minhash_bands`), applied with array functions instead of the batch
+    explode+groupBy — same values per doc, no shuffle needed before the
+    stateful stage;
   - the band-bucket self-JOIN becomes `applyInPandasWithState` keyed on
     (band, mh0, mh1): the state cell holds the docs previously seen in
     that bucket (doc_id + shingle multiset); each arriving doc is
@@ -37,20 +38,22 @@ from collections.abc import Iterator
 
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ocr_spark.functions.text import md5_long, word3_shingles
 from ocr_spark.sinks.writers import start_parquet_sink
+from ocr_spark.sources.transcripts import DOCS_STREAM_SCHEMA, read_stream
 
-# cross-engine MinHash constants — MUST mirror __spark_entry__ (cited
-# there; duplicated because ocr_spark.zip ships without the repo root)
-_M31 = 2_147_483_647
-_MINHASH_A = [2, 3, 5, 7, 11, 13, 17, 19]
-_MINHASH_B = [1, 2, 3, 4, 5, 6, 7, 8]
+# Cross-engine MinHash family: shingle fingerprints are md5_long(sh)
+# reduced mod the Mersenne prime M31, so the K affine min-hashes
+# h_k = (A_k*fp + B_k) % M31 stay well inside int64.
+M31 = 2_147_483_647
+MINHASH_A = [2, 3, 5, 7, 11, 13, 17, 19]
+MINHASH_B = [1, 2, 3, 4, 5, 6, 7, 8]
 _JACCARD_FP_MIN = 500_000
 
-DOCS_STREAM_SCHEMA = "doc_id long, text string, ts timestamp"
 PAIR_SCHEMA = "doc_a long, doc_b long, jaccard_fp long"
 _STATE_SCHEMA = (
     "doc_ids array<long>, shingle_sets array<array<long>>, last_ms long"
@@ -59,45 +62,21 @@ _STATE_SCHEMA = (
 _HORIZON_MS = 60 * 60 * 1000  # state eviction horizon (1 hour)
 
 
-def stream_documents(
-    spark: SparkSession, input_path: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    reader = spark.readStream.schema(DOCS_STREAM_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(input_path)
+def shingle_fp(sh: Column) -> Column:
+    """MinHash input fingerprint of one shingle string (mod M31)."""
+    return md5_long(sh) % F.lit(M31)
 
 
-def with_band_rows(docs: DataFrame) -> DataFrame:
-    """(doc_id, ts, shingles, band, mh0, mh1) x 4 bands per doc — the
-    stateless signature stage.  Documents with no 3-gram shingle are
-    dropped, as in batch (they have no signature rows there either)."""
-    words = docs.select("doc_id", "ts", F.split("text", " ").alias("w"))
-    sh_strs = F.expr(
-        "array_distinct(transform(sequence(1, greatest(size(w) - 2, 0)),"
-        " i -> concat_ws(' ', element_at(w, i),"
-        " element_at(w, i+1), element_at(w, i+2))))"
-    )
-    fps = F.transform(
-        sh_strs,
-        lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
-        % F.lit(_M31),
-    )
-    d = words.select("doc_id", "ts", fps.alias("shingles")).filter(
-        F.size("shingles") > 0
-    )
-    mh = [
-        F.array_min(
-            F.transform(
-                "shingles",
-                lambda x: (F.lit(_MINHASH_A[k]) * x + F.lit(_MINHASH_B[k]))
-                % F.lit(_M31),
-            )
-        ).alias(f"mh{k}")
-        for k in range(8)
-    ]
-    sig = d.select("doc_id", "ts", "shingles", *mh)
-    bands = F.array(
+def minhash(k: int, fp: Column) -> Column:
+    """The k-th affine hash of fingerprint `fp`."""
+    return (F.lit(MINHASH_A[k]) * fp + F.lit(MINHASH_B[k])) % F.lit(M31)
+
+
+def minhash_bands() -> Column:
+    """The 4x2 banding of signature columns mh0..mh7: an array of 4
+    (band, mh0, mh1) structs, one per band of two consecutive
+    min-hashes."""
+    return F.array(
         *[
             F.struct(
                 F.lit(j).alias("band"),
@@ -107,8 +86,26 @@ def with_band_rows(docs: DataFrame) -> DataFrame:
             for j in range(4)
         ]
     )
+
+
+def with_band_rows(docs: DataFrame) -> DataFrame:
+    """(doc_id, ts, shingles, band, mh0, mh1) x 4 bands per doc — the
+    stateless signature stage.  Documents with no 3-gram shingle are
+    dropped, as in batch (they have no signature rows there either)."""
+    words = docs.select("doc_id", "ts", F.split("text", " ").alias("w"))
+    fps = F.transform(word3_shingles("w"), shingle_fp)
+    d = words.select("doc_id", "ts", fps.alias("shingles")).filter(
+        F.size("shingles") > 0
+    )
+    mh = [
+        F.array_min(F.transform("shingles", lambda x: minhash(k, x))).alias(
+            f"mh{k}"
+        )
+        for k in range(8)
+    ]
+    sig = d.select("doc_id", "ts", "shingles", *mh)
     return sig.select(
-        "doc_id", "ts", "shingles", F.explode(bands).alias("b")
+        "doc_id", "ts", "shingles", F.explode(minhash_bands()).alias("b")
     ).select("doc_id", "ts", "shingles", "b.band", "b.mh0", "b.mh1")
 
 
@@ -184,7 +181,7 @@ def run_minhash_neardup_stream(
     """Start the streaming near-dup query over a (doc_id, text, ts)
     document stream; emits exact-verified pairs (doc_a, doc_b,
     jaccard_fp), at-least-once per shared band (see module docstring)."""
-    docs = stream_documents(spark, input_path, max_files_per_trigger)
+    docs = read_stream(spark, input_path, DOCS_STREAM_SCHEMA, max_files_per_trigger)
     banded = with_band_rows(docs).withWatermark("ts", watermark)
     pairs = banded.groupBy("band", "mh0", "mh1").applyInPandasWithState(
         _bucket_pairs,

@@ -29,7 +29,7 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ocr_spark.sinks.writers import start_parquet_sink
-from ocr_spark.streaming.extract_stream import stream_transcripts
+from ocr_spark.sources.transcripts import read_stream
 
 SESSION_SCHEMA = (
     "conv_id string, sess_idx long, n_turns long, start_ms long, end_ms long"
@@ -92,7 +92,7 @@ def run_sessionize_stream(
     available_now: bool = False,
     watermark: str = "30 minutes",
 ) -> StreamingQuery:
-    turns = stream_transcripts(spark, input_path).withWatermark("ts", watermark)
+    turns = read_stream(spark, input_path).withWatermark("ts", watermark)
     sessions = turns.groupBy("conv_id").applyInPandasWithState(
         _sessionize,
         outputStructType=SESSION_SCHEMA,

@@ -20,59 +20,56 @@ replayed register row can never change a folded estimate.
 
 State bound: one long per (open window, lang, register) — at most
 64 x |langs| live cells per window horizon, independent of stream
-length or cardinality.  Constants mirror __spark_entry__ (duplicated
-because ocr_spark.zip ships without the repo root).
+length or cardinality.  The register builders and the fold below are
+the batch query's own: `__spark_entry__._q_hll_distinct` calls them, so
+the DuckDB oracle checks the expressions this stream runs.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
+from ocr_spark.functions.text import md5_long, word_rows
 from ocr_spark.sinks.writers import start_parquet_sink
+from ocr_spark.sources.transcripts import DOCS_STREAM_SCHEMA, read_stream
 
 HLL_M = 64                              # registers (p = 6)
 HLL_S = 1 << 30                         # fixed-point scale for Z
 _ALPHA_NUM, _ALPHA_DEN = 709, 1000      # alpha_64 = 0.709
 
-DOCS_STREAM_SCHEMA = "doc_id long, lang string, text string, ts timestamp"
 
-
-def hll_register_columns(df: DataFrame) -> DataFrame:
-    """(lang, text, ts) -> one row per distinct-ish word occurrence with
-    its (j, rho) register coordinates.  Stateless, identical expressions
-    to the batch query so stream and batch registers are comparable
-    value-for-value."""
-    canon = F.lower(F.trim(F.regexp_replace(F.col("text"), r"[^A-Za-z ]", " ")))
-    words = df.select(
-        "lang",
-        "ts",
-        F.explode(
-            F.split(F.trim(F.regexp_replace(canon, r" +", " ")), " ")
-        ).alias("w"),
-    ).filter(F.length("w") >= 4)
-    h = F.conv(
-        F.substring(F.md5(F.concat(F.lit("hll:"), F.col("w"))), 1, 15), 16, 10
-    ).cast("long")
-    hw = words.select("lang", "ts", h.alias("h")).select(
-        "lang",
-        "ts",
+def hll_registers(words: DataFrame, *keys: str) -> DataFrame:
+    """(keys..., w) -> (keys..., j, m): each word's register j and its
+    rho m = leading-zero count + 1 within the 54-bit hash tail.  The bit
+    length comes from the binary-string length (an exact integer path
+    in both engines)."""
+    h = md5_long(F.concat(F.lit("hll:"), F.col("w")))
+    hw = words.select(*keys, h.alias("h")).select(
+        *keys,
         (F.col("h") % HLL_M).alias("j"),
-        F.expr(f"h div {HLL_M}").alias("h2"),
+        F.expr(f"h div {HLL_M}").alias("h2"),   # 54 remaining hash bits
     )
     rho = F.when(F.col("h2") == 0, F.lit(55)).otherwise(
         F.lit(55) - F.length(F.expr("bin(h2)"))
     )
-    return hw.select("lang", "ts", "j", rho.alias("m"))
+    return hw.select(*keys, "j", rho.alias("m"))
 
 
-def hll_estimate(registers: DataFrame) -> DataFrame:
-    """Fold (group-cols..., j, m) register rows to per-group cardinality
-    estimates — integer fixed-point, exactly the batch arithmetic.
-    Registers from multiple sources may be unioned first: max-merge is
-    associative and idempotent."""
-    group_cols = [c for c in registers.columns if c not in ("j", "m")]
+def hll_register_columns(df: DataFrame) -> DataFrame:
+    """(lang, text, ts) -> one row per word occurrence (>= 4 letters)
+    with its (j, m) register coordinates.  Stateless, the batch query's
+    own builders, so stream and batch registers compare value for
+    value."""
+    return hll_registers(word_rows(df, "lang", "ts", min_len=4), "lang", "ts")
+
+
+def hll_fold(registers: DataFrame, *group_cols: str) -> DataFrame:
+    """(group..., j, m) register rows -> (group..., n_set, z_set, z_fp,
+    est_distinct): max-merge per register, then the estimate
+    alpha*m^2/Z with Z in 2^30 fixed point — integer arithmetic only, so
+    it matches DuckDB bit for bit."""
     merged = registers.groupBy(*group_cols, "j").agg(F.max("m").alias("m"))
     per = merged.groupBy(*group_cols).agg(
         F.count(F.lit(1)).alias("n_set"),
@@ -83,10 +80,18 @@ def hll_estimate(registers: DataFrame) -> DataFrame:
         f"({_ALPHA_NUM} * {HLL_M} * {HLL_M} * cast({HLL_S} as bigint))"
         f" div ({_ALPHA_DEN} * z_fp)"
     )
-    return (
-        per.withColumn("z_fp", z.cast("long"))
-        .select(*group_cols, est.cast("long").alias("est_distinct"))
+    return per.withColumn("z_fp", z.cast("long")).withColumn(
+        "est_distinct", est.cast("long")
     )
+
+
+def hll_estimate(registers: DataFrame) -> DataFrame:
+    """Fold (group-cols..., j, m) register rows to per-group cardinality
+    estimates — exactly the batch arithmetic (`hll_fold`).  Registers
+    from multiple sources may be unioned first: max-merge is associative
+    and idempotent."""
+    group_cols = [c for c in registers.columns if c not in ("j", "m")]
+    return hll_fold(registers, *group_cols).select(*group_cols, "est_distinct")
 
 
 def run_hll_register_stream(
@@ -102,14 +107,7 @@ def run_hll_register_stream(
     """Continuous per-(event-time window, lang) HLL register stream over
     arriving document files.  Emits each closed window's 64-register
     table exactly once (append mode); fold with `hll_estimate`."""
-    reader = spark.readStream.schema(DOCS_STREAM_SCHEMA)
-    if max_files_per_trigger is not None:
-        if max_files_per_trigger <= 0:
-            raise ValueError(
-                f"max_files_per_trigger must be positive, got {max_files_per_trigger}"
-            )
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    docs = reader.parquet(input_path)
+    docs = read_stream(spark, input_path, DOCS_STREAM_SCHEMA, max_files_per_trigger)
 
     regs = (
         hll_register_columns(docs)
@@ -145,34 +143,31 @@ def run_hll_register_stream(
 # is exactly why a sketch (not an exact word count) is the streaming
 # frequency summary at 100 TB.
 
-CM_ROWS = 4                             # mirrors __spark_entry__._CM_ROWS
-CM_COLS = 256                           # mirrors __spark_entry__._CM_COLS
+CM_ROWS = 4
+CM_COLS = 256
+
+
+def cm_cells(w: Column) -> Column:
+    """The CM_ROWS (row_id, col_id) cells of word `w`: sketch row r
+    hashes 'cm{r}:' || w into CM_COLS columns (per-row salts over the
+    cross-engine md5 hash)."""
+    return F.array(*[
+        F.struct(
+            F.lit(r).cast("long").alias("row_id"),
+            (md5_long(F.concat(F.lit(f"cm{r}:"), w)) % F.lit(CM_COLS))
+            .alias("col_id"),
+        )
+        for r in range(CM_ROWS)
+    ])
 
 
 def cm_cell_columns(df: DataFrame) -> DataFrame:
     """(text, ts) -> one row per (word occurrence x sketch row) with its
-    (row_id, col_id) cell coordinates.  Stateless; identical expressions
-    to the batch sketch so stream and batch cells compare value-exact."""
-    canon = F.lower(F.trim(F.regexp_replace(F.col("text"), r"[^A-Za-z ]", " ")))
-    words = df.select(
-        "ts",
-        F.explode(
-            F.split(F.trim(F.regexp_replace(canon, r" +", " ")), " ")
-        ).alias("w"),
-    ).filter(F.length("w") > 0)
-    cell = lambda r: (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit(f"cm{r}:"), F.col("w"))), 1, 15),
-            16, 10,
-        ).cast("long") % F.lit(CM_COLS)
-    )
-    cells = F.array(*[
-        F.struct(F.lit(r).cast("long").alias("row_id"), cell(r).alias("col_id"))
-        for r in range(CM_ROWS)
-    ])
-    return words.select("ts", F.explode(cells).alias("c")).select(
-        "ts", "c.row_id", "c.col_id"
-    )
+    (row_id, col_id) cell coordinates.  Stateless; the batch sketch's
+    own builders, so stream and batch cells compare value-exact."""
+    return word_rows(df, "ts").select(
+        "ts", F.explode(cm_cells(F.col("w"))).alias("c")
+    ).select("ts", "c.row_id", "c.col_id")
 
 
 def run_countmin_cell_stream(
@@ -188,14 +183,7 @@ def run_countmin_cell_stream(
     """Continuous per-(event-time window) Count-Min cell stream over
     arriving document files.  Emits each closed window's cell table
     exactly once (append mode); windows union by summing cnt."""
-    reader = spark.readStream.schema(DOCS_STREAM_SCHEMA)
-    if max_files_per_trigger is not None:
-        if max_files_per_trigger <= 0:
-            raise ValueError(
-                f"max_files_per_trigger must be positive, got {max_files_per_trigger}"
-            )
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    docs = reader.parquet(input_path)
+    docs = read_stream(spark, input_path, DOCS_STREAM_SCHEMA, max_files_per_trigger)
 
     cells = (
         cm_cell_columns(docs)

@@ -20,7 +20,7 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ocr_spark.sinks.writers import start_parquet_sink
-from ocr_spark.streaming.extract_stream import stream_transcripts
+from ocr_spark.sources.transcripts import read_stream
 
 SUMMARY_SCHEMA = (
     "conv_id string, n_turns long, n_user long, n_assistant long, "
@@ -81,7 +81,7 @@ def run_conversation_assembly_stream(
     available_now: bool = False,
     watermark: str = "30 minutes",
 ) -> StreamingQuery:
-    turns = stream_transcripts(spark, input_path).withWatermark("ts", watermark)
+    turns = read_stream(spark, input_path).withWatermark("ts", watermark)
     summaries: DataFrame = turns.groupBy("conv_id").applyInPandasWithState(
         _assemble,
         outputStructType=SUMMARY_SCHEMA,

@@ -1,6 +1,7 @@
-"""G1/G2/G17 canonicalization unit tests."""
+"""G1/G17 canonicalization unit tests."""
 
-from ocr_spark.extract.canon import canonicalize, strip_tags, tag_char_fraction
+from ocr_spark.constants import MAX_TURN_CHARS
+from ocr_spark.extract.canon import canonicalize, strip_tags
 
 
 def test_newlines_and_tabs():
@@ -39,25 +40,11 @@ def test_idempotent():
 
 
 def test_truncation_flag():
-    from ocr_spark import constants
-
-    old = constants.MAX_TURN_CHARS
-    try:
-        import ocr_spark.extract.canon as canon_mod
-
-        # don't monkeypatch the module constant (it is imported by value);
-        # just verify the flag semantics with a short input
-        c, tr = canonicalize("x" * 10)
-        assert tr is False
-    finally:
-        constants.MAX_TURN_CHARS = old
-
-
-def test_tag_char_fraction():
-    assert tag_char_fraction("") == 0.0
-    assert tag_char_fraction("plain text") == 0.0
-    frac = tag_char_fraction("<a href='x'>hi</a>")
-    assert 0.5 < frac < 1.0
+    c, tr = canonicalize("x" * (MAX_TURN_CHARS + 5))
+    assert len(c) == MAX_TURN_CHARS
+    assert tr is True
+    c, tr = canonicalize("x" * MAX_TURN_CHARS)
+    assert len(c) == MAX_TURN_CHARS and tr is False
 
 
 def test_strip_tags():

@@ -9,6 +9,8 @@ into a cross product.  Plans are inspected via the executed-plan string
 
 from __future__ import annotations
 
+import re
+
 import __spark_entry__ as entry
 from fixtures.gen import gen_transcripts
 from ocr_spark.plans.extract_job import plan_extract
@@ -475,3 +477,21 @@ def test_dynamic_partition_pruning_fires(spark, tmp_path):
     j = fact.join(dim, "event_type").groupBy("event_type").count()
     plan = _plan(j)
     assert "dynamicpruning" in plan.lower(), plan
+
+
+def test_flagship_udf_stage_partition_count(spark, tmp_path):
+    """PLANS.md invariant 3: the UDF stage's partition count is explicit
+    (2 x defaultParallelism, or num_partitions when given), never sized
+    by AQE from shuffle bytes — the one Exchange is REPARTITION_BY_NUM."""
+    p = str(tmp_path / "transcripts")
+    transcripts_from_pandas(spark, gen_transcripts(n_convs=20)).write.parquet(p)
+    df = spark.read.parquet(p)
+    n_default = 2 * spark.sparkContext.defaultParallelism
+    for num_partitions, expected in ((None, n_default), (3, 3)):
+        plan = _plan(plan_extract(df, n_buckets=8, num_partitions=num_partitions))
+        [exchange] = [ln for ln in plan.splitlines() if "Exchange" in ln]
+        m = re.search(
+            r"hashpartitioning\(bucket#\d+L, salt#\d+, (\d+)\), REPARTITION_BY_NUM",
+            exchange,
+        )
+        assert m and int(m.group(1)) == expected, exchange

@@ -1,11 +1,14 @@
 """Local stand-in for the driver's correctness gate: runs every
 queries()[k] on Spark and oracle_sql()[k] on DuckDB over the same sf dir,
 compares row count, column names, and an order-insensitive value
-comparison.  Usage:  python tools/compare_oracle.py [sf_dir] [query ...]
+comparison.  Each OK line ends in a short sha256 of the normalized rows,
+so two commits' outputs diff with one command.
+Usage:  python tools/compare_oracle.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 import sys
 
@@ -32,6 +35,11 @@ def normalize(df):
 
     rows = sorted(tuple(cell(v) for v in row) for row in df.itertuples(index=False))
     return rows
+
+
+def digest(rows) -> str:
+    """Short sha256 of normalized rows (the per-query output fingerprint)."""
+    return hashlib.sha256(repr(rows).encode()).hexdigest()[:12]
 
 
 def compare(sf_dir: str, only: list[str] | None = None) -> dict[str, str]:
@@ -62,7 +70,7 @@ def compare(sf_dir: str, only: list[str] | None = None) -> dict[str, str]:
             results[name] = f"SPARK-ERROR: {e}"
             continue
         if name not in oracles:
-            results[name] = f"rows-only: {len(sdf)} rows"
+            results[name] = f"rows-only: {len(sdf)} rows, {digest(normalize(sdf))}"
             continue
         try:
             odf = con.execute(oracles[name]).df()
@@ -84,7 +92,7 @@ def compare(sf_dir: str, only: list[str] | None = None) -> dict[str, str]:
             )
             results[name] = f"VALUE-MISMATCH at sorted row {diff[0]}: spark={diff[1]} duckdb={diff[2]}"
             continue
-        results[name] = f"OK ({len(sdf)} rows)"
+        results[name] = f"OK ({len(sdf)} rows, {digest(ns)})"
     return results
 
 
