@@ -23,7 +23,7 @@ from collections.abc import Callable
 from functools import lru_cache
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -100,40 +100,28 @@ def _lsh_bits(n_rows: int) -> int:
     return max(6, min(62, (q - 1).bit_length()))
 
 
-_EMB_COUNT_CACHE: dict[str, int] = {}
-
-
+@lru_cache(maxsize=None)
 def _emb_count(sf_dir: str) -> int:
     """Row count of the embeddings table read from the parquet FOOTER
-    metadata — no Spark job, no data scan; cached per path.  This is the
-    sandbox stand-in for Iceberg snapshot statistics (total-records) at
-    production scale: the ANN parameter rules need N, never the rows."""
-    path = f"{sf_dir}/embeddings.parquet"
-    n = _EMB_COUNT_CACHE.get(path)
-    if n is None:
-        import pyarrow.parquet as pq
+    metadata — no Spark job, no data scan; cached per sf dir.  This is
+    the sandbox stand-in for Iceberg snapshot statistics (total-records)
+    at production scale: the ANN parameter rules need N, never the rows."""
+    import pyarrow.parquet as pq
 
-        n = pq.ParquetFile(path).metadata.num_rows
-        _EMB_COUNT_CACHE[path] = n
-    return n
+    return pq.ParquetFile(f"{sf_dir}/embeddings.parquet").metadata.num_rows
 
 
-_EMB_DIMS_CACHE: dict[str, int] = {}
-
-
+@lru_cache(maxsize=None)
 def _emb_dims(sf_dir: str) -> int:
     """Embedding dimensionality, read once from the first row group of
     the parquet file (the list<float> schema does not carry a fixed
     size; an Iceberg table would pin it as a table property)."""
-    path = f"{sf_dir}/embeddings.parquet"
-    d = _EMB_DIMS_CACHE.get(path)
-    if d is None:
-        import pyarrow.parquet as pq
+    import pyarrow.parquet as pq
 
-        rg = pq.ParquetFile(path).read_row_group(0, columns=["embedding"])
-        d = len(rg.column(0)[0].as_py())
-        _EMB_DIMS_CACHE[path] = d
-    return d
+    rg = pq.ParquetFile(f"{sf_dir}/embeddings.parquet").read_row_group(
+        0, columns=["embedding"]
+    )
+    return len(rg.column(0)[0].as_py())
 
 
 def _oracle_sf_dir() -> str:
@@ -198,40 +186,42 @@ def _hp_signs(table: int, bits: int, dims: int) -> tuple[tuple[int, ...], ...]:
     )
 
 
-def _hp_bucket_expr(vfp_col: str, table: int, bits: int, dims: int):
-    """Spark bucket key: bit i set iff the exact integer dot of the
-    quantized vector with seeded hyperplane i is positive."""
-    signs = _hp_signs(table, bits, dims)
-
-    def bitdot(row):
-        sarr = F.array(*[F.lit(s) for s in row])
-        return F.aggregate(
-            F.zip_with(vfp_col, sarr, lambda x, s: x * s),
+def _hp_dots(vfp_col: str, table: int, bits: int, dims: int) -> list:
+    """The `bits` exact integer dots of the quantized vector with the
+    seeded hyperplanes of one table, one column per plane."""
+    return [
+        F.aggregate(
+            F.zip_with(vfp_col, F.array(*[F.lit(s) for s in row]),
+                       lambda x, s: x * s),
             F.lit(0).cast("long"),
             lambda acc, x: acc + x,
         )
+        for row in _hp_signs(table, bits, dims)
+    ]
 
+
+def _hp_bucket_expr(vfp_col: str, table: int, bits: int, dims: int):
+    """Spark bucket key: bit i set iff the exact integer dot of the
+    quantized vector with seeded hyperplane i is positive."""
     return sum(
-        F.when(bitdot(signs[i]) > 0, F.lit(1 << i)).otherwise(F.lit(0))
-        for i in range(bits)
+        F.when(d > 0, F.lit(1 << i)).otherwise(F.lit(0))
+        for i, d in enumerate(_hp_dots(vfp_col, table, bits, dims))
     )
 
 
 def _hp_dots_expr(vfp_col: str, table: int, bits: int, dims: int):
-    """array<long> of the `bits` exact integer hyperplane dots for one
-    table — the common input of the own-bucket bits AND the multi-probe
-    margins (computed once per vector per table)."""
-    signs = _hp_signs(table, bits, dims)
+    """array<long> of the hyperplane dots for one table — the common
+    input of the own-bucket bits AND the multi-probe margins (computed
+    once per vector per table)."""
+    return F.array(*_hp_dots(vfp_col, table, bits, dims))
 
-    def bitdot(row):
-        sarr = F.array(*[F.lit(s) for s in row])
-        return F.aggregate(
-            F.zip_with(vfp_col, sarr, lambda x, s: x * s),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
 
-    return F.array(*[bitdot(signs[i]) for i in range(bits)])
+def _with_vfp(ed: DataFrame) -> DataFrame:
+    """ed plus vfp = floor(v * 1e6), the quantized vector the exact
+    integer hyperplane dots read."""
+    return ed.withColumn(
+        "vfp", F.transform("v", lambda x: F.floor(x * F.lit(1000000.0)))
+    )
 
 
 def _sql_hp_bucket(table: int, bits: int, dims: int, vfp: str = "vfp") -> str:
@@ -285,20 +275,73 @@ def _sql_lsh_mp_tables(bits: int, dims: int, n_flip: int) -> str:
     return ",".join(parts)
 
 
-def _ed_with_norm(e: DataFrame) -> DataFrame:
+def _l2_norm(v):
+    """L2 norm of an array<double> column as one sequential fold."""
+    return F.sqrt(F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x))
+
+
+def _ed_with_norm(e: DataFrame, twin_below: int = 0, twin=None) -> DataFrame:
     """(vec_id, v: array<double>, nrm): embeddings with the L2 norm
     computed ONCE per vector.  Every pairwise-similarity query divides by
     both norms; computing them per PAIR (round 1) tripled the hot-loop
     flops.  The fold order is identical to the per-pair formulation, so
     the value — and every downstream fixed-point hash — is bit-identical
     (IEEE determinism); the DuckDB oracles factor the norm identically.
+    With `twin`, vectors with vec_id < `twin_below` also emit a planted
+    twin (_with_planted_twins) before the norm is taken.
     """
     ed = e.select(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
     )
-    nrm = F.sqrt(F.aggregate("v", F.lit(0.0), lambda a, x: a + x * x))
-    return ed.select("vec_id", "v", nrm.alias("nrm"))
+    if twin is not None:
+        ed = _with_planted_twins(ed, "vec_id", "v", twin_below, twin)
+    return ed.select("vec_id", "v", _l2_norm("v").alias("nrm"))
+
+
+def _cosine_fp(a, b, na, nb):
+    """Fixed-point cosine with PRE-COMPUTED norms (once per vector, not
+    per pair — see _ed_with_norm).  Deliberately a JVM-side higher-order
+    fold: an Arrow-vectorized pandas-UDF twin (bit-identical per-dim
+    fold, 0 mismatches on an 80k-pair A/B) was MEASURED 2-5x slower on
+    every ANN verify path at sf0.1 (lsh_mt 14.6->15.6 s, ivf_mp
+    9.3->45.8 s) — serializing two 64-dim double arrays per candidate
+    pair through the Python bridge costs more than the codegen'd fold
+    saves.  See PLANS.md "negative results"."""
+    dot = F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    return F.floor(dot / (F.col(na) * F.col(nb)) * F.lit(1000000.0)).cast("long")
+
+
+def _pair_sides(ed: DataFrame, *keys: str) -> tuple[DataFrame, DataFrame]:
+    """Query side (query_id, qv, qn, keys...) and neighbor side
+    (neighbor_id, v, nrm, keys...) of a (vec_id, v, nrm, keys...) table."""
+    q = ed.select(
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"),
+        F.col("nrm").alias("qn"), *keys,
+    )
+    nv = ed.select(F.col("vec_id").alias("neighbor_id"), "v", "nrm", *keys)
+    return q, nv
+
+
+def _topk_by_cosine(pairs: DataFrame, k: int, *keys: str) -> DataFrame:
+    """(query_id, keys..., neighbor_id, sim_fp, rnk): the k best joined
+    _pair_sides rows per query by fixed-point cosine, ties to the lowest
+    neighbor_id; the pass-through `keys` come out as long."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("sim_fp").desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        pairs.select("query_id", *keys, "neighbor_id",
+                     _cosine_fp("qv", "v", "qn", "nrm").alias("sim_fp"))
+        .withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= k)
+        .select("query_id", *[F.col(c).cast("long").alias(c) for c in keys],
+                "neighbor_id", "sim_fp", F.col("rnk").cast("long").alias("rnk"))
+    )
 
 
 def _ivf_cells(n_rows: int) -> int:
@@ -342,7 +385,6 @@ _IVF_KMEANS_ITERS = 10
 _IVF_NPROBE = 6   # query side fans to its 6 closest cells
 _IVF_NINDEX = 2   # index side is assigned to its 2 closest cells
 
-_IVF_CENTROID_CACHE: dict[str, list[list[float]]] = {}
 _IVF_SAMPLE_PER_CELL = 100  # training rows per centroid (cap = 100·cells)
 
 
@@ -393,10 +435,8 @@ def _ivf_training_sample(path: str):
     return v, kept_ids, cells, cap
 
 
+@lru_cache(maxsize=None)
 def _ivf_centroids(sf_dir: str) -> list[list[float]]:
-    got = _IVF_CENTROID_CACHE.get(sf_dir)
-    if got is not None:
-        return got
     import numpy as np
 
     v, vec_ids, cells, _cap = _ivf_training_sample(
@@ -423,9 +463,7 @@ def _ivf_centroids(sf_dir: str) -> list[list[float]]:
                 if ln > 0:
                     new[c] = s / ln
         cents = new
-    out = [[float(x) for x in row] for row in cents]
-    _IVF_CENTROID_CACHE[sf_dir] = out
-    return out
+    return [[float(x) for x in row] for row in cents]
 
 
 def _fmt_dvec(row: list[float]) -> str:
@@ -477,41 +515,45 @@ def _sql_ivf_ranked(cents: list[list[float]], src: str = _SQL_EMB_SRC) -> str:
 """
 
 
-def _docs_with_planted_dups(spark, sf_dir: str) -> DataFrame:
-    """documents plus planted near-duplicates (doc_id < 25 re-emitted as
-    doc_id + 1000000 with the first 3 words dropped) so dedup queries
-    have non-trivial positives at every sf.  ONE corpus scan: each doc
-    conditionally emits its original row and its mutated twin via a
-    single explode (the union-of-filter formulation scanned the table
-    twice per reference)."""
-    d = _docs_wide(spark, sf_dir).select("doc_id", "text")
+def _with_planted_twins(df: DataFrame, key: str, val: str, below: int,
+                        twin) -> DataFrame:
+    """(key, val): every row, plus a planted twin (key + 1000000, `twin`)
+    for each row with key < `below`, so the dedup queries have
+    non-trivial positives at every sf.  ONE scan: each row conditionally
+    emits itself and its twin via a single explode (the union-of-filter
+    formulation scanned the table twice per reference)."""
     rows = F.array(
-        F.struct(F.col("doc_id").alias("doc_id"), F.col("text").alias("text")),
+        F.struct(F.col(key).alias(key), F.col(val).alias(val)),
         F.when(
-            F.col("doc_id") < 25,
-            F.struct(
-                (F.col("doc_id") + F.lit(1000000)).alias("doc_id"),
-                F.expr(
-                    "concat_ws(' ', slice(split(text, ' '), 4, 1000000))"
-                ).alias("text"),
-            ),
+            F.col(key) < below,
+            F.struct((F.col(key) + F.lit(1000000)).alias(key), twin.alias(val)),
         ),
     )
     return (
-        d.select(F.explode(rows).alias("r"))
+        df.select(F.explode(rows).alias("r"))
         .filter(F.col("r").isNotNull())
-        .select("r.doc_id", "r.text")
+        .select(f"r.{key}", f"r.{val}")
     )
 
 
-def _shingle_fps(alld: DataFrame) -> DataFrame:
-    """(doc_id, fp): md5-based int64 fingerprint (mod M31) of each
-    distinct word-3-gram shingle.  The split array is materialized once
-    per row (inlining split() into the lambda is O(words^2))."""
+def _docs_with_planted_dups(spark, sf_dir: str) -> DataFrame:
+    """documents plus planted near-duplicates: doc_id < 25 re-emitted as
+    doc_id + 1000000 with the first 3 words dropped."""
+    return _with_planted_twins(
+        _docs_wide(spark, sf_dir).select("doc_id", "text"), "doc_id", "text",
+        25, F.expr("concat_ws(' ', slice(split(text, ' '), 4, 1000000))"),
+    )
+
+
+def _shingle_fps(alld: DataFrame, fp) -> DataFrame:
+    """(doc_id, fp): `fp` of each distinct word-3-gram shingle string
+    (shingle_fp is the md5 prefix mod M31 MinHash hashes, md5_long the
+    full 60-bit prefix SimHash needs).  The split array is materialized
+    once per row (inlining split() into the lambda is O(words^2))."""
     words = alld.select("doc_id", F.split("text", " ").alias("w"))
     return words.select(
         "doc_id", F.explode(word3_shingles("w")).alias("sh_str")
-    ).select("doc_id", shingle_fp(F.col("sh_str")).alias("fp"))
+    ).select("doc_id", fp(F.col("sh_str")).alias("fp"))
 
 # DuckDB twins of the helpers above (composed into oracle SQL below).
 _SQL_ALLD = """
@@ -523,7 +565,12 @@ _SQL_ALLD = """
     FROM documents WHERE doc_id < 25
   )
 """
-_SQL_SHINGLE_FPS = _SQL_ALLD + """,
+
+
+def _sql_shingle_fps(reduce: str) -> str:
+    """DuckDB twin of _shingle_fps over alld: `reduce` follows the 60-bit
+    md5 prefix (" % 2147483647" for shingle_fp, "" for md5_long)."""
+    return _SQL_ALLD + """,
   sh AS (
     SELECT doc_id,
            unnest(list_distinct([
@@ -534,10 +581,14 @@ _SQL_SHINGLE_FPS = _SQL_ALLD + """,
   ),
   fps AS (
     SELECT doc_id,
-           ('0x' || substr(md5(sh_str), 1, 15))::BIGINT % 2147483647 AS fp
+           ('0x' || substr(md5(sh_str), 1, 15))::BIGINT""" + reduce + """ AS fp
     FROM sh
   )
 """
+
+
+_SQL_SHINGLE_FPS = _sql_shingle_fps(" % 2147483647")
+_SQL_SHINGLE_FPS64 = _sql_shingle_fps("")
 
 
 # Full MinHash+LSH near-dup query in DuckDB (module-level so the dedup-
@@ -579,34 +630,6 @@ _SQL_MINHASH_LSH = f"""
     JOIN n na ON na.doc_id = doc_a
     JOIN n nb ON nb.doc_id = doc_b
     WHERE floor(shared * 1000000.0 / (na.n_sh + nb.n_sh - shared)) >= 500000
-"""
-
-
-def _shingle_fps64(alld: DataFrame) -> DataFrame:
-    """(doc_id, fp): full 60-bit md5-prefix fingerprint of each distinct
-    word-3-gram shingle (NO mod-M31 reduction — the SimHash family needs
-    wide features; MinHash keeps the M31-reduced variant for affine-hash
-    headroom)."""
-    words = alld.select("doc_id", F.split("text", " ").alias("w"))
-    return words.select(
-        "doc_id", F.explode(word3_shingles("w")).alias("sh_str")
-    ).select("doc_id", md5_long("sh_str").alias("fp"))
-
-
-_SQL_SHINGLE_FPS64 = _SQL_ALLD + """,
-  sh AS (
-    SELECT doc_id,
-           unnest(list_distinct([
-             array_to_string([w[i], w[i+1], w[i+2]], ' ')
-             for i in range(1, greatest(len(w) - 2, 0) + 1)
-           ])) AS sh_str
-    FROM (SELECT doc_id, string_split(text, ' ') AS w FROM alld)
-  ),
-  fps AS (
-    SELECT doc_id,
-           ('0x' || substr(md5(sh_str), 1, 15))::BIGINT AS fp
-    FROM sh
-  )
 """
 
 
@@ -844,8 +867,8 @@ def _q_lang_id(spark, sf_dir):
 
 
 # Quality score: stopword ratio + bounded length factor, fixed-pointed.
-def _q_quality_score(spark, sf_dir):
-    d = _docs_wide(spark, sf_dir)
+def _quality_fp(d: DataFrame) -> DataFrame:
+    """(doc_id, quality_fp) of each (doc_id, text) row."""
     lower = F.lower(F.col("text"))
     # two-step projection: each regex/split runs once per row, the score
     # expression below reads plain columns
@@ -868,6 +891,10 @@ def _q_quality_score(spark, sf_dir):
         "doc_id",
         F.floor(score * F.lit(10000.0)).cast("long").alias("quality_fp"),
     )
+
+
+def _q_quality_score(spark, sf_dir):
+    return _quality_fp(_docs_wide(spark, sf_dir))
 
 
 # PII scrubbing (training-data hygiene op): deterministic email+URL
@@ -1788,8 +1815,37 @@ def _q_incremental_agg(spark, sf_dir):
 # false negatives by construction: every true match survives pruning
 # (asserted by n_rows_match == the unpruned join count in the oracle's
 # algebra).  Revenue is per-row fixed-pointed before summation.
-_BJ_BITS = 1 << 16
-_BJ_K = 3
+_BLOOM_BITS = 1 << 16
+_BLOOM_K = 3
+
+
+def _bloom_positions(salt: str, key) -> Column:
+    """array of the _BLOOM_K salted md5 bit positions of string `key`."""
+    return F.array(*[
+        md5_long(F.concat(F.lit(f"{salt}{r}:"), key)) % F.lit(_BLOOM_BITS)
+        for r in range(_BLOOM_K)
+    ])
+
+
+def _bloom_bits(keys: DataFrame, salt: str, key) -> DataFrame:
+    """(bit, hit = 1): the set bits of the filter built over `keys`."""
+    return (
+        keys.select(F.explode(_bloom_positions(salt, key)).alias("bit"))
+        .distinct()
+        .withColumn("hit", F.lit(1))
+    )
+
+
+def _bloom_verdict(probe: DataFrame, by: list[str], salt: str, key,
+                   bits: DataFrame, out: str) -> DataFrame:
+    """(by..., out): 1 iff every bit of the probe row's `key` is set in
+    `bits` (the caller decides whether to broadcast the bit table)."""
+    return (
+        probe.select(*by, F.explode(_bloom_positions(salt, key)).alias("bit"))
+        .join(bits, "bit", "left")
+        .groupBy(*by)
+        .agg(F.min(F.coalesce(F.col("hit"), F.lit(0))).cast("long").alias(out))
+    )
 
 
 def _q_bloom_join(spark, sf_dir):
@@ -1801,30 +1857,12 @@ def _q_bloom_join(spark, sf_dir):
     build = orders.filter(F.col("o_orderpriority") == "1-URGENT").select(
         F.col("o_orderkey").alias("k")
     ).localCheckpoint(eager=False)
-
-    def pos(r, col):
-        return md5_long(F.concat(F.lit(f"bj{r}:"), col.cast("string"))) % F.lit(
-            _BJ_BITS
-        )
-
-    def posarr(col):
-        return F.array(*[pos(r, col) for r in range(_BJ_K)])
-
-    bits = (
-        build.select(F.explode(posarr(F.col("k"))).alias("bit"))
-        .distinct()
-        .withColumn("hit", F.lit(1))
-    )
+    key = F.col("k").cast("string")
+    bits = _bloom_bits(build, "bj", key)
     probe_keys = li.select(F.col("l_orderkey").alias("k")).distinct()
-    key_verdict = (
-        probe_keys.select("k", F.explode(posarr(F.col("k"))).alias("bit"))
-        .join(F.broadcast(bits), "bit", "left")
-        .groupBy("k")
-        .agg(
-            F.min(F.coalesce(F.col("hit"), F.lit(0))).alias("pass")
-        )
-        .localCheckpoint(eager=False)
-    )
+    key_verdict = _bloom_verdict(
+        probe_keys, ["k"], "bj", key, F.broadcast(bits), "pass"
+    ).localCheckpoint(eager=False)
     passing = key_verdict.filter(F.col("pass") == 1).select("k")
     # passing/build are fact-key-sized sets: shuffle joins, never broadcast
     # (the only broadcast in this plan is the constant-size bit table above)
@@ -2776,6 +2814,18 @@ def _q_dedup_exact(spark, sf_dir):
     )
 
 
+def _jaccard_pairs(pairs: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, jaccard_fp) for the pairs whose exact fixed-point
+    Jaccard, shared / (n_a + n_b - shared), is at least 0.5."""
+    jac = F.floor(
+        F.col("shared") * F.lit(1000000.0)
+        / (F.col("n_a") + F.col("n_b") - F.col("shared"))
+    )
+    return pairs.select(
+        "doc_a", "doc_b", jac.cast("long").alias("jaccard_fp")
+    ).filter(F.col("jaccard_fp") >= 500000)
+
+
 # n-gram Jaccard near-dup: word 3-gram shingles; planted duplicates
 # (docs with doc_id < 25 re-emitted under doc_id + 1000000 with the first
 # 3 words dropped) guarantee non-trivial pairs at every sf.
@@ -2784,45 +2834,22 @@ def _q_dedup_exact(spark, sf_dir):
 # validate q_minhash_lsh (the scale path).  Its shingle self-join is
 # quadratic in colliding docs — never run it at production scale.
 def _q_ngram_jaccard(spark, sf_dir):
-    alld = _docs_with_planted_dups(spark, sf_dir)
-    # materialize the word array ONCE per row; inlining split() into the
-    # transform lambda would re-split the text for every shingle element
-    # (O(words^2) splits per doc — measured 10x slowdown)
-    words = alld.select("doc_id", F.split("text", " ").alias("w"))
     # join on a 64-bit shingle hash, not the shingle string: ~10x less
     # shuffle payload and long-key hash join.  xxhash64 collisions across
     # ~N*100 distinct shingles are negligible (<<1e-9 at any tested sf)
     # and would only perturb one pair's `shared` count by 1.
-    s = words.select("doc_id", F.explode(word3_shingles("w")).alias("sh_str")).select(
-        "doc_id", F.xxhash64("sh_str").alias("sh")
-    )
+    s = _shingle_fps(_docs_with_planted_dups(spark, sf_dir), F.xxhash64)
     n = s.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     a = s.alias("a")
     b = s.alias("b")
     pairs = (
-        a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col("a.doc_id") < F.col("b.doc_id")))
+        a.join(b, (F.col("a.fp") == F.col("b.fp")) & (F.col("a.doc_id") < F.col("b.doc_id")))
         .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .agg(F.count(F.lit(1)).cast("double").alias("shared"))
     )
     na = n.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
     nb = n.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
-    j = (
-        pairs.join(na, "doc_a")
-        .join(nb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.floor(
-                F.col("shared")
-                * F.lit(1000000.0)
-                / (F.col("n_a") + F.col("n_b") - F.col("shared"))
-            )
-            .cast("long")
-            .alias("jaccard_fp"),
-        )
-        .filter(F.col("jaccard_fp") >= 500000)
-    )
-    return j
+    return _jaccard_pairs(pairs.join(na, "doc_a").join(nb, "doc_b"))
 
 
 # Prefix-filtering EXACT Jaccard join (the published scale path for
@@ -2858,9 +2885,9 @@ def _q_minhash_lsh(spark, sf_dir):
     # table is (doc_id, int64) — far smaller than the corpus text it
     # derives from, so materializing is strictly cheaper than ONE
     # rescan, let alone five.
-    s = _shingle_fps(_docs_with_planted_dups(spark, sf_dir)).localCheckpoint(
-        eager=False
-    )
+    s = _shingle_fps(
+        _docs_with_planted_dups(spark, sf_dir), shingle_fp
+    ).localCheckpoint(eager=False)
     # all K min-hashes AND the per-doc shingle count in ONE aggregation
     # over the raw shingle rows (no x8 explode): 8x less pre-shuffle data,
     # map-side partial mins, and one fewer recompute of the shingle
@@ -2905,20 +2932,7 @@ def _q_minhash_lsh(spark, sf_dir):
         .groupBy("doc_a", "doc_b", "n_a", "n_b")
         .agg(F.count(F.lit(1)).cast("double").alias("shared"))
     )
-    return (
-        shared.select(
-            "doc_a",
-            "doc_b",
-            F.floor(
-                F.col("shared")
-                * F.lit(1000000.0)
-                / (F.col("n_a") + F.col("n_b") - F.col("shared"))
-            )
-            .cast("long")
-            .alias("jaccard_fp"),
-        )
-        .filter(F.col("jaccard_fp") >= 500000)
-    )
+    return _jaccard_pairs(shared)
 
 
 # SimHash width: 60 feature bits (the full md5-prefix fingerprint) in a
@@ -2944,7 +2958,7 @@ def _simhash_df(spark, sf_dir):
     unchanged).  Field-width bound: a document must have < 2^21 (~2M)
     shingles; at wider documents, widen the field / add lanes.
     """
-    s = _shingle_fps64(_docs_with_planted_dups(spark, sf_dir))
+    s = _shingle_fps(_docs_with_planted_dups(spark, sf_dir), md5_long)
     pack, field = 3, 21
     n_lanes = _SIMHASH_BITS // pack
     lanes = [
@@ -3082,25 +3096,9 @@ def _q_cluster_keeper(spark, sf_dir):
     pairs = _q_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
     labels, _rounds = connected_components(pairs, a="doc_a", b="doc_b")
     lab = labels.select("doc_id", F.col("lab").alias("component_id"))
-    alld = _docs_with_planted_dups(spark, sf_dir)
-    lower = F.lower(F.col("text"))
-    q = alld.select(
-        "doc_id",
-        F.size(lower_words(lower)).cast("double").alias("_w"),
-        F.size(
-            F.regexp_extract_all(lower, F.lit(rf"\b({_STOPWORDS})\b"), F.lit(0))
-        )
-        .cast("double")
-        .alias("_s"),
+    mem = _quality_fp(_docs_with_planted_dups(spark, sf_dir)).join(
+        F.broadcast(lab), "doc_id"
     )
-    score = (
-        F.least(F.col("_w"), F.lit(100.0)) / F.lit(100.0) * F.lit(0.5)
-        + F.when(F.col("_w") > 0, F.col("_s") / F.col("_w"))
-        .otherwise(F.lit(0.0)) * F.lit(0.5)
-    )
-    mem = q.select(
-        "doc_id", F.floor(score * F.lit(10000.0)).cast("long").alias("quality_fp")
-    ).join(F.broadcast(lab), "doc_id")
     rk = F.row_number().over(
         Window.partitionBy("component_id").orderBy(
             F.col("quality_fp").desc(), F.col("doc_id").asc()
@@ -3210,27 +3208,12 @@ def _q_cm_heavy_hitters(spark, sf_dir):
 # suffixed '~x', guaranteed absent (truth=0); their bloom_hit column
 # IS the false-positive set, which both engines must reproduce
 # bit-exactly.
-_BF_BITS = 65536
-_BF_K = 3
-
-
 def _q_bloom_filter(spark, sf_dir):
     d = _docs_wide(spark, sf_dir)
     keys = d.select(
         "doc_id", F.md5(F.col("text")).alias("key")
     ).localCheckpoint(eager=False)      # build AND probe: one corpus scan
-
-    def pos(r, col):
-        return md5_long(F.concat(F.lit(f"bf{r}:"), col)) % F.lit(_BF_BITS)
-
-    def posarr(col):
-        return F.array(*[pos(r, col) for r in range(_BF_K)])
-
-    bits = (
-        keys.select(F.explode(posarr(F.col("key"))).alias("bit"))
-        .distinct()
-        .withColumn("hit", F.lit(1))
-    )
+    bits = _bloom_bits(keys, "bf", F.col("key"))
     present = keys.filter(F.col("doc_id") % 20 == 3).select(
         "doc_id",
         F.col("key").alias("probe"),
@@ -3241,17 +3224,9 @@ def _q_bloom_filter(spark, sf_dir):
         F.concat(F.col("probe"), F.lit("~x")).alias("probe"),
         F.lit(0).cast("long").alias("truth"),
     )
-    probe_bits = present.unionByName(absent).select(
-        "doc_id", "truth", F.explode(posarr(F.col("probe"))).alias("bit")
-    )
-    return (
-        probe_bits.join(F.broadcast(bits), "bit", "left")
-        .groupBy("doc_id", "truth")
-        .agg(
-            F.min(F.coalesce(F.col("hit"), F.lit(0)))
-            .cast("long")
-            .alias("bloom_hit")         # 1 iff ALL K bits set
-        )
+    return _bloom_verdict(
+        present.unionByName(absent), ["doc_id", "truth"], "bf",
+        F.col("probe"), F.broadcast(bits), "bloom_hit",
     )
 
 
@@ -3294,7 +3269,7 @@ def _q_hll_distinct(spark, sf_dir):
 # Document fingerprint: bottom-4 MinHash sketch (k smallest shingle
 # fingerprints — winnowing-style selection, rolling 3-gram hash base).
 def _q_doc_fingerprint(spark, sf_dir):
-    s = _shingle_fps(_docs_with_planted_dups(spark, sf_dir))
+    s = _shingle_fps(_docs_with_planted_dups(spark, sf_dir), shingle_fp)
     w = Window.partitionBy("doc_id").orderBy(F.col("fp").asc())
     return (
         s.withColumn("rnk", F.row_number().over(w))
@@ -3319,46 +3294,16 @@ def _q_embedding_ann_lsh(spark, sf_dir):
     e = _tbl(spark, sf_dir, "embeddings")
     n_bits = _lsh_bits(_emb_count(sf_dir))
     dims = _emb_dims(sf_dir)
-    ed = _ed_with_norm(e).withColumn(
-        "vfp", F.transform("v", lambda x: F.floor(x * F.lit(1000000.0)))
-    )
+    ed = _with_vfp(_ed_with_norm(e))
     # long, NOT int: _lsh_bits can legally reach 62 bits (the whole point
     # of the corpus-size rule), and an int32 bucket would overflow at
     # n_bits >= 32 — exactly the 10^11+-vector sizes the rule targets
     ed = ed.withColumn(
         "bkt", _hp_bucket_expr("vfp", 0, n_bits, dims).cast("long")
-    ).drop("vfp")
-    q = ed.select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"),
-        F.col("nrm").alias("qn"), "bkt",
     )
-    joined = q.join(
-        ed.select(F.col("vec_id").alias("neighbor_id"), "v", "nrm", "bkt"),
-        "bkt",
-    ).filter(F.col("query_id") != F.col("neighbor_id"))
-    dot = F.aggregate(
-        F.zip_with("qv", "v", lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    sim_fp = F.floor(dot / (F.col("qn") * F.col("nrm")) * F.lit(1000000.0)).cast("long")
-    scored = joined.select(
-        "query_id", "bkt", "neighbor_id", sim_fp.alias("sim_fp")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim_fp").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 3)
-        .select(
-            "query_id",
-            F.col("bkt").cast("long").alias("bkt"),
-            "neighbor_id",
-            "sim_fp",
-            F.col("rnk").cast("long").alias("rnk"),
-        )
-    )
+    q, nv = _pair_sides(ed, "bkt")
+    joined = q.join(nv, "bkt").filter(F.col("query_id") != F.col("neighbor_id"))
+    return _topk_by_cosine(joined, 3, "bkt")
 
 
 # Multi-table sign-LSH ANN (the RECALL path of the LSH family): the
@@ -3385,9 +3330,7 @@ def _q_embedding_ann_lsh_mt(spark, sf_dir):
     # the 16-table hyperplane bucket computation runs twice and the
     # table is scanned four times (no exchange reuse across aliases).
     ed = _ed_with_norm(e).localCheckpoint(eager=False)
-    vfp = ed.withColumn(
-        "vfp", F.transform("v", lambda x: F.floor(x * F.lit(1000000.0)))
-    )
+    vfp = _with_vfp(ed)
     tb = F.array(*[
         F.struct(
             F.lit(t).cast("int").alias("t"),
@@ -3417,27 +3360,11 @@ def _q_embedding_ann_lsh_mt(spark, sf_dir):
 
 
 def _ann_verify_topk(cand: DataFrame, ed: DataFrame) -> DataFrame:
-    """Shared exact-verify tail of the LSH candidate generators: join the
-    (query_id, neighbor_id) candidate pairs back to the vectors, score
-    exact fixed-point cosine, keep top-3 per query."""
-    q = ed.select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"),
-        F.col("nrm").alias("qn"),
-    )
-    nv = ed.select(F.col("vec_id").alias("neighbor_id"), "v", "nrm")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim_fp").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cand.join(q, "query_id")
-        .join(nv, "neighbor_id")
-        .select("query_id", "neighbor_id",
-                _ivf_sim("qv", "v", "qn", "nrm").alias("sim_fp"))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 3)
-        .select("query_id", "neighbor_id", "sim_fp",
-                F.col("rnk").cast("long").alias("rnk"))
-    )
+    """Shared exact-verify tail of the LSH and multi-probe IVF candidate
+    generators: join the (query_id, neighbor_id) candidate pairs back to
+    the vectors, score exact fixed-point cosine, keep top-3 per query."""
+    q, nv = _pair_sides(ed)
+    return _topk_by_cosine(cand.join(q, "query_id").join(nv, "neighbor_id"), 3)
 
 
 # Multi-probe sign-LSH ANN (the CHEAPER recall path — see the
@@ -3458,9 +3385,7 @@ def _q_embedding_ann_lsh_mp(spark, sf_dir):
     n_flip = min(_LSH_MP_PROBES - 1, b)
     e = _tbl(spark, sf_dir, "embeddings")
     ed = _ed_with_norm(e).localCheckpoint(eager=False)
-    x = ed.withColumn(
-        "vfp", F.transform("v", lambda x_: F.floor(x_ * F.lit(1000000.0)))
-    )
+    x = _with_vfp(ed)
     powers = F.array(*[F.lit(1 << i).cast("long") for i in range(b)])
     idx_seq = F.sequence(F.lit(0), F.lit(b - 1))
     for t in range(_LSH_MP_TABLES):
@@ -3540,31 +3465,11 @@ def _q_embedding_ann_lsh_mp(spark, sf_dir):
 # validate q_embedding_ann_lsh / q_embedding_ann_ivf (the scale paths).
 # Never run it at production scale.
 def _q_embedding_topk(spark, sf_dir):
-    e = _tbl(spark, sf_dir, "embeddings")
-    ed = _ed_with_norm(e)
-    q = ed.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qn"),
+    q, nv = _pair_sides(_ed_with_norm(_tbl(spark, sf_dir, "embeddings")))
+    joined = q.filter(F.col("query_id") < 20).crossJoin(nv).filter(
+        F.col("query_id") != F.col("neighbor_id")
     )
-    joined = q.crossJoin(
-        ed.select(F.col("vec_id").alias("neighbor_id"), "v", "nrm")
-    ).filter(F.col("query_id") != F.col("neighbor_id"))
-    dot = F.aggregate(
-        F.zip_with("qv", "v", lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    sim_fp = F.floor(dot / (F.col("qn") * F.col("nrm")) * F.lit(1000000.0)).cast("long")
-    scored = joined.select("query_id", "neighbor_id", sim_fp.alias("sim_fp"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim_fp").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 5)
-        .select("query_id", "neighbor_id", "sim_fp", F.col("rnk").cast("long").alias("rnk"))
-    )
+    return _topk_by_cosine(joined, 5)
 
 
 # Embedding-cosine near-dup: pairs with cosine >= 0.999, found through
@@ -3574,31 +3479,11 @@ def _q_embedding_topk(spark, sf_dir):
 # Planted dups: vec_id < 10 re-emitted as vec_id + 1000000 scaled by 2
 # (cosine exactly 1 with the original).
 def _q_embedding_neardup(spark, sf_dir):
-    e = _tbl(spark, sf_dir, "embeddings")
     n_bits = _lsh_bits(_emb_count(sf_dir))
-    ed = e.select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
+    alle = _ed_with_norm(
+        _tbl(spark, sf_dir, "embeddings"),
+        twin_below=10, twin=F.transform("v", lambda x: x * F.lit(2.0)),
     )
-    # ONE table scan: each vector conditionally emits itself and its
-    # planted scaled twin via a single explode (union-of-filter scanned
-    # the table twice)
-    rows = F.array(
-        F.struct(F.col("vec_id").alias("vec_id"), F.col("v").alias("v")),
-        F.when(
-            F.col("vec_id") < 10,
-            F.struct(
-                (F.col("vec_id") + F.lit(1000000)).alias("vec_id"),
-                F.transform("v", lambda x: x * F.lit(2.0)).alias("v"),
-            ),
-        ),
-    )
-    alle = (
-        ed.select(F.explode(rows).alias("r"))
-        .filter(F.col("r").isNotNull())
-        .select("r.vec_id", "r.v")
-    )
-    nrm = F.sqrt(F.aggregate("v", F.lit(0.0), lambda acc, x: acc + x * x))
     bkt = sum(
         F.when(F.element_at("v", i + 1) > 0, F.lit(1 << i)).otherwise(F.lit(0))
         for i in range(n_bits)
@@ -3606,53 +3491,24 @@ def _q_embedding_neardup(spark, sf_dir):
     # long, not int — see the bucket-width note in _q_embedding_ann_lsh.
     # Materialized once: the bucket self-join would otherwise evaluate
     # the norm+bucket subtree twice (no exchange reuse across aliases).
-    alle = alle.select(
-        "vec_id", "v", nrm.alias("nrm"), bkt.cast("long").alias("bkt")
-    ).localCheckpoint(eager=False)
-    a = alle.select(F.col("vec_id").alias("vec_a"), F.col("v").alias("va"),
-                    F.col("nrm").alias("na"), "bkt")
-    b = alle.select(F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"),
-                    F.col("nrm").alias("nb"), "bkt")
-    joined = a.join(b, "bkt").filter(F.col("vec_a") < F.col("vec_b"))
-    dot = F.aggregate(
-        F.zip_with("va", "vb", lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    sim_fp = F.floor(dot / (F.col("na") * F.col("nb")) * F.lit(1000000.0)).cast("long")
-    return (
-        joined.select("vec_a", "vec_b", sim_fp.alias("sim_fp"))
-        .filter(F.col("sim_fp") >= 999000)
-    )
+    alle = alle.withColumn("bkt", bkt.cast("long")).localCheckpoint(eager=False)
+    q, nv = _pair_sides(alle, "bkt")
+    joined = q.join(nv, "bkt").filter(F.col("query_id") < F.col("neighbor_id"))
+    return joined.select(
+        F.col("query_id").alias("vec_a"), F.col("neighbor_id").alias("vec_b"),
+        _cosine_fp("qv", "v", "qn", "nrm").alias("sim_fp"),
+    ).filter(F.col("sim_fp") >= 999000)
 
 
 # IVF ANN (the second approximate-search family beside sign-LSH): a
-# deterministic coarse quantizer (centroids = the `cells` lowest vec_ids,
-# no training loop), cells assigned by max fixed-point cosine with ties
+# deterministic coarse quantizer (the sampled k-means centroids of
+# _ivf_centroids), cells assigned by max fixed-point cosine with ties
 # to the lowest centroid id, then exact top-3 WITHIN the cell (nprobe=1).
 # The centroid table broadcasts; the intra-cell search is a cell
 # equi-join — at scale both sides partition by cell with no cross join.
 # `cells` follows the standard ~sqrt(N) IVF rule (_ivf_cells), so
 # intra-cell exact search stays ~N^1.5 total instead of N^2/const; at
-# production scale N comes from table statistics, and the centroid set
-# comes from a sampled k-means rather than lowest-ids.
-def _ivf_sim(a, b, na, nb):
-    """Fixed-point cosine with PRE-COMPUTED norms (once per vector, not
-    per pair — see _ed_with_norm).  Deliberately a JVM-side higher-order
-    fold: an Arrow-vectorized pandas-UDF twin (bit-identical per-dim
-    fold, 0 mismatches on an 80k-pair A/B) was MEASURED 2-5x slower on
-    every ANN verify path at sf0.1 (lsh_mt 14.6->15.6 s, ivf_mp
-    9.3->45.8 s) — serializing two 64-dim double arrays per candidate
-    pair through the Python bridge costs more than the codegen'd fold
-    saves.  See PLANS.md "negative results"."""
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return F.floor(dot / (F.col(na) * F.col(nb)) * F.lit(1000000.0)).cast("long")
-
-
+# production scale N comes from table statistics.
 def _ivf_ranked_plan(spark, sf_dir):
     """Shared IVF coarse-quantizer assignment: every vector ranked
     against the broadcast TRAINED centroid table (_ivf_centroids,
@@ -3675,17 +3531,14 @@ def _ivf_assign(spark, sf_dir, ed: DataFrame) -> DataFrame:
     cents = spark.createDataFrame(
         [(i, cv) for i, cv in enumerate(_ivf_centroids(sf_dir))],
         "cid int, cv array<double>",
-    ).select(
-        "cid", "cv",
-        F.sqrt(F.aggregate("cv", F.lit(0.0), lambda a, x: a + x * x)).alias("cn"),
-    )
+    ).select("cid", "cv", _l2_norm("cv").alias("cn"))
     w_assign = Window.partitionBy("vec_id").orderBy(
         F.col("c_sim").desc(), F.col("cid").asc()
     )
     return (
         ed.crossJoin(F.broadcast(cents))
         .select("vec_id", "v", "nrm", "cid",
-                _ivf_sim("v", "cv", "nrm", "cn").alias("c_sim"))
+                _cosine_fp("v", "cv", "nrm", "cn").alias("c_sim"))
         .withColumn("rn", F.row_number().over(w_assign))
     )
 
@@ -3706,28 +3559,9 @@ def _q_embedding_ann_ivf(spark, sf_dir):
         .filter(F.col("rn") == 1)
         .select("vec_id", "v", "nrm", F.col("cid").alias("cell"))
     )
-    q = assigned.select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"),
-        F.col("nrm").alias("qn"), "cell",
-    )
-    n = assigned.select(F.col("vec_id").alias("neighbor_id"), "v", "nrm", "cell")
-    w_top = Window.partitionBy("query_id").orderBy(
-        F.col("sim_fp").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        q.join(n, "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            F.col("cell").cast("long").alias("cell"),
-            "neighbor_id",
-            _ivf_sim("qv", "v", "qn", "nrm").alias("sim_fp"),
-        )
-        .withColumn("rnk", F.row_number().over(w_top))
-        .filter(F.col("rnk") <= 3)
-        .select("query_id", "cell", "neighbor_id", "sim_fp",
-                F.col("rnk").cast("long").alias("rnk"))
-    )
+    q, nv = _pair_sides(assigned, "cell")
+    joined = q.join(nv, "cell").filter(F.col("query_id") != F.col("neighbor_id"))
+    return _topk_by_cosine(joined, 3, "cell")
 
 
 # Multi-probe, multi-assignment IVF ANN: each query vector probes its
@@ -3763,22 +3597,7 @@ def _q_embedding_ann_ivf_mp(spark, sf_dir):
     ed = _ed_with_norm(_tbl(spark, sf_dir, "embeddings")).localCheckpoint(
         eager=False
     )
-    q = ed.select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"),
-                  F.col("nrm").alias("qn"))
-    nv = ed.select(F.col("vec_id").alias("neighbor_id"), "v", "nrm")
-    w_top = Window.partitionBy("query_id").orderBy(
-        F.col("sim_fp").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cand.join(q, "query_id")
-        .join(nv, "neighbor_id")
-        .select("query_id", "neighbor_id",
-                _ivf_sim("qv", "v", "qn", "nrm").alias("sim_fp"))
-        .withColumn("rnk", F.row_number().over(w_top))
-        .filter(F.col("rnk") <= 3)
-        .select("query_id", "neighbor_id", "sim_fp",
-                F.col("rnk").cast("long").alias("rnk"))
-    )
+    return _ann_verify_topk(cand, ed)
 
 
 # Embedding cluster profile (P35): the cluster-balance diagnostic a
@@ -3827,33 +3646,12 @@ _SEMDEDUP_PLANT = 20     # vec_id < PLANT gets a planted near-twin
 
 
 def _q_semdedup(spark, sf_dir):
-    e = _tbl(spark, sf_dir, "embeddings")
-    ed = e.select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-    )
-    # ONE table scan: original + conditional planted twin via explode
-    # (same pattern as _q_embedding_neardup / _docs_with_planted_dups)
-    rows = F.array(
-        F.struct(F.col("vec_id").alias("vec_id"), F.col("v").alias("v")),
-        F.when(
-            F.col("vec_id") < _SEMDEDUP_PLANT,
-            F.struct(
-                (F.col("vec_id") + F.lit(1000000)).alias("vec_id"),
-                F.transform(
-                    "v",
-                    lambda x, i: F.when(i == 0, F.lit(0.0)).otherwise(x),
-                ).alias("v"),
-            ),
+    alle = _ed_with_norm(
+        _tbl(spark, sf_dir, "embeddings"), twin_below=_SEMDEDUP_PLANT,
+        twin=F.transform(
+            "v", lambda x, i: F.when(i == 0, F.lit(0.0)).otherwise(x)
         ),
     )
-    alle = (
-        ed.select(F.explode(rows).alias("r"))
-        .filter(F.col("r").isNotNull())
-        .select("r.vec_id", "r.v")
-    )
-    nrm = F.sqrt(F.aggregate("v", F.lit(0.0), lambda a, x: a + x * x))
-    alle = alle.select("vec_id", "v", nrm.alias("nrm"))
     # materialized once: referenced by both sides of the within-cell
     # pair join AND the final left join (no exchange reuse across
     # self-join aliases)
@@ -3882,7 +3680,7 @@ def _q_semdedup(spark, sf_dir):
     drops = (
         a.join(b, "cid")
         .filter(F.col("ord_a") < F.col("ord_b"))
-        .filter(_ivf_sim("va", "vb", "na", "nb") >= _SEMDEDUP_TAU)
+        .filter(_cosine_fp("va", "vb", "na", "nb") >= _SEMDEDUP_TAU)
         .select("vec_id")
         .distinct()
         .withColumn("_d", F.lit(1))
@@ -5434,15 +5232,15 @@ def oracle_sql() -> dict[str, str]:
             bits AS (
               SELECT DISTINCT ('0x' || substr(
                 md5('bj' || r.r::VARCHAR || ':' || build.k::VARCHAR), 1, 15))
-                ::BIGINT % {_BJ_BITS} AS bit
-              FROM build, range(0, {_BJ_K}) r(r)
+                ::BIGINT % {_BLOOM_BITS} AS bit
+              FROM build, range(0, {_BLOOM_K}) r(r)
             ),
             probe_keys AS (SELECT DISTINCT l_orderkey AS k FROM li),
             pbits AS (
               SELECT pk.k, ('0x' || substr(
                 md5('bj' || r.r::VARCHAR || ':' || pk.k::VARCHAR), 1, 15))
-                ::BIGINT % {_BJ_BITS} AS bit
-              FROM probe_keys pk, range(0, {_BJ_K}) r(r)
+                ::BIGINT % {_BLOOM_BITS} AS bit
+              FROM probe_keys pk, range(0, {_BLOOM_K}) r(r)
             ),
             kv AS (
               SELECT pbits.k,
@@ -6136,8 +5934,8 @@ def oracle_sql() -> dict[str, str]:
             bits AS (
               SELECT DISTINCT
                      ('0x' || substr(md5('bf' || r || ':' || key), 1, 15))::BIGINT
-                       % {_BF_BITS} AS bit
-              FROM keys, (SELECT unnest(range({_BF_K})) AS r)
+                       % {_BLOOM_BITS} AS bit
+              FROM keys, (SELECT unnest(range({_BLOOM_K})) AS r)
             ),
             probes AS (
               SELECT doc_id, key AS probe, 1::BIGINT AS truth
@@ -6149,8 +5947,8 @@ def oracle_sql() -> dict[str, str]:
             pb AS (
               SELECT doc_id, truth,
                      ('0x' || substr(md5('bf' || r || ':' || probe), 1, 15))::BIGINT
-                       % {_BF_BITS} AS bit
-              FROM probes, (SELECT unnest(range({_BF_K})) AS r)
+                       % {_BLOOM_BITS} AS bit
+              FROM probes, (SELECT unnest(range({_BLOOM_K})) AS r)
             )
             SELECT pb.doc_id, pb.truth,
                    min(CASE WHEN b.bit IS NULL THEN 0 ELSE 1 END)::BIGINT

@@ -181,7 +181,10 @@ def _read_side_info_mono(br: _BitReader) -> tuple[int, int, list[int], list[Gran
             gi.table_select = [br.read(5) for _ in range(2)]
             gi.subblock_gain = [br.read(3) for _ in range(3)]
             gi.region0_count = 7 if gi.block_type != 2 or gi.mixed_block else 8
-            gi.region1_count = 20 - gi.region0_count
+            # ISO 11172-3: region1 runs to the end of big_values and
+            # region2 is empty; 36 is past the last long scalefactor band
+            # (libmad's encoding of that boundary)
+            gi.region1_count = 36
         else:
             gi.block_type = 0
             gi.mixed_block = 0
@@ -228,15 +231,6 @@ def _write_side_info_mono(bw: _BitWriter, main_data_begin: int,
 # ---------------------------------------------------------------------------
 # scalefactors (long/short), Huffman region (table 0 only), requantize
 # ---------------------------------------------------------------------------
-
-def _scf_bits_long(compress: int, scfsi: list[int], granule: int) -> int:
-    s1, s2 = SLEN1[compress], SLEN2[compress]
-    if granule == 0:
-        return 11 * s1 + 10 * s2
-    groups = [(0, 6, s1), (6, 11, s1), (11, 16, s2), (16, 21, s2)]
-    return sum((hi - lo) * sl for (lo, hi, sl), sh in zip(groups, scfsi)
-               if not sh)
-
 
 def _read_scalefactors(br: _BitReader, gi: GranuleInfo, scfsi: list[int],
                        granule: int, prev_long: list[int] | None) -> list[int]:

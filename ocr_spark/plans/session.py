@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -52,12 +53,14 @@ def build_session(
 
 
 def _default_parallelism(master: str) -> int:
-    if master.startswith("local["):
-        n = master[len("local[") : -1]
-        if n == "*":
-            return os.cpu_count() or 8
-        try:
-            return int(n)
-        except ValueError:
-            return 8
-    return 200
+    """Task slots of a local master: `local` runs 1, `local[N]` and
+    `local[N,F]` run N, `local[*]` and `local[*,F]` one per CPU (F is
+    the task retry count, not a width).  Anything else is a cluster URL,
+    whose width the driver cannot see: Spark's default of 200."""
+    m = re.fullmatch(r"local(?:\[(\*|\d+)(?:,\d+)?\])?", master)
+    if m is None:
+        return 200
+    n = m.group(1)
+    if n is None:
+        return 1
+    return (os.cpu_count() or 8) if n == "*" else int(n)

@@ -150,6 +150,28 @@ def test_side_info_roundtrip_short_blocks():
         assert gi.subblock_gain == [1, 2, 3] and gi.scalefac_scale == 1
 
 
+def test_window_switching_region_counts():
+    """Under window switching the side info carries no region counts:
+    region0 is 8 bands for pure short blocks and 7 otherwise, and region1
+    runs to the end of big_values (count 36, past the last long band),
+    leaving region2 empty."""
+    def gran(block_type, mixed):
+        return {
+            "part2_3_length": 0, "big_values": 10, "global_gain": 42,
+            "scalefac_compress": 0, "windows_switching": 1,
+            "block_type": block_type, "mixed_block": mixed,
+            "table_select": [0, 0], "subblock_gain": [0, 0, 0],
+        }
+
+    for block_type, mixed, region0 in ((2, 0, 8), (2, 1, 7), (1, 0, 7), (3, 0, 7)):
+        bw = _BitWriter()
+        _write_side_info_mono(bw, 0, [0, 0, 0, 0], [gran(block_type, mixed)] * 2)
+        _mdb, _priv, _scfsi, grans = _read_side_info_mono(_BitReader(bw.to_bytes()))
+        for gi in grans:
+            assert (gi.block_type, gi.big_values) == (block_type, 10)
+            assert (gi.region0_count, gi.region1_count) == (region0, 36)
+
+
 def test_imdct_matches_direct_formula():
     rng = np.random.default_rng(7)
     X = rng.standard_normal(18)
