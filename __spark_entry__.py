@@ -209,13 +209,6 @@ def _hp_bucket_expr(vfp_col: str, table: int, bits: int, dims: int):
     )
 
 
-def _hp_dots_expr(vfp_col: str, table: int, bits: int, dims: int):
-    """array<long> of the hyperplane dots for one table — the common
-    input of the own-bucket bits AND the multi-probe margins (computed
-    once per vector per table)."""
-    return F.array(*_hp_dots(vfp_col, table, bits, dims))
-
-
 def _with_vfp(ed: DataFrame) -> DataFrame:
     """ed plus vfp = floor(v * 1e6), the quantized vector the exact
     integer hyperplane dots read."""
@@ -237,9 +230,9 @@ def _sql_hp_bucket(table: int, bits: int, dims: int, vfp: str = "vfp") -> str:
 
 
 def _sql_hp_dots(table: int, bits: int, dims: int, vfp: str = "vfp") -> str:
-    """DuckDB twin of _hp_dots_expr: BIGINT[] of the exact hyperplane
-    dots (list_dot_product of integer-valued lists is exact — see the
-    sign-LSH note above)."""
+    """DuckDB twin of the multi-probe query's array of _hp_dots: BIGINT[]
+    of the exact hyperplane dots (list_dot_product of integer-valued lists
+    is exact — see the sign-LSH note above)."""
     signs = _hp_signs(table, bits, dims)
     terms = [
         f"list_dot_product({vfp}, {list(signs[i])})::BIGINT"
@@ -280,23 +273,23 @@ def _l2_norm(v):
     return F.sqrt(F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x))
 
 
-def _ed_with_norm(e: DataFrame, twin_below: int = 0, twin=None) -> DataFrame:
+def _ed_vectors(e: DataFrame) -> DataFrame:
+    """(vec_id, v: array<double>): the embeddings cast once to double."""
+    return e.select(
+        "vec_id",
+        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
+    )
+
+
+def _ed_with_norm(e: DataFrame) -> DataFrame:
     """(vec_id, v: array<double>, nrm): embeddings with the L2 norm
     computed ONCE per vector.  Every pairwise-similarity query divides by
     both norms; computing them per PAIR (round 1) tripled the hot-loop
     flops.  The fold order is identical to the per-pair formulation, so
     the value — and every downstream fixed-point hash — is bit-identical
     (IEEE determinism); the DuckDB oracles factor the norm identically.
-    With `twin`, vectors with vec_id < `twin_below` also emit a planted
-    twin (_with_planted_twins) before the norm is taken.
     """
-    ed = e.select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-    )
-    if twin is not None:
-        ed = _with_planted_twins(ed, "vec_id", "v", twin_below, twin)
-    return ed.select("vec_id", "v", _l2_norm("v").alias("nrm"))
+    return _ed_vectors(e).withColumn("nrm", _l2_norm("v"))
 
 
 def _cosine_fp(a, b, na, nb):
@@ -3389,7 +3382,9 @@ def _q_embedding_ann_lsh_mp(spark, sf_dir):
     powers = F.array(*[F.lit(1 << i).cast("long") for i in range(b)])
     idx_seq = F.sequence(F.lit(0), F.lit(b - 1))
     for t in range(_LSH_MP_TABLES):
-        x = x.withColumn(f"d{t}", _hp_dots_expr("vfp", t, b, dims))
+        # the dots once per vector per table: the common input of the
+        # own-bucket bits AND the multi-probe margins
+        x = x.withColumn(f"d{t}", F.array(*_hp_dots("vfp", t, b, dims)))
         own = F.aggregate(
             F.zip_with(
                 F.col(f"d{t}"), powers,
@@ -3480,10 +3475,10 @@ def _q_embedding_topk(spark, sf_dir):
 # (cosine exactly 1 with the original).
 def _q_embedding_neardup(spark, sf_dir):
     n_bits = _lsh_bits(_emb_count(sf_dir))
-    alle = _ed_with_norm(
-        _tbl(spark, sf_dir, "embeddings"),
-        twin_below=10, twin=F.transform("v", lambda x: x * F.lit(2.0)),
-    )
+    alle = _with_planted_twins(
+        _ed_vectors(_tbl(spark, sf_dir, "embeddings")), "vec_id", "v",
+        10, F.transform("v", lambda x: x * F.lit(2.0)),
+    ).withColumn("nrm", _l2_norm("v"))
     bkt = sum(
         F.when(F.element_at("v", i + 1) > 0, F.lit(1 << i)).otherwise(F.lit(0))
         for i in range(n_bits)
@@ -3646,12 +3641,11 @@ _SEMDEDUP_PLANT = 20     # vec_id < PLANT gets a planted near-twin
 
 
 def _q_semdedup(spark, sf_dir):
-    alle = _ed_with_norm(
-        _tbl(spark, sf_dir, "embeddings"), twin_below=_SEMDEDUP_PLANT,
-        twin=F.transform(
-            "v", lambda x, i: F.when(i == 0, F.lit(0.0)).otherwise(x)
-        ),
-    )
+    alle = _with_planted_twins(
+        _ed_vectors(_tbl(spark, sf_dir, "embeddings")), "vec_id", "v",
+        _SEMDEDUP_PLANT,
+        F.transform("v", lambda x, i: F.when(i == 0, F.lit(0.0)).otherwise(x)),
+    ).withColumn("nrm", _l2_norm("v"))
     # materialized once: referenced by both sides of the within-cell
     # pair join AND the final left join (no exchange reuse across
     # self-join aliases)

@@ -98,11 +98,10 @@ def run_funnel_stream(
     checkpoint_path: str,
     available_now: bool = False,
     watermark: str = "30 minutes",
-    max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
-    events = read_stream(
-        spark, input_path, EVENTS_STREAM_SCHEMA, max_files_per_trigger
-    ).withWatermark("ts", watermark)
+    events = read_stream(spark, input_path, EVENTS_STREAM_SCHEMA).withWatermark(
+        "ts", watermark
+    )
     stages: DataFrame = events.groupBy("user_id").applyInPandasWithState(
         _funnel,
         outputStructType=FUNNEL_SCHEMA,

@@ -80,11 +80,8 @@ def run_conversation_assembly_stream(
     checkpoint_path: str,
     available_now: bool = False,
     watermark: str = "30 minutes",
-    max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
-    turns = read_stream(
-        spark, input_path, max_files_per_trigger=max_files_per_trigger
-    ).withWatermark("ts", watermark)
+    turns = read_stream(spark, input_path).withWatermark("ts", watermark)
     summaries: DataFrame = turns.groupBy("conv_id").applyInPandasWithState(
         _assemble,
         outputStructType=SUMMARY_SCHEMA,

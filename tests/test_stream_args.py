@@ -19,18 +19,15 @@ RUNNERS = sorted(
 
 def test_runner_set():
     assert RUNNERS == [
-        "run_conversation_assembly_stream",
         "run_countmin_cell_stream",
         "run_decontam_stream",
         "run_dedup_stream",
         "run_enrich_stream",
         "run_extract_stream",
-        "run_funnel_stream",
         "run_hll_register_stream",
         "run_importance_stream",
         "run_minhash_neardup_stream",
         "run_quality_gate_stream",
-        "run_sessionize_stream",
         "run_turn_rate_stream",
     ]
 
