@@ -31,10 +31,9 @@ from __future__ import annotations
 import re
 import warnings
 from itertools import chain
-from typing import Any
+from typing import TYPE_CHECKING, Any
 
 import numpy as np
-import pandas as pd
 
 from ocr_spark.constants import (
     FOOTER_FRAC,
@@ -55,6 +54,9 @@ from ocr_spark.extract.threshold import (
     otsu_split_batch,
     quantize,
 )
+
+if TYPE_CHECKING:  # pandas loads in extract_frame, off the serving path
+    import pandas as pd
 
 # Per-process compiled state (G27: the model-singleton pattern,
 # predict.py:7,16-29 — read-only, loaded once per executor worker).
@@ -556,6 +558,8 @@ def extract_frame(pdf: pd.DataFrame) -> pd.DataFrame:
     Output columns: OUTPUT_SCHEMA_DDL.  This one function is both the
     single-process oracle and the body of the mapInPandas operator.
     """
+    import pandas as pd
+
     results = extract_results(pdf["text"].tolist())
     return pd.DataFrame(
         {

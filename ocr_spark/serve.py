@@ -35,6 +35,23 @@ analogue of the reference's multipart file upload: one opaque payload
 per request) and returns the same JSON envelope as `serve_one`; any
 failure returns {"success": false, "error": ...} with HTTP 200, exactly
 like the reference (api.py returns jsonify'd errors, not HTTP errors).
+
+One thread serves every request, the thread that accepted it (stdlib
+`HTTPServer`, not `ThreadingHTTPServer`).  Extraction holds the GIL, so
+threads per connection never ran two extractions at once; they only
+added a thread start and a hand-off to every request.  Two constants
+keep the single thread bounded:
+  - READ_TIMEOUT_S bounds each read from a client socket, so a client
+    that stalls mid-request holds the thread for at most that long per
+    read (a body read that times out gets the failure envelope).  It is
+    a per-read bound, not a whole-request deadline: a client that trickles
+    a byte just inside every timeout keeps the thread for longer.
+  - ACCEPT_BACKLOG sizes the kernel's accept queue, so a burst of
+    connects waits there while one request is served, instead of having
+    its SYNs dropped and retried a second later (the stdlib default is 5).
+Importing this module does not load pandas (only `extract_frame` needs
+it), which keeps server start-up and its resident memory small.
+
 This is a serving HARNESS for parity/testing, not a production server
 — at scale the engine's surface is the batch/streaming job, and a real
 deployment would front the same pure `serve_one` kernel with a proper
@@ -52,6 +69,10 @@ from ocr_spark.extract.extractor import extract_turn
 # The reference's Flask MAX_CONTENT_LENGTH (main.py:6): larger bodies are
 # refused before any of them is read.
 MAX_BODY_BYTES = 16 * 1024 * 1024
+# Seconds one read from a client socket may wait (see the module docstring).
+READ_TIMEOUT_S = 10.0
+# Pending connections the kernel queues while a request is being served.
+ACCEPT_BACKLOG = 128
 
 
 def serve_one(text: Any) -> dict:
@@ -77,9 +98,14 @@ def make_http_server(port: int = 0, host: str = "127.0.0.1"):
     """Build (don't start) the stdlib HTTP server wrapping `serve_one`.
     Returns the server object; `.server_address[1]` is the bound port
     (pass port=0 for an ephemeral one — how tests drive it)."""
-    from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+    from http.server import BaseHTTPRequestHandler, HTTPServer
+
+    class Server(HTTPServer):
+        request_queue_size = ACCEPT_BACKLOG
 
     class Handler(BaseHTTPRequestHandler):
+        timeout = READ_TIMEOUT_S
+
         def do_POST(self):  # noqa: N802  (stdlib casing)
             if self.path != "/api/extract":
                 self._reply({"success": False, "error": "unknown route"})
@@ -116,7 +142,7 @@ def make_http_server(port: int = 0, host: str = "127.0.0.1"):
         def log_message(self, *a):  # quiet; counters live in lineage
             pass
 
-    return ThreadingHTTPServer((host, port), Handler)
+    return Server((host, port), Handler)
 
 
 def main(argv: list[str] | None = None) -> int:

@@ -166,3 +166,110 @@ def test_serve_http_rejects_negative_content_length():
     finally:
         srv.shutdown()
         srv.server_close()
+
+
+def _start(srv):
+    import threading
+
+    t = threading.Thread(target=srv.serve_forever, daemon=True)
+    t.start()
+    return t
+
+
+def _read_reply(sock) -> dict:
+    """Read one HTTP reply to EOF; returns its JSON body."""
+    chunks = []
+    while chunk := sock.recv(65536):
+        chunks.append(chunk)
+    head, _, body = b"".join(chunks).partition(b"\r\n\r\n")
+    assert head.split()[1] == b"200"
+    return json.loads(body)
+
+
+def _request(body: bytes) -> bytes:
+    return (
+        b"POST /api/extract HTTP/1.0\r\nHost: localhost\r\n"
+        + f"Content-Length: {len(body)}\r\n\r\n".encode()
+        + body
+    )
+
+
+def test_serve_import_skips_pandas():
+    """The serving path needs no pandas (only extract_frame does), so
+    importing it leaves pandas unloaded: a faster start and a smaller
+    server."""
+    import os
+
+    res = subprocess.run(
+        [sys.executable, "-c",
+         "import sys, ocr_spark.serve; print('pandas' in sys.modules)"],
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert res.returncode == 0, res.stderr
+    assert res.stdout.strip() == "False"
+
+
+def test_serve_http_bounds_a_stalled_body():
+    """One thread serves every request, so a client that announces a body
+    and stalls must lose the connection after a bounded read wait, with
+    the JSON failure envelope; the next connection is then served."""
+    import socket
+    import time
+
+    from ocr_spark.serve import make_http_server
+
+    srv = make_http_server(0)
+    timeout = srv.RequestHandlerClass.timeout
+    assert timeout is not None and 0 < timeout <= 30
+    srv.RequestHandlerClass.timeout = 0.5
+    port = srv.server_address[1]
+    _start(srv)
+    try:
+        with socket.create_connection(("127.0.0.1", port), timeout=10) as s:
+            t0 = time.monotonic()
+            s.sendall(
+                b"POST /api/extract HTTP/1.1\r\nHost: localhost\r\n"
+                b"Content-Length: 100\r\n\r\nabc"
+            )
+            got = _read_reply(s)
+            assert time.monotonic() - t0 < 5
+        assert got["success"] is False
+
+        with socket.create_connection(("127.0.0.1", port), timeout=10) as s:
+            s.sendall(_request(b"Some words. " * 8))
+            assert _read_reply(s)["success"] is True
+    finally:
+        srv.shutdown()
+        srv.server_close()
+
+
+def test_serve_http_burst_fits_accept_queue():
+    """32 connects made before the server accepts any all complete (the
+    accept backlog holds them, no SYN is dropped), and each is then served."""
+    import socket
+
+    from ocr_spark.serve import make_http_server
+
+    srv = make_http_server(0)
+    port = srv.server_address[1]
+    socks, serving = [], None
+    try:
+        for _ in range(32):
+            socks.append(socket.create_connection(("127.0.0.1", port), timeout=0.5))
+        serving = _start(srv)
+        payload = b"Plain text with enough meaningful words to keep as content."
+        for s in socks:
+            s.settimeout(10)
+            s.sendall(_request(payload))
+        for s in socks:
+            got = _read_reply(s)
+            assert got["success"] is True and got["status"] == "ok"
+    finally:
+        for s in socks:
+            s.close()
+        if serving is not None:  # shutdown() waits for a serve_forever
+            srv.shutdown()
+        srv.server_close()
