@@ -3,9 +3,11 @@
 `entry(spark)` runs the flagship extraction over transcripts derived from
 the sf0.001 documents table.  `queries()` exposes one entry per
 implemented operator family (SURVEY.md §2 + the training-data-pipeline
-ops); `oracle_sql()` gives the DuckDB-equivalent SQL for every
-SQL-expressible one.  Column names/aliases match exactly between both
-sides (the driver hashes values after sorting columns by name).
+ops); `oracle_sql()` gives the DuckDB twin of every one of them.  The
+builders live in ocr_spark/queries/, one module per family, each with
+its oracle attached by the `oracle` decorator; this file only lists
+them.  Column names/aliases match exactly between both sides (the
+driver hashes values after sorting columns by name).
 
 Float discipline: any computed float that reaches the value-hash is
 fixed-pointed via floor(x * 10^k) so Spark/DuckDB rounding modes can't
@@ -15,641 +17,25 @@ are deterministic given identical operation order).
 
 from __future__ import annotations
 
-import hashlib
-import math
 import os
 import sys
 from collections.abc import Callable
-from functools import lru_cache
 
-import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-# The text builders and the sketch/near-dup/decontamination/DSIR
-# constants are defined once under ocr_spark/ and shared with the
-# streaming twins; the oracle SQL below spells its side out on its own.
-from ocr_spark.functions.text import (  # noqa: E402
-    gram_fingerprints,
-    letter_words,
-    lower_words,
-    md5_long,
-    word3_shingles,
-    word_bigrams,
-    word_rows,
-)
-from ocr_spark.streaming.extract_stream import (  # noqa: E402
-    DECON_GRAM_WORDS as _DECON_GRAM,
-    DSIR_BUCKETS as _DSIR_BUCKETS,
-    dsir_bucket,
-    gopher_features,
-    gopher_passes,
-    with_dsir_keep,
-)
-from ocr_spark.streaming.neardup import (  # noqa: E402
-    M31 as _M31,
-    MINHASH_A as _MINHASH_A,
-    MINHASH_B as _MINHASH_B,
-    minhash,
-    minhash_bands,
-    shingle_fp,
-)
-from ocr_spark.streaming.sketch import (  # noqa: E402
-    CM_COLS as _CM_COLS,
-    CM_ROWS as _CM_ROWS,
-    HLL_M as _HLL_M,
-    HLL_S as _HLL_S,
-    cm_cells,
-    hll_fold,
-    hll_registers,
+from ocr_spark.queries import (  # noqa: E402
+    analytics,
+    dedup,
+    graph,
+    media,
+    pipeline,
+    sketches,
+    text,
+    vectors,
 )
 
-# ---------------------------------------------------------------------------
-# shared helpers
-# ---------------------------------------------------------------------------
-
-_STOPWORDS = "the|and|of|to|a|in|is|it|for|on"
-_LANG_MARKERS = {
-    "en": "the|and|of|to",
-    "es": "el|la|que|los",
-    "fr": "le|et|les|des",
-    "de": "der|die|und|das",
-}
-
-# Cross-engine deterministic hashing: md5_long(s) = int64 of the first 15
-# hex chars of md5(s) (60 bits, identical in Spark `conv(substr(md5(x),1,
-# 15),16,10)` and DuckDB `('0x'||substr(md5(x),1,15))::BIGINT`); MinHash
-# reduces it mod the Mersenne prime M31 (ocr_spark/streaming/neardup.py).
-
-# --- corpus-size-driven bucket parameters (scale rules) --------------------
-# Sign-LSH: bucket count must grow with the corpus or intra-bucket exact
-# search turns quadratic (N^2 / 2^bits).  Rule: 2^bits ~= N / TARGET, i.e.
-# bits = ceil(log2(N / TARGET)), floored at 6 (sandbox floor) and capped at
-# 62 (int64 bucket key).  N comes from parquet FOOTER metadata (below) and
-# the parameter is derived ONCE in Python integer arithmetic, then injected
-# into both engines as a literal — no per-query count() job, and no float
-# libm (ceil/log2/sqrt) recomputation that could disagree across engines
-# at boundary N.
-_LSH_TARGET_BUCKET = 64
-
-
-def _lsh_bits(n_rows: int) -> int:
-    # integer-exact ceil(log2(n/64)): bit_length of (ceil(n/64) - 1)
-    q = (max(n_rows, 1) + _LSH_TARGET_BUCKET - 1) // _LSH_TARGET_BUCKET
-    return max(6, min(62, (q - 1).bit_length()))
-
-
-@lru_cache(maxsize=None)
-def _emb_count(sf_dir: str) -> int:
-    """Row count of the embeddings table read from the parquet FOOTER
-    metadata — no Spark job, no data scan; cached per sf dir.  This is
-    the sandbox stand-in for Iceberg snapshot statistics (total-records)
-    at production scale: the ANN parameter rules need N, never the rows."""
-    import pyarrow.parquet as pq
-
-    return pq.ParquetFile(f"{sf_dir}/embeddings.parquet").metadata.num_rows
-
-
-@lru_cache(maxsize=None)
-def _emb_dims(sf_dir: str) -> int:
-    """Embedding dimensionality, read once from the first row group of
-    the parquet file (the list<float> schema does not carry a fixed
-    size; an Iceberg table would pin it as a table property)."""
-    import pyarrow.parquet as pq
-
-    rg = pq.ParquetFile(f"{sf_dir}/embeddings.parquet").read_row_group(
-        0, columns=["embedding"]
-    )
-    return len(rg.column(0)[0].as_py())
-
-
-def _oracle_sf_dir() -> str:
-    """The sf dir the DuckDB oracles bind to (same env contract as
-    _expected_path): SPARK_GRAFT_ORACLE_SF holds either a bare sf name
-    (driver default, tables under /root/testdata) or a full dir path
-    (tools/compare_oracle.py)."""
-    v = os.environ.get("SPARK_GRAFT_ORACLE_SF", "sf0.01").rstrip("/")
-    return v if os.sep in v else os.path.join("/root/testdata", v)
-
-
-# --- seeded random hyperplanes (sign-LSH hash family) ----------------------
-# ±1 ("Rademacher") hyperplane entries derived from md5 parity of a
-# namespaced seed string — deterministic, engine-independent, computed
-# ONCE in Python and injected into both plans as literals.  The bucket
-# bit is the sign of an EXACT INTEGER dot product: vectors are quantized
-# to vfp[d] = floor(v[d] * 1e6) (int64), and the ±1-weighted sum over
-# <=2^11 dims stays far below 2^53, so even an engine that sums in
-# doubles (DuckDB list_dot_product) computes it exactly — no cross-
-# engine ulp risk at the sign boundary, unlike Gaussian hyperplanes.
-#
-# Multi-table OR-amplification: _LSH_TABLES independent hyperplane sets;
-# a pair is a candidate if ANY table buckets it together.  Fewer bits
-# per table (one quarter the buckets of the single-table rule) raises
-# per-table collision odds, and 16 tables OR the misses away — measured
-# recall@3 = 0.90 on the sf0.01 corpus vs 0.07 single-table
-# (tools/ann_recall.py), at ~16x the hashing + candidate cost.  That is
-# the standard LSH recall/cost knob; at 100 TB both sides of each band
-# join stay linear in N (buckets track corpus size via _lsh_bits).
-_LSH_TABLES = 16
-
-# Multi-probe variant (q_embedding_ann_lsh_mp): instead of 16 tables
-# each probed once, 4 tables each probed 4 times — the own bucket plus
-# the buckets reached by flipping each of the 3 lowest-|margin| bits
-# (margin = the exact integer hyperplane dot; a small |dot| means the
-# vector sits near that plane, so the flipped bucket is the likeliest
-# home of missed neighbors — Lv et al., "Multi-Probe LSH", VLDB 2007).
-# Same 16 bucket visits per vector as the 16-table build, but 4x less
-# hashing work and a 4x smaller INDEX side (vectors are indexed under
-# their own bucket only; probing is query-side).  Measured on sf0.01
-# (tools/ann_recall.py): recall@3 0.913 / 339 avg candidates vs the
-# 16-table build's 0.903 / 318 — strictly better recall at a quarter
-# of the index size, so this is the preferred LSH scale path; the
-# 16-table OR build stays as the driver-verified comparison point.
-_LSH_MP_TABLES = 4
-_LSH_MP_PROBES = 4  # own bucket + 3 lowest-|margin| single-bit flips
-
-
-def _lsh_mt_bits(n_rows: int) -> int:
-    return max(4, _lsh_bits(n_rows) - 2)
-
-
-@lru_cache(maxsize=None)
-def _hp_signs(table: int, bits: int, dims: int) -> tuple[tuple[int, ...], ...]:
-    return tuple(
-        tuple(
-            1 if hashlib.md5(f"hp:{table}:{i}:{d}".encode()).digest()[0] & 1
-            else -1
-            for d in range(dims)
-        )
-        for i in range(bits)
-    )
-
-
-def _hp_dots(vfp_col: str, table: int, bits: int, dims: int) -> list:
-    """The `bits` exact integer dots of the quantized vector with the
-    seeded hyperplanes of one table, one column per plane."""
-    return [
-        F.aggregate(
-            F.zip_with(vfp_col, F.array(*[F.lit(s) for s in row]),
-                       lambda x, s: x * s),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-        for row in _hp_signs(table, bits, dims)
-    ]
-
-
-def _hp_bucket_expr(vfp_col: str, table: int, bits: int, dims: int):
-    """Spark bucket key: bit i set iff the exact integer dot of the
-    quantized vector with seeded hyperplane i is positive."""
-    return sum(
-        F.when(d > 0, F.lit(1 << i)).otherwise(F.lit(0))
-        for i, d in enumerate(_hp_dots(vfp_col, table, bits, dims))
-    )
-
-
-def _with_vfp(ed: DataFrame) -> DataFrame:
-    """ed plus vfp = floor(v * 1e6), the quantized vector the exact
-    integer hyperplane dots read."""
-    return ed.withColumn(
-        "vfp", F.transform("v", lambda x: F.floor(x * F.lit(1000000.0)))
-    )
-
-
-def _sql_hp_bucket(table: int, bits: int, dims: int, vfp: str = "vfp") -> str:
-    """DuckDB twin of _hp_bucket_expr over the same injected ±1 rows
-    (list_dot_product of integer-valued lists is exact — see above)."""
-    signs = _hp_signs(table, bits, dims)
-    terms = [
-        f"(CASE WHEN list_dot_product({vfp}, {list(signs[i])}) > 0"
-        f" THEN {1 << i}::BIGINT ELSE 0 END)"
-        for i in range(bits)
-    ]
-    return "(" + " + ".join(terms) + ")"
-
-
-def _sql_hp_dots(table: int, bits: int, dims: int, vfp: str = "vfp") -> str:
-    """DuckDB twin of the multi-probe query's array of _hp_dots: BIGINT[]
-    of the exact hyperplane dots (list_dot_product of integer-valued lists
-    is exact — see the sign-LSH note above)."""
-    signs = _hp_signs(table, bits, dims)
-    terms = [
-        f"list_dot_product({vfp}, {list(signs[i])})::BIGINT"
-        for i in range(bits)
-    ]
-    return "[" + ", ".join(terms) + "]"
-
-
-def _sql_lsh_mp_tables(bits: int, dims: int, n_flip: int) -> str:
-    """Per-table CTE bodies for the multi-probe oracle: own bucket +
-    margin-sorted probe list from the shared dots list, mirroring
-    _q_embedding_ann_lsh_mp's expressions (same (|dot|, bit) sort, same
-    single-bit flips)."""
-    parts = []
-    for t in range(_LSH_MP_TABLES):
-        parts.append(f"""
-            hp{t} AS (
-              SELECT vec_id, own,
-                     [own] || list_transform(mrg[1:{n_flip}],
-                                             s -> xor(own, 1::BIGINT << s.i)) AS pbs
-              FROM (
-                SELECT vec_id,
-                       list_sum([CASE WHEN d[i+1] > 0 THEN (1::BIGINT << i)
-                                      ELSE 0 END
-                                 for i in range({bits})])::BIGINT AS own,
-                       list_sort(list_transform(range({bits}),
-                                 i -> {{'m': abs(d[i+1]), 'i': i}})) AS mrg
-                FROM (SELECT vec_id,
-                             {_sql_hp_dots(t, bits, dims)} AS d
-                      FROM ed)
-              )
-            )""")
-    return ",".join(parts)
-
-
-def _l2_norm(v):
-    """L2 norm of an array<double> column as one sequential fold."""
-    return F.sqrt(F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x))
-
-
-def _ed_vectors(e: DataFrame) -> DataFrame:
-    """(vec_id, v: array<double>): the embeddings cast once to double."""
-    return e.select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-    )
-
-
-def _ed_with_norm(e: DataFrame) -> DataFrame:
-    """(vec_id, v: array<double>, nrm): embeddings with the L2 norm
-    computed ONCE per vector.  Every pairwise-similarity query divides by
-    both norms; computing them per PAIR (round 1) tripled the hot-loop
-    flops.  The fold order is identical to the per-pair formulation, so
-    the value — and every downstream fixed-point hash — is bit-identical
-    (IEEE determinism); the DuckDB oracles factor the norm identically.
-    """
-    return _ed_vectors(e).withColumn("nrm", _l2_norm("v"))
-
-
-def _cosine_fp(a, b, na, nb):
-    """Fixed-point cosine with PRE-COMPUTED norms (once per vector, not
-    per pair — see _ed_with_norm).  Deliberately a JVM-side higher-order
-    fold: an Arrow-vectorized pandas-UDF twin (bit-identical per-dim
-    fold, 0 mismatches on an 80k-pair A/B) was MEASURED 2-5x slower on
-    every ANN verify path at sf0.1 (lsh_mt 14.6->15.6 s, ivf_mp
-    9.3->45.8 s) — serializing two 64-dim double arrays per candidate
-    pair through the Python bridge costs more than the codegen'd fold
-    saves.  See PLANS.md "negative results"."""
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return F.floor(dot / (F.col(na) * F.col(nb)) * F.lit(1000000.0)).cast("long")
-
-
-def _pair_sides(ed: DataFrame, *keys: str) -> tuple[DataFrame, DataFrame]:
-    """Query side (query_id, qv, qn, keys...) and neighbor side
-    (neighbor_id, v, nrm, keys...) of a (vec_id, v, nrm, keys...) table."""
-    q = ed.select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"),
-        F.col("nrm").alias("qn"), *keys,
-    )
-    nv = ed.select(F.col("vec_id").alias("neighbor_id"), "v", "nrm", *keys)
-    return q, nv
-
-
-def _topk_by_cosine(pairs: DataFrame, k: int, *keys: str) -> DataFrame:
-    """(query_id, keys..., neighbor_id, sim_fp, rnk): the k best joined
-    _pair_sides rows per query by fixed-point cosine, ties to the lowest
-    neighbor_id; the pass-through `keys` come out as long."""
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim_fp").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pairs.select("query_id", *keys, "neighbor_id",
-                     _cosine_fp("qv", "v", "qn", "nrm").alias("sim_fp"))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", *[F.col(c).cast("long").alias(c) for c in keys],
-                "neighbor_id", "sim_fp", F.col("rnk").cast("long").alias("rnk"))
-    )
-
-
-def _ivf_cells(n_rows: int) -> int:
-    """IVF coarse-quantizer size: the standard sqrt(N) rule (cells ~ √N
-    balances cell-assignment cost N*C against intra-cell search N^2/C;
-    see e.g. the FAISS IVF guidelines).  Floor 16 keeps the sandbox
-    behavior; math.isqrt is exact integer arithmetic (no libm sqrt whose
-    rounding could disagree with an engine's floor(sqrt()) at large
-    perfect squares)."""
-    return max(16, math.isqrt(max(n_rows, 0)))
-
-
-# --- trained IVF coarse quantizer ------------------------------------------
-# Deterministic sampled spherical k-means (round 2 used the `cells`
-# lowest vec_ids as centroids — a degenerate quantizer).  Seeds = the
-# `cells` vectors with the lowest md5 fingerprint of their vec_id (a
-# deterministic hash sample, so seed quality does not depend on id
-# assignment order); a FIXED number of Lloyd iterations assigns each
-# unit vector to its max-cosine centroid (fixed-point, ties to the
-# lowest cell) and re-normalizes the mean.  Computed ONCE per sf dir in
-# pure NumPy on the driver and injected into BOTH engines as literals,
-# so cross-engine parity is structural — neither engine re-derives the
-# training.
-#
-# Training reads a HASH SAMPLE, never the whole table: N comes from the
-# parquet footer, and when N exceeds the sample cap (~IVF_SAMPLE_PER_CELL
-# rows per √N centroid — the standard ≥~39·k training floor from the
-# FAISS guidelines, rounded up to 100·k) the trainer keeps only the rows
-# whose md5(vec_id) fingerprint ranks in the lowest cap — the SAME
-# fingerprint order that picks the seeds, so seeds are by construction
-# inside the sample.  Batches stream through pyarrow with the filter
-# applied per batch, so peak driver memory is O(cap + one row group),
-# bounded even at 10^11 vectors (cap ≈ 100·√N ≈ 3·10^7 rows there — a
-# few GB of float32, the documented driver budget; the 10^11-row table
-# itself would be ~100 TB).  Sandbox tables sit below the cap, so the
-# sandbox trains on all rows — identical centroids to round 3.
-# Measured on sf0.01 (tools/ann_recall.py, faithful index-side
-# accounting): nprobe=1 recall@3 0.213 -> 0.263, probe=6/index=2
-# 0.453@nprobe-4-equivalent -> 0.851 vs the lowest-id quantizer.
-_IVF_KMEANS_ITERS = 10
-_IVF_NPROBE = 6   # query side fans to its 6 closest cells
-_IVF_NINDEX = 2   # index side is assigned to its 2 closest cells
-
-_IVF_SAMPLE_PER_CELL = 100  # training rows per centroid (cap = 100·cells)
-
-
-def _ivf_training_sample(path: str):
-    """(vectors, vec_ids, cells, cap) — the deterministic md5-ranked hash
-    sample the k-means trainer runs on.  Factored out of _ivf_centroids
-    so tests can assert the row bound directly.  Streams the file batch
-    by batch; rows materialized never exceed min(N, cap) + one batch."""
-    import numpy as np
-    import pyarrow.parquet as pq
-
-    def fp(i) -> int:
-        return int(hashlib.md5(str(int(i)).encode()).hexdigest()[:15], 16)
-
-    pf = pq.ParquetFile(path)
-    n_rows = pf.metadata.num_rows
-    cells = _ivf_cells(n_rows)
-    cap = _IVF_SAMPLE_PER_CELL * cells
-    if n_rows <= cap:
-        t = pq.read_table(path, columns=["vec_id", "embedding"]).to_pandas()
-        v = np.stack(t.embedding.to_numpy()).astype(np.float64)
-        return v, t.vec_id.to_numpy(), cells, cap
-    # pass 1: ids only (8 bytes/row — fine on the driver up to ~10^9
-    # rows; beyond that this pass itself becomes a small Spark job
-    # selecting the cap lowest fingerprints, same determinism)
-    ids = pq.read_table(path, columns=["vec_id"]).column("vec_id").to_numpy()
-    fps = np.array([fp(i) for i in ids])
-    keep_thresh = np.partition(fps, cap - 1)[cap - 1]
-    keep = set(ids[fps <= keep_thresh].tolist())
-    # pass 2: stream batches, keep only sampled rows
-    vecs, kept_ids = [], []
-    for batch in pf.iter_batches(columns=["vec_id", "embedding"]):
-        bid = batch.column("vec_id").to_numpy()
-        mask = np.array([int(i) in keep for i in bid])
-        if mask.any():
-            emb = batch.column("embedding").to_pylist()
-            vecs.extend(e for e, m in zip(emb, mask) if m)
-            kept_ids.extend(bid[mask].tolist())
-    v = np.asarray(vecs, dtype=np.float64)
-    kept_ids = np.asarray(kept_ids)
-    # md5 ties (>cap rows at the threshold) are broken by vec_id order
-    # so the sample size is exactly cap, deterministically
-    if len(kept_ids) > cap:
-        kfps = np.array([fp(i) for i in kept_ids])
-        order = np.lexsort((kept_ids, kfps))[:cap]
-        order = np.sort(order)
-        v, kept_ids = v[order], kept_ids[order]
-    return v, kept_ids, cells, cap
-
-
-@lru_cache(maxsize=None)
-def _ivf_centroids(sf_dir: str) -> list[list[float]]:
-    import numpy as np
-
-    v, vec_ids, cells, _cap = _ivf_training_sample(
-        f"{sf_dir}/embeddings.parquet"
-    )
-    norm = v / np.linalg.norm(v, axis=1, keepdims=True)
-    fps = np.array(
-        [
-            int(hashlib.md5(str(int(i)).encode()).hexdigest()[:15], 16)
-            for i in vec_ids
-        ]
-    )
-    seed_idx = np.sort(np.argsort(fps, kind="stable")[:cells])
-    cents = norm[seed_idx].copy()
-    for _ in range(_IVF_KMEANS_ITERS):
-        cn = cents / np.linalg.norm(cents, axis=1, keepdims=True)
-        assign = np.argmax(np.floor((norm @ cn.T) * 1e6), axis=1)
-        new = cn.copy()  # empty cells keep their previous centroid
-        for c in range(cells):
-            m = assign == c
-            if m.any():
-                s = norm[m].sum(axis=0)
-                ln = np.linalg.norm(s)
-                if ln > 0:
-                    new[c] = s / ln
-        cents = new
-    return [[float(x) for x in row] for row in cents]
-
-
-def _fmt_dvec(row: list[float]) -> str:
-    """DuckDB DOUBLE[] literal with exact float64 round-trip: repr() is
-    shortest-round-trip, and the e-notation suffix forces the parser
-    down the DOUBLE path (a bare decimal literal parses as DECIMAL,
-    which loses the last ulp on >15-digit values)."""
-
-    def one(x: float) -> str:
-        s = repr(x)
-        return s if ("e" in s or "E" in s) else s + "e0"
-
-    return "[" + ", ".join(one(x) for x in row) + "]"
-
-
-_SQL_EMB_SRC = "(SELECT vec_id, [x::DOUBLE for x in embedding] AS v FROM embeddings)"
-
-
-def _sql_ivf_ranked(cents: list[list[float]], src: str = _SQL_EMB_SRC) -> str:
-    """DuckDB twin of _ivf_ranked (shared by the IVF oracles — the
-    quantizer definition lives here and in _ivf_ranked only).  `cents`
-    are the Python-trained k-means centroids (_ivf_centroids), injected
-    as exact DOUBLE[] literals so both engines rank against the
-    identical quantizer.  `src` is any (vec_id, v: DOUBLE[]) relation —
-    the default is the raw embeddings table; q_semdedup passes its
-    planted-twin corpus."""
-    rows = ", ".join(
-        f"({i}, {_fmt_dvec(cv)}::DOUBLE[])" for i, cv in enumerate(cents)
-    )
-    return f"""
-  ed AS (
-    SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM {src}
-  ),
-  cents AS (
-    SELECT col0 AS cid, col1 AS cv, sqrt(list_dot_product(col1, col1)) AS cn
-    FROM (VALUES {rows})
-  ),
-  ranked AS (
-    SELECT e.vec_id, e.v, e.nrm, c.cid,
-           floor(list_dot_product(e.v, c.cv) /
-                 (e.nrm * c.cn) * 1000000.0)::BIGINT AS c_sim,
-           row_number() OVER (
-             PARTITION BY e.vec_id
-             ORDER BY floor(list_dot_product(e.v, c.cv) /
-                     (e.nrm * c.cn) * 1000000.0)::BIGINT DESC,
-                      c.cid ASC) AS rn
-    FROM ed e CROSS JOIN cents c
-  )
-"""
-
-
-def _with_planted_twins(df: DataFrame, key: str, val: str, below: int,
-                        twin) -> DataFrame:
-    """(key, val): every row, plus a planted twin (key + 1000000, `twin`)
-    for each row with key < `below`, so the dedup queries have
-    non-trivial positives at every sf.  ONE scan: each row conditionally
-    emits itself and its twin via a single explode (the union-of-filter
-    formulation scanned the table twice per reference)."""
-    rows = F.array(
-        F.struct(F.col(key).alias(key), F.col(val).alias(val)),
-        F.when(
-            F.col(key) < below,
-            F.struct((F.col(key) + F.lit(1000000)).alias(key), twin.alias(val)),
-        ),
-    )
-    return (
-        df.select(F.explode(rows).alias("r"))
-        .filter(F.col("r").isNotNull())
-        .select(f"r.{key}", f"r.{val}")
-    )
-
-
-def _docs_with_planted_dups(spark, sf_dir: str) -> DataFrame:
-    """documents plus planted near-duplicates: doc_id < 25 re-emitted as
-    doc_id + 1000000 with the first 3 words dropped."""
-    return _with_planted_twins(
-        _docs_wide(spark, sf_dir).select("doc_id", "text"), "doc_id", "text",
-        25, F.expr("concat_ws(' ', slice(split(text, ' '), 4, 1000000))"),
-    )
-
-
-def _shingle_fps(alld: DataFrame, fp) -> DataFrame:
-    """(doc_id, fp): `fp` of each distinct word-3-gram shingle string
-    (shingle_fp is the md5 prefix mod M31 MinHash hashes, md5_long the
-    full 60-bit prefix SimHash needs).  The split array is materialized
-    once per row (inlining split() into the lambda is O(words^2))."""
-    words = alld.select("doc_id", F.split("text", " ").alias("w"))
-    return words.select(
-        "doc_id", F.explode(word3_shingles("w")).alias("sh_str")
-    ).select("doc_id", fp(F.col("sh_str")).alias("fp"))
-
-# DuckDB twins of the helpers above (composed into oracle SQL below).
-_SQL_ALLD = """
-  alld AS (
-    SELECT doc_id, text FROM documents
-    UNION ALL
-    SELECT doc_id + 1000000 AS doc_id,
-           array_to_string(string_split(text, ' ')[4:], ' ') AS text
-    FROM documents WHERE doc_id < 25
-  )
-"""
-
-
-def _sql_shingle_fps(reduce: str) -> str:
-    """DuckDB twin of _shingle_fps over alld: `reduce` follows the 60-bit
-    md5 prefix (" % 2147483647" for shingle_fp, "" for md5_long)."""
-    return _SQL_ALLD + """,
-  sh AS (
-    SELECT doc_id,
-           unnest(list_distinct([
-             array_to_string([w[i], w[i+1], w[i+2]], ' ')
-             for i in range(1, greatest(len(w) - 2, 0) + 1)
-           ])) AS sh_str
-    FROM (SELECT doc_id, string_split(text, ' ') AS w FROM alld)
-  ),
-  fps AS (
-    SELECT doc_id,
-           ('0x' || substr(md5(sh_str), 1, 15))::BIGINT""" + reduce + """ AS fp
-    FROM sh
-  )
-"""
-
-
-_SQL_SHINGLE_FPS = _sql_shingle_fps(" % 2147483647")
-_SQL_SHINGLE_FPS64 = _sql_shingle_fps("")
-
-
-# Full MinHash+LSH near-dup query in DuckDB (module-level so the dedup-
-# clustering oracle can nest it as its pair source).
-_SQL_MINHASH_LSH = f"""
-    WITH {_SQL_SHINGLE_FPS},
-    ks AS (
-      SELECT doc_id, fp, unnest([0,1,2,3,4,5,6,7]) AS k FROM fps
-    ),
-    h AS (
-      SELECT doc_id, k,
-             ({_MINHASH_A}[k+1] * fp + {_MINHASH_B}[k+1]) % {_M31} AS h
-      FROM ks
-    ),
-    sig AS (SELECT doc_id, k, min(h) AS mh FROM h GROUP BY 1, 2),
-    bands AS (
-      SELECT doc_id, k // 2 AS band,
-             min(CASE WHEN k % 2 = 0 THEN mh END) AS mh0,
-             min(CASE WHEN k % 2 = 1 THEN mh END) AS mh1
-      FROM sig GROUP BY 1, 2
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a JOIN bands b
-        ON a.band = b.band AND a.mh0 = b.mh0 AND a.mh1 = b.mh1
-       AND a.doc_id < b.doc_id
-    ),
-    n AS (SELECT doc_id, count(*) AS n_sh FROM fps GROUP BY 1),
-    shared AS (
-      SELECT c.doc_a, c.doc_b, count(*)::DOUBLE AS shared
-      FROM cand c
-      JOIN fps fa ON fa.doc_id = c.doc_a
-      JOIN fps fb ON fb.doc_id = c.doc_b AND fb.fp = fa.fp
-      GROUP BY 1, 2
-    )
-    SELECT doc_a, doc_b,
-           floor(shared * 1000000.0 / (na.n_sh + nb.n_sh - shared))::BIGINT AS jaccard_fp
-    FROM shared
-    JOIN n na ON na.doc_id = doc_a
-    JOIN n nb ON nb.doc_id = doc_b
-    WHERE floor(shared * 1000000.0 / (na.n_sh + nb.n_sh - shared)) >= 500000
-"""
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _docs_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents.parquet is a single small file -> one input partition.
-    Queries doing heavy per-row compute (regex, UDFs, explodes) must
-    spread rows across cores first; the tiny round-robin shuffle is
-    orders of magnitude cheaper than serializing the compute.  (At 100 TB
-    the scan would arrive pre-split by maxPartitionBytes and this becomes
-    a no-op choice; it exists because the sandbox file is one row group.)
-    """
-    return _docs(spark, sf_dir).repartition(
-        spark.sparkContext.defaultParallelism
-    )
-
-
-def _tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-# ---------------------------------------------------------------------------
-# flagship
-# ---------------------------------------------------------------------------
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full extraction pipeline over transcripts derived from
@@ -661,10 +47,6 @@ def entry(spark: SparkSession) -> DataFrame:
     return plan_extract(tr, n_buckets=16)
 
 
-# ---------------------------------------------------------------------------
-# queries
-# ---------------------------------------------------------------------------
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # DICT ORDER IS THE DRIVER-SAMPLING ORDER.  The correctness driver
     # checks a deterministic 50-query PREFIX of this dict per round
@@ -674,6199 +56,128 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # long-green queries follow.
     return {
         # --- never driver-checked through round 4 (VERDICT r4 ask #1) ----
-        "q_jpeg_progressive": _q_jpeg_progressive,
-        "q_binary_decode_envelope": _q_binary_decode_envelope,
-        "q_gif_decode": _q_gif_decode,
-        "q_tiff_decode": _q_tiff_decode,
-        "q_g711_decode": _q_g711_decode,
-        "q_adpcm_decode": _q_adpcm_decode,
-        "q_mjpeg_frames": _q_mjpeg_frames,
-        "q_bloom_filter": _q_bloom_filter,
-        "q_hll_distinct": _q_hll_distinct,
-        "q_cm_heavy_hitters": _q_cm_heavy_hitters,
-        "q_semdedup": _q_semdedup,
-        "q_cluster_profile": _q_cluster_profile,
-        "q_embedding_ann_lsh_mp": _q_embedding_ann_lsh_mp,
+        "q_jpeg_progressive": media.q_jpeg_progressive,
+        "q_binary_decode_envelope": media.q_binary_decode_envelope,
+        "q_gif_decode": media.q_gif_decode,
+        "q_tiff_decode": media.q_tiff_decode,
+        "q_g711_decode": media.q_g711_decode,
+        "q_adpcm_decode": media.q_adpcm_decode,
+        "q_mjpeg_frames": media.q_mjpeg_frames,
+        "q_bloom_filter": sketches.q_bloom_filter,
+        "q_hll_distinct": sketches.q_hll_distinct,
+        "q_cm_heavy_hitters": sketches.q_cm_heavy_hitters,
+        "q_semdedup": vectors.q_semdedup,
+        "q_cluster_profile": vectors.q_cluster_profile,
+        "q_embedding_ann_lsh_mp": vectors.q_embedding_ann_lsh_mp,
         # --- output changed in round 5 (HT-weight fix) -> re-verify ------
-        "q_priority_sample": _q_priority_sample,
+        "q_priority_sample": sketches.q_priority_sample,
         # --- plan changed in round 5 (broadcast removal) -> re-verify ----
-        "q_bloom_join": _q_bloom_join,
+        "q_bloom_join": sketches.q_bloom_join,
         # --- new in round 5 ----------------------------------------------
-        "q_stream_dedup_drain": _q_stream_dedup_drain,
-        "q_mp3_decode": _q_mp3_decode,
-        "q_ogg_decode": _q_ogg_decode,
+        "q_stream_dedup_drain": pipeline.q_stream_dedup_drain,
+        "q_mp3_decode": media.q_mp3_decode,
+        "q_ogg_decode": media.q_ogg_decode,
         # --- extraction-pipeline scalar stages (G1/G7/G10 analogues) ----
-        "q_canonicalize": _q_canonicalize,
-        "q_min_len_filter": _q_min_len_filter,
-        "q_word_count": _q_word_count,
-        "q_token_count": _q_token_count,
+        "q_canonicalize": text.q_canonicalize,
+        "q_min_len_filter": text.q_min_len_filter,
+        "q_word_count": text.q_word_count,
+        "q_token_count": text.q_token_count,
         # --- text analysis -----------------------------------------------
-        "q_lang_id": _q_lang_id,
-        "q_quality_score": _q_quality_score,
-        "q_scrub_pii": _q_scrub_pii,
-        "q_hash_sample": _q_hash_sample,
-        "q_tfidf_top_terms": _q_tfidf_top_terms,
-        "q_inverted_index": _q_inverted_index,
-        "q_pmi_bigrams": _q_pmi_bigrams,
-        "q_para_dedup": _q_para_dedup,
-        "q_repetition_quality": _q_repetition_quality,
-        "q_decontaminate": _q_decontaminate,
-        "q_target_mix_sample": _q_target_mix_sample,
-        "q_importance_resample": _q_importance_resample,
-        "q_gopher_rules": _q_gopher_rules,
-        "q_chunk_windows": _q_chunk_windows,
-        "q_pack_sequences": _q_pack_sequences,
-        "q_url_dedup": _q_url_dedup,
-        "q_c4_filters": _q_c4_filters,
-        "q_fuzzy_join": _q_fuzzy_join,
-        "q_pagerank": _q_pagerank,
-        "q_span_dedup": _q_span_dedup,
-        "q_markov_transitions": _q_markov_transitions,
-        "q_triangle_count": _q_triangle_count,
-        "q_retention_cohorts": _q_retention_cohorts,
-        "q_outlier_events": _q_outlier_events,
-        "q_pareto_frontier": _q_pareto_frontier,
-        "q_table_profile": _q_table_profile,
-        "q_trend_slope": _q_trend_slope,
-        "q_ab_chisq": _q_ab_chisq,
-        "q_bm25_topk": _q_bm25_topk,
-        "q_kcore": _q_kcore,
-        "q_set_ops": _q_set_ops,
-        "q_kmv_sketch": _q_kmv_sketch,
-        "q_incremental_agg": _q_incremental_agg,
-        "q_decile_assign": _q_decile_assign,
-        "q_gap_fill": _q_gap_fill,
+        "q_lang_id": text.q_lang_id,
+        "q_quality_score": text.q_quality_score,
+        "q_scrub_pii": text.q_scrub_pii,
+        "q_hash_sample": sketches.q_hash_sample,
+        "q_tfidf_top_terms": text.q_tfidf_top_terms,
+        "q_inverted_index": text.q_inverted_index,
+        "q_pmi_bigrams": text.q_pmi_bigrams,
+        "q_para_dedup": dedup.q_para_dedup,
+        "q_repetition_quality": text.q_repetition_quality,
+        "q_decontaminate": text.q_decontaminate,
+        "q_target_mix_sample": sketches.q_target_mix_sample,
+        "q_importance_resample": sketches.q_importance_resample,
+        "q_gopher_rules": text.q_gopher_rules,
+        "q_chunk_windows": text.q_chunk_windows,
+        "q_pack_sequences": text.q_pack_sequences,
+        "q_url_dedup": dedup.q_url_dedup,
+        "q_c4_filters": text.q_c4_filters,
+        "q_fuzzy_join": dedup.q_fuzzy_join,
+        "q_pagerank": graph.q_pagerank,
+        "q_span_dedup": dedup.q_span_dedup,
+        "q_markov_transitions": graph.q_markov_transitions,
+        "q_triangle_count": graph.q_triangle_count,
+        "q_retention_cohorts": analytics.q_retention_cohorts,
+        "q_outlier_events": analytics.q_outlier_events,
+        "q_pareto_frontier": analytics.q_pareto_frontier,
+        "q_table_profile": analytics.q_table_profile,
+        "q_trend_slope": analytics.q_trend_slope,
+        "q_ab_chisq": analytics.q_ab_chisq,
+        "q_bm25_topk": text.q_bm25_topk,
+        "q_kcore": graph.q_kcore,
+        "q_set_ops": analytics.q_set_ops,
+        "q_kmv_sketch": sketches.q_kmv_sketch,
+        "q_incremental_agg": analytics.q_incremental_agg,
+        "q_decile_assign": analytics.q_decile_assign,
+        "q_gap_fill": analytics.q_gap_fill,
         # --- dedup ---------------------------------------------------------
-        "q_dedup_exact": _q_dedup_exact,
-        "q_ngram_jaccard": _q_ngram_jaccard,
-        "q_jaccard_prefix_join": _q_jaccard_prefix_join,
-        "q_minhash_lsh": _q_minhash_lsh,
-        "q_simhash": _q_simhash,
-        "q_simhash_neardup": _q_simhash_neardup,
-        "q_doc_fingerprint": _q_doc_fingerprint,
-        "q_dedup_clusters": _q_dedup_clusters,
-        "q_cluster_keeper": _q_cluster_keeper,
-        "q_countmin_sketch": _q_countmin_sketch,
+        "q_dedup_exact": dedup.q_dedup_exact,
+        "q_ngram_jaccard": dedup.q_ngram_jaccard,
+        "q_jaccard_prefix_join": dedup.q_jaccard_prefix_join,
+        "q_minhash_lsh": dedup.q_minhash_lsh,
+        "q_simhash": dedup.q_simhash,
+        "q_simhash_neardup": dedup.q_simhash_neardup,
+        "q_doc_fingerprint": dedup.q_doc_fingerprint,
+        "q_dedup_clusters": dedup.q_dedup_clusters,
+        "q_cluster_keeper": dedup.q_cluster_keeper,
+        "q_countmin_sketch": sketches.q_countmin_sketch,
         # --- similarity search ----------------------------------------------
-        "q_embedding_topk": _q_embedding_topk,
-        "q_embedding_ann_lsh": _q_embedding_ann_lsh,
-        "q_embedding_ann_lsh_mt": _q_embedding_ann_lsh_mt,
-        "q_embedding_neardup": _q_embedding_neardup,
-        "q_embedding_ann_ivf": _q_embedding_ann_ivf,
-        "q_embedding_ann_ivf_mp": _q_embedding_ann_ivf_mp,
+        "q_embedding_topk": vectors.q_embedding_topk,
+        "q_embedding_ann_lsh": vectors.q_embedding_ann_lsh,
+        "q_embedding_ann_lsh_mt": vectors.q_embedding_ann_lsh_mt,
+        "q_embedding_neardup": vectors.q_embedding_neardup,
+        "q_embedding_ann_ivf": vectors.q_embedding_ann_ivf,
+        "q_embedding_ann_ivf_mp": vectors.q_embedding_ann_ivf_mp,
         # --- relational operator coverage (SURVEY §2.6/2.7/2.8) ------------
-        "q_agg_orders": _q_agg_orders,
-        "q_lineitem_pricing": _q_lineitem_pricing,
-        "q_regional_revenue": _q_regional_revenue,
-        "q_rollup_orders": _q_rollup_orders,
-        "q_join_broadcast": _q_join_broadcast,
-        "q_anti_join": _q_anti_join,
-        "q_topk_per_group": _q_topk_per_group,
-        "q_events_hourly": _q_events_hourly,
-        "q_sessionize": _q_sessionize,
-        "q_asof_join": _q_asof_join,
-        "q_range_join": _q_range_join,
-        "q_events_rollup": _q_events_rollup,
-        "q_json_extract": _q_json_extract,
-        "q_distinct_counts": _q_distinct_counts,
-        "q_window_frames": _q_window_frames,
-        "q_median_value": _q_median_value,
-        "q_pivot_events": _q_pivot_events,
-        "q_cube_events": _q_cube_events,
-        "q_grouping_sets": _q_grouping_sets,
-        "q_funnel": _q_funnel,
-        "q_stratified_sample": _q_stratified_sample,
-        "q_snapshot_delta": _q_snapshot_delta,
-        "q_quantile_sketch": _q_quantile_sketch,
+        "q_agg_orders": analytics.q_agg_orders,
+        "q_lineitem_pricing": analytics.q_lineitem_pricing,
+        "q_regional_revenue": analytics.q_regional_revenue,
+        "q_rollup_orders": analytics.q_rollup_orders,
+        "q_join_broadcast": analytics.q_join_broadcast,
+        "q_anti_join": analytics.q_anti_join,
+        "q_topk_per_group": analytics.q_topk_per_group,
+        "q_events_hourly": analytics.q_events_hourly,
+        "q_sessionize": analytics.q_sessionize,
+        "q_asof_join": analytics.q_asof_join,
+        "q_range_join": analytics.q_range_join,
+        "q_events_rollup": analytics.q_events_rollup,
+        "q_json_extract": analytics.q_json_extract,
+        "q_distinct_counts": analytics.q_distinct_counts,
+        "q_window_frames": analytics.q_window_frames,
+        "q_median_value": analytics.q_median_value,
+        "q_pivot_events": analytics.q_pivot_events,
+        "q_cube_events": analytics.q_cube_events,
+        "q_grouping_sets": analytics.q_grouping_sets,
+        "q_funnel": analytics.q_funnel,
+        "q_stratified_sample": sketches.q_stratified_sample,
+        "q_snapshot_delta": analytics.q_snapshot_delta,
+        "q_quantile_sketch": sketches.q_quantile_sketch,
         # --- multimodal real decode (closed-form SQL oracle) ---------------
-        "q_image_decode": _q_image_decode,
-        "q_png_decode": _q_png_decode,
-        "q_jpeg_decode": _q_jpeg_decode,
-        "q_wav_decode": _q_wav_decode,
+        "q_image_decode": media.q_image_decode,
+        "q_png_decode": media.q_png_decode,
+        "q_jpeg_decode": media.q_jpeg_decode,
+        "q_wav_decode": media.q_wav_decode,
         # --- extraction/multimodal pipelines (precomputed-table oracles) ---
-        "x_extract_documents": _x_extract_documents,
-        "x_extract_transcripts": _x_extract_transcripts,
-        "x_conv_assembly": _x_conv_assembly,
-        "x_multimodal_features": _x_multimodal_features,
+        "x_extract_documents": pipeline.x_extract_documents,
+        "x_extract_transcripts": pipeline.x_extract_transcripts,
+        "x_conv_assembly": pipeline.x_conv_assembly,
+        "x_multimodal_features": pipeline.x_multimodal_features,
     }
-
-
-# G1/G17: canonical whitespace form.  A messy string is constructed from
-# the document text identically on both sides, then canonicalized.
-def _q_canonicalize(spark, sf_dir):
-    d = _docs(spark, sf_dir)
-    messy = F.concat(F.lit("  "), F.col("text"), F.lit(" \t mid  part\n\nend  "))
-    canon = F.trim(F.regexp_replace(messy, r"[ \t\r\n]+", " "))
-    return d.select(F.col("doc_id"), canon.alias("canon_text"))
-
-
-# G7/F3 analogue: length gate with pushdown-friendly predicate.
-def _q_min_len_filter(spark, sf_dir):
-    d = _docs(spark, sf_dir)
-    return d.filter(F.col("n_chars") >= 200).select(
-        "doc_id", "n_chars", "lang"
-    )
-
-
-# G10: word count over canonical form.
-def _q_word_count(spark, sf_dir):
-    d = _docs_wide(spark, sf_dir)
-    canon = F.trim(F.regexp_replace(F.col("text"), r"[ \t\r\n]+", " "))
-    wc = F.when(F.length(canon) == 0, F.lit(0)).otherwise(
-        F.size(F.split(canon, " "))
-    )
-    return d.select("doc_id", wc.cast("long").alias("n_words"))
-
-
-# BPE-ish token counting (letter runs / digit runs / single symbols).
-def _q_token_count(spark, sf_dir):
-    d = _docs_wide(spark, sf_dir)
-    pat = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \\t\\n]"
-    toks = F.size(F.regexp_extract_all(F.col("text"), F.lit(pat), F.lit(0)))
-    return d.select("doc_id", toks.cast("long").alias("n_tokens"))
-
-
-# Language-ID heuristic: marker-word hit counts per language, argmax with
-# deterministic tie-break (en > es > fr > de).
-def _q_lang_id(spark, sf_dir):
-    d = _docs_wide(spark, sf_dir)
-    lower = F.lower(F.col("text"))
-    # materialize each marker count ONCE in an intermediate projection;
-    # the argmax CASE below references them 3-4 times each and Spark's
-    # subexpression elimination does not span when-branches reliably
-    d = d.select(
-        "doc_id",
-        *[
-            F.size(F.regexp_extract_all(lower, F.lit(rf"\b({v})\b"), F.lit(0)))
-            .alias(f"_h_{k}")
-            for k, v in _LANG_MARKERS.items()
-        ],
-    )
-    hits = {k: F.col(f"_h_{k}") for k in _LANG_MARKERS}
-    pred = (
-        F.when(
-            (hits["en"] >= hits["es"]) & (hits["en"] >= hits["fr"]) & (hits["en"] >= hits["de"]),
-            F.lit("en"),
-        )
-        .when((hits["es"] >= hits["fr"]) & (hits["es"] >= hits["de"]), F.lit("es"))
-        .when(hits["fr"] >= hits["de"], F.lit("fr"))
-        .otherwise(F.lit("de"))
-    )
-    return d.select(
-        "doc_id",
-        hits["en"].cast("long").alias("en_hits"),
-        pred.alias("lang_pred"),
-    )
-
-
-# Quality score: stopword ratio + bounded length factor, fixed-pointed.
-def _quality_fp(d: DataFrame) -> DataFrame:
-    """(doc_id, quality_fp) of each (doc_id, text) row."""
-    lower = F.lower(F.col("text"))
-    # two-step projection: each regex/split runs once per row, the score
-    # expression below reads plain columns
-    d = d.select(
-        "doc_id",
-        F.size(lower_words(lower)).cast("double").alias("_words"),
-        F.size(
-            F.regexp_extract_all(lower, F.lit(rf"\b({_STOPWORDS})\b"), F.lit(0))
-        )
-        .cast("double")
-        .alias("_stop_hits"),
-    )
-    words = F.col("_words")
-    stop_hits = F.col("_stop_hits")
-    score = (
-        F.least(words, F.lit(100.0)) / F.lit(100.0) * F.lit(0.5)
-        + F.when(words > 0, stop_hits / words).otherwise(F.lit(0.0)) * F.lit(0.5)
-    )
-    return d.select(
-        "doc_id",
-        F.floor(score * F.lit(10000.0)).cast("long").alias("quality_fp"),
-    )
-
-
-def _q_quality_score(spark, sf_dir):
-    return _quality_fp(_docs_wide(spark, sf_dir))
-
-
-# PII scrubbing (training-data hygiene op): deterministic email+URL
-# markers are injected per doc (the fixture corpus has none), then
-# counted and redacted.  The regexes are dialect-portable (Java regex and
-# DuckDB's RE2 agree); Spark's regexp_replace is global by default,
-# DuckDB needs the 'g' flag.
-_EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
-_URL_RE = r"https?://[^ ]+"
-
-
-def _q_scrub_pii(spark, sf_dir):
-    d = _docs_wide(spark, sf_dir)
-    payload = F.concat(
-        F.col("text"),
-        F.lit(" contact user"), F.col("doc_id").cast("string"),
-        F.lit("@example.com or http://ex.com/p/"),
-        F.col("doc_id").cast("string"), F.lit(" now"),
-    )
-    d = d.select("doc_id", payload.alias("p"))
-    n_emails = F.size(F.regexp_extract_all(F.col("p"), F.lit(_EMAIL_RE), F.lit(0)))
-    n_urls = F.size(F.regexp_extract_all(F.col("p"), F.lit(_URL_RE), F.lit(0)))
-    red = F.regexp_replace(
-        F.regexp_replace(F.col("p"), _EMAIL_RE, "<EMAIL>"), _URL_RE, "<URL>"
-    )
-    return d.select(
-        "doc_id",
-        n_emails.cast("long").alias("n_emails"),
-        n_urls.cast("long").alias("n_urls"),
-        red.alias("scrubbed"),
-    )
-
-
-# Deterministic hash-based sampling (stratified-sampling building block):
-# a doc is in the 10% sample iff its cross-engine md5 fingerprint lands
-# in buckets 0-9 of 100.  Unlike rand()-based sampling this is exactly
-# reproducible across engines, runs, and cluster sizes — the property a
-# training-data pipeline needs for auditable subsets.
-def _q_hash_sample(spark, sf_dir):
-    d = _docs(spark, sf_dir)
-    bkt = md5_long(F.col("doc_id").cast("string")) % F.lit(100)
-    return d.groupBy("lang").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.count(F.when(bkt < 10, 1)).cast("long").alias("n_sampled"),
-    )
-
-
-# TF-IDF-style term salience: top-3 rare-term scores per document.
-# score = tf * 1e6 div df (integer arithmetic end-to-end, so both
-# engines rank identically; the float log() idf variant is monotone in
-# the same df and would risk last-ulp divergence).  Plan shape: explode
-# words -> two hash aggregates (tf, df) -> broadcast-size df join ->
-# window top-k.  At 100 TB df is computed once per vocabulary term
-# (vocab << corpus) and the join partitions by word.
-def _q_tfidf_top_terms(spark, sf_dir):
-    d = _docs_wide(spark, sf_dir)
-    words = word_rows(d, "doc_id", min_len=4)
-    tf = words.groupBy("doc_id", "w").agg(F.count(F.lit(1)).alias("tf"))
-    df_ = words.groupBy("w").agg(F.countDistinct("doc_id").alias("df"))
-    scored = tf.join(df_, "w").select(
-        "doc_id", "w", F.expr("tf * 1000000 div df").alias("score_fp")
-    )
-    win = Window.partitionBy("doc_id").orderBy(
-        F.col("score_fp").desc(), F.col("w").asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(win))
-        .filter(F.col("rnk") <= 3)
-        .select("doc_id", "w", "score_fp", F.col("rnk").cast("long").alias("rnk"))
-    )
-
-
-# BM25 retrieval (P61): the ranking side of the search stack (P31
-# builds the index; this scores it).  Okapi BM25 with k1=1.2, b=0.75 in
-# a LOG-FREE rational form: the idf log's argument is kept as an
-# integer milli-ratio idf_x1000 = 1000*(2N-2df+1) div (2df+1), and the
-# tf normalization is cross-multiplied exact — per-term score =
-# idf_x1000 * 22*S*tf div (10*S*tf + 3*S + 9*dl*N), derived from
-# tf*(k1+1) / (tf + k1*(1-b+b*dl/avgdl)) with avgdl = S/N multiplied
-# through (so avgdl is never rounded).  Monotonicity in tf/df/dl
-# matches true BM25; the log is dropped because no float libm call may
-# sit between two engines that must hash-match (house rule since the
-# round-2 ANN literals).  The query is self-contained: the 3 most
-# frequent content words of the corpus itself (ties lexicographic).
-# Scale shape: word table materialized ONCE; query-term and df tables
-# broadcast; the top-10 is a distributed TakeOrderedAndProject, never a
-# single-partition window over matched docs.  int64 headroom to ~1e9
-# total words; past that the products move to decimal (P55 note).
-def _q_bm25_topk(spark, sf_dir):
-    d = _docs_wide(spark, sf_dir)
-    words = word_rows(d, "doc_id").localCheckpoint(eager=False)
-    dl = words.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("long").alias("dl")
-    )
-    totals = dl.agg(
-        F.sum("dl").cast("long").alias("s_total"),
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-    )
-    qterms = (
-        words.filter(F.length("w") >= 4)
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .orderBy(F.col("cnt").desc(), F.col("w").asc())
-        .limit(3)
-        .select("w")
-    )
-    tf = (
-        words.join(F.broadcast(qterms), "w")
-        .groupBy("doc_id", "w")
-        .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-    )
-    df_ = tf.groupBy("w").agg(F.count(F.lit(1)).cast("long").alias("df"))
-    per_term = (
-        tf.join(F.broadcast(df_), "w")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(totals))
-        .select(
-            "doc_id",
-            F.expr(
-                "((1000 * (2 * n_docs - 2 * df + 1)) div (2 * df + 1))"
-                " * (22 * s_total * tf)"
-                " div (10 * s_total * tf + 3 * s_total + 9 * dl * n_docs)"
-            ).alias("term_score"),
-        )
-    )
-    top = (
-        per_term.groupBy("doc_id")
-        .agg(F.sum("term_score").cast("long").alias("score_fp"))
-        .orderBy(F.col("score_fp").desc(), F.col("doc_id").asc())
-        .limit(10)
-    )
-    win = Window.orderBy(F.col("score_fp").desc(), F.col("doc_id").asc())
-    return top.select(
-        "doc_id", "score_fp",
-        F.row_number().over(win).cast("long").alias("rnk"),
-    )
-
-
-# Inverted index (P31): the search-side text structure — word ->
-# (document frequency, head of the sorted posting list).  The build is
-# a SALTED TWO-PHASE top-k: a window over the raw word key would give a
-# stopword (df ~ corpus size) a single window partition — one task
-# sorting the full posting list, the classic hot-key stall at 100 TB.
-# Instead each (word, doc_id % S) slice is ranked independently —
-# row_number + partial count inside one window pass, skew spread over S
-# tasks — the cap is applied BEFORE any collect_list (so per-group
-# collected state is bounded at `cap` ids), and a final merge per word
-# sums the partial counts into the exact df and re-sorts <= S*cap
-# surviving ids down to the true head.  The phase-1 groupBy reuses the
-# window's (w, salt) hash partitioning, so salting costs no extra
-# exchange.  Full posting lists would be sharded/paged by a real index;
-# the capped head is the deterministic, oracle-checkable core of that.
-# Postings are emitted as a comma-joined string so both engines compare
-# scalar values, not array encodings.
-_INDEX_POSTINGS_CAP = 32
-_INDEX_SALT = 64
-
-
-def _q_inverted_index(spark, sf_dir):
-    d = _docs_wide(spark, sf_dir)
-    pairs = word_rows(d, "doc_id").distinct()
-    salted = pairs.withColumn(
-        "salt", (F.col("doc_id") % _INDEX_SALT).cast("int")
-    )
-    wslice = Window.partitionBy("w", "salt")
-    ranked = salted.select(
-        "w",
-        "salt",
-        "doc_id",
-        F.row_number().over(wslice.orderBy("doc_id")).alias("rn"),
-        F.count(F.lit(1)).over(wslice).cast("long").alias("c_slice"),
-    )
-    partial = (
-        ranked.filter(F.col("rn") <= _INDEX_POSTINGS_CAP)
-        .groupBy("w", "salt")
-        .agg(
-            F.max("c_slice").alias("c_slice"),
-            F.collect_list("doc_id").alias("head_slice"),
-        )
-    )
-    return (
-        partial.groupBy("w")
-        .agg(
-            F.sum("c_slice").cast("long").alias("df"),
-            F.slice(
-                F.sort_array(F.flatten(F.collect_list("head_slice"))),
-                1,
-                _INDEX_POSTINGS_CAP,
-            ).alias("head"),
-        )
-        .select(
-            F.col("w").alias("word"),
-            "df",
-            F.concat_ws(
-                ",", F.transform(F.col("head"), lambda x: x.cast("string"))
-            ).alias("postings_head"),
-        )
-    )
-
-
-# PMI collocations (P32): statistically-associated bigrams — the
-# phrase-mining primitive (new-term discovery, tokenizer-merge
-# candidates) over a training corpus.  PMI thresholds are ratios of
-# counts, so the gate is evaluated in PURE INTEGER cross-multiplied
-# form: c_ab * N >= K * c_a * c_b  <=>  PMI >= log K — no log() or
-# division to diverge between engines.  One corpus scan feeds the
-# unigram and bigram counts (the per-doc word array is built once);
-# the bigram->unigram count joins are vocab-sized shuffles, linear at
-# scale, and N is a 1-row broadcast.
-_PMI_LIFT_K = 50
-_PMI_MIN_COUNT = 5
-
-
-def _q_pmi_bigrams(spark, sf_dir):
-    d = _docs_wide(spark, sf_dir).withColumn(
-        "text",
-        # planted collocations (the synthetic corpus draws words
-        # near-uniformly, so it has no natural ones): two rare phrases
-        # appended to deterministic doc slices, mirroring the planted
-        # near-dups the dedup family tests against
-        F.when(
-            F.col("doc_id") % 7 == 2,
-            F.concat(F.col("text"), F.lit(" quantum entanglement")),
-        )
-        .when(
-            F.col("doc_id") % 11 == 3,
-            F.concat(F.col("text"), F.lit(" neural lattice")),
-        )
-        .otherwise(F.col("text")),
-    )
-    docs = d.select(letter_words().alias("ws")).localCheckpoint(eager=False)
-    uni = (
-        docs.select(F.explode("ws").alias("w"))
-        .filter(F.length("w") > 0)
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-    )
-    bigrams = word_bigrams("ws")
-    bcnt = (
-        docs.select(F.explode(bigrams).alias("bg"))
-        .groupBy("bg")
-        .agg(F.count(F.lit(1)).cast("long").alias("c_ab"))
-    )
-    total = bcnt.agg(F.sum("c_ab").cast("long").alias("n"))
-    w1 = F.split(F.col("bg"), " ").getItem(0)
-    w2 = F.split(F.col("bg"), " ").getItem(1)
-    return (
-        bcnt.filter(F.col("c_ab") >= _PMI_MIN_COUNT)
-        .select(w1.alias("w1"), w2.alias("w2"), "c_ab")
-        .join(uni.select(F.col("w").alias("w1"), F.col("c").alias("c_a")), "w1")
-        .join(uni.select(F.col("w").alias("w2"), F.col("c").alias("c_b")), "w2")
-        .join(F.broadcast(total))
-        .filter(
-            F.col("c_ab") * F.col("n")
-            >= F.lit(_PMI_LIFT_K) * F.col("c_a") * F.col("c_b")
-        )
-        .select("w1", "w2", "c_ab", "c_a", "c_b")
-    )
-
-
-# Paragraph-level boilerplate dedup (P33): the CCNet-shaped pass that
-# removes paragraphs repeated across the corpus (cookie banners,
-# nav/footer text) while keeping the documents themselves.  The corpus
-# has no newlines, so "paragraphs" are deterministic 5-word chunks of
-# the canonical word stream, with boilerplate sentences PLANTED on
-# deterministic doc slices (the same pattern as the planted near-dups
-# and PMI collocations).  Scale shape: the chunk table is materialized
-# ONCE (agg side + join-back side — exchange reuse does not fire across
-# self-references, PLANS.md), the global paragraph-count aggregate is a
-# linear hash agg, and the join-back touches only the FILTERED hot set
-# (count >= K) — tiny by Zipf at any corpus size — via a BROADCAST left
-# join, never the full paragraph-count table.  Reassembly state is
-# bounded by single-document size (collect_list of a doc's own chunks).
-_PARA_WORDS = 5
-_PARA_BOILER_MIN = 20
-
-
-def _q_para_dedup(spark, sf_dir):
-    d = _docs_wide(spark, sf_dir).withColumn(
-        "text",
-        F.when(
-            F.col("doc_id") % 4 == 1,
-            F.concat(F.col("text"), F.lit(" subscribe to our newsletter today")),
-        )
-        .when(
-            F.col("doc_id") % 6 == 3,
-            F.concat(F.col("text"), F.lit(" all rights reserved worldwide")),
-        )
-        .otherwise(F.col("text")),
-    )
-    chunks = F.expr(
-        f"transform(sequence(1, (size(ws) + {_PARA_WORDS - 1}) div {_PARA_WORDS}),"
-        f" i -> array_join(slice(ws, (i-1) * {_PARA_WORDS} + 1, {_PARA_WORDS}), ' '))"
-    )
-    paras = (
-        d.select("doc_id", letter_words().alias("ws"))
-        .select("doc_id", F.posexplode(chunks).alias("pos", "para"))
-        .localCheckpoint(eager=False)
-    )
-    boiler = (
-        paras.groupBy("para")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .filter(F.col("cnt") >= _PARA_BOILER_MIN)
-        .withColumn("is_boiler", F.lit(1))
-    )
-    tagged = paras.join(
-        F.broadcast(boiler.select("para", "is_boiler")), "para", "left"
-    ).withColumn("is_boiler", F.coalesce(F.col("is_boiler"), F.lit(0)))
-    kept = F.array_sort(
-        F.collect_list(
-            F.when(
-                F.col("is_boiler") == 0,
-                F.struct(F.col("pos"), F.col("para")),
-            )
-        )
-    )
-    return tagged.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_paras"),
-        F.sum("is_boiler").cast("long").alias("n_boiler"),
-        F.array_join(
-            F.transform(kept, lambda s: s.getField("para")), " "
-        ).alias("clean_text"),
-    )
-
-
-# Repetition-quality flags (P34): the Gopher-style repetition gate a
-# training pipeline runs before anything expensive — documents whose
-# text is dominated by one word or by duplicated bigrams are machine
-# junk, not prose.  All ratios are emitted as INTEGER numerators /
-# denominators and the flag is an integer cross-multiplied gate
-# (top_cnt * 10 > n_words  OR  dup2 * 5 > n2  — i.e. top-word fraction
-# > 0.1 or duplicated-bigram fraction > 0.2): no division to diverge
-# between engines.  Scale shape: two hash aggs keyed by (doc_id, term)
-# — uniformly distributed, bounded per-group state — folded to per-doc
-# stats on the same doc_id partitioning, then one co-partitioned join.
-def _q_repetition_quality(spark, sf_dir):
-    d = _docs_wide(spark, sf_dir)
-    docs = d.select("doc_id", letter_words().alias("ws")).localCheckpoint(
-        eager=False
-    )
-    wstats = (
-        docs.select("doc_id", F.explode("ws").alias("w"))
-        .filter(F.length("w") > 0)
-        .groupBy("doc_id", "w")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .groupBy("doc_id")
-        .agg(
-            F.sum("c").cast("long").alias("n_words"),
-            F.count(F.lit(1)).cast("long").alias("n_distinct"),
-            F.max("c").cast("long").alias("top_cnt"),
-        )
-    )
-    bigrams = word_bigrams("ws")
-    bstats = (
-        docs.select("doc_id", F.explode(bigrams).alias("bg"))
-        .groupBy("doc_id", "bg")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .groupBy("doc_id")
-        .agg(
-            F.sum("c").cast("long").alias("n2"),
-            F.sum(F.when(F.col("c") > 1, F.col("c")).otherwise(F.lit(0)))
-            .cast("long")
-            .alias("dup2"),
-        )
-    )
-    return wstats.join(bstats, "doc_id").select(
-        "doc_id",
-        "n_words",
-        "n_distinct",
-        "top_cnt",
-        "n2",
-        "dup2",
-        (
-            (F.col("top_cnt") * 10 > F.col("n_words"))
-            | (F.col("dup2") * 5 > F.col("n2"))
-        ).alias("repetitive"),
-    )
-
-
-# Triangle count (P43): the classic heavy-join graph statistic, done
-# the way it survives skew — DEGREE-ORDERED ORIENTATION.  Each
-# undirected edge is directed from its (degree, id)-smaller endpoint
-# to the larger, which bounds every node's out-degree by O(sqrt(E))
-# regardless of hubs; wedges enumerate as the self-join of the
-# oriented edge list on the source, and a wedge closes iff the
-# orientation-order edge (v, w) exists.  Without orientation, a hub
-# with d neighbors yields d^2/2 wedges from that node alone — the plan
-# that dies first at 10^12 edges.  The graph is a deterministic
-# 3-circulant (u ~ u+1, u+2, u+3 mod N — every vertex closes known
-# triangle families) plus planted HUB edges (u ~ 0 for u % 10 == 3)
-# that add degree skew but no triangles, exactly the adversarial shape
-# orientation exists for.  The oriented list is materialized once
-# (checkpoint) and reused by the wedge AND closing sides.
-def _q_triangle_count(spark, sf_dir):
-    import pyarrow.parquet as pq
-
-    n = pq.ParquetFile(f"{sf_dir}/documents.parquet").metadata.num_rows
-    nodes = _docs(spark, sf_dir).select(F.col("doc_id").alias("id"))
-    raw = nodes.select(
-        "id",
-        F.explode(
-            F.array(
-                (F.col("id") + 1) % F.lit(n),
-                (F.col("id") + 2) % F.lit(n),
-                (F.col("id") + 3) % F.lit(n),
-                F.when(F.col("id") % 10 == 3, F.lit(0)).otherwise(
-                    F.col("id")
-                ),
-            )
-        ).alias("peer"),
-    ).filter(F.col("id") != F.col("peer"))
-    edges = (
-        raw.select(
-            F.least("id", "peer").alias("a"),
-            F.greatest("id", "peer").alias("b"),
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    deg = (
-        edges.select(F.col("a").alias("v"))
-        .unionByName(edges.select(F.col("b").alias("v")))
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    da = deg.select(F.col("v").alias("a"), F.col("d").alias("da"))
-    db = deg.select(F.col("v").alias("b"), F.col("d").alias("db"))
-    fwd = F.struct("da", "a") < F.struct("db", "b")
-    oriented = (
-        edges.join(da, "a").join(db, "b")
-        .select(
-            F.when(fwd, F.col("a")).otherwise(F.col("b")).alias("src"),
-            F.when(fwd, F.col("b")).otherwise(F.col("a")).alias("dst"),
-            F.when(fwd, F.col("db")).otherwise(F.col("da")).alias("dd"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    l = oriented.select(
-        F.col("src"), F.col("dst").alias("v"), F.col("dd").alias("dv")
-    )
-    r = oriented.select(
-        F.col("src"), F.col("dst").alias("w"), F.col("dd").alias("dw")
-    )
-    wedges = l.join(r, "src").filter(
-        F.struct(F.col("dv"), F.col("v")) < F.struct(F.col("dw"), F.col("w"))
-    )
-    closed = wedges.join(
-        oriented.select(
-            F.col("src").alias("v"), F.col("dst").alias("w")
-        ),
-        ["v", "w"],
-        "left_semi",
-    )
-    return (
-        edges.agg(F.count(F.lit(1)).cast("long").alias("n_edges"))
-        .crossJoin(
-            wedges.agg(F.count(F.lit(1)).cast("long").alias("n_wedges"))
-        )
-        .crossJoin(
-            closed.agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
-        )
-    )
-
-
-# Markov transition matrix (P42): per-user next-event transition
-# counts and probabilities — the behavioral-sequence statistic behind
-# session modeling and next-action prediction.  One window (lead over
-# the per-user (ts, event_id) order — same high-cardinality uniform
-# partitioning as sessionize/funnel) and one global hash agg on the
-# (from, to) pair (bounded by |event_type|^2 — tiny); probabilities in
-# integer ppm via a window total per from-state, no FP division.
-def _q_markov_transitions(spark, sf_dir):
-    ev = _tbl(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    pairs = (
-        ev.withColumn("to_type", F.lead("event_type").over(w))
-        .filter(F.col("to_type").isNotNull())
-        .groupBy(
-            F.col("event_type").alias("from_type"), F.col("to_type")
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("n_trans"))
-    )
-    wf = Window.partitionBy("from_type")
-    return pairs.select(
-        "from_type",
-        "to_type",
-        "n_trans",
-        F.sum("n_trans").over(wf).cast("long").alias("n_from"),
-        F.expr("n_trans * 1000000 div sum(n_trans) over (partition by from_type)")
-        .cast("long").alias("prob_ppm"),
-    )
-
-
-# Retention cohorts (P54): the classic product-analytics cohort
-# matrix — users grouped by their first-activity week, counted again at
-# every later week offset.  Reference parity: none (beyond-parity
-# analytics tier, like funnel/sessionize).  Scale shape: ONE scan, one
-# hash exchange on user_id for the per-user first-week window, then a
-# distinct-user aggregate on the tiny (cohort, offset) key space —
-# output is O(weeks^2) rows regardless of corpus size.  Week ids are
-# integer microsecond arithmetic (unix_micros div week), so both
-# engines bucket identically with no timezone or float drift.
-_WEEK_US = 604_800_000_000  # microseconds per week
-
-
-def _q_retention_cohorts(spark, sf_dir):
-    ev = _tbl(spark, sf_dir, "events")
-    wk = F.expr(f"unix_micros(cast(ts as timestamp)) div {_WEEK_US}")
-    w = Window.partitionBy("user_id")
-    x = ev.select("user_id", wk.alias("wk"))
-    x = x.withColumn("cohort_week", F.min("wk").over(w))
-    return (
-        x.groupBy(
-            "cohort_week",
-            (F.col("wk") - F.col("cohort_week")).alias("week_offset"),
-        )
-        .agg(
-            F.countDistinct("user_id").cast("long").alias("n_users"),
-            F.count(F.lit(1)).cast("long").alias("n_events"),
-        )
-    )
-
-
-# Robust outlier flags (P55): per-event-type 3-sigma outliers with the
-# whole test in INTEGER arithmetic — values fixed-pointed per row
-# (floor(value*100)), mean_fp = sum div n, variance_fp = sum(dev^2)
-# div n, and the flag is dev^2 > 9 * variance_fp (3 sigma, both sides
-# integer — no sqrt, no float division to diverge between engines).
-# Scale shape: the narrow (event_id, type, v_fp) projection is
-# materialized ONCE (localCheckpoint — both the stats pass and the
-# deviation pass read it); the per-type stats tables are 5 rows and
-# BROADCAST back onto the linear scan twice.  int64 headroom: dev^2
-# sums overflow only past ~4e11 rows per type; beyond that the
-# production path merges per-partition (n, sum, sum_sq) partials in
-# decimal — noted, not needed at any sandbox sf.
-def _q_outlier_events(spark, sf_dir):
-    ev = _tbl(spark, sf_dir, "events")
-    base = ev.select(
-        "event_id",
-        "event_type",
-        F.floor(F.col("value") * 100).cast("long").alias("v_fp"),
-    ).localCheckpoint(eager=False)
-    stats = (
-        base.groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum("v_fp").cast("long").alias("s"),
-        )
-        .withColumn("mean_fp", F.expr("s div n").cast("long"))
-        .drop("s")
-    )
-    j = base.join(F.broadcast(stats), "event_type").withColumn(
-        "dev", F.col("v_fp") - F.col("mean_fp")
-    )
-    var_t = j.groupBy("event_type").agg(
-        F.expr("sum(dev * dev) div max(n)").cast("long").alias("var_fp")
-    )
-    flag = F.col("dev") * F.col("dev") > 9 * F.col("var_fp")
-    return (
-        j.join(F.broadcast(var_t), "event_type")
-        .groupBy("event_type", "n", "mean_fp", "var_fp")
-        .agg(
-            F.sum(F.when(flag, 1).otherwise(0)).cast("long").alias("n_outliers"),
-            F.sum(F.when(flag, F.col("event_id")).otherwise(F.lit(0)))
-            .cast("long")
-            .alias("outlier_id_sum"),
-        )
-    )
-
-
-# Pareto frontier / skyline (P56): users not dominated on the
-# (total spend, event count) plane — b dominates a iff b >= a on both
-# dims and > on at least one.  Spark side is the scale formulation:
-# per-user aggregate -> distinct points -> LOCAL skyline per salt
-# partition (the global skyline is a subset of the union of partition
-# skylines, so local pruning is lossless) -> global skyline over the
-# tiny survivor set.  Both windows use the same ordering trick: over
-# distinct points ordered (s desc, c desc), a point is dominated iff
-# max(c) over the strictly-preceding rows >= its own c.  The oracle is
-# the INDEPENDENT quadratic ground truth (NOT EXISTS dominance
-# anti-join), so the window algebra is verified against the definition
-# rather than against itself.
-def _q_pareto_frontier(spark, sf_dir):
-    ev = _tbl(spark, sf_dir, "events")
-    users = ev.groupBy("user_id").agg(
-        F.sum(F.floor(F.col("value") * 100).cast("long"))
-        .cast("long")
-        .alias("s_fp"),
-        F.count(F.lit(1)).cast("long").alias("n_events"),
-    )
-    pts = users.groupBy("s_fp", "n_events").agg(
-        F.count(F.lit(1)).cast("long").alias("n_users"),
-        F.min("user_id").cast("long").alias("min_user"),
-    )
-    prior = Window.rowsBetween(Window.unboundedPreceding, -1)
-    # local pruning: partition skylines are a lossless superset filter
-    local = Window.partitionBy("salt").orderBy(
-        F.col("s_fp").desc(), F.col("n_events").desc()
-    )
-    cand = (
-        pts.withColumn("salt", F.pmod(F.col("s_fp"), F.lit(64)))
-        .withColumn("lb", F.max("n_events").over(local.rowsBetween(
-            Window.unboundedPreceding, -1)))
-        .filter(F.col("lb").isNull() | (F.col("n_events") > F.col("lb")))
-        .drop("salt", "lb")
-    )
-    glob = Window.orderBy(F.col("s_fp").desc(), F.col("n_events").desc())
-    gb = F.max("n_events").over(glob.rowsBetween(Window.unboundedPreceding, -1))
-    return (
-        cand.withColumn("gb", gb)
-        .filter(F.col("gb").isNull() | (F.col("n_events") > F.col("gb")))
-        .drop("gb")
-    )
-
-
-# Table profile (P57): one-pass column profiling — per column the row
-# count, null count, exact distinct count, and typed min/max — the
-# data-quality / schema-drift primitive every ingest pipeline runs
-# before trusting a drop.  Spark side reads the table ONCE and unpivots
-# via stack() into (col_name, is_null, num_val, str_val) rows (numerics
-# and timestamps land in num_val as unix micros, strings in str_val —
-# min/max stay typed, no lossy stringification); one hash aggregate on
-# the 5-key col_name space.  The oracle is the independent formulation:
-# five per-column aggregate scans UNION ALL'd.  Exact distinct is the
-# verification-grade choice; the 100 TB profile swaps it for the HLL
-# sketch (P29) — documented, same plumbing.
-def _q_table_profile(spark, sf_dir):
-    ev = _tbl(spark, sf_dir, "events")
-    stacked = ev.select(
-        F.expr(
-            "stack(5,"
-            " 'event_id', event_id is null, event_id,"
-            "   cast(null as string),"
-            " 'user_id', user_id is null, user_id,"
-            "   cast(null as string),"
-            " 'ts_us', ts is null, unix_micros(cast(ts as timestamp)),"
-            "   cast(null as string),"
-            " 'event_type', event_type is null, cast(null as bigint),"
-            "   event_type,"
-            " 'props', props is null, cast(null as bigint), props"
-            ") as (col_name, is_null, num_val, str_val)"
-        )
-    )
-    return stacked.groupBy("col_name").agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.sum(F.when(F.col("is_null"), 1).otherwise(0))
-        .cast("long")
-        .alias("n_null"),
-        (F.countDistinct("num_val") + F.countDistinct("str_val"))
-        .cast("long")
-        .alias("n_distinct"),
-        F.min("num_val").cast("long").alias("min_num"),
-        F.max("num_val").cast("long").alias("max_num"),
-        F.min("str_val").alias("min_str"),
-        F.max("str_val").alias("max_str"),
-    )
-
-
-# Trend slopes (P58): per-event-type weekly volume trend as an EXACT
-# least-squares slope — num = n*Sxy - Sx*Sy, den = n*Sxx - Sx^2 over
-# (week index, weekly count) points, slope in integer ppm.  The whole
-# regression is closed-form integer arithmetic (x is a small week
-# index, y a count), so both engines produce bit-identical slopes —
-# the trick that makes a "statistics" operator value-hash-verifiable.
-# Scale shape: one scan -> (type, week) hash agg (tiny key space) ->
-# per-type second agg; nothing grows with corpus size after the first
-# aggregate.  den > 0 whenever a type spans >= 2 weeks; single-week
-# types yield NULL slope rather than a division blowup.
-def _q_trend_slope(spark, sf_dir):
-    ev = _tbl(spark, sf_dir, "events")
-    wk = F.expr(f"unix_micros(cast(ts as timestamp)) div {_WEEK_US}")
-    weekly = ev.groupBy("event_type", wk.alias("wk")).agg(
-        F.count(F.lit(1)).cast("long").alias("y")
-    )
-    wmin = Window.partitionBy("event_type")
-    weekly = weekly.withColumn("x", F.col("wk") - F.min("wk").over(wmin))
-    agg = weekly.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n_weeks"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
-    )
-    num = F.col("n_weeks") * F.col("sxy") - F.col("sx") * F.col("sy")
-    den = F.col("n_weeks") * F.col("sxx") - F.col("sx") * F.col("sx")
-    return agg.select(
-        "event_type",
-        "n_weeks",
-        "sy",
-        num.cast("long").alias("slope_num"),
-        den.cast("long").alias("slope_den"),
-        F.when(
-            den > 0,
-            F.expr(
-                "(1000000 * (n_weeks * sxy - sx * sy))"
-                " div (n_weeks * sxx - sx * sx)"
-            ),
-        ).cast("long").alias("slope_ppm"),
-    )
-
-
-# KMV intersection sketch (P67): K-minimum-values sketches (Bar-Yossef
-# et al. 2002 / Beyer et al. 2007) over the en/fr vocabularies — the
-# sketch class that estimates SET INTERSECTIONS, which the HLL (P29)
-# cannot: keep the K smallest 40-bit hash values per set; |S| is
-# estimated by (K-1)*M div h_K, the union sketch is the K smallest of
-# the merged sketches, and |A∩B| ≈ (rho div K) * |A∪B| where rho counts
-# union-sketch members present in BOTH input sketches.  Hashes are
-# 40-bit md5 prefixes so (K-1)*M stays inside int64 and both engines
-# compute bit-identical sketches — the estimates themselves are
-# therefore deterministic integers, oracle-hashable like everything
-# else.  Exact distinct counts ride beside the estimates so the output
-# exhibits sketch quality.  Scale shape: one corpus scan (word table
-# materialized once), per-set top-K windows over DISTINCT hash values
-# (vocabulary-sized, never corpus-sized), then all arithmetic on <=
-# 3K rows; sketches are mergeable summaries like P21/P28/P29.
-_KMV_K = 64
-_KMV_M = 1 << 40
-
-
-def _q_kmv_sketch(spark, sf_dir):
-    d = _docs_wide(spark, sf_dir)
-    # element = word BIGRAM: the synthetic corpus has a ~30-word unigram
-    # vocabulary per language (too small for K=64 sketches to mean
-    # anything); bigrams give ~900 distinct elements per set
-    bigrams = word_bigrams("ws")
-    words = (
-        d.filter(F.col("lang").isin("en", "fr"))
-        .select("lang", letter_words().alias("ws"))
-        .select("lang", F.explode(bigrams).alias("w"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    h = md5_long(F.concat(F.lit("kmv:"), F.col("w")), 10)
-    hashes = words.select("lang", h.alias("h")).distinct()
-    wk = Window.partitionBy("lang").orderBy("h")
-    sk = (
-        hashes.withColumn("rk", F.row_number().over(wk))
-        .filter(F.col("rk") <= _KMV_K)
-        .select("lang", "h")
-        .localCheckpoint(eager=False)
-    )
-    a = sk.filter(F.col("lang") == "en").select("h")
-    b = sk.filter(F.col("lang") == "fr").select("h")
-    wu = Window.orderBy("h")
-    union_k = (
-        a.unionByName(b).distinct()
-        .withColumn("rk", F.row_number().over(wu))
-        .filter(F.col("rk") <= _KMV_K)
-        .select("h")
-    )
-    rho_df = (
-        union_k.join(a, "h").join(b, "h")
-        .agg(F.count(F.lit(1)).cast("long").alias("rho"))
-    )
-    est = lambda hk: F.expr(f"({_KMV_K - 1} * cast({_KMV_M} as bigint)) div {hk}")
-    tops = (
-        a.agg(F.max("h").alias("hk_a"))
-        .crossJoin(b.agg(F.max("h").alias("hk_b")))
-        .crossJoin(union_k.agg(F.max("h").alias("hk_u")))
-        .crossJoin(rho_df)
-    )
-    exact = (
-        words.groupBy("lang")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .groupBy()
-        .pivot("lang", ["en", "fr"])
-        .sum("n")
-        .withColumnRenamed("en", "exact_a")
-        .withColumnRenamed("fr", "exact_b")
-    )
-    exact_i = (
-        words.filter(F.col("lang") == "en").select("w")
-        .join(words.filter(F.col("lang") == "fr").select("w"), "w")
-        .agg(F.count(F.lit(1)).cast("long").alias("exact_intersect"))
-    )
-    return (
-        tops.crossJoin(exact).crossJoin(exact_i)
-        .select(
-            F.lit(_KMV_K).cast("long").alias("k"),
-            est("hk_a").cast("long").alias("est_a"),
-            est("hk_b").cast("long").alias("est_b"),
-            est("hk_u").cast("long").alias("est_union"),
-            "rho",
-            F.expr(
-                f"(rho * (({_KMV_K - 1} * cast({_KMV_M} as bigint))"
-                f" div hk_u)) div {_KMV_K}"
-            ).cast("long").alias("est_intersect"),
-            F.col("exact_a").cast("long").alias("exact_a"),
-            F.col("exact_b").cast("long").alias("exact_b"),
-            "exact_intersect",
-        )
-    )
-
-
-# Sketch-driven decile assignment (P71): the downstream half of the
-# quantile story — the mergeable fixed-point histogram (P-quantile
-# class, q_quantile_sketch) yields the 9 global decile EDGES, which
-# broadcast as ONE array row back onto a linear scan; each event's
-# decile is size(filter(edges, e -> v > e)) + 1, a pure array
-# expression with no row blowup and no second shuffle.  The per-decile
-# output (counts, sums, min/max) exhibits the assignment.  The
-# histogram's cumulative window is single-partition but HISTOGRAM-
-# sized (≤ 49k distinct fixed-point buckets — bounded by value range,
-# not corpus size), which is exactly why the histogram form is the
-# quantile path at 100 TB.  Rank thresholds in ceil-integer form.
-def _q_decile_assign(spark, sf_dir):
-    ev = _tbl(spark, sf_dir, "events").select(
-        F.floor(F.col("value") * 100).cast("long").alias("v_fp")
-    ).localCheckpoint(eager=False)
-    hist = ev.groupBy(F.col("v_fp").alias("bucket")).agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    w = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
-    wn = Window.partitionBy()
-    cum = hist.select(
-        "bucket",
-        F.sum("cnt").over(w).alias("cum"),
-        F.sum("cnt").over(wn).alias("n"),
-    )
-    picks = [
-        F.min(
-            F.when(
-                F.col("cum") >= F.expr(f"({k} * n + 9) div 10"),
-                F.col("bucket"),
-            )
-        ).alias(f"e{k}")
-        for k in range(1, 10)
-    ]
-    edges = cum.agg(*picks).select(
-        F.array(*[F.col(f"e{k}") for k in range(1, 10)]).alias("edges")
-    )
-    assigned = ev.crossJoin(F.broadcast(edges)).select(
-        "v_fp",
-        (F.expr("size(filter(edges, e -> v_fp > e))") + 1)
-        .cast("long")
-        .alias("decile"),
-    )
-    return assigned.groupBy("decile").agg(
-        F.count(F.lit(1)).cast("long").alias("n_events"),
-        F.sum("v_fp").cast("long").alias("sum_fp"),
-        F.min("v_fp").cast("long").alias("min_fp"),
-        F.max("v_fp").cast("long").alias("max_fp"),
-    )
-
-
-# Incremental aggregate maintenance (P70): the materialized-view
-# pattern — a standing per-type aggregate (n, sum, min, max, sum of
-# squares) is maintained by MERGING the base period's partial state
-# with the delta period's partial state, never by recomputing over the
-# full history.  Here the events log splits at day 15: both partials
-# aggregate independently (at 100 TB the base partial is a stored
-# table, only the delta scans), merge algebraically (sums add, min/max
-# fold), and the output carries the merged state BESIDE a full
-# recompute with a `consistent` flag proving merge == recompute —
-# the algebraic property that makes every sketch in this suite
-# (P21/P28/P29/P67) and map-side combine itself work.  All values
-# fixed-pointed per row; ss_fp headroom to ~4e11 rows (P55 note).
-def _q_incremental_agg(spark, sf_dir):
-    ev = _tbl(spark, sf_dir, "events").select(
-        "event_type",
-        (F.dayofmonth(F.col("ts").cast("timestamp")) <= 15).alias("is_base"),
-        F.floor(F.col("value") * 100).cast("long").alias("v_fp"),
-    ).localCheckpoint(eager=False)
-
-    def partial(df):
-        return df.groupBy("event_type").agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum("v_fp").cast("long").alias("s"),
-            F.min("v_fp").cast("long").alias("mn"),
-            F.max("v_fp").cast("long").alias("mx"),
-            F.sum(F.col("v_fp") * F.col("v_fp")).cast("long").alias("ss"),
-        )
-
-    parts = ev.groupBy("event_type", "is_base").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("v_fp").cast("long").alias("s"),
-        F.min("v_fp").cast("long").alias("mn"),
-        F.max("v_fp").cast("long").alias("mx"),
-        F.sum(F.col("v_fp") * F.col("v_fp")).cast("long").alias("ss"),
-    )
-    merged = parts.groupBy("event_type").agg(
-        F.sum("n").cast("long").alias("n"),
-        F.sum("s").cast("long").alias("s"),
-        F.min("mn").cast("long").alias("mn"),
-        F.max("mx").cast("long").alias("mx"),
-        F.sum("ss").cast("long").alias("ss"),
-    )
-    full = partial(ev).select(
-        "event_type",
-        F.col("n").alias("fn"), F.col("s").alias("fs"),
-        F.col("mn").alias("fmn"), F.col("mx").alias("fmx"),
-        F.col("ss").alias("fss"),
-    )
-    return merged.join(full, "event_type").select(
-        "event_type", "n", "s", "mn", "mx", "ss",
-        (
-            (F.col("n") == F.col("fn")) & (F.col("s") == F.col("fs"))
-            & (F.col("mn") == F.col("fmn")) & (F.col("mx") == F.col("fmx"))
-            & (F.col("ss") == F.col("fss"))
-        ).alias("consistent"),
-    )
-
-
-# Bloom semi-join reduction (P69): the 100-TB join trick P28 builds
-# toward — a selective dim-side predicate (urgent orders, ~20% of the
-# build side) becomes a 2^16-bit / 3-hash Bloom over its join keys.
-# ONLY the bit table is broadcast (2^16 bits — constant-size at any
-# corpus scale); each DISTINCT fact key probes it map-side, and the
-# bloom verdict per key is a broadcast-join lookup.  The surviving key
-# set is fact-key-sized, so it is NOT broadcast: the fact rows reach it
-# via a plain shuffle semi-join on the key — at 100 TB that shuffle
-# moves only the ~22% of rows whose keys pass the bloom, which is the
-# entire point of the reduction.  The output exposes the whole
-# accounting — probe sizes, bloom-passing keys/rows, true matches, and
-# the FALSE-POSITIVE key count (deterministic: both engines build
-# bit-identical filters, so even the Bloom's mistakes hash-match).  No
-# false negatives by construction: every true match survives pruning
-# (asserted by n_rows_match == the unpruned join count in the oracle's
-# algebra).  Revenue is per-row fixed-pointed before summation.
-_BLOOM_BITS = 1 << 16
-_BLOOM_K = 3
-
-
-def _bloom_positions(salt: str, key) -> Column:
-    """array of the _BLOOM_K salted md5 bit positions of string `key`."""
-    return F.array(*[
-        md5_long(F.concat(F.lit(f"{salt}{r}:"), key)) % F.lit(_BLOOM_BITS)
-        for r in range(_BLOOM_K)
-    ])
-
-
-def _bloom_bits(keys: DataFrame, salt: str, key) -> DataFrame:
-    """(bit, hit = 1): the set bits of the filter built over `keys`."""
-    return (
-        keys.select(F.explode(_bloom_positions(salt, key)).alias("bit"))
-        .distinct()
-        .withColumn("hit", F.lit(1))
-    )
-
-
-def _bloom_verdict(probe: DataFrame, by: list[str], salt: str, key,
-                   bits: DataFrame, out: str) -> DataFrame:
-    """(by..., out): 1 iff every bit of the probe row's `key` is set in
-    `bits` (the caller decides whether to broadcast the bit table)."""
-    return (
-        probe.select(*by, F.explode(_bloom_positions(salt, key)).alias("bit"))
-        .join(bits, "bit", "left")
-        .groupBy(*by)
-        .agg(F.min(F.coalesce(F.col("hit"), F.lit(0))).cast("long").alias(out))
-    )
-
-
-def _q_bloom_join(spark, sf_dir):
-    orders = _tbl(spark, sf_dir, "orders")
-    li = _tbl(spark, sf_dir, "lineitem").select(
-        "l_orderkey",
-        F.floor(F.col("l_extendedprice") * 100).cast("long").alias("price_fp"),
-    ).localCheckpoint(eager=False)
-    build = orders.filter(F.col("o_orderpriority") == "1-URGENT").select(
-        F.col("o_orderkey").alias("k")
-    ).localCheckpoint(eager=False)
-    key = F.col("k").cast("string")
-    bits = _bloom_bits(build, "bj", key)
-    probe_keys = li.select(F.col("l_orderkey").alias("k")).distinct()
-    key_verdict = _bloom_verdict(
-        probe_keys, ["k"], "bj", key, F.broadcast(bits), "pass"
-    ).localCheckpoint(eager=False)
-    passing = key_verdict.filter(F.col("pass") == 1).select("k")
-    # passing/build are fact-key-sized sets: shuffle joins, never broadcast
-    # (the only broadcast in this plan is the constant-size bit table above)
-    pruned = li.join(
-        passing, li.l_orderkey == passing.k
-    ).select("l_orderkey", "price_fp")
-    matched = pruned.join(build, pruned.l_orderkey == build.k)
-    fp_keys = passing.join(build, "k", "left_anti")
-    return (
-        li.agg(F.count(F.lit(1)).cast("long").alias("n_fact_rows"))
-        .crossJoin(
-            probe_keys.agg(F.count(F.lit(1)).cast("long").alias("n_fact_keys"))
-        )
-        .crossJoin(build.agg(F.count(F.lit(1)).cast("long").alias("n_build_keys")))
-        .crossJoin(
-            passing.agg(F.count(F.lit(1)).cast("long").alias("n_keys_pass"))
-        )
-        .crossJoin(
-            fp_keys.agg(F.count(F.lit(1)).cast("long").alias("n_fp_keys"))
-        )
-        .crossJoin(
-            pruned.agg(F.count(F.lit(1)).cast("long").alias("n_rows_pass"))
-        )
-        .crossJoin(
-            matched.agg(
-                F.count(F.lit(1)).cast("long").alias("n_rows_match"),
-                F.sum("price_fp").cast("long").alias("revenue_fp"),
-            )
-        )
-    )
-
-
-# Priority sampling (P68): weighted sampling without replacement
-# (Duffield-Lund-Thorup 2007) with a DETERMINISTIC integer priority —
-# u = 40-bit md5 of the doc id, priority = u*1e6 div weight (weight =
-# n_chars), keep the k SMALLEST priorities (equivalent to largest w/u).
-# The (k+1)-th priority is the Horvitz-Thompson threshold tau.  With
-# u a 40-bit hash, pri = u*1e6/w corresponds to uniform q = (u/2^40)/w,
-# so tau converts back to WEIGHT units as (2^40 * 1e6) div tau and each
-# kept item's unbiased weight estimate is max(w, (2^40*1e6) div tau) —
-# all integer, so both engines produce the identical sample AND identical
-# HT weights (an RNG-based sampler could never be oracle-hashed).
-# sum(ht_weight) over the sample estimates the corpus total weight.
-# Scale shape: one scan, priorities are a per-row map, both the k and
-# k+1 selections are distributed TakeOrderedAndProject — no window, no
-# single-partition sort.
-_PRIO_K = 20
-
-
-def _q_priority_sample(spark, sf_dir):
-    d = _docs(spark, sf_dir).select("doc_id", "n_chars")
-    u = md5_long(F.concat(F.lit("pri:"), F.col("doc_id")), 10)
-    pri = F.greatest(
-        F.expr("u * 1000000 div greatest(n_chars, 1)"), F.lit(1)
-    )
-    scored = d.select(
-        "doc_id", "n_chars", u.alias("u")
-    ).select("doc_id", "n_chars", pri.alias("pri")).localCheckpoint(eager=False)
-    kplus = (
-        scored.orderBy(F.col("pri").asc(), F.col("doc_id").asc())
-        .limit(_PRIO_K + 1)
-    )
-    tau = kplus.agg(F.max("pri").alias("tau"))
-    kept = (
-        scored.orderBy(F.col("pri").asc(), F.col("doc_id").asc())
-        .limit(_PRIO_K)
-    )
-    win = Window.orderBy(F.col("pri").asc(), F.col("doc_id").asc())
-    return (
-        kept.crossJoin(F.broadcast(tau))
-        .select(
-            "doc_id",
-            "n_chars",
-            "pri",
-            F.row_number().over(win).cast("long").alias("rnk"),
-            "tau",
-            F.greatest(
-                F.col("n_chars"),
-                # tau -> weight units: u is 40-bit, pri = u*1e6 div w,
-                # so the weight threshold is (2^40 * 1e6) div tau
-                F.expr("(1099511627776 * 1000000) div tau"),
-            ).cast("long").alias("ht_weight"),
-        )
-    )
-
-
-# Set operations (P65): INTERSECT / EXCEPT as first-class relational
-# operators (the §2.7 inventory previously exercised only union and
-# anti-join).  Source sets of two language slices are compared with the
-# native DataFrame set ops (intersect / subtract — both DISTINCT
-# semantics, matching SQL INTERSECT/EXCEPT), results folded to one row
-# per operation with a sorted member list so both engines compare
-# scalars.  Scale shape: set ops hash-partition on the full row — the
-# inputs here are distinct-projected first, so the shuffled sets are
-# vocabulary-sized, never corpus-sized.
-def _q_set_ops(spark, sf_dir):
-    d = _docs(spark, sf_dir)
-    a = d.filter(F.col("lang") == "en").select("source").distinct()
-    b = d.filter(F.col("lang") == "fr").select("source").distinct()
-
-    def fold(df, op):
-        return df.agg(
-            F.count(F.lit(1)).cast("long").alias("n_sources"),
-            F.coalesce(
-                F.concat_ws(",", F.array_sort(F.collect_list("source"))),
-                F.lit(""),
-            ).alias("src_list"),
-        ).select(F.lit(op).alias("op"), "n_sources", "src_list")
-
-    return (
-        fold(a.intersect(b), "intersect")
-        .unionByName(fold(a.subtract(b), "except_en"))
-        .unionByName(fold(b.subtract(a), "except_fr"))
-    )
-
-
-# Time-series gap fill (P66): the LOCF (last-observation-carried-
-# forward) backfill every sensor/metrics pipeline runs — build each
-# user's dense hourly grid between their first and last event
-# (sequence() explode, no driver work), left-join the sparse hourly
-# aggregate, and forward-fill the value with last(ignorenulls) over the
-# per-user hour order.  Gap hours report n_events = 0, is_gap = true,
-# and the carried value.  Scale shape: the grid explode is linear in
-# (users x span), the join is co-partitioned on (user_id, h), and the
-# LOCF window reuses the same user partitioning; values fixed-pointed
-# per row.  The oracle builds the same grid via a bounded range join
-# (spans here are <= 720 h; the 1000-row bound fails LOUDLY via row
-# counts if the corpus ever widens).
-_HOUR_US = 3_600_000_000
-
-
-def _q_gap_fill(spark, sf_dir):
-    ev = _tbl(spark, sf_dir, "events")
-    h = F.expr(f"unix_micros(cast(ts as timestamp)) div {_HOUR_US}")
-    hourly = ev.groupBy("user_id", h.alias("h")).agg(
-        F.count(F.lit(1)).cast("long").alias("n_events"),
-        F.sum(F.floor(F.col("value") * 100).cast("long"))
-        .cast("long")
-        .alias("v_fp"),
-    )
-    bounds = hourly.groupBy("user_id").agg(
-        F.min("h").alias("h0"), F.max("h").alias("h1")
-    )
-    grid = bounds.select(
-        "user_id", F.explode(F.expr("sequence(h0, h1)")).alias("h")
-    )
-    j = grid.join(hourly, ["user_id", "h"], "left")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("h")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return j.select(
-        "user_id",
-        "h",
-        F.coalesce("n_events", F.lit(0)).cast("long").alias("n_events"),
-        F.last("v_fp", ignorenulls=True).over(w).cast("long").alias("locf_fp"),
-        F.col("v_fp").isNull().alias("is_gap"),
-    )
-
-
-# A/B chi-square test (P60): two-proportion significance over a 2x2
-# contingency table (variant = user parity, conversion = any purchase
-# event) — Pearson chi2 = N(ad-bc)^2 / ((a+b)(c+d)(a+c)(b+d)), held in
-# INTEGER milli-units end to end (the 5%-critical-value gate compares
-# chi2_milli > 3841), so the verdict cannot drift between engines.
-# Scale shape: per-user conversion flags are one hash agg on user_id,
-# the 2x2 table is a 2-row aggregate, and the test itself is driver-free
-# scalar arithmetic on a 1-row frame.  int64 headroom covers ~1e5 users
-# per cell; past that the production path computes the cell products in
-# decimal — same note as the P55 variance sums.
-def _q_ab_chisq(spark, sf_dir):
-    ev = _tbl(spark, sf_dir, "events")
-    conv = ev.groupBy("user_id").agg(
-        F.max(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
-        .alias("converted")
-    )
-    cells = conv.groupBy(F.pmod(F.col("user_id"), F.lit(2)).alias("variant")).agg(
-        F.count(F.lit(1)).cast("long").alias("n_users"),
-        F.sum("converted").cast("long").alias("n_conv"),
-    )
-    t = cells.agg(
-        F.sum(F.when(F.col("variant") == 0, F.col("n_conv")))
-        .cast("long").alias("a"),
-        F.sum(F.when(F.col("variant") == 0, F.col("n_users") - F.col("n_conv")))
-        .cast("long").alias("b"),
-        F.sum(F.when(F.col("variant") == 1, F.col("n_conv")))
-        .cast("long").alias("c"),
-        F.sum(F.when(F.col("variant") == 1, F.col("n_users") - F.col("n_conv")))
-        .cast("long").alias("d"),
-    )
-    den = F.expr("(a + b) * (c + d) * (a + c) * (b + d)")
-    chi = F.when(
-        den > 0,
-        F.expr(
-            "(1000 * (a + b + c + d) * (a * d - b * c) * (a * d - b * c))"
-            " div ((a + b) * (c + d) * (a + c) * (b + d))"
-        ),
-    )  # a degenerate margin (no users or no variance) yields NULL, not a blowup
-    return t.select(
-        "a", "b", "c", "d",
-        (F.col("a") + F.col("b") + F.col("c") + F.col("d"))
-        .cast("long").alias("n"),
-        chi.cast("long").alias("chi2_milli"),
-        F.coalesce(chi > 3841, F.lit(False)).alias("significant"),
-    )
-
-
-# Exact-substring span dedup (P40): the "Deduplicating Training Data
-# Makes Language Models Better" pass — find 20-word spans repeated
-# across DISTINCT documents (a planted 25-word license paragraph,
-# prepended on one deterministic doc slice and appended on another, so
-# both interval positions occur), merge each doc's flagged overlapping
-# spans into intervals (gaps-and-islands: same-length spans merge when
-# start deltas <= span length), and report per-doc removed/kept word
-# counts.  Scale shape: the positional 20-gram stream is ONE linear
-# scan emitting (xxhash64, doc_id, pos); the repeated-gram set is a
-# spans repeated across DISTINCT documents (countDistinct(doc_id) >= 2
-# over fixed-width 16-hex md5 gram fingerprints — the engine-portable
-# key of P36) whose survivors are Zipf-small at any corpus size ->
-# BROADCAST back onto the gram stream (the para-dedup P33 argument);
-# island detection is a per-doc window
-# over only the FLAGGED positions (bounded by doc length).  The word
-# table is materialized once across the gram and count sides.
-_SPAN_GRAM = 20
-_SPAN_LICENSE = (
-    "this work is licensed under the creative commons attribution share"
-    " alike license and may be redistributed with attribution provided"
-    " this notice is preserved intact"
-)
-
-
-def _q_span_dedup(spark, sf_dir):
-    d = _docs_wide(spark, sf_dir).withColumn(
-        "text",
-        F.when(
-            F.col("doc_id") % 9 == 2,
-            F.concat(F.lit(_SPAN_LICENSE + " "), F.col("text")),
-        )
-        .when(
-            F.col("doc_id") % 9 == 4,
-            F.concat(F.col("text"), F.lit(" " + _SPAN_LICENSE)),
-        )
-        .otherwise(F.col("text")),
-    )
-    words = d.select("doc_id", letter_words().alias("ws")).localCheckpoint(
-        eager=False
-    )
-    g = words.select(
-        "doc_id",
-        F.posexplode(gram_fingerprints("ws", _SPAN_GRAM)).alias("pos0", "gh"),
-    ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "gh")
-    repeated = (
-        g.groupBy("gh")
-        .agg(F.countDistinct("doc_id").alias("nd"))
-        .filter(F.col("nd") >= 2)
-        .select("gh")
-    )
-    flagged = g.join(F.broadcast(repeated), "gh")
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    isl = (
-        flagged.withColumn("prev", F.lag("pos").over(w))
-        .withColumn(
-            "brk",
-            F.when(
-                F.col("prev").isNull()
-                | (F.col("pos") - F.col("prev") > _SPAN_GRAM),
-                1,
-            ).otherwise(0),
-        )
-        .withColumn(
-            "isl",
-            F.sum("brk").over(
-                w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            ),
-        )
-        .groupBy("doc_id", "isl")
-        .agg(
-            F.count(F.lit(1)).alias("n_flagged"),
-            (F.max("pos") - F.min("pos") + _SPAN_GRAM).alias("ivl_words"),
-        )
-        .groupBy("doc_id")
-        .agg(
-            F.sum("n_flagged").cast("long").alias("n_flagged"),
-            F.count(F.lit(1)).cast("long").alias("n_intervals"),
-            F.sum("ivl_words").cast("long").alias("removed_words"),
-        )
-    )
-    return (
-        words.select("doc_id", F.size("ws").cast("long").alias("n_words"))
-        .join(isl, "doc_id", "left")
-        .select(
-            "doc_id",
-            "n_words",
-            F.coalesce("n_flagged", F.lit(0)).cast("long").alias("n_flagged"),
-            F.coalesce("n_intervals", F.lit(0)).cast("long")
-            .alias("n_intervals"),
-            F.coalesce("removed_words", F.lit(0)).cast("long")
-            .alias("removed_words"),
-            (
-                F.col("n_words") - F.coalesce("removed_words", F.lit(0))
-            ).cast("long").alias("kept_words"),
-        )
-    )
-
-
-# Fixed-iteration PageRank (P39): power iteration over a deterministic
-# synthetic link graph (each doc links to (id*id+1) mod N and id div 2
-# — uniform out-degree 2; the quadratic map is non-invertible mod
-# composite N and the halving map funnels toward low ids, so in-degree
-# is genuinely skewed.  A LINEAR map like (3*id+1) mod N is a bijection
-# for gcd(3,N)=1 and collapses every rank to exactly 1.0 — the first
-# cut did that), 3 unrolled rounds of
-# r' = 0.15 + 0.85 * sum(in-contribs), all in 1e6 fixed point with
-# integer division (r div 2 per out-edge, *85 div 100 damping) so both
-# engines agree bit-exactly.  N comes from the parquet footer (Iceberg
-# snapshot stats at production) — no count() job.  Scale shape: the
-# Pregel loop — edge table partitioned by src ONCE and reused each
-# round (localCheckpoint pins it; only the rank table re-shuffles), one
-# src-join + one dst-agg exchange per round, nodes with no in-links
-# retained by a left anti-free left join + coalesce(0).  3 rounds is
-# the fixed-budget flavor (rank-stability deltas, not convergence
-# tests, decide rounds at 100 TB — same argument as the pointer-
-# doubling cap in P19).
-_PR_ITERS = 3
-
-
-def _q_pagerank(spark, sf_dir):
-    import pyarrow.parquet as pq
-
-    n = pq.ParquetFile(f"{sf_dir}/documents.parquet").metadata.num_rows
-    nodes = _docs(spark, sf_dir).select(F.col("doc_id").alias("id"))
-    edges = (
-        nodes.select(
-            F.col("id").alias("src"),
-            F.explode(
-                F.array(
-                    (F.col("id") * F.col("id") + 1) % F.lit(n),
-                    F.expr("id div 2"),
-                )
-            ).alias("dst"),
-        )
-        .repartition(F.col("src"))
-        .localCheckpoint(eager=False)
-    )
-    ranks = nodes.select("id", F.lit(1000000).cast("long").alias("r"))
-    for _ in range(_PR_ITERS):
-        contrib = (
-            edges.join(ranks, edges.src == ranks.id)
-            .select("dst", F.expr("r div 2").alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("s"))
-        )
-        ranks = nodes.join(
-            contrib, nodes.id == contrib.dst, "left"
-        ).select(
-            "id",
-            (
-                F.lit(150000)
-                + F.expr("(85 * coalesce(s, 0)) div 100")
-            ).cast("long").alias("r"),
-        )
-    return ranks.select("id", F.col("r").alias("rank"))
-
-
-# k-core decomposition (P63): the graph-robustness peel — repeatedly
-# drop nodes with degree < k until every survivor has >= k surviving
-# neighbors (community cores, spam-farm pruning, the densest-region
-# prefilter before expensive graph algorithms).  Same deterministic
-# quadratic link graph as PageRank (P39), SYMMETRIZED (k-core is an
-# undirected notion) and de-self-looped.  Both engines run the same
-# FIXED number of peel rounds, so the oracle can be plain unrolled SQL
-# (no recursion, no engine-specific fixpoint semantics); actual
-# convergence within those rounds is pinned separately by
-# tests/test_graph.py, which runs an extra round at sf0.001 and asserts
-# no further change.  Scale shape: each round is one degree hash-agg +
-# two semi-joins against the (shrinking) survivor set; the edge table
-# is lineage-truncated per round via localCheckpoint exactly like the
-# P19 label tables — round plans stay constant-size.
-_KCORE_K = 3
-_KCORE_ROUNDS = 6
-
-
-def _kcore_edges(spark, sf_dir):
-    import pyarrow.parquet as pq
-
-    n = pq.ParquetFile(f"{sf_dir}/documents.parquet").metadata.num_rows
-    nodes = _docs(spark, sf_dir).select(F.col("doc_id").alias("id"))
-    raw = nodes.select(
-        F.col("id").alias("u"),
-        F.explode(
-            F.array(
-                (F.col("id") * F.col("id") + 1) % F.lit(n),
-                F.expr("id div 2"),
-            )
-        ).alias("v"),
-    )
-    return (
-        raw.select("u", "v")
-        .unionByName(raw.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-
-
-def _kcore_peel(edges, rounds: int):
-    for _ in range(rounds):
-        alive = (
-            edges.groupBy("u")
-            .agg(F.count(F.lit(1)).alias("d"))
-            .filter(F.col("d") >= _KCORE_K)
-            .select("u")
-        )
-        edges = (
-            edges.join(alive, "u")
-            .join(alive.withColumnRenamed("u", "v"), "v")
-            .select("u", "v")
-            .localCheckpoint(eager=False)
-        )
-    return edges
-
-
-def _q_kcore(spark, sf_dir):
-    edges = _kcore_peel(_kcore_edges(spark, sf_dir), _KCORE_ROUNDS)
-    return edges.groupBy(F.col("u").alias("node")).agg(
-        F.count(F.lit(1)).cast("long").alias("core_deg")
-    )
-
-
-def _sql_kcore_rounds(rounds: int) -> str:
-    parts = [
-        "WITH nn AS (SELECT count(*)::BIGINT AS n FROM documents),",
-        "nodes AS (SELECT doc_id AS id FROM documents),",
-        "raw AS (SELECT id AS u, (id * id + 1) % nn.n AS v FROM nodes, nn"
-        " UNION ALL SELECT id, id // 2 FROM nodes, nn),",
-        "e0 AS (SELECT DISTINCT u, v FROM"
-        " (SELECT u, v FROM raw UNION ALL SELECT v, u FROM raw)"
-        " WHERE u != v)",
-    ]
-    for r in range(1, rounds + 1):
-        parts.append(
-            f", a{r} AS (SELECT u FROM e{r-1} GROUP BY u"
-            f" HAVING count(*) >= {_KCORE_K})"
-            f", e{r} AS (SELECT e.u, e.v FROM e{r-1} e"
-            f" JOIN a{r} x ON e.u = x.u JOIN a{r} y ON e.v = y.u)"
-        )
-    parts.append(
-        f"SELECT u AS node, count(*)::BIGINT AS core_deg"
-        f" FROM e{rounds} GROUP BY 1"
-    )
-    return "\n".join(parts)
-
-
-# Fuzzy record-linkage join (P38): entity resolution by BLOCKING +
-# bounded edit-distance verify — the classic "dirty catalog" linkage
-# (Fellegi-Sunter / dedupe-style): a perturbed record side (2nd char
-# deleted on a deterministic key slice) is matched back to the clean
-# entity catalog by argmin levenshtein WITHIN a block, never globally.
-# Scale shape: the all-pairs O(N*M) levenshtein cross product is
-# replaced by an equi-join on the blocking key (last name token, which
-# the perturbation provably never touches), so candidates per record =
-# catalog entities per block (bounded); the entity catalog is the small
-# dimension side -> broadcast, zero shuffle of the record side beyond
-# the per-record argmin window (high-cardinality uniform partition
-# key).  If BOTH sides were corpus-sized the same plan becomes a
-# blocking-key shuffle join with the P31-style salt for hot blocks.
-# Ties break (dist, name) lexicographically so the argmin is
-# deterministic in both engines.
-def _q_fuzzy_join(spark, sf_dir):
-    p = _tbl(spark, sf_dir, "part").select("p_partkey", "p_name")
-    catalog = (
-        p.select(F.col("p_name").alias("cname"))
-        .distinct()
-        .withColumn("blk", F.element_at(F.split("cname", " "), -1))
-    )
-    dirty = p.select(
-        "p_partkey",
-        F.when(
-            F.col("p_partkey") % 3 == 0,
-            F.concat(
-                F.substring("p_name", 1, 1), F.expr("substring(p_name, 3)")
-            ),
-        )
-        .otherwise(F.col("p_name"))
-        .alias("dirty_name"),
-    ).withColumn("blk", F.element_at(F.split("dirty_name", " "), -1))
-    cand = dirty.join(F.broadcast(catalog), "blk").withColumn(
-        "dist", F.levenshtein("dirty_name", "cname")
-    )
-    w = Window.partitionBy("p_partkey").orderBy("dist", "cname")
-    return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "p_partkey",
-            "dirty_name",
-            F.col("cname").alias("matched_name"),
-            F.col("dist").cast("long").alias("dist"),
-        )
-    )
-
-
-# Target-mix resampling (P37): given a target language mix (ppm shares
-# summing to 1e6), water-fill the largest corpus that matches the mix
-# EXACTLY — T = min over langs of (N_l * 1e6 div target_l) — then derive
-# per-lang caps and deterministic md5-gate sampling rates, and apply
-# the gate in the same query.  This is the domain/language-mix step of
-# a training-data pipeline (e.g. "40% en, 15% each of de/es/fr/zh").
-# All arithmetic is integer (div, no FP rates to diverge).  Scale
-# shape: pass 1 is a lang-only count agg (column-pruned scan, ~free at
-# 100 TB); the 5-row rate table broadcasts back onto pass 2's linear
-# scan — per-row gate, no shuffle beyond the final per-lang agg.  The
-# md5 gate keeps ~cap_l rows deterministically; exact-cap selection
-# would need a per-lang rank (the salted two-phase top-k of P31 is the
-# scale recipe if exactness is required).
-_MIX_TARGET_PPM = {"en": 400000, "de": 150000, "es": 150000,
-                   "fr": 150000, "zh": 150000}
-
-
-def _mix_target_col():
-    c = F.lit(None)
-    for lang, ppm in _MIX_TARGET_PPM.items():
-        c = F.when(F.col("lang") == lang, F.lit(ppm)).otherwise(c)
-    return c.cast("long")
-
-
-def _q_target_mix_sample(spark, sf_dir):
-    d = _docs(spark, sf_dir)
-    counts = (
-        d.groupBy("lang")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_avail"))
-        .withColumn("target_ppm", _mix_target_col())
-        .filter(F.col("target_ppm").isNotNull())
-    )
-    tmax = counts.select(
-        F.min(F.expr("n_avail * 1000000 div target_ppm")).alias("t_max")
-    )
-    rates = (
-        counts.crossJoin(F.broadcast(tmax))
-        .withColumn("cap", F.expr("t_max * target_ppm div 1000000"))
-        .withColumn(
-            "rate_ppm",
-            F.expr("least(cap * 1000000 div n_avail, 1000000)"),
-        )
-        .select("lang", "n_avail", "cap", "rate_ppm")
-    )
-    bkt = md5_long(F.col("doc_id").cast("string")) % F.lit(1000000)
-    kept = bkt < F.col("rate_ppm")
-    return (
-        d.join(F.broadcast(rates), "lang")
-        .groupBy("lang", "n_avail", "cap", "rate_ppm")
-        .agg(
-            F.count(F.when(kept, 1)).cast("long").alias("n_kept"),
-            F.coalesce(F.sum(F.when(kept, F.col("doc_id"))), F.lit(0))
-            .cast("long").alias("kept_id_sum"),
-        )
-    )
-
-
-# Importance resampling (P46): the DSIR-shaped data-selection pass
-# (Xie et al. 2023, arXiv:2302.03169) — score every document by how
-# much its hashed-unigram distribution looks like a TARGET reference
-# corpus relative to the raw corpus, then keep documents with
-# probability proportional to the (capped) importance weight.  Target =
-# the English slice (`lang = 'en'`): the classic "resample raw toward a
-# high-quality reference" setup.  All arithmetic is INTEGER: per-bucket
-# add-1-smoothed probabilities in ppb, their ratio in ppm, per-doc
-# score = sum of per-word ratios, and the keep decision gates the doc's
-# md5 bucket against the per-word average ratio — deterministic across
-# engines, runs, and cluster sizes.  Scale shape: the bucket-stats
-# table is _DSIR_BUCKETS rows (broadcast), the word table is scanned
-# once for stats and once for scoring (materialized in between), the
-# doc aggregate is a hash agg on doc_id — everything linear at 100 TB.
-# The word bucket and the keep gate are shared with the streaming twin
-# (ocr_spark/streaming/extract_stream.py).
-
-
-def _q_importance_resample(spark, sf_dir):
-    d = _docs(spark, sf_dir)
-    w = d.select(
-        "doc_id",
-        (F.col("lang") == "en").alias("is_t"),
-        lower_words("text").alias("ws"),
-    )
-    # (doc_id, is_t, b) materialized ONCE — the stats aggregate and the
-    # scoring join both read it; without the checkpoint the split+md5
-    # subtree runs twice (no exchange reuse across the two references)
-    wb = (
-        w.select("doc_id", "is_t", F.explode("ws").alias("wd"))
-        .filter(F.col("wd") != "")
-        .select("doc_id", "is_t", dsir_bucket(F.col("wd")).alias("b"))
-        .localCheckpoint(eager=False)
-    )
-    stats = wb.groupBy("b").agg(
-        F.count(F.lit(1)).cast("long").alias("r_cnt"),
-        F.count(F.when(F.col("is_t"), 1)).cast("long").alias("t_cnt"),
-    )
-    tot = stats.select(
-        F.sum("r_cnt").alias("r_tot"), F.sum("t_cnt").alias("t_tot")
-    )
-    # ppb-scaled smoothed probabilities, ratio in ppm — two-step integer
-    # division keeps every intermediate under int64 even at corpus sizes
-    # where (t_cnt * r_tot) alone would overflow
-    rat = stats.crossJoin(F.broadcast(tot)).select(
-        "b",
-        F.expr(
-            f"((t_cnt + 1) * 1000000000 div (t_tot + {_DSIR_BUCKETS}))"
-            f" * 1000000 div greatest("
-            f"(r_cnt + 1) * 1000000000 div (r_tot + {_DSIR_BUCKETS}), 1)"
-        ).alias("ratio_ppm"),
-    )
-    perdoc = (
-        wb.join(F.broadcast(rat), "b")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_words"),
-            F.sum("ratio_ppm").cast("long").alias("score_fp"),
-        )
-    )
-    scored = d.select("doc_id").join(perdoc, "doc_id", "left").select(
-        "doc_id",
-        F.coalesce("n_words", F.lit(0)).alias("n_words"),
-        F.coalesce("score_fp", F.lit(0)).alias("score_fp"),
-    )
-    return with_dsir_keep(scored, F.col("doc_id").cast("string"))
-
-
-# C4 filters (P53): the line-and-page rule set from the C4 corpus
-# build (Raffel et al. 2020, arXiv:1910.10683 §2.2) — keep only lines
-# that end in terminal punctuation, have >= 5 words, and do not mention
-# javascript; drop pages containing "lorem ipsum" or a curly brace;
-# drop pages with < 3 sentences after line filtering.  The synthetic
-# corpus is single-line unpunctuated prose, so a multi-line PAGE is
-# constructed deterministically first: words re-wrapped into 12-word
-# lines, 3 of every 4 lines terminally punctuated (keyed on
-# doc_id + line index), and the lorem/brace/javascript failure cases
-# planted on disjoint doc slices — both engines build the identical
-# page, so the rules have real work and real failures at every sf.
-# Scale shape: one linear scan, per-row array ops, no UDF, no shuffle
-# before the narrow output projection.
-_C4_LINE_WORDS = 12
-
-
-def _q_c4_filters(spark, sf_dir):
-    d = _docs(spark, sf_dir)
-    d = d.select("doc_id", lower_words("text").alias("ws"))
-    n_lines0 = f"greatest((size(ws) + {_C4_LINE_WORDS - 1}) div {_C4_LINE_WORDS}, 1)"
-    base_lines = F.expr(
-        f"transform(sequence(1, {n_lines0}),"
-        f" i -> concat_ws(' ', slice(ws, (i - 1) * {_C4_LINE_WORDS} + 1,"
-        f" {_C4_LINE_WORDS}))"
-        f" || if((doc_id + i) % 4 != 3, '.', ''))"
-    )
-    empty = "cast(array() as array<string>)"
-    planted = F.expr(
-        "concat("
-        " if(doc_id % 29 = 11,"
-        "  array('lorem ipsum dolor sit amet consectetur adipiscing elit.'),"
-        f"  {empty}),"
-        " if(doc_id % 31 = 12,"
-        f"  array('function demo() {{ return 1; }} end of sample.'), {empty}),"
-        " if(doc_id % 37 = 13,"
-        f"  array('please enable javascript to view this page.'), {empty}))"
-    )
-    d = d.select("doc_id", F.concat(base_lines, planted).alias("lines"))
-    kept = F.expr(
-        "filter(lines, l ->"
-        " (endswith(l, '.') or endswith(l, '!') or endswith(l, '?'))"
-        " and size(split(l, ' ')) >= 5"
-        " and not contains(l, 'javascript'))"
-    )
-    d = d.select("doc_id", "lines", kept.alias("kept"))
-    page = F.concat_ws(" ", F.col("lines"))
-    kept_text = F.concat_ws(" ", F.col("kept"))
-    n_sentences = (
-        F.length(kept_text)
-        - F.length(F.regexp_replace(kept_text, r"[.!?]", ""))
-    ).cast("long")
-    has_lorem = page.contains("lorem ipsum")
-    has_brace = page.contains("{")
-    out = d.select(
-        "doc_id",
-        F.size("lines").cast("long").alias("n_lines"),
-        F.size("kept").cast("long").alias("n_kept_lines"),
-        F.expr("aggregate(kept, 0L, (a, l) -> a + size(split(l, ' ')))")
-        .alias("retained_words"),
-        n_sentences.alias("n_sentences"),
-        has_lorem.alias("has_lorem"),
-        has_brace.alias("has_brace"),
-    )
-    return out.withColumn(
-        "keep_doc",
-        ~F.col("has_lorem") & ~F.col("has_brace") & (F.col("n_sentences") >= 3),
-    )
-
-
-# URL/domain curation (P52): the C4/CommonCrawl URL-pipeline stage —
-# canonicalize a document URL, extract its registrable domain, drop
-# blocklisted domains, and keep ONE document per canonical URL (crawls
-# re-fetch the same URL across snapshots; URL-level keep-first is the
-# cheapest dedup tier, applied before any content hashing).  URLs are
-# SYNTHESIZED deterministically from the corpus' (source, doc_id)
-# columns — http/https scheme, a www. prefix on one slice, a tracking
-# query string on another, and a re-fetch alias (doc_id mod collision)
-# so canonicalization and URL-dedup both have real work at every sf.
-# Scale shape: the blocklist is tiny (broadcast anti-join), domain
-# extraction is regexp on a linear scan, and keep-first is a hash agg
-# on the canonical-url key.  Output: one row per surviving canonical
-# URL with its keeper doc and re-fetch count.
-_URL_BLOCKLIST = "('src3.example.com','src7.example.com','src13.example.com')"
-
-
-def _q_url_dedup(spark, sf_dir):
-    d = _docs(spark, sf_dir).select("doc_id", "source")
-    # deterministic synthetic URL: scheme varies by parity, one slice
-    # gets a www. prefix, one a tracking query; doc_id div 7 aliases
-    # several docs onto one path (the re-fetch)
-    url = F.concat(
-        F.when(F.col("doc_id") % 2 == 0, F.lit("https://")).otherwise(
-            F.lit("http://")
-        ),
-        F.when(F.col("doc_id") % 5 == 1, F.lit("www.")).otherwise(F.lit("")),
-        F.col("source"), F.lit(".example.com/p/"),
-        (F.col("doc_id") % 7).cast("string"),
-        F.when(
-            F.col("doc_id") % 3 == 2, F.lit("?utm_source=feed")
-        ).otherwise(F.lit("")),
-    )
-    d = d.select("doc_id", "source", url.alias("url"))
-    # canonicalization: strip scheme, www., and the query string
-    canon = F.regexp_replace(
-        F.regexp_replace(F.col("url"), r"^https?://(www\.)?", ""),
-        r"\?.*$", "",
-    )
-    host = F.regexp_extract(canon, r"^([^/]+)", 1)
-    d = d.select("doc_id", "url", canon.alias("canon_url"), host.alias("domain"))
-    block = spark.createDataFrame(
-        [(h.strip("'"),) for h in _URL_BLOCKLIST.strip("()").split(",")],
-        "domain string",
-    )
-    kept = d.join(F.broadcast(block), "domain", "left_anti")
-    return (
-        kept.groupBy("canon_url", "domain")
-        .agg(
-            F.min("doc_id").alias("keep_id"),
-            F.count(F.lit(1)).cast("long").alias("n_fetches"),
-            F.sum("doc_id").cast("long").alias("fetch_id_sum"),
-        )
-    )
-
-
-# Gopher quality rules (P47): the MassiveText repetition-free heuristic
-# filter set (Rae et al. 2021, arXiv:2112.11446 Appendix A) — word-count
-# bounds, mean-word-length bounds, symbol-to-word ratio, bullet-line and
-# ellipsis-line fractions, alphabetic-word fraction, and the required-
-# stopword presence test.  Every predicate is INTEGER arithmetic
-# (symbols*10 < words encodes ratio < 0.1) so no division can diverge
-# between engines.  Failure cases are PLANTED on deterministic doc
-# slices (a 3-bullet tail that stays under the 90% line rule, a
-# MOSTLY-bullet slice that trips it, ellipsis lines, a '#' run) because
-# the synthetic corpus is single-line prose that would otherwise pass
-# everything.  The required-stopword set is CORPUS-ADAPTED: Gopher's
-# English function-word set ('be','that','have',...) does not occur in
-# this synthetic database-jargon corpus and would fail 92% of docs —
-# the rule's intent is "prose contains the corpus' common function
-# words", so the set is the corpus' own highest-document-frequency
-# words plus its two real function words.  Scale shape: one linear
-# scan, pure JVM codegen expressions, no UDF, no shuffle before the
-# (tiny) output projection.
-_GOPHER_STOPS = "('the','a','data','table','query','row','value','column')"
-
-
-def _q_gopher_rules(spark, sf_dir):
-    d = _docs(spark, sf_dir)
-    page = F.concat(
-        F.col("text"),
-        F.when(
-            F.col("doc_id") % 11 == 2,
-            F.lit("\n* item one\n* item two\n* item three"),
-        ).otherwise(F.lit("")),
-        F.when(
-            F.col("doc_id") % 13 == 4,
-            F.lit("\nto be continued...\nand more..."),
-        ).otherwise(F.lit("")),
-        F.when(
-            F.col("doc_id") % 17 == 6,
-            F.concat(F.lit(" "), F.lit("#" * 40)),
-        ).otherwise(F.lit("")),
-        F.when(
-            F.col("doc_id") % 23 == 9,
-            F.lit("".join(f"\n* bullet {i}" for i in range(10))),
-        ).otherwise(F.lit("")),
-    )
-    d = gopher_features(
-        d.select("doc_id", page.alias("page")), "doc_id", stops=_GOPHER_STOPS
-    )
-    return d.select(
-        "doc_id", "n_words", "tot_chars", "n_symbols",
-        "bullet_lines", "ellipsis_lines",
-        *gopher_passes(50, pass_stopwords=F.col("n_req_stops") >= 2),
-    )
-
-
-# Fixed-stride chunking (P48): the pretraining/RAG shard-prep op that
-# slices every document into overlapping fixed-size word windows
-# (64-word chunks, 48-word stride).  Emits narrow rows — chunk index,
-# word offsets, and a 16-hex md5 fingerprint of the chunk text instead
-# of the text itself (the downstream shard writer or chunk-level dedup
-# joins on the fingerprint; shipping raw chunk text would multiply the
-# shuffle payload by the overlap factor).  ONE linear scan, one explode,
-# no shuffle; empty docs produce no chunks by definition.
-_CHUNK_SIZE = 64
-_CHUNK_STRIDE = 48
-
-
-def _q_chunk_windows(spark, sf_dir):
-    d = _docs(spark, sf_dir)
-    w = d.select("doc_id", lower_words("text").alias("ws"))
-    starts = F.expr(
-        f"sequence(1, greatest(size(ws), 1), {_CHUNK_STRIDE})"
-    )
-    chunks = (
-        w.select("doc_id", F.size("ws").alias("n_words"),
-                 "ws", F.posexplode(starts).alias("chunk_idx", "start_word"))
-        .filter(F.col("start_word") <= F.col("n_words"))
-    )
-    piece = F.expr(f"slice(ws, start_word, {_CHUNK_SIZE})")
-    return chunks.select(
-        "doc_id",
-        F.col("chunk_idx").cast("long").alias("chunk_idx"),
-        F.col("start_word").cast("long").alias("start_word"),
-        F.size(piece).cast("long").alias("n_chunk_words"),
-        F.substring(F.md5(F.concat_ws(" ", piece)), 1, 16).alias("chunk_md5"),
-    )
-
-
-# Sequence packing (P49): concat-and-chop packing of documents into
-# fixed token-budget bins (the standard pretraining batch-prep step —
-# documents are concatenated in a deterministic order and chopped every
-# B tokens, so a document can SPAN adjacent bins).  A single global
-# concatenation order would serialize at 100 TB, so packing runs per
-# (lang, shard) with shard = doc_id % 32 — embarrassingly parallel, and
-# the cumulative-offset window is one exchange on the (lang, shard) key.
-# Output per doc: its word-offset interval within the shard stream and
-# the first/last bin it lands in — all integer, any parallelism.
-_PACK_BIN = 256
-_PACK_SHARDS = 32
-
-
-def _q_pack_sequences(spark, sf_dir):
-    d = _docs(spark, sf_dir)
-    n_words = F.size(lower_words("text")).cast("long")
-    w = d.select(
-        "doc_id", "lang",
-        (F.col("doc_id") % _PACK_SHARDS).cast("long").alias("shard"),
-        n_words.alias("n_words"),
-    )
-    win = (
-        Window.partitionBy("lang", "shard")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w = w.withColumn("cum", F.sum("n_words").over(win))
-    start = F.col("cum") - F.col("n_words")
-    return w.select(
-        "doc_id", "lang", "shard", "n_words",
-        start.alias("start_off"),
-        F.expr(f"(cum - n_words) div {_PACK_BIN}").alias("bin_first"),
-        F.when(F.col("n_words") > 0, F.expr(f"(cum - 1) div {_PACK_BIN}"))
-        .otherwise(F.expr(f"(cum - n_words) div {_PACK_BIN}"))
-        .alias("bin_last"),
-    )
-
-
-# Benchmark decontamination (P36): the GPT-3-style eval-overlap scrub a
-# training pipeline runs before any model sees the corpus — documents
-# sharing any 13-gram with a held-out benchmark set are flagged.  The
-# "benchmark" is a deterministic doc slice (doc_id % 97 == 0) and
-# contamination is PLANTED by appending a benchmark doc's first-13-word
-# snippet to corpus docs on a second deterministic slice (doc_id % 13
-# == 5, snippet keyed by doc_id % 5), so non-trivial hits exist at
-# every sf and both engines build identical inputs.  Scale shape:
-# benchmark suites are TINY (MMLU-sized) next to a 100 TB corpus, so
-# the distinct benchmark-gram table broadcasts; the corpus side is one
-# linear scan emitting 16-hex md5 gram fingerprints (fixed-width join
-# keys, ~10x less shuffle/broadcast payload than raw 13-word strings)
-# probed map-side — no shuffle of corpus grams at all; explode_outer
-# keeps sub-13-word docs in the report with n_grams = 0.
-_DECON_BENCH_MOD = 97
-_DECON_PLANT_MOD = 13
-_DECON_PLANT_RES = 5
-
-
-def _q_decontaminate(spark, sf_dir):
-    d = _docs_wide(spark, sf_dir)
-    w = d.select("doc_id", letter_words().alias("ws"))
-    bench = w.filter(F.col("doc_id") % _DECON_BENCH_MOD == 0)
-    bench_grams = (
-        bench.select(F.explode(gram_fingerprints("ws", _DECON_GRAM)).alias("gh"))
-        .distinct()
-        .withColumn("hit", F.lit(1))
-    )
-    snip = bench.select(
-        F.floor(F.col("doc_id") / _DECON_BENCH_MOD).cast("long").alias("bk"),
-        F.slice("ws", 1, _DECON_GRAM).alias("snip"),
-    )
-    corpus = (
-        w.filter(F.col("doc_id") % _DECON_BENCH_MOD != 0)
-        .withColumn(
-            "bk",
-            F.when(
-                F.col("doc_id") % _DECON_PLANT_MOD == _DECON_PLANT_RES,
-                F.col("doc_id") % _DECON_PLANT_RES,
-            ),
-        )
-        .join(F.broadcast(snip), "bk", "left")
-        .select(
-            "doc_id",
-            F.when(
-                F.col("snip").isNotNull(), F.concat("ws", "snip")
-            ).otherwise(F.col("ws")).alias("ws"),
-        )
-    )
-    return (
-        corpus.select(
-            "doc_id",
-            F.explode_outer(gram_fingerprints("ws", _DECON_GRAM)).alias("gh"),
-        )
-        .join(F.broadcast(bench_grams), "gh", "left")
-        .groupBy("doc_id")
-        .agg(
-            F.count("gh").cast("long").alias("n_grams"),
-            F.count("hit").cast("long").alias("n_hits"),
-            (F.count("hit") > 0).alias("contaminated"),
-        )
-    )
-
-
-# Exact dedup: hash-groupBy on md5(text); keeper = min(doc_id).
-def _q_dedup_exact(spark, sf_dir):
-    d = _docs(spark, sf_dir)
-    return (
-        d.groupBy(F.md5(F.col("text")).alias("text_md5"))
-        .agg(
-            F.min("doc_id").alias("keep_id"),
-            F.count(F.lit(1)).cast("long").alias("n_dups"),
-        )
-    )
-
-
-def _jaccard_pairs(pairs: DataFrame) -> DataFrame:
-    """(doc_a, doc_b, jaccard_fp) for the pairs whose exact fixed-point
-    Jaccard, shared / (n_a + n_b - shared), is at least 0.5."""
-    jac = F.floor(
-        F.col("shared") * F.lit(1000000.0)
-        / (F.col("n_a") + F.col("n_b") - F.col("shared"))
-    )
-    return pairs.select(
-        "doc_a", "doc_b", jac.cast("long").alias("jaccard_fp")
-    ).filter(F.col("jaccard_fp") >= 500000)
-
-
-# n-gram Jaccard near-dup: word 3-gram shingles; planted duplicates
-# (docs with doc_id < 25 re-emitted under doc_id + 1000000 with the first
-# 3 words dropped) guarantee non-trivial pairs at every sf.
-#
-# ORACLE-BASELINE-ONLY: this is the exact all-pairs formulation, kept to
-# validate q_minhash_lsh (the scale path).  Its shingle self-join is
-# quadratic in colliding docs — never run it at production scale.
-def _q_ngram_jaccard(spark, sf_dir):
-    # join on a 64-bit shingle hash, not the shingle string: ~10x less
-    # shuffle payload and long-key hash join.  xxhash64 collisions across
-    # ~N*100 distinct shingles are negligible (<<1e-9 at any tested sf)
-    # and would only perturb one pair's `shared` count by 1.
-    s = _shingle_fps(_docs_with_planted_dups(spark, sf_dir), F.xxhash64)
-    n = s.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a = s.alias("a")
-    b = s.alias("b")
-    pairs = (
-        a.join(b, (F.col("a.fp") == F.col("b.fp")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).cast("double").alias("shared"))
-    )
-    na = n.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
-    nb = n.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
-    return _jaccard_pairs(pairs.join(na, "doc_a").join(nb, "doc_b"))
-
-
-# Prefix-filtering EXACT Jaccard join (the published scale path for
-# exact set-similarity joins): core in ocr_spark/operators/setsim.py —
-# rarest-first prefixes exclude hot stopword shingles from the candidate
-# equi-join, then exact array-intersect verification.  LOSSLESS: the
-# result set equals q_ngram_jaccard's exactly (same oracle), unlike the
-# probabilistic MinHash/SimHash paths.  tools/skew_stress.py drives the
-# adversarial all-docs-share-a-stopword-core corpus through the same
-# operator and pins near-linearity.
-def _q_jaccard_prefix_join(spark, sf_dir):
-    from ocr_spark.operators.setsim import prefix_jaccard_pairs
-
-    return prefix_jaccard_pairs(
-        _docs_with_planted_dups(spark, sf_dir), tau=0.5
-    )
-
-
-# MinHash + LSH near-dup (the scale path for q_ngram_jaccard): K=8 affine
-# min-hashes over shingle fingerprints, banded 4x2; docs sharing any band
-# become candidates; candidates are verified with EXACT Jaccard >= 0.5.
-# At 100 TB this replaces the all-pairs shingle join with a band-bucket
-# equi-join whose cost is ~linear in corpus size; both engines run the
-# identical deterministic banding, so results match by construction.
-def _q_minhash_lsh(spark, sf_dir):
-    # The shingle table is MATERIALIZED once (localCheckpoint — the
-    # sandbox stand-in for writing the signature/shingle table to
-    # storage, which is what a production dedup pipeline does): it is
-    # referenced by the signature aggregate AND both sides of the
-    # candidate-verify self-join, and Spark's exchange reuse does NOT
-    # fire across self-join aliases (measured: 12 corpus scans / 0
-    # ReusedExchange before this; 1 corpus scan after).  The shingle
-    # table is (doc_id, int64) — far smaller than the corpus text it
-    # derives from, so materializing is strictly cheaper than ONE
-    # rescan, let alone five.
-    s = _shingle_fps(
-        _docs_with_planted_dups(spark, sf_dir), shingle_fp
-    ).localCheckpoint(eager=False)
-    # all K min-hashes AND the per-doc shingle count in ONE aggregation
-    # over the raw shingle rows (no x8 explode): 8x less pre-shuffle data,
-    # map-side partial mins, and one fewer recompute of the shingle
-    # subtree (the count previously came from a separate groupBy)
-    sig = s.groupBy("doc_id").agg(
-        *[
-            F.min(minhash(k, F.col("fp"))).alias(f"mh{k}")
-            for k in range(8)
-        ],
-        F.count(F.lit(1)).alias("n_sh"),
-    ).localCheckpoint(eager=False)      # tiny; self-joined via bands
-    # n_sh RIDES THROUGH the band rows and the candidate join, so the
-    # exact-verify stage needs no join back to the signature table
-    # (which would re-run its aggregation twice — self-join aliases get
-    # no exchange reuse)
-    bands = sig.select(
-        "doc_id", "n_sh", F.explode(minhash_bands()).alias("b")
-    ).select("doc_id", "n_sh", "b.band", "b.mh0", "b.mh1")
-    ba = bands.alias("ba")
-    bb = bands.alias("bb")
-    cand = (
-        ba.join(
-            bb,
-            (F.col("ba.band") == F.col("bb.band"))
-            & (F.col("ba.mh0") == F.col("bb.mh0"))
-            & (F.col("ba.mh1") == F.col("bb.mh1"))
-            & (F.col("ba.doc_id") < F.col("bb.doc_id")),
-        )
-        .select(
-            F.col("ba.doc_id").alias("doc_a"),
-            F.col("bb.doc_id").alias("doc_b"),
-            F.col("ba.n_sh").alias("n_a"),
-            F.col("bb.n_sh").alias("n_b"),
-        )
-        .distinct()
-    )
-    sa = s.select(F.col("doc_id").alias("doc_a"), "fp")
-    sb = s.select(F.col("doc_id").alias("doc_b"), "fp")
-    shared = (
-        cand.join(sa, "doc_a")
-        .join(sb, ["doc_b", "fp"])
-        .groupBy("doc_a", "doc_b", "n_a", "n_b")
-        .agg(F.count(F.lit(1)).cast("double").alias("shared"))
-    )
-    return _jaccard_pairs(shared)
-
-
-# SimHash width: 60 feature bits (the full md5-prefix fingerprint) in a
-# 64-bit container.  Round 1 used 32 bits with 8-bit bands -> only 4x256
-# distinct band keys, so at 10^9 docs every band bucket held ~N/256 docs
-# and the band join went quadratic.  With 4x15-bit bands the key space
-# per band is 2^15 ~ 32k, and band-key cardinality tracks corpus
-# diversity instead of saturating.
-_SIMHASH_BITS = 60
-_SIMHASH_BAND_WIDTH = 15  # 4 bands x 15 bits = 60
-
-
-def _simhash_df(spark, sf_dir):
-    """(doc_id, simhash): 60-bit SimHash over full-width shingle
-    fingerprints — bit i is set iff more shingles have bit i set than
-    clear (2*count_set > n_shingles).  Shingle features (not words) keep
-    the fingerprints diverse under the small fixture vocabulary.
-
-    The 60 per-bit counters are PACKED 3-per-long into 21-bit fields, so
-    the aggregation computes 20 packed sums + 1 count instead of 60
-    sums (~2.5x faster; exact integer arithmetic, so the result — and
-    the DuckDB oracle, which keeps the unpacked formulation — is
-    unchanged).  Field-width bound: a document must have < 2^21 (~2M)
-    shingles; at wider documents, widen the field / add lanes.
-    """
-    s = _shingle_fps(_docs_with_planted_dups(spark, sf_dir), md5_long)
-    pack, field = 3, 21
-    n_lanes = _SIMHASH_BITS // pack
-    lanes = [
-        F.sum(
-            F.expr(
-                " + ".join(
-                    f"shiftleft(shiftright(fp, {pack * j + t}) & 1, {field * t})"
-                    for t in range(pack)
-                )
-            )
-        ).alias(f"l{j}")
-        for j in range(n_lanes)
-    ]
-    agg = s.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"), *lanes)
-
-    def cnt(b):
-        return F.expr(
-            f"shiftright(l{b // pack}, {field * (b % pack)}) & {(1 << field) - 1}"
-        )
-
-    simhash = sum(
-        F.when(cnt(b) * 2 > F.col("n_sh"), F.lit(1 << b)).otherwise(F.lit(0))
-        for b in range(_SIMHASH_BITS)
-    )
-    return agg.select("doc_id", simhash.cast("long").alias("simhash"))
-
-
-def _q_simhash(spark, sf_dir):
-    return _simhash_df(spark, sf_dir)
-
-
-# SimHash near-dup: hamming(simhash_a, simhash_b) <= 3.  Banding the 60
-# bits into 4x15-bit bands makes this EXACT at scale: 3 differing bits
-# cannot touch all 4 bands (pigeonhole), so every qualifying pair shares
-# at least one exact band and is found by the band equi-join.  15-bit
-# band keys (vs round 1's 8-bit bytes) keep band buckets small as the
-# corpus grows — the band-join stays ~linear instead of quadratic.
-def _q_simhash_neardup(spark, sf_dir):
-    # materialize the (doc_id, simhash) table once — the band self-join
-    # evaluates its subtree twice otherwise (no exchange reuse across
-    # self-join aliases), and the fingerprint computation is the
-    # expensive part.  Tiny table: 9 bytes/doc.
-    sim = _simhash_df(spark, sf_dir).localCheckpoint(eager=False)
-    banded = sim.select(
-        "doc_id",
-        "simhash",
-        F.explode(F.expr("sequence(0, 3)")).alias("j"),
-    ).withColumn(
-        "band_key",
-        F.expr(
-            f"(shiftright(simhash, {_SIMHASH_BAND_WIDTH} * j))"
-            f" & {(1 << _SIMHASH_BAND_WIDTH) - 1}"
-        ),
-    )
-    a = banded.alias("a")
-    b = banded.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.j") == F.col("b.j"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.simhash").alias("sim_a"),
-            F.col("b.simhash").alias("sim_b"),
-        )
-        .distinct()
-    )
-    ham = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
-    return (
-        pairs.withColumn("hamming", ham.cast("long"))
-        .filter(F.col("hamming") <= 3)
-        .select("doc_a", "doc_b", "hamming")
-    )
-
-
-# Dedup clustering: connected components over the MinHash near-dup pair
-# graph — the pipeline stage AFTER pair generation that picks one
-# canonical keeper per duplicate cluster (component_id = min doc_id in
-# the component).  Spark side: min-label propagation with POINTER
-# DOUBLING (ocr_spark/operators/graph.py) — rounds are O(log diameter),
-# so a pathological L-chain of templated documents costs ~log2(L)
-# shuffle rounds instead of L.  The driver-side work per round is ONE
-# metadata count (the convergence check), never data.
-# Oracle: DuckDB recursive CTE computing min reachable label (UNION set
-# semantics terminate it).  Non-SQL-expressible in one Spark query, yet
-# still fully hash-verified — the loop is deterministic.
-#
-# Caching contract: the converged labels MUST stay persisted (the loop
-# lineage references unpersisted intermediates; recomputing it from
-# scratch is exponential in rounds), so each invocation releases the
-# previous invocation's cache — at most ONE label set (tiny: one row per
-# doc in a dup pair) stays pinned per session, instead of one per bench
-# rep.  At production scale the loop writes each round to a table and
-# this is moot.
-_CLUSTER_LABEL_CACHE: list = []
-
-
-def _q_dedup_clusters(spark, sf_dir):
-    from ocr_spark.operators.graph import connected_components
-
-    for prev in _CLUSTER_LABEL_CACHE:
-        # best-effort release: if the SparkSession that created the
-        # cached labels has been stopped, unpersist raises — the cache
-        # entry is garbage either way, so never let it fail the query
-        try:
-            prev.unpersist()
-        except Exception:  # noqa: BLE001
-            pass
-    _CLUSTER_LABEL_CACHE.clear()
-    pairs = _q_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
-    labels, _rounds = connected_components(pairs, a="doc_a", b="doc_b")
-    _CLUSTER_LABEL_CACHE.append(labels)
-    return labels.select("doc_id", F.col("lab").alias("component_id"))
-
-
-# Quality-aware cluster keeper (P45): the FineWeb-style refinement of
-# min-id dedup — within each near-dup cluster (connected components
-# over the MinHash+LSH pair graph, same pipeline as q_dedup_clusters)
-# keep the HIGHEST-QUALITY member instead of the lowest id, so dedup
-# removes the boilerplate-heavy variants and keeps the best copy.
-# Quality is the q_quality_score formula (bounded length + stopword
-# ratio, fixed-pointed) recomputed over the planted corpus; ties break
-# to the lowest doc_id.  Scale shape: the component-label table is tiny
-# next to the corpus (only docs that collided in LSH), so it BROADCASTS
-# onto the quality scan — the keeper selection is one window over
-# component groups whose total size is the duplicate set, not the
-# corpus.
-def _q_cluster_keeper(spark, sf_dir):
-    from ocr_spark.operators.graph import connected_components
-
-    pairs = _q_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
-    labels, _rounds = connected_components(pairs, a="doc_a", b="doc_b")
-    lab = labels.select("doc_id", F.col("lab").alias("component_id"))
-    mem = _quality_fp(_docs_with_planted_dups(spark, sf_dir)).join(
-        F.broadcast(lab), "doc_id"
-    )
-    rk = F.row_number().over(
-        Window.partitionBy("component_id").orderBy(
-            F.col("quality_fp").desc(), F.col("doc_id").asc()
-        )
-    )
-    return (
-        mem.withColumn("rk", rk)
-        .groupBy("component_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_members"),
-            F.min(F.when(F.col("rk") == 1, F.col("doc_id"))).alias("keep_id"),
-            F.min(F.when(F.col("rk") == 1, F.col("quality_fp"))).alias(
-                "keep_quality_fp"
-            ),
-            F.coalesce(
-                F.sum(F.when(F.col("rk") > 1, F.col("doc_id"))), F.lit(0)
-            ).cast("long").alias("dropped_id_sum"),
-        )
-    )
-
-
-# Count-Min sketch of the corpus word-frequency distribution: 4 hash
-# rows x 256 columns, cell (r, c) = total occurrences of words whose
-# r-th hash lands in column c.  The sketch build is ONE explode + ONE
-# hash aggregate per row — the mergeable, fixed-size summary a streaming
-# or federated frequency estimator needs at 100 TB (estimate(word) =
-# min over rows of its 4 cells; overestimates only, never under).
-# Hashing is the cross-engine md5 fingerprint with per-row salts, so
-# both engines build the identical sketch (`cm_cells`, shared with the
-# streaming twin in ocr_spark/streaming/sketch.py).
-
-
-def _q_countmin_sketch(spark, sf_dir):
-    d = _docs_wide(spark, sf_dir)
-    # ONE pass over the words subtree: each word explodes into its
-    # _CM_ROWS (row_id, col_id) cells in place.  The previous 4-way
-    # unionByName re-ran the canonicalize-regex + explode once per sketch
-    # row (4x corpus scan at 100 TB — the branches differed only in the
-    # salt literal, so no exchange reuse applied).
-    return (
-        word_rows(d)
-        .select(F.explode(cm_cells(F.col("w"))).alias("c"))
-        .select("c.row_id", "c.col_id")
-        .groupBy("row_id", "col_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    )
-
-
-# Count-Min heavy hitters (P21b): the POINT-QUERY side of the sketch —
-# the piece that makes P21 useful.  est(w) = min over the 4 rows of the
-# cell the word hashes into (overestimate-only, the CM guarantee); a
-# word is a heavy hitter when est(w) >= phi*N (integer-compared as
-# est*1000 >= N*_CM_PHI_MILLE — no float threshold to diverge between
-# engines).  The words table is materialized ONCE (localCheckpoint) and
-# feeds the sketch build, the candidate vocabulary, AND the total-count
-# scalar; the 4x256-cell sketch and the 1-row total are BROADCAST
-# against the vocab-sized probe, so at 100 TB the cost is the one word
-# scan plus a vocab-sized aggregate — never a second corpus pass.
-# exact_cnt rides along to exhibit est_cnt >= exact_cnt row by row.
-_CM_PHI_MILLE = 5  # phi = 0.5% of all word occurrences
-
-
-def _q_cm_heavy_hitters(spark, sf_dir):
-    d = _docs_wide(spark, sf_dir)
-    words = word_rows(d).localCheckpoint(eager=False)
-    cells = cm_cells(F.col("w"))
-    sketch = (
-        words.select(F.explode(cells).alias("c"))
-        .select("c.row_id", "c.col_id")
-        .groupBy("row_id", "col_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    )
-    total = words.agg(F.count(F.lit(1)).cast("long").alias("total"))
-    cand = words.groupBy("w").agg(
-        F.count(F.lit(1)).cast("long").alias("exact_cnt")
-    )
-    probe = cand.select("w", "exact_cnt", F.explode(cells).alias("c")).select(
-        "w", "exact_cnt", "c.row_id", "c.col_id"
-    )
-    est = (
-        probe.join(F.broadcast(sketch), ["row_id", "col_id"])
-        .groupBy("w", "exact_cnt")
-        .agg(F.min("cnt").alias("est_cnt"))
-    )
-    return (
-        est.join(F.broadcast(total))
-        .filter(
-            F.col("est_cnt") * F.lit(1000)
-            >= F.col("total") * F.lit(_CM_PHI_MILLE)
-        )
-        .select(F.col("w").alias("word"), "est_cnt", "exact_cnt")
-    )
-
-
-# Bloom-filter membership (P28): the third mergeable sketch beside
-# Count-Min (frequency) and the histogram quantiles — a fixed-size bit
-# set answering "was this key in the corpus?" with no false negatives.
-# The key universe is per-document CONTENT HASHES (md5(text)) — the
-# production pre-filter in front of an exact-dedup join: a new batch
-# probes the filter and only bloom-positive documents pay the shuffle.
-# Build = one distinct-bit aggregate (65,536 bits regardless of corpus
-# size; per-partition filters OR together, which is what makes Bloom
-# the standard 100 TB pre-join / scan-pruning structure).  Probe = the
-# tiny bit table BROADCAST against a deterministic probe set: the
-# content hashes of every doc_id % 20 == 3 document (truth=1 by
-# construction — no false negatives possible) plus the same hashes
-# suffixed '~x', guaranteed absent (truth=0); their bloom_hit column
-# IS the false-positive set, which both engines must reproduce
-# bit-exactly.
-def _q_bloom_filter(spark, sf_dir):
-    d = _docs_wide(spark, sf_dir)
-    keys = d.select(
-        "doc_id", F.md5(F.col("text")).alias("key")
-    ).localCheckpoint(eager=False)      # build AND probe: one corpus scan
-    bits = _bloom_bits(keys, "bf", F.col("key"))
-    present = keys.filter(F.col("doc_id") % 20 == 3).select(
-        "doc_id",
-        F.col("key").alias("probe"),
-        F.lit(1).cast("long").alias("truth"),
-    )
-    absent = present.select(
-        "doc_id",
-        F.concat(F.col("probe"), F.lit("~x")).alias("probe"),
-        F.lit(0).cast("long").alias("truth"),
-    )
-    return _bloom_verdict(
-        present.unionByName(absent), ["doc_id", "truth"], "bf",
-        F.col("probe"), F.broadcast(bits), "bloom_hit",
-    )
-
-
-# HyperLogLog-shaped distinct sketch (P29): per-language register table
-# folded to a fixed-point estimate, next to the exact count for
-# contrast.  One distinct aggregate feeds 64 max-registers per group —
-# registers merge by MAX, so the sketch is partition- and
-# stream-mergeable like Count-Min/Bloom/quantile-histogram.  All
-# arithmetic is integer (rho via the bin() string length both engines
-# share; Z and the alpha*m^2/Z estimate in 2^30 fixed point), so the
-# estimate matches DuckDB bit-for-bit — no float libm divergence.  The
-# register builders and the fold are shared with the streaming twin
-# (ocr_spark/streaming/sketch.py).
-
-
-def _q_hll_distinct(spark, sf_dir):
-    d = _docs_wide(spark, sf_dir)
-    words = (
-        word_rows(d, "lang", min_len=4)
-        .distinct()
-        .localCheckpoint(eager=False)   # feeds sketch AND exact sides
-    )
-    exact = words.groupBy("lang").agg(
-        F.count(F.lit(1)).cast("long").alias("exact_distinct")
-    )
-    return (
-        hll_fold(hll_registers(words, "lang"), "lang")
-        .join(F.broadcast(exact), "lang")
-        .select(
-            "lang",
-            F.col("n_set").cast("long").alias("n_set"),
-            (F.lit(_HLL_M) - F.col("n_set")).cast("long").alias("v_zero"),
-            "z_fp",
-            "est_distinct",
-            "exact_distinct",
-        )
-    )
-
-
-# Document fingerprint: bottom-4 MinHash sketch (k smallest shingle
-# fingerprints — winnowing-style selection, rolling 3-gram hash base).
-def _q_doc_fingerprint(spark, sf_dir):
-    s = _shingle_fps(_docs_with_planted_dups(spark, sf_dir), shingle_fp)
-    w = Window.partitionBy("doc_id").orderBy(F.col("fp").asc())
-    return (
-        s.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 4)
-        .select("doc_id", F.col("rnk").cast("long").alias("rnk"), "fp")
-    )
-
-
-# Sign-LSH ANN (the scale path for q_embedding_topk): bucket on the sign
-# pattern of `bits` SEEDED random ±1 hyperplanes (round 2 used the first-
-# `bits` axis dims — a degenerate hash family whose recall tracked input
-# coordinate quirks), then exact top-3 cosine WITHIN the bucket.
-# Replaces the all-pairs cross join with a bucket equi-join; recall is
-# approximate (measured by tools/ann_recall.py; the multi-table variant
-# below is the recall path), but both engines run the identical
-# deterministic plan.  `bits` is derived from corpus size via _lsh_bits
-# (bits ~ log2(N/target)), so intra-bucket exact search stays ~target^2
-# per bucket instead of going quadratic in N; at production scale N
-# comes from table statistics (Iceberg snapshot row count) rather than a
-# count() job.
-def _q_embedding_ann_lsh(spark, sf_dir):
-    e = _tbl(spark, sf_dir, "embeddings")
-    n_bits = _lsh_bits(_emb_count(sf_dir))
-    dims = _emb_dims(sf_dir)
-    ed = _with_vfp(_ed_with_norm(e))
-    # long, NOT int: _lsh_bits can legally reach 62 bits (the whole point
-    # of the corpus-size rule), and an int32 bucket would overflow at
-    # n_bits >= 32 — exactly the 10^11+-vector sizes the rule targets
-    ed = ed.withColumn(
-        "bkt", _hp_bucket_expr("vfp", 0, n_bits, dims).cast("long")
-    )
-    q, nv = _pair_sides(ed, "bkt")
-    joined = q.join(nv, "bkt").filter(F.col("query_id") != F.col("neighbor_id"))
-    return _topk_by_cosine(joined, 3, "bkt")
-
-
-# Multi-table sign-LSH ANN (the RECALL path of the LSH family): the
-# standard OR-amplification construction — _LSH_TABLES independent
-# seeded hyperplane sets, each with a quarter of the single-table bucket
-# count (_lsh_mt_bits); a pair is a candidate if ANY table buckets it
-# together, candidates are deduplicated, and exact top-3 cosine runs
-# over the candidate set only.  Measured recall@3 = 0.90 on the sf0.01
-# corpus (tools/ann_recall.py, pinned >= 0.8 by tests/test_ann_recall.py)
-# vs 0.07 for one table — matching the IVF multi-probe bar with a pure
-# band-equi-join plan (no broadcast centroid table needed).  Plan shape:
-# one explode x16 -> band self-join -> distinct pairs -> two vector
-# joins -> window top-k; every join keys on (table, bucket) or vec_id,
-# so at 100 TB everything partitions cleanly and the candidate pair set
-# (~L * N / 2^bits per query) is the only superlinear knob — the
-# documented price of recall.
-def _q_embedding_ann_lsh_mt(spark, sf_dir):
-    n = _emb_count(sf_dir)
-    dims = _emb_dims(sf_dir)
-    b = _lsh_mt_bits(n)
-    e = _tbl(spark, sf_dir, "embeddings")
-    # ed: scanned by the bucket table AND both verify sides; banded:
-    # self-joined.  Each is materialized once — without the checkpoints
-    # the 16-table hyperplane bucket computation runs twice and the
-    # table is scanned four times (no exchange reuse across aliases).
-    ed = _ed_with_norm(e).localCheckpoint(eager=False)
-    vfp = _with_vfp(ed)
-    tb = F.array(*[
-        F.struct(
-            F.lit(t).cast("int").alias("t"),
-            _hp_bucket_expr("vfp", t, b, dims).cast("long").alias("bkt"),
-        )
-        for t in range(_LSH_TABLES)
-    ])
-    banded = vfp.select("vec_id", F.explode(tb).alias("tb")).select(
-        "vec_id", "tb.t", "tb.bkt"
-    ).localCheckpoint(eager=False)
-    ba = banded.alias("ba")
-    bb = banded.alias("bb")
-    cand = (
-        ba.join(
-            bb,
-            (F.col("ba.t") == F.col("bb.t"))
-            & (F.col("ba.bkt") == F.col("bb.bkt"))
-            & (F.col("ba.vec_id") != F.col("bb.vec_id")),
-        )
-        .select(
-            F.col("ba.vec_id").alias("query_id"),
-            F.col("bb.vec_id").alias("neighbor_id"),
-        )
-        .distinct()
-    )
-    return _ann_verify_topk(cand, ed)
-
-
-def _ann_verify_topk(cand: DataFrame, ed: DataFrame) -> DataFrame:
-    """Shared exact-verify tail of the LSH and multi-probe IVF candidate
-    generators: join the (query_id, neighbor_id) candidate pairs back to
-    the vectors, score exact fixed-point cosine, keep top-3 per query."""
-    q, nv = _pair_sides(ed)
-    return _topk_by_cosine(cand.join(q, "query_id").join(nv, "neighbor_id"), 3)
-
-
-# Multi-probe sign-LSH ANN (the CHEAPER recall path — see the
-# _LSH_MP_TABLES note for the measured comparison vs the 16-table OR
-# build).  Index side: each vector under its own bucket in each of 4
-# tables (4 index rows/vector — a quarter of the mt build's shuffle).
-# Probe side: each QUERY visits its own bucket plus the 3 buckets
-# reached by flipping its lowest-|margin| bits, margin = the exact
-# integer hyperplane dot both engines already compute for the bucket
-# sign.  The probe fan-out is query-side only, so the index stays small
-# and every join remains a (t, bucket) equi-join — at 100 TB the probe
-# explosion is 16 rows/query against a 4-rows/vector index, all
-# linear in N.
-def _q_embedding_ann_lsh_mp(spark, sf_dir):
-    n = _emb_count(sf_dir)
-    dims = _emb_dims(sf_dir)
-    b = _lsh_mt_bits(n)
-    n_flip = min(_LSH_MP_PROBES - 1, b)
-    e = _tbl(spark, sf_dir, "embeddings")
-    ed = _ed_with_norm(e).localCheckpoint(eager=False)
-    x = _with_vfp(ed)
-    powers = F.array(*[F.lit(1 << i).cast("long") for i in range(b)])
-    idx_seq = F.sequence(F.lit(0), F.lit(b - 1))
-    for t in range(_LSH_MP_TABLES):
-        # the dots once per vector per table: the common input of the
-        # own-bucket bits AND the multi-probe margins
-        x = x.withColumn(f"d{t}", F.array(*_hp_dots("vfp", t, b, dims)))
-        own = F.aggregate(
-            F.zip_with(
-                F.col(f"d{t}"), powers,
-                lambda d, p: F.when(d > 0, p).otherwise(F.lit(0).cast("long")),
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, v_: acc + v_,
-        )
-        x = x.withColumn(f"own{t}", own)
-        # margin order: structs sort by (|dot|, bit index) ascending in
-        # BOTH engines (lexicographic struct ordering)
-        mrg = F.array_sort(F.zip_with(
-            F.col(f"d{t}"), idx_seq,
-            lambda d, i: F.struct(
-                F.abs(d).alias("m"), i.cast("long").alias("i")
-            ),
-        ))
-        flips = F.transform(
-            F.slice(mrg, 1, n_flip),
-            lambda s: F.col(f"own{t}").bitwiseXOR(
-                F.element_at(powers, (s["i"] + 1).cast("int"))
-            ),
-        )
-        x = x.withColumn(
-            f"pb{t}", F.concat(F.array(F.col(f"own{t}")), flips)
-        )
-    # hyperplane dots/buckets computed ONCE (checkpoint), then the index
-    # and probe tables are cheap projections of that materialization
-    x = x.select(
-        "vec_id",
-        *[F.col(f"own{t}") for t in range(_LSH_MP_TABLES)],
-        *[F.col(f"pb{t}") for t in range(_LSH_MP_TABLES)],
-    ).localCheckpoint(eager=False)
-    index = x.select(
-        "vec_id",
-        F.explode(F.array(*[
-            F.struct(F.lit(t).cast("int").alias("t"),
-                     F.col(f"own{t}").alias("bkt"))
-            for t in range(_LSH_MP_TABLES)
-        ])).alias("tb"),
-    ).select(F.col("vec_id").alias("neighbor_id"), "tb.t", "tb.bkt")
-    # factory, NOT `lambda bk, t=t`: a two-parameter lambda makes
-    # F.transform pass the array INDEX as the second argument, silently
-    # overwriting the table id with the probe position
-    def _tag(t: int):
-        return F.transform(
-            F.col(f"pb{t}"),
-            lambda bk: F.struct(
-                F.lit(t).cast("int").alias("t"), bk.alias("bkt")
-            ),
-        )
-
-    probe = x.select(
-        "vec_id",
-        F.explode(F.concat(*[_tag(t) for t in range(_LSH_MP_TABLES)]))
-        .alias("tb"),
-    ).select(F.col("vec_id").alias("query_id"), "tb.t", "tb.bkt")
-    cand = (
-        probe.join(index, ["t", "bkt"])
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-        .distinct()
-    )
-    return _ann_verify_topk(cand, ed)
-
-
-# Brute-force cosine top-k over the embeddings table (baseline ANN path):
-# query set = vec_id < 20; k = 5; all math in float64 with a sequential
-# fold so both engines produce bit-identical sums; similarity is
-# fixed-pointed for ranking and output.
-#
-# ORACLE-BASELINE-ONLY: the crossJoin is the exact ground truth used to
-# validate q_embedding_ann_lsh / q_embedding_ann_ivf (the scale paths).
-# Never run it at production scale.
-def _q_embedding_topk(spark, sf_dir):
-    q, nv = _pair_sides(_ed_with_norm(_tbl(spark, sf_dir, "embeddings")))
-    joined = q.filter(F.col("query_id") < 20).crossJoin(nv).filter(
-        F.col("query_id") != F.col("neighbor_id")
-    )
-    return _topk_by_cosine(joined, 5)
-
-
-# Embedding-cosine near-dup: pairs with cosine >= 0.999, found through
-# corpus-size-driven sign-LSH buckets (same _lsh_bits rule as the ANN
-# query; a scaled copy keeps every sign, so true near-dups always share a
-# bucket — exact for the planted family at ANY bit width, linear cost).
-# Planted dups: vec_id < 10 re-emitted as vec_id + 1000000 scaled by 2
-# (cosine exactly 1 with the original).
-def _q_embedding_neardup(spark, sf_dir):
-    n_bits = _lsh_bits(_emb_count(sf_dir))
-    alle = _with_planted_twins(
-        _ed_vectors(_tbl(spark, sf_dir, "embeddings")), "vec_id", "v",
-        10, F.transform("v", lambda x: x * F.lit(2.0)),
-    ).withColumn("nrm", _l2_norm("v"))
-    bkt = sum(
-        F.when(F.element_at("v", i + 1) > 0, F.lit(1 << i)).otherwise(F.lit(0))
-        for i in range(n_bits)
-    )
-    # long, not int — see the bucket-width note in _q_embedding_ann_lsh.
-    # Materialized once: the bucket self-join would otherwise evaluate
-    # the norm+bucket subtree twice (no exchange reuse across aliases).
-    alle = alle.withColumn("bkt", bkt.cast("long")).localCheckpoint(eager=False)
-    q, nv = _pair_sides(alle, "bkt")
-    joined = q.join(nv, "bkt").filter(F.col("query_id") < F.col("neighbor_id"))
-    return joined.select(
-        F.col("query_id").alias("vec_a"), F.col("neighbor_id").alias("vec_b"),
-        _cosine_fp("qv", "v", "qn", "nrm").alias("sim_fp"),
-    ).filter(F.col("sim_fp") >= 999000)
-
-
-# IVF ANN (the second approximate-search family beside sign-LSH): a
-# deterministic coarse quantizer (the sampled k-means centroids of
-# _ivf_centroids), cells assigned by max fixed-point cosine with ties
-# to the lowest centroid id, then exact top-3 WITHIN the cell (nprobe=1).
-# The centroid table broadcasts; the intra-cell search is a cell
-# equi-join — at scale both sides partition by cell with no cross join.
-# `cells` follows the standard ~sqrt(N) IVF rule (_ivf_cells), so
-# intra-cell exact search stays ~N^1.5 total instead of N^2/const; at
-# production scale N comes from table statistics.
-def _ivf_ranked_plan(spark, sf_dir):
-    """Shared IVF coarse-quantizer assignment: every vector ranked
-    against the broadcast TRAINED centroid table (_ivf_centroids,
-    deterministic sampled k-means injected as literals) by fixed-point
-    cosine (ties to the lowest cell id).  rn == 1 is a vector's primary
-    cell; rn <= p are its p closest cells.  Both IVF queries and both
-    DuckDB oracles (_sql_ivf_ranked) build on this one definition, so
-    the quantizer rule lives in exactly two places (Spark + SQL).
-    Un-checkpointed plan — tests assert the broadcast-assignment shape
-    here; queries use _ivf_ranked below."""
-    e = _tbl(spark, sf_dir, "embeddings")
-    return _ivf_assign(spark, sf_dir, _ed_with_norm(e))
-
-
-def _ivf_assign(spark, sf_dir, ed: DataFrame) -> DataFrame:
-    """Quantizer assignment over ANY (vec_id, v, nrm) relation: every
-    vector ranked against the broadcast trained centroids.  Split out of
-    _ivf_ranked_plan so q_semdedup can assign its planted-twin corpus
-    with the same one quantizer definition."""
-    cents = spark.createDataFrame(
-        [(i, cv) for i, cv in enumerate(_ivf_centroids(sf_dir))],
-        "cid int, cv array<double>",
-    ).select("cid", "cv", _l2_norm("cv").alias("cn"))
-    w_assign = Window.partitionBy("vec_id").orderBy(
-        F.col("c_sim").desc(), F.col("cid").asc()
-    )
-    return (
-        ed.crossJoin(F.broadcast(cents))
-        .select("vec_id", "v", "nrm", "cid",
-                _cosine_fp("v", "cv", "nrm", "cn").alias("c_sim"))
-        .withColumn("rn", F.row_number().over(w_assign))
-    )
-
-
-def _ivf_ranked(spark, sf_dir):
-    """_ivf_ranked_plan materialized once per query (localCheckpoint):
-    both IVF queries filter it twice (probe side rn<=p, index side
-    rn<=i) and the quantizer assignment is the expensive subtree —
-    without the checkpoint each filter re-runs it (no exchange reuse
-    across the two references; measured 8.8 s -> 2.6 s for ivf_mp at
-    sf0.1)."""
-    return _ivf_ranked_plan(spark, sf_dir).localCheckpoint(eager=False)
-
-
-def _q_embedding_ann_ivf(spark, sf_dir):
-    assigned = (
-        _ivf_ranked(spark, sf_dir)
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "v", "nrm", F.col("cid").alias("cell"))
-    )
-    q, nv = _pair_sides(assigned, "cell")
-    joined = q.join(nv, "cell").filter(F.col("query_id") != F.col("neighbor_id"))
-    return _topk_by_cosine(joined, 3, "cell")
-
-
-# Multi-probe, multi-assignment IVF ANN: each query vector probes its
-# _IVF_NPROBE=6 closest cells, and each vector is INDEXED under its
-# _IVF_NINDEX=2 closest cells (the multi-assignment/"spilling" IVF
-# variant — double the index size buys back the recall a hard partition
-# loses at cell boundaries).  Candidate (query, neighbor) pairs are
-# deduplicated before exact scoring — a pair can meet in up to 2 cells,
-# and scoring duplicates would corrupt the row_number top-k.  Measured
-# recall@3 on the sandbox corpus with FAITHFUL index-side accounting
-# (tools/ann_recall.py): 0.213 single-probe -> 0.851 at probe=6/index=2
-# over the k-means quantizer, scanning ~half the corpus at sandbox N
-# (the ratio shrinks as cells scale with √N).  Plan shape: probe side
-# fans x6, index side x2, same cell equi-join -> distinct -> two vector
-# joins -> window top-k; everything partitions by cell or vec_id.
-def _q_embedding_ann_ivf_mp(spark, sf_dir):
-    ranked = _ivf_ranked(spark, sf_dir)
-    probes = ranked.filter(F.col("rn") <= _IVF_NPROBE).select(
-        F.col("vec_id").alias("query_id"), F.col("cid").alias("cell")
-    )
-    index = ranked.filter(F.col("rn") <= _IVF_NINDEX).select(
-        F.col("vec_id").alias("neighbor_id"), F.col("cid").alias("cell")
-    )
-    cand = (
-        probes.join(index, "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-        .distinct()
-    )
-    # materialized once: the verify stage attaches vectors to BOTH pair
-    # sides (q/nv below) — without the checkpoint that is two more
-    # table scans + norm recomputations
-    ed = _ed_with_norm(_tbl(spark, sf_dir, "embeddings")).localCheckpoint(
-        eager=False
-    )
-    return _ann_verify_topk(cand, ed)
-
-
-# Embedding cluster profile (P35): the cluster-balance diagnostic a
-# semantic-dedup / curriculum pipeline reads before trusting an IVF or
-# SemDeDup partition — per-cell population, id range, and the summed
-# fixed-point cosine of members to their own centroid (tight cells sum
-# high; a junk cell catching unrelated vectors sums low).  Reuses the
-# ONE trained-quantizer definition (_ivf_ranked / _sql_ivf_ranked);
-# rn == 1 rows fold into per-cell aggregates — a hash agg on the cell
-# key, output rows = cells ~ sqrt(N), trivially linear at 100 TB.  Sums
-# stay integer (c_sim is already fixed-point) so engines cannot drift.
-def _q_cluster_profile(spark, sf_dir):
-    return (
-        _ivf_ranked(spark, sf_dir)
-        .filter(F.col("rn") == 1)
-        .groupBy(F.col("cid").cast("long").alias("cell"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_vecs"),
-            F.min("vec_id").alias("min_vec"),
-            F.max("vec_id").alias("max_vec"),
-            F.sum("c_sim").cast("long").alias("sum_sim"),
-        )
-    )
-
-
-# SemDeDup (P44): semantic deduplication inside trained k-means cells —
-# the published embedding-dedup scale path (Abbas et al. 2023,
-# arXiv:2303.09540).  Pairwise cosine is computed only WITHIN a cell
-# (√N cells -> ~N^1.5 total pair work instead of N^2), members are
-# ordered by similarity to their own centroid ASCENDING (the paper
-# keeps the example farthest from the centroid in each duplicate
-# group), and a vector is dropped iff some earlier-ordered cell-mate is
-# within the cosine threshold — the upper-triangle one-pass rule of the
-# reference implementation, no iteration.  Semantic duplicates are
-# PLANTED (vec_id < 20 re-emitted as vec_id + 1000000 with dimension 1
-# zeroed — same direction up to one axis, cosine ~0.99) so non-trivial
-# drops exist at every sf; the corpus' organic within-cell cosines top
-# out near 0.6 (measured), so the 0.9 threshold separates cleanly.
-# Reuses the ONE trained-quantizer definition (_ivf_assign /
-# _sql_ivf_ranked) — a twin lands in its original's cell unless the
-# zeroed axis flips the assignment, which is the documented IVF
-# partition-miss SemDeDup inherits.  Scale shape: broadcast centroids,
-# cell equi-join for pairs, everything else linear.
-_SEMDEDUP_TAU = 900000   # fixed-point cosine drop threshold (0.90)
-_SEMDEDUP_PLANT = 20     # vec_id < PLANT gets a planted near-twin
-
-
-def _q_semdedup(spark, sf_dir):
-    alle = _with_planted_twins(
-        _ed_vectors(_tbl(spark, sf_dir, "embeddings")), "vec_id", "v",
-        _SEMDEDUP_PLANT,
-        F.transform("v", lambda x, i: F.when(i == 0, F.lit(0.0)).otherwise(x)),
-    ).withColumn("nrm", _l2_norm("v"))
-    # materialized once: referenced by both sides of the within-cell
-    # pair join AND the final left join (no exchange reuse across
-    # self-join aliases)
-    ranked = (
-        _ivf_assign(spark, sf_dir, alle)
-        .filter(F.col("rn") == 1)
-        .withColumn(
-            "ord",
-            F.row_number().over(
-                Window.partitionBy("cid").orderBy(
-                    F.col("c_sim").asc(), F.col("vec_id").asc()
-                )
-            ),
-        )
-        .select("vec_id", "v", "nrm", "cid", "c_sim", "ord")
-        .localCheckpoint(eager=False)
-    )
-    a = ranked.select(
-        "cid", F.col("ord").alias("ord_a"),
-        F.col("v").alias("va"), F.col("nrm").alias("na"),
-    )
-    b = ranked.select(
-        "cid", "vec_id", F.col("ord").alias("ord_b"),
-        F.col("v").alias("vb"), F.col("nrm").alias("nb"),
-    )
-    drops = (
-        a.join(b, "cid")
-        .filter(F.col("ord_a") < F.col("ord_b"))
-        .filter(_cosine_fp("va", "vb", "na", "nb") >= _SEMDEDUP_TAU)
-        .select("vec_id")
-        .distinct()
-        .withColumn("_d", F.lit(1))
-    )
-    return (
-        ranked.join(drops, "vec_id", "left")
-        .select(
-            "vec_id",
-            F.col("cid").cast("long").alias("cell"),
-            "c_sim",
-            F.col("_d").isNotNull().alias("dropped"),
-        )
-    )
-
-
-# TPC-H Q1 shape over the lineitem fact table: pushdown-friendly date
-# filter + hash aggregate.  Every measure is fixed-pointed PER ROW before
-# summation, so the aggregate is pure integer arithmetic — deterministic
-# under any partitioning (summing raw doubles is ordering-dependent at
-# the ulp and can flip a floor() at the boundary).
-def _q_lineitem_pricing(spark, sf_dir):
-    li = _tbl(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") <= F.lit("1998-09-02").cast("date")
-    )
-    disc_price = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-    return li.groupBy("l_returnflag", "l_linestatus").agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.sum(F.floor(F.col("l_quantity") * F.lit(100.0))).cast("long").alias("sum_qty_fp"),
-        F.sum(F.floor(F.col("l_extendedprice") * F.lit(100.0))).cast("long").alias("sum_base_fp"),
-        F.sum(F.floor(disc_price * F.lit(100.0))).cast("long").alias("sum_disc_fp"),
-    )
-
-
-# TPC-H Q5 shape: 6-table join (lineitem-orders-customer-supplier-nation-
-# region) with the local-supplier predicate, revenue per (region, nation).
-# Plan story: nation/region carry explicit broadcast hints (fixed 25/5
-# rows at ANY sf); customer/supplier scale with sf, so Catalyst decides
-# via autoBroadcastJoinThreshold (a forced hint would build an unbounded
-# broadcast table at large sf); the two fact tables shuffle-join on
-# orderkey, and AQE reorders/skew-splits at runtime.
-def _q_regional_revenue(spark, sf_dir):
-    li = _tbl(spark, sf_dir, "lineitem")
-    o = _tbl(spark, sf_dir, "orders")
-    c = _tbl(spark, sf_dir, "customer")
-    s = _tbl(spark, sf_dir, "supplier")
-    n = _tbl(spark, sf_dir, "nation")
-    r = _tbl(spark, sf_dir, "region")
-    rev = F.floor(
-        F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")) * F.lit(100.0)
-    )
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(s, li.l_suppkey == s.s_suppkey)
-        .filter(F.col("c_nationkey") == F.col("s_nationkey"))
-        .join(F.broadcast(n), F.col("c_nationkey") == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .groupBy("r_name", "n_name")
-        .agg(
-            F.sum(rev).cast("long").alias("revenue_fp"),
-            F.count(F.lit(1)).cast("long").alias("n_items"),
-        )
-    )
-
-
-# A5/A1 analogue: hash aggregate with multiple measures.
-def _q_agg_orders(spark, sf_dir):
-    o = _tbl(spark, sf_dir, "orders")
-    return o.groupBy("o_orderstatus").agg(
-        F.count(F.lit(1)).cast("long").alias("n_orders"),
-        F.floor(F.sum("o_totalprice") * F.lit(100.0)).cast("long").alias("sum_price_fp"),
-    )
-
-
-# Multi-level aggregation: ROLLUP over (status, priority) — subtotal and
-# grand-total rows carry NULL group keys identically in both engines.
-def _q_rollup_orders(spark, sf_dir):
-    o = _tbl(spark, sf_dir, "orders")
-    return o.rollup("o_orderstatus", "o_orderpriority").agg(
-        F.count(F.lit(1)).cast("long").alias("n_orders"),
-        F.floor(F.sum("o_totalprice") * F.lit(100.0)).cast("long").alias("sum_price_fp"),
-    )
-
-
-# Harness correctness join (SURVEY §2.7): broadcast equi-join.
-def _q_join_broadcast(spark, sf_dir):
-    o = _tbl(spark, sf_dir, "orders")
-    c = _tbl(spark, sf_dir, "customer")
-    return (
-        o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .groupBy("c_mktsegment")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_orders"),
-            F.floor(F.sum("o_totalprice") * F.lit(100.0)).cast("long").alias("sum_price_fp"),
-        )
-    )
-
-
-# Resume anti-join pattern (SURVEY §2.7): orders whose customer has a
-# negative balance are "completed"; the anti-join returns the pending set.
-def _q_anti_join(spark, sf_dir):
-    o = _tbl(spark, sf_dir, "orders")
-    c = _tbl(spark, sf_dir, "customer").filter(F.col("c_acctbal") < 0)
-    return (
-        o.join(F.broadcast(c), o.o_custkey == c.c_custkey, "left_anti")
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_pending"))
-    )
-
-
-# O5/top-k per group: window row_number (the reading-order primitive O6).
-def _q_topk_per_group(spark, sf_dir):
-    ev = _tbl(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("value").desc(), F.col("event_id").asc()
-    )
-    return (
-        ev.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 3)
-        .select(
-            "user_id",
-            "event_id",
-            F.floor(F.col("value") * F.lit(100.0)).cast("long").alias("value_fp"),
-            F.col("rnk").cast("long").alias("rnk"),
-        )
-    )
-
-
-# Time-bucketed aggregation (streaming-shaped batch op).
-def _q_events_hourly(spark, sf_dir):
-    ev = _tbl(spark, sf_dir, "events")
-    return (
-        ev.groupBy(
-            F.date_trunc("hour", F.col("ts")).alias("hour"),
-            F.col("event_type"),
-        )
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_events"),
-            F.floor(F.sum("value") * F.lit(100.0)).cast("long").alias("sum_value_fp"),
-        )
-    )
-
-
-# Sessionization: lag + cumulative sum of gap>30min flags (guide pattern).
-def _q_sessionize(spark, sf_dir):
-    ev = _tbl(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    # TIMESTAMP_NTZ has no direct long cast in Spark 4; hop through
-    # timestamp (identity under the pinned UTC session zone)
-    epoch = F.col("ts").cast("timestamp").cast("long")
-    gap = epoch - F.lag(epoch, 1).over(w)
-    new_sess = F.when(gap.isNull() | (gap > 1800), 1).otherwise(0)
-    sess = ev.withColumn("sess_id", F.sum(new_sess).over(
-        w.rowsBetween(Window.unboundedPreceding, 0)
-    ))
-    return (
-        sess.groupBy("user_id")
-        .agg(
-            F.max("sess_id").cast("long").alias("n_sessions"),
-            F.count(F.lit(1)).cast("long").alias("n_events"),
-        )
-    )
-
-
-# Conversion funnel view -> click -> purchase with a 1-hour step
-# window: per user, the first view, the first click within an hour
-# AFTER that view, the first purchase within an hour after that click.
-# Plan shape: ONE scan of events and ONE hash exchange on user_id —
-# the three sequencing stages are cascaded unbounded window minima over
-# the same partitioning (each stage's predicate references the previous
-# stage's window result), then the per-user aggregate reuses the window
-# partitioning with no further shuffle (pinned: the executed plan has
-# exactly 1 Exchange; the staged-join alternative measured 10).  At
-# 100 TB that is one pass over the event log instead of three
-# type-pruned scans plus three join shuffles.  Microsecond integer
-# arithmetic end-to-end — no float time math to diverge across engines.
-def _q_funnel(spark, sf_dir):
-    ev = _tbl(spark, sf_dir, "events")
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    hour = 3_600_000_000
-    w = Window.partitionBy("user_id")
-    x = ev.select("user_id", "event_type", us.alias("t"))
-    x = x.withColumn(
-        "t_view",
-        F.min(F.when(F.col("event_type") == "view", F.col("t"))).over(w),
-    )
-    x = x.withColumn(
-        "t_click",
-        F.min(F.when(
-            (F.col("event_type") == "click")
-            & (F.col("t") > F.col("t_view"))
-            & (F.col("t") <= F.col("t_view") + hour),
-            F.col("t"),
-        )).over(w),
-    )
-    x = x.withColumn(
-        "t_purchase",
-        F.min(F.when(
-            (F.col("event_type") == "purchase")
-            & (F.col("t") > F.col("t_click"))
-            & (F.col("t") <= F.col("t_click") + hour),
-            F.col("t"),
-        )).over(w),
-    )
-    return (
-        x.filter(F.col("t_view").isNotNull())
-        .groupBy("user_id")
-        .agg(
-            F.max(
-                F.lit(1)
-                + F.col("t_click").isNotNull().cast("int")
-                + F.col("t_purchase").isNotNull().cast("int")
-            ).cast("long").alias("stage"),
-            F.min("t_view").alias("t_view_us"),
-        )
-    )
-
-
-# Stratified hash sampling: rebalance a multilingual corpus by keeping
-# 5% of the dominant language and 20% of the tail languages, with the
-# same deterministic md5 gate as q_hash_sample (reproducible across
-# runs AND engines — no RNG state to drift).  sum(doc_id) over the kept
-# set makes the hash sensitive to exactly WHICH docs were kept, not
-# just how many.
-def _q_stratified_sample(spark, sf_dir):
-    d = _docs(spark, sf_dir)
-    bkt = md5_long(F.col("doc_id").cast("string")) % F.lit(100)
-    rate = F.when(F.col("lang") == "en", F.lit(5)).otherwise(F.lit(20))
-    kept = bkt < rate
-    return d.groupBy("lang").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.count(F.when(kept, 1)).cast("long").alias("n_sampled"),
-        F.coalesce(F.sum(F.when(kept, F.col("doc_id"))), F.lit(0))
-        .cast("long").alias("sampled_id_sum"),
-    )
-
-
-# Snapshot delta (CDC shape): classify every doc as added / deleted /
-# changed / unchanged between two dataset snapshots via one full outer
-# join on the key + content-hash comparison.  Snapshot B is derived
-# deterministically from A (doc_id % 7 == 0 deleted, % 5 == 0 edited,
-# % 11 == 0 re-keyed as a new doc) so both engines build identical
-# inputs.  At 100 TB this is the incremental-refresh primitive: one
-# co-partitioned join on the snapshot key, no driver state.
-def _q_snapshot_delta(spark, sf_dir):
-    d = _docs(spark, sf_dir).select("doc_id", "text")
-    a = d.select("doc_id", F.md5("text").alias("h_a"))
-    # snapshot B derives in ONE scan: each doc conditionally emits its
-    # surviving/edited row and its re-keyed "new doc" row via a single
-    # explode (the union-of-two-filters formulation scanned the table
-    # twice — at 100 TB that is a full extra corpus read)
-    edited_text = F.when(
-        F.col("doc_id") % 5 == 0, F.concat(F.col("text"), F.lit(" v2"))
-    ).otherwise(F.col("text"))
-    b_rows = F.array(
-        F.when(
-            F.col("doc_id") % 7 != 0,
-            F.struct(F.col("doc_id").alias("doc_id"),
-                     edited_text.alias("text")),
-        ),
-        F.when(
-            F.col("doc_id") % 11 == 0,
-            F.struct((F.col("doc_id") + 1_000_000).alias("doc_id"),
-                     F.col("text").alias("text")),
-        ),
-    )
-    b = (
-        d.select(F.explode(b_rows).alias("r"))
-        .filter(F.col("r").isNotNull())
-        .select(F.col("r.doc_id").alias("doc_id"),
-                F.md5("r.text").alias("h_b"))
-    )
-    j = a.join(b, "doc_id", "full_outer")
-    status = (
-        F.when(F.col("h_a").isNull(), F.lit("added"))
-        .when(F.col("h_b").isNull(), F.lit("deleted"))
-        .when(F.col("h_a") != F.col("h_b"), F.lit("changed"))
-        .otherwise(F.lit("unchanged"))
-    )
-    return j.select("doc_id", status.alias("status"))
-
-
-# Hypertable-style hierarchical time rollup: (day, type) -> (day) -> ()
-# in one pass (continuous-aggregate shape; NULL grouping keys mark the
-# coarser levels identically in both engines).
-def _q_events_rollup(spark, sf_dir):
-    ev = _tbl(spark, sf_dir, "events")
-    day = F.date_trunc("day", F.col("ts")).alias("day")
-    return ev.rollup(day, F.col("event_type")).agg(
-        F.count(F.lit(1)).cast("long").alias("n_events"),
-        F.floor(F.sum("value") * F.lit(100.0)).cast("long").alias("sum_value_fp"),
-    )
-
-
-# Semi-structured payload inspection: JSON field extraction (the tool
-# payloads of the transcripts data model; SURVEY §2.9 from_json row).
-def _q_json_extract(spark, sf_dir):
-    ev = _tbl(spark, sf_dir, "events")
-    k = F.get_json_object(F.col("props"), "$.k").cast("long")
-    return ev.groupBy("event_type").agg(
-        F.sum(k).cast("long").alias("sum_k"),
-        F.max(k).alias("max_k"),
-        F.count(F.when(k > 50, 1)).cast("long").alias("n_k_gt50"),
-    )
-
-
-# Exact median per group (quantile operator class), integer arithmetic
-# end-to-end: percentile()/quantile_cont interpolate in floats and can
-# diverge at the ulp across engines, so the median is constructed
-# manually — rank the fixed-point values, take the middle one (odd n) or
-# floor-average the middle two (even n).  One shuffle (the window),
-# deterministic tie order.
-def _q_median_value(spark, sf_dir):
-    ev = _tbl(spark, sf_dir, "events")
-    vfp = F.floor(F.col("value") * F.lit(100.0)).cast("long")
-    d = ev.select("event_type", "event_id", vfp.alias("vfp"))
-    w = Window.partitionBy("event_type").orderBy("vfp", "event_id")
-    ranked = d.select(
-        "event_type",
-        "vfp",
-        F.row_number().over(w).alias("rn"),
-        F.count(F.lit(1)).over(Window.partitionBy("event_type")).alias("n"),
-    )
-    mid = ranked.filter(
-        (F.col("rn") == F.expr("(n + 1) div 2"))
-        | (F.col("rn") == F.expr("(n + 2) div 2"))
-    )
-    return mid.groupBy("event_type").agg(
-        F.expr("sum(vfp) div count(*)").alias("median_fp"),
-        F.max("n").alias("n_events"),
-    )
-
-
-# Pivot-shaped conditional aggregation: per-day event counts spread into
-# one column per type (FILTER/CASE form — identical in both engines,
-# unlike the PIVOT keyword whose output schemas differ).
-def _q_pivot_events(spark, sf_dir):
-    ev = _tbl(spark, sf_dir, "events")
-    day = F.date_trunc("day", F.col("ts")).alias("day")
-    cnt = lambda t: F.count(F.when(F.col("event_type") == t, 1)).cast("long")
-    return ev.groupBy(day).agg(
-        cnt("click").alias("n_click"),
-        cnt("view").alias("n_view"),
-        cnt("purchase").alias("n_purchase"),
-        cnt("signup").alias("n_signup"),
-        cnt("error").alias("n_error"),
-    )
-
-
-# CUBE aggregation: all 4 grouping-set marginals of (event_type, weekday)
-# in one pass (completes the multi-level-aggregation family beside the
-# two ROLLUPs).  Spark plans this as one Expand + hash aggregate — no
-# driver work, marginals computed map-side.
-def _q_cube_events(spark, sf_dir):
-    ev = _tbl(spark, sf_dir, "events")
-    wd = F.dayofweek(F.col("ts")).cast("long").alias("weekday")
-    return ev.cube("event_type", wd).agg(
-        F.count(F.lit(1)).cast("long").alias("n_events"),
-        F.floor(F.sum("value") * F.lit(100.0)).cast("long").alias("sum_value_fp"),
-    )
-
-
-# Explicit GROUPING SETS: exactly the (event_type) and (weekday)
-# marginals, no finer/coarser levels — the native Spark 4 DataFrame
-# groupingSets API plans ONE Expand with exactly two projections (vs
-# CUBE's four), completing the multi-level-aggregation family beside
-# ROLLUP and CUBE.
-def _q_grouping_sets(spark, sf_dir):
-    ev = _tbl(spark, sf_dir, "events")
-    wd = F.dayofweek(F.col("ts")).cast("long").alias("weekday")
-    return ev.select("event_type", wd, "value").groupingSets(
-        [["event_type"], ["weekday"]], "event_type", F.col("weekday")
-    ).agg(
-        F.count(F.lit(1)).cast("long").alias("n_events"),
-        F.floor(F.sum("value") * F.lit(100.0)).cast("long").alias("sum_value_fp"),
-    )
-
-
-# Histogram-quantile sketch: per-group p50/p90/p99 from a fixed-point
-# value histogram — the SINGLE-PASS, MERGEABLE quantile path at 100 TB
-# (one hash aggregate builds the histogram; quantiles read off the
-# cumulative counts; histograms from different partitions/days merge by
-# cell addition, unlike the exact window median q_median_value, which
-# needs a full sort per group).  All arithmetic is integer: quantile q =
-# smallest bucket whose running count reaches ceil(q * N) — identical
-# rank rule in both engines, no float interpolation.
-def _q_quantile_sketch(spark, sf_dir):
-    ev = _tbl(spark, sf_dir, "events")
-    vfp = F.floor(F.col("value") * F.lit(100.0)).cast("long")
-    hist = ev.groupBy("event_type", vfp.alias("bucket")).agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("bucket")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    wn = Window.partitionBy("event_type")
-    cum = hist.select(
-        "event_type", "bucket", "cnt",
-        F.sum("cnt").over(w).alias("cum"),
-        F.sum("cnt").over(wn).alias("n"),
-    )
-    qs = [("p50", 50), ("p90", 90), ("p99", 99)]
-    # rank threshold ceil(q*n/100) in pure integers: (q*n + 99) div 100
-    picks = [
-        F.min(
-            F.when(
-                F.col("cum") >= F.expr(f"({pct} * n + 99) div 100"),
-                F.col("bucket"),
-            )
-        ).alias(name)
-        for name, pct in qs
-    ]
-    return cum.groupBy("event_type").agg(
-        F.max("n").cast("long").alias("n_events"), *picks
-    )
-
-
-# Grouped distinct aggregation (standard pipeline op the reference lacks;
-# exact COUNT(DISTINCT), so both engines hash-match — the approximate
-# HLL variant exists as approx_count_distinct but cannot be
-# oracle-compared across engines).  At scale Spark plans this as a
-# two-phase expand + partial aggregate; no driver-side work.
-def _q_distinct_counts(spark, sf_dir):
-    ev = _tbl(spark, sf_dir, "events")
-    return ev.groupBy("event_type").agg(
-        F.countDistinct("user_id").alias("n_users"),
-        F.count(F.lit(1)).cast("long").alias("n_events"),
-    )
-
-
-# Window-frame coverage beyond row_number/lag cumsum: lead/lag deltas and
-# a bounded rolling mean (rowsBetween -2..0) per user ordered by time —
-# the SQL-window twin of the extractor's in-UDF moving average (G3).
-def _q_window_frames(spark, sf_dir):
-    ev = _tbl(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    wf = w.rowsBetween(-2, 0)
-    value_fp = F.floor(F.col("value") * F.lit(100.0)).cast("long")
-    prev_fp = F.floor(F.lag("value", 1).over(w) * F.lit(100.0)).cast("long")
-    nxt_fp = F.floor(F.lead("value", 1).over(w) * F.lit(100.0)).cast("long")
-    # fixed-point BEFORE averaging: floor(avg) over already-floored
-    # values is engine-stable (pure int arithmetic over 3 values)
-    roll_fp = F.floor(
-        F.avg(F.floor(F.col("value") * F.lit(100.0))).over(wf)
-    ).cast("long")
-    return ev.select(
-        "user_id",
-        "event_id",
-        value_fp.alias("value_fp"),
-        prev_fp.alias("prev_fp"),
-        nxt_fp.alias("next_fp"),
-        roll_fp.alias("roll3_fp"),
-    )
-
-
-# As-of join — an operator Spark lacks natively, built Spark-first as the
-# canonical union + last(ignorenulls) window (one shuffle on the key, no
-# range cross-product): for each purchase event, the most recent view
-# event of the same user at or before it.  The DuckDB oracle uses the
-# native ASOF JOIN; (user_id, ts) pairs are collision-free in the data so
-# both formulations are deterministic.
-def _q_asof_join(spark, sf_dir):
-    ev = _tbl(spark, sf_dir, "events")
-    probe = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id",
-        "ts",
-        F.col("event_id").alias("a_event_id"),
-        F.lit(None).cast("struct<ts:timestamp_ntz,eid:bigint>").alias("b_pack"),
-        F.lit(1).alias("is_probe"),
-    )
-    build = ev.filter(F.col("event_type") == "view").select(
-        "user_id",
-        "ts",
-        F.lit(None).cast("long").alias("a_event_id"),
-        F.struct(
-            F.col("ts").alias("ts"), F.col("event_id").alias("eid")
-        ).alias("b_pack"),
-        F.lit(0).alias("is_probe"),
-    )
-    # build rows sort BEFORE probe rows at equal ts => b.ts <= a.ts
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "is_probe")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    u = probe.unionByName(build).withColumn(
-        "m", F.last("b_pack", ignorenulls=True).over(w)
-    )
-    return (
-        u.filter((F.col("is_probe") == 1) & F.col("m").isNotNull())
-        .select(
-            "a_event_id",
-            F.col("m.eid").alias("b_event_id"),
-            (
-                F.unix_micros(F.col("ts").cast("timestamp"))
-                - F.unix_micros(F.col("m.ts").cast("timestamp"))
-            ).alias("gap_us"),
-        )
-    )
-
-
-# Range join — banded-bucket implementation (the Spark-first shape that
-# avoids the naive cross product Catalyst would otherwise plan for a pure
-# inequality join): views within the hour before each purchase.  Probe
-# rows fan out to their own and the previous 1h time bucket, the join is
-# a plain equi-join on (user, bucket), and the exact range predicate
-# filters after.  An interval of width W spans at most 2 W-buckets, so
-# coverage is exact.
-def _q_range_join(spark, sf_dir):
-    ev = _tbl(spark, sf_dir, "events")
-    hour_us = 3_600_000_000
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    a = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select("user_id", F.col("event_id").alias("a_event_id"), us.alias("a_us"))
-        .withColumn("bkt", F.explode(F.array(
-            F.expr(f"a_us div {hour_us}"), F.expr(f"a_us div {hour_us} - 1")
-        )))
-    )
-    b = ev.filter(F.col("event_type") == "view").select(
-        "user_id", us.alias("b_us"),
-        F.expr(f"unix_micros(cast(ts as timestamp)) div {hour_us}").alias("bkt"),
-    )
-    return (
-        a.join(b, ["user_id", "bkt"])
-        .filter((F.col("b_us") <= F.col("a_us")) & (F.col("b_us") > F.col("a_us") - hour_us))
-        .groupBy("a_event_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_views_1h"))
-    )
-
-
-def _decode_query(tier: str) -> Callable[[SparkSession, str], DataFrame]:
-    """Driver query running one multimodal.DECODE_TIERS tier over the
-    documents' doc_ids (the fixture per doc is a closed form of doc_id,
-    so each tier's oracle recomputes its columns in SQL)."""
-
-    def query(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from ocr_spark.functions.multimodal import decode_tier
-
-        return decode_tier(_docs_wide(spark, sf_dir), tier)
-
-    return query
-
-
-# REAL image decode (P13 hardening): per doc, a deterministic 24-bit BMP
-# is synthesized (width/height/fill are closed forms of doc_id) and then
-# decoded by the pure-NumPy BMP decoder inside mapInPandas; the query
-# emits MEASURED geometry and pixel sums.  The DuckDB oracle computes the
-# same values from the closed forms — any header/stride/padding/channel
-# bug in the decoder breaks the hash match.
-_q_image_decode = _decode_query("bmp")
-
-
-# REAL compressed-codec decode (the round-2 "documented seam", now
-# filled for PNG): per doc, a deterministic 8-bit truecolor PNG with a
-# horizontal gradient and row filters cycling through all 5 PNG filter
-# types is synthesized, zlib-deflated, then decoded by the pure-NumPy
-# PNG decoder (stdlib inflate + unfiltering) inside mapInPandas.  The
-# DuckDB oracle computes the decoded geometry and pixel sum from the
-# closed forms — any chunk/inflate/unfilter bug breaks the hash match.
-_q_png_decode = _decode_query("png")
-
-
-# REAL GIF decode (P13 LZW tier): per doc a 64-color gradient frame is
-# LZW-ENCODED then DECODED inside mapInPandas by the pure-Python GIF89a
-# codec (ocr_spark/functions/gif.py — variable-width LSB-first codes,
-# clear-code dictionary resets on a third of the corpus, 4-pass
-# interlace on odd doc_ids).  GIF is lossless, so the DuckDB oracle
-# recomputes geometry, pixel sum, AND a position-weighted pixel sum
-# from the fixture's closed form via a bounded range join — the
-# weighted sum is row-order-sensitive, so a deinterlace or LZW-reset
-# bug cannot hash-match.  Reference parity: the reference accepts GIF
-# uploads through PIL (handwriting/api.py:20); this is that codec
-# surface rebuilt with zero codec libraries.
-_q_gif_decode = _decode_query("gif")
-
-
-# REAL TIFF decode (P13 tag-directory tier): per doc a channel-varying
-# gradient is TIFF-ENCODED (compression cycling uncompressed /
-# PackBits / TIFF-LZW — the MSB-first, EARLY-CHANGE LZW variant, NOT
-# GIF's — with horizontal-differencing predictor on an LZW slice, 4-row
-# strips forcing multi-strip assembly) then DECODED inside mapInPandas
-# by ocr_spark/functions/tiff.py.  Lossless, so the oracle recomputes
-# geometry + plain + position-weighted sums from the closed form via a
-# bounded range join; pos_sum is strip-order- and predictor-sensitive.
-_q_tiff_decode = _decode_query("tiff")
-
-
-# REAL baseline-JPEG decode (closing the verdict's last codec gap: the
-# reference's actual inputs are baseline JPEGs — handwriting/api.py:20
-# decodes test_image.jpg, an SOF0 4:4:4 stream, via PIL; here the same
-# stream class is decoded by the pure-NumPy codec in
-# ocr_spark/functions/jpeg.py with zero codec libraries).  Per doc, a
-# flat-8x8-tile grayscale JPEG is Huffman-ENCODED then DECODED inside
-# mapInPandas; flat tiles + all-ones quant tables make the lossy
-# pipeline exactly lossless (DC = 8*(v-128) integral, all AC zero), so
-# the DuckDB oracle verifies decoded geometry AND full pixel payload
-# from closed forms — any marker/Huffman/zigzag/IDCT bug breaks the
-# hash match.  Real-world interop (the reference image itself) is
-# pinned by tests/test_jpeg.py.
-_q_jpeg_decode = _decode_query("jpeg")
-
-
-# REAL PROGRESSIVE-JPEG decode (round 4 — closes the SOF2 seam, the
-# most common real-world JPEG class after baseline): per doc, a
-# checker-basis tiled image whose per-tile FDCT is exactly two integer
-# coefficients (DC + one mid-band AC) is encoded as a multi-scan SOF2
-# stream — spectral-selection AC bands plus DC/AC successive-
-# approximation refinement scans — then decoded inside mapInPandas.
-# The construction makes the progressive pipeline exactly lossless, so
-# the DuckDB oracle verifies geometry AND the full pixel payload from
-# closed forms; any scan-script/EOB-run/refinement bug breaks the hash.
-# Coefficient-exact round-trips incl. deep SA chains are pinned by
-# tests/test_jpeg.py.
-_q_jpeg_progressive = _decode_query("jpeg_progressive")
-
-
-# REAL audio decode (WAV/PCM16 — the one audio container parseable with
-# zero codec libraries): per doc, a deterministic integer PCM waveform
-# is RIFF-encoded then decoded by the pure-NumPy chunk-walking parser
-# inside mapInPandas; the oracle recomputes stream geometry and the
-# exact amplitude stats from the integer closed form via a range join.
-# Compressed audio (mp3/ogg/flac) stays the honest codec seam.
-_q_wav_decode = _decode_query("wav")
-
-
-# REAL G.711 mu-law/A-law decode (round 4 — narrows the compressed-
-# audio seam to perceptual codecs only): per doc, a mono telephony
-# stream whose every sample is an EXACT G.711 codeword is companded
-# (fmt 7 even docs / fmt 6 odd docs) then expanded through the
-# 256-entry ITU tables inside mapInPandas; the codeword construction
-# makes companding lossless, so the oracle recomputes the decoded
-# values from the closed segment/mantissa form — any LUT, sign, or
-# segment-search bug breaks the hash.  mp3/ogg stay the honest seam.
-_q_g711_decode = _decode_query("g711")
-
-
-# REAL IMA-ADPCM decode (round 4): per doc, a multi-block 4-bit
-# adaptive-DPCM stream whose deltas are exactly representable at
-# step-index 0 (so the sequential predictor tracks losslessly) is
-# block-encoded then decoded inside mapInPandas.  Every block carries
-# its own predictor/index header and is independently decodable — the
-# intra-payload parallel unit, like JPEG restart segments.  The oracle
-# recomputes each sample as base + running delta sum (a window over a
-# lateral range join) — any nibble-packing, header, or step-update bug
-# breaks the hash.
-_q_adpcm_decode = _decode_query("adpcm")
-
-
-# REAL mp3 (MPEG-1 Layer III) bitstream decode (round 5 — the verdict's
-# last high-frequency media ask): per doc a VBR mono stream with CRC-
-# protected side info (even docs), a REAL bit-reservoir layout
-# (main_data_begin back-references the decoder must reconstruct), and
-# silent long-block granules carrying closed-form fixed-width
-# scalefactors is framed by ocr_spark/functions/mp3.py then fully
-# walked/validated/decoded inside mapInPandas — through requantize,
-# alias reduction, IMDCT, overlap-add, and synthesis matrixing on the
-# exactly-zero spectrum (pcm_abs_q is computed from the decoded PCM,
-# and is exactly 0 only if the whole chain stays clean).  The oracle
-# recomputes frame geometry, bitrate/reservoir/scalefactor sums from
-# the fixture's integer closed forms.  Spectral Huffman tables and the
-# synthesis D-window are the documented seams (mp3.py docstring) —
-# unverifiable numeric spec tables are a worse lie than an honest
-# NotImplementedError.
-_q_mp3_decode = _decode_query("mp3")
-
-
-# REAL Ogg container decode (round 5 — the perceptual-audio seam is now
-# Vorbis/mp3 SPECTRAL TABLES only): per doc a Vorbis-framed ogg stream
-# with closed-form headers, opaque seam packets, and a small lacing cap
-# that forces genuine cross-page packet continuation is built by
-# ocr_spark/functions/ogg.py, then fully walked inside mapInPandas:
-# per-page RFC 3533 CRC-32 (direct 0x04c11db7 — not zlib's reflected
-# variant), page-sequence and continuation-flag handshakes, lacing
-# reassembly (255 runs + 0-lacing terminators), Vorbis ident + comment
-# header parse, byte-exact accounting of the reassembled seam packets.
-# The oracle recomputes page counts, spanning-packet counts, and the
-# audio byte sum from the fixture's integer closed forms — any CRC,
-# lacing, or continuation bug breaks the hash.  Scale note: ogg pages
-# are self-delimiting (capture + own CRC + own lacing table), so a
-# 100-TB ingest CAN split ogg payloads at page boundaries — the exact
-# mirror of mp3's bit-reservoir non-splittability documented in
-# q_mp3_decode; the pair pins both answers an ingest planner needs.
-_q_ogg_decode = _decode_query("ogg")
-
-
-# REAL video decode (MJPEG AVI — frames are baseline JPEGs inside a
-# RIFF container, so the pure-NumPy JPEG codec makes the video tier a
-# working decoder too): per doc, an F-frame flat-tile MJPEG AVI is
-# container-encoded then RIFF-walked and frame-decoded inside
-# mapInPandas; the oracle recomputes frame count, geometry, and the
-# total pixel sum over (tiles x frames) from closed forms.  Inter-coded
-# video (h264/vp9) stays the honest codec seam.
-_q_mjpeg_frames = _decode_query("avi")
-
-
-# PRODUCTION-contract decode over a mixed, partially-POISONED binary
-# corpus: formats cycle BMP/PNG/JPEG (half the JPEGs progressive SOF2,
-# decoding identically on flat tiles) and every doc_id % 10 == 7
-# payload is truncated mid-marker.  The operator (decode_binary_images) must
-# emit a status='error' row for every poisoned payload and exact
-# closed-form geometry for every healthy one — the oracle checks BOTH,
-# so a decoder that crashes the stage OR misclassifies a byte stream
-# breaks the hash.  This is the error-envelope contract a 1000-executor
-# ingestion job needs: one bad payload never fails a task.
-def _q_binary_decode_envelope(spark, sf_dir):
-    import pandas as pd
-
-    from ocr_spark.functions.multimodal import decode_binary_images, mixed_fixture
-
-    d = _docs_wide(spark, sf_dir).select("doc_id")
-
-    def gen(it):
-        for pdf in it:
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"].astype("int64"),
-                "payload": [mixed_fixture(int(x)) for x in pdf["doc_id"]],
-            })
-
-    withp = d.mapInPandas(gen, schema="doc_id bigint, payload binary")
-    return decode_binary_images(withp).select(
-        "doc_id", "status", "width", "height", "n_px", "px_sum"
-    )
-
-
-# Extraction UDF over HTML-wrapped documents.  Oracle: precomputed
-# expected parquet from the single-process kernel (tools/gen_expected.py)
-# — the driver's rows+schema+hash gates apply in full.
-# Streaming dedup drained batch-visibly (P18's driver-checkable replay,
-# VERDICT r4 ask #6): the SAME run_dedup_stream operator the streaming
-# tier ships (dropDuplicatesWithinWatermark keyed on md5(text), state
-# evicted past the watermark horizon) runs here in availableNow mode
-# over a corpus derived from documents with every payload duplicated
-# once, drains into parquet, and the final table is returned as a batch
-# frame.  WHICH copy of a duplicate group survives depends on arrival
-# order (nondeterministic across engines/runs), so the returned frame
-# projects only text-derived columns: one (text_key, n_out=1) row per
-# distinct payload — exactly-once semantics made hash-checkable.
-# Scale shape: state is bounded by (watermark horizon x arrival rate),
-# never stream length; the drain is one availableNow micro-batch here
-# but the operator is the production continuous path.
-def _q_stream_dedup_drain(spark, sf_dir):
-    import atexit
-    import shutil
-
-    from ocr_spark.streaming.extract_stream import run_dedup_stream
-
-    # Keyed by pid too: two processes draining the same corpus must not
-    # share (and rmtree) one stream checkpoint.  The returned frame reads
-    # the drained output lazily, so it is removed at exit, not here.
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    root = f"/tmp/ocr_spark_q_stream_drain_{tag}_{os.getpid()}"
-    shutil.rmtree(root, ignore_errors=True)
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
-    inp, outp, ckpt = f"{root}/in", f"{root}/out", f"{root}/ckpt"
-    base = _docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("conv_id"),
-        F.lit(0).cast("int").alias("turn_idx"),
-        F.lit("user").alias("role"),
-        "text",
-        F.lit("").alias("tool"),
-        F.lit("2024-01-01 00:00:00").cast("timestamp").alias("ts"),
-    )
-    dup = base.withColumn(
-        "conv_id", F.concat(F.lit("dup:"), F.col("conv_id"))
-    ).withColumn("turn_idx", F.lit(1).cast("int"))
-    base.unionByName(dup).repartition(4).write.mode("overwrite").parquet(inp)
-    q = run_dedup_stream(spark, inp, outp, ckpt, available_now=True)
-    q.awaitTermination()
-    out = spark.read.parquet(outp)
-    return (
-        out.select(F.md5("text").alias("text_key"))
-        .groupBy("text_key")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_out"))
-    )
-
-
-def _x_extract_documents(spark, sf_dir):
-    from ocr_spark.functions.text import extract_text
-
-    d = _docs_wide(spark, sf_dir)
-    html = F.concat(
-        F.lit('<nav><a href="/h">Home</a> <a href="/a">About</a></nav><p>'),
-        F.col("text"),
-        F.lit('</p><footer>Copyright <a href="/t">Terms</a></footer>'),
-    )
-    return d.select("doc_id", extract_text(html).alias("extracted_text"))
-
-
-# The full distributed pipeline over derived transcripts.  Oracle:
-# precomputed expected parquet from the single-process kernel
-# (tools/gen_expected.py); ints are surfaced as long on both sides so the
-# driver's schema gate compares identically-typed columns.
-def _x_extract_transcripts(spark, sf_dir):
-    from ocr_spark.plans.extract_job import plan_extract
-    from ocr_spark.sources.transcripts import derive_transcripts_from_documents
-
-    tr = derive_transcripts_from_documents(spark, sf_dir)
-    return plan_extract(tr, n_buckets=16).select(
-        "conv_id",
-        F.col("turn_idx").cast("long").alias("turn_idx"),
-        "extracted_text",
-        F.col("n_blocks_in").cast("long").alias("n_blocks_in"),
-        F.col("n_blocks_kept").cast("long").alias("n_blocks_kept"),
-        "status",
-    )
-
-
-# Conversation assembly (grouped-map surface): extraction pipeline ->
-# applyInPandas over conv_id stitching turn-ordered documents.  Oracle:
-# string_agg(ORDER BY turn_idx) over the precomputed expected extraction
-# table — SQL can't express the extraction, but it CAN express the
-# assembly on top of the expected table, so the whole chain hash-gates.
-def _x_conv_assembly(spark, sf_dir):
-    from ocr_spark.operators.assemble import assemble_conversations
-    from ocr_spark.plans.extract_job import plan_extract
-    from ocr_spark.sources.transcripts import derive_transcripts_from_documents
-
-    tr = derive_transcripts_from_documents(spark, sf_dir)
-    return assemble_conversations(plan_extract(tr, n_buckets=16))
-
-
-# Multimodal binary-column plumbing (payload = utf-8 bytes as media
-# stand-in; codec decode stubbed behind deterministic fake features, the
-# real-decode seam lives in q_image_decode / decode_media_real — see
-# ocr_spark/functions/multimodal.py).  Oracle: precomputed expected
-# parquet from the same pure _decode_batch kernel.
-def _x_multimodal_features(spark, sf_dir):
-    from ocr_spark.functions.multimodal import (
-        decode_media_features,
-        with_binary_payload,
-    )
-
-    d = _docs_wide(spark, sf_dir).select("doc_id", "text")
-    feats = decode_media_features(with_binary_payload(d))
-    return feats.select(
-        "doc_id",
-        "media_type",
-        F.col("n_bytes").cast("long").alias("n_bytes"),
-        "magic",
-        F.col("fake_width").cast("long").alias("fake_width"),
-        F.col("fake_height").cast("long").alias("fake_height"),
-        F.col("fake_duration_ms").cast("long").alias("fake_duration_ms"),
-        "checksum",
-    )
-
-
-# ---------------------------------------------------------------------------
-# oracles (DuckDB dialect)
-# ---------------------------------------------------------------------------
-
-# The extraction/multimodal queries are not SQL-expressible, but their
-# outputs are pure deterministic functions of the input, so the oracle is
-# a PRECOMPUTED expected table produced by the single-process kernel
-# (tools/gen_expected.py).  DuckDB reads the committed parquet;
-# rows+schema+hash compare as for every other query.
-#
-# sf binding: oracle_sql() has no sf_dir parameter, so the expected-table
-# path is chosen by SPARK_GRAFT_ORACLE_SF, defaulting to sf0.01 — the
-# scale the driver's CORRECTNESS gate runs at.  Expected tables are
-# committed for ALL driver sf dirs (sf0.001 / sf0.01 / sf0.1); a harness
-# comparing at a non-default sf must set the env var (tools/
-# compare_oracle.py does) or the four expected-table-backed rows
-# (x_extract_documents / x_extract_transcripts / x_multimodal_features /
-# x_conv_assembly, whose oracle reads the x_extract_transcripts table)
-# will fail on row count — loudly, not silently wrong.
-# tests/test_expected.py regenerates every committed table on each run
-# so they cannot go stale.
-def _expected_path(name: str) -> str:
-    sf_name = os.path.basename(
-        os.environ.get("SPARK_GRAFT_ORACLE_SF", "sf0.01").rstrip("/")
-    )
-    d = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "tests", "expected", sf_name
-    )
-    return f"{d}/{name}.parquet"
-
-
-def _expected_sql(name: str) -> str:
-    return f"SELECT * FROM read_parquet('{_expected_path(name)}')"
 
 
 def oracle_sql() -> dict[str, str]:
-    # ANN bucket parameters: derived ONCE in Python integer arithmetic
-    # from the parquet footer row count of the oracle sf's embeddings
-    # table, injected into the SQL as literals (same values the Spark
-    # queries use via _emb_count) — one parameter derivation, zero
-    # cross-engine float recomputation, zero count() jobs.
-    _n_emb = _emb_count(_oracle_sf_dir())
-    _dims = _emb_dims(_oracle_sf_dir())
-    nb = _lsh_bits(_n_emb)
-    nbm = _lsh_mt_bits(_n_emb)
-    _ivf_sql = _sql_ivf_ranked(_ivf_centroids(_oracle_sf_dir()))
-    _ivf_sql_alle = _sql_ivf_ranked(_ivf_centroids(_oracle_sf_dir()), src="alle")
-    sql = {
-        "x_extract_documents": _expected_sql("x_extract_documents"),
-        "x_extract_transcripts": _expected_sql("x_extract_transcripts"),
-        "x_multimodal_features": _expected_sql("x_multimodal_features"),
-        # assembly = SQL over the expected extraction table: the chain
-        # extraction -> grouped-map assembly is hash-gated end to end
-        "x_conv_assembly": f"""
-            SELECT conv_id,
-                   count(*)::BIGINT AS n_turns,
-                   string_agg(extracted_text, chr(10) || chr(10)
-                              ORDER BY turn_idx) AS doc_text
-            FROM read_parquet('{_expected_path("x_extract_transcripts")}')
-            GROUP BY conv_id
-        """,
-        "q_canonicalize": """
-            SELECT doc_id,
-                   trim(regexp_replace('  ' || text || ' \t mid  part' || chr(10) || chr(10) || 'end  ',
-                                       '[ \t\r\n]+', ' ', 'g')) AS canon_text
-            FROM documents
-        """,
-        # exactly-once drain contract: one surviving row per distinct
-        # payload, no matter which duplicate copy survived the stream
-        "q_stream_dedup_drain": """
-            SELECT md5(text) AS text_key, 1::BIGINT AS n_out
-            FROM (SELECT DISTINCT text FROM documents)
-        """,
-        # mp3 fixture closed forms (encode_mp3_silence docstring):
-        # F=3+d%3 frames, sr=[44100,48000,32000][d%3], bitrate index
-        # 9+((d+i)%5), CRC on even d, reservoir (7d+13i)%32 for i>=1,
-        # scalefactors (d+3i+5g+7b) mod 2^slen with slen from the
-        # scalefac_compress tables; silent spectrum => pcm_abs_q = 0
-        "q_mp3_decode": """
-            WITH frames AS (
-              SELECT doc_id AS d, i
-              FROM documents, range(0, 5) t(i)
-              WHERE i < 3 + doc_id % 3
-            ),
-            scf AS (
-              SELECT d, i, g, b,
-                CASE WHEN b <= 10
-                  THEN ([0,0,0,0,3,1,1,1,2,2,2,3,3,3,4,4])[((d+i+g)%16)+1]
-                  ELSE ([0,1,2,3,0,1,2,3,1,2,3,1,2,3,2,3])[((d+i+g)%16)+1]
-                END AS slen
-              FROM frames, (VALUES (0),(1)) gg(g), range(0, 21) bb(b)
-            ),
-            scf_sum_t AS (
-              SELECT d,
-                     sum(CASE WHEN slen = 0 THEN 0
-                         ELSE (d + 3*i + 5*g + 7*b) % (1 << slen) END)
-                       AS scf_sum
-              FROM scf GROUP BY d
-            ),
-            fr AS (
-              SELECT d,
-                     count(*) AS nf,
-                     sum(([128,160,192,224,256])[((d+i)%5)+1]) AS br_sum,
-                     sum(CASE WHEN i >= 1 THEN (7*d + 13*i) % 32
-                         ELSE 0 END) AS resv_sum
-              FROM frames GROUP BY d
-            )
-            SELECT fr.d AS doc_id,
-                   fr.nf::BIGINT AS n_frames,
-                   ([44100,48000,32000])[(fr.d % 3)+1]::BIGINT AS sample_rate,
-                   fr.br_sum::BIGINT AS bitrate_kbps_sum,
-                   (fr.nf * 1152)::BIGINT AS n_samples,
-                   (CASE WHEN fr.d % 2 = 0 THEN fr.nf ELSE 0 END)::BIGINT
-                     AS crc_frames,
-                   fr.resv_sum::BIGINT AS resv_sum,
-                   s.scf_sum::BIGINT AS scf_sum,
-                   0::BIGINT AS pcm_abs_q
-            FROM fr JOIN scf_sum_t s ON fr.d = s.d
-        """,
-        "q_ogg_decode": """
-            WITH d0 AS (
-              SELECT doc_id AS d,
-                     3 + doc_id % 3 AS m,
-                     doc_id % 4 AS c,
-                     600 + 100*(doc_id % 5) AS ls,
-                     2 + doc_id % 3 AS p
-              FROM documents
-            ),
-            hdr AS (
-              SELECT d, m, c, ls, p,
-                ((30 // 255 + 1) + m - 1) // m AS pg_ident,
-                (((37 + 12*c) // 255 + 1) + m - 1) // m AS pg_comment,
-                ((ls // 255 + 1) + m - 1) // m AS pg_setup
-              FROM d0
-            ),
-            aud AS (
-              SELECT d, m, j, 300 + (13*d + 17*j) % 600 AS lj
-              FROM d0, range(0, 4) t(j)
-              WHERE j < p
-            ),
-            aud_pg AS (
-              SELECT d,
-                     sum(((lj // 255 + 1) + m - 1) // m) AS pgs,
-                     sum(CASE WHEN ((lj // 255 + 1) + m - 1) // m > 1
-                         THEN 1 ELSE 0 END) AS spans
-              FROM aud GROUP BY d
-            ),
-            aud_bytes AS (
-              SELECT a.d, sum((a.d + 31*a.j + i) % 251) AS bsum
-              FROM aud a, range(0, 900) r(i)
-              WHERE i < a.lj
-              GROUP BY a.d
-            )
-            SELECT h.d AS doc_id,
-                   (h.pg_ident + h.pg_comment + h.pg_setup + ap.pgs)::BIGINT
-                     AS n_pages,
-                   (3 + h.p)::BIGINT AS n_packets,
-                   (CASE WHEN h.pg_ident > 1 THEN 1 ELSE 0 END
-                    + CASE WHEN h.pg_comment > 1 THEN 1 ELSE 0 END
-                    + CASE WHEN h.pg_setup > 1 THEN 1 ELSE 0 END
-                    + ap.spans)::BIGINT AS spanning_packets,
-                   (21360 + h.d)::BIGINT AS serial,
-                   (1 + h.d % 2)::BIGINT AS channels,
-                   ([8000,11025,16000,22050,44100,48000])[(h.d % 6)+1]::BIGINT
-                     AS sample_rate,
-                   (64000 + 1000*(h.d % 32))::BIGINT AS bitrate_nominal,
-                   21::BIGINT AS vendor_len,
-                   h.c::BIGINT AS n_comments,
-                   (8*h.c)::BIGINT AS comment_bytes,
-                   h.ls::BIGINT AS setup_bytes,
-                   h.p::BIGINT AS n_audio_packets,
-                   ab.bsum::BIGINT AS audio_bytes_sum,
-                   (1024*h.p)::BIGINT AS granule_last
-            FROM hdr h
-            JOIN aud_pg ap ON h.d = ap.d
-            JOIN aud_bytes ab ON h.d = ab.d
-        """,
-        "q_min_len_filter": """
-            SELECT doc_id, n_chars, lang FROM documents WHERE n_chars >= 200
-        """,
-        "q_word_count": """
-            SELECT doc_id,
-                   CASE WHEN length(trim(regexp_replace(text, '[ \t\r\n]+', ' ', 'g'))) = 0
-                        THEN 0
-                        ELSE len(string_split(trim(regexp_replace(text, '[ \t\r\n]+', ' ', 'g')), ' '))
-                   END::BIGINT AS n_words
-            FROM documents
-        """,
-        "q_token_count": """
-            SELECT doc_id,
-                   len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \t\n]'))::BIGINT AS n_tokens
-            FROM documents
-        """,
-        "q_lang_id": f"""
-            SELECT doc_id,
-                   len(regexp_extract_all(lower(text), '\\b({_LANG_MARKERS["en"]})\\b'))::BIGINT AS en_hits,
-                   CASE
-                     WHEN len(regexp_extract_all(lower(text), '\\b({_LANG_MARKERS["en"]})\\b')) >= len(regexp_extract_all(lower(text), '\\b({_LANG_MARKERS["es"]})\\b'))
-                      AND len(regexp_extract_all(lower(text), '\\b({_LANG_MARKERS["en"]})\\b')) >= len(regexp_extract_all(lower(text), '\\b({_LANG_MARKERS["fr"]})\\b'))
-                      AND len(regexp_extract_all(lower(text), '\\b({_LANG_MARKERS["en"]})\\b')) >= len(regexp_extract_all(lower(text), '\\b({_LANG_MARKERS["de"]})\\b'))
-                     THEN 'en'
-                     WHEN len(regexp_extract_all(lower(text), '\\b({_LANG_MARKERS["es"]})\\b')) >= len(regexp_extract_all(lower(text), '\\b({_LANG_MARKERS["fr"]})\\b'))
-                      AND len(regexp_extract_all(lower(text), '\\b({_LANG_MARKERS["es"]})\\b')) >= len(regexp_extract_all(lower(text), '\\b({_LANG_MARKERS["de"]})\\b'))
-                     THEN 'es'
-                     WHEN len(regexp_extract_all(lower(text), '\\b({_LANG_MARKERS["fr"]})\\b')) >= len(regexp_extract_all(lower(text), '\\b({_LANG_MARKERS["de"]})\\b'))
-                     THEN 'fr'
-                     ELSE 'de'
-                   END AS lang_pred
-            FROM documents
-        """,
-        "q_quality_score": f"""
-            WITH t AS (
-              SELECT doc_id,
-                     CASE WHEN length(trim(regexp_replace(lower(text), '[ \t\r\n]+', ' ', 'g'))) = 0
-                          THEN 0
-                          ELSE len(string_split(trim(regexp_replace(lower(text), '[ \t\r\n]+', ' ', 'g')), ' '))
-                     END::DOUBLE AS words,
-                     len(regexp_extract_all(lower(text), '\\b({_STOPWORDS})\\b'))::DOUBLE AS stop_hits
-              FROM documents
-            )
-            SELECT doc_id,
-                   floor((least(words, 100.0) / 100.0 * 0.5 +
-                          CASE WHEN words > 0 THEN stop_hits / words ELSE 0.0 END * 0.5) * 10000.0)::BIGINT AS quality_fp
-            FROM t
-        """,
-        "q_scrub_pii": f"""
-            WITH p AS (
-              SELECT doc_id,
-                     text || ' contact user' || doc_id::VARCHAR ||
-                     '@example.com or http://ex.com/p/' || doc_id::VARCHAR ||
-                     ' now' AS p
-              FROM documents
-            )
-            SELECT doc_id,
-                   len(regexp_extract_all(p, '{_EMAIL_RE}'))::BIGINT AS n_emails,
-                   len(regexp_extract_all(p, '{_URL_RE}'))::BIGINT AS n_urls,
-                   regexp_replace(regexp_replace(p, '{_EMAIL_RE}', '<EMAIL>', 'g'),
-                                  '{_URL_RE}', '<URL>', 'g') AS scrubbed
-            FROM p
-        """,
-        "q_hash_sample": """
-            SELECT lang,
-                   count(*)::BIGINT AS n_docs,
-                   count(CASE WHEN ('0x' || substr(md5(doc_id::VARCHAR), 1, 15))::BIGINT % 100 < 10
-                              THEN 1 END)::BIGINT AS n_sampled
-            FROM documents GROUP BY lang
-        """,
-        "q_tfidf_top_terms": """
-            WITH words AS (
-              SELECT doc_id, w FROM (
-                SELECT doc_id,
-                       unnest(string_split(trim(regexp_replace(
-                         lower(trim(regexp_replace(text, '[^A-Za-z ]', ' ', 'g'))),
-                         ' +', ' ', 'g')), ' ')) AS w
-                FROM documents
-              ) WHERE length(w) >= 4
-            ),
-            tf AS (SELECT doc_id, w, count(*) AS tf FROM words GROUP BY 1, 2),
-            df AS (SELECT w, count(DISTINCT doc_id) AS df FROM words GROUP BY 1)
-            SELECT doc_id, w, score_fp, rnk::BIGINT AS rnk FROM (
-              SELECT tf.doc_id, tf.w,
-                     (tf.tf * 1000000) // df.df AS score_fp,
-                     row_number() OVER (PARTITION BY tf.doc_id
-                                        ORDER BY (tf.tf * 1000000) // df.df DESC,
-                                                 tf.w ASC) AS rnk
-              FROM tf JOIN df ON tf.w = df.w
-            ) WHERE rnk <= 3
-        """,
-        "q_bm25_topk": """
-            WITH allw AS (
-              SELECT doc_id,
-                     unnest(string_split(trim(regexp_replace(
-                       lower(trim(regexp_replace(text, '[^A-Za-z ]', ' ', 'g'))),
-                       ' +', ' ', 'g')), ' ')) AS w
-              FROM documents
-            ),
-            words AS (SELECT doc_id, w FROM allw WHERE length(w) > 0),
-            dl AS (SELECT doc_id, count(*)::BIGINT AS dl FROM words GROUP BY 1),
-            t AS (SELECT sum(dl)::BIGINT AS s_total,
-                         count(*)::BIGINT AS n_docs FROM dl),
-            q AS (
-              SELECT w FROM words WHERE length(w) >= 4
-              GROUP BY w ORDER BY count(*) DESC, w ASC LIMIT 3
-            ),
-            tf AS (
-              SELECT doc_id, words.w, count(*)::BIGINT AS tf
-              FROM words JOIN q ON words.w = q.w GROUP BY 1, 2
-            ),
-            dfq AS (SELECT w, count(*)::BIGINT AS df FROM tf GROUP BY 1),
-            per_term AS (
-              SELECT tf.doc_id,
-                     ((1000 * (2 * t.n_docs - 2 * dfq.df + 1))
-                      // (2 * dfq.df + 1))
-                     * (22 * t.s_total * tf.tf)
-                     // (10 * t.s_total * tf.tf + 3 * t.s_total
-                         + 9 * dl.dl * t.n_docs) AS term_score
-              FROM tf JOIN dfq ON tf.w = dfq.w
-                   JOIN dl ON tf.doc_id = dl.doc_id, t
-            )
-            SELECT doc_id, score_fp,
-                   row_number() OVER (ORDER BY score_fp DESC, doc_id ASC)
-                     ::BIGINT AS rnk
-            FROM (
-              SELECT doc_id, sum(term_score)::BIGINT AS score_fp
-              FROM per_term GROUP BY 1
-              ORDER BY score_fp DESC, doc_id ASC LIMIT 10
-            )
-        """,
-        "q_inverted_index": f"""
-            WITH pairs AS (
-              SELECT DISTINCT doc_id, w FROM (
-                SELECT doc_id,
-                       unnest(string_split(trim(regexp_replace(
-                         lower(trim(regexp_replace(text, '[^A-Za-z ]', ' ', 'g'))),
-                         ' +', ' ', 'g')), ' ')) AS w
-                FROM documents
-              ) WHERE length(w) > 0
-            )
-            SELECT w AS word, count(*)::BIGINT AS df,
-                   array_to_string(
-                     (list_sort(list(doc_id)))[1:{_INDEX_POSTINGS_CAP}],
-                     ',') AS postings_head
-            FROM pairs GROUP BY 1
-        """,
-        "q_pmi_bigrams": f"""
-            WITH planted AS (
-              SELECT CASE
-                       WHEN doc_id % 7 = 2 THEN text || ' quantum entanglement'
-                       WHEN doc_id % 11 = 3 THEN text || ' neural lattice'
-                       ELSE text
-                     END AS text
-              FROM documents
-            ),
-            docs AS (
-              SELECT string_split(trim(regexp_replace(
-                       lower(trim(regexp_replace(text, '[^A-Za-z ]', ' ', 'g'))),
-                       ' +', ' ', 'g')), ' ') AS ws
-              FROM planted
-            ),
-            uni AS (
-              SELECT w, count(*)::BIGINT AS c FROM (
-                SELECT unnest(ws) AS w FROM docs
-              ) WHERE length(w) > 0 GROUP BY 1
-            ),
-            bcnt AS (
-              SELECT bg, count(*)::BIGINT AS c_ab FROM (
-                SELECT unnest(list_transform(range(1, len(ws)),
-                         i -> ws[i] || ' ' || ws[i+1])) AS bg
-                FROM docs
-              ) GROUP BY 1
-            ),
-            tot AS (SELECT sum(c_ab)::BIGINT AS n FROM bcnt)
-            SELECT split_part(bg, ' ', 1) AS w1,
-                   split_part(bg, ' ', 2) AS w2,
-                   c_ab, a.c AS c_a, b.c AS c_b
-            FROM bcnt, tot
-            JOIN uni a ON a.w = split_part(bg, ' ', 1)
-            JOIN uni b ON b.w = split_part(bg, ' ', 2)
-            WHERE c_ab >= {_PMI_MIN_COUNT}
-              AND c_ab * n >= {_PMI_LIFT_K} * a.c * b.c
-        """,
-        "q_para_dedup": f"""
-            WITH planted AS (
-              SELECT doc_id, CASE
-                       WHEN doc_id % 4 = 1
-                         THEN text || ' subscribe to our newsletter today'
-                       WHEN doc_id % 6 = 3
-                         THEN text || ' all rights reserved worldwide'
-                       ELSE text
-                     END AS text
-              FROM documents
-            ),
-            docs AS (
-              SELECT doc_id, string_split(trim(regexp_replace(
-                       lower(trim(regexp_replace(text, '[^A-Za-z ]', ' ', 'g'))),
-                       ' +', ' ', 'g')), ' ') AS ws
-              FROM planted
-            ),
-            paras AS (
-              SELECT doc_id,
-                     unnest(range(1, (len(ws) + {_PARA_WORDS - 1}) // {_PARA_WORDS} + 1)) AS pos,
-                     unnest(list_transform(
-                       range(1, (len(ws) + {_PARA_WORDS - 1}) // {_PARA_WORDS} + 1),
-                       i -> array_to_string(
-                         ws[((i-1) * {_PARA_WORDS} + 1):(i * {_PARA_WORDS})], ' ')
-                     )) AS para
-              FROM docs
-            ),
-            boiler AS (
-              SELECT para FROM paras GROUP BY para
-              HAVING count(*) >= {_PARA_BOILER_MIN}
-            )
-            SELECT p.doc_id, count(*)::BIGINT AS n_paras,
-                   sum(CASE WHEN b.para IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
-                     AS n_boiler,
-                   coalesce(string_agg(CASE WHEN b.para IS NULL THEN p.para END,
-                                       ' ' ORDER BY p.pos), '') AS clean_text
-            FROM paras p LEFT JOIN boiler b ON p.para = b.para
-            GROUP BY 1
-        """,
-        "q_repetition_quality": """
-            WITH docs AS (
-              SELECT doc_id, string_split(trim(regexp_replace(
-                       lower(trim(regexp_replace(text, '[^A-Za-z ]', ' ', 'g'))),
-                       ' +', ' ', 'g')), ' ') AS ws
-              FROM documents
-            ),
-            wc AS (
-              SELECT doc_id, w, count(*) AS c FROM (
-                SELECT doc_id, unnest(ws) AS w FROM docs
-              ) WHERE length(w) > 0 GROUP BY 1, 2
-            ),
-            wstats AS (
-              SELECT doc_id, sum(c)::BIGINT AS n_words,
-                     count(*)::BIGINT AS n_distinct, max(c)::BIGINT AS top_cnt
-              FROM wc GROUP BY 1
-            ),
-            bc AS (
-              SELECT doc_id, bg, count(*) AS c FROM (
-                SELECT doc_id, unnest(list_transform(range(1, len(ws)),
-                         i -> ws[i] || ' ' || ws[i+1])) AS bg
-                FROM docs
-              ) GROUP BY 1, 2
-            ),
-            bstats AS (
-              SELECT doc_id, sum(c)::BIGINT AS n2,
-                     sum(CASE WHEN c > 1 THEN c ELSE 0 END)::BIGINT AS dup2
-              FROM bc GROUP BY 1
-            )
-            SELECT w.doc_id, n_words, n_distinct, top_cnt, n2, dup2,
-                   (top_cnt * 10 > n_words OR dup2 * 5 > n2) AS repetitive
-            FROM wstats w JOIN bstats b ON w.doc_id = b.doc_id
-        """,
-        "q_triangle_count": """
-            WITH nn AS (SELECT count(*)::BIGINT AS n FROM documents),
-            nodes AS (SELECT doc_id AS id FROM documents),
-            raw AS (
-              SELECT id, (id + 1) % nn.n AS peer FROM nodes, nn
-              UNION ALL SELECT id, (id + 2) % nn.n FROM nodes, nn
-              UNION ALL SELECT id, (id + 3) % nn.n FROM nodes, nn
-              UNION ALL SELECT id,
-                         CASE WHEN id % 10 = 3 THEN 0 ELSE id END
-              FROM nodes
-            ),
-            edges AS (
-              SELECT DISTINCT least(id, peer) AS a, greatest(id, peer) AS b
-              FROM raw WHERE id <> peer
-            ),
-            deg AS (
-              SELECT v, count(*)::BIGINT AS d FROM (
-                SELECT a AS v FROM edges UNION ALL SELECT b FROM edges
-              ) GROUP BY 1
-            ),
-            oriented AS (
-              SELECT CASE WHEN (da.d, e.a) < (db.d, e.b)
-                          THEN e.a ELSE e.b END AS src,
-                     CASE WHEN (da.d, e.a) < (db.d, e.b)
-                          THEN e.b ELSE e.a END AS dst,
-                     CASE WHEN (da.d, e.a) < (db.d, e.b)
-                          THEN db.d ELSE da.d END AS dd
-              FROM edges e
-              JOIN deg da ON e.a = da.v
-              JOIN deg db ON e.b = db.v
-            ),
-            wedges AS (
-              SELECT l.src, l.dst AS v, l.dd AS dv, r.dst AS w, r.dd AS dw
-              FROM oriented l JOIN oriented r ON l.src = r.src
-              WHERE (l.dd, l.dst) < (r.dd, r.dst)
-            ),
-            closed AS (
-              SELECT wg.src FROM wedges wg
-              WHERE EXISTS (SELECT 1 FROM oriented o
-                            WHERE o.src = wg.v AND o.dst = wg.w)
-            )
-            SELECT (SELECT count(*)::BIGINT FROM edges) AS n_edges,
-                   (SELECT count(*)::BIGINT FROM wedges) AS n_wedges,
-                   (SELECT count(*)::BIGINT FROM closed) AS n_triangles
-        """,
-        "q_markov_transitions": """
-            WITH pairs AS (
-              SELECT event_type AS from_type,
-                     lead(event_type) OVER (
-                       PARTITION BY user_id ORDER BY ts, event_id) AS to_type
-              FROM events
-            ),
-            t AS (
-              SELECT from_type, to_type, count(*)::BIGINT AS n_trans
-              FROM pairs WHERE to_type IS NOT NULL
-              GROUP BY 1, 2
-            )
-            SELECT from_type, to_type, n_trans,
-                   sum(n_trans) OVER (PARTITION BY from_type)::BIGINT AS n_from,
-                   (n_trans * 1000000 //
-                    sum(n_trans) OVER (PARTITION BY from_type))::BIGINT
-                     AS prob_ppm
-            FROM t
-        """,
-        "q_retention_cohorts": f"""
-            WITH x AS (
-              SELECT user_id,
-                     epoch_us(ts) // {_WEEK_US} AS wk,
-                     min(epoch_us(ts) // {_WEEK_US})
-                       OVER (PARTITION BY user_id) AS cohort_week
-              FROM events
-            )
-            SELECT cohort_week, wk - cohort_week AS week_offset,
-                   count(DISTINCT user_id)::BIGINT AS n_users,
-                   count(*)::BIGINT AS n_events
-            FROM x GROUP BY 1, 2
-        """,
-        "q_outlier_events": """
-            WITH b AS (
-              SELECT event_id, event_type,
-                     floor(value * 100)::BIGINT AS v_fp
-              FROM events
-            ),
-            s AS (
-              SELECT event_type, count(*)::BIGINT AS n,
-                     (sum(v_fp) // count(*))::BIGINT AS mean_fp
-              FROM b GROUP BY 1
-            ),
-            j AS (
-              SELECT b.event_type, b.event_id, s.n, s.mean_fp,
-                     b.v_fp - s.mean_fp AS dev
-              FROM b JOIN s USING (event_type)
-            ),
-            v AS (
-              SELECT event_type,
-                     (sum(dev * dev) // max(n))::BIGINT AS var_fp
-              FROM j GROUP BY 1
-            )
-            SELECT j.event_type, j.n, j.mean_fp, v.var_fp,
-                   sum(CASE WHEN dev * dev > 9 * var_fp
-                            THEN 1 ELSE 0 END)::BIGINT AS n_outliers,
-                   sum(CASE WHEN dev * dev > 9 * var_fp
-                            THEN event_id ELSE 0 END)::BIGINT
-                     AS outlier_id_sum
-            FROM j JOIN v USING (event_type)
-            GROUP BY 1, 2, 3, 4
-        """,
-        "q_pareto_frontier": """
-            WITH u AS (
-              SELECT user_id,
-                     sum(floor(value * 100)::BIGINT)::BIGINT AS s_fp,
-                     count(*)::BIGINT AS n_events
-              FROM events GROUP BY 1
-            ),
-            p AS (
-              SELECT s_fp, n_events,
-                     count(*)::BIGINT AS n_users,
-                     min(user_id)::BIGINT AS min_user
-              FROM u GROUP BY 1, 2
-            )
-            SELECT s_fp, n_events, n_users, min_user
-            FROM p a
-            WHERE NOT EXISTS (
-              SELECT 1 FROM p b
-              WHERE b.s_fp >= a.s_fp AND b.n_events >= a.n_events
-                AND (b.s_fp > a.s_fp OR b.n_events > a.n_events))
-        """,
-        "q_table_profile": """
-            SELECT 'event_id' AS col_name, count(*)::BIGINT AS n_rows,
-                   sum(CASE WHEN event_id IS NULL THEN 1 ELSE 0 END)::BIGINT
-                     AS n_null,
-                   count(DISTINCT event_id)::BIGINT AS n_distinct,
-                   min(event_id)::BIGINT AS min_num,
-                   max(event_id)::BIGINT AS max_num,
-                   CAST(NULL AS VARCHAR) AS min_str,
-                   CAST(NULL AS VARCHAR) AS max_str
-            FROM events
-            UNION ALL
-            SELECT 'user_id', count(*)::BIGINT,
-                   sum(CASE WHEN user_id IS NULL THEN 1 ELSE 0 END)::BIGINT,
-                   count(DISTINCT user_id)::BIGINT,
-                   min(user_id)::BIGINT, max(user_id)::BIGINT,
-                   CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR)
-            FROM events
-            UNION ALL
-            SELECT 'ts_us', count(*)::BIGINT,
-                   sum(CASE WHEN ts IS NULL THEN 1 ELSE 0 END)::BIGINT,
-                   count(DISTINCT ts)::BIGINT,
-                   min(epoch_us(ts))::BIGINT, max(epoch_us(ts))::BIGINT,
-                   CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR)
-            FROM events
-            UNION ALL
-            SELECT 'event_type', count(*)::BIGINT,
-                   sum(CASE WHEN event_type IS NULL THEN 1 ELSE 0 END)::BIGINT,
-                   count(DISTINCT event_type)::BIGINT,
-                   CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-                   min(event_type), max(event_type)
-            FROM events
-            UNION ALL
-            SELECT 'props', count(*)::BIGINT,
-                   sum(CASE WHEN props IS NULL THEN 1 ELSE 0 END)::BIGINT,
-                   count(DISTINCT props)::BIGINT,
-                   CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-                   min(props), max(props)
-            FROM events
-        """,
-        "q_trend_slope": f"""
-            WITH weekly AS (
-              SELECT event_type,
-                     epoch_us(ts) // {_WEEK_US} AS wk,
-                     count(*)::BIGINT AS y
-              FROM events GROUP BY 1, 2
-            ),
-            xs AS (
-              SELECT event_type, y,
-                     wk - min(wk) OVER (PARTITION BY event_type) AS x
-              FROM weekly
-            ),
-            a AS (
-              SELECT event_type,
-                     count(*)::BIGINT AS n_weeks,
-                     sum(x)::BIGINT AS sx, sum(y)::BIGINT AS sy,
-                     sum(x * y)::BIGINT AS sxy, sum(x * x)::BIGINT AS sxx
-              FROM xs GROUP BY 1
-            )
-            SELECT event_type, n_weeks, sy,
-                   (n_weeks * sxy - sx * sy)::BIGINT AS slope_num,
-                   (n_weeks * sxx - sx * sx)::BIGINT AS slope_den,
-                   CASE WHEN n_weeks * sxx - sx * sx > 0
-                        THEN ((1000000 * (n_weeks * sxy - sx * sy))
-                              // (n_weeks * sxx - sx * sx))::BIGINT
-                        ELSE NULL END AS slope_ppm
-            FROM a
-        """,
-        "q_decile_assign": """
-            WITH v AS (SELECT floor(value * 100)::BIGINT AS v_fp FROM events),
-            hist AS (SELECT v_fp AS bucket, count(*) AS cnt FROM v GROUP BY 1),
-            cum AS (
-              SELECT bucket,
-                     sum(cnt) OVER (ORDER BY bucket ROWS BETWEEN UNBOUNDED
-                       PRECEDING AND CURRENT ROW) AS cum,
-                     sum(cnt) OVER () AS n
-              FROM hist
-            ),
-            e AS (
-              SELECT t.k,
-                     min(CASE WHEN cum.cum >= (t.k * cum.n + 9) // 10
-                              THEN cum.bucket END) AS edge
-              FROM cum, range(1, 10) t(k) GROUP BY t.k
-            ),
-            el AS (SELECT list(edge ORDER BY k) AS edges FROM e)
-            SELECT decile, count(*)::BIGINT AS n_events,
-                   sum(v_fp)::BIGINT AS sum_fp,
-                   min(v_fp)::BIGINT AS min_fp,
-                   max(v_fp)::BIGINT AS max_fp
-            FROM (
-              SELECT v.v_fp,
-                     (len(list_filter(el.edges, x -> v.v_fp > x)) + 1)::BIGINT
-                       AS decile
-              FROM v, el
-            )
-            GROUP BY 1
-        """,
-        "q_incremental_agg": """
-            WITH ev AS (
-              SELECT event_type,
-                     date_part('day', ts) <= 15 AS is_base,
-                     floor(value * 100)::BIGINT AS v_fp
-              FROM events
-            ),
-            parts AS (
-              SELECT event_type, is_base,
-                     count(*)::BIGINT AS n, sum(v_fp)::BIGINT AS s,
-                     min(v_fp)::BIGINT AS mn, max(v_fp)::BIGINT AS mx,
-                     sum(v_fp * v_fp)::BIGINT AS ss
-              FROM ev GROUP BY 1, 2
-            ),
-            merged AS (
-              SELECT event_type,
-                     sum(n)::BIGINT AS n, sum(s)::BIGINT AS s,
-                     min(mn)::BIGINT AS mn, max(mx)::BIGINT AS mx,
-                     sum(ss)::BIGINT AS ss
-              FROM parts GROUP BY 1
-            ),
-            fullagg AS (
-              SELECT event_type,
-                     count(*)::BIGINT AS fn, sum(v_fp)::BIGINT AS fs,
-                     min(v_fp)::BIGINT AS fmn, max(v_fp)::BIGINT AS fmx,
-                     sum(v_fp * v_fp)::BIGINT AS fss
-              FROM ev GROUP BY 1
-            )
-            SELECT m.event_type, m.n, m.s, m.mn, m.mx, m.ss,
-                   (m.n = f.fn AND m.s = f.fs AND m.mn = f.fmn
-                    AND m.mx = f.fmx AND m.ss = f.fss) AS consistent
-            FROM merged m JOIN fullagg f USING (event_type)
-        """,
-        "q_bloom_join": f"""
-            WITH build AS (
-              SELECT o_orderkey AS k FROM orders
-              WHERE o_orderpriority = '1-URGENT'
-            ),
-            li AS (
-              SELECT l_orderkey,
-                     floor(l_extendedprice * 100)::BIGINT AS price_fp
-              FROM lineitem
-            ),
-            bits AS (
-              SELECT DISTINCT ('0x' || substr(
-                md5('bj' || r.r::VARCHAR || ':' || build.k::VARCHAR), 1, 15))
-                ::BIGINT % {_BLOOM_BITS} AS bit
-              FROM build, range(0, {_BLOOM_K}) r(r)
-            ),
-            probe_keys AS (SELECT DISTINCT l_orderkey AS k FROM li),
-            pbits AS (
-              SELECT pk.k, ('0x' || substr(
-                md5('bj' || r.r::VARCHAR || ':' || pk.k::VARCHAR), 1, 15))
-                ::BIGINT % {_BLOOM_BITS} AS bit
-              FROM probe_keys pk, range(0, {_BLOOM_K}) r(r)
-            ),
-            kv AS (
-              SELECT pbits.k,
-                     min(CASE WHEN bits.bit IS NOT NULL THEN 1 ELSE 0 END)
-                       AS pass
-              FROM pbits LEFT JOIN bits ON bits.bit = pbits.bit
-              GROUP BY pbits.k
-            ),
-            passing AS (SELECT k FROM kv WHERE pass = 1),
-            pruned AS (SELECT li.l_orderkey, li.price_fp
-                       FROM li JOIN passing ON li.l_orderkey = passing.k),
-            matched AS (SELECT p.l_orderkey, p.price_fp
-                        FROM pruned p JOIN build ON p.l_orderkey = build.k)
-            SELECT
-              (SELECT count(*) FROM li)::BIGINT AS n_fact_rows,
-              (SELECT count(*) FROM probe_keys)::BIGINT AS n_fact_keys,
-              (SELECT count(*) FROM build)::BIGINT AS n_build_keys,
-              (SELECT count(*) FROM passing)::BIGINT AS n_keys_pass,
-              (SELECT count(*) FROM passing
-                 WHERE k NOT IN (SELECT k FROM build))::BIGINT AS n_fp_keys,
-              (SELECT count(*) FROM pruned)::BIGINT AS n_rows_pass,
-              (SELECT count(*) FROM matched)::BIGINT AS n_rows_match,
-              (SELECT sum(price_fp) FROM matched)::BIGINT AS revenue_fp
-        """,
-        "q_priority_sample": f"""
-            WITH scored AS (
-              SELECT doc_id, n_chars,
-                     greatest(
-                       (('0x' || substr(md5('pri:' || doc_id::VARCHAR), 1, 10))
-                          ::BIGINT * 1000000) // greatest(n_chars, 1),
-                       1) AS pri
-              FROM documents
-            ),
-            kp AS (SELECT pri FROM scored
-                   ORDER BY pri, doc_id LIMIT {_PRIO_K + 1}),
-            tau_t AS (SELECT max(pri) AS tau FROM kp),
-            kept AS (SELECT doc_id, n_chars, pri FROM scored
-                     ORDER BY pri, doc_id LIMIT {_PRIO_K})
-            SELECT doc_id, n_chars, pri,
-                   row_number() OVER (ORDER BY pri, doc_id)::BIGINT AS rnk,
-                   tau,
-                   greatest(n_chars,
-                            (1099511627776 * 1000000) // tau)::BIGINT AS ht_weight
-            FROM kept, tau_t
-        """,
-        "q_kmv_sketch": f"""
-            WITH ws_t AS (
-              SELECT lang,
-                     string_split(trim(regexp_replace(
-                       lower(trim(regexp_replace(text, '[^A-Za-z ]', ' ', 'g'))),
-                       ' +', ' ', 'g')), ' ') AS ws
-              FROM documents WHERE lang IN ('en', 'fr')
-            ),
-            words AS (
-              SELECT DISTINCT lang, w FROM (
-                SELECT lang,
-                       unnest([ws[i] || ' ' || ws[i + 1]
-                               for i in range(1, greatest(len(ws), 1))]) AS w
-                FROM ws_t
-              )
-            ),
-            hashes AS (
-              SELECT DISTINCT lang,
-                     ('0x' || substr(md5('kmv:' || w), 1, 10))::BIGINT AS h
-              FROM words
-            ),
-            sk AS (
-              SELECT lang, h FROM (
-                SELECT lang, h,
-                       row_number() OVER (PARTITION BY lang ORDER BY h) AS rk
-                FROM hashes
-              ) WHERE rk <= {_KMV_K}
-            ),
-            a AS (SELECT h FROM sk WHERE lang = 'en'),
-            b AS (SELECT h FROM sk WHERE lang = 'fr'),
-            u AS (
-              SELECT h FROM (
-                SELECT h, row_number() OVER (ORDER BY h) AS rk
-                FROM (SELECT h FROM a UNION SELECT h FROM b)
-              ) WHERE rk <= {_KMV_K}
-            ),
-            rho_t AS (
-              SELECT count(*)::BIGINT AS rho
-              FROM u JOIN a ON u.h = a.h JOIN b ON u.h = b.h
-            ),
-            tops AS (
-              SELECT (SELECT max(h) FROM a) AS hk_a,
-                     (SELECT max(h) FROM b) AS hk_b,
-                     (SELECT max(h) FROM u) AS hk_u
-            ),
-            ex AS (
-              SELECT
-                (SELECT count(*) FROM words WHERE lang = 'en')::BIGINT AS exact_a,
-                (SELECT count(*) FROM words WHERE lang = 'fr')::BIGINT AS exact_b,
-                (SELECT count(*) FROM
-                  (SELECT w FROM words WHERE lang = 'en')
-                  JOIN (SELECT w FROM words WHERE lang = 'fr') USING (w)
-                )::BIGINT AS exact_intersect
-            )
-            SELECT {_KMV_K}::BIGINT AS k,
-                   (({_KMV_K - 1} * {_KMV_M}::BIGINT) // hk_a)::BIGINT AS est_a,
-                   (({_KMV_K - 1} * {_KMV_M}::BIGINT) // hk_b)::BIGINT AS est_b,
-                   (({_KMV_K - 1} * {_KMV_M}::BIGINT) // hk_u)::BIGINT
-                     AS est_union,
-                   rho,
-                   ((rho * (({_KMV_K - 1} * {_KMV_M}::BIGINT) // hk_u))
-                    // {_KMV_K})::BIGINT AS est_intersect,
-                   exact_a, exact_b, exact_intersect
-            FROM tops, rho_t, ex
-        """,
-        "q_set_ops": """
-            WITH a AS (SELECT DISTINCT source FROM documents
-                       WHERE lang = 'en'),
-            b AS (SELECT DISTINCT source FROM documents WHERE lang = 'fr'),
-            i AS (SELECT source FROM a INTERSECT SELECT source FROM b),
-            ea AS (SELECT source FROM a EXCEPT SELECT source FROM b),
-            eb AS (SELECT source FROM b EXCEPT SELECT source FROM a)
-            SELECT 'intersect' AS op, count(source)::BIGINT AS n_sources,
-                   coalesce(string_agg(source, ',' ORDER BY source), '')
-                     AS src_list FROM i
-            UNION ALL
-            SELECT 'except_en', count(source)::BIGINT,
-                   coalesce(string_agg(source, ',' ORDER BY source), '')
-            FROM ea
-            UNION ALL
-            SELECT 'except_fr', count(source)::BIGINT,
-                   coalesce(string_agg(source, ',' ORDER BY source), '')
-            FROM eb
-        """,
-        "q_gap_fill": f"""
-            WITH hourly AS (
-              SELECT user_id, epoch_us(ts) // {_HOUR_US} AS h,
-                     count(*)::BIGINT AS n_events,
-                     sum(floor(value * 100)::BIGINT)::BIGINT AS v_fp
-              FROM events GROUP BY 1, 2
-            ),
-            bounds AS (SELECT user_id, min(h) AS h0, max(h) AS h1
-                       FROM hourly GROUP BY 1),
-            hrs AS (SELECT r FROM range(0, 1000) t(r)),
-            grid AS (
-              SELECT b.user_id, b.h0 + hrs.r AS h
-              FROM bounds b JOIN hrs ON hrs.r <= b.h1 - b.h0
-            ),
-            j AS (
-              SELECT g.user_id, g.h, hourly.n_events, hourly.v_fp
-              FROM grid g LEFT JOIN hourly
-                ON g.user_id = hourly.user_id AND g.h = hourly.h
-            )
-            SELECT user_id, h,
-                   coalesce(n_events, 0)::BIGINT AS n_events,
-                   last_value(v_fp IGNORE NULLS) OVER (
-                     PARTITION BY user_id ORDER BY h
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                   )::BIGINT AS locf_fp,
-                   v_fp IS NULL AS is_gap
-            FROM j
-        """,
-        "q_ab_chisq": """
-            WITH conv AS (
-              SELECT user_id,
-                     max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                       AS converted
-              FROM events GROUP BY 1
-            ),
-            cells AS (
-              SELECT user_id % 2 AS variant,
-                     count(*)::BIGINT AS n_users,
-                     sum(converted)::BIGINT AS n_conv
-              FROM conv GROUP BY 1
-            ),
-            t AS (
-              SELECT
-                sum(CASE WHEN variant = 0 THEN n_conv END)::BIGINT AS a,
-                sum(CASE WHEN variant = 0 THEN n_users - n_conv END)::BIGINT AS b,
-                sum(CASE WHEN variant = 1 THEN n_conv END)::BIGINT AS c,
-                sum(CASE WHEN variant = 1 THEN n_users - n_conv END)::BIGINT AS d
-              FROM cells
-            )
-            SELECT a, b, c, d, (a + b + c + d)::BIGINT AS n,
-                   (CASE WHEN (a + b) * (c + d) * (a + c) * (b + d) > 0
-                         THEN (1000 * (a + b + c + d) * (a * d - b * c)
-                               * (a * d - b * c))
-                              // ((a + b) * (c + d) * (a + c) * (b + d))
-                         ELSE NULL END)::BIGINT AS chi2_milli,
-                   coalesce(
-                     CASE WHEN (a + b) * (c + d) * (a + c) * (b + d) > 0
-                          THEN (1000 * (a + b + c + d) * (a * d - b * c)
-                                * (a * d - b * c))
-                               // ((a + b) * (c + d) * (a + c) * (b + d))
-                          ELSE NULL END > 3841, FALSE) AS significant
-            FROM t
-        """,
-        "q_span_dedup": f"""
-            WITH planted AS (
-              SELECT doc_id, CASE
-                       WHEN doc_id % 9 = 2
-                         THEN '{_SPAN_LICENSE} ' || text
-                       WHEN doc_id % 9 = 4
-                         THEN text || ' {_SPAN_LICENSE}'
-                       ELSE text
-                     END AS text
-              FROM documents
-            ),
-            words AS (
-              SELECT doc_id, string_split(trim(regexp_replace(
-                       lower(trim(regexp_replace(text, '[^A-Za-z ]', ' ', 'g'))),
-                       ' +', ' ', 'g')), ' ') AS ws
-              FROM planted
-            ),
-            g AS (
-              SELECT doc_id, pos, substr(md5(gram), 1, 16) AS gh FROM (
-                SELECT doc_id,
-                       unnest(range(1, greatest(len(ws) - {_SPAN_GRAM - 1}, 0) + 1)) AS pos,
-                       unnest(list_transform(
-                         range(1, greatest(len(ws) - {_SPAN_GRAM - 1}, 0) + 1),
-                         i -> array_to_string(ws[i:i + {_SPAN_GRAM - 1}], ' '))) AS gram
-                FROM words
-              )
-            ),
-            repeated AS (
-              SELECT gh FROM g GROUP BY gh
-              HAVING count(DISTINCT doc_id) >= 2
-            ),
-            flagged AS (
-              SELECT g.doc_id, g.pos FROM g JOIN repeated r ON g.gh = r.gh
-            ),
-            isl AS (
-              SELECT doc_id, pos,
-                     sum(CASE WHEN prev IS NULL
-                                OR pos - prev > {_SPAN_GRAM} THEN 1 ELSE 0 END)
-                       OVER (PARTITION BY doc_id ORDER BY pos
-                             ROWS UNBOUNDED PRECEDING) AS isl
-              FROM (
-                SELECT doc_id, pos,
-                       lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) AS prev
-                FROM flagged
-              )
-            ),
-            per_isl AS (
-              SELECT doc_id, isl, count(*) AS n_flagged,
-                     max(pos) - min(pos) + {_SPAN_GRAM} AS ivl_words
-              FROM isl GROUP BY 1, 2
-            ),
-            per_doc AS (
-              SELECT doc_id, sum(n_flagged)::BIGINT AS n_flagged,
-                     count(*)::BIGINT AS n_intervals,
-                     sum(ivl_words)::BIGINT AS removed_words
-              FROM per_isl GROUP BY 1
-            )
-            SELECT w.doc_id, len(w.ws)::BIGINT AS n_words,
-                   coalesce(p.n_flagged, 0)::BIGINT AS n_flagged,
-                   coalesce(p.n_intervals, 0)::BIGINT AS n_intervals,
-                   coalesce(p.removed_words, 0)::BIGINT AS removed_words,
-                   (len(w.ws) - coalesce(p.removed_words, 0))::BIGINT
-                     AS kept_words
-            FROM words w LEFT JOIN per_doc p ON w.doc_id = p.doc_id
-        """,
-        "q_kcore": _sql_kcore_rounds(_KCORE_ROUNDS),
-        "q_pagerank": """
-            WITH nn AS (SELECT count(*)::BIGINT AS n FROM documents),
-            nodes AS (SELECT doc_id AS id FROM documents),
-            edges AS (
-              SELECT id AS src, (id * id + 1) % nn.n AS dst FROM nodes, nn
-              UNION ALL
-              SELECT id, id // 2 FROM nodes, nn
-            ),
-            r0 AS (SELECT id, 1000000::BIGINT AS r FROM nodes),
-            c1 AS (SELECT e.dst, sum(r.r // 2) AS s FROM edges e
-                   JOIN r0 r ON e.src = r.id GROUP BY 1),
-            r1 AS (SELECT nodes.id,
-                          (150000 + (85 * coalesce(c1.s, 0)) // 100)::BIGINT AS r
-                   FROM nodes LEFT JOIN c1 ON nodes.id = c1.dst),
-            c2 AS (SELECT e.dst, sum(r.r // 2) AS s FROM edges e
-                   JOIN r1 r ON e.src = r.id GROUP BY 1),
-            r2 AS (SELECT nodes.id,
-                          (150000 + (85 * coalesce(c2.s, 0)) // 100)::BIGINT AS r
-                   FROM nodes LEFT JOIN c2 ON nodes.id = c2.dst),
-            c3 AS (SELECT e.dst, sum(r.r // 2) AS s FROM edges e
-                   JOIN r2 r ON e.src = r.id GROUP BY 1)
-            SELECT nodes.id,
-                   (150000 + (85 * coalesce(c3.s, 0)) // 100)::BIGINT AS rank
-            FROM nodes LEFT JOIN c3 ON nodes.id = c3.dst
-        """,
-        "q_fuzzy_join": """
-            WITH dirty AS (
-              SELECT p_partkey,
-                     CASE WHEN p_partkey % 3 = 0
-                          THEN substr(p_name, 1, 1) || substr(p_name, 3)
-                          ELSE p_name END AS dirty_name
-              FROM part
-            ),
-            catalog AS (SELECT DISTINCT p_name AS cname FROM part),
-            cand AS (
-              SELECT d.p_partkey, d.dirty_name, c.cname,
-                     levenshtein(d.dirty_name, c.cname) AS dist
-              FROM dirty d JOIN catalog c
-                ON string_split(d.dirty_name, ' ')[-1]
-                 = string_split(c.cname, ' ')[-1]
-            )
-            SELECT p_partkey, dirty_name, cname AS matched_name,
-                   dist::BIGINT AS dist
-            FROM (
-              SELECT *, row_number() OVER (
-                PARTITION BY p_partkey ORDER BY dist, cname) AS rn
-              FROM cand
-            ) WHERE rn = 1
-        """,
-        "q_target_mix_sample": f"""
-            WITH counts AS (
-              SELECT lang, count(*)::BIGINT AS n_avail
-              FROM documents GROUP BY 1
-            ),
-            tgt AS (
-              SELECT lang, n_avail,
-                     CASE lang
-                       {' '.join(f"WHEN '{lang}' THEN {ppm}::BIGINT"
-                                 for lang, ppm in _MIX_TARGET_PPM.items())}
-                     END AS target_ppm
-              FROM counts
-              WHERE lang IN ({','.join(repr(k) for k in _MIX_TARGET_PPM)})
-            ),
-            tmax AS (
-              SELECT min(n_avail * 1000000 // target_ppm) AS t_max FROM tgt
-            ),
-            rates AS (
-              SELECT lang, n_avail,
-                     (t_max * target_ppm // 1000000) AS cap,
-                     least((t_max * target_ppm // 1000000) * 1000000
-                           // n_avail, 1000000) AS rate_ppm
-              FROM tgt, tmax
-            )
-            SELECT d.lang, r.n_avail, r.cap, r.rate_ppm,
-                   count(CASE WHEN ('0x' || substr(md5(d.doc_id::VARCHAR), 1, 15))::BIGINT
-                                   % 1000000 < r.rate_ppm THEN 1 END)::BIGINT
-                     AS n_kept,
-                   coalesce(sum(CASE WHEN ('0x' || substr(md5(d.doc_id::VARCHAR), 1, 15))::BIGINT
-                                          % 1000000 < r.rate_ppm
-                                     THEN d.doc_id END), 0)::BIGINT
-                     AS kept_id_sum
-            FROM documents d JOIN rates r USING (lang)
-            GROUP BY 1, 2, 3, 4
-        """,
-        "q_importance_resample": f"""
-            WITH w AS (
-              SELECT doc_id, (lang = 'en') AS is_t,
-                     string_split(trim(regexp_replace(lower(text), '[ \t\r\n]+', ' ', 'g')), ' ') AS ws
-              FROM documents
-            ),
-            wb AS (
-              SELECT doc_id, is_t,
-                     ('0x' || substr(md5(wd), 1, 15))::BIGINT % {_DSIR_BUCKETS} AS b
-              FROM (SELECT doc_id, is_t, unnest(ws) AS wd FROM w)
-              WHERE wd != ''
-            ),
-            stats AS (
-              SELECT b, count(*)::BIGINT AS r_cnt,
-                     count(CASE WHEN is_t THEN 1 END)::BIGINT AS t_cnt
-              FROM wb GROUP BY 1
-            ),
-            tot AS (
-              SELECT sum(r_cnt)::BIGINT AS r_tot, sum(t_cnt)::BIGINT AS t_tot
-              FROM stats
-            ),
-            rat AS (
-              SELECT b,
-                     ((t_cnt + 1) * 1000000000 // (t_tot + {_DSIR_BUCKETS}))
-                       * 1000000 // greatest(
-                         (r_cnt + 1) * 1000000000 // (r_tot + {_DSIR_BUCKETS}), 1)
-                       AS ratio_ppm
-              FROM stats CROSS JOIN tot
-            ),
-            perdoc AS (
-              SELECT doc_id, count(*)::BIGINT AS n_words,
-                     sum(ratio_ppm)::BIGINT AS score_fp
-              FROM wb JOIN rat USING (b) GROUP BY 1
-            )
-            SELECT d.doc_id,
-                   coalesce(p.n_words, 0)::BIGINT AS n_words,
-                   coalesce(p.score_fp, 0)::BIGINT AS score_fp,
-                   CASE WHEN coalesce(p.n_words, 0) > 0
-                        THEN p.score_fp // p.n_words ELSE 0 END::BIGINT AS avg_ppm,
-                   ('0x' || substr(md5(d.doc_id::VARCHAR), 1, 15))::BIGINT % 1000000
-                     < least(CASE WHEN coalesce(p.n_words, 0) > 0
-                                  THEN p.score_fp // p.n_words ELSE 0 END,
-                             1000000) AS kept
-            FROM documents d LEFT JOIN perdoc p USING (doc_id)
-        """,
-        "q_c4_filters": f"""
-            WITH w AS (
-              SELECT doc_id,
-                     CASE WHEN length(trim(regexp_replace(lower(text), '[ \t\r\n]+', ' ', 'g'))) = 0
-                          THEN []
-                          ELSE string_split(trim(regexp_replace(lower(text), '[ \t\r\n]+', ' ', 'g')), ' ')
-                     END AS ws
-              FROM documents
-            ),
-            lb AS (
-              SELECT doc_id,
-                     [array_to_string(ws[(i - 1) * {_C4_LINE_WORDS} + 1 : (i - 1) * {_C4_LINE_WORDS} + {_C4_LINE_WORDS}], ' ') ||
-                      CASE WHEN (doc_id + i) % 4 != 3 THEN '.' ELSE '' END
-                      for i in range(1, greatest((len(ws) + {_C4_LINE_WORDS - 1}) // {_C4_LINE_WORDS}, 1) + 1)] AS base_lines
-              FROM w
-            ),
-            p AS (
-              SELECT doc_id,
-                     base_lines ||
-                     CASE WHEN doc_id % 29 = 11
-                          THEN ['lorem ipsum dolor sit amet consectetur adipiscing elit.']
-                          ELSE [] END ||
-                     CASE WHEN doc_id % 31 = 12
-                          THEN ['function demo() {{ return 1; }} end of sample.']
-                          ELSE [] END ||
-                     CASE WHEN doc_id % 37 = 13
-                          THEN ['please enable javascript to view this page.']
-                          ELSE [] END AS lines
-              FROM lb
-            ),
-            k AS (
-              SELECT doc_id, lines,
-                     list_filter(lines, l ->
-                       (ends_with(l, '.') OR ends_with(l, '!') OR ends_with(l, '?'))
-                       AND len(string_split(l, ' ')) >= 5
-                       AND NOT contains(l, 'javascript')) AS kept,
-                     array_to_string(lines, ' ') AS page
-              FROM p
-            ),
-            m AS (
-              SELECT doc_id,
-                     len(lines)::BIGINT AS n_lines,
-                     len(kept)::BIGINT AS n_kept_lines,
-                     coalesce(list_sum([len(string_split(l, ' ')) for l in kept]), 0)::BIGINT AS retained_words,
-                     coalesce(length(array_to_string(kept, ' '))
-                      - length(regexp_replace(array_to_string(kept, ' '), '[.!?]', '', 'g')), 0)::BIGINT AS n_sentences,
-                     contains(page, 'lorem ipsum') AS has_lorem,
-                     contains(page, '{{') AS has_brace
-              FROM k
-            )
-            SELECT doc_id, n_lines, n_kept_lines, retained_words, n_sentences,
-                   has_lorem, has_brace,
-                   (NOT has_lorem AND NOT has_brace AND n_sentences >= 3) AS keep_doc
-            FROM m
-        """,
-        "q_url_dedup": f"""
-            WITH u AS (
-              SELECT doc_id, source,
-                     (CASE WHEN doc_id % 2 = 0 THEN 'https://' ELSE 'http://' END ||
-                      CASE WHEN doc_id % 5 = 1 THEN 'www.' ELSE '' END ||
-                      source || '.example.com/p/' || (doc_id % 7)::VARCHAR ||
-                      CASE WHEN doc_id % 3 = 2 THEN '?utm_source=feed' ELSE '' END
-                     ) AS url
-              FROM documents
-            ),
-            c AS (
-              SELECT doc_id, url,
-                     regexp_replace(regexp_replace(url, '^https?://(www\\.)?', ''),
-                                    '\\?.*$', '') AS canon_url
-              FROM u
-            ),
-            d AS (
-              SELECT doc_id, url, canon_url,
-                     regexp_extract(canon_url, '^([^/]+)', 1) AS domain
-              FROM c
-            )
-            SELECT canon_url, domain,
-                   min(doc_id) AS keep_id,
-                   count(*)::BIGINT AS n_fetches,
-                   sum(doc_id)::BIGINT AS fetch_id_sum
-            FROM d
-            WHERE domain NOT IN {_URL_BLOCKLIST}
-            GROUP BY 1, 2
-        """,
-        "q_gopher_rules": f"""
-            WITH pg AS (
-              SELECT doc_id,
-                     text ||
-                     CASE WHEN doc_id % 11 = 2
-                          THEN chr(10) || '* item one' || chr(10) ||
-                               '* item two' || chr(10) || '* item three'
-                          ELSE '' END ||
-                     CASE WHEN doc_id % 13 = 4
-                          THEN chr(10) || 'to be continued...' || chr(10) ||
-                               'and more...'
-                          ELSE '' END ||
-                     CASE WHEN doc_id % 17 = 6
-                          THEN ' ' || repeat('#', 40)
-                          ELSE '' END ||
-                     CASE WHEN doc_id % 23 = 9
-                          THEN {"||".join(f"chr(10) || '* bullet {i}'" for i in range(10))}
-                          ELSE '' END AS page
-              FROM documents
-            ),
-            t AS (
-              SELECT doc_id, page,
-                     CASE WHEN length(trim(regexp_replace(lower(page), '[ \t\r\n]+', ' ', 'g'))) = 0
-                          THEN []
-                          ELSE string_split(trim(regexp_replace(lower(page), '[ \t\r\n]+', ' ', 'g')), ' ')
-                     END AS ws,
-                     string_split(page, chr(10)) AS lines
-              FROM pg
-            ),
-            m AS (
-              SELECT doc_id,
-                     len(ws)::BIGINT AS n_words,
-                     coalesce(list_sum([length(w) for w in ws]), 0)::BIGINT AS tot_chars,
-                     len(list_filter(ws, w -> regexp_matches(w, '[a-z]')))::BIGINT AS alpha_words,
-                     len(list_intersect(list_distinct(ws),
-                         ['the','a','data','table','query','row','value','column']))::BIGINT AS n_req_stops,
-                     (length(page) - length(replace(page, '#', ''))
-                      + (length(page) - length(replace(page, '...', ''))) // 3
-                     )::BIGINT AS n_symbols,
-                     len(lines)::BIGINT AS n_lines,
-                     len(list_filter(lines, l -> starts_with(ltrim(l), '* ')))::BIGINT AS bullet_lines,
-                     len(list_filter(lines, l -> ends_with(rtrim(l), '...')))::BIGINT AS ellipsis_lines
-              FROM t
-            )
-            SELECT doc_id, n_words, tot_chars, n_symbols,
-                   bullet_lines, ellipsis_lines,
-                   (n_words >= 50 AND n_words <= 100000) AS pass_word_count,
-                   (tot_chars >= 3 * n_words AND tot_chars <= 10 * n_words
-                    AND n_words > 0) AS pass_mean_wlen,
-                   (n_symbols * 10 < n_words) AS pass_symbol_ratio,
-                   (bullet_lines * 10 < n_lines * 9) AS pass_bullet,
-                   (ellipsis_lines * 10 < n_lines * 3) AS pass_ellipsis,
-                   (alpha_words * 10 >= n_words * 8) AS pass_alpha,
-                   (n_req_stops >= 2) AS pass_stopwords,
-                   ((n_words >= 50 AND n_words <= 100000)
-                    AND (tot_chars >= 3 * n_words AND tot_chars <= 10 * n_words
-                         AND n_words > 0)
-                    AND (n_symbols * 10 < n_words)
-                    AND (bullet_lines * 10 < n_lines * 9)
-                    AND (ellipsis_lines * 10 < n_lines * 3)
-                    AND (alpha_words * 10 >= n_words * 8)
-                    AND (n_req_stops >= 2)) AS pass_all
-            FROM m
-        """,
-        "q_chunk_windows": f"""
-            WITH w AS (
-              SELECT doc_id,
-                     CASE WHEN length(trim(regexp_replace(lower(text), '[ \t\r\n]+', ' ', 'g'))) = 0
-                          THEN []
-                          ELSE string_split(trim(regexp_replace(lower(text), '[ \t\r\n]+', ' ', 'g')), ' ')
-                     END AS ws
-              FROM documents
-            ),
-            c AS (
-              SELECT doc_id, ws, len(ws) AS n_words,
-                     unnest(range(1, greatest(len(ws), 1) + 1, {_CHUNK_STRIDE})) AS start_word,
-                     generate_subscripts(range(1, greatest(len(ws), 1) + 1, {_CHUNK_STRIDE}), 1) - 1 AS chunk_idx
-              FROM w
-            )
-            SELECT doc_id, chunk_idx::BIGINT AS chunk_idx,
-                   start_word::BIGINT AS start_word,
-                   len(ws[start_word : start_word + {_CHUNK_SIZE} - 1])::BIGINT AS n_chunk_words,
-                   substr(md5(array_to_string(ws[start_word : start_word + {_CHUNK_SIZE} - 1], ' ')), 1, 16) AS chunk_md5
-            FROM c WHERE start_word <= n_words
-        """,
-        "q_pack_sequences": f"""
-            WITH w AS (
-              SELECT doc_id, lang,
-                     (doc_id % {_PACK_SHARDS})::BIGINT AS shard,
-                     CASE WHEN length(trim(regexp_replace(lower(text), '[ \t\r\n]+', ' ', 'g'))) = 0
-                          THEN 0
-                          ELSE len(string_split(trim(regexp_replace(lower(text), '[ \t\r\n]+', ' ', 'g')), ' '))
-                     END::BIGINT AS n_words
-              FROM documents
-            ),
-            c AS (
-              SELECT *, sum(n_words) OVER (PARTITION BY lang, shard
-                                           ORDER BY doc_id
-                                           ROWS UNBOUNDED PRECEDING)::BIGINT AS cum
-              FROM w
-            )
-            SELECT doc_id, lang, shard, n_words,
-                   (cum - n_words)::BIGINT AS start_off,
-                   ((cum - n_words) // {_PACK_BIN})::BIGINT AS bin_first,
-                   CASE WHEN n_words > 0 THEN (cum - 1) // {_PACK_BIN}
-                        ELSE (cum - n_words) // {_PACK_BIN} END::BIGINT AS bin_last
-            FROM c
-        """,
-        "q_decontaminate": f"""
-            WITH docs AS (
-              SELECT doc_id, string_split(trim(regexp_replace(
-                       lower(trim(regexp_replace(text, '[^A-Za-z ]', ' ', 'g'))),
-                       ' +', ' ', 'g')), ' ') AS ws
-              FROM documents
-            ),
-            bench AS (
-              SELECT doc_id, ws FROM docs
-              WHERE doc_id % {_DECON_BENCH_MOD} = 0
-            ),
-            bgrams AS (
-              SELECT DISTINCT substr(md5(g), 1, 16) AS gh FROM (
-                SELECT unnest(list_transform(
-                         range(1, greatest(len(ws) - {_DECON_GRAM - 1}, 0) + 1),
-                         i -> array_to_string(
-                           ws[i:i + {_DECON_GRAM - 1}], ' '))) AS g
-                FROM bench
-              )
-            ),
-            corpus AS (
-              SELECT c.doc_id,
-                     CASE WHEN s.snip IS NOT NULL
-                          THEN list_concat(c.ws, s.snip) ELSE c.ws END AS ws
-              FROM (
-                SELECT doc_id, ws,
-                       CASE WHEN doc_id % {_DECON_PLANT_MOD} = {_DECON_PLANT_RES}
-                            THEN doc_id % {_DECON_PLANT_RES} END AS bk
-                FROM docs WHERE doc_id % {_DECON_BENCH_MOD} <> 0
-              ) c
-              LEFT JOIN (
-                SELECT doc_id // {_DECON_BENCH_MOD} AS bk,
-                       ws[1:{_DECON_GRAM}] AS snip
-                FROM bench
-              ) s ON c.bk = s.bk
-            ),
-            cg AS (
-              SELECT doc_id,
-                     unnest(list_transform(
-                       range(1, greatest(len(ws) - {_DECON_GRAM - 1}, 0) + 1),
-                       i -> substr(md5(array_to_string(
-                         ws[i:i + {_DECON_GRAM - 1}], ' ')), 1, 16))) AS gh
-              FROM corpus
-            )
-            SELECT c.doc_id,
-                   count(cg.gh)::BIGINT AS n_grams,
-                   count(b.gh)::BIGINT AS n_hits,
-                   (count(b.gh) > 0) AS contaminated
-            FROM corpus c
-            LEFT JOIN cg ON c.doc_id = cg.doc_id
-            LEFT JOIN bgrams b ON cg.gh = b.gh
-            GROUP BY c.doc_id
-        """,
-        "q_countmin_sketch": f"""
-            WITH words AS (
-              SELECT w FROM (
-                SELECT unnest(string_split(trim(regexp_replace(
-                  lower(trim(regexp_replace(text, '[^A-Za-z ]', ' ', 'g'))),
-                  ' +', ' ', 'g')), ' ')) AS w
-                FROM documents
-              ) WHERE length(w) > 0
-            ),
-            hashed AS (
-              SELECT r AS row_id,
-                     ('0x' || substr(md5('cm' || r || ':' || w), 1, 15))::BIGINT
-                       % {_CM_COLS} AS col_id
-              FROM words, (SELECT unnest(range({_CM_ROWS})) AS r)
-            )
-            SELECT row_id::BIGINT AS row_id, col_id, count(*)::BIGINT AS cnt
-            FROM hashed GROUP BY 1, 2
-        """,
-        "q_cm_heavy_hitters": f"""
-            WITH words AS (
-              SELECT w FROM (
-                SELECT unnest(string_split(trim(regexp_replace(
-                  lower(trim(regexp_replace(text, '[^A-Za-z ]', ' ', 'g'))),
-                  ' +', ' ', 'g')), ' ')) AS w
-                FROM documents
-              ) WHERE length(w) > 0
-            ),
-            total AS (SELECT count(*)::BIGINT AS total FROM words),
-            sketch AS (
-              SELECT r AS row_id,
-                     ('0x' || substr(md5('cm' || r || ':' || w), 1, 15))::BIGINT
-                       % {_CM_COLS} AS col_id,
-                     count(*)::BIGINT AS cnt
-              FROM words, (SELECT unnest(range({_CM_ROWS})) AS r)
-              GROUP BY 1, 2
-            ),
-            cand AS (
-              SELECT w, count(*)::BIGINT AS exact_cnt FROM words GROUP BY 1
-            ),
-            probe AS (
-              SELECT c.w, c.exact_cnt, r AS row_id,
-                     ('0x' || substr(md5('cm' || r || ':' || c.w), 1, 15))::BIGINT
-                       % {_CM_COLS} AS col_id
-              FROM cand c, (SELECT unnest(range({_CM_ROWS})) AS r)
-            ),
-            est AS (
-              SELECT p.w, p.exact_cnt, min(s.cnt)::BIGINT AS est_cnt
-              FROM probe p JOIN sketch s USING (row_id, col_id)
-              GROUP BY 1, 2
-            )
-            SELECT w AS word, est_cnt, exact_cnt
-            FROM est, total
-            WHERE est_cnt * 1000 >= total * {_CM_PHI_MILLE}
-        """,
-        "q_bloom_filter": f"""
-            WITH keys AS (
-              SELECT doc_id, md5(text) AS key FROM documents
-            ),
-            bits AS (
-              SELECT DISTINCT
-                     ('0x' || substr(md5('bf' || r || ':' || key), 1, 15))::BIGINT
-                       % {_BLOOM_BITS} AS bit
-              FROM keys, (SELECT unnest(range({_BLOOM_K})) AS r)
-            ),
-            probes AS (
-              SELECT doc_id, key AS probe, 1::BIGINT AS truth
-              FROM keys WHERE doc_id % 20 = 3
-              UNION ALL
-              SELECT doc_id, key || '~x' AS probe, 0::BIGINT AS truth
-              FROM keys WHERE doc_id % 20 = 3
-            ),
-            pb AS (
-              SELECT doc_id, truth,
-                     ('0x' || substr(md5('bf' || r || ':' || probe), 1, 15))::BIGINT
-                       % {_BLOOM_BITS} AS bit
-              FROM probes, (SELECT unnest(range({_BLOOM_K})) AS r)
-            )
-            SELECT pb.doc_id, pb.truth,
-                   min(CASE WHEN b.bit IS NULL THEN 0 ELSE 1 END)::BIGINT
-                     AS bloom_hit
-            FROM pb LEFT JOIN bits b ON pb.bit = b.bit
-            GROUP BY 1, 2
-        """,
-        "q_hll_distinct": f"""
-            WITH words AS (
-              SELECT DISTINCT lang, w FROM (
-                SELECT lang,
-                       unnest(string_split(trim(regexp_replace(
-                         lower(trim(regexp_replace(text, '[^A-Za-z ]', ' ', 'g'))),
-                         ' +', ' ', 'g')), ' ')) AS w
-                FROM documents
-              ) WHERE length(w) >= 4
-            ),
-            hw AS (
-              SELECT lang,
-                     h % {_HLL_M} AS j,
-                     h // {_HLL_M} AS h2
-              FROM (
-                SELECT lang,
-                       ('0x' || substr(md5('hll:' || w), 1, 15))::BIGINT AS h
-                FROM words
-              )
-            ),
-            regs AS (
-              SELECT lang, j,
-                     max(CASE WHEN h2 = 0 THEN 55
-                              ELSE 55 - length(bin(h2)) END) AS m
-              FROM hw GROUP BY 1, 2
-            ),
-            per_lang AS (
-              SELECT lang,
-                     count(*) AS n_set,
-                     sum({_HLL_S} >> m) AS z_set
-              FROM regs GROUP BY 1
-            ),
-            exact AS (
-              SELECT lang, count(*)::BIGINT AS exact_distinct
-              FROM words GROUP BY 1
-            )
-            SELECT p.lang,
-                   p.n_set::BIGINT AS n_set,
-                   ({_HLL_M} - p.n_set)::BIGINT AS v_zero,
-                   (p.z_set + ({_HLL_M} - p.n_set) * {_HLL_S})::BIGINT AS z_fp,
-                   ((709 * {_HLL_M} * {_HLL_M} * {_HLL_S}::BIGINT)
-                    // (1000 * (p.z_set + ({_HLL_M} - p.n_set) * {_HLL_S})))::BIGINT
-                     AS est_distinct,
-                   e.exact_distinct
-            FROM per_lang p JOIN exact e ON p.lang = e.lang
-        """,
-        "q_dedup_exact": """
-            SELECT md5(text) AS text_md5,
-                   min(doc_id) AS keep_id,
-                   count(*)::BIGINT AS n_dups
-            FROM documents GROUP BY 1
-        """,
-        "q_ngram_jaccard": """
-            WITH alld AS (
-              SELECT doc_id, text FROM documents
-              UNION ALL
-              SELECT doc_id + 1000000 AS doc_id,
-                     array_to_string(string_split(text, ' ')[4:], ' ') AS text
-              FROM documents WHERE doc_id < 25
-            ),
-            sh AS (
-              SELECT doc_id,
-                     unnest(list_distinct([
-                       array_to_string([w[i], w[i+1], w[i+2]], ' ')
-                       for i in range(1, greatest(len(w) - 2, 0) + 1)
-                     ])) AS sh
-              FROM (SELECT doc_id, string_split(text, ' ') AS w FROM alld)
-            ),
-            n AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-            pairs AS (
-              SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*)::DOUBLE AS shared
-              FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-              GROUP BY 1, 2
-            )
-            SELECT doc_a, doc_b,
-                   floor(shared * 1000000.0 / (na.n_sh + nb.n_sh - shared))::BIGINT AS jaccard_fp
-            FROM pairs
-            JOIN n na ON na.doc_id = doc_a
-            JOIN n nb ON nb.doc_id = doc_b
-            WHERE floor(shared * 1000000.0 / (na.n_sh + nb.n_sh - shared)) >= 500000
-        """,
-        "q_minhash_lsh": _SQL_MINHASH_LSH,
-        "q_dedup_clusters": f"""
-            WITH RECURSIVE pairs AS (
-              SELECT doc_a, doc_b FROM ({_SQL_MINHASH_LSH}) mh
-            ),
-            edges AS (
-              SELECT doc_a AS src, doc_b AS dst FROM pairs
-              UNION ALL
-              SELECT doc_b AS src, doc_a AS dst FROM pairs
-            ),
-            nodes AS (SELECT DISTINCT src AS doc_id FROM edges),
-            reach(doc_id, lab) AS (
-              SELECT doc_id, doc_id FROM nodes
-              UNION
-              SELECT e.src, r.lab
-              FROM reach r JOIN edges e ON e.dst = r.doc_id
-            )
-            SELECT doc_id, min(lab) AS component_id
-            FROM reach GROUP BY doc_id
-        """,
-        "q_cluster_keeper": f"""
-            WITH RECURSIVE pairs AS (
-              SELECT doc_a, doc_b FROM ({_SQL_MINHASH_LSH}) mh
-            ),
-            edges AS (
-              SELECT doc_a AS src, doc_b AS dst FROM pairs
-              UNION ALL
-              SELECT doc_b AS src, doc_a AS dst FROM pairs
-            ),
-            nodes AS (SELECT DISTINCT src AS doc_id FROM edges),
-            reach(doc_id, lab) AS (
-              SELECT doc_id, doc_id FROM nodes
-              UNION
-              SELECT e.src, r.lab
-              FROM reach r JOIN edges e ON e.dst = r.doc_id
-            ),
-            labels AS (
-              SELECT doc_id, min(lab) AS component_id
-              FROM reach GROUP BY doc_id
-            ),
-            {_SQL_ALLD},
-            t AS (
-              SELECT doc_id,
-                     CASE WHEN length(trim(regexp_replace(lower(text), '[ \t\r\n]+', ' ', 'g'))) = 0
-                          THEN 0
-                          ELSE len(string_split(trim(regexp_replace(lower(text), '[ \t\r\n]+', ' ', 'g')), ' '))
-                     END::DOUBLE AS words,
-                     len(regexp_extract_all(lower(text), '\\b({_STOPWORDS})\\b'))::DOUBLE AS stop_hits
-              FROM alld
-            ),
-            qual AS (
-              SELECT doc_id,
-                     floor((least(words, 100.0) / 100.0 * 0.5 +
-                            CASE WHEN words > 0 THEN stop_hits / words ELSE 0.0 END * 0.5) * 10000.0)::BIGINT AS quality_fp
-              FROM t
-            ),
-            rk AS (
-              SELECT l.component_id, l.doc_id, q.quality_fp,
-                     row_number() OVER (PARTITION BY l.component_id
-                                        ORDER BY q.quality_fp DESC, l.doc_id ASC) AS rk
-              FROM labels l JOIN qual q USING (doc_id)
-            )
-            SELECT component_id,
-                   count(*)::BIGINT AS n_members,
-                   min(CASE WHEN rk = 1 THEN doc_id END) AS keep_id,
-                   min(CASE WHEN rk = 1 THEN quality_fp END) AS keep_quality_fp,
-                   coalesce(sum(CASE WHEN rk > 1 THEN doc_id END), 0)::BIGINT AS dropped_id_sum
-            FROM rk GROUP BY 1
-        """,
-        "q_simhash": f"""
-            WITH {_SQL_SHINGLE_FPS64},
-            bits AS (
-              SELECT doc_id, fp, unnest(range({_SIMHASH_BITS})) AS b FROM fps
-            ),
-            sgn AS (
-              SELECT doc_id, b, sum(((fp >> b) & 1) * 2 - 1) AS s
-              FROM bits GROUP BY 1, 2
-            )
-            SELECT doc_id,
-                   sum(CASE WHEN s > 0 THEN 1::BIGINT << b ELSE 0 END)::BIGINT AS simhash
-            FROM sgn GROUP BY doc_id
-        """,
-        "q_simhash_neardup": f"""
-            WITH {_SQL_SHINGLE_FPS64},
-            bits AS (
-              SELECT doc_id, fp, unnest(range({_SIMHASH_BITS})) AS b FROM fps
-            ),
-            sgn AS (
-              SELECT doc_id, b, sum(((fp >> b) & 1) * 2 - 1) AS s
-              FROM bits GROUP BY 1, 2
-            ),
-            sim AS (
-              SELECT doc_id,
-                     sum(CASE WHEN s > 0 THEN 1::BIGINT << b ELSE 0 END)::BIGINT AS simhash
-              FROM sgn GROUP BY doc_id
-            ),
-            banded AS (
-              SELECT doc_id, simhash, j,
-                     (simhash >> ({_SIMHASH_BAND_WIDTH} * j))
-                       & {(1 << _SIMHASH_BAND_WIDTH) - 1} AS band_key
-              FROM (SELECT doc_id, simhash, unnest([0,1,2,3]) AS j FROM sim)
-            ),
-            pairs AS (
-              SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                     a.simhash AS sim_a, b.simhash AS sim_b
-              FROM banded a JOIN banded b
-                ON a.j = b.j AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-            )
-            SELECT doc_a, doc_b,
-                   bit_count(xor(sim_a, sim_b))::BIGINT AS hamming
-            FROM pairs
-            WHERE bit_count(xor(sim_a, sim_b)) <= 3
-        """,
-        "q_doc_fingerprint": f"""
-            WITH {_SQL_SHINGLE_FPS}
-            SELECT doc_id, rnk::BIGINT AS rnk, fp FROM (
-              SELECT doc_id, fp,
-                     row_number() OVER (PARTITION BY doc_id ORDER BY fp ASC) AS rnk
-              FROM fps
-            ) WHERE rnk <= 4
-        """,
-        "q_embedding_ann_lsh": f"""
-            WITH ed AS (
-              SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm,
-                     {_sql_hp_bucket(0, nb, _dims)}::BIGINT AS bkt
-              FROM (SELECT vec_id, [x::DOUBLE for x in embedding] AS v,
-                           [floor(x::DOUBLE * 1000000.0)::BIGINT
-                            for x in embedding] AS vfp
-                    FROM embeddings)
-            ),
-            scored AS (
-              SELECT q.vec_id AS query_id, q.bkt, e.vec_id AS neighbor_id,
-                     floor(list_dot_product(q.v, e.v) /
-                           (q.nrm * e.nrm) * 1000000.0)::BIGINT AS sim_fp
-              FROM ed q JOIN ed e ON q.bkt = e.bkt AND q.vec_id != e.vec_id
-            )
-            SELECT query_id, bkt::BIGINT AS bkt, neighbor_id, sim_fp, rnk::BIGINT AS rnk
-            FROM (
-              SELECT *, row_number() OVER (PARTITION BY query_id
-                                           ORDER BY sim_fp DESC, neighbor_id ASC) AS rnk
-              FROM scored
-            ) WHERE rnk <= 3
-        """,
-        "q_embedding_ann_lsh_mt": f"""
-            WITH ed AS (
-              SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm, vfp
-              FROM (SELECT vec_id, [x::DOUBLE for x in embedding] AS v,
-                           [floor(x::DOUBLE * 1000000.0)::BIGINT
-                            for x in embedding] AS vfp
-                    FROM embeddings)
-            ),
-            banded AS (
-              {" UNION ALL ".join(
-                  f"SELECT vec_id, {t} AS t, "
-                  f"{_sql_hp_bucket(t, nbm, _dims)}::BIGINT AS bkt FROM ed"
-                  for t in range(_LSH_TABLES)
-              )}
-            ),
-            cand AS (
-              SELECT DISTINCT a.vec_id AS query_id, b.vec_id AS neighbor_id
-              FROM banded a JOIN banded b
-                ON a.t = b.t AND a.bkt = b.bkt AND a.vec_id != b.vec_id
-            ),
-            scored AS (
-              SELECT c.query_id, c.neighbor_id,
-                     floor(list_dot_product(q.v, e.v) /
-                           (q.nrm * e.nrm) * 1000000.0)::BIGINT AS sim_fp
-              FROM cand c
-              JOIN ed q ON q.vec_id = c.query_id
-              JOIN ed e ON e.vec_id = c.neighbor_id
-            )
-            SELECT query_id, neighbor_id, sim_fp, rnk::BIGINT AS rnk
-            FROM (
-              SELECT *, row_number() OVER (PARTITION BY query_id
-                                           ORDER BY sim_fp DESC, neighbor_id ASC) AS rnk
-              FROM scored
-            ) WHERE rnk <= 3
-        """,
-        "q_embedding_ann_lsh_mp": f"""
-            WITH ed AS (
-              SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm, vfp
-              FROM (SELECT vec_id, [x::DOUBLE for x in embedding] AS v,
-                           [floor(x::DOUBLE * 1000000.0)::BIGINT
-                            for x in embedding] AS vfp
-                    FROM embeddings)
-            ),
-            {_sql_lsh_mp_tables(nbm, _dims, min(_LSH_MP_PROBES - 1, nbm))},
-            idx AS (
-              {" UNION ALL ".join(
-                  f"SELECT vec_id, {t} AS t, own AS bkt FROM hp{t}"
-                  for t in range(_LSH_MP_TABLES)
-              )}
-            ),
-            probe AS (
-              {" UNION ALL ".join(
-                  f"SELECT vec_id, {t} AS t, unnest(pbs) AS bkt FROM hp{t}"
-                  for t in range(_LSH_MP_TABLES)
-              )}
-            ),
-            cand AS (
-              SELECT DISTINCT p.vec_id AS query_id, i.vec_id AS neighbor_id
-              FROM probe p JOIN idx i
-                ON p.t = i.t AND p.bkt = i.bkt AND p.vec_id != i.vec_id
-            ),
-            scored AS (
-              SELECT c.query_id, c.neighbor_id,
-                     floor(list_dot_product(q.v, e.v) /
-                           (q.nrm * e.nrm) * 1000000.0)::BIGINT AS sim_fp
-              FROM cand c
-              JOIN ed q ON q.vec_id = c.query_id
-              JOIN ed e ON e.vec_id = c.neighbor_id
-            )
-            SELECT query_id, neighbor_id, sim_fp, rnk::BIGINT AS rnk
-            FROM (
-              SELECT *, row_number() OVER (PARTITION BY query_id
-                                           ORDER BY sim_fp DESC, neighbor_id ASC) AS rnk
-              FROM scored
-            ) WHERE rnk <= 3
-        """,
-        "q_embedding_neardup": f"""
-            WITH base AS (
-              SELECT vec_id, [x::DOUBLE for x in embedding] AS v FROM embeddings
-            ),
-            alle AS (
-              SELECT vec_id, v FROM base
-              UNION ALL
-              SELECT vec_id + 1000000 AS vec_id, [x * 2.0 for x in v] AS v
-              FROM base WHERE vec_id < 10
-            ),
-            eb AS (
-              SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm,
-                     list_sum([CASE WHEN v[i+1] > 0
-                                    THEN 1::BIGINT << i ELSE 0 END
-                               for i in range({nb})])::BIGINT AS bkt
-              FROM alle
-            )
-            SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-                   floor(list_dot_product(a.v, b.v) /
-                         (a.nrm * b.nrm) * 1000000.0)::BIGINT AS sim_fp
-            FROM eb a JOIN eb b ON a.bkt = b.bkt AND a.vec_id < b.vec_id
-            WHERE floor(list_dot_product(a.v, b.v) /
-                        (a.nrm * b.nrm) * 1000000.0) >= 999000
-        """,
-        "q_embedding_ann_ivf": f"""
-            WITH {_ivf_sql},
-            assigned AS (
-              SELECT vec_id, v, nrm, cid AS cell FROM ranked WHERE rn = 1
-            ),
-            scored AS (
-              SELECT q.vec_id AS query_id, q.cell, n.vec_id AS neighbor_id,
-                     floor(list_dot_product(q.v, n.v) /
-                           (q.nrm * n.nrm) * 1000000.0)::BIGINT AS sim_fp
-              FROM assigned q JOIN assigned n
-                ON q.cell = n.cell AND q.vec_id != n.vec_id
-            )
-            SELECT query_id, cell::BIGINT AS cell, neighbor_id, sim_fp, rnk::BIGINT AS rnk
-            FROM (
-              SELECT *, row_number() OVER (PARTITION BY query_id
-                                           ORDER BY sim_fp DESC, neighbor_id ASC) AS rnk
-              FROM scored
-            ) WHERE rnk <= 3
-        """,
-        "q_embedding_ann_ivf_mp": f"""
-            WITH {_ivf_sql},
-            probes AS (
-              SELECT vec_id AS query_id, cid AS cell
-              FROM ranked WHERE rn <= {_IVF_NPROBE}
-            ),
-            idx AS (
-              SELECT vec_id AS neighbor_id, cid AS cell
-              FROM ranked WHERE rn <= {_IVF_NINDEX}
-            ),
-            cand AS (
-              SELECT DISTINCT p.query_id, i.neighbor_id
-              FROM probes p JOIN idx i
-                ON p.cell = i.cell AND p.query_id != i.neighbor_id
-            ),
-            scored AS (
-              SELECT c.query_id, c.neighbor_id,
-                     floor(list_dot_product(q.v, e.v) /
-                           (q.nrm * e.nrm) * 1000000.0)::BIGINT AS sim_fp
-              FROM cand c
-              JOIN ed q ON q.vec_id = c.query_id
-              JOIN ed e ON e.vec_id = c.neighbor_id
-            )
-            SELECT query_id, neighbor_id, sim_fp, rnk::BIGINT AS rnk
-            FROM (
-              SELECT *, row_number() OVER (PARTITION BY query_id
-                                           ORDER BY sim_fp DESC, neighbor_id ASC) AS rnk
-              FROM scored
-            ) WHERE rnk <= 3
-        """,
-        "q_cluster_profile": f"""
-            WITH {_ivf_sql}
-            SELECT cid::BIGINT AS cell, count(*)::BIGINT AS n_vecs,
-                   min(vec_id) AS min_vec, max(vec_id) AS max_vec,
-                   sum(c_sim)::BIGINT AS sum_sim
-            FROM ranked WHERE rn = 1
-            GROUP BY 1
-        """,
-        "q_semdedup": f"""
-            WITH base AS (
-              SELECT vec_id, [x::DOUBLE for x in embedding] AS v FROM embeddings
-            ),
-            alle AS (
-              SELECT vec_id, v FROM base
-              UNION ALL
-              SELECT vec_id + 1000000 AS vec_id,
-                     [CASE WHEN i = 0 THEN 0.0 ELSE v[i + 1] END
-                      for i in range(len(v))] AS v
-              FROM base WHERE vec_id < {_SEMDEDUP_PLANT}
-            ),
-            {_ivf_sql_alle},
-            ordr AS (
-              SELECT vec_id, v, nrm, cid, c_sim,
-                     row_number() OVER (PARTITION BY cid
-                                        ORDER BY c_sim ASC, vec_id ASC) AS ord
-              FROM ranked WHERE rn = 1
-            ),
-            drops AS (
-              SELECT DISTINCT b.vec_id
-              FROM ordr a JOIN ordr b
-                ON a.cid = b.cid AND a.ord < b.ord
-              WHERE floor(list_dot_product(a.v, b.v) /
-                          (a.nrm * b.nrm) * 1000000.0)::BIGINT >= {_SEMDEDUP_TAU}
-            )
-            SELECT o.vec_id, o.cid::BIGINT AS cell, o.c_sim,
-                   (d.vec_id IS NOT NULL) AS dropped
-            FROM ordr o LEFT JOIN drops d ON d.vec_id = o.vec_id
-        """,
-        "q_embedding_topk": """
-            WITH ed AS (
-              SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM (
-                SELECT vec_id, [x::DOUBLE for x in embedding] AS v FROM embeddings
-              )
-            ),
-            scored AS (
-              SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-                     floor(list_dot_product(q.v, e.v) /
-                           (q.nrm * e.nrm) * 1000000.0)::BIGINT AS sim_fp
-              FROM ed q JOIN ed e ON q.vec_id < 20 AND q.vec_id != e.vec_id
-            )
-            SELECT query_id, neighbor_id, sim_fp, rnk::BIGINT AS rnk FROM (
-              SELECT *, row_number() OVER (PARTITION BY query_id
-                                           ORDER BY sim_fp DESC, neighbor_id ASC) AS rnk
-              FROM scored
-            ) WHERE rnk <= 5
-        """,
-        "q_lineitem_pricing": """
-            SELECT l_returnflag, l_linestatus,
-                   count(*)::BIGINT AS n_rows,
-                   sum(floor(l_quantity * 100.0))::BIGINT AS sum_qty_fp,
-                   sum(floor(l_extendedprice * 100.0))::BIGINT AS sum_base_fp,
-                   sum(floor(l_extendedprice * (1.0 - l_discount) * 100.0))::BIGINT AS sum_disc_fp
-            FROM lineitem
-            WHERE l_shipdate <= DATE '1998-09-02'
-            GROUP BY 1, 2
-        """,
-        "q_regional_revenue": """
-            SELECT r_name, n_name,
-                   sum(floor(l_extendedprice * (1.0 - l_discount) * 100.0))::BIGINT AS revenue_fp,
-                   count(*)::BIGINT AS n_items
-            FROM lineitem
-            JOIN orders   ON l_orderkey = o_orderkey
-            JOIN customer ON o_custkey = c_custkey
-            JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-            JOIN nation   ON c_nationkey = n_nationkey
-            JOIN region   ON n_regionkey = r_regionkey
-            GROUP BY 1, 2
-        """,
-        "q_agg_orders": """
-            SELECT o_orderstatus,
-                   count(*)::BIGINT AS n_orders,
-                   floor(sum(o_totalprice) * 100.0)::BIGINT AS sum_price_fp
-            FROM orders GROUP BY 1
-        """,
-        "q_rollup_orders": """
-            SELECT o_orderstatus, o_orderpriority,
-                   count(*)::BIGINT AS n_orders,
-                   floor(sum(o_totalprice) * 100.0)::BIGINT AS sum_price_fp
-            FROM orders GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
-        """,
-        "q_join_broadcast": """
-            SELECT c_mktsegment,
-                   count(*)::BIGINT AS n_orders,
-                   floor(sum(o_totalprice) * 100.0)::BIGINT AS sum_price_fp
-            FROM orders JOIN customer ON o_custkey = c_custkey
-            GROUP BY 1
-        """,
-        "q_anti_join": """
-            SELECT o_orderpriority, count(*)::BIGINT AS n_pending
-            FROM orders
-            WHERE NOT EXISTS (
-              SELECT 1 FROM customer
-              WHERE c_custkey = o_custkey AND c_acctbal < 0
-            )
-            GROUP BY 1
-        """,
-        "q_topk_per_group": """
-            SELECT user_id, event_id,
-                   floor(value * 100.0)::BIGINT AS value_fp,
-                   rnk::BIGINT AS rnk
-            FROM (
-              SELECT *, row_number() OVER (PARTITION BY user_id
-                                           ORDER BY value DESC, event_id ASC) AS rnk
-              FROM events
-            ) WHERE rnk <= 3
-        """,
-        "q_events_hourly": """
-            SELECT date_trunc('hour', ts) AS hour, event_type,
-                   count(*)::BIGINT AS n_events,
-                   floor(sum(value) * 100.0)::BIGINT AS sum_value_fp
-            FROM events GROUP BY 1, 2
-        """,
-        "q_median_value": """
-            WITH d AS (
-              SELECT event_type, event_id,
-                     floor(value * 100.0)::BIGINT AS vfp
-              FROM events
-            ),
-            ranked AS (
-              SELECT event_type, vfp,
-                     row_number() OVER (PARTITION BY event_type
-                                        ORDER BY vfp, event_id) AS rn,
-                     count(*) OVER (PARTITION BY event_type) AS n
-              FROM d
-            )
-            SELECT event_type,
-                   (sum(vfp) // count(*))::BIGINT AS median_fp,
-                   max(n)::BIGINT AS n_events
-            FROM ranked
-            WHERE rn = (n + 1) // 2 OR rn = (n + 2) // 2
-            GROUP BY event_type
-        """,
-        "q_pivot_events": """
-            SELECT date_trunc('day', ts) AS day,
-                   count(*) FILTER (event_type = 'click')::BIGINT AS n_click,
-                   count(*) FILTER (event_type = 'view')::BIGINT AS n_view,
-                   count(*) FILTER (event_type = 'purchase')::BIGINT AS n_purchase,
-                   count(*) FILTER (event_type = 'signup')::BIGINT AS n_signup,
-                   count(*) FILTER (event_type = 'error')::BIGINT AS n_error
-            FROM events GROUP BY 1
-        """,
-        "q_distinct_counts": """
-            SELECT event_type,
-                   count(DISTINCT user_id)::BIGINT AS n_users,
-                   count(*)::BIGINT AS n_events
-            FROM events GROUP BY 1
-        """,
-        "q_funnel": """
-            WITH v AS (
-              SELECT user_id, min(epoch_us(ts)) AS t_view
-              FROM events WHERE event_type = 'view' GROUP BY 1
-            ),
-            c AS (
-              SELECT e.user_id, min(epoch_us(e.ts)) AS t_click
-              FROM events e JOIN v ON e.user_id = v.user_id
-              WHERE e.event_type = 'click'
-                AND epoch_us(e.ts) > v.t_view
-                AND epoch_us(e.ts) <= v.t_view + 3600000000
-              GROUP BY 1
-            ),
-            p AS (
-              SELECT e.user_id, min(epoch_us(e.ts)) AS t_purchase
-              FROM events e JOIN c ON e.user_id = c.user_id
-              WHERE e.event_type = 'purchase'
-                AND epoch_us(e.ts) > c.t_click
-                AND epoch_us(e.ts) <= c.t_click + 3600000000
-              GROUP BY 1
-            )
-            SELECT v.user_id,
-                   (1 + (c.t_click IS NOT NULL)::INT
-                      + (p.t_purchase IS NOT NULL)::INT)::BIGINT AS stage,
-                   v.t_view AS t_view_us
-            FROM v LEFT JOIN c ON v.user_id = c.user_id
-                   LEFT JOIN p ON v.user_id = p.user_id
-        """,
-        "q_stratified_sample": """
-            SELECT lang,
-                   count(*)::BIGINT AS n_docs,
-                   count(CASE WHEN ('0x' || substr(md5(doc_id::VARCHAR), 1, 15))::BIGINT % 100
-                                   < (CASE WHEN lang = 'en' THEN 5 ELSE 20 END)
-                              THEN 1 END)::BIGINT AS n_sampled,
-                   coalesce(sum(CASE WHEN ('0x' || substr(md5(doc_id::VARCHAR), 1, 15))::BIGINT % 100
-                                          < (CASE WHEN lang = 'en' THEN 5 ELSE 20 END)
-                                     THEN doc_id END), 0)::BIGINT AS sampled_id_sum
-            FROM documents GROUP BY lang
-        """,
-        "q_snapshot_delta": """
-            WITH a AS (
-              SELECT doc_id, md5(text) AS h_a FROM documents
-            ),
-            b AS (
-              SELECT doc_id,
-                     md5(CASE WHEN doc_id % 5 = 0 THEN text || ' v2'
-                              ELSE text END) AS h_b
-              FROM documents WHERE doc_id % 7 != 0
-              UNION ALL
-              SELECT doc_id + 1000000 AS doc_id, md5(text) AS h_b
-              FROM documents WHERE doc_id % 11 = 0
-            )
-            SELECT coalesce(a.doc_id, b.doc_id) AS doc_id,
-                   CASE WHEN a.h_a IS NULL THEN 'added'
-                        WHEN b.h_b IS NULL THEN 'deleted'
-                        WHEN a.h_a != b.h_b THEN 'changed'
-                        ELSE 'unchanged' END AS status
-            FROM a FULL OUTER JOIN b ON a.doc_id = b.doc_id
-        """,
-        "q_cube_events": """
-            SELECT event_type, weekday,
-                   count(*)::BIGINT AS n_events,
-                   floor(sum(value) * 100.0)::BIGINT AS sum_value_fp
-            FROM (
-              SELECT event_type, value,
-                     (dayofweek(ts) + 1)::BIGINT AS weekday
-              FROM events
-            ) GROUP BY CUBE (event_type, weekday)
-        """,
-        "q_grouping_sets": """
-            SELECT event_type, weekday,
-                   count(*)::BIGINT AS n_events,
-                   floor(sum(value) * 100.0)::BIGINT AS sum_value_fp
-            FROM (
-              SELECT event_type, value,
-                     (dayofweek(ts) + 1)::BIGINT AS weekday
-              FROM events
-            ) GROUP BY GROUPING SETS ((event_type), (weekday))
-        """,
-        "q_quantile_sketch": """
-            WITH hist AS (
-              SELECT event_type,
-                     floor(value * 100.0)::BIGINT AS bucket,
-                     count(*) AS cnt
-              FROM events GROUP BY 1, 2
-            ),
-            cum AS (
-              SELECT event_type, bucket, cnt,
-                     sum(cnt) OVER (PARTITION BY event_type ORDER BY bucket
-                                    ROWS BETWEEN UNBOUNDED PRECEDING
-                                    AND CURRENT ROW) AS cum,
-                     sum(cnt) OVER (PARTITION BY event_type) AS n
-              FROM hist
-            )
-            SELECT event_type,
-                   max(n)::BIGINT AS n_events,
-                   min(CASE WHEN cum >= (50 * n + 99) // 100 THEN bucket END) AS p50,
-                   min(CASE WHEN cum >= (90 * n + 99) // 100 THEN bucket END) AS p90,
-                   min(CASE WHEN cum >= (99 * n + 99) // 100 THEN bucket END) AS p99
-            FROM cum GROUP BY event_type
-        """,
-        "q_window_frames": """
-            SELECT user_id, event_id,
-                   floor(value * 100.0)::BIGINT AS value_fp,
-                   floor(lag(value, 1) OVER w * 100.0)::BIGINT AS prev_fp,
-                   floor(lead(value, 1) OVER w * 100.0)::BIGINT AS next_fp,
-                   floor(avg(floor(value * 100.0))
-                         OVER (PARTITION BY user_id ORDER BY ts, event_id
-                               ROWS BETWEEN 2 PRECEDING AND CURRENT ROW))::BIGINT AS roll3_fp
-            FROM events
-            WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        """,
-        "q_asof_join": """
-            WITH a AS (
-              SELECT user_id, ts, event_id AS a_event_id
-              FROM events WHERE event_type = 'purchase'
-            ),
-            b AS (
-              SELECT user_id, ts, event_id AS b_event_id
-              FROM events WHERE event_type = 'view'
-            )
-            SELECT a.a_event_id, b.b_event_id,
-                   (epoch_us(a.ts) - epoch_us(b.ts))::BIGINT AS gap_us
-            FROM a ASOF JOIN b
-              ON a.user_id = b.user_id AND a.ts >= b.ts
-        """,
-        "q_events_rollup": """
-            SELECT date_trunc('day', ts) AS day, event_type,
-                   count(*)::BIGINT AS n_events,
-                   floor(sum(value) * 100.0)::BIGINT AS sum_value_fp
-            FROM events GROUP BY ROLLUP (day, event_type)
-        """,
-        "q_json_extract": """
-            SELECT event_type,
-                   sum((props->>'k')::BIGINT)::BIGINT AS sum_k,
-                   max((props->>'k')::BIGINT) AS max_k,
-                   count(CASE WHEN (props->>'k')::BIGINT > 50 THEN 1 END)::BIGINT AS n_k_gt50
-            FROM events GROUP BY event_type
-        """,
-        "q_range_join": """
-            SELECT a.event_id AS a_event_id, count(*)::BIGINT AS n_views_1h
-            FROM events a JOIN events b
-              ON a.user_id = b.user_id
-             AND a.event_type = 'purchase' AND b.event_type = 'view'
-             AND epoch_us(b.ts) <= epoch_us(a.ts)
-             AND epoch_us(b.ts) > epoch_us(a.ts) - 3600000000
-            GROUP BY 1
-        """,
-        "q_image_decode": """
-            SELECT doc_id,
-                   (8 + doc_id % 16)::BIGINT AS width,
-                   (4 + doc_id % 8)::BIGINT AS height,
-                   ((8 + doc_id % 16) * (4 + doc_id % 8))::BIGINT AS n_px,
-                   ((doc_id % 256) * (8 + doc_id % 16) * (4 + doc_id % 8) * 3)::BIGINT AS px_sum
-            FROM documents
-        """,
-        "q_png_decode": """
-            SELECT doc_id,
-                   w::BIGINT AS width,
-                   h::BIGINT AS height,
-                   (w * h)::BIGINT AS n_px,
-                   (3 * h * (w * base + (w * (w - 1)) // 2))::BIGINT AS px_sum
-            FROM (
-              SELECT doc_id,
-                     8 + doc_id % 16 AS w,
-                     4 + doc_id % 8 AS h,
-                     doc_id % 200 AS base
-              FROM documents
-            )
-        """,
-        "q_gif_decode": """
-            WITH g AS (
-              SELECT doc_id, 8 + doc_id % 16 AS w, 4 + doc_id % 8 AS h,
-                     doc_id % 64 AS base
-              FROM documents
-            ),
-            mx AS (SELECT r AS x FROM range(0, 24) t(r)),
-            my AS (SELECT r AS y FROM range(0, 12) t(r)),
-            px AS (
-              SELECT g.doc_id, g.w, g.h, my.y, mx.x,
-                     4 * ((g.base + mx.x + 7 * my.y) % 64) AS v
-              FROM g JOIN my ON my.y < g.h JOIN mx ON mx.x < g.w
-            )
-            SELECT doc_id, max(w)::BIGINT AS width, max(h)::BIGINT AS height,
-                   count(*)::BIGINT AS n_px,
-                   (3 * sum(v))::BIGINT AS px_sum,
-                   (3 * sum((y * w + x) * v))::BIGINT AS pos_sum
-            FROM px GROUP BY doc_id
-        """,
-        "q_tiff_decode": """
-            WITH g AS (
-              SELECT doc_id, 8 + doc_id % 16 AS w, 4 + doc_id % 8 AS h,
-                     doc_id % 200 AS base
-              FROM documents
-            ),
-            mx AS (SELECT r AS x FROM range(0, 24) t(r)),
-            my AS (SELECT r AS y FROM range(0, 12) t(r)),
-            mc AS (SELECT r AS c FROM range(0, 3) t(r)),
-            px AS (
-              SELECT g.doc_id, g.w, g.h, my.y, mx.x,
-                     (g.base + mx.x + 7 * my.y + 50 * mc.c) % 256 AS v
-              FROM g JOIN my ON my.y < g.h JOIN mx ON mx.x < g.w, mc
-            )
-            SELECT doc_id, max(w)::BIGINT AS width, max(h)::BIGINT AS height,
-                   (count(*) / 3)::BIGINT AS n_px,
-                   sum(v)::BIGINT AS px_sum,
-                   sum((y * w + x) * v)::BIGINT AS pos_sum
-            FROM px GROUP BY doc_id
-        """,
-        "q_jpeg_decode": """
-            SELECT doc_id,
-                   (8 * tx)::BIGINT AS width,
-                   (8 * ty)::BIGINT AS height,
-                   (64 * tx * ty)::BIGINT AS n_px,
-                   (192 * (tx * ty * base
-                           + 5 * ty * (tx * (tx - 1)) // 2
-                           + 11 * tx * (ty * (ty - 1)) // 2))::BIGINT AS px_sum
-            FROM (
-              SELECT doc_id,
-                     1 + doc_id % 3 AS tx,
-                     1 + doc_id % 2 AS ty,
-                     doc_id % 151 AS base
-              FROM documents
-            )
-        """,
-        "q_jpeg_progressive": """
-            SELECT doc_id,
-                   (8 * tx)::BIGINT AS width,
-                   (8 * ty)::BIGINT AS height,
-                   (64 * tx * ty)::BIGINT AS n_px,
-                   (192 * (tx * ty * base
-                           + 5 * ty * (tx * (tx - 1)) // 2
-                           + 11 * tx * (ty * (ty - 1)) // 2))::BIGINT AS px_sum
-            FROM (
-              SELECT doc_id,
-                     1 + doc_id % 4 AS tx,
-                     1 + doc_id % 3 AS ty,
-                     20 + doc_id % 170 AS base
-              FROM documents
-            )
-        """,
-        "q_wav_decode": """
-            SELECT d.doc_id,
-                   max(d.n)::BIGINT AS n_samples,
-                   max(d.rate)::BIGINT AS sample_rate,
-                   max(d.ch)::BIGINT AS n_channels,
-                   sum(abs(((d.doc_id * 13 + 7 * t.t + 31 * c.c) % 201)
-                           - 100))::BIGINT AS amp_sum,
-                   max(abs(((d.doc_id * 13 + 7 * t.t + 31 * c.c) % 201)
-                           - 100))::BIGINT AS amp_max
-            FROM (
-              SELECT doc_id, 400 + doc_id % 100 AS n, 1 + doc_id % 2 AS ch,
-                     8000 + (doc_id % 5) * 1000 AS rate
-              FROM documents
-            ) d, range(0, 500) t(t), range(0, 2) c(c)
-            WHERE t.t < d.n AND c.c < d.ch
-            GROUP BY d.doc_id
-        """,
-        "q_g711_decode": """
-            WITH g AS (
-              SELECT doc_id, 300 + doc_id % 50 AS n, doc_id % 2 AS lawbit
-              FROM documents
-            ),
-            s AS (
-              SELECT g.doc_id, g.lawbit,
-                     (CASE WHEN (g.doc_id + t.t) % 2 = 0 THEN 1 ELSE -1 END) *
-                     (CASE WHEN g.lawbit = 0
-                           THEN (((13 * g.doc_id + 7 * t.t) % 16) * 8 + 132)
-                                  * (1 << ((5 * g.doc_id + 3 * t.t) % 8)) - 132
-                           ELSE CASE WHEN (5 * g.doc_id + 3 * t.t) % 8 = 0
-                                THEN ((13 * g.doc_id + 7 * t.t) % 16) * 16 + 8
-                                ELSE (((13 * g.doc_id + 7 * t.t) % 16) * 16 + 264)
-                                       * (1 << (((5 * g.doc_id + 3 * t.t) % 8) - 1))
-                                END
-                      END) AS v
-              FROM g, range(0, 350) t(t) WHERE t.t < g.n
-            )
-            SELECT doc_id,
-                   (CASE WHEN lawbit = 0 THEN 7 ELSE 6 END)::BIGINT AS fmt_code,
-                   count(*)::BIGINT AS n_samples,
-                   8000::BIGINT AS sample_rate,
-                   1::BIGINT AS n_channels,
-                   sum(v)::BIGINT AS val_sum,
-                   sum(abs(v))::BIGINT AS amp_sum,
-                   max(abs(v))::BIGINT AS amp_max
-            FROM s GROUP BY doc_id, lawbit
-        """,
-        "q_adpcm_decode": """
-            WITH g AS (
-              SELECT doc_id, 1 + doc_id % 2 AS ch, 65 * (1 + doc_id % 3) AS n
-              FROM documents
-            ),
-            d AS (
-              SELECT g.doc_id, g.ch, g.n, t.t, c.c,
-                     CASE WHEN t.t = 0 THEN 0 ELSE
-                       CASE (13 * g.doc_id + 7 * t.t + 31 * c.c) % 7
-                         WHEN 0 THEN -4 WHEN 1 THEN -3 WHEN 2 THEN -1
-                         WHEN 3 THEN 0 WHEN 4 THEN 1 WHEN 5 THEN 3
-                         ELSE 4 END
-                     END AS dl
-              FROM g, range(0, 195) t(t), range(0, 2) c(c)
-              WHERE t.t < g.n AND c.c < g.ch
-            ),
-            s AS (
-              SELECT doc_id, ch, n, c,
-                     ((29 * doc_id + 41 * c) % 201) - 100
-                       + sum(dl) OVER (PARTITION BY doc_id, c ORDER BY t) AS v
-              FROM d
-            )
-            SELECT doc_id,
-                   17::BIGINT AS fmt_code,
-                   max(n)::BIGINT AS n_samples,
-                   11025::BIGINT AS sample_rate,
-                   max(ch)::BIGINT AS n_channels,
-                   sum(v)::BIGINT AS val_sum,
-                   sum(abs(v))::BIGINT AS amp_sum,
-                   max(abs(v))::BIGINT AS amp_max
-            FROM s GROUP BY doc_id
-        """,
-        "q_mjpeg_frames": """
-            SELECT doc_id,
-                   nf::BIGINT AS n_frames,
-                   (8 * tx)::BIGINT AS width,
-                   (8 * ty)::BIGINT AS height,
-                   (192 * (nf * (tx * ty * base
-                                 + 5 * ty * (tx * (tx - 1)) // 2
-                                 + 11 * tx * (ty * (ty - 1)) // 2)
-                           + 17 * tx * ty * (nf * (nf - 1)) // 2))::BIGINT
-                       AS px_sum_all
-            FROM (
-              SELECT doc_id,
-                     1 + doc_id % 3 AS tx,
-                     1 + doc_id % 2 AS ty,
-                     doc_id % 100 AS base,
-                     1 + doc_id % 4 AS nf
-              FROM documents
-            )
-        """,
-        "q_binary_decode_envelope": """
-            SELECT doc_id,
-                   CASE WHEN doc_id % 10 = 7 THEN 'error' ELSE 'ok' END
-                       AS status,
-                   CASE WHEN doc_id % 10 = 7 THEN 0
-                        WHEN doc_id % 3 = 2 THEN 8 * (1 + doc_id % 3)
-                        ELSE 8 + doc_id % 16 END::BIGINT AS width,
-                   CASE WHEN doc_id % 10 = 7 THEN 0
-                        WHEN doc_id % 3 = 2 THEN 8 * (1 + doc_id % 2)
-                        ELSE 4 + doc_id % 8 END::BIGINT AS height,
-                   CASE WHEN doc_id % 10 = 7 THEN 0
-                        WHEN doc_id % 3 = 2
-                             THEN 64 * (1 + doc_id % 3) * (1 + doc_id % 2)
-                        ELSE (8 + doc_id % 16) * (4 + doc_id % 8)
-                        END::BIGINT AS n_px,
-                   CASE WHEN doc_id % 10 = 7 THEN 0
-                        WHEN doc_id % 3 = 0
-                             THEN (doc_id % 256) * (8 + doc_id % 16)
-                                  * (4 + doc_id % 8) * 3
-                        WHEN doc_id % 3 = 1
-                             THEN 3 * (4 + doc_id % 8)
-                                  * ((8 + doc_id % 16) * (doc_id % 200)
-                                     + ((8 + doc_id % 16)
-                                        * (8 + doc_id % 16 - 1)) // 2)
-                        ELSE 192 * ((1 + doc_id % 3) * (1 + doc_id % 2)
-                                    * (doc_id % 151)
-                                    + 5 * (1 + doc_id % 2)
-                                      * ((1 + doc_id % 3) * (doc_id % 3)) // 2
-                                    + 11 * (1 + doc_id % 3)
-                                      * ((1 + doc_id % 2) * (doc_id % 2)) // 2)
-                        END::BIGINT AS px_sum
-            FROM documents
-        """,
-        "q_sessionize": """
-            WITH g AS (
-              SELECT user_id, ts, event_id,
-                     CASE WHEN lag(ts) OVER w IS NULL
-                               OR epoch(ts) - epoch(lag(ts) OVER w) > 1800
-                          THEN 1 ELSE 0 END AS new_sess
-              FROM events
-              WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-            )
-            SELECT user_id,
-                   sum(new_sess)::BIGINT AS n_sessions,
-                   count(*)::BIGINT AS n_events
-            FROM g GROUP BY user_id
-        """,
+    """name -> DuckDB SQL for every queries() entry, read from the
+    builder's own `oracle` (a callable one is evaluated now, against the
+    SPARK_GRAFT_ORACLE_SF binding)."""
+    return {
+        name: fn.oracle() if callable(fn.oracle) else fn.oracle
+        for name, fn in queries().items()
     }
-    # prefix filtering is LOSSLESS vs the all-pairs baseline: identical
-    # result set, so the oracle is q_ngram_jaccard's by construction
-    sql["q_jaccard_prefix_join"] = sql["q_ngram_jaccard"]
-    return sql

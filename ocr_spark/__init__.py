@@ -14,6 +14,8 @@ Layout:
   sources/    readers (parquet; Iceberg behind import-try) + synth transcripts
   plans/      job composition: bucket/salt/resume/lineage/ordering
   streaming/  Structured Streaming wrapper (foreachBatch extraction)
+  queries/    the driver queries by family, each builder beside its DuckDB
+              oracle (listed in order by __spark_entry__.queries())
 """
 
 __version__ = "0.1.0"

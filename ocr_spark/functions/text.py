@@ -5,9 +5,9 @@ Every JVM-side text expression that more than one query spells is
 defined here once: the two word tokenizers, the word bigram and
 word-3-gram shingle, the n-gram md5 fingerprints and the md5-prefix
 hash.  The queries in
-__spark_entry__.py and the streams in ocr_spark/streaming/ both call
-these builders, so the DuckDB oracle SQL (written out independently in
-__spark_entry__.oracle_sql) checks the code the streams actually run.
+ocr_spark/queries/ and the streams in ocr_spark/streaming/ both call
+these builders, so the DuckDB oracle SQL (written out independently
+beside each query) checks the code the streams actually run.
 
 `extract_text` wraps the pure extractor for `x_extract_documents`
 (SELECT extract_text(text)).

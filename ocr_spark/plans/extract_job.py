@@ -116,9 +116,7 @@ def plan_extract(
     sort.  The input is scanned exactly once when the plan executes."""
     b = with_bucket(df, n_buckets)
     out = extract_turns(_salted_shuffle(b, True, slice_turns, num_partitions))
-    return out.withColumn(
-        "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets))
-    )
+    return with_bucket(out, n_buckets)
 
 
 def run_extract(

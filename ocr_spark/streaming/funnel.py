@@ -1,5 +1,5 @@
 """Streaming conversion funnel (P64): the continuous twin of the batch
-windowed funnel (P23, `__spark_entry__._q_funnel`).
+windowed funnel (P23, `ocr_spark.queries.analytics.q_funnel`).
 
 `applyInPandasWithState` keeps the events of each live user inside the
 watermark horizon; when the event-time watermark passes the user's last

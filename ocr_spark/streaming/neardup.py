@@ -1,5 +1,5 @@
 """Streaming MinHash near-dup — the continuous twin of the batch
-MinHash+LSH pipeline (P3, `__spark_entry__._q_minhash_lsh`).
+MinHash+LSH pipeline (P3, `ocr_spark.queries.dedup.q_minhash_lsh`).
 
 Stage map (batch -> stream):
   - shingle fingerprints + K=8 affine min-hash signature + 4x2 banding:

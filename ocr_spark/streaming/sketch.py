@@ -1,5 +1,5 @@
 """Streaming HyperLogLog — the continuous twin of the batch distinct
-sketch (P29, `__spark_entry__._q_hll_distinct`).
+sketch (P29, `ocr_spark.queries.sketches.q_hll_distinct`).
 
 The whole point of choosing HLL registers as the distinct summary is
 that they merge by MAX — which makes the streaming twin a NATIVE
@@ -21,7 +21,7 @@ replayed register row can never change a folded estimate.
 State bound: one long per (open window, lang, register) — at most
 64 x |langs| live cells per window horizon, independent of stream
 length or cardinality.  The register builders and the fold below are
-the batch query's own: `__spark_entry__._q_hll_distinct` calls them, so
+the batch query's own: `q_hll_distinct` calls them, so
 the DuckDB oracle checks the expressions this stream runs.
 """
 
@@ -128,7 +128,7 @@ def run_hll_register_stream(
 
 # ---------------------------------------------------------------------------
 # Streaming Count-Min (P62) — the continuous twin of the batch frequency
-# sketch (P21, `__spark_entry__._q_countmin_sketch`).
+# sketch (P21, `ocr_spark.queries.sketches.q_countmin_sketch`).
 # ---------------------------------------------------------------------------
 #
 # Count-Min cells merge by SUM, so — like the HLL registers above — the

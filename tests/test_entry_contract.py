@@ -41,9 +41,5 @@ def test_oracle_parity_sf0001(spark):
     from tools.compare_oracle import compare
 
     results = compare(SF_DIR)
-    bad = {
-        k: v
-        for k, v in results.items()
-        if not (v.startswith("OK") or v.startswith("rows-only"))
-    }
+    bad = {k: v for k, v in results.items() if not v.startswith("OK")}
     assert not bad, bad

@@ -70,11 +70,11 @@ def test_kcore_converges_within_fixed_rounds(spark):
     graphs are 500 nodes; sf0.1 is covered by the oracle equality, which
     would diverge if rounds were insufficient only if engines differed —
     so the fixpoint claim itself is pinned here)."""
-    import __spark_entry__ as entry
+    from ocr_spark.queries import graph
 
     sf = "/root/testdata/sf0.001"
-    e4 = entry._kcore_peel(entry._kcore_edges(spark, sf), entry._KCORE_ROUNDS)
-    e5 = entry._kcore_peel(e4, 1)
+    e4 = graph._kcore_peel(graph._kcore_edges(spark, sf), graph._KCORE_ROUNDS)
+    e5 = graph._kcore_peel(e4, 1)
     got4 = sorted((r.u, r.v) for r in e4.collect())
     got5 = sorted((r.u, r.v) for r in e5.collect())
     assert got4 == got5 and len(got4) > 0
@@ -82,4 +82,4 @@ def test_kcore_converges_within_fixed_rounds(spark):
     from collections import Counter
 
     deg = Counter(u for u, _ in got4)
-    assert min(deg.values()) >= entry._KCORE_K
+    assert min(deg.values()) >= graph._KCORE_K

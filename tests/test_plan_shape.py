@@ -14,9 +14,11 @@ import re
 import __spark_entry__ as entry
 from fixtures.gen import gen_transcripts
 from ocr_spark.plans.extract_job import plan_extract
+from ocr_spark.queries.vectors import _ivf_ranked_plan
 from ocr_spark.sources.transcripts import transcripts_from_pandas
 
 SF = "/root/testdata/sf0.001"
+Q = entry.queries()
 
 
 def _plan(df) -> str:
@@ -47,7 +49,7 @@ def test_flagship_single_exchange_and_scan(spark, tmp_path):
 
 
 def test_min_len_filter_pushdown(spark):
-    plan = _plan(entry._q_min_len_filter(spark, SF))
+    plan = _plan(Q["q_min_len_filter"](spark, SF))
     assert "GreaterThanOrEqual(n_chars,200)" in plan, plan
     rs = _read_schema_lines(plan)
     assert rs and "text" not in rs[0], (
@@ -56,30 +58,30 @@ def test_min_len_filter_pushdown(spark):
 
 
 def test_lineitem_pricing_date_pushdown(spark):
-    plan = _plan(entry._q_lineitem_pricing(spark, SF))
+    plan = _plan(Q["q_lineitem_pricing"](spark, SF))
     assert "LessThanOrEqual(l_shipdate" in plan, plan
 
 
 def test_join_broadcast_is_broadcast(spark):
-    plan = _plan(entry._q_join_broadcast(spark, SF))
+    plan = _plan(Q["q_join_broadcast"](spark, SF))
     assert "BroadcastHashJoin" in plan, plan
 
 
 def test_anti_join_is_broadcast_anti(spark):
-    plan = _plan(entry._q_anti_join(spark, SF))
+    plan = _plan(Q["q_anti_join"](spark, SF))
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
 
 
 def test_regional_revenue_broadcasts_fixed_dims(spark):
     """nation/region carry explicit hints (fixed 25/5 rows at any sf) —
     at least two broadcast joins must survive planning."""
-    plan = _plan(entry._q_regional_revenue(spark, SF))
+    plan = _plan(Q["q_regional_revenue"](spark, SF))
     assert plan.count("BroadcastHashJoin") >= 2, plan
 
 
 def test_countmin_single_scan(spark):
     """The sketch builds in ONE pass: one scan, no 4-way union re-read."""
-    plan = _plan(entry._q_countmin_sketch(spark, SF))
+    plan = _plan(Q["q_countmin_sketch"](spark, SF))
     assert plan.count("Scan parquet") == 1, plan
     assert "Union" not in plan, plan
 
@@ -89,7 +91,7 @@ def test_cm_heavy_hitters_broadcasts_sketch(spark):
     sketch and the 1-row total via BROADCAST (never shuffling the vocab
     onto the sketch), and the words table is checkpointed once — the
     visible plan reads the checkpoint, not the corpus three times."""
-    plan = _plan(entry._q_cm_heavy_hitters(spark, SF))
+    plan = _plan(Q["q_cm_heavy_hitters"](spark, SF))
     assert plan.count("Scan parquet") == 0, plan
     assert "ExistingRDD" in plan, plan
     assert plan.count("BroadcastHashJoin") >= 1, plan
@@ -99,8 +101,8 @@ def test_cm_heavy_hitters_broadcasts_sketch(spark):
 def test_ann_lsh_is_equi_join_not_cross(spark):
     """Bucket equi-joins must never degrade to cross products — the
     entire point of the LSH family at 100 TB."""
-    for q in (entry._q_embedding_ann_lsh, entry._q_embedding_ann_lsh_mt,
-              entry._q_embedding_ann_lsh_mp, entry._q_embedding_neardup):
+    for q in (Q["q_embedding_ann_lsh"], Q["q_embedding_ann_lsh_mt"],
+              Q["q_embedding_ann_lsh_mp"], Q["q_embedding_neardup"]):
         plan = _plan(q(spark, SF))
         assert "CartesianProduct" not in plan, plan
         assert "BroadcastNestedLoopJoin" not in plan, plan
@@ -111,7 +113,7 @@ def test_ann_lsh_mp_materializes_buckets_once(spark):
     checkpointed bucket materialization (hyperplane dots computed once
     per vector), never re-derive it from the corpus — 0 parquet scans in
     the visible plan, like the rest of the dedup/ANN family."""
-    plan = _plan(entry._q_embedding_ann_lsh_mp(spark, SF))
+    plan = _plan(Q["q_embedding_ann_lsh_mp"](spark, SF))
     assert plan.count("Scan parquet") == 0, plan
     assert "ExistingRDD" in plan, plan
 
@@ -121,10 +123,10 @@ def test_ivf_broadcasts_centroids_only(spark):
     table (assignment — asserted on the un-checkpointed quantizer plan,
     since the query materializes it once via localCheckpoint); the
     intra-cell search must stay an equi-join."""
-    assign_plan = _plan(entry._ivf_ranked_plan(spark, SF))
+    assign_plan = _plan(_ivf_ranked_plan(spark, SF))
     assert "CartesianProduct" not in assign_plan, assign_plan
     assert "BroadcastNestedLoopJoin" in assign_plan, assign_plan
-    plan = _plan(entry._q_embedding_ann_ivf(spark, SF))
+    plan = _plan(Q["q_embedding_ann_ivf"](spark, SF))
     assert "CartesianProduct" not in plan, plan
     # candidate search joins hash on the cell key
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan or (
@@ -137,7 +139,7 @@ def test_funnel_one_scan_one_exchange(spark):
     exchange on user_id: the three sequencing stages are cascaded
     windows over the same partitioning and the final per-user aggregate
     reuses it (the staged-join formulation measured 10 Exchanges)."""
-    plan = _plan(entry._q_funnel(spark, SF))
+    plan = _plan(Q["q_funnel"](spark, SF))
     assert plan.count("Scan parquet") == 1, plan
     assert plan.count("Exchange") == 1, plan
 
@@ -146,7 +148,7 @@ def test_snapshot_delta_two_scans(spark):
     """Snapshot A and derived snapshot B each cost exactly one corpus
     scan (B's survive/edit/re-key rows emit from a single conditional
     explode, not a union of two filters)."""
-    plan = _plan(entry._q_snapshot_delta(spark, SF))
+    plan = _plan(Q["q_snapshot_delta"](spark, SF))
     assert plan.count("Scan parquet") == 2, plan
     assert "Union" not in plan, plan
 
@@ -175,9 +177,9 @@ def test_grouping_sets_one_expand_two_projections(spark):
     marginals — the native groupingSets API must plan ONE Expand carrying
     exactly TWO projections (CUBE would expand to four).  Fails if the
     plan grows extra grouping projections."""
-    assert _expand_projections(_plan(entry._q_grouping_sets(spark, SF))) == 2
+    assert _expand_projections(_plan(Q["q_grouping_sets"](spark, SF))) == 2
     # and the CUBE twin really does cost four
-    assert _expand_projections(_plan(entry._q_cube_events(spark, SF))) == 4
+    assert _expand_projections(_plan(Q["q_cube_events"](spark, SF))) == 4
 
 
 def test_bloom_filter_broadcasts_bit_table(spark):
@@ -185,7 +187,7 @@ def test_bloom_filter_broadcasts_bit_table(spark):
     table (65,536 bits regardless of corpus size — broadcasting it is
     the whole point of a Bloom pre-filter), and build+probe must share
     the ONE checkpointed key materialization, not re-scan the corpus."""
-    plan = _plan(entry._q_bloom_filter(spark, SF))
+    plan = _plan(Q["q_bloom_filter"](spark, SF))
     assert "BroadcastHashJoin" in plan, plan
     assert "CartesianProduct" not in plan, plan
     assert plan.count("Scan parquet") == 0, plan
@@ -197,7 +199,7 @@ def test_hll_single_word_table(spark):
     read the ONE checkpointed distinct-word table (the corpus explode +
     distinct runs once), and the per-lang exact side joins broadcast
     (5 languages at any sf)."""
-    plan = _plan(entry._q_hll_distinct(spark, SF))
+    plan = _plan(Q["q_hll_distinct"](spark, SF))
     assert plan.count("Scan parquet") == 0, plan
     assert "ExistingRDD" in plan, plan
     assert "BroadcastHashJoin" in plan, plan
@@ -208,7 +210,7 @@ def test_inverted_index_window_is_salted(spark):
     a per-word window hands a stopword's entire posting list to ONE
     task.  Pins the salt column in every Window node's partition spec
     and the merge's bounded final aggregate."""
-    plan = _plan(entry._q_inverted_index(spark, SF))
+    plan = _plan(Q["q_inverted_index"](spark, SF))
     window_lines = [ln for ln in plan.splitlines() if "Window [" in ln]
     assert window_lines, plan
     for ln in window_lines:
@@ -222,8 +224,8 @@ def test_dedup_family_materializes_shared_tables(spark):
     the visible plan reads the checkpoint (ExistingRDD), not the corpus
     N times (q_minhash_lsh measured 12 parquet scans / 0 ReusedExchange
     before this design)."""
-    for q in (entry._q_minhash_lsh, entry._q_simhash_neardup,
-              entry._q_embedding_neardup, entry._q_jaccard_prefix_join):
+    for q in (Q["q_minhash_lsh"], Q["q_simhash_neardup"],
+              Q["q_embedding_neardup"], Q["q_jaccard_prefix_join"]):
         plan = _plan(q(spark, SF))
         assert plan.count("Scan parquet") == 0, plan
         assert "ExistingRDD" in plan, plan
@@ -234,7 +236,7 @@ def test_decontaminate_broadcasts_benchmark_side(spark):
     """P36: the benchmark-gram set and the plant-snippet table are the
     tiny sides — both joins must broadcast so corpus grams are probed
     map-side and never shuffled."""
-    plan = _plan(entry._q_decontaminate(spark, SF))
+    plan = _plan(Q["q_decontaminate"](spark, SF))
     assert plan.count("BroadcastHashJoin") >= 2, plan
     assert "SortMergeJoin" not in plan, plan
     assert "CartesianProduct" not in plan, plan
@@ -243,7 +245,7 @@ def test_decontaminate_broadcasts_benchmark_side(spark):
 def test_target_mix_broadcasts_rate_table(spark):
     """P37: the 5-row per-lang rate table broadcasts onto the gated
     scan; the count pass prunes to the lang column."""
-    plan = _plan(entry._q_target_mix_sample(spark, SF))
+    plan = _plan(Q["q_target_mix_sample"](spark, SF))
     assert "BroadcastHashJoin" in plan, plan
     assert "CartesianProduct" not in plan or "BroadcastNestedLoopJoin" in plan, plan
     rs = _read_schema_lines(plan)
@@ -255,7 +257,7 @@ def test_target_mix_broadcasts_rate_table(spark):
 def test_fuzzy_join_broadcasts_catalog_no_cross(spark):
     """P38: blocking turns the all-pairs levenshtein cross product into
     a broadcast equi-join on the blocking key."""
-    plan = _plan(entry._q_fuzzy_join(spark, SF))
+    plan = _plan(Q["q_fuzzy_join"](spark, SF))
     assert "BroadcastHashJoin" in plan, plan
     assert "CartesianProduct" not in plan, plan
 
@@ -264,7 +266,7 @@ def test_span_dedup_broadcasts_repeated_set(spark):
     """P40: the repeated-gram survivors (Zipf-small) broadcast back
     onto the positional gram stream; the word table is materialized
     once (checkpoint), not re-derived per side."""
-    plan = _plan(entry._q_span_dedup(spark, SF))
+    plan = _plan(Q["q_span_dedup"](spark, SF))
     assert "BroadcastHashJoin" in plan, plan
     assert plan.count("Scan parquet") == 0, plan
     assert "ExistingRDD" in plan, plan
@@ -276,7 +278,7 @@ def test_semdedup_cell_equijoin_not_cross(spark):
     never a cross product, and both pair sides + the final left join
     read the ONE checkpointed assigned/ordered table (quantizer
     assignment runs once, not three times)."""
-    plan = _plan(entry._q_semdedup(spark, SF))
+    plan = _plan(Q["q_semdedup"](spark, SF))
     assert "CartesianProduct" not in plan, plan
     assert plan.count("Scan parquet") == 0, plan
     assert "ExistingRDD" in plan, plan
@@ -285,7 +287,7 @@ def test_semdedup_cell_equijoin_not_cross(spark):
 def test_cluster_keeper_broadcasts_labels(spark):
     """P45: the component-label table (duplicate docs only — tiny next
     to the corpus) must BROADCAST onto the quality scan."""
-    plan = _plan(entry._q_cluster_keeper(spark, SF))
+    plan = _plan(Q["q_cluster_keeper"](spark, SF))
     assert "BroadcastHashJoin" in plan, plan
     assert "CartesianProduct" not in plan, plan
 
@@ -294,7 +296,7 @@ def test_importance_resample_broadcasts_stats(spark):
     """P46: the 256-row bucket-ratio table broadcasts onto the scoring
     pass, and the word table is materialized once (checkpoint) for the
     stats aggregate AND the scoring join."""
-    plan = _plan(entry._q_importance_resample(spark, SF))
+    plan = _plan(Q["q_importance_resample"](spark, SF))
     assert "BroadcastHashJoin" in plan, plan
     assert "CartesianProduct" not in plan, plan
     assert "ExistingRDD" in plan, plan
@@ -303,8 +305,8 @@ def test_importance_resample_broadcasts_stats(spark):
 def test_gopher_and_chunking_are_shuffle_free(spark):
     """P47/P48: pure per-document maps — ONE scan, ZERO exchanges, no
     Python UDF (whole-stage-codegen JVM expressions only)."""
-    for q in (entry._q_gopher_rules, entry._q_chunk_windows,
-              entry._q_c4_filters):
+    for q in (Q["q_gopher_rules"], Q["q_chunk_windows"],
+              Q["q_c4_filters"]):
         plan = _plan(q(spark, SF))
         assert plan.count("Scan parquet") == 1, plan
         assert plan.count("Exchange") == 0, plan
@@ -314,7 +316,7 @@ def test_gopher_and_chunking_are_shuffle_free(spark):
 def test_url_dedup_broadcast_anti_blocklist(spark):
     """P52: the domain blocklist is tiny and static — it must hit the
     corpus scan as a broadcast ANTI join, never a shuffle."""
-    plan = _plan(entry._q_url_dedup(spark, SF))
+    plan = _plan(Q["q_url_dedup"](spark, SF))
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
     assert "CartesianProduct" not in plan, plan
     assert plan.count("Scan parquet") == 1, plan
@@ -323,7 +325,7 @@ def test_url_dedup_broadcast_anti_blocklist(spark):
 def test_pack_sequences_one_exchange(spark):
     """P49: the per-(lang, shard) cumulative-offset window costs exactly
     one hash exchange — a global concat order would serialize at 100 TB."""
-    plan = _plan(entry._q_pack_sequences(spark, SF))
+    plan = _plan(Q["q_pack_sequences"](spark, SF))
     assert plan.count("Scan parquet") == 1, plan
     assert plan.count("Exchange") == 1, plan
 
@@ -331,7 +333,7 @@ def test_pack_sequences_one_exchange(spark):
 def test_pagerank_no_cross_products(spark):
     """P39: three unrolled Pregel rounds stay equi-join + hash-agg —
     a cross product anywhere means the rank/edge join key was lost."""
-    plan = _plan(entry._q_pagerank(spark, SF))
+    plan = _plan(Q["q_pagerank"](spark, SF))
     assert "CartesianProduct" not in plan, plan
     assert "ExistingRDD" in plan, plan
 
@@ -340,7 +342,7 @@ def test_outlier_events_broadcast_stats(spark):
     """P55: both per-type stats tables (mean, variance) are 5 rows —
     they must come back onto the event scan as BROADCAST joins over the
     once-materialized narrow projection, never shuffled joins."""
-    plan = _plan(entry._q_outlier_events(spark, SF))
+    plan = _plan(Q["q_outlier_events"](spark, SF))
     assert plan.count("BroadcastHashJoin") >= 2, plan
     assert "SortMergeJoin" not in plan and "CartesianProduct" not in plan
     assert "ExistingRDD" in plan, plan  # localCheckpoint materialize-once
@@ -350,8 +352,8 @@ def test_analytics_tier_single_scan(spark):
     """P54/P56/P57/P58: retention, skyline, profile, and trend each read
     the events table exactly ONCE (the profile oracle needs five scans —
     the stack() unpivot is the point) with no Python in the plan."""
-    for q in (entry._q_retention_cohorts, entry._q_pareto_frontier,
-              entry._q_table_profile, entry._q_trend_slope):
+    for q in (Q["q_retention_cohorts"], Q["q_pareto_frontier"],
+              Q["q_table_profile"], Q["q_trend_slope"]):
         plan = _plan(q(spark, SF))
         assert plan.count("Scan parquet") == 1, plan
         assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
@@ -362,7 +364,7 @@ def test_pareto_local_prune_before_global_window(spark):
     """P56: the global skyline window must be fed by the salt-partitioned
     LOCAL skyline (two Window nodes) — without local pruning the global
     single-partition sort sees every distinct point."""
-    plan = _plan(entry._q_pareto_frontier(spark, SF))
+    plan = _plan(Q["q_pareto_frontier"](spark, SF))
     assert plan.count("Window") >= 2, plan
 
 
@@ -370,7 +372,7 @@ def test_bm25_distributed_topk_and_broadcasts(spark):
     """P61: the top-10 must be a distributed TakeOrderedAndProject (never
     a single-partition window over matched docs), the query-term and df
     tables must broadcast, and the word table is materialized once."""
-    plan = _plan(entry._q_bm25_topk(spark, SF))
+    plan = _plan(Q["q_bm25_topk"](spark, SF))
     assert "TakeOrderedAndProject" in plan, plan
     assert plan.count("BroadcastHashJoin") >= 2, plan
     assert "ExistingRDD" in plan, plan
@@ -407,14 +409,14 @@ def test_bloom_join_broadcasts_filter_structures(spark):
     no broadcast hint (ADVICE r4): at this sf Catalyst still broadcasts
     them from size stats, which is fine — the pin is that WE never force
     it, so at 100 TB stats drive the same joins to shuffle."""
-    plan = _plan(entry._q_bloom_join(spark, SF))
+    plan = _plan(Q["q_bloom_join"](spark, SF))
     assert plan.count("BroadcastHashJoin") >= 1, plan
     assert "CartesianProduct" not in plan, plan
     assert "ExistingRDD" in plan, plan
     # the source carries exactly one broadcast() hint (the bit table)
     import inspect
 
-    src = inspect.getsource(entry._q_bloom_join)
+    src = inspect.getsource(Q["q_bloom_join"])
     assert src.count("F.broadcast(") == 1, src
 
 

@@ -11,12 +11,8 @@ tests pin the corpus-size-driven rules that replace them:
 
 import numpy as np
 
-from __spark_entry__ import (
-    _SIMHASH_BAND_WIDTH,
-    _SIMHASH_BITS,
-    _ivf_cells,
-    _lsh_bits,
-)
+from ocr_spark.queries.dedup import _SIMHASH_BAND_WIDTH, _SIMHASH_BITS
+from ocr_spark.queries.vectors import _ivf_cells, _lsh_bits
 
 
 def test_lsh_bits_grow_with_corpus():
@@ -93,7 +89,7 @@ def test_ivf_trainer_reads_at_most_sample_cap(tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from __spark_entry__ import (
+    from ocr_spark.queries.vectors import (
         _IVF_SAMPLE_PER_CELL,
         _ivf_training_sample,
     )
@@ -129,7 +125,7 @@ def test_ivf_trainer_small_table_reads_all(tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from __spark_entry__ import _ivf_training_sample
+    from ocr_spark.queries.vectors import _ivf_training_sample
 
     n, dim = 500, 4
     rng = np.random.default_rng(11)

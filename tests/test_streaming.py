@@ -218,12 +218,13 @@ def test_stream_minhash_neardup_parity_with_batch(spark, dirs):
     (doc_a, doc_b), so the comparison deduplicates first.
     """
     import __spark_entry__ as entry
+    from ocr_spark.queries.dedup import _docs_with_planted_dups
     from ocr_spark.streaming import run_minhash_neardup_stream
 
     sf = "/root/testdata/sf0.001"
     inp, outp, ckpt = dirs
     pdf = (
-        entry._docs_with_planted_dups(spark, sf)
+        _docs_with_planted_dups(spark, sf)
         .select("doc_id", "text")
         .toPandas()
     )
@@ -251,7 +252,7 @@ def test_stream_minhash_neardup_parity_with_batch(spark, dirs):
         .astype("int64")
     )
     want = (
-        entry._q_minhash_lsh(spark, sf)
+        entry.queries()["q_minhash_lsh"](spark, sf)
         .toPandas()
         .sort_values(["doc_a", "doc_b"])
         .reset_index(drop=True)

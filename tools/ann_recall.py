@@ -1,8 +1,9 @@
 """ANN quality instrumentation: recall@k of the engine's two approximate
 search paths against exact brute force, plus the multi-probe tradeoff.
 
-Pure-NumPy twin of the query semantics in __spark_entry__ (same sign-LSH
-bucket rule via _lsh_bits, same lowest-id IVF quantizer via _ivf_cells),
+Pure-NumPy twin of the query semantics in ocr_spark/queries/vectors.py
+(same sign-LSH bucket rule via _lsh_bits, same lowest-id IVF quantizer
+via _ivf_cells),
 run over a driver sf dir.  Prints one JSON line:
 
   {"sf_dir": ..., "n": ..., "lsh": {"bits": b, "recall_at_3": r,
@@ -33,7 +34,7 @@ import pyarrow.parquet as pq
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from __spark_entry__ import (  # noqa: E402
+from ocr_spark.queries.vectors import (  # noqa: E402
     _IVF_NINDEX,
     _IVF_NPROBE,
     _LSH_MP_PROBES,

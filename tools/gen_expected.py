@@ -27,7 +27,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-# Must match _x_extract_documents in __spark_entry__.py byte-for-byte.
+# Must match x_extract_documents in ocr_spark/queries/pipeline.py byte-for-byte.
 HTML_PREFIX = '<nav><a href="/h">Home</a> <a href="/a">About</a></nav><p>'
 HTML_SUFFIX = '</p><footer>Copyright <a href="/t">Terms</a></footer>'
 
