@@ -33,15 +33,24 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+# --mode -> the streaming operator it launches (by name in
+# ocr_spark.streaming, so argparse answers before pyspark is imported)
+MODES = {
+    "extract": "extract_turns",
+    "dedup": "dedup_turns",
+    "rate": "turn_rates",
+    "decontam": "decontam_flags",
+    "quality": "quality_gate",
+    "resample": "importance_scores",
+}
+
+
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(description="ocr_spark streaming extraction")
     p.add_argument("--input", required=True)
     p.add_argument("--output", required=True)
     p.add_argument("--checkpoint", required=True)
-    p.add_argument("--mode",
-                   choices=("extract", "dedup", "rate", "decontam",
-                            "quality", "resample"),
-                   default="extract")
+    p.add_argument("--mode", choices=tuple(MODES), default="extract")
     p.add_argument("--bench-file", default=None,
                    help="decontam mode: file of benchmark texts, one per line")
     p.add_argument("--ratio-file", default=None,
@@ -58,24 +67,27 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--master", default=None)
     args = p.parse_args(argv)
 
-    from ocr_spark.plans.session import build_session
-    from ocr_spark.streaming import (
-        bench_gram_fingerprints,
-        run_decontam_stream,
-        run_dedup_stream,
-        run_extract_stream,
-        run_importance_stream,
-        run_quality_gate_stream,
-        run_turn_rate_stream,
-    )
-
     if args.mode == "decontam" and not args.bench_file:
         p.error("--mode decontam requires --bench-file")
     if args.mode == "resample" and not args.ratio_file:
         p.error("--mode resample requires --ratio-file")
 
-    spark = build_session(app_name=f"ocr_spark_stream_{args.mode}",
-                          master=args.master)
+    from ocr_spark import streaming
+    from ocr_spark.plans import session
+
+    params = {}
+    if args.mode == "decontam":
+        with open(args.bench_file, encoding="utf-8") as fh:
+            texts = [ln.strip() for ln in fh if ln.strip()]
+        params["bench_grams"] = streaming.bench_gram_fingerprints(texts)
+    elif args.mode == "resample":
+        import json
+
+        with open(args.ratio_file, encoding="utf-8") as fh:
+            params["ratio_ppm"] = json.load(fh)
+
+    spark = session.build_session(app_name=f"ocr_spark_stream_{args.mode}",
+                                  master=args.master)
     # Per-mode checkpoint AND output subdirs: the file-source offset log
     # is specific to one query shape (reusing a checkpoint across modes
     # would make the new mode see every input file as already committed
@@ -83,50 +95,14 @@ def main(argv: list[str] | None = None) -> int:
     # (interleaving extract/dedup/rate rows in one parquet directory
     # breaks downstream reads).  Same-mode reuse stays the legitimate
     # resume path for both.
-    ckpt = os.path.join(args.checkpoint, args.mode)
-    out = os.path.join(args.output, args.mode)
-    if args.mode == "extract":
-        q = run_extract_stream(
-            spark, args.input, out, ckpt,
-            available_now=args.drain,
-            max_files_per_trigger=args.max_files_per_trigger,
-        )
-    elif args.mode == "decontam":
-        with open(args.bench_file, encoding="utf-8") as fh:
-            texts = [ln.strip() for ln in fh if ln.strip()]
-        q = run_decontam_stream(
-            spark, args.input, bench_gram_fingerprints(texts), out, ckpt,
-            available_now=args.drain,
-            max_files_per_trigger=args.max_files_per_trigger,
-        )
-    elif args.mode == "quality":
-        q = run_quality_gate_stream(
-            spark, args.input, out, ckpt,
-            available_now=args.drain,
-            max_files_per_trigger=args.max_files_per_trigger,
-        )
-    elif args.mode == "resample":
-        import json
-
-        with open(args.ratio_file, encoding="utf-8") as fh:
-            ratios = json.load(fh)
-        q = run_importance_stream(
-            spark, args.input, ratios, out, ckpt,
-            available_now=args.drain,
-            max_files_per_trigger=args.max_files_per_trigger,
-        )
-    elif args.mode == "dedup":
-        q = run_dedup_stream(
-            spark, args.input, out, ckpt,
-            available_now=args.drain,
-            max_files_per_trigger=args.max_files_per_trigger,
-        )
-    else:
-        q = run_turn_rate_stream(
-            spark, args.input, out, ckpt,
-            available_now=args.drain,
-            max_files_per_trigger=args.max_files_per_trigger,
-        )
+    q = streaming.start_stream(
+        spark, getattr(streaming, MODES[args.mode]), args.input,
+        os.path.join(args.output, args.mode),
+        os.path.join(args.checkpoint, args.mode),
+        available_now=args.drain,
+        max_files_per_trigger=args.max_files_per_trigger,
+        **params,
+    )
     q.awaitTermination()
     return 0
 

@@ -13,7 +13,7 @@ Layout:
   functions/  scalar pandas_udfs + Column helpers
   sources/    readers (parquet; Iceberg behind import-try) + synth transcripts
   plans/      job composition: bucket/salt/resume/lineage/ordering
-  streaming/  Structured Streaming wrapper (foreachBatch extraction)
+  streaming/  Structured Streaming operators, run by one start_stream launcher
   queries/    the driver queries by family, each builder beside its DuckDB
               oracle (listed in order by __spark_entry__.queries())
 """

@@ -112,8 +112,9 @@ def plan_extract(
     slice_turns: int = SALT_SLICE_TURNS,
 ) -> DataFrame:
     """Build the extraction DataFrame (no I/O, no planning-time jobs):
-    bucket -> slice salt -> repartition -> mapInPandas -> per-partition
-    sort.  The input is scanned exactly once when the plan executes."""
+    bucket -> slice salt -> repartition -> per-partition sort ->
+    mapInPandas (`_salted_shuffle` sorts the input; the UDF keeps its
+    order).  The input is scanned exactly once when the plan executes."""
     b = with_bucket(df, n_buckets)
     out = extract_turns(_salted_shuffle(b, True, slice_turns, num_partitions))
     return with_bucket(out, n_buckets)

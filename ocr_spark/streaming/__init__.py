@@ -1,24 +1,26 @@
+from ocr_spark.streaming.launch import start_stream  # noqa: F401
 from ocr_spark.streaming.extract_stream import (  # noqa: F401
     bench_gram_fingerprints,
+    decontam_flags,
+    dedup_turns,
     dsir_ratio_table,
-    run_decontam_stream,
-    run_dedup_stream,
-    run_enrich_stream,
+    enrich,
+    extract_turns,
+    importance_scores,
+    quality_gate,
     run_extract_stream,
-    run_importance_stream,
-    run_quality_gate_stream,
-    run_turn_rate_stream,
+    turn_rates,
 )
 from ocr_spark.streaming.funnel import (  # noqa: F401
     run_funnel_stream,
 )
 from ocr_spark.streaming.neardup import (  # noqa: F401
-    run_minhash_neardup_stream,
+    minhash_neardup_pairs,
 )
 from ocr_spark.streaming.sketch import (  # noqa: F401
+    countmin_window_cells,
     hll_estimate,
-    run_countmin_cell_stream,
-    run_hll_register_stream,
+    hll_window_registers,
 )
 from ocr_spark.streaming.sessionize import (  # noqa: F401
     run_sessionize_stream,

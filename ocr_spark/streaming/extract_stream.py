@@ -4,8 +4,9 @@ The batch north rule is resume-from-checkpoint batch (SURVEY.md §2.11),
 but the same per-turn operator runs unchanged as a continuous pipeline:
 `readStream` over an arriving-files transcripts directory →
 `extract_turns` (stateless mapInPandas — the whole G1-G26 pipeline) →
-the parquet sink (`sinks.writers.start_parquet_sink`) with Spark's own
-checkpointing.
+the parquet sink with Spark's own checkpointing.  Every operator in this
+module is such a DataFrame -> DataFrame transform over the transcripts
+schema; `streaming.launch.start_stream` runs any of them.
 
 Design notes (scale):
   - The extractor is a pure per-row map, so the streaming query is
@@ -36,43 +37,30 @@ from ocr_spark.functions.text import (
     md5_long,
 )
 from ocr_spark.operators.extract_op import extract_turns
-from ocr_spark.sinks.writers import start_parquet_sink
-from ocr_spark.sources.transcripts import TRANSCRIPTS_SCHEMA, read_stream
+from ocr_spark.sources.transcripts import TRANSCRIPTS_SCHEMA
+from ocr_spark.streaming.launch import (
+    DEDUP_WATERMARK,
+    closed_windows,
+    start_stream,
+    stream_op,
+)
 
 
-def run_turn_rate_stream(
-    spark: SparkSession,
-    input_path: str,
-    output_path: str,
-    checkpoint_path: str,
-    available_now: bool = False,
-    watermark: str = "30 minutes",
-    window: str = "1 hour",
-    max_files_per_trigger: int | None = None,
-) -> StreamingQuery:
+@stream_op(TRANSCRIPTS_SCHEMA)
+def turn_rates(turns: DataFrame) -> DataFrame:
     """Stateful streaming aggregation with late-data handling: turns per
-    (event-time window, role), watermarked.
+    (event-time window, role), watermarked (`closed_windows`: each window
+    emits once, when the watermark passes its end).
 
-    Append mode + watermark = a window emits exactly once, when the
-    watermark (max event time - `watermark`) passes its end; turns later
-    than the watermark are dropped rather than corrupting closed windows.
     This is the monitoring-side twin of the extraction stream (per-window
     turn rates feed capacity planning for the 10^12-turn pipeline); state
     is bounded by watermark horizon, not stream length.
     """
-    turns = read_stream(spark, input_path, TRANSCRIPTS_SCHEMA, max_files_per_trigger)
-    agg = (
-        turns.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("win"), "role")
-        .agg(F.count(F.lit(1)).alias("n_turns"))
-        .select(
-            F.col("win.start").alias("window_start"),
-            F.col("win.end").alias("window_end"),
-            "role",
-            "n_turns",
-        )
-    )
-    return start_parquet_sink(agg, output_path, checkpoint_path, available_now)
+    return closed_windows(turns, ["role"], F.count(F.lit(1)).alias("n_turns"))
+
+
+# The per-row extraction operator itself is the streaming operator.
+stream_op(TRANSCRIPTS_SCHEMA)(extract_turns)
 
 
 def run_extract_stream(
@@ -84,20 +72,14 @@ def run_extract_stream(
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Start the streaming extraction query (returns the live query)."""
-    turns = read_stream(spark, input_path, TRANSCRIPTS_SCHEMA, max_files_per_trigger)
-    extracted = extract_turns(turns)
-    return start_parquet_sink(extracted, output_path, checkpoint_path, available_now)
+    return start_stream(
+        spark, extract_turns, input_path, output_path, checkpoint_path,
+        available_now, max_files_per_trigger,
+    )
 
 
-def run_enrich_stream(
-    spark: SparkSession,
-    input_path: str,
-    dim_df: DataFrame,
-    output_path: str,
-    checkpoint_path: str,
-    available_now: bool = False,
-    max_files_per_trigger: int | None = None,
-) -> StreamingQuery:
+@stream_op(TRANSCRIPTS_SCHEMA)
+def enrich(turns: DataFrame, dim_df: DataFrame) -> DataFrame:
     """Stream-static enrichment join: each streaming turn is joined
     against a STATIC dimension table (e.g. conversation metadata /
     language routing) on conv_id.  Stream-static joins are stateless —
@@ -106,22 +88,13 @@ def run_enrich_stream(
     so at 10^12 turns this stays a per-batch map-side hash join.  Left
     join: an unmatched turn passes through with NULL enrichment (the
     ingest contract never drops data because a dim row is late)."""
-    turns = read_stream(spark, input_path, TRANSCRIPTS_SCHEMA, max_files_per_trigger)
-    enriched = turns.join(dim_df, "conv_id", "left")
-    return start_parquet_sink(enriched, output_path, checkpoint_path, available_now)
+    return turns.join(dim_df, "conv_id", "left")
 
 
-def run_dedup_stream(
-    spark: SparkSession,
-    input_path: str,
-    output_path: str,
-    checkpoint_path: str,
-    available_now: bool = False,
-    watermark: str = "1 hour",
-    max_files_per_trigger: int | None = None,
-) -> StreamingQuery:
+@stream_op(TRANSCRIPTS_SCHEMA)
+def dedup_turns(turns: DataFrame) -> DataFrame:
     """Streaming exact dedup (P1's continuous twin): drop turns whose
-    payload hash was already seen within the watermark horizon.
+    payload hash was already seen within the DEDUP_WATERMARK horizon.
 
     `dropDuplicatesWithinWatermark` keys state on md5(text) and — unlike
     plain dropDuplicates — EVICTS state once the watermark passes an
@@ -135,26 +108,24 @@ def run_dedup_stream(
     is not a repeated payload): they get a per-row key and always pass
     through.  Empty-string payloads DO dedup against each other.
     """
-    turns = read_stream(spark, input_path, TRANSCRIPTS_SCHEMA, max_files_per_trigger)
     dedup_key = F.when(
         F.col("text").isNotNull(), F.md5("text")
     ).otherwise(F.concat_ws("#", F.lit("null"), "conv_id", "turn_idx"))
-    deduped = (
+    return (
         turns.withColumn("text_md5", dedup_key)
-        .withWatermark("ts", watermark)
+        .withWatermark("ts", DEDUP_WATERMARK)
         .dropDuplicatesWithinWatermark(["text_md5"])
         .drop("text_md5")
     )
-    return start_parquet_sink(deduped, output_path, checkpoint_path, available_now)
 
 
 DECON_GRAM_WORDS = 13
 
 
-def bench_gram_fingerprints(texts: list[str], gram: int = DECON_GRAM_WORDS) -> list[str]:
-    """Fixed-width 16-hex md5 fingerprints of every `gram`-word shingle
-    of the given benchmark texts, under the SAME canonicalization the
-    stream side applies (lowercase, letters-only, collapsed whitespace).
+def bench_gram_fingerprints(texts: list[str]) -> list[str]:
+    """Fixed-width 16-hex md5 fingerprints of every DECON_GRAM_WORDS-word
+    shingle of the given benchmark texts, under the SAME canonicalization
+    the stream side applies (lowercase, letters-only, collapsed whitespace).
     Pure Python on purpose: the benchmark suite is driver-resident and
     tiny (MMLU-sized), and the list is injected into the streaming plan
     as a literal — the streaming analogue of a broadcast variable."""
@@ -165,38 +136,29 @@ def bench_gram_fingerprints(texts: list[str], gram: int = DECON_GRAM_WORDS) -> l
     for t in texts:
         ws = re.sub(r" +", " ", re.sub(r"[^A-Za-z ]", " ", t.lower())).strip()
         words = ws.split(" ") if ws else []
-        for i in range(len(words) - gram + 1):
-            key = " ".join(words[i : i + gram])
+        for i in range(len(words) - DECON_GRAM_WORDS + 1):
+            key = " ".join(words[i : i + DECON_GRAM_WORDS])
             out.add(hashlib.md5(key.encode()).hexdigest()[:16])
     return sorted(out)
 
 
-def run_decontam_stream(
-    spark: SparkSession,
-    input_path: str,
-    bench_grams: list[str],
-    output_path: str,
-    checkpoint_path: str,
-    available_now: bool = False,
-    max_files_per_trigger: int | None = None,
-    gram: int = DECON_GRAM_WORDS,
-) -> StreamingQuery:
+@stream_op(TRANSCRIPTS_SCHEMA)
+def decontam_flags(turns: DataFrame, bench_grams: list[str]) -> DataFrame:
     """Streaming benchmark decontamination (P36's continuous twin): flag
-    turns sharing any `gram`-word shingle with a held-out benchmark set
-    WHILE the corpus is being ingested, so contaminated documents never
-    reach the training sink at all.
+    turns sharing any DECON_GRAM_WORDS-word shingle with a held-out
+    benchmark set WHILE the corpus is being ingested, so contaminated
+    documents never reach the training sink at all.
 
     The benchmark fingerprint set is injected as an ARRAY LITERAL (see
     bench_gram_fingerprints) rather than joined: benchmark suites are
     tiny and static, so this is a pure stateless per-row map — no
     stream-static join to re-plan, no watermark, no state store; state
     per row is O(|bench| + turn length), and exactly-once comes from the
-    file sink's transaction log, same as run_extract_stream.  n_hits
+    file sink's transaction log, same as the extraction stream.  n_hits
     counts DISTINCT matching shingles (array_intersect semantics — the
     batch P36 counts occurrences; a turn is contaminated under either
     definition iff n_hits > 0, which is the gate that matters).
     """
-    turns = read_stream(spark, input_path, TRANSCRIPTS_SCHEMA, max_files_per_trigger)
     # empty-set cast keeps array_intersect type-resolved when the
     # benchmark list is empty (array() alone is array<void>)
     bench = (
@@ -204,9 +166,9 @@ def run_decontam_stream(
         if bench_grams
         else F.array().cast("array<string>")
     )
-    flagged = (
+    return (
         turns.withColumn("ws", letter_words())
-        .withColumn("g", gram_fingerprints("ws", gram))
+        .withColumn("g", gram_fingerprints("ws", DECON_GRAM_WORDS))
         .select(
             "conv_id",
             "turn_idx",
@@ -216,7 +178,6 @@ def run_decontam_stream(
         )
         .withColumn("contaminated", F.col("n_hits") > 0)
     )
-    return start_parquet_sink(flagged, output_path, checkpoint_path, available_now)
 
 
 def gopher_features(
@@ -284,15 +245,11 @@ def gopher_passes(min_words: int, **extra: Column) -> list[Column]:
     ]
 
 
-def run_quality_gate_stream(
-    spark: SparkSession,
-    input_path: str,
-    output_path: str,
-    checkpoint_path: str,
-    available_now: bool = False,
-    max_files_per_trigger: int | None = None,
-    min_words: int = 5,
-) -> StreamingQuery:
+QUALITY_MIN_WORDS = 5
+
+
+@stream_op(TRANSCRIPTS_SCHEMA)
+def quality_gate(turns: DataFrame) -> DataFrame:
     """Streaming Gopher-style quality gate (P47's continuous twin): the
     MassiveText heuristic rules applied per turn DURING ingest, so junk
     payloads are flagged before they ever reach the training sink.
@@ -301,18 +258,16 @@ def run_quality_gate_stream(
     (`gopher_features`, `gopher_passes`), minus the required-stopword
     test: turn-level payloads are routinely a few words long, where a
     stopword test is noise; the batch rule applies it at document level
-    after conversation assembly.  The word floor defaults to 5 (turns
-    are shorter than documents).  Pure stateless per-row map: no state
-    store, no watermark, exactly-once via the file sink's transaction
-    log.
+    after conversation assembly.  The word floor is QUALITY_MIN_WORDS
+    (turns are shorter than documents).  Pure stateless per-row map: no
+    state store, no watermark, exactly-once via the file sink's
+    transaction log.
     """
-    turns = read_stream(spark, input_path, TRANSCRIPTS_SCHEMA, max_files_per_trigger)
     keys = ("conv_id", "turn_idx", "ts")
     pages = turns.select(*keys, F.coalesce(F.col("text"), F.lit("")).alias("page"))
-    gated = gopher_features(pages, *keys).select(
-        *keys, "n_words", *gopher_passes(min_words)
+    return gopher_features(pages, *keys).select(
+        *keys, "n_words", *gopher_passes(QUALITY_MIN_WORDS)
     )
-    return start_parquet_sink(gated, output_path, checkpoint_path, available_now)
 
 
 DSIR_BUCKETS = 256
@@ -378,15 +333,8 @@ def dsir_ratio_table(
     return out
 
 
-def run_importance_stream(
-    spark: SparkSession,
-    input_path: str,
-    ratio_ppm: list[int],
-    output_path: str,
-    checkpoint_path: str,
-    available_now: bool = False,
-    max_files_per_trigger: int | None = None,
-) -> StreamingQuery:
+@stream_op(TRANSCRIPTS_SCHEMA)
+def importance_scores(turns: DataFrame, ratio_ppm: list[int]) -> DataFrame:
     """Streaming DSIR importance scoring (P46's continuous twin): score
     every arriving turn against a FROZEN bucket-ratio table and gate it
     with the same md5 keep rule as the batch operator — train offline
@@ -404,7 +352,6 @@ def run_importance_stream(
         raise ValueError("ratio_ppm table must be non-empty")
     buckets = len(ratio_ppm)
     rat = F.array(*[F.lit(int(r)) for r in ratio_ppm])
-    turns = read_stream(spark, input_path, TRANSCRIPTS_SCHEMA, max_files_per_trigger)
     t = turns.select(
         "conv_id", "turn_idx", "ts",
         F.filter(lower_words(F.coalesce(F.col("text"), F.lit(""))), lambda w: w != "")
@@ -420,7 +367,6 @@ def run_importance_stream(
         F.size("ws").cast("long").alias("n_words"),
         score.alias("score_fp"),
     )
-    scored = with_dsir_keep(
+    return with_dsir_keep(
         keyed, F.concat_ws(":", "conv_id", F.col("turn_idx").cast("string"))
     )
-    return start_parquet_sink(scored, output_path, checkpoint_path, available_now)

@@ -22,10 +22,9 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
 
-from ocr_spark.sinks.writers import start_parquet_sink
-from ocr_spark.sources.transcripts import read_stream
+from ocr_spark.streaming.launch import grouped_state, start_stream, stream_op
 
 EVENTS_STREAM_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string"
@@ -91,22 +90,25 @@ def _funnel(
     yield  # pragma: no cover - makes this a generator
 
 
+@stream_op(EVENTS_STREAM_SCHEMA)
+def user_funnels(events: DataFrame) -> DataFrame:
+    """One funnel stage row per user, when the user goes idle (see module
+    docstring)."""
+    return grouped_state(
+        events, ["user_id"], _funnel, FUNNEL_SCHEMA, _STATE_SCHEMA
+    )
+
+
 def run_funnel_stream(
     spark: SparkSession,
     input_path: str,
     output_path: str,
     checkpoint_path: str,
     available_now: bool = False,
-    watermark: str = "30 minutes",
 ) -> StreamingQuery:
-    events = read_stream(spark, input_path, EVENTS_STREAM_SCHEMA).withWatermark(
-        "ts", watermark
+    """Start the funnel stream.  Its own entry point, with no
+    `max_files_per_trigger`: a bounded drain would advance the watermark
+    and the state timeouts between micro-batches and change the output."""
+    return start_stream(
+        spark, user_funnels, input_path, output_path, checkpoint_path, available_now
     )
-    stages: DataFrame = events.groupBy("user_id").applyInPandasWithState(
-        _funnel,
-        outputStructType=FUNNEL_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    return start_parquet_sink(stages, output_path, checkpoint_path, available_now)

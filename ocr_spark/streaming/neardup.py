@@ -26,8 +26,8 @@ stateful operator for no semantic gain.
 State bound: EventTimeTimeout evicts a bucket's state once the
 watermark passes its last arrival + the dedup horizon, so state is
 (horizon x arrival rate x shingles/doc), not stream length — the same
-bounding contract as run_dedup_stream.  Near-dups separated by more
-than the horizon are owned by the batch pass, as with exact dedup.
+bounding contract as `dedup_turns`.  Near-dups separated by more than
+the horizon are owned by the batch pass, as with exact dedup.
 """
 
 from __future__ import annotations
@@ -38,13 +38,12 @@ from collections.abc import Iterator
 
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql import Column, DataFrame
+from pyspark.sql.streaming.state import GroupState
 
 from ocr_spark.functions.text import md5_long, word3_shingles
-from ocr_spark.sinks.writers import start_parquet_sink
-from ocr_spark.sources.transcripts import DOCS_STREAM_SCHEMA, read_stream
+from ocr_spark.sources.transcripts import DOCS_STREAM_SCHEMA
+from ocr_spark.streaming.launch import DEDUP_WATERMARK, grouped_state, stream_op
 
 # Cross-engine MinHash family: shingle fingerprints are md5_long(sh)
 # reduced mod the Mersenne prime M31, so the K affine min-hashes
@@ -169,25 +168,12 @@ def _bucket_pairs(
         )
 
 
-def run_minhash_neardup_stream(
-    spark: SparkSession,
-    input_path: str,
-    output_path: str,
-    checkpoint_path: str,
-    available_now: bool = False,
-    watermark: str = "1 hour",
-    max_files_per_trigger: int | None = None,
-) -> StreamingQuery:
-    """Start the streaming near-dup query over a (doc_id, text, ts)
-    document stream; emits exact-verified pairs (doc_a, doc_b,
-    jaccard_fp), at-least-once per shared band (see module docstring)."""
-    docs = read_stream(spark, input_path, DOCS_STREAM_SCHEMA, max_files_per_trigger)
-    banded = with_band_rows(docs).withWatermark("ts", watermark)
-    pairs = banded.groupBy("band", "mh0", "mh1").applyInPandasWithState(
-        _bucket_pairs,
-        outputStructType=PAIR_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+@stream_op(DOCS_STREAM_SCHEMA)
+def minhash_neardup_pairs(docs: DataFrame) -> DataFrame:
+    """The streaming near-dup operator over a (doc_id, text, ts) document
+    stream; emits exact-verified pairs (doc_a, doc_b, jaccard_fp),
+    at-least-once per shared band (see module docstring)."""
+    return grouped_state(
+        with_band_rows(docs), ["band", "mh0", "mh1"], _bucket_pairs,
+        PAIR_SCHEMA, _STATE_SCHEMA, DEDUP_WATERMARK,
     )
-    return start_parquet_sink(pairs, output_path, checkpoint_path, available_now)

@@ -24,12 +24,12 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
 
-from ocr_spark.sinks.writers import start_parquet_sink
-from ocr_spark.sources.transcripts import read_stream
+from ocr_spark.sources.transcripts import TRANSCRIPTS_SCHEMA
+from ocr_spark.streaming.launch import grouped_state, start_stream, stream_op
 
 SESSION_SCHEMA = (
     "conv_id string, sess_idx long, n_turns long, start_ms long, end_ms long"
@@ -84,20 +84,24 @@ def _sessionize(
     yield  # pragma: no cover - makes this a generator
 
 
+@stream_op(TRANSCRIPTS_SCHEMA)
+def sessions(turns: DataFrame) -> DataFrame:
+    """Per-conversation sessions (see module docstring)."""
+    return grouped_state(
+        turns, ["conv_id"], _sessionize, SESSION_SCHEMA, _STATE_SCHEMA
+    )
+
+
 def run_sessionize_stream(
     spark: SparkSession,
     input_path: str,
     output_path: str,
     checkpoint_path: str,
     available_now: bool = False,
-    watermark: str = "30 minutes",
 ) -> StreamingQuery:
-    turns = read_stream(spark, input_path).withWatermark("ts", watermark)
-    sessions = turns.groupBy("conv_id").applyInPandasWithState(
-        _sessionize,
-        outputStructType=SESSION_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    """Start the sessionize stream.  Its own entry point, with no
+    `max_files_per_trigger`: a bounded drain would advance the watermark
+    and the state timeouts between micro-batches and change the output."""
+    return start_stream(
+        spark, sessions, input_path, output_path, checkpoint_path, available_now
     )
-    return start_parquet_sink(sessions, output_path, checkpoint_path, available_now)

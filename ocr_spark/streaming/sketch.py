@@ -28,12 +28,11 @@ the DuckDB oracle checks the expressions this stream runs.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql import Column, DataFrame
 
 from ocr_spark.functions.text import md5_long, word_rows
-from ocr_spark.sinks.writers import start_parquet_sink
-from ocr_spark.sources.transcripts import DOCS_STREAM_SCHEMA, read_stream
+from ocr_spark.sources.transcripts import DOCS_STREAM_SCHEMA
+from ocr_spark.streaming.launch import closed_windows, stream_op
 
 HLL_M = 64                              # registers (p = 6)
 HLL_S = 1 << 30                         # fixed-point scale for Z
@@ -94,36 +93,14 @@ def hll_estimate(registers: DataFrame) -> DataFrame:
     return hll_fold(registers, *group_cols).select(*group_cols, "est_distinct")
 
 
-def run_hll_register_stream(
-    spark: SparkSession,
-    input_path: str,
-    output_path: str,
-    checkpoint_path: str,
-    available_now: bool = False,
-    watermark: str = "30 minutes",
-    window: str = "1 hour",
-    max_files_per_trigger: int | None = None,
-) -> StreamingQuery:
+@stream_op(DOCS_STREAM_SCHEMA)
+def hll_window_registers(docs: DataFrame) -> DataFrame:
     """Continuous per-(event-time window, lang) HLL register stream over
     arriving document files.  Emits each closed window's 64-register
     table exactly once (append mode); fold with `hll_estimate`."""
-    docs = read_stream(spark, input_path, DOCS_STREAM_SCHEMA, max_files_per_trigger)
-
-    regs = (
-        hll_register_columns(docs)
-        .withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window), F.col("lang"), F.col("j"))
-        .agg(F.max("m").alias("m"))
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            "lang",
-            "j",
-            "m",
-        )
+    return closed_windows(
+        hll_register_columns(docs), ["lang", "j"], F.max("m").alias("m")
     )
-
-    return start_parquet_sink(regs, output_path, checkpoint_path, available_now)
 
 
 # ---------------------------------------------------------------------------
@@ -170,33 +147,13 @@ def cm_cell_columns(df: DataFrame) -> DataFrame:
     ).select("ts", "c.row_id", "c.col_id")
 
 
-def run_countmin_cell_stream(
-    spark: SparkSession,
-    input_path: str,
-    output_path: str,
-    checkpoint_path: str,
-    available_now: bool = False,
-    watermark: str = "30 minutes",
-    window: str = "1 hour",
-    max_files_per_trigger: int | None = None,
-) -> StreamingQuery:
+@stream_op(DOCS_STREAM_SCHEMA)
+def countmin_window_cells(docs: DataFrame) -> DataFrame:
     """Continuous per-(event-time window) Count-Min cell stream over
     arriving document files.  Emits each closed window's cell table
     exactly once (append mode); windows union by summing cnt."""
-    docs = read_stream(spark, input_path, DOCS_STREAM_SCHEMA, max_files_per_trigger)
-
-    cells = (
-        cm_cell_columns(docs)
-        .withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window), F.col("row_id"), F.col("col_id"))
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            "row_id",
-            "col_id",
-            "cnt",
-        )
+    return closed_windows(
+        cm_cell_columns(docs),
+        ["row_id", "col_id"],
+        F.count(F.lit(1)).cast("long").alias("cnt"),
     )
-
-    return start_parquet_sink(cells, output_path, checkpoint_path, available_now)

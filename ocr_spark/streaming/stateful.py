@@ -17,10 +17,10 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
 
-from ocr_spark.sinks.writers import start_parquet_sink
-from ocr_spark.sources.transcripts import read_stream
+from ocr_spark.sources.transcripts import TRANSCRIPTS_SCHEMA
+from ocr_spark.streaming.launch import grouped_state, start_stream, stream_op
 
 SUMMARY_SCHEMA = (
     "conv_id string, n_turns long, n_user long, n_assistant long, "
@@ -73,20 +73,27 @@ def _assemble(
     yield  # pragma: no cover - makes this a generator
 
 
+@stream_op(TRANSCRIPTS_SCHEMA)
+def conversation_summaries(turns: DataFrame) -> DataFrame:
+    """One summary row per conversation, when it goes idle (see module
+    docstring)."""
+    return grouped_state(
+        turns, ["conv_id"], _assemble, SUMMARY_SCHEMA, _STATE_SCHEMA
+    )
+
+
 def run_conversation_assembly_stream(
     spark: SparkSession,
     input_path: str,
     output_path: str,
     checkpoint_path: str,
     available_now: bool = False,
-    watermark: str = "30 minutes",
 ) -> StreamingQuery:
-    turns = read_stream(spark, input_path).withWatermark("ts", watermark)
-    summaries: DataFrame = turns.groupBy("conv_id").applyInPandasWithState(
-        _assemble,
-        outputStructType=SUMMARY_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    """Start the conversation assembly stream.  Its own entry point, with
+    no `max_files_per_trigger`: a bounded drain would advance the
+    watermark and the state timeouts between micro-batches and change the
+    output."""
+    return start_stream(
+        spark, conversation_summaries, input_path, output_path,
+        checkpoint_path, available_now,
     )
-    return start_parquet_sink(summaries, output_path, checkpoint_path, available_now)

@@ -1,7 +1,8 @@
-"""Every streaming entry point that takes `max_files_per_trigger`
-validates it before any query starts: a non-positive value raises
-ValueError up front instead of dying later in the stream thread, and no
-checkpoint directory is created."""
+"""Every bounded stream runs through `start_stream`, which validates
+`max_files_per_trigger` before any query starts: a non-positive value
+raises ValueError up front instead of dying later in the stream thread,
+and no checkpoint directory is created.  The three event-time-state
+streams keep entry points of their own that take no bound."""
 
 import inspect
 
@@ -9,47 +10,60 @@ import pytest
 
 import ocr_spark.streaming as streaming
 
-RUNNERS = sorted(
-    name
-    for name, fn in vars(streaming).items()
-    if name.startswith("run_")
-    and "max_files_per_trigger" in inspect.signature(fn).parameters
+# The ten bounded operators, keyed by the name of the entry point each
+# one had before `start_stream` ran them all (the test ids keep it).
+BOUNDED = {
+    "run_countmin_cell_stream": streaming.countmin_window_cells,
+    "run_decontam_stream": streaming.decontam_flags,
+    "run_dedup_stream": streaming.dedup_turns,
+    "run_enrich_stream": streaming.enrich,
+    "run_extract_stream": streaming.extract_turns,
+    "run_hll_register_stream": streaming.hll_window_registers,
+    "run_importance_stream": streaming.importance_scores,
+    "run_minhash_neardup_stream": streaming.minhash_neardup_pairs,
+    "run_quality_gate_stream": streaming.quality_gate,
+    "run_turn_rate_stream": streaming.turn_rates,
+}
+STATEFUL = (
+    streaming.run_sessionize_stream,
+    streaming.run_conversation_assembly_stream,
+    streaming.run_funnel_stream,
 )
 
 
 def test_runner_set():
-    assert RUNNERS == [
-        "run_countmin_cell_stream",
-        "run_decontam_stream",
-        "run_dedup_stream",
-        "run_enrich_stream",
+    assert sorted(n for n in vars(streaming) if n.startswith("run_")) == [
+        "run_conversation_assembly_stream",
         "run_extract_stream",
-        "run_hll_register_stream",
-        "run_importance_stream",
-        "run_minhash_neardup_stream",
-        "run_quality_gate_stream",
-        "run_turn_rate_stream",
+        "run_funnel_stream",
+        "run_sessionize_stream",
     ]
 
 
-@pytest.mark.parametrize("name", RUNNERS)
+@pytest.mark.parametrize("name", sorted(BOUNDED))
 def test_zero_files_per_trigger_raises_before_start(spark, tmp_path, name):
-    fn = getattr(streaming, name)
+    op = BOUNDED[name]
     inp = tmp_path / "in"
     inp.mkdir()
     ckpt = tmp_path / "ckpt"
-    args = {
-        "spark": spark,
-        "input_path": str(inp),
-        "output_path": str(tmp_path / "out"),
-        "checkpoint_path": str(ckpt),
+    data = {
         "dim_df": spark.createDataFrame([("c", 1)], "conv_id string, v int"),
         "bench_grams": [],
         "ratio_ppm": [1],
     }
-    params = inspect.signature(fn).parameters
-    kwargs = {k: v for k, v in args.items() if k in params}
+    params = inspect.signature(op).parameters
     with pytest.raises(ValueError, match="max_files_per_trigger"):
-        fn(**kwargs, available_now=True, max_files_per_trigger=0)
+        streaming.start_stream(
+            spark, op, str(inp), str(tmp_path / "out"), str(ckpt),
+            available_now=True, max_files_per_trigger=0,
+            **{k: v for k, v in data.items() if k in params},
+        )
     assert not ckpt.exists()
     assert not spark.streams.active
+
+
+@pytest.mark.parametrize("fn", STATEFUL, ids=lambda fn: fn.__name__)
+def test_stateful_streams_take_no_bound(fn):
+    assert list(inspect.signature(fn).parameters) == [
+        "spark", "input_path", "output_path", "checkpoint_path", "available_now",
+    ]

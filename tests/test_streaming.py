@@ -89,12 +89,12 @@ def _mk_turns(conv_prefix, hours, per_hour=6):
 
 
 def test_stream_watermark_windowed_counts(spark, dirs):
-    from ocr_spark.streaming import run_turn_rate_stream
+    from ocr_spark.streaming import start_stream, turn_rates
 
     inp, outp, ckpt = dirs
 
     def drain():
-        q = run_turn_rate_stream(spark, inp, outp, ckpt, available_now=True)
+        q = start_stream(spark, turn_rates, inp, outp, ckpt, available_now=True)
         q.awaitTermination(300)
         assert not q.isActive
 
@@ -171,7 +171,7 @@ def test_stream_dedup_within_watermark(spark, dirs):
     """Streaming exact dedup: duplicate payloads inside the watermark
     horizon are dropped; state is keyed on md5(text) and evicted by the
     watermark (dropDuplicatesWithinWatermark semantics)."""
-    from ocr_spark.streaming import run_dedup_stream
+    from ocr_spark.streaming import dedup_turns, start_stream
 
     inp, outp, ckpt = dirs
     base = pd.Timestamp("2024-01-01 00:00:00")
@@ -191,7 +191,7 @@ def test_stream_dedup_within_watermark(spark, dirs):
         }
     )
     _write_batch(spark, pdf, inp)
-    q = run_dedup_stream(spark, inp, outp, ckpt, available_now=True)
+    q = start_stream(spark, dedup_turns, inp, outp, ckpt, available_now=True)
     q.awaitTermination(300)
     assert not q.isActive
 
@@ -219,7 +219,7 @@ def test_stream_minhash_neardup_parity_with_batch(spark, dirs):
     """
     import __spark_entry__ as entry
     from ocr_spark.queries.dedup import _docs_with_planted_dups
-    from ocr_spark.streaming import run_minhash_neardup_stream
+    from ocr_spark.streaming import minhash_neardup_pairs, start_stream
 
     sf = "/root/testdata/sf0.001"
     inp, outp, ckpt = dirs
@@ -237,8 +237,9 @@ def test_stream_minhash_neardup_parity_with_batch(spark, dirs):
             pdf.iloc[i::3], schema="doc_id long, text string, ts timestamp"
         ).coalesce(1).write.mode("append").parquet(inp)
 
-    q = run_minhash_neardup_stream(
-        spark, inp, outp, ckpt, available_now=True, max_files_per_trigger=1
+    q = start_stream(
+        spark, minhash_neardup_pairs, inp, outp, ckpt, available_now=True,
+        max_files_per_trigger=1,
     )
     q.awaitTermination(600)
     assert not q.isActive
@@ -295,7 +296,7 @@ def test_stream_static_enrich_join(spark, dirs):
     unmatched turns pass through with NULL enrichment, never dropped."""
     import pyspark.sql.functions as F
 
-    from ocr_spark.streaming.extract_stream import run_enrich_stream
+    from ocr_spark.streaming import enrich, start_stream
 
     inp, outp, ckpt = dirs
     pdf = gen_transcripts(n_convs=30)
@@ -306,8 +307,8 @@ def test_stream_static_enrich_join(spark, dirs):
         [(c, f"route-{i % 3}") for i, c in enumerate(conv_ids[: len(conv_ids) // 2])],
         "conv_id string, route string",
     )
-    q = run_enrich_stream(spark, inp, F.broadcast(dim), outp, ckpt,
-                          available_now=True)
+    q = start_stream(spark, enrich, inp, outp, ckpt, available_now=True,
+                     dim_df=F.broadcast(dim))
     q.awaitTermination(300)
     assert not q.isActive
 
@@ -359,11 +360,12 @@ def test_stream_hll_registers_parity_and_merge(spark, dirs):
     estimate."""
     import pyspark.sql.functions as F
 
+    from ocr_spark.streaming import start_stream
     from ocr_spark.streaming.sketch import (
         DOCS_STREAM_SCHEMA,
         hll_estimate,
         hll_register_columns,
-        run_hll_register_stream,
+        hll_window_registers,
     )
 
     inp, outp, ckpt = dirs
@@ -374,7 +376,9 @@ def test_stream_hll_registers_parity_and_merge(spark, dirs):
         ).parquet(inp)
 
     def drain():
-        q = run_hll_register_stream(spark, inp, outp, ckpt, available_now=True)
+        q = start_stream(
+            spark, hll_window_registers, inp, outp, ckpt, available_now=True
+        )
         q.awaitTermination(300)
         assert not q.isActive
 
@@ -435,9 +439,10 @@ def test_decontam_stream_flags_planted_turns(spark, dirs):
     """Streaming decontamination (P36 twin): turns carrying a benchmark
     13-gram are flagged in-flight; clean and sub-13-word turns pass
     through unflagged; fingerprints match the pure-Python builder."""
+    from ocr_spark.streaming import start_stream
     from ocr_spark.streaming.extract_stream import (
         bench_gram_fingerprints,
-        run_decontam_stream,
+        decontam_flags,
     )
 
     inp, outp, ckpt = dirs
@@ -457,7 +462,8 @@ def test_decontam_stream_flags_planted_turns(spark, dirs):
     )
     _write_batch(spark, pdf, inp)
 
-    q = run_decontam_stream(spark, inp, bench, outp, ckpt, available_now=True)
+    q = start_stream(spark, decontam_flags, inp, outp, ckpt, available_now=True,
+                     bench_grams=bench)
     q.awaitTermination(300)
     assert not q.isActive
 
@@ -521,7 +527,7 @@ def test_stream_job_cli_decontam_drive(spark, dirs, tmp_path):
 def test_quality_gate_stream_flags_planted_junk(spark, dirs):
     """Streaming quality gate (P47 twin): planted junk turns fail the
     matching rule in-flight; ordinary prose turns pass everything."""
-    from ocr_spark.streaming import run_quality_gate_stream
+    from ocr_spark.streaming import quality_gate, start_stream
 
     inp, outp, ckpt = dirs
     pdf = gen_transcripts(n_convs=10)
@@ -535,7 +541,7 @@ def test_quality_gate_stream_flags_planted_junk(spark, dirs):
     pdf.loc[short, "text"] = "hi there"
     _write_batch(spark, pdf, inp)
 
-    q = run_quality_gate_stream(spark, inp, outp, ckpt, available_now=True)
+    q = start_stream(spark, quality_gate, inp, outp, ckpt, available_now=True)
     q.awaitTermination(300)
     assert not q.isActive
 
@@ -565,7 +571,7 @@ def test_importance_stream_matches_python_trainer(spark, dirs):
     import hashlib
     import re
 
-    from ocr_spark.streaming import dsir_ratio_table, run_importance_stream
+    from ocr_spark.streaming import dsir_ratio_table, importance_scores, start_stream
 
     inp, outp, ckpt = dirs
     pdf = gen_transcripts(n_convs=8)
@@ -575,7 +581,8 @@ def test_importance_stream_matches_python_trainer(spark, dirs):
     assert len(ratios) == 256 and all(isinstance(r, int) for r in ratios)
     _write_batch(spark, pdf, inp)
 
-    q = run_importance_stream(spark, inp, ratios, outp, ckpt, available_now=True)
+    q = start_stream(spark, importance_scores, inp, outp, ckpt, available_now=True,
+                     ratio_ppm=ratios)
     q.awaitTermination(300)
     assert not q.isActive
 
@@ -686,10 +693,11 @@ def test_stream_countmin_cells_parity_with_batch(spark, dirs):
     may emit early."""
     import pyspark.sql.functions as F
 
+    from ocr_spark.streaming import start_stream
     from ocr_spark.streaming.sketch import (
         DOCS_STREAM_SCHEMA,
         cm_cell_columns,
-        run_countmin_cell_stream,
+        countmin_window_cells,
     )
 
     inp, outp, ckpt = dirs
@@ -700,7 +708,9 @@ def test_stream_countmin_cells_parity_with_batch(spark, dirs):
         ).parquet(inp)
 
     def drain():
-        q = run_countmin_cell_stream(spark, inp, outp, ckpt, available_now=True)
+        q = start_stream(
+            spark, countmin_window_cells, inp, outp, ckpt, available_now=True
+        )
         q.awaitTermination(300)
         assert not q.isActive
 

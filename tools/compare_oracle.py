@@ -43,10 +43,21 @@ def digest(rows) -> str:
 
 
 def compare(sf_dir: str, only: list[str] | None = None) -> dict[str, str]:
-    import duckdb
-
-    # point the precomputed x_* oracles at this sf's expected files
+    # point the precomputed x_* oracles at this sf's expected files, for
+    # this call only
+    prev = os.environ.get("SPARK_GRAFT_ORACLE_SF")
     os.environ["SPARK_GRAFT_ORACLE_SF"] = sf_dir
+    try:
+        return _compare(sf_dir, only)
+    finally:
+        if prev is None:
+            del os.environ["SPARK_GRAFT_ORACLE_SF"]
+        else:
+            os.environ["SPARK_GRAFT_ORACLE_SF"] = prev
+
+
+def _compare(sf_dir: str, only: list[str] | None) -> dict[str, str]:
+    import duckdb
 
     import __spark_entry__ as entrymod
     from ocr_spark.plans.session import build_session
