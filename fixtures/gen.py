@@ -108,11 +108,11 @@ def _degenerate_payload(rng: np.random.RandomState) -> str:
 _FLAVORS = [_html_payload, _pdf_payload, _md_payload, _tool_payload,
             _degenerate_payload]
 _FLAVOR_P = [0.30, 0.25, 0.25, 0.12, 0.08]
+_BASE_TURNS = 8
 
 
 def gen_transcripts(
-    n_convs: int = 50, seed: int = 42, base_turns: int = 8,
-    hot_conv_turns: int = 0,
+    n_convs: int = 50, seed: int = 42, hot_conv_turns: int = 0,
 ) -> pd.DataFrame:
     """Generate a shuffled transcripts frame.
 
@@ -123,7 +123,7 @@ def gen_transcripts(
     rng = np.random.RandomState(seed)
     rows: list[tuple] = []
     for i in range(n_convs):
-        n_turns = int(np.clip(rng.zipf(1.6), 1, 40)) * base_turns // 4 + 1
+        n_turns = int(np.clip(rng.zipf(1.6), 1, 40)) * _BASE_TURNS // 4 + 1
         if i == 0 and hot_conv_turns:
             n_turns = hot_conv_turns
         conv_id = f"conv-{i:06d}"

@@ -9,9 +9,14 @@ Arrow-vectorized pandas UDFs (never per-row Python UDFs).
 
 Layout:
   extract/    pure NumPy/pandas per-turn extraction math (THE oracle)
-  operators/  Spark operators: extraction mapInPandas, dedup, similarity
-  functions/  scalar pandas_udfs + Column helpers
-  sources/    readers (parquet; Iceberg behind import-try) + synth transcripts
+  operators/  Spark operators: extraction mapInPandas, conversation
+              assembly, connected components, prefix-filtered Jaccard join
+  functions/  shared text Column builders + the extract_text pandas_udf;
+              the pure-NumPy media codecs (bits.py holds their bit
+              writers/readers, CRC and the LZW coder GIF and TIFF share)
+              and the DECODE_TIERS table run by one decode_tier op
+  sources/    transcript scans (iceberg: prefix routes to Iceberg, else
+              parquet), fixture ingestion, the one streaming reader
   plans/      job composition: bucket/salt/resume/lineage/ordering
   streaming/  Structured Streaming operators, run by one start_stream launcher
   queries/    the driver queries by family, each builder beside its DuckDB

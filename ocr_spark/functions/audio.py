@@ -181,9 +181,10 @@ def ima_adpcm_decode_block(block: bytes, n_channels: int) -> np.ndarray:
     )
 
 
-def ima_adpcm_encode_block(samples: np.ndarray, index0: int = 0) -> bytes:
-    """Encode an (n, ch) int16 array as ONE IMA-ADPCM WAV block;
-    (n-1) must be a multiple of 8 per channel group layout."""
+def ima_adpcm_encode_block(samples: np.ndarray) -> bytes:
+    """Encode an (n, ch) int16 array as ONE IMA-ADPCM WAV block, every
+    channel starting at step index 0; (n-1) must be a multiple of 8 per
+    channel group layout."""
     n, ch = samples.shape
     if (n - 1) % 8 != 0:
         raise ValueError("ADPCM block needs n = 1 + 8k samples")
@@ -192,9 +193,9 @@ def ima_adpcm_encode_block(samples: np.ndarray, index0: int = 0) -> bytes:
     for c in range(ch):
         p = int(samples[0, c])
         out += p.to_bytes(2, "little", signed=True)
-        out += bytes([index0, 0])
+        out += bytes([0, 0])
         preds.append(p)
-        idxs.append(index0)
+        idxs.append(0)
     for g in range(1, n, 8):
         for c in range(ch):
             nibbles = []

@@ -23,6 +23,8 @@ import struct
 
 import numpy as np
 
+from ocr_spark.functions import bits
+
 GIF_MAGIC = b"GIF89a"
 
 # 4-pass interlace row schedule: (first row, stride) per pass
@@ -37,81 +39,17 @@ def _interlaced_row_order(h: int) -> list[int]:
 
 
 # ---------------------------------------------------------------------------
-# LZW (GIF variant)
+# LZW (GIF variant): LSB-first codes, no early change
 # ---------------------------------------------------------------------------
-
-class _BitWriter:
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self.cur = 0
-        self.nbits = 0
-
-    def write(self, code: int, width: int) -> None:
-        self.cur |= code << self.nbits
-        self.nbits += width
-        while self.nbits >= 8:
-            self.out.append(self.cur & 0xFF)
-            self.cur >>= 8
-            self.nbits -= 8
-
-    def flush(self) -> bytes:
-        if self.nbits:
-            self.out.append(self.cur & 0xFF)
-            self.cur = 0
-            self.nbits = 0
-        return bytes(self.out)
-
 
 def lzw_encode(indices: np.ndarray, min_code_size: int,
                dict_cap: int = 4096) -> bytes:
-    """GIF LZW: greedy longest-match over a prefix dictionary, codes
-    LSB-first at a width that grows with the dictionary; a CLEAR code is
-    emitted when the dictionary reaches `dict_cap` (fixtures use a small
-    cap so decoders must exercise the reset path).
-
-    Width growth follows the canonical giflib rule: the check runs after
-    EVERY code written, against the next free slot BEFORE the insertion
-    that follows — keying growth on insertions instead desyncs from the
-    decoder at the END-code boundary (the decoder inserts an entry for
-    the final data code; the encoder never does)."""
-    clear = 1 << min_code_size
-    end = clear + 1
-    bw = _BitWriter()
-    table: dict = {}
-    next_code = 0
-    width = 0
-
-    def out(code: int) -> None:
-        nonlocal width
-        bw.write(code, width)
-        if next_code >= (1 << width) and width < 12:
-            width += 1
-
-    def fresh() -> None:
-        nonlocal table, next_code, width
-        table = {(i,): i for i in range(clear)}
-        next_code = end + 1
-        width = min_code_size + 1
-
-    fresh()
-    out(clear)
-    seq: tuple = ()
-    for v in indices.ravel().tolist():
-        cand = seq + (v,)
-        if cand in table:
-            seq = cand
-            continue
-        out(table[seq])
-        table[cand] = next_code
-        next_code += 1
-        if next_code >= min(dict_cap, 4096):
-            out(clear)
-            fresh()
-        seq = (v,)
-    if seq:
-        out(table[seq])
-    out(end)
-    return bw.flush()
+    """GIF LZW of an index array: codes LSB-first at a width that grows
+    with the dictionary; a CLEAR code is emitted when the dictionary
+    reaches `dict_cap` (fixtures use a small cap so decoders must
+    exercise the reset path)."""
+    return bits.lzw_encode(indices.ravel().tolist(), bits.LsbWriter(),
+                           min_code_size, 0, min(dict_cap, 4096))
 
 
 def lzw_decode(data: bytes, min_code_size: int, n_expected: int) -> np.ndarray:
@@ -120,66 +58,8 @@ def lzw_decode(data: bytes, min_code_size: int, n_expected: int) -> np.ndarray:
     contract (P26)."""
     if not 2 <= min_code_size <= 8:
         raise ValueError(f"GIF: bad LZW min code size {min_code_size}")
-    clear = 1 << min_code_size
-    end = clear + 1
-    out: list[int] = []
-    table: list[tuple] = []
-    width = min_code_size + 1
-    prev: tuple | None = None
-    counter = end + 1  # giflib RunningCode: counts code READS since reset
-
-    def reset() -> None:
-        nonlocal table, width, prev, counter
-        table = [(i,) for i in range(clear)] + [(), ()]
-        width = min_code_size + 1
-        prev = None
-        counter = end + 1
-
-    reset()
-    acc = 0
-    nbits = 0
-    pos = 0
-    n = len(data)
-    while True:
-        while nbits < width:
-            if pos >= n:
-                raise ValueError("GIF: LZW stream truncated before END code")
-            acc |= data[pos] << nbits
-            nbits += 8
-            pos += 1
-        code = acc & ((1 << width) - 1)
-        acc >>= width
-        nbits -= width
-        # canonical giflib growth rule: keyed on codes READ, not on
-        # table insertions (see the encoder twin's docstring)
-        counter += 1
-        if counter > (1 << width) and width < 12:
-            width += 1
-        if code == clear:
-            reset()
-            continue
-        if code == end:
-            break
-        if prev is None:
-            if code >= len(table):
-                raise ValueError(f"GIF: first LZW code {code} out of table")
-            entry = table[code]
-        elif code < len(table):
-            entry = table[code]
-            table.append(prev + (entry[0],))
-        elif code == len(table):
-            entry = prev + (prev[0],)
-            table.append(entry)
-        else:
-            raise ValueError(f"GIF: LZW code {code} beyond table {len(table)}")
-        out.extend(entry)
-        if len(out) > n_expected:
-            raise ValueError("GIF: LZW output exceeds image size")
-        prev = entry
-    if len(out) != n_expected:
-        raise ValueError(
-            f"GIF: LZW produced {len(out)} of {n_expected} pixels"
-        )
+    out = bits.lzw_decode(bits.LsbReader(data), min_code_size, 0,
+                          n_expected, "GIF")
     return np.asarray(out, dtype=np.uint8)
 
 
@@ -196,6 +76,34 @@ def _sub_blocks(data: bytes) -> bytes:
         out.extend(chunk)
     out.append(0)
     return bytes(out)
+
+
+def _read_sub_blocks(b: bytes, pos: int, what: str) -> tuple[bytes, int]:
+    """The joined sub-blocks starting at `pos`, and the position after
+    their terminator."""
+    data = bytearray()
+    while True:
+        if pos >= len(b):
+            raise ValueError(f"GIF: truncated {what}")
+        ln = b[pos]
+        data += b[pos + 1:pos + 1 + ln]
+        pos += 1 + ln
+        if ln == 0:
+            return bytes(data), pos
+        if pos > len(b):
+            raise ValueError(f"GIF: truncated {what} sub-block")
+
+
+def _color_table(b: bytes, pos: int, packed: int, what: str):
+    """The (N, 3) color table that the flags byte `packed` announces at
+    `pos` (None when its flag is clear), and the position after it."""
+    if not packed & 0x80:
+        return None, pos
+    n = 2 << (packed & 0x07)
+    if pos + 3 * n > len(b):
+        raise ValueError(f"GIF: truncated {what} color table")
+    table = np.frombuffer(b[pos:pos + 3 * n], dtype=np.uint8).reshape(n, 3)
+    return table, pos + 3 * n
 
 
 def encode_gif(indices: np.ndarray, palette: np.ndarray,
@@ -232,15 +140,7 @@ def decode_gif(b: bytes) -> np.ndarray:
     if len(b) < 13 or b[:4] != b"GIF8" or b[4:6] not in (b"7a", b"9a"):
         raise ValueError("GIF: bad signature")
     sw, sh = struct.unpack_from("<HH", b, 6)
-    packed = b[10]
-    pos = 13
-    gct = None
-    if packed & 0x80:
-        n = 2 << (packed & 0x07)
-        if pos + 3 * n > len(b):
-            raise ValueError("GIF: truncated global color table")
-        gct = np.frombuffer(b[pos:pos + 3 * n], dtype=np.uint8).reshape(n, 3)
-        pos += 3 * n
+    gct, pos = _color_table(b, 13, b[10], "global")
     while True:
         if pos >= len(b):
             raise ValueError("GIF: missing trailer")
@@ -249,14 +149,7 @@ def decode_gif(b: bytes) -> np.ndarray:
         if block == 0x3B:                        # trailer before any image
             raise ValueError("GIF: no image descriptor")
         if block == 0x21:                        # extension: skip sub-blocks
-            pos += 1                             # label
-            while True:
-                if pos >= len(b):
-                    raise ValueError("GIF: truncated extension")
-                ln = b[pos]
-                pos += 1 + ln
-                if ln == 0:
-                    break
+            _, pos = _read_sub_blocks(b, pos + 1, "extension")  # past label
             continue
         if block != 0x2C:
             raise ValueError(f"GIF: unknown block 0x{block:02x}")
@@ -268,34 +161,14 @@ def decode_gif(b: bytes) -> np.ndarray:
     pos += 9
     if w == 0 or h == 0 or left + w > sw or top + h > sh:
         raise ValueError("GIF: image geometry outside logical screen")
-    table = gct
-    if ipacked & 0x80:                           # local color table
-        n = 2 << (ipacked & 0x07)
-        if pos + 3 * n > len(b):
-            raise ValueError("GIF: truncated local color table")
-        table = np.frombuffer(b[pos:pos + 3 * n], dtype=np.uint8).reshape(n, 3)
-        pos += 3 * n
+    lct, pos = _color_table(b, pos, ipacked, "local")
+    table = gct if lct is None else lct
     if table is None:
         raise ValueError("GIF: no color table")
     if pos >= len(b):
         raise ValueError("GIF: missing LZW code size")
-    min_code = b[pos]
-    pos += 1
-    data = bytearray()
-    while True:
-        if pos >= len(b):
-            raise ValueError("GIF: truncated image data")
-        ln = b[pos]
-        pos += 1
-        if ln == 0:
-            break
-        data += b[pos:pos + ln]
-        if len(data) != len(bytearray(data)):    # pragma: no cover
-            raise ValueError("GIF: bad sub-block")
-        pos += ln
-        if pos > len(b):
-            raise ValueError("GIF: truncated image sub-block")
-    idx = lzw_decode(bytes(data), min_code, w * h).reshape(h, w)
+    data, _ = _read_sub_blocks(b, pos + 1, "image data")
+    idx = lzw_decode(data, b[pos], w * h).reshape(h, w)
     if int(idx.max(initial=0)) >= len(table):
         raise ValueError("GIF: pixel index outside color table")
     if ipacked & 0x40:                           # deinterlace

@@ -258,6 +258,32 @@ def _fdct_quant(plane: np.ndarray, qtab: np.ndarray) -> np.ndarray:
     ).astype(np.int32)
 
 
+def _put_value(bw: _BitWriter, codes: dict, run: int, v: int) -> None:
+    """A ZRL symbol per 16 zeros of `run`, then Huffman symbol
+    (run << 4) | SSSS for the value v after the remaining run, then its
+    SSSS magnitude bits, a negative v as v - 1 (F.1.2.1; DC diffs use
+    run 0)."""
+    while run > 15:
+        code, ln = codes[0xF0]          # ZRL
+        bw.put(code, ln)
+        run -= 16
+    size = _csize(v)
+    code, ln = codes[(run << 4) | size]
+    bw.put(code, ln)
+    if size:
+        bw.put(v if v > 0 else v + (1 << size) - 1, size)
+
+
+def _put_eobrun(bw: _BitWriter, ac_codes: dict, eobrun: int) -> None:
+    """EOBn symbol for a run of `eobrun` >= 1 end-of-band blocks, then
+    the run's bits below its leading one (G.1.2.2)."""
+    nbits = eobrun.bit_length() - 1
+    code, ln = ac_codes[nbits << 4]
+    bw.put(code, ln)
+    if nbits:
+        bw.put(eobrun & ((1 << nbits) - 1), nbits)
+
+
 def _encode_block(
     bw: _BitWriter,
     zz: np.ndarray,
@@ -267,12 +293,7 @@ def _encode_block(
 ) -> int:
     """Huffman-encode one zigzag coefficient block; returns new DC pred."""
     dc = int(zz[0])
-    diff = dc - pred
-    size = _csize(diff)
-    code, ln = dc_codes[size]
-    bw.put(code, ln)
-    if size:
-        bw.put(diff if diff > 0 else diff + (1 << size) - 1, size)
+    _put_value(bw, dc_codes, 0, dc - pred)
     run = 0
     last_nz = 0
     nz = np.nonzero(zz[1:])[0]
@@ -282,14 +303,7 @@ def _encode_block(
         if v == 0:
             run += 1
             continue
-        while run > 15:
-            code, ln = ac_codes[0xF0]   # ZRL
-            bw.put(code, ln)
-            run -= 16
-        size = _csize(v)
-        code, ln = ac_codes[(run << 4) | size]
-        bw.put(code, ln)
-        bw.put(v if v > 0 else v + (1 << size) - 1, size)
+        _put_value(bw, ac_codes, run, v)
         run = 0
     if last_nz < 63:
         code, ln = ac_codes[0x00]       # EOB
@@ -301,20 +315,24 @@ def _seg(marker: int, body: bytes) -> bytes:
     return bytes([0xFF, marker]) + (len(body) + 2).to_bytes(2, "big") + body
 
 
-def _dht_body(tc: int, th: int, bits: list[int], vals: list[int]) -> bytes:
-    return bytes([tc << 4 | th]) + bytes(bits) + bytes(vals)
+def _sos(selectors, ss: int, se: int, ah: int, al: int) -> bytes:
+    """SOS segment for (component index, DC table, AC table) selectors,
+    spectral band Ss..Se and successive approximation Ah/Al."""
+    body = bytes([len(selectors)])
+    for ci, td, ta in selectors:
+        body += bytes([ci + 1, (td << 4) | ta])
+    return _seg(0xDA, body + bytes([ss, se, (ah << 4) | al]))
 
 
-def _prepare_encode(arr: np.ndarray, qtab_luma: np.ndarray | None,
-                    qtab_chroma: np.ndarray | None, subsampling: str):
+def _prepare_encode(arr: np.ndarray, qtab: np.ndarray | None,
+                    subsampling: str):
     """Shared encoder front half: color transform, subsampling, MCU
-    padding, FDCT + quantization.  Returns (gray, h, w, planes, qtabs,
-    samps, coefs) — coefs are (nblocks, 64) int32 zigzag arrays in the
-    MCU-padded raster block order _fdct_quant produces."""
-    if qtab_luma is None:
-        qtab_luma = np.ones((8, 8), dtype=np.int64)
-    if qtab_chroma is None:
-        qtab_chroma = qtab_luma
+    padding, FDCT + quantization, with one quant table for every
+    component.  Returns (gray, h, w, qtab, samps, coefs) — coefs are
+    (nblocks, 64) int32 zigzag arrays in the MCU-padded raster block
+    order _fdct_quant produces."""
+    if qtab is None:
+        qtab = np.ones((8, 8), dtype=np.int64)
     gray = arr.ndim == 2
     h, w = arr.shape[:2]
     sub420 = (not gray) and subsampling == "420"
@@ -323,7 +341,6 @@ def _prepare_encode(arr: np.ndarray, qtab_luma: np.ndarray | None,
     pw = (-w) % (16 if (sub420 or sub422) else 8)
     if gray:
         planes = [np.pad(arr, ((0, ph), (0, pw)), mode="edge")]
-        qtabs = [qtab_luma]
         samps = [(1, 1)]
     else:
         rgb = arr.astype(np.float64)
@@ -336,7 +353,6 @@ def _prepare_encode(arr: np.ndarray, qtab_luma: np.ndarray | None,
                    ((0, ph), (0, pw)), mode="edge")
             for p in (y, cb, cr)
         ]
-        qtabs = [qtab_luma, qtab_chroma, qtab_chroma]
         if sub420:
             # chroma = 2x2 box average with round-half-up in integers
             planes = [planes[0]] + [
@@ -357,30 +373,34 @@ def _prepare_encode(arr: np.ndarray, qtab_luma: np.ndarray | None,
         else:
             samps = [(1, 1)] * 3
 
-    coefs = [_fdct_quant(p, q) for p, q in zip(planes, qtabs)]
-    return gray, h, w, planes, [qtab_luma, qtab_chroma], samps, coefs
+    coefs = [_fdct_quant(p, qtab) for p in planes]
+    return gray, h, w, qtab, samps, coefs
 
 
-def _frame_header(gray: bool, h: int, w: int, samps, qtab_luma, qtab_chroma,
-                  sof_marker: int) -> bytearray:
-    """SOI + DQT(s) + SOF segment bytes shared by both encoders."""
+def _frame_header(gray: bool, h: int, w: int, samps, qtab, sof_marker: int,
+                  tables, restart_interval: int) -> bytearray:
+    """Everything before the first SOS, shared by both encoders: SOI,
+    DQT(s) (color frames carry the table twice, as luma table 0 and
+    chroma table 1), SOF, one DHT per (class, id, BITS, HUFFVAL) table,
+    and DRI when `restart_interval` > 0."""
     out = bytearray(b"\xff\xd8")        # SOI
-    out += _seg(0xDB, bytes([0x00])
-                + bytes(qtab_luma.reshape(64)[ZIGZAG].astype(np.uint8)))
-    if not gray:
-        out += _seg(0xDB, bytes([0x01])
-                    + bytes(qtab_chroma.reshape(64)[ZIGZAG].astype(np.uint8)))
+    for tq in range(1 if gray else 2):
+        out += _seg(0xDB, bytes([tq])
+                    + bytes(qtab.reshape(64)[ZIGZAG].astype(np.uint8)))
     ncomp = 1 if gray else 3
     sof = bytes([8]) + h.to_bytes(2, "big") + w.to_bytes(2, "big") + bytes([ncomp])
     for ci in range(ncomp):
         hi, vi = samps[ci]
         sof += bytes([ci + 1, (hi << 4) | vi, 0 if ci == 0 else 1])
     out += _seg(sof_marker, sof)
+    for tc, th, bits, vals in tables:
+        out += _seg(0xC4, bytes([tc << 4 | th]) + bytes(bits) + bytes(vals))
+    if restart_interval:
+        out += _seg(0xDD, restart_interval.to_bytes(2, "big"))
     return out
 
 
 def encode_baseline(arr: np.ndarray, qtab_luma: np.ndarray | None = None,
-                    qtab_chroma: np.ndarray | None = None,
                     subsampling: str = "444",
                     restart_interval: int = 0) -> bytes:
     """Encode (H, W) grayscale or (H, W, 3) RGB uint8 as a baseline
@@ -388,58 +408,37 @@ def encode_baseline(arr: np.ndarray, qtab_luma: np.ndarray | None = None,
     (1x1 everywhere — the reference image's own layout), '420'
     (2x2 luma, 2x2-box-averaged chroma — the dominant real-world
     layout), or '422' (2x1 luma, horizontally averaged chroma).
-    Quant tables default to all-ones (near-lossless) so
-    fixture round-trips stay closed-form; pass real tables for lossy
-    behavior.  Edge blocks are padded by edge replication.
+    The quant table (used for every component) defaults to all-ones
+    (near-lossless) so fixture round-trips stay closed-form; pass a
+    real table for lossy behavior.  Edge blocks are padded by edge
+    replication.
     `restart_interval` > 0 writes a DRI segment and a cycling RSTn
     marker every that-many MCUs (DC predictions reset, segment
     byte-aligned) — the structure real camera files carry, and the
     unit of intra-image parallel decode at scale."""
-    gray, h, w, planes, (qtab_luma, qtab_chroma), samps, coefs = \
-        _prepare_encode(arr, qtab_luma, qtab_chroma, subsampling)
-
-    dc_l = _canonical_codes(DC_LUM_BITS, DC_LUM_VALS)
-    ac_l = _canonical_codes(AC_LUM_BITS, AC_LUM_VALS)
-    dc_c = _canonical_codes(DC_CHR_BITS, DC_CHR_VALS)
-    ac_c = _canonical_codes(AC_CHR_BITS, AC_CHR_VALS)
+    gray, h, w, qtab, samps, coefs = _prepare_encode(arr, qtab_luma, subsampling)
+    ncomp = 1 if gray else 3
+    codes = [(_canonical_codes(DC_LUM_BITS, DC_LUM_VALS),
+              _canonical_codes(AC_LUM_BITS, AC_LUM_VALS)),
+             (_canonical_codes(DC_CHR_BITS, DC_CHR_VALS),
+              _canonical_codes(AC_CHR_BITS, AC_CHR_VALS))]
 
     sw = _SegmentedWriter(restart_interval)
-    preds = [0] * len(planes)
-    hmax = max(s[0] for s in samps)
-    vmax = max(s[1] for s in samps)
-    mcux = planes[0].shape[1] // (8 * hmax)
-    mcuy = planes[0].shape[0] // (8 * vmax)
-    grid_ws = [planes[ci].shape[1] // 8 for ci in range(len(planes))]
-    for n in range(mcux * mcuy):        # interleaved MCU order
+    preds = [0] * ncomp
+    for n, group in enumerate(_block_order(range(ncomp), samps, h, w)):
         if sw.at_boundary(n):
             sw.advance()
-            preds = [0] * len(planes)
-        my, mx = divmod(n, mcux)
-        for ci in range(len(planes)):
-            hi, vi = samps[ci]
-            dc_codes = dc_l if ci == 0 else dc_c
-            ac_codes = ac_l if ci == 0 else ac_c
-            for by in range(vi):
-                for bx in range(hi):
-                    idx = (my * vi + by) * grid_ws[ci] + (mx * hi + bx)
-                    preds[ci] = _encode_block(sw.bw, coefs[ci][idx],
-                                              preds[ci], dc_codes, ac_codes)
+            preds = [0] * ncomp
+        for ci, idx in group:
+            preds[ci] = _encode_block(sw.bw, coefs[ci][idx], preds[ci],
+                                      *codes[0 if ci == 0 else 1])
     entropy = sw.finish()
 
-    out = _frame_header(gray, h, w, samps, qtab_luma, qtab_chroma, 0xC0)
-    ncomp = 1 if gray else 3
-    out += _seg(0xC4, _dht_body(0, 0, DC_LUM_BITS, DC_LUM_VALS))
-    out += _seg(0xC4, _dht_body(1, 0, AC_LUM_BITS, AC_LUM_VALS))
-    if not gray:
-        out += _seg(0xC4, _dht_body(0, 1, DC_CHR_BITS, DC_CHR_VALS))
-        out += _seg(0xC4, _dht_body(1, 1, AC_CHR_BITS, AC_CHR_VALS))
-    if restart_interval:
-        out += _seg(0xDD, restart_interval.to_bytes(2, "big"))
-    sos = bytes([ncomp])
-    for ci in range(ncomp):
-        sos += bytes([ci + 1, 0x00 if ci == 0 else 0x11])
-    sos += bytes([0, 63, 0])
-    out += _seg(0xDA, sos)
+    tables = [(0, 0, DC_LUM_BITS, DC_LUM_VALS), (1, 0, AC_LUM_BITS, AC_LUM_VALS),
+              (0, 1, DC_CHR_BITS, DC_CHR_VALS), (1, 1, AC_CHR_BITS, AC_CHR_VALS)]
+    out = _frame_header(gray, h, w, samps, qtab, 0xC0,
+                        tables[:2 if gray else 4], restart_interval)
+    out += _sos([(ci, min(ci, 1), min(ci, 1)) for ci in range(ncomp)], 0, 63, 0, 0)
     out += entropy
     out += b"\xff\xd9"                  # EOI
     return bytes(out)
@@ -482,13 +481,8 @@ def _emit_dc_first(sw, groups, coefs, al, dc_codes_for) -> None:
             preds = {}
         for ci, idx in group:
             t = int(coefs[ci][idx, 0]) >> al
-            diff = t - preds.get(ci, 0)
+            _put_value(sw.bw, dc_codes_for[ci], 0, t - preds.get(ci, 0))
             preds[ci] = t
-            size = _csize(diff)
-            code, ln = dc_codes_for[ci][size]
-            sw.bw.put(code, ln)
-            if size:
-                sw.bw.put(diff if diff > 0 else diff + (1 << size) - 1, size)
 
 
 def _emit_dc_refine(sw, groups, coefs, al) -> None:
@@ -509,11 +503,7 @@ def _emit_ac_first(sw, groups, zz, ac_codes, ss, se, al) -> None:
     def flush_eob() -> None:
         nonlocal eobrun
         if eobrun:
-            nbits = eobrun.bit_length() - 1
-            code, ln = ac_codes[nbits << 4]
-            sw.bw.put(code, ln)
-            if nbits:
-                sw.bw.put(eobrun & ((1 << nbits) - 1), nbits)
+            _put_eobrun(sw.bw, ac_codes, eobrun)
             eobrun = 0
 
     for n, group in enumerate(groups):
@@ -531,16 +521,7 @@ def _emit_ac_first(sw, groups, zz, ac_codes, ss, se, al) -> None:
                 r += 1
                 continue
             flush_eob()
-            while r > 15:
-                code, ln = ac_codes[0xF0]
-                bw.put(code, ln)
-                r -= 16
-            size = t.bit_length()
-            if v < 0:
-                t = -t
-            code, ln = ac_codes[(r << 4) | size]
-            bw.put(code, ln)
-            bw.put(t if t > 0 else t + (1 << size) - 1, size)
+            _put_value(bw, ac_codes, r, t if v > 0 else -t)
             r = 0
         if r > 0:
             eobrun += 1
@@ -562,11 +543,7 @@ def _emit_ac_refine(sw, groups, zz, ac_codes, ss, se, al) -> None:
     def flush_eob() -> None:
         nonlocal eobrun, pend
         if eobrun:
-            nbits = eobrun.bit_length() - 1
-            code, ln = ac_codes[nbits << 4]
-            sw.bw.put(code, ln)
-            if nbits:
-                sw.bw.put(eobrun & ((1 << nbits) - 1), nbits)
+            _put_eobrun(sw.bw, ac_codes, eobrun)
             eobrun = 0
         for bit in pend:
             sw.bw.put(bit, 1)
@@ -619,10 +596,8 @@ def _emit_ac_refine(sw, groups, zz, ac_codes, ss, se, al) -> None:
     flush_eob()
 
 
-def encode_progressive(arr: np.ndarray, qtab_luma: np.ndarray | None = None,
-                       qtab_chroma: np.ndarray | None = None,
-                       subsampling: str = "444", dc_al: int = 1,
-                       ac_al: int = 1,
+def encode_progressive(arr: np.ndarray, subsampling: str = "444",
+                       dc_al: int = 1, ac_al: int = 1,
                        bands: tuple = ((1, 5), (6, 63)),
                        restart_interval: int = 0) -> bytes:
     """Encode (H, W) grayscale or (H, W, 3) RGB uint8 as a progressive
@@ -634,42 +609,24 @@ def encode_progressive(arr: np.ndarray, qtab_luma: np.ndarray | None = None,
     refinement(s).  AC scans use the fixed PROG_AC table (the Annex K
     sequential tables lack the EOBn symbols); DC scans reuse Annex K.
     The fixture-side twin of the SOF2 decode path, mirroring
-    encode_baseline."""
-    gray, h, w, planes, (qtab_luma, qtab_chroma), samps, coefs = \
-        _prepare_encode(arr, qtab_luma, qtab_chroma, subsampling)
+    encode_baseline (all-ones quant table)."""
+    gray, h, w, qtab, samps, coefs = _prepare_encode(arr, None, subsampling)
     ncomp = 1 if gray else 3
-    comps = [(ci + 1, 0 if ci == 0 else 1, samps[ci][0], samps[ci][1])
-             for ci in range(ncomp)]
-    hmax = max(s[0] for s in samps)
-    vmax = max(s[1] for s in samps)
-    mcux = planes[0].shape[1] // (8 * hmax)
-    mcuy = planes[0].shape[0] // (8 * vmax)
-    grids = [(mcux * hi, mcuy * vi) for _, _, hi, vi in comps]
 
     dc_codes = [_canonical_codes(DC_LUM_BITS, DC_LUM_VALS),
                 _canonical_codes(DC_CHR_BITS, DC_CHR_VALS)]
     ac_codes = _canonical_codes(PROG_AC_BITS, PROG_AC_VALS)
 
-    out = _frame_header(gray, h, w, samps, qtab_luma, qtab_chroma, 0xC2)
-    out += _seg(0xC4, _dht_body(0, 0, DC_LUM_BITS, DC_LUM_VALS))
-    if not gray:
-        out += _seg(0xC4, _dht_body(0, 1, DC_CHR_BITS, DC_CHR_VALS))
-    out += _seg(0xC4, _dht_body(1, 0, PROG_AC_BITS, PROG_AC_VALS))
+    tables = [(0, 0, DC_LUM_BITS, DC_LUM_VALS), (0, 1, DC_CHR_BITS, DC_CHR_VALS)]
+    tables = tables[:1 if gray else 2] + [(1, 0, PROG_AC_BITS, PROG_AC_VALS)]
+    out = _frame_header(gray, h, w, samps, qtab, 0xC2, tables, restart_interval)
 
     def sos(scan_comps, ss, se, ah, al):
-        body = bytes([len(scan_comps)])
-        for ci in scan_comps:
-            body += bytes([ci + 1, ((0 if ci == 0 else 1) << 4) | 0])
-        body += bytes([ss, se, (ah << 4) | al])
-        return _seg(0xDA, body)
+        # every AC scan codes with the one PROG_AC table, id 0
+        return _sos([(ci, min(ci, 1), 0) for ci in scan_comps], ss, se, ah, al)
 
     def order_for(scan_comps):
-        triples = [(ci, 0 if ci == 0 else 1, 0) for ci in scan_comps]
-        return _prog_block_order(triples, comps, grids, mcux, mcuy,
-                                 hmax, vmax, h, w)
-
-    if restart_interval:
-        out += _seg(0xDD, restart_interval.to_bytes(2, "big"))
+        return _block_order(scan_comps, samps, h, w)
 
     all_comps = list(range(ncomp))
     out += sos(all_comps, 0, 0, 0, dc_al)
@@ -760,6 +717,14 @@ class _SegmentedReader:
         return False
 
 
+def _lut(luts: dict, tid: int, kind: str):
+    """Huffman table `tid` of one class; a scan naming a table no DHT
+    defined is a malformed stream."""
+    if tid not in luts:
+        raise ValueError(f"missing Huffman table {kind}={tid}")
+    return luts[tid]
+
+
 def _read_sym(br: _BitReader, lut) -> int:
     sym_t, len_t = lut
     v = br.peek16()
@@ -770,16 +735,17 @@ def _read_sym(br: _BitReader, lut) -> int:
     return int(sym_t[v])
 
 
-def _decode_scan_baseline(sr, scan, comps, coefs, grids, mcux, mcuy,
-                          dc_luts, ac_luts, max_mcus) -> None:
-    """Sequential-DCT scan: full-band (DC + AC 1..63) interleaved MCUs.
-    Restart boundaries (every `sr.ri` MCUs) reset the DC predictions
-    and byte-align onto the next entropy segment."""
-    preds = [0] * len(comps)
+def _decode_scan_baseline(sr, groups, scan, coefs, dc_luts, ac_luts) -> None:
+    """Sequential-DCT scan: full-band (DC + AC 1..63) blocks in the
+    scan's group order.  Restart boundaries (every `sr.ri` groups) reset
+    the DC predictions and byte-align onto the next entropy segment."""
+    luts = {ci: (_lut(dc_luts, dct, "dc"), _lut(ac_luts, act, "ac"))
+            for ci, dct, act in scan}
+    preds = {ci: 0 for ci in luts}
 
-    def read_block(blk, ci, dct, act) -> None:
+    def read_block(blk, ci) -> None:
         br = sr.br
-        dc_lut, ac_lut = dc_luts[dct], ac_luts[act]
+        dc_lut, ac_lut = luts[ci]
         size = _read_sym(br, dc_lut)
         diff = _extend(br.take(size), size)
         preds[ci] += diff
@@ -799,50 +765,48 @@ def _decode_scan_baseline(sr, scan, comps, coefs, grids, mcux, mcuy,
             blk[k] = _extend(br.take(s), s)
             k += 1
 
-    n_mcus = mcux * mcuy
-    n_scan = n_mcus if max_mcus is None else min(n_mcus, max_mcus)
-    for n in range(n_scan):
+    for n, group in enumerate(groups):
         if sr.boundary(n):
-            preds = [0] * len(comps)
-        my, mx = divmod(n, mcux)
-        for ci, dct, act in scan:
-            _, _, hi, vi = comps[ci]
-            gw = grids[ci][0]
-            # Hi x Vi data units per MCU, raster order inside the MCU
-            for by in range(vi):
-                for bx in range(hi):
-                    idx = (my * vi + by) * gw + (mx * hi + bx)
-                    read_block(coefs[ci][idx], ci, dct, act)
+            preds = {ci: 0 for ci in luts}
+        for ci, idx in group:
+            read_block(coefs[ci][idx], ci)
 
 
-def _prog_block_order(scan, comps, grids, mcux, mcuy, hmax, vmax, h, w):
-    """Groups of (ci, idx) for one progressive scan, one group per
-    restart-counting unit.  ns > 1 -> interleaved MCU order (T.81
-    A.2.3), one group per MCU; ns == 1 -> non-interleaved raster order
-    over the component's OWN block grid, computed from its actual
-    sample dimensions (A.2.2 — NOT the MCU-padded grid), one group per
-    block (the non-interleaved MCU)."""
+def _block_order(cis, samps, h, w) -> list[list[tuple[int, int]]]:
+    """Groups of (ci, idx) for one scan over the components `cis` of an
+    h x w frame whose components sample at `samps` [(Hi, Vi), ...]; idx
+    indexes the component's MCU-padded block grid, and there is one
+    group per restart-counting unit.  Several components -> interleaved
+    MCU order (T.81 A.2.3), one group per MCU, Hi x Vi blocks per
+    component in raster order inside it; one component ->
+    non-interleaved raster order over the component's OWN block grid,
+    computed from its actual sample dimensions (A.2.2 — NOT the
+    MCU-padded grid), one group per block (the non-interleaved MCU)."""
+    cis = list(cis)
+    hmax = max(hi for hi, _ in samps)
+    vmax = max(vi for _, vi in samps)
+    mcux = (w + 8 * hmax - 1) // (8 * hmax)
+    mcuy = (h + 8 * vmax - 1) // (8 * vmax)
     groups: list[list[tuple[int, int]]] = []
-    if len(scan) > 1:
-        for n in range(mcux * mcuy):
-            my, mx = divmod(n, mcux)
-            g: list[tuple[int, int]] = []
-            for ci, _, _ in scan:
-                _, _, hi, vi = comps[ci]
-                gw = grids[ci][0]
-                for by in range(vi):
-                    for bx in range(hi):
-                        g.append((ci, (my * vi + by) * gw + (mx * hi + bx)))
-            groups.append(g)
+    if len(cis) > 1:
+        for my in range(mcuy):
+            for mx in range(mcux):
+                g: list[tuple[int, int]] = []
+                for ci in cis:
+                    hi, vi = samps[ci]
+                    for by in range(vi):
+                        for bx in range(hi):
+                            g.append((ci, (my * vi + by) * mcux * hi
+                                      + mx * hi + bx))
+                groups.append(g)
     else:
-        ci = scan[0][0]
-        _, _, hi, vi = comps[ci]
-        gw = grids[ci][0]
+        ci, = cis
+        hi, vi = samps[ci]
         cx = (w * hi + hmax - 1) // hmax    # comp samples across
         cy = (h * vi + vmax - 1) // vmax
         for by in range((cy + 7) // 8):
             for bx in range((cx + 7) // 8):
-                groups.append([(ci, by * gw + bx)])
+                groups.append([(ci, by * mcux * hi + bx)])
     return groups
 
 
@@ -850,11 +814,7 @@ def _prog_dc_first(sr, groups, scan, coefs, al, dc_luts) -> None:
     """G.2 DC first scan: diffs of the point transform v >> Al
     (arithmetic shift), stored as decoded << Al.  Restart boundaries
     reset the predictions."""
-    luts = {}
-    for ci, dct, _ in scan:
-        if dct not in dc_luts:
-            raise ValueError(f"missing Huffman table dc={dct}")
-        luts[ci] = dc_luts[dct]
+    luts = {ci: _lut(dc_luts, dct, "dc") for ci, dct, _ in scan}
     preds = {ci: 0 for ci, _, _ in scan}
     for n, group in enumerate(groups):
         if sr.boundary(n):
@@ -972,16 +932,13 @@ def _prog_ac_refine(sr, groups, zz, ac_lut, ss, se, al) -> None:
             eobrun -= 1
 
 
-def _decode_scan_progressive(sr, scan, comps, coefs, grids, mcux, mcuy,
-                             hmax, vmax, h, w, ss, se, ah, al,
+def _decode_scan_progressive(sr, groups, scan, coefs, ss, se, ah, al,
                              dc_luts, ac_luts) -> None:
     """Dispatch one progressive scan (spectral selection Ss..Se,
     successive approximation Ah -> Al) to the four G.2 scan kinds."""
     if se > 63 or (ss == 0) != (se == 0) or al > 13 or \
             (ah != 0 and ah != al + 1):
         raise ValueError("invalid progressive scan header")
-    groups = _prog_block_order(scan, comps, grids, mcux, mcuy,
-                               hmax, vmax, h, w)
     if ss == 0:                         # DC scan
         if ah == 0:
             _prog_dc_first(sr, groups, scan, coefs, al, dc_luts)
@@ -990,14 +947,12 @@ def _decode_scan_progressive(sr, scan, comps, coefs, grids, mcux, mcuy,
         return
     if len(scan) != 1:
         raise ValueError("progressive AC scan must be non-interleaved")
-    act = scan[0][2]
-    if act not in ac_luts:
-        raise ValueError(f"missing Huffman table ac={act}")
-    ci = scan[0][0]
+    ci, _, act = scan[0]
+    ac_lut = _lut(ac_luts, act, "ac")
     if ah == 0:
-        _prog_ac_first(sr, groups, coefs[ci], ac_luts[act], ss, se, al)
+        _prog_ac_first(sr, groups, coefs[ci], ac_lut, ss, se, al)
     else:
-        _prog_ac_refine(sr, groups, coefs[ci], ac_luts[act], ss, se, al)
+        _prog_ac_refine(sr, groups, coefs[ci], ac_lut, ss, se, al)
 
 
 def decode_coefficients(b: bytes, max_mcus: int | None = None):
@@ -1011,9 +966,10 @@ def decode_coefficients(b: bytes, max_mcus: int | None = None):
     every scan in marker order (DC first/refine, AC spectral bands
     first/refine with EOB runs), accumulating into the same coefficient
     arrays.  `max_mcus` stops a SEQUENTIAL entropy scan after that many
-    MCUs (prefix decode — a valid prefix proves marker parsing +
-    Huffman tables + entropy decode without paying for the whole image;
-    remaining blocks stay zero); it is ignored for progressive streams,
+    MCUs (blocks, in a one-component scan) — prefix decode: a valid
+    prefix proves marker parsing + Huffman tables + entropy decode
+    without paying for the whole image, and the remaining blocks stay
+    zero.  It is ignored for progressive streams,
     whose per-scan passes are already cheap relative to one sequential
     full-band pass."""
     if b[:2] != b"\xff\xd8":
@@ -1026,7 +982,6 @@ def decode_coefficients(b: bytes, max_mcus: int | None = None):
     comps: list[tuple[int, int, int, int]] = []  # (comp_id, qtab_id, hi, vi)
     progressive = False
     coefs = grids = None
-    hmax = vmax = mcux = mcuy = 0
     ri = 0                              # restart interval (DRI), in MCUs
     scanned = False
     while pos + 4 <= len(b):
@@ -1108,6 +1063,8 @@ def decode_coefficients(b: bytes, max_mcus: int | None = None):
             if len(body) < 4 or len(body) < 4 + 2 * body[0]:
                 raise ValueError("truncated SOS segment")
             ns = body[0]
+            if ns == 0:
+                raise ValueError("SOS names no component")
             scan: list[tuple[int, int, int]] = []
             for si in range(ns):
                 cid, tabs = body[1 + 2 * si], body[2 + 2 * si]
@@ -1130,20 +1087,16 @@ def decode_coefficients(b: bytes, max_mcus: int | None = None):
             if ri == 0 and len(segs) > 1:
                 raise ValueError("restart marker without DRI")
             sr = _SegmentedReader(segs, ri)
+            groups = _block_order([ci for ci, _, _ in scan],
+                                  [(hi, vi) for _, _, hi, vi in comps], h, w)
             if not progressive:
                 if (ss, se, ah, al) != (0, 63, 0, 0):
                     raise ValueError("invalid sequential scan header")
-                for _, dct, act in scan:
-                    if dct not in dc_luts or act not in ac_luts:
-                        raise ValueError(
-                            f"missing Huffman table dc={dct}/ac={act}"
-                        )
-                _decode_scan_baseline(sr, scan, comps, coefs, grids,
-                                      mcux, mcuy, dc_luts, ac_luts, max_mcus)
+                _decode_scan_baseline(sr, groups[:max_mcus], scan, coefs,
+                                      dc_luts, ac_luts)
                 scanned = True
                 break                   # single scan; trailing bytes ignored
-            _decode_scan_progressive(sr, scan, comps, coefs, grids,
-                                     mcux, mcuy, hmax, vmax, h, w,
+            _decode_scan_progressive(sr, groups, scan, coefs,
                                      ss, se, ah, al, dc_luts, ac_luts)
             scanned = True
             pos = pos + 2 + ln + used   # resume marker parse after entropy

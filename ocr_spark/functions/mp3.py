@@ -52,6 +52,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from ocr_spark.functions.bits import MsbReader, MsbWriter, crc_msb
+
 # ---------------------------------------------------------------------------
 # constants (MPEG-1 Layer III)
 # ---------------------------------------------------------------------------
@@ -90,61 +92,20 @@ class Mp3Error(ValueError):
 # bit IO
 # ---------------------------------------------------------------------------
 
-class _BitReader:
-    def __init__(self, data: bytes, pos_bits: int = 0):
-        self.data = data
-        self.pos = pos_bits
+class _BitReader(MsbReader):
+    """MsbReader whose underrun raises Mp3Error; `pos` counts bits."""
 
     def read(self, n: int) -> int:
-        if n == 0:
-            return 0
-        if self.pos + n > 8 * len(self.data):
+        v = super().read(n)
+        if v < 0:
             raise Mp3Error("bitstream underrun")
-        v = 0
-        p = self.pos
-        for _ in range(n):
-            v = (v << 1) | ((self.data[p >> 3] >> (7 - (p & 7))) & 1)
-            p += 1
-        self.pos = p
         return v
-
-
-class _BitWriter:
-    def __init__(self):
-        self.bits: list[int] = []
-
-    def write(self, value: int, n: int) -> None:
-        if n and not 0 <= value < (1 << n):
-            raise ValueError(f"value {value} does not fit {n} bits")
-        for i in range(n - 1, -1, -1):
-            self.bits.append((value >> i) & 1)
-
-    def to_bytes(self) -> bytes:
-        out = bytearray()
-        acc, k = 0, 0
-        for b in self.bits:
-            acc = (acc << 1) | b
-            k += 1
-            if k == 8:
-                out.append(acc)
-                acc, k = 0, 0
-        if k:
-            out.append(acc << (8 - k))
-        return bytes(out)
 
 
 def crc16_mp3(data: bytes) -> int:
     """CRC-16 with polynomial 0x8005, initial value 0xFFFF (the mp3
     protection word; covers header bytes 2-3 + the side info)."""
-    crc = 0xFFFF
-    for byte in data:
-        for i in range(7, -1, -1):
-            bit = (byte >> i) & 1
-            hi = (crc >> 15) & 1
-            crc = ((crc << 1) & 0xFFFF)
-            if hi ^ bit:
-                crc ^= 0x8005
-    return crc
+    return crc_msb(data, 16, 0x8005, 0xFFFF)
 
 
 # ---------------------------------------------------------------------------
@@ -199,7 +160,7 @@ def _read_side_info_mono(br: _BitReader) -> tuple[int, int, list[int], list[Gran
     return main_data_begin, private, scfsi, grans
 
 
-def _write_side_info_mono(bw: _BitWriter, main_data_begin: int,
+def _write_side_info_mono(bw: MsbWriter, main_data_begin: int,
                           scfsi: list[int], grans: list[dict]) -> None:
     bw.write(main_data_begin, 9)
     bw.write(0, 5)
@@ -512,7 +473,7 @@ def encode_mp3_silence(doc_id: int) -> bytes:
         area = frame_len - 4 - (2 if protected else 0) - 17
 
         grans = []
-        md = _BitWriter()
+        md = MsbWriter()
         for g in range(2):
             compress = (d + i + g) % 16
             s1, s2 = SLEN1[compress], SLEN2[compress]
@@ -562,7 +523,7 @@ def encode_mp3_silence(doc_id: int) -> bytes:
         h = (0x7FF << 21) | (3 << 19) | (1 << 17) \
             | ((0 if protected else 1) << 16) | (bitrate_idx << 12) \
             | ((d % 3) << 10) | (padding << 9) | (3 << 6)
-        bw = _BitWriter()
+        bw = MsbWriter()
         _write_side_info_mono(bw, mdbs[i], [0, 0, 0, 0], grans)
         side = bw.to_bytes()
         assert len(side) == 17

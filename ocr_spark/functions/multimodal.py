@@ -301,27 +301,28 @@ def _decode_ppm(b: bytes) -> np.ndarray:
     return data.reshape(h, w, 3).copy()
 
 
+def _riff_chunk(tag: bytes, body: bytes) -> bytes:
+    """One RIFF chunk: tag, little-endian body length, body, and the pad
+    byte that word-aligns the next chunk."""
+    return tag + len(body).to_bytes(4, "little") + body + b"\x00" * (len(body) & 1)
+
+
+def _riff_chunks(data: bytes, pos: int = 0) -> Iterator[tuple[bytes, bytes]]:
+    """(tag, body) of each RIFF chunk from `pos` on, skipping the pad
+    bytes that word-align them."""
+    while pos + 8 <= len(data):
+        ln = int.from_bytes(data[pos + 4 : pos + 8], "little")
+        yield data[pos : pos + 4], data[pos + 8 : pos + 8 + ln]
+        pos += 8 + ln + (ln & 1)
+
+
 def encode_wav(samples: np.ndarray, sample_rate: int) -> bytes:
     """Encode an (n_samples, n_channels) int16 array as a RIFF/WAVE
     PCM16 file — the fixture writer for the real audio-decode path."""
     assert samples.dtype == np.int16 and samples.ndim == 2
-    n, ch = samples.shape
-    data = samples.tobytes()            # interleaved little-endian PCM16
-    byte_rate = sample_rate * ch * 2
-    fmt = (
-        (1).to_bytes(2, "little")       # PCM
-        + ch.to_bytes(2, "little")
-        + sample_rate.to_bytes(4, "little")
-        + byte_rate.to_bytes(4, "little")
-        + (ch * 2).to_bytes(2, "little")  # block align
-        + (16).to_bytes(2, "little")    # bits/sample
-    )
-    body = (
-        b"WAVE"
-        + b"fmt " + len(fmt).to_bytes(4, "little") + fmt
-        + b"data" + len(data).to_bytes(4, "little") + data
-    )
-    return b"RIFF" + len(body).to_bytes(4, "little") + body
+    ch = samples.shape[1]
+    # interleaved little-endian PCM16: even-length, so no pad byte
+    return _riff_wave(1, ch, sample_rate, 2 * ch, 16, b"", samples.tobytes())
 
 
 def _riff_wave(fmt_code: int, ch: int, sample_rate: int, block_align: int,
@@ -336,13 +337,9 @@ def _riff_wave(fmt_code: int, ch: int, sample_rate: int, block_align: int,
         + bits.to_bytes(2, "little")
         + fmt_extra
     )
-    body = (
-        b"WAVE"
-        + b"fmt " + len(fmt).to_bytes(4, "little") + fmt
-        + b"data" + len(data).to_bytes(4, "little") + data
-        + (b"\x00" if len(data) & 1 else b"")
-    )
-    return b"RIFF" + len(body).to_bytes(4, "little") + body
+    return _riff_chunk(
+        b"RIFF",
+        b"WAVE" + _riff_chunk(b"fmt ", fmt) + _riff_chunk(b"data", data))
 
 
 def encode_wav_g711(samples: np.ndarray, sample_rate: int, law: str) -> bytes:
@@ -379,9 +376,15 @@ def encode_wav_adpcm(samples: np.ndarray, sample_rate: int,
 
 
 def _decode_wav(b: bytes) -> tuple[np.ndarray, int]:
+    """(samples (n, ch) int16, sample_rate) of a RIFF/WAVE payload."""
+    _, samples, sample_rate = _decode_wav_fmt(b)
+    return samples, sample_rate
+
+
+def _decode_wav_fmt(b: bytes) -> tuple[int, np.ndarray, int]:
     """Pure-NumPy RIFF/WAVE decode: walk the chunk list (skipping
     unknown chunks by their declared size, with word alignment), parse
-    fmt, return (samples (n, ch) int16, sample_rate).  Supported
+    fmt, return (fmt code, samples (n, ch) int16, sample_rate).  Supported
     codecs: PCM16 (fmt 1), G.711 mu-law (fmt 7) / A-law (fmt 6), and
     IMA/DVI ADPCM (fmt 0x11) — see ocr_spark/functions/audio.py.
     Float/24-bit/perceptual (mp3/ogg) streams raise
@@ -389,14 +392,10 @@ def _decode_wav(b: bytes) -> tuple[np.ndarray, int]:
     decoders."""
     if b[:4] != b"RIFF" or b[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE payload")
-    pos = 12
     sample_rate = n_channels = fmt_code = bits = None
     block_align = 0
     data = None
-    while pos + 8 <= len(b):
-        tag = b[pos : pos + 4]
-        ln = int.from_bytes(b[pos + 4 : pos + 8], "little")
-        body = b[pos + 8 : pos + 8 + ln]
+    for tag, body in _riff_chunks(b, 12):
         if tag == b"fmt ":
             fmt_code = int.from_bytes(body[0:2], "little")
             n_channels = int.from_bytes(body[2:4], "little")
@@ -405,7 +404,6 @@ def _decode_wav(b: bytes) -> tuple[np.ndarray, int]:
             bits = int.from_bytes(body[14:16], "little")
         elif tag == b"data":
             data = body
-        pos += 8 + ln + (ln & 1)        # chunks are word-aligned
     if sample_rate is None or data is None:
         raise ValueError("WAV missing fmt/data chunk")
     if n_channels < 1:
@@ -415,14 +413,14 @@ def _decode_wav(b: bytes) -> tuple[np.ndarray, int]:
             data, dtype="<i2",
             count=(len(data) // (2 * n_channels)) * n_channels,
         ).reshape(-1, n_channels)
-        return samples, sample_rate
+        return fmt_code, samples, sample_rate
     if fmt_code in (6, 7) and bits == 8:
         law = "ulaw" if fmt_code == 7 else "alaw"
         codes = np.frombuffer(
             data, dtype=np.uint8,
             count=(len(data) // n_channels) * n_channels,
         )
-        return g711_decode(codes, law).reshape(-1, n_channels), sample_rate
+        return fmt_code, g711_decode(codes, law).reshape(-1, n_channels), sample_rate
     if fmt_code == 0x11 and bits == 4:
         if block_align <= 4 * n_channels:
             raise ValueError("ADPCM block_align too small for header")
@@ -430,12 +428,18 @@ def _decode_wav(b: bytes) -> tuple[np.ndarray, int]:
             ima_adpcm_decode_block(data[p : p + block_align], n_channels)
             for p in range(0, len(data), block_align)
         ]
-        return np.concatenate(chunks, axis=0), sample_rate
+        return fmt_code, np.concatenate(chunks, axis=0), sample_rate
     raise NotImplementedError(
         f"unsupported WAV codec (fmt={fmt_code}, bits={bits}); "
         "PCM16, G.711 ulaw/alaw, and IMA ADPCM are implemented — "
         "perceptual codecs (mp3/ogg) need a codec library"
     )
+
+
+def _decode_jpeg_rgb(b: bytes) -> np.ndarray:
+    """A JPEG as (H, W, 3) RGB, grayscale repeated across channels."""
+    arr = decode_baseline(b)
+    return np.repeat(arr[:, :, None], 3, axis=2) if arr.ndim == 2 else arr
 
 
 def decode_media_real(payload: bytes, media_type: str) -> np.ndarray:
@@ -460,10 +464,7 @@ def decode_media_real(payload: bytes, media_type: str) -> np.ndarray:
         if payload[:4] == b"II*\x00":
             return decode_tiff(payload)
         if payload[:3] == b"\xff\xd8\xff":
-            arr = decode_baseline(payload)
-            if arr.ndim == 2:           # grayscale -> (H, W, 3) contract
-                arr = np.repeat(arr[:, :, None], 3, axis=2)
-            return arr
+            return _decode_jpeg_rgb(payload)
     if media_type == "audio" and payload[:4] == b"RIFF":
         return _decode_wav(payload)[0]
     if (
@@ -521,13 +522,6 @@ def _checksum(b: bytes) -> int:
     # positional rolling checksum, exact in int64 for payloads << 2^44
     return int((arr * (np.arange(len(arr)) % 1009 + 1)).sum())
 
-def _avi_chunk(tag: bytes, body: bytes) -> bytes:
-    return tag + len(body).to_bytes(4, "little") + body + (b"\x00" * (len(body) & 1))
-
-
-def _avi_list(list_type: bytes, body: bytes) -> bytes:
-    return _avi_chunk(b"LIST", list_type + body)
-
 
 def encode_mjpeg_avi(frames: list[bytes], fps: int, w: int, h: int) -> bytes:
     """Encode JPEG frame payloads as an MJPEG AVI (RIFF 'AVI ' with
@@ -563,22 +557,22 @@ def encode_mjpeg_avi(frames: list[bytes], fps: int, w: int, h: int) -> bytes:
         + (w * h * 3).to_bytes(4, "little")
         + b"\x00" * 16
     )
-    hdrl = _avi_list(
-        b"hdrl",
-        _avi_chunk(b"avih", avih)
-        + _avi_list(b"strl", _avi_chunk(b"strh", strh) + _avi_chunk(b"strf", strf)),
+    strl = _riff_chunk(b"strh", strh) + _riff_chunk(b"strf", strf)
+    hdrl = _riff_chunk(
+        b"LIST",
+        b"hdrl" + _riff_chunk(b"avih", avih) + _riff_chunk(b"LIST", b"strl" + strl),
     )
-    movi_body = b"".join(_avi_chunk(b"00dc", f) for f in frames)
-    movi = _avi_list(b"movi", movi_body)
+    movi_chunks = [_riff_chunk(b"00dc", f) for f in frames]
+    movi = _riff_chunk(b"LIST", b"movi" + b"".join(movi_chunks))
     # idx1: one entry per frame, offsets relative to start of movi data
     idx = bytearray()
     off = 4                             # past the 'movi' list-type fourcc
-    for f in frames:
+    for f, chunk in zip(frames, movi_chunks):
         idx += b"00dc" + (0x10).to_bytes(4, "little")
         idx += off.to_bytes(4, "little") + len(f).to_bytes(4, "little")
-        off += 8 + len(f) + (len(f) & 1)
-    body = b"AVI " + hdrl + movi + _avi_chunk(b"idx1", bytes(idx))
-    return b"RIFF" + len(body).to_bytes(4, "little") + body
+        off += len(chunk)
+    return _riff_chunk(
+        b"RIFF", b"AVI " + hdrl + movi + _riff_chunk(b"idx1", bytes(idx)))
 
 
 def _decode_mjpeg_avi(b: bytes) -> np.ndarray:
@@ -594,37 +588,17 @@ def _decode_mjpeg_avi(b: bytes) -> np.ndarray:
     frames: list[np.ndarray] = []
 
     def walk(data: bytes) -> None:
-        pos = 0
-        while pos + 8 <= len(data):
-            tag = data[pos : pos + 4]
-            ln = int.from_bytes(data[pos + 4 : pos + 8], "little")
-            body = data[pos + 8 : pos + 8 + ln]
+        for tag, body in _riff_chunks(data):
             if tag == b"LIST":
                 if body[:4] in (b"movi", b"hdrl", b"strl", b"rec "):
                     walk(body[4:])
             elif tag[2:4] in (b"dc", b"db") and body[:3] == b"\xff\xd8\xff":
-                arr = decode_baseline(body)
-                if arr.ndim == 2:
-                    arr = np.repeat(arr[:, :, None], 3, axis=2)
-                frames.append(arr)
-            pos += 8 + ln + (ln & 1)
+                frames.append(_decode_jpeg_rgb(body))
 
     walk(b[12:])
     if not frames:
         raise ValueError("AVI contains no decodable MJPEG frames")
     return np.stack(frames)
-
-
-def _wav_fmt_code(b: bytes) -> int:
-    """Measured codec tag from the payload's own fmt chunk."""
-    pos = 12
-    while pos + 8 <= len(b):
-        tag = b[pos : pos + 4]
-        ln = int.from_bytes(b[pos + 4 : pos + 8], "little")
-        if tag == b"fmt ":
-            return int.from_bytes(b[pos + 8 : pos + 10], "little")
-        pos += 8 + ln + (ln & 1)
-    raise ValueError("WAV missing fmt chunk")
 
 
 # ---------------------------------------------------------------------------
@@ -897,9 +871,9 @@ def _wav_measure(b: bytes) -> tuple:
 def _wav_codec_measure(b: bytes) -> tuple:
     """The WAV measure plus the payload's own fmt code and the signed
     sample sum val_sum (it catches sign bugs the abs stats would mask)."""
-    samples, rate = _decode_wav(b)
+    fmt_code, samples, rate = _decode_wav_fmt(b)
     s64 = samples.astype(np.int64)
-    return (_wav_fmt_code(b), samples.shape[0], rate, samples.shape[1],
+    return (fmt_code, samples.shape[0], rate, samples.shape[1],
             int(s64.sum()), int(np.abs(s64).sum()), int(np.abs(s64).max()))
 
 

@@ -43,6 +43,8 @@ from __future__ import annotations
 
 import struct
 
+from ocr_spark.functions.bits import crc_msb
+
 
 class OggError(ValueError):
     """Malformed ogg payload (poison-envelope class: always catchable)."""
@@ -54,25 +56,8 @@ class OggError(ValueError):
 # 0xEDB88320 variant with init/xor 0xFFFFFFFF)
 # ---------------------------------------------------------------------------
 
-def _make_crc_table() -> list[int]:
-    table = []
-    for i in range(256):
-        r = i << 24
-        for _ in range(8):
-            r = ((r << 1) ^ 0x04C11DB7) & 0xFFFFFFFF if r & 0x80000000 \
-                else (r << 1) & 0xFFFFFFFF
-        table.append(r)
-    return table
-
-
-_CRC_TABLE = _make_crc_table()
-
-
 def ogg_crc(data: bytes) -> int:
-    r = 0
-    for b in data:
-        r = ((r << 8) & 0xFFFFFFFF) ^ _CRC_TABLE[((r >> 24) & 0xFF) ^ b]
-    return r
+    return crc_msb(data, 32, 0x04C11DB7, 0)
 
 
 # ---------------------------------------------------------------------------
@@ -275,19 +260,16 @@ def parse_vorbis_comment(pkt: bytes) -> dict:
         pos += 4
         return v
 
-    vlen = take_u32()
-    if pos + vlen > len(pkt):
-        raise OggError("truncated vendor string")
-    vendor = pkt[pos:pos + vlen].decode("utf-8", "strict")
-    pos += vlen
-    n = take_u32()
-    comments = []
-    for _ in range(n):
-        clen = take_u32()
-        if pos + clen > len(pkt):
-            raise OggError("truncated user comment")
-        comments.append(pkt[pos:pos + clen].decode("utf-8", "strict"))
-        pos += clen
+    def take_str(what: str) -> str:
+        nonlocal pos
+        n = take_u32()
+        if pos + n > len(pkt):
+            raise OggError(f"truncated {what}")
+        pos += n
+        return pkt[pos - n:pos].decode("utf-8", "strict")
+
+    vendor = take_str("vendor string")
+    comments = [take_str("user comment") for _ in range(take_u32())]
     if pos >= len(pkt) or not pkt[pos] & 0x01:
         raise OggError("comment framing bit unset")
     return {"vendor": vendor, "comments": comments}

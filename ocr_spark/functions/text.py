@@ -28,11 +28,11 @@ def md5_long(col: Column | str, hex_chars: int = 15) -> Column:
     return F.conv(F.substring(F.md5(col), 1, hex_chars), 16, 10).cast("long")
 
 
-def letter_words(col: Column | str = "text") -> Column:
-    """Letters-only words: every non-letter becomes a space, lowercase,
-    space runs collapse, split on ' '.  A text with no letters gives
+def letter_words() -> Column:
+    """Letters-only words of `text`: every non-letter becomes a space,
+    lowercase, space runs collapse, split on ' '.  A text with no letters gives
     [''] (callers that explode filter on length)."""
-    canon = F.lower(F.trim(F.regexp_replace(col, r"[^A-Za-z ]", " ")))
+    canon = F.lower(F.trim(F.regexp_replace("text", r"[^A-Za-z ]", " ")))
     return F.split(F.trim(F.regexp_replace(canon, r" +", " ")), " ")
 
 

@@ -6,8 +6,9 @@ block streams.  Compression: none (1), PackBits (32773), and TIFF LZW
 (5) — which is NOT the GIF LZW: codes are packed MSB-first, the table
 starts at 9 bits above a 256-symbol alphabet, and the width grows one
 code EARLY ("early change", the documented TIFF quirk that GIF does
-not share).  Horizontal-differencing predictor (tag 317 = 2) is
-supported for LZW strips.  Encoder twins emit all three compressions
+not share); both variants run through the one LZW coder in bits.py,
+with their own arguments.  Horizontal-differencing predictor (tag
+317 = 2) is supported for LZW strips.  Encoder twins emit all three compressions
 for deterministic fixtures; TIFF is lossless so round-trips are
 pixel-exact.
 
@@ -21,6 +22,8 @@ from __future__ import annotations
 import struct
 
 import numpy as np
+
+from ocr_spark.functions import bits
 
 TIFF_MAGIC_LE = b"II*\x00"
 
@@ -92,125 +95,15 @@ def packbits_decode(data: bytes, n_expected: int) -> bytes:
 # TIFF LZW (spec section 13): MSB-first, 256-symbol alphabet, EARLY CHANGE
 # ---------------------------------------------------------------------------
 
-_CLEAR, _EOI = 256, 257
-
-
 def tiff_lzw_encode(data: bytes) -> bytes:
-    out = bytearray()
-    cur = 0
-    nbits = 0
-    width = 9
-
-    def put(code: int) -> None:
-        nonlocal cur, nbits
-        cur = (cur << width) | code
-        nbits += width
-        while nbits >= 8:
-            out.append((cur >> (nbits - 8)) & 0xFF)
-            nbits -= 8
-
-    table: dict = {}
-    next_code = 258
-
-    def out_code(code: int) -> None:
-        # growth check AFTER every code written, against the next free
-        # slot BEFORE the insertion that follows — the same codes-counted
-        # synchronization as the GIF codec (see gif.py lzw_encode), but
-        # with the EARLY-CHANGE threshold 2^width - 1 instead of 2^width
-        # (TIFF spec section 13: the width bumps one code early)
-        nonlocal width
-        put(code)
-        if next_code >= (1 << width) - 1 and width < 12:
-            width += 1
-
-    def fresh() -> None:
-        nonlocal table, next_code, width
-        table = {(i,): i for i in range(256)}
-        next_code = 258
-        width = 9
-
-    fresh()
-    out_code(_CLEAR)
-    seq: tuple = ()
-    for v in data:
-        cand = seq + (v,)
-        if cand in table:
-            seq = cand
-            continue
-        out_code(table[seq])
-        table[cand] = next_code
-        next_code += 1
-        if next_code >= 4094:          # spec: clear before the table fills
-            out_code(_CLEAR)
-            fresh()
-        seq = (v,)
-    if seq:
-        out_code(table[seq])
-    put(_EOI)
-    if nbits:
-        out.append((cur << (8 - nbits)) & 0xFF)
-    return bytes(out)
+    # spec: the width bumps one code early, and the encoder clears
+    # before the table fills
+    return bits.lzw_encode(data, bits.MsbWriter(), 8, 1, 4094)
 
 
 def tiff_lzw_decode(data: bytes, n_expected: int) -> bytes:
-    out = bytearray()
-    table: list = []
-    width = 9
-    prev: tuple | None = None
-    counter = 258  # counts code READS since reset (gif.py synchronization)
-
-    def fresh() -> None:
-        nonlocal table, width, prev, counter
-        table = [(i,) for i in range(256)] + [(), ()]
-        width = 9
-        prev = None
-        counter = 258
-
-    fresh()
-    acc = 0
-    nbits = 0
-    pos = 0
-    n = len(data)
-    while True:
-        while nbits < width:
-            if pos >= n:
-                raise ValueError("TIFF: LZW stream truncated before EOI")
-            acc = (acc << 8) | data[pos]
-            nbits += 8
-            pos += 1
-        code = (acc >> (nbits - width)) & ((1 << width) - 1)
-        nbits -= width
-        acc &= (1 << nbits) - 1
-        # growth keyed on codes read, with the early-change -1 threshold
-        counter += 1
-        if counter > (1 << width) - 1 and width < 12:
-            width += 1
-        if code == _CLEAR:
-            fresh()
-            continue
-        if code == _EOI:
-            break
-        if prev is None:
-            if code >= 256:
-                raise ValueError(f"TIFF: first LZW code {code} not a literal")
-            entry = table[code]
-        elif code < len(table):
-            entry = table[code]
-            table.append(prev + (entry[0],))
-        elif code == len(table):
-            entry = prev + (prev[0],)
-            table.append(entry)
-        else:
-            raise ValueError(f"TIFF: LZW code {code} beyond table")
-        out.extend(entry)
-        if len(out) > n_expected:
-            raise ValueError("TIFF: LZW output exceeds strip size")
-        prev = entry
-    if len(out) != n_expected:
-        raise ValueError(
-            f"TIFF: LZW produced {len(out)} of {n_expected} bytes"
-        )
-    return bytes(out)
+    return bytes(bits.lzw_decode(bits.MsbReader(data), 8, 1, n_expected,
+                                 "TIFF"))
 
 
 # ---------------------------------------------------------------------------

@@ -129,9 +129,9 @@ def run_extract(
     n_buckets: int = DEFAULT_N_BUCKETS,
     resume: bool = False,
     num_partitions: int | None = None,
-    slice_turns: int = SALT_SLICE_TURNS,
 ) -> dict:
-    """Execute the full job with resume + lineage.  Returns counters.
+    """Execute the full job with resume + lineage.  Returns counters,
+    among them the salt slice length (SALT_SLICE_TURNS).
 
     Two Spark jobs run the extraction and its write (the shuffle, then
     the UDF + write stage), one more appends the lineage rows.
@@ -149,7 +149,7 @@ def run_extract(
     # result stage (below the one Exchange), where Spark applies each
     # partition's accumulator update exactly once (PLANS.md invariant 6).
     counts = lineage_counts(spark.sparkContext, n_buckets)
-    shuffled = _salted_shuffle(df, True, slice_turns, num_partitions)
+    shuffled = _salted_shuffle(df, True, SALT_SLICE_TURNS, num_partitions)
     out = extract_turns(shuffled, counts)
 
     # Idempotent per-bucket writes: dynamic partition overwrite replaces
@@ -165,4 +165,4 @@ def run_extract(
     # never counted.  Raises before appending if rows_in != rows_out.
     write_lineage(lineage_from_counts(spark, counts.value, run_id), lineage_path)
 
-    return {"buckets_skipped": skipped, "slice_turns": slice_turns}
+    return {"buckets_skipped": skipped, "slice_turns": SALT_SLICE_TURNS}

@@ -54,8 +54,9 @@ def build_session(
 
 def _default_parallelism(master: str) -> int:
     """Task slots of a local master: `local` runs 1, `local[N]` and
-    `local[N,F]` run N, `local[*]` and `local[*,F]` one per CPU (F is
-    the task retry count, not a width).  Anything else is a cluster URL,
+    `local[N,F]` run N, `local[*]` and `local[*,F]` one per CPU this
+    process may run on (the JVM honours the affinity mask too; F is the
+    task retry count, not a width).  Anything else is a cluster URL,
     whose width the driver cannot see: Spark's default of 200."""
     m = re.fullmatch(r"local(?:\[(\*|\d+)(?:,\d+)?\])?", master)
     if m is None:
@@ -63,4 +64,4 @@ def _default_parallelism(master: str) -> int:
     n = m.group(1)
     if n is None:
         return 1
-    return (os.cpu_count() or 8) if n == "*" else int(n)
+    return len(os.sched_getaffinity(0)) if n == "*" else int(n)

@@ -159,25 +159,25 @@ def _with_vfp(ed: DataFrame) -> DataFrame:
     )
 
 
-def _sql_hp_bucket(table: int, bits: int, dims: int, vfp: str = "vfp") -> str:
-    """DuckDB twin of _hp_bucket_expr over the same injected ±1 rows
-    (list_dot_product of integer-valued lists is exact — see above)."""
+def _sql_hp_bucket(table: int, bits: int, dims: int) -> str:
+    """DuckDB twin of _hp_bucket_expr over column vfp and the same
+    injected ±1 rows (list_dot_product of integer-valued lists is exact — see above)."""
     signs = _hp_signs(table, bits, dims)
     terms = [
-        f"(CASE WHEN list_dot_product({vfp}, {list(signs[i])}) > 0"
+        f"(CASE WHEN list_dot_product(vfp, {list(signs[i])}) > 0"
         f" THEN {1 << i}::BIGINT ELSE 0 END)"
         for i in range(bits)
     ]
     return "(" + " + ".join(terms) + ")"
 
 
-def _sql_hp_dots(table: int, bits: int, dims: int, vfp: str = "vfp") -> str:
+def _sql_hp_dots(table: int, bits: int, dims: int) -> str:
     """DuckDB twin of the multi-probe query's array of _hp_dots: BIGINT[]
-    of the exact hyperplane dots (list_dot_product of integer-valued lists
+    of the exact hyperplane dots of column vfp (list_dot_product of integer-valued lists
     is exact — see the sign-LSH note above)."""
     signs = _hp_signs(table, bits, dims)
     terms = [
-        f"list_dot_product({vfp}, {list(signs[i])})::BIGINT"
+        f"list_dot_product(vfp, {list(signs[i])})::BIGINT"
         for i in range(bits)
     ]
     return "[" + ", ".join(terms) + "]"

@@ -293,11 +293,9 @@ def with_dsir_keep(scored: DataFrame, key: Column) -> DataFrame:
     )
 
 
-def dsir_ratio_table(
-    raw_texts: list[str], target_texts: list[str], buckets: int = DSIR_BUCKETS
-) -> list[int]:
+def dsir_ratio_table(raw_texts: list[str], target_texts: list[str]) -> list[int]:
     """Train the DSIR hashed-unigram importance-ratio table (bucket ->
-    ratio_ppm) on the driver — the offline half of the classic
+    ratio_ppm, DSIR_BUCKETS entries) on the driver — the offline half of the classic
     offline-train / online-score split.  Pure Python with EXACTLY the
     batch q_importance_resample arithmetic (md5 bucket, add-1-smoothed
     ppb probabilities, two-step integer division), so a table trained
@@ -312,6 +310,8 @@ def dsir_ratio_table(
     def words(t: str) -> list[str]:
         c = re.sub(r"[ \t\r\n]+", " ", t.lower()).strip()
         return [w for w in c.split(" ") if w] if c else []
+
+    buckets = DSIR_BUCKETS
 
     def bucket(w: str) -> int:
         return int(hashlib.md5(w.encode()).hexdigest()[:15], 16) % buckets

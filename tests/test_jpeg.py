@@ -110,6 +110,22 @@ def test_sequential_scan_under_sof2_rejected():
         decode_coefficients(bytes(b))
 
 
+@pytest.mark.parametrize("encode,band", [
+    (encode_baseline, bytes([0, 63, 0])),
+    (encode_progressive, bytes([0, 0, 1])),
+], ids=["baseline", "progressive"])
+def test_sos_without_components_rejected(encode, band):
+    # an SOS naming no component (Ns = 0) with a well-formed band is
+    # malformed: ValueError, not an IndexError (progressive) or an
+    # all-zero decode (baseline)
+    b = encode(np.full((16, 16), 77, dtype=np.uint8))
+    i = b.find(b"\xff\xda")
+    ln = int.from_bytes(b[i + 2:i + 4], "big")
+    sos = b"\xff\xda" + (6).to_bytes(2, "big") + bytes([0]) + band
+    with pytest.raises(ValueError, match="no component"):
+        decode_coefficients(b[:i] + sos + b[i + 2 + ln:])
+
+
 def test_progressive_coefficient_integrity_gray():
     # float-free: the multi-scan progressive stream (spectral bands +
     # DC/AC successive-approximation refinements) must reassemble the

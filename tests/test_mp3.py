@@ -15,13 +15,13 @@ import random
 import numpy as np
 import pytest
 
+from ocr_spark.functions.bits import MsbWriter as _BitWriter
 from ocr_spark.functions.mp3 import (
     SLEN1,
     SLEN2,
     Mp3Error,
     _alias_reduce,
     _BitReader,
-    _BitWriter,
     _imdct_long,
     _read_side_info_mono,
     _synthesis_matrix,

@@ -269,3 +269,45 @@ def test_spark_decode_tier_matches_in_process(spark):
         got = sorted(tuple(r) for r in decode_tier(df, name).collect())
         want = sorted((d, *measure(fixture(d))) for d in ids)
         assert got == want, name
+
+
+def _codec_pin_cases():
+    from ocr_spark.functions.multimodal import _image_measure, mixed_fixture
+
+    cases = [(name, DECODE_TIERS[name].fixture, DECODE_TIERS[name].measure)
+             for name in sorted(DECODE_TIERS)]
+    return cases + [("mixed", mixed_fixture, _image_measure)]
+
+
+def test_codec_fixture_bytes_pinned():
+    # every fixture byte every encoder writes, for d in range(120); the
+    # hash was taken before the codecs shared their LZW coder, bit
+    # writers, RIFF chunk walk and JPEG block order
+    import hashlib
+
+    h = hashlib.sha256()
+    for name, fixture, _ in _codec_pin_cases():
+        for d in range(120):
+            h.update(f"{name}:{d}:".encode()
+                     + hashlib.sha256(fixture(d)).digest())
+    assert h.hexdigest() == (
+        "4653f4c44177350457d9f25d631ac812ae841dd62ec739c3a1bd0147bf83c3d5")
+
+
+def test_codec_decoded_values_pinned():
+    # every decoded measure of the same fixtures; a poisoned mixed
+    # payload contributes its exception class
+    import hashlib
+
+    h = hashlib.sha256()
+    for name, fixture, measure in _codec_pin_cases():
+        for d in range(120):
+            try:
+                value = measure(fixture(d))
+            except (ValueError, NotImplementedError) as ex:
+                if name != "mixed":
+                    raise
+                value = type(ex).__name__
+            h.update(repr((name, d, value)).encode())
+    assert h.hexdigest() == (
+        "95ea9bc73a59e77c8f05fee4cb0f30de5b9f14c69ccf53f108f40995cb6c5651")

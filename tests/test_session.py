@@ -6,7 +6,7 @@ import pytest
 
 from ocr_spark.plans.session import _default_parallelism
 
-CPUS = os.cpu_count() or 8
+CPUS = len(os.sched_getaffinity(0))
 
 
 @pytest.mark.parametrize(
@@ -22,3 +22,11 @@ CPUS = os.cpu_count() or 8
 )
 def test_default_parallelism(master, want):
     assert _default_parallelism(master) == want
+
+
+def test_local_star_follows_affinity_mask(monkeypatch):
+    # under `taskset -c 0` the JVM runs local[*] one wide, whatever
+    # os.cpu_count() says
+    monkeypatch.setattr(os, "sched_getaffinity", lambda pid: {0})
+    assert _default_parallelism("local[*]") == 1
+    assert _default_parallelism("local[*,3]") == 1
