@@ -63,7 +63,6 @@ ZIGZAG = np.array([
     58, 59, 52, 45, 38, 31, 39, 46,
     53, 60, 61, 54, 47, 55, 62, 63,
 ], dtype=np.int64)
-UNZIGZAG = np.argsort(ZIGZAG)           # raster index -> scan position
 
 # Annex K.3.1 example Huffman tables: (BITS[1..16], HUFFVAL)
 DC_LUM_BITS = [0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0]

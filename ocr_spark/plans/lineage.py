@@ -20,7 +20,10 @@ import numpy as np
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark import Accumulator, AccumulatorParam, SparkContext
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
+
+from ocr_spark.sinks.writers import ICEBERG_PREFIX
 
 LINEAGE_SCHEMA = T.StructType(
     [
@@ -118,10 +121,17 @@ def lineage_from_output(out: DataFrame, run_id: str) -> DataFrame:
 
 
 def read_lineage(spark: SparkSession, path: str) -> DataFrame | None:
+    """The lineage rows at `path`, routed as `write_lineage` routes it (an
+    `iceberg:` table or a parquet directory), or None when nothing has
+    been written there yet.  Any other read error raises."""
     try:
+        if path.startswith(ICEBERG_PREFIX):
+            return spark.table(path[len(ICEBERG_PREFIX):])
         return spark.read.schema(LINEAGE_SCHEMA).parquet(path)
-    except Exception:
-        return None
+    except AnalysisException as e:
+        if e.getCondition() in ("PATH_NOT_FOUND", "TABLE_OR_VIEW_NOT_FOUND"):
+            return None
+        raise
 
 
 def completed_buckets(spark: SparkSession, path: str, run_id: str) -> DataFrame | None:

@@ -14,6 +14,8 @@ import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
 
+from ocr_spark.sinks.writers import ICEBERG_PREFIX
+
 TRANSCRIPTS_SCHEMA = T.StructType(
     [
         T.StructField("conv_id", T.StringType(), False),
@@ -34,8 +36,8 @@ def read_transcripts(spark: SparkSession, path: str) -> DataFrame:
     catalog-table API but is unexecutable in this sandbox (no runtime
     jar) and therefore untested — see ocr_spark/sinks/writers.py.
     """
-    if path.startswith("iceberg:"):
-        return spark.table(path[len("iceberg:") :])
+    if path.startswith(ICEBERG_PREFIX):
+        return spark.table(path[len(ICEBERG_PREFIX):])
     return spark.read.schema(TRANSCRIPTS_SCHEMA).parquet(path)
 
 

@@ -11,9 +11,7 @@ from ocr_spark.streaming.extract_stream import (  # noqa: F401
     run_extract_stream,
     turn_rates,
 )
-from ocr_spark.streaming.funnel import (  # noqa: F401
-    run_funnel_stream,
-)
+from ocr_spark.streaming.funnel import user_funnels  # noqa: F401
 from ocr_spark.streaming.neardup import (  # noqa: F401
     minhash_neardup_pairs,
 )
@@ -22,9 +20,5 @@ from ocr_spark.streaming.sketch import (  # noqa: F401
     hll_estimate,
     hll_window_registers,
 )
-from ocr_spark.streaming.sessionize import (  # noqa: F401
-    run_sessionize_stream,
-)
-from ocr_spark.streaming.stateful import (  # noqa: F401
-    run_conversation_assembly_stream,
-)
+from ocr_spark.streaming.sessionize import sessions  # noqa: F401
+from ocr_spark.streaming.stateful import conversation_summaries  # noqa: F401

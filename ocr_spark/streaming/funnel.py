@@ -1,7 +1,7 @@
 """Streaming conversion funnel (P64): the continuous twin of the batch
 windowed funnel (P23, `ocr_spark.queries.analytics.q_funnel`).
 
-`applyInPandasWithState` keeps the events of each live user inside the
+`grouped_state` keeps the events of each live user inside the
 watermark horizon; when the event-time watermark passes the user's last
 activity + idle gap, the batch funnel rule (first view -> first click
 within an hour -> first purchase within an hour of that click) runs
@@ -17,14 +17,10 @@ same at-watermark-horizon contract as sessionize/dedup/near-dup.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.streaming.state import GroupState
+from pyspark.sql import DataFrame
 
-from ocr_spark.streaming.launch import grouped_state, start_stream, stream_op
+from ocr_spark.streaming.launch import epoch_ms, grouped_state, stream_op
 
 EVENTS_STREAM_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string"
@@ -39,7 +35,7 @@ IDLE_GAP_MS = 2 * 60 * 60 * 1000  # funnel evaluated after 2 h idle
 def funnel_stages(events: list[tuple[int, str]]) -> tuple[int, int] | None:
     """The batch funnel rule over (t_us, type) pairs (any order):
     returns (stage 1..3, first-view time) or None if no view.  Kept as a
-    pure function so the streaming handler and tests share one
+    pure function so the streaming flush and tests share one
     definition."""
     ev = sorted(events)
     t_view = min((t for t, k in ev if k == "view"), default=None)
@@ -61,54 +57,33 @@ def funnel_stages(events: list[tuple[int, str]]) -> tuple[int, int] | None:
     return stage, t_view
 
 
-def _funnel(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    if state.hasTimedOut:
-        ts_us, types, _ = state.get
-        state.remove()
-        res = funnel_stages(list(zip(ts_us, types)))
-        if res is not None:
-            stage, t_view = res
-            yield pd.DataFrame(
-                [{"user_id": key[0], "stage": stage, "t_view_us": t_view}]
-            )
-        return
-    ts_us: list[int] = []
-    types: list[str] = []
-    last_ms = 0
-    if state.exists:
-        prev_ts, prev_types, last_ms = state.get
-        ts_us, types = list(prev_ts), list(prev_types)
-    for pdf in pdfs:
-        ts_us.extend((pdf["ts"].astype("int64") // 1_000).tolist())
-        types.extend(pdf["event_type"].tolist())
-        last_ms = max(last_ms, int(pdf["ts"].astype("int64").max() // 1_000_000))
-    state.update((ts_us, types, last_ms))
-    state.setTimeoutTimestamp(last_ms + IDLE_GAP_MS)
-    return
-    yield  # pragma: no cover - makes this a generator
+def fold_funnel(
+    key: tuple, state: tuple | None, events: pd.DataFrame
+) -> tuple[tuple, list[dict]]:
+    """Append a user's new events to the ones in state; emits no row
+    until the user goes idle."""
+    ts_us, types, last_ms = state or ([], [], 0)
+    return (
+        list(ts_us) + (events["ts"].astype("int64") // 1_000).tolist(),
+        list(types) + events["event_type"].tolist(),
+        max(last_ms, int(epoch_ms(events["ts"]).max())),
+    ), []
 
 
-@stream_op(EVENTS_STREAM_SCHEMA)
+def flush_funnel(key: tuple, state: tuple) -> list[dict]:
+    """The user's funnel stage row, or none if the user never viewed."""
+    ts_us, types, _ = state
+    res = funnel_stages(list(zip(ts_us, types)))
+    if res is None:
+        return []
+    return [{"user_id": key[0], "stage": res[0], "t_view_us": res[1]}]
+
+
+@stream_op(EVENTS_STREAM_SCHEMA, bounded=False)
 def user_funnels(events: DataFrame) -> DataFrame:
     """One funnel stage row per user, when the user goes idle (see module
     docstring)."""
     return grouped_state(
-        events, ["user_id"], _funnel, FUNNEL_SCHEMA, _STATE_SCHEMA
-    )
-
-
-def run_funnel_stream(
-    spark: SparkSession,
-    input_path: str,
-    output_path: str,
-    checkpoint_path: str,
-    available_now: bool = False,
-) -> StreamingQuery:
-    """Start the funnel stream.  Its own entry point, with no
-    `max_files_per_trigger`: a bounded drain would advance the watermark
-    and the state timeouts between micro-batches and change the output."""
-    return start_stream(
-        spark, user_funnels, input_path, output_path, checkpoint_path, available_now
+        events, ["user_id"], fold_funnel, flush_funnel, FUNNEL_SCHEMA,
+        _STATE_SCHEMA, IDLE_GAP_MS,
     )

@@ -7,7 +7,7 @@ Stage map (batch -> stream):
     `minhash_bands`), applied with array functions instead of the batch
     explode+groupBy — same values per doc, no shuffle needed before the
     stateful stage;
-  - the band-bucket self-JOIN becomes `applyInPandasWithState` keyed on
+  - the band-bucket self-JOIN becomes `grouped_state` keyed on
     (band, mh0, mh1): the state cell holds the docs previously seen in
     that bucket (doc_id + shingle multiset); each arriving doc is
     exact-Jaccard-verified against them and qualifying pairs
@@ -34,16 +34,16 @@ from __future__ import annotations
 
 import math
 from collections import Counter
-from collections.abc import Iterator
 
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
-from pyspark.sql.streaming.state import GroupState
 
 from ocr_spark.functions.text import md5_long, word3_shingles
 from ocr_spark.sources.transcripts import DOCS_STREAM_SCHEMA
-from ocr_spark.streaming.launch import DEDUP_WATERMARK, grouped_state, stream_op
+from ocr_spark.streaming.launch import (
+    DEDUP_WATERMARK, epoch_ms, grouped_state, stream_op,
+)
 
 # Cross-engine MinHash family: shingle fingerprints are md5_long(sh)
 # reduced mod the Mersenne prime M31, so the K affine min-hashes
@@ -119,53 +119,54 @@ def _jaccard_fp(ca: Counter, na: int, cb: Counter, nb: int) -> int:
     return int(math.floor(shared * 1000000.0 / (na + nb - shared)))
 
 
-def _bucket_pairs(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    if state.hasTimedOut:
-        state.remove()
-        return
-    if state.exists:
-        doc_ids, shingle_sets, last_ms = state.get
-        doc_ids = [int(x) for x in doc_ids]
-        shingle_sets = [[int(x) for x in s] for s in shingle_sets]
-        last_ms = int(last_ms)
-    else:
-        doc_ids, shingle_sets, last_ms = [], [], 0
+def fold_bucket(
+    key: tuple, state: tuple | None, docs: pd.DataFrame
+) -> tuple[tuple, list[dict]]:
+    """Verify a bucket's new docs against the docs in state and each
+    other; returns the grown state and the qualifying pairs."""
+    doc_ids, shingle_sets, last_ms = state or ([], [], 0)
+    # plain Python ints: the state round-trips through the JVM pickler,
+    # which rejects numpy scalar types
+    doc_ids = [int(x) for x in doc_ids]
+    shingle_sets = [[int(x) for x in s] for s in shingle_sets]
+    last_ms = int(last_ms)
     counters = [Counter(s) for s in shingle_sets]
     known = set(doc_ids)
-    out_a, out_b, out_j = [], [], []
-    arrivals: list[tuple[int, list, pd.Timestamp]] = []
-    for pdf in pdfs:
-        for doc_id, sh, ts in zip(pdf["doc_id"], pdf["shingles"], pdf["ts"]):
-            # plain Python ints: the state round-trips through the JVM
-            # pickler, which rejects numpy scalar types
-            arrivals.append((int(doc_id), [int(x) for x in sh], ts))
+    pairs = []
     # deterministic intra-batch order (the pair set is order-independent,
     # but a stable order keeps re-runs byte-identical)
-    arrivals.sort(key=lambda t: t[0])
-    for doc_id, sh, ts in arrivals:
+    arrivals = sorted(
+        [
+            (int(d), [int(x) for x in sh], t)
+            for d, sh, t in zip(
+                docs["doc_id"], docs["shingles"], epoch_ms(docs["ts"]).tolist()
+            )
+        ],
+        key=lambda a: a[0],
+    )
+    for doc_id, sh, t in arrivals:
         if doc_id in known:  # idempotent re-delivery
             continue
         ca = Counter(sh)
-        na = len(sh)
         for other_id, other_sh, cb in zip(doc_ids, shingle_sets, counters):
-            j = _jaccard_fp(ca, na, cb, len(other_sh))
+            j = _jaccard_fp(ca, len(sh), cb, len(other_sh))
             if j >= _JACCARD_FP_MIN:
-                out_a.append(min(doc_id, other_id))
-                out_b.append(max(doc_id, other_id))
-                out_j.append(j)
+                pairs.append({
+                    "doc_a": min(doc_id, other_id),
+                    "doc_b": max(doc_id, other_id),
+                    "jaccard_fp": j,
+                })
         doc_ids.append(doc_id)
         shingle_sets.append(sh)
         counters.append(ca)
         known.add(doc_id)
-        last_ms = max(last_ms, int(ts.timestamp() * 1000))
-    state.update((doc_ids, shingle_sets, last_ms))
-    state.setTimeoutTimestamp(last_ms + _HORIZON_MS)
-    if out_a:
-        yield pd.DataFrame(
-            {"doc_a": out_a, "doc_b": out_b, "jaccard_fp": out_j}
-        )
+        last_ms = max(last_ms, t)
+    return (doc_ids, shingle_sets, last_ms), pairs
+
+
+def flush_bucket(key: tuple, state: tuple) -> list[dict]:
+    """An evicted bucket emits nothing: its pairs left on arrival."""
+    return []
 
 
 @stream_op(DOCS_STREAM_SCHEMA)
@@ -174,6 +175,6 @@ def minhash_neardup_pairs(docs: DataFrame) -> DataFrame:
     stream; emits exact-verified pairs (doc_a, doc_b, jaccard_fp),
     at-least-once per shared band (see module docstring)."""
     return grouped_state(
-        with_band_rows(docs), ["band", "mh0", "mh1"], _bucket_pairs,
-        PAIR_SCHEMA, _STATE_SCHEMA, DEDUP_WATERMARK,
+        with_band_rows(docs), ["band", "mh0", "mh1"], fold_bucket,
+        flush_bucket, PAIR_SCHEMA, _STATE_SCHEMA, _HORIZON_MS, DEDUP_WATERMARK,
     )

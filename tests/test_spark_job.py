@@ -27,6 +27,7 @@ from ocr_spark.plans.extract_job import (
 )
 from ocr_spark.plans.lineage import (
     COUNTERS,
+    completed_buckets,
     lineage_from_counts,
     lineage_from_output,
     read_lineage,
@@ -246,6 +247,25 @@ def test_lineage_rows_in_mismatch_raises(spark):
     counts[2, :2] = [3, 2]
     with pytest.raises(RuntimeError, match=r"buckets \[2\]"):
         lineage_from_counts(spark, counts, "bad")
+
+
+def test_read_lineage_routes_iceberg_tables(spark, tmp_path):
+    """An `iceberg:` lineage destination is read as a table, as
+    `write_lineage` appends to it (a temp view stands in for the table),
+    so resume finds its completed buckets; a destination nothing was
+    written to yet reads as no lineage."""
+    counts = np.zeros((4, len(COUNTERS)), np.int64)
+    counts[3, :2] = [7, 7]
+    lineage_from_counts(spark, counts, "r").createOrReplaceTempView("lin_view")
+    try:
+        lin = read_lineage(spark, "iceberg:lin_view")
+        assert [r.bucket for r in lin.collect()] == [3]
+        done = completed_buckets(spark, "iceberg:lin_view", "r")
+        assert [r.bucket for r in done.collect()] == [3]
+    finally:
+        spark.catalog.dropTempView("lin_view")
+    assert read_lineage(spark, "iceberg:lin_view") is None
+    assert read_lineage(spark, str(tmp_path / "absent")) is None
 
 
 def test_run_extract_job_count(spark, fixture_pdf, tmp_path):

@@ -2,7 +2,8 @@
 `max_files_per_trigger` before any query starts: a non-positive value
 raises ValueError up front instead of dying later in the stream thread,
 and no checkpoint directory is created.  The three event-time-state
-streams keep entry points of their own that take no bound."""
+operators take no bound at all: `start_stream` refuses one for them the
+same way."""
 
 import inspect
 
@@ -24,19 +25,17 @@ BOUNDED = {
     "run_quality_gate_stream": streaming.quality_gate,
     "run_turn_rate_stream": streaming.turn_rates,
 }
-STATEFUL = (
-    streaming.run_sessionize_stream,
-    streaming.run_conversation_assembly_stream,
-    streaming.run_funnel_stream,
-)
+# The three unbounded operators, keyed the same way.
+STATEFUL = {
+    "run_conversation_assembly_stream": streaming.conversation_summaries,
+    "run_funnel_stream": streaming.user_funnels,
+    "run_sessionize_stream": streaming.sessions,
+}
 
 
 def test_runner_set():
     assert sorted(n for n in vars(streaming) if n.startswith("run_")) == [
-        "run_conversation_assembly_stream",
         "run_extract_stream",
-        "run_funnel_stream",
-        "run_sessionize_stream",
     ]
 
 
@@ -62,8 +61,15 @@ def test_zero_files_per_trigger_raises_before_start(spark, tmp_path, name):
     assert not spark.streams.active
 
 
-@pytest.mark.parametrize("fn", STATEFUL, ids=lambda fn: fn.__name__)
-def test_stateful_streams_take_no_bound(fn):
-    assert list(inspect.signature(fn).parameters) == [
-        "spark", "input_path", "output_path", "checkpoint_path", "available_now",
-    ]
+@pytest.mark.parametrize("name", sorted(STATEFUL))
+def test_stateful_streams_take_no_bound(spark, tmp_path, name):
+    inp = tmp_path / "in"
+    inp.mkdir()
+    ckpt = tmp_path / "ckpt"
+    with pytest.raises(ValueError, match="max_files_per_trigger"):
+        streaming.start_stream(
+            spark, STATEFUL[name], str(inp), str(tmp_path / "out"), str(ckpt),
+            available_now=True, max_files_per_trigger=5,
+        )
+    assert not ckpt.exists()
+    assert not spark.streams.active

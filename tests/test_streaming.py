@@ -119,13 +119,13 @@ def test_stream_watermark_windowed_counts(spark, dirs):
 
 
 def test_stream_stateful_conversation_assembly(spark, dirs):
-    from ocr_spark.streaming.stateful import run_conversation_assembly_stream
+    from ocr_spark.streaming import conversation_summaries, start_stream
 
     inp, outp, ckpt = dirs
 
     def drain():
-        q = run_conversation_assembly_stream(
-            spark, inp, outp, ckpt, available_now=True
+        q = start_stream(
+            spark, conversation_summaries, inp, outp, ckpt, available_now=True
         )
         q.awaitTermination(300)
         assert not q.isActive
@@ -624,12 +624,12 @@ def test_stream_sessionize_gap_split_and_timeout(spark, dirs):
     """P59: the streaming twin of q_sessionize — a >30-min silence closes
     a session in-flight (emitted the moment the gap is observable), and
     the watermark timeout flushes whatever is still open."""
-    from ocr_spark.streaming.sessionize import run_sessionize_stream
+    from ocr_spark.streaming import sessions, start_stream
 
     inp, outp, ckpt = dirs
 
     def drain():
-        q = run_sessionize_stream(spark, inp, outp, ckpt, available_now=True)
+        q = start_stream(spark, sessions, inp, outp, ckpt, available_now=True)
         q.awaitTermination(300)
         assert not q.isActive
 
@@ -746,8 +746,9 @@ def test_stream_funnel_stages_on_timeout(spark, dirs):
 
     from ocr_spark.streaming.funnel import (
         EVENTS_STREAM_SCHEMA,
-        run_funnel_stream,
+        user_funnels,
     )
+    from ocr_spark.streaming import start_stream
 
     inp, outp, ckpt = dirs
 
@@ -768,7 +769,7 @@ def test_stream_funnel_stages_on_timeout(spark, dirs):
         ).parquet(inp)
 
     def drain():
-        q = run_funnel_stream(spark, inp, outp, ckpt, available_now=True)
+        q = start_stream(spark, user_funnels, inp, outp, ckpt, available_now=True)
         q.awaitTermination(300)
         assert not q.isActive
 
