@@ -16,7 +16,8 @@ The north-rule scaling criterion (throughput efficiency >= 0.8 from N to
 evidenced by running the IDENTICAL job in subprocesses pinned to N and
 4N of this process's CPUs (`scaling_widths`) on the same input, and
 reporting turns/sec at both plus efficiency = speedup / 4, next to the
-no-Spark multiprocessing ceiling at the same widths.
+no-Spark multiprocessing ceiling at the same widths (its input rows are
+the same derived transcripts, collected once from a local session).
 
 Each query is forced end-to-end with a `noop`-format write (full
 computation, no driver collect) so timings measure the distributed plan,
@@ -322,9 +323,18 @@ def _scaling(widths: tuple[int, int]) -> dict:
     """N and 4N parallelism on the SAME input (one-host proxy for N / 4N
     executors; see BASELINE.md), for the extraction job and the shuffle
     job, judged against the no-Spark ceiling at each width."""
-    from ocr_spark.sources.transcripts import derive_transcripts_pandas
+    from ocr_spark.plans.session import build_session
+    from ocr_spark.sources.transcripts import derive_transcripts_from_documents
 
-    pdf = derive_transcripts_pandas(SF_DIR, turns_per_doc=60)
+    # the ceiling's rows come from the extraction job's own derivation;
+    # the session stops before _hw_ceiling forks its pool
+    spark = build_session("bench-ceiling-input", master=f"local[{CPUS}]",
+                          shuffle_partitions=CPUS)
+    pdf = (derive_transcripts_from_documents(spark, SF_DIR, turns_per_doc=60)
+           .select("conv_id", "turn_idx", "text")
+           .orderBy("turn_idx", "conv_id")
+           .toPandas())
+    spark.stop()
     hw_n, hw_4n = (_hw_ceiling(pdf, w, reps=2) for w in widths)
     hw_wall = _hw_ceiling(pdf, min(32, CPUS), reps=1)
     # quarter-size slice for the per-round window control (~4 s/probe)

@@ -21,16 +21,25 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+def _positive_int(v: str) -> int:
+    # the same check as jobs/stream.py; spark-submit ships each entry
+    # script alone, so one cannot import the other
+    n = int(v)
+    if n <= 0:
+        raise argparse.ArgumentTypeError("must be a positive integer")
+    return n
+
+
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(description="ocr_spark batch extraction")
     p.add_argument("--input", required=True)
     p.add_argument("--output", required=True)
     p.add_argument("--lineage", required=True)
     p.add_argument("--run-id", required=True)
-    p.add_argument("--buckets", type=int, default=None)
+    p.add_argument("--buckets", type=_positive_int, default=None)
     p.add_argument("--resume", action="store_true")
     p.add_argument("--master", default=None)
-    p.add_argument("--num-partitions", type=int, default=None)
+    p.add_argument("--num-partitions", type=_positive_int, default=None)
     args = p.parse_args(argv)
 
     from ocr_spark.constants import DEFAULT_N_BUCKETS

@@ -918,22 +918,10 @@ def q_events_hourly(spark, sf_dir):
 
 
 # Sessionization: lag + cumulative sum of gap>30min flags (guide pattern).
-@oracle("""
-            WITH g AS (
-              SELECT user_id, ts, event_id,
-                     CASE WHEN lag(ts) OVER w IS NULL
-                               OR epoch(ts) - epoch(lag(ts) OVER w) > 1800
-                          THEN 1 ELSE 0 END AS new_sess
-              FROM events
-              WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-            )
-            SELECT user_id,
-                   sum(new_sess)::BIGINT AS n_sessions,
-                   count(*)::BIGINT AS n_events
-            FROM g GROUP BY user_id
-        """)
-def q_sessionize(spark, sf_dir):
-    ev = _tbl(spark, sf_dir, "events")
+def sessions_by_user(ev):
+    """(user_id, n_sessions, n_events) of an events frame: a new session
+    opens after every gap of more than 1800 s.  q_sessionize runs it over
+    `events`; tools/skew_stress.py over a one-mega-user log."""
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     # TIMESTAMP_NTZ has no direct long cast in Spark 4; hop through
     # timestamp (identity under the pinned UTC session zone)
@@ -952,6 +940,24 @@ def q_sessionize(spark, sf_dir):
     )
 
 
+@oracle("""
+            WITH g AS (
+              SELECT user_id, ts, event_id,
+                     CASE WHEN lag(ts) OVER w IS NULL
+                               OR epoch(ts) - epoch(lag(ts) OVER w) > 1800
+                          THEN 1 ELSE 0 END AS new_sess
+              FROM events
+              WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+            )
+            SELECT user_id,
+                   sum(new_sess)::BIGINT AS n_sessions,
+                   count(*)::BIGINT AS n_events
+            FROM g GROUP BY user_id
+        """)
+def q_sessionize(spark, sf_dir):
+    return sessions_by_user(_tbl(spark, sf_dir, "events"))
+
+
 # Conversion funnel view -> click -> purchase with a 1-hour step
 # window: per user, the first view, the first click within an hour
 # AFTER that view, the first purchase within an hour after that click.
@@ -964,36 +970,10 @@ def q_sessionize(spark, sf_dir):
 # 100 TB that is one pass over the event log instead of three
 # type-pruned scans plus three join shuffles.  Microsecond integer
 # arithmetic end-to-end — no float time math to diverge across engines.
-@oracle("""
-            WITH v AS (
-              SELECT user_id, min(epoch_us(ts)) AS t_view
-              FROM events WHERE event_type = 'view' GROUP BY 1
-            ),
-            c AS (
-              SELECT e.user_id, min(epoch_us(e.ts)) AS t_click
-              FROM events e JOIN v ON e.user_id = v.user_id
-              WHERE e.event_type = 'click'
-                AND epoch_us(e.ts) > v.t_view
-                AND epoch_us(e.ts) <= v.t_view + 3600000000
-              GROUP BY 1
-            ),
-            p AS (
-              SELECT e.user_id, min(epoch_us(e.ts)) AS t_purchase
-              FROM events e JOIN c ON e.user_id = c.user_id
-              WHERE e.event_type = 'purchase'
-                AND epoch_us(e.ts) > c.t_click
-                AND epoch_us(e.ts) <= c.t_click + 3600000000
-              GROUP BY 1
-            )
-            SELECT v.user_id,
-                   (1 + (c.t_click IS NOT NULL)::INT
-                      + (p.t_purchase IS NOT NULL)::INT)::BIGINT AS stage,
-                   v.t_view AS t_view_us
-            FROM v LEFT JOIN c ON v.user_id = c.user_id
-                   LEFT JOIN p ON v.user_id = p.user_id
-        """)
-def q_funnel(spark, sf_dir):
-    ev = _tbl(spark, sf_dir, "events")
+def funnel_by_user(ev):
+    """(user_id, stage, t_view_us) of an events frame: the funnel stage
+    each viewing user reached.  q_funnel runs it over `events`;
+    tools/skew_stress.py over a one-mega-user log."""
     us = F.unix_micros(F.col("ts").cast("timestamp"))
     hour = 3_600_000_000
     w = Window.partitionBy("user_id")
@@ -1032,6 +1012,38 @@ def q_funnel(spark, sf_dir):
             F.min("t_view").alias("t_view_us"),
         )
     )
+
+
+@oracle("""
+            WITH v AS (
+              SELECT user_id, min(epoch_us(ts)) AS t_view
+              FROM events WHERE event_type = 'view' GROUP BY 1
+            ),
+            c AS (
+              SELECT e.user_id, min(epoch_us(e.ts)) AS t_click
+              FROM events e JOIN v ON e.user_id = v.user_id
+              WHERE e.event_type = 'click'
+                AND epoch_us(e.ts) > v.t_view
+                AND epoch_us(e.ts) <= v.t_view + 3600000000
+              GROUP BY 1
+            ),
+            p AS (
+              SELECT e.user_id, min(epoch_us(e.ts)) AS t_purchase
+              FROM events e JOIN c ON e.user_id = c.user_id
+              WHERE e.event_type = 'purchase'
+                AND epoch_us(e.ts) > c.t_click
+                AND epoch_us(e.ts) <= c.t_click + 3600000000
+              GROUP BY 1
+            )
+            SELECT v.user_id,
+                   (1 + (c.t_click IS NOT NULL)::INT
+                      + (p.t_purchase IS NOT NULL)::INT)::BIGINT AS stage,
+                   v.t_view AS t_view_us
+            FROM v LEFT JOIN c ON v.user_id = c.user_id
+                   LEFT JOIN p ON v.user_id = p.user_id
+        """)
+def q_funnel(spark, sf_dir):
+    return funnel_by_user(_tbl(spark, sf_dir, "events"))
 
 
 # Snapshot delta (CDC shape): classify every doc as added / deleted /

@@ -98,6 +98,18 @@ def q_stream_dedup_drain(spark, sf_dir):
     )
 
 
+def html_documents(spark, sf_dir):
+    """x_extract_documents' input, (doc_id, html): each document's text
+    wrapped in nav and footer boilerplate.  tools/gen_expected.py derives
+    the expected table from the same frame."""
+    html = F.concat(
+        F.lit('<nav><a href="/h">Home</a> <a href="/a">About</a></nav><p>'),
+        F.col("text"),
+        F.lit('</p><footer>Copyright <a href="/t">Terms</a></footer>'),
+    )
+    return _docs_wide(spark, sf_dir).select("doc_id", html.alias("html"))
+
+
 # Extraction UDF over HTML-wrapped documents.  Oracle: precomputed
 # expected parquet from the single-process kernel (tools/gen_expected.py)
 # — the driver's rows+schema+hash gates apply in full.
@@ -105,13 +117,9 @@ def q_stream_dedup_drain(spark, sf_dir):
 def x_extract_documents(spark, sf_dir):
     from ocr_spark.functions.text import extract_text
 
-    d = _docs_wide(spark, sf_dir)
-    html = F.concat(
-        F.lit('<nav><a href="/h">Home</a> <a href="/a">About</a></nav><p>'),
-        F.col("text"),
-        F.lit('</p><footer>Copyright <a href="/t">Terms</a></footer>'),
+    return html_documents(spark, sf_dir).select(
+        "doc_id", extract_text(F.col("html")).alias("extracted_text")
     )
-    return d.select("doc_id", extract_text(html).alias("extracted_text"))
 
 
 # The full distributed pipeline over derived transcripts.  Oracle:

@@ -635,6 +635,20 @@ def q_importance_resample(spark, sf_dir):
     return with_dsir_keep(scored, F.col("doc_id").cast("string"))
 
 
+def _cm_sketch(words):
+    """The (row_id, col_id, cnt) Count-Min table of a words frame (column
+    `w`).  ONE pass: each word explodes into its _CM_ROWS cells in place
+    (a union of one branch per sketch row would re-run the words subtree
+    once per row — the branches differ only in the salt literal, so no
+    exchange reuse applies)."""
+    return (
+        words.select(F.explode(cm_cells(F.col("w"))).alias("c"))
+        .select("c.row_id", "c.col_id")
+        .groupBy("row_id", "col_id")
+        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
+    )
+
+
 # Count-Min sketch of the corpus word-frequency distribution: 4 hash
 # rows x 256 columns, cell (r, c) = total occurrences of words whose
 # r-th hash lands in column c.  The sketch build is ONE explode + ONE
@@ -663,19 +677,7 @@ def q_importance_resample(spark, sf_dir):
             FROM hashed GROUP BY 1, 2
         """)
 def q_countmin_sketch(spark, sf_dir):
-    d = _docs_wide(spark, sf_dir)
-    # ONE pass over the words subtree: each word explodes into its
-    # _CM_ROWS (row_id, col_id) cells in place.  The previous 4-way
-    # unionByName re-ran the canonicalize-regex + explode once per sketch
-    # row (4x corpus scan at 100 TB — the branches differed only in the
-    # salt literal, so no exchange reuse applied).
-    return (
-        word_rows(d)
-        .select(F.explode(cm_cells(F.col("w"))).alias("c"))
-        .select("c.row_id", "c.col_id")
-        .groupBy("row_id", "col_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    )
+    return _cm_sketch(word_rows(_docs_wide(spark, sf_dir)))
 
 
 # Count-Min heavy hitters (P21b): the POINT-QUERY side of the sketch —
@@ -731,17 +733,12 @@ _CM_PHI_MILLE = 5  # phi = 0.5% of all word occurrences
 def q_cm_heavy_hitters(spark, sf_dir):
     d = _docs_wide(spark, sf_dir)
     words = word_rows(d).localCheckpoint(eager=False)
-    cells = cm_cells(F.col("w"))
-    sketch = (
-        words.select(F.explode(cells).alias("c"))
-        .select("c.row_id", "c.col_id")
-        .groupBy("row_id", "col_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    )
+    sketch = _cm_sketch(words)
     total = words.agg(F.count(F.lit(1)).cast("long").alias("total"))
     cand = words.groupBy("w").agg(
         F.count(F.lit(1)).cast("long").alias("exact_cnt")
     )
+    cells = cm_cells(F.col("w"))
     probe = cand.select("w", "exact_cnt", F.explode(cells).alias("c")).select(
         "w", "exact_cnt", "c.row_id", "c.col_id"
     )

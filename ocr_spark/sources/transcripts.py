@@ -71,58 +71,6 @@ def transcripts_from_pandas(spark: SparkSession, pdf) -> DataFrame:
     return spark.createDataFrame(pdf, schema=TRANSCRIPTS_SCHEMA)
 
 
-def derive_transcripts_pandas(sf_dir: str, turns_per_doc: int = 4):
-    """Single-process pandas twin of derive_transcripts_from_documents:
-    byte-identical (conv_id, turn_idx, text) rows, no Spark.  Used by the
-    expected-output generator (tools/gen_expected.py) that backs the
-    driver-contract oracles for the x_* queries, and by bench.py's
-    no-Spark hardware-ceiling measurement.  Keep the payload templates in
-    lockstep with the Spark derivation above (tests/test_fixtures.py pins
-    the equivalence)."""
-    import pandas as pd
-    import pyarrow.parquet as pq
-
-    docs = pq.read_table(
-        f"{sf_dir}/documents.parquet", columns=["doc_id", "text"]
-    ).to_pandas()
-    frames = []
-    for t in range(turns_per_doc):
-        flavor = (docs.doc_id + t) % 4
-        txt = docs.text
-        payload = pd.Series(index=docs.index, dtype=object)
-        # each template is built ONLY from its flavor's rows (building
-        # all four over the full corpus and masking after would do 4x
-        # the string work — this function backs the bench hw ceiling)
-        m0, m1 = flavor == 0, flavor == 1
-        m2, m3 = flavor == 2, flavor == 3
-        payload[m0] = (
-            '<nav><a href="/home">Home</a> <a href="/about">About</a> '
-            '<a href="/pricing">Pricing</a> <a href="/blog">Blog</a></nav>'
-            "<p>" + txt[m0] + "</p>"
-            '<footer>Copyright 2024 <a href="/tos">Terms</a> '
-            '<a href="/privacy">Privacy</a></footer>'
-        )
-        payload[m1] = (
-            "                    SECTION " + docs.doc_id[m1].astype(str)
-            + "\n\n    " + txt[m1].str.replace(". ", ".\n    ", regex=False)
-            + "\n\n                              Page 1"
-        )
-        payload[m2] = txt[m2].str.replace(". ", ".\n\n", regex=False)
-        payload[m3] = '{"status": "ok", "result": "' + txt[m3] + '"}'
-        frames.append(
-            pd.DataFrame(
-                {
-                    "conv_id": "conv-" + docs.doc_id.map("{:06d}".format),
-                    "turn_idx": t,
-                    "text": payload,
-                }
-            )
-        )
-    out = pd.concat(frames, ignore_index=True)
-    out["turn_idx"] = out["turn_idx"].astype("int32")
-    return out
-
-
 def derive_transcripts_from_documents(
     spark: SparkSession, sf_dir: str, turns_per_doc: int = 4
 ) -> DataFrame:
@@ -134,7 +82,9 @@ def derive_transcripts_from_documents(
     the document text in a flavor template chosen by (doc_id+turn) % 4:
       0 html-ish with nav/footer boilerplate, 1 pdf-layout-ish,
       2 markdown/plain, 3 tool-json-ish.
-    Entirely built-in expressions — whole-stage codegen, no UDFs.
+    Entirely built-in expressions — whole-stage codegen, no UDFs.  The
+    expected-table generator (tools/gen_expected.py) and bench.py's
+    no-Spark hardware ceiling collect the same frame.
     """
     # documents.parquet is one small file -> one scan partition; spread
     # the rows first or the whole derivation (crossJoin + regex) runs in

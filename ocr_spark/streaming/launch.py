@@ -7,7 +7,8 @@ the parquet sink.  The same transforms run on batch frames.
 
 The four event-time-state operators (sessionize, conversation assembly,
 funnel, MinHash near-dup) are a pure `fold`/`flush` pair each, and
-`grouped_state` is the one place that drives them through `GroupState`.
+`grouped_state` is the one place that drives them through `GroupState`;
+it drops rows with a null event time before they reach any fold.
 """
 
 from __future__ import annotations
@@ -113,7 +114,10 @@ def grouped_state(
       and remove the state.
 
     `rows` are dicts keyed by the output columns.  The watermark firing
-    the timeout is what bounds the state."""
+    the timeout is what bounds the state.  Rows with a null `ts` are
+    dropped first: an event with no event time has no place in
+    event-time state (it would fold in as epoch -2^63 ns and open a bogus
+    session)."""
 
     def handle(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -132,7 +136,8 @@ def grouped_state(
             yield pd.DataFrame(rows)
 
     return (
-        df.withWatermark("ts", watermark)
+        df.filter(F.col("ts").isNotNull())
+        .withWatermark("ts", watermark)
         .groupBy(*keys)
         .applyInPandasWithState(
             handle,

@@ -22,6 +22,9 @@ the watermark); within the horizon, out-of-order arrivals that still
 belong to the open session fold into it (start/end stretch to cover
 them).  That is the same at-watermark-horizon contract the batch twin
 gets for free from total ordering.
+
+A turn with a null `ts` has no event time, so it belongs to no session:
+`grouped_state` drops it before the fold, and it counts in no row.
 """
 
 from __future__ import annotations

@@ -7,7 +7,8 @@ activity + idle gap, the state times out and ONE summary row is emitted
 streaming twin of a per-conversation batch groupBy that can never "end"
 on an unbounded stream — the watermark decides when a conversation is
 complete.  State is bounded by the number of live conversations inside
-the watermark horizon.
+the watermark horizon.  A turn with a null `ts` has no event time:
+`grouped_state` drops it, so it counts toward no summary.
 """
 
 from __future__ import annotations

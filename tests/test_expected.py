@@ -14,13 +14,13 @@ SF_DIRS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf
 
 @pytest.mark.parametrize("sf_dir", SF_DIRS)
 @pytest.mark.parametrize("name", sorted(GENERATORS))
-def test_committed_expected_is_fresh(name, sf_dir):
+def test_committed_expected_is_fresh(spark, name, sf_dir):
     if not os.path.exists(f"{sf_dir}/documents.parquet"):
         pytest.skip("driver testdata not present")
     path = os.path.join(expected_dir(sf_dir), f"{name}.parquet")
     assert os.path.exists(path), f"run tools/gen_expected.py {sf_dir} — missing {path}"
     committed = pd.read_parquet(path)
-    fresh = GENERATORS[name](sf_dir)
+    fresh = GENERATORS[name](spark, sf_dir)
     assert list(committed.columns) == list(fresh.columns)
     assert committed.dtypes.equals(fresh.dtypes)
     pd.testing.assert_frame_equal(

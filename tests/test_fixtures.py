@@ -38,37 +38,3 @@ def test_hot_conversation():
     counts = df.groupby("conv_id").size()
     assert counts["conv-000000"] == 200
 
-
-def test_pandas_twin_matches_spark_derivation(spark):
-    """derive_transcripts_pandas must stay byte-identical to the Spark
-    derivation — it backs the expected-output oracles (gen_expected.py)
-    and the bench hardware ceiling.  Any payload-template edit must land
-    in both or this fails."""
-    import os
-
-    import pytest as _pytest
-
-    from ocr_spark.sources.transcripts import (
-        derive_transcripts_from_documents,
-        derive_transcripts_pandas,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    if not os.path.exists(f"{sf}/documents.parquet"):
-        _pytest.skip("driver testdata not present")
-    sd = (
-        derive_transcripts_from_documents(spark, sf)
-        .select("conv_id", "turn_idx", "text")
-        .toPandas()
-        .sort_values(["conv_id", "turn_idx"])
-        .reset_index(drop=True)
-    )
-    pdf = (
-        derive_transcripts_pandas(sf)
-        .sort_values(["conv_id", "turn_idx"])
-        .reset_index(drop=True)
-    )
-    assert len(sd) == len(pdf)
-    assert (sd.conv_id == pdf.conv_id).all()
-    assert (sd.turn_idx.astype("int64") == pdf.turn_idx.astype("int64")).all()
-    assert (sd.text == pdf.text).all()

@@ -686,6 +686,45 @@ def test_stream_sessionize_gap_split_and_timeout(spark, dirs):
     assert int(a2.end_ms) == base_ms + 51 * 60_000
 
 
+def test_stream_sessionize_drops_null_event_time(spark, dirs):
+    """A turn without an event time belongs to no session: conv-a at
+    00:00, a null `ts` and 00:05 is ONE session of the two timed turns,
+    with no epoch -2^63 session before it."""
+    import datetime as dt
+
+    from ocr_spark.streaming import sessions, start_stream
+
+    inp, outp, ckpt = dirs
+
+    def drain(conv, times):
+        pdf = pd.DataFrame(
+            {
+                "conv_id": conv,
+                "turn_idx": range(len(times)),
+                "role": "user",
+                "text": "x",
+                "tool": "",
+                "ts": pd.Series(times, dtype="datetime64[ns]"),
+            }
+        )
+        _write_batch(spark, pdf, inp)
+        q = start_stream(spark, sessions, inp, outp, ckpt, available_now=True)
+        q.awaitTermination(300)
+        assert not q.isActive
+
+    drain("conv-a", [dt.datetime(2024, 1, 1, 0, 0), None, dt.datetime(2024, 1, 1, 0, 5)])
+    # later activity moves the watermark past conv-a's idle horizon
+    drain("conv-late", [dt.datetime(2024, 1, 1, 3, 0)])
+    drain("conv-late2", [dt.datetime(2024, 1, 1, 6, 0)])
+    out = spark.read.parquet(outp).toPandas()
+    a = out[out.conv_id == "conv-a"]
+    base_ms = int(dt.datetime(2024, 1, 1).timestamp() * 1000)
+    assert len(a) == 1, a
+    s = a.iloc[0]
+    assert (int(s.sess_idx), int(s.n_turns)) == (1, 2)
+    assert int(s.start_ms) == base_ms and int(s.end_ms) == base_ms + 5 * 60_000
+
+
 def test_stream_countmin_cells_parity_with_batch(spark, dirs):
     """Streaming Count-Min (P21 twin): the watermark-closed window's cell
     table must equal the batch sketch over the same rows value-for-value

@@ -9,6 +9,11 @@ precompute the expected result once; the DuckDB oracle then just reads
 the expected parquet and the driver's rows+schema+hash comparison applies
 to the extraction queries too.
 
+Each query's input comes from the same Spark builder the query itself
+calls (the HTML wrap, the transcript derivation, the binary payload), so
+it is defined once; a local Spark session derives and collects it, and
+only the extraction or decode runs in the single-process kernel.
+
 Usage:  python tools/gen_expected.py [sf_dir]   (default /root/testdata/sf0.01
 — the scale the driver's CORRECTNESS gate runs at).  Output lands in
 tests/expected/<sf_name>/ and is committed; tests/test_expected.py
@@ -21,31 +26,22 @@ import os
 import sys
 
 import pandas as pd
-import pyarrow.parquet as pq
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-# Must match x_extract_documents in ocr_spark/queries/pipeline.py byte-for-byte.
-HTML_PREFIX = '<nav><a href="/h">Home</a> <a href="/a">About</a></nav><p>'
-HTML_SUFFIX = '</p><footer>Copyright <a href="/t">Terms</a></footer>'
 
-
-def expected_extract_documents(sf_dir: str) -> pd.DataFrame:
+def expected_extract_documents(spark, sf_dir: str) -> pd.DataFrame:
     from ocr_spark.extract import extract_frame
+    from ocr_spark.queries.pipeline import html_documents
 
-    docs = pq.read_table(
-        f"{sf_dir}/documents.parquet", columns=["doc_id", "text"]
-    ).to_pandas()
-    wrapped = pd.DataFrame(
-        {
-            "conv_id": docs.doc_id.astype(str),
-            "turn_idx": 0,
-            "text": HTML_PREFIX + docs.text + HTML_SUFFIX,
-        }
+    docs = html_documents(spark, sf_dir).orderBy("doc_id").toPandas()
+    out = extract_frame(
+        pd.DataFrame(
+            {"conv_id": docs.doc_id.astype(str), "turn_idx": 0, "text": docs.html}
+        )
     )
-    out = extract_frame(wrapped)
     return pd.DataFrame(
         {
             "doc_id": docs.doc_id.astype("int64").values,
@@ -54,11 +50,16 @@ def expected_extract_documents(sf_dir: str) -> pd.DataFrame:
     )
 
 
-def expected_extract_transcripts(sf_dir: str) -> pd.DataFrame:
+def expected_extract_transcripts(spark, sf_dir: str) -> pd.DataFrame:
     from ocr_spark.extract import extract_frame
-    from ocr_spark.sources.transcripts import derive_transcripts_pandas
+    from ocr_spark.sources.transcripts import derive_transcripts_from_documents
 
-    tr = derive_transcripts_pandas(sf_dir, turns_per_doc=4)
+    tr = (
+        derive_transcripts_from_documents(spark, sf_dir)
+        .select("conv_id", "turn_idx", "text")
+        .orderBy("turn_idx", "conv_id")
+        .toPandas()
+    )
     out = extract_frame(tr)
     return pd.DataFrame(
         {
@@ -72,22 +73,15 @@ def expected_extract_transcripts(sf_dir: str) -> pd.DataFrame:
     )
 
 
-def expected_multimodal_features(sf_dir: str) -> pd.DataFrame:
-    from ocr_spark.functions.multimodal import _decode_batch
+def expected_multimodal_features(spark, sf_dir: str) -> pd.DataFrame:
+    from ocr_spark.functions.multimodal import _decode_batch, with_binary_payload
 
-    docs = pq.read_table(
-        f"{sf_dir}/documents.parquet", columns=["doc_id", "text"]
-    ).to_pandas()
-    media_type = (docs.doc_id % 3).map({0: "image", 1: "audio", 2: "video"})
-    payload = docs.text.map(lambda s: s.encode("utf-8"))
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     out = _decode_batch(
-        pd.DataFrame(
-            {
-                "doc_id": docs.doc_id,
-                "media_type": media_type,
-                "payload": payload,
-            }
-        )
+        with_binary_payload(docs)
+        .select("doc_id", "media_type", "payload")
+        .orderBy("doc_id")
+        .toPandas()
     )
     for c in ("n_bytes", "fake_width", "fake_height", "fake_duration_ms"):
         out[c] = out[c].astype("int64")
@@ -106,13 +100,19 @@ def expected_dir(sf_dir: str) -> str:
 
 
 def main(sf_dir: str) -> None:
+    from ocr_spark.plans.session import build_session
+
     out_dir = expected_dir(sf_dir)
     os.makedirs(out_dir, exist_ok=True)
-    for name, gen in GENERATORS.items():
-        df = gen(sf_dir)
-        path = os.path.join(out_dir, f"{name}.parquet")
-        df.to_parquet(path, index=False)
-        print(f"{path}: {len(df)} rows")
+    spark = build_session(app_name="gen_expected")
+    try:
+        for name, gen in GENERATORS.items():
+            df = gen(spark, sf_dir)
+            path = os.path.join(out_dir, f"{name}.parquet")
+            df.to_parquet(path, index=False)
+            print(f"{path}: {len(df)} rows")
+    finally:
+        spark.stop()
 
 
 if __name__ == "__main__":

@@ -96,59 +96,21 @@ def window_skew_stress(spark) -> None:
     other across the whole user history), so the scale story is that the
     per-group work is LINEAR: one mega-user costs one linear pass on one
     task, never a quadratic frame re-scan.  This drives 10^6 events for
-    a single user through both query shapes and pins (a) correctness of
+    a single user through the shipped q_funnel and q_sessionize builders
+    (`funnel_by_user`, `sessions_by_user`) and pins (a) correctness of
     the skewed group's results, (b) an absolute runtime bound, and (c)
     near-linearity: 4x the mega-user's rows must cost well under the
     16x a quadratic window evaluation would."""
     import time
 
-    import pyspark.sql.functions as F
-    from pyspark.sql import Window
-
-    def funnel(ev):
-        us = F.unix_micros(F.col("ts").cast("timestamp"))
-        hour = 3_600_000_000
-        w = Window.partitionBy("user_id")
-        x = ev.select("user_id", "event_type", us.alias("t"))
-        x = x.withColumn("t_view", F.min(
-            F.when(F.col("event_type") == "view", F.col("t"))).over(w))
-        x = x.withColumn("t_click", F.min(F.when(
-            (F.col("event_type") == "click")
-            & (F.col("t") > F.col("t_view"))
-            & (F.col("t") <= F.col("t_view") + hour), F.col("t"))).over(w))
-        x = x.withColumn("t_purchase", F.min(F.when(
-            (F.col("event_type") == "purchase")
-            & (F.col("t") > F.col("t_click"))
-            & (F.col("t") <= F.col("t_click") + hour), F.col("t"))).over(w))
-        return (
-            x.filter(F.col("t_view").isNotNull())
-            .groupBy("user_id")
-            .agg(F.max(
-                F.lit(1)
-                + F.col("t_click").isNotNull().cast("int")
-                + F.col("t_purchase").isNotNull().cast("int")
-            ).alias("stage"))
-        )
-
-    def sessionize(ev):
-        w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        epoch = F.col("ts").cast("timestamp").cast("long")
-        gap = epoch - F.lag(epoch, 1).over(w)
-        new_sess = F.when(gap.isNull() | (gap > 1800), 1).otherwise(0)
-        return (
-            ev.withColumn("sess_id", F.sum(new_sess).over(
-                w.rowsBetween(Window.unboundedPreceding, 0)))
-            .groupBy("user_id")
-            .agg(F.max("sess_id").alias("n_sessions"),
-                 F.count(F.lit(1)).alias("n_events"))
-        )
+    from ocr_spark.queries.analytics import funnel_by_user, sessions_by_user
 
     def run(mega_events: int) -> float:
         ev = _skewed_events(spark, mega_events).localCheckpoint()
         t0 = time.perf_counter()
-        f = {r["user_id"]: r["stage"] for r in funnel(ev).collect()}
+        f = {r["user_id"]: r["stage"] for r in funnel_by_user(ev).collect()}
         s = {r["user_id"]: (r["n_sessions"], r["n_events"])
-             for r in sessionize(ev).collect()}
+             for r in sessions_by_user(ev).collect()}
         dt = time.perf_counter() - t0
         # mega-user: view@t, click@t+1s, purchase@t+2s -> full 3 stages;
         # 1-second gaps -> exactly ONE session of mega_events events
